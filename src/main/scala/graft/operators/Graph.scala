@@ -22,9 +22,11 @@ import graft.core.Materialize.MatOps
   *
   * Scale shape: each iteration is ONE shuffle (the contribution aggregation
   * on `dst`); the edge list and out-degrees materialize once up front and
-  * are reused by every round. No driver-side collection, no per-iteration
-  * action — the fixed-depth loop builds a single plan executed by the final
-  * consumer, so Catalyst sees (and AQE re-plans) the whole chain.
+  * are reused by every round. No driver-side collection: up to 8
+  * iterations build a single plan executed by the final consumer, so
+  * Catalyst sees (and AQE re-plans) the whole chain; deeper runs cut the
+  * lineage every 8 iterations (one materializing action each), which
+  * keeps analysis cost flat in the iteration count.
   */
 object Graph {
 

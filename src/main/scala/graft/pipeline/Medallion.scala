@@ -82,9 +82,9 @@ final class Medallion(spark: SparkSession, store: TableStore, sfDir: String,
     })
 
   private def current(name: String): DataFrame =
-    // readWhere, not read().filter(): the IS NULL predicate reaches the
-    // store's null-count file skipping, so closed-history silver files
-    // are never opened for a current-slice read
+    // the IS NULL predicate reaches the store's null-count file skipping,
+    // so closed-history silver files are never opened for a current-slice
+    // read
     store.readWhere(name, col(Scd.ValidTo).isNull)
 
   private def withAudit(df: DataFrame, loadTs: Column): DataFrame =

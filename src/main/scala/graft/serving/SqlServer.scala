@@ -23,9 +23,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Session semantics match a warehouse endpoint: every connection gets
   * `spark.newSession()` — isolated temp views, isolated SQL conf, SHARED
-  * catalog and shared cached data — so two clients see each other's
-  * saved tables but never each other's temp state. Statement execution is
-  * fully concurrent (Spark's scheduler multiplexes jobs from all
+  * catalog and shared cached data, plus every `TableStore` attached to
+  * the server's session — so two clients see each other's saved tables
+  * and the stores' tables but never each other's temp state. Statement
+  * execution is fully concurrent (Spark's scheduler multiplexes jobs from all
   * sessions); the server adds no global lock.
   *
   * Scale notes: the result set is capped at `maxRows` (row 10_001 sets
@@ -83,6 +84,8 @@ final class SqlServer(spark: SparkSession, port: Int = 0, maxRows: Int = 10000,
 
   private def serve(sock: Socket): Unit = {
     val session = spark.newSession()
+    // store tables resolve by name through the session's attached stores
+    graft.tables.TableStore.attachAll(spark, session)
     val connId = connSeq.incrementAndGet()
     var stmtSeq = 0L
     val in = new BufferedReader(

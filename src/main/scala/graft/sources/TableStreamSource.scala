@@ -98,7 +98,7 @@ private[graft] class GraftStreamTable(schema: StructType,
   * reaches the parquet reader as `requiredSchema` (unread columns never
   * decode), and pushed filters both skip row groups inside the reader and
   * stats-prune whole FILES at batch-plan time through the store's
-  * manifest min/max ranges — the same skipping `store.readWhere` gets.
+  * manifest min/max ranges — the same skipping every batch store scan gets.
   * `pushFilters` returns its input unchanged (Spark re-evaluates every
   * filter post-scan), so the pushdown is a pure I/O reduction and can
   * never change results. */

@@ -37,8 +37,12 @@ import graft.operators.MergeInto
   *    clustering), so partition pruning is manifest metadata pruning —
   *    exactly Delta's model, with no directory-listing discovery.
   *  - Per-file min/max stats are collected at write time for the partition
-  *    + sort columns and consulted by [[readWhere]] and the DML discovery
-  *    passes — data skipping for sorted/clustered tables.
+  *    + sort columns and consulted by every scan: reads go through a
+  *    [[ManifestFileIndex]] that keeps only the files whose stats admit
+  *    the filters the query pushes down (SQL lookups, `read(name).filter`,
+  *    MERGE/UPDATE/DELETE scans), and the DML discovery passes prune their
+  *    candidate sets the same way — data skipping for sorted/clustered
+  *    tables.
   *
   * Known limits vs Delta, by design (SURVEY.md §4): single-writer (no
   * commit-protocol arbitration); schema evolution rewrites the snapshot.
@@ -70,6 +74,19 @@ object TableStore {
   private def stores(spark: SparkSession): Seq[TableStore] = sessions.synchronized {
     Option(sessions.get(spark)).map(_.asScala.toSeq).getOrElse(Seq.empty)
   }
+
+  /** Attach every store attached to `from` to `to` as well: a session
+    * made by `from.newSession()` starts with no stores of its own, so SQL
+    * on it could not resolve store tables by name. */
+  def attachAll(from: SparkSession, to: SparkSession): Unit =
+    stores(from).foreach(attach(to, _))
+
+  /** What file skipping needs to know about a table, resolved once per
+    * read: the schema the predicate names columns by, the physical →
+    * predicate-name map the per-file stats are re-keyed through, and the
+    * bloom-indexed columns (lower-cased predicate name → physical name). */
+  private final case class SkipContext(schema: StructType,
+      statNames: Map[String, String], blooms: Map[String, String])
 
   /** The attached store holding `table` — SQL-text DML routes through this.
     * Two live stores holding the same table name is a real ambiguity (the
@@ -332,9 +349,7 @@ final class Txn private[tables] (store: TableStore) extends TableWriter {
     * pre-transaction state if it hasn't. This is what lets a multi-stage
     * pipeline chain its stages (silver feeds gold) inside ONE
     * all-or-nothing commit: ordinary readers see nothing until every
-    * pointer swaps, while the transaction itself reads what it staged.
-    * Staged reads carry no manifest-stats file skipping — a staged
-    * version is consumed once by its own transaction, not served. */
+    * pointer swaps, while the transaction itself reads what it staged. */
   def readStaged(name: String): DataFrame = {
     val hit = staged.synchronized { staged.find(_._1 == name).map(_._2) }
     hit match {
@@ -360,15 +375,15 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   // against the session's attached stores, keyed by table name.
   TableStore.attach(spark, this)
 
-  // Every store read passes the manifest's EXPLICIT leaf-file paths to the
-  // parquet source — there are no directories to discover — but past 32
-  // paths (the stock parallelPartitionDiscovery threshold) Spark launches a
-  // distributed listing JOB just to re-stat files the manifest already
-  // names: measured 2.3 s per read of a 64-file table on an idle local[32],
-  // pure scheduling overhead at any scale. Driver-side listing of explicit
-  // file paths is a stat call each, so raise the threshold (never lower a
-  // caller's larger setting) — reads of multi-thousand-file tables keep
-  // the distributed path.
+  // Table scans list nothing (ManifestFileIndex), but the remaining
+  // multi-path parquet reads — deletion-vector sidecars, COPY INTO sources
+  // — still go through Spark's path listing, and past 32 paths (the stock
+  // parallelPartitionDiscovery threshold) Spark launches a distributed
+  // listing JOB just to stat them: measured 2.3 s per read of 64 paths on
+  // an idle local[32], pure scheduling overhead at any scale. Driver-side
+  // listing is a stat call per path, so raise the threshold (never lower a
+  // caller's larger setting) — multi-thousand-path reads keep the
+  // distributed path.
   locally {
     val k = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     // malformed override must not hard-fail store attach — fall back
@@ -579,9 +594,16 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       }.getOrElse("write")
 
   private def currentManifest(name: String): (StructType, Seq[FileEntry]) = {
+    val (_, schema, entries) = currentSnapshot(name)
+    (schema, entries)
+  }
+
+  /** The live version with its manifest. */
+  private def currentSnapshot(name: String): (Int, StructType, Seq[FileEntry]) = {
     val v = currentVersion(name).getOrElse(
       throw new IllegalArgumentException(s"table not found: $name"))
-    readManifest(name, v)
+    val (schema, entries) = readManifest(name, v)
+    (v, schema, entries)
   }
 
   private def absPath(name: String, rel: String): String =
@@ -804,19 +826,39 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * when EVERY disjunct excludes it), `IS NULL` skips files whose null
     * count is 0, `IS NOT NULL` skips all-null files, and `LIKE 'p%'` /
     * startsWith skips files whose [min, max] cannot contain a `p`-prefixed
-    * string. Unanalyzable subtrees prune nothing. */
+    * string. Unanalyzable subtrees prune nothing. `pred` speaks logical
+    * (visible) column names. */
   private def pruneEntries(name: String, schema: StructType, entries: Seq[FileEntry],
-      pred: Column): Seq[FileEntry] = {
-    // predicates speak logical names; per-file stats are keyed by the
-    // physical names the footers carry — remap the lookup, not the entries
-    val rn = renames(name)
+      pred: Column): Seq[FileEntry] =
+    pruneWith(name, skipContext(meta(name).properties, schema, logical = true),
+      entries, org.apache.spark.sql.GraftShims.catalystExpr(pred))
+
+  /** Skipping context for predicates over logical names (`logical`) or
+    * over the physical names a [[ManifestFileIndex]] scan outputs. */
+  private def skipContext(props: Map[String, String], physical: StructType,
+      logical: Boolean): TableStore.SkipContext = {
+    val rn = renamesOf(props)
+    val rev = rn.map(_.swap)
+    val blooms = bloomColsOf(props).map { c =>
+      val phys = rev.getOrElse(c, c)
+      (if (logical) c else phys).toLowerCase -> phys
+    }.toMap
+    if (logical) TableStore.SkipContext(logicalizeWith(props, physical), rn, blooms)
+    else TableStore.SkipContext(physical, Map.empty, blooms)
+  }
+
+  private def pruneWith(name: String, ctx: TableStore.SkipContext, entries: Seq[FileEntry],
+      pred: Expression): Seq[FileEntry] = {
+    // per-file stats are keyed by the physical names the footers carry —
+    // remap the lookup to the predicate's names, not the entries
+    val rn = ctx.statNames
     def statsOf(e: FileEntry): Map[String, ColStats] =
       if (rn.isEmpty) e.stats
       else e.stats.map { case (k, v) => (rn.getOrElse(k, k), v) }
     def nullsOf(e: FileEntry): Map[String, Long] =
       if (rn.isEmpty) e.nulls
       else e.nulls.map { case (k, v) => (rn.getOrElse(k, k), v) }
-    val lschema = logicalizeSchema(name, schema)
+    val lschema = ctx.schema
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case other => Seq(other)
@@ -864,7 +906,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       case a: AttributeReference => Some(a.name)
       case _ => None
     }
-    val expr = normalize(org.apache.spark.sql.GraftShims.catalystExpr(pred))
+    val expr = normalize(pred)
 
     // equality bounds from TOP-LEVEL conjuncts feed the bloom second stage
     // (a point value inside a disjunct can't refine — the other disjunct
@@ -967,6 +1009,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           // IN is TRUE iff some element matches; a NULL element contributes
           // NULL, never TRUE — range() already answers false for it
           list.exists(l => range(a, l.asInstanceOf[Literal], "="))
+        case InSet(a, hset) if hset.nonEmpty =>
+          // the optimizer's form of an IN list longer than
+          // spark.sql.optimizer.inSetConversionThreshold: the same test
+          // over internal values of the column's type
+          val dt = if (a.resolved) Some(a.dataType)
+            else attrName(a).flatMap(c => lschema.find(_.name.equalsIgnoreCase(c))).map(_.dataType)
+          dt.forall(t => hset.exists(v => v != null &&
+            scala.util.Try(Literal(v, t)).toOption.forall(range(a, _, "="))))
         case EqualTo(a, l: Literal) => range(a, l, "=")
         case EqualTo(l: Literal, a) => range(a, l, "=")
         case LessThan(a, l: Literal) => range(a, l, "<")
@@ -994,7 +1044,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     }
 
     val kept = entries.filter(e => possible(expr, statsOf(e), nullsOf(e), e.rows))
-    if (eqBounds.isEmpty) kept else bloomRefine(name, kept, eqBounds)
+    if (eqBounds.isEmpty) kept else bloomRefine(name, kept, eqBounds, ctx.blooms)
   }
 
   // ------------------------------------------------------- bloom skipping
@@ -1011,17 +1061,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * row group with no bloom, or a literal whose parquet-physical form we
     * can't reconstruct all keep the file. */
   private def bloomRefine(name: String, entries: Seq[FileEntry],
-      bounds: Seq[(String, String, String, Boolean)]): Seq[FileEntry] = {
-    if (entries.isEmpty) return entries
-    val bcols = bloomIndexCols(name)
-    if (bcols.isEmpty) return entries
-    val rev = renames(name).map(_.swap) // logical → physical
-    val eqs = bounds.filter { case (c, op, _, _) =>
-      op == "=" && bcols.exists(_.equalsIgnoreCase(c)) }
+      bounds: Seq[(String, String, String, Boolean)],
+      blooms: Map[String, String]): Seq[FileEntry] = {
+    if (entries.isEmpty || blooms.isEmpty) return entries
+    val eqs = bounds.flatMap { case (c, op, v, _) =>
+      if (op == "=") blooms.get(c.toLowerCase).map(_ -> v) else None }
     if (eqs.isEmpty) return entries
     entries.filter { e =>
-      eqs.forall { case (c, _, v, _) =>
-        bloomMightContain(name, e.rel, rev.getOrElse(c, c), v) }
+      eqs.forall { case (phys, v) => bloomMightContain(name, e.rel, phys, v) }
     }
   }
 
@@ -1718,10 +1765,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * the multi-dimensional version of the sort-based data skipping a
     * single sort column gives. */
   def compact(name: String, targetFiles: Int = 1, zorderBy: Seq[String] = Nil): Unit = {
-    val base = currentVersion(name)
-    val (schema, entries) = currentManifest(name)
+    val (v, schema, entries) = currentSnapshot(name)
+    val base = Some(v)
     val (pb, sw, sf) = readLayout(name)
-    val df0 = rewriteSource(name, schema, entries)
+    val df0 = rewriteSource(name, v, schema, entries)
     // readEntries yields the LOGICAL view; layout names from the sidecar
     // are physical — translate for the frame-side operations below
     val logicalOf = { val rn = renames(name); (c: String) => rn.getOrElse(c, c) }
@@ -1854,13 +1901,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val (cols, bits, bounds, _) = zorderSpec(name).getOrElse(
       throw new IllegalStateException(
         s"$name: no persisted ZORDER curve — run OPTIMIZE … ZORDER BY first"))
-    val base = currentVersion(name)
-    val (schema, entries) = currentManifest(name)
+    val (v, schema, entries) = currentSnapshot(name)
+    val base = Some(v)
     val cset = candidates.map(_.rel).toSet
     if (candidates.isEmpty ||
         (candidates.size <= 1 && !candidates.exists(_.dvs.nonEmpty))) return
     val (pb, sw, sf) = readLayout(name)
-    val prepared = zorderRoute(rewriteSource(name, schema, candidates),
+    val prepared = zorderRoute(rewriteSource(name, v, schema, candidates),
       cols, bounds, bits, math.max(1, targetFiles))
     commitVersion(name, prepared, pb, sortWithin = Nil,
       statsFor = (sf ++ sw ++ cols).distinct,
@@ -1904,13 +1951,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * with the predicate's slice, never the table. Deletion vectors on
     * candidate files fold in; every other file carries over untouched. */
   def compactWhere(name: String, pred: Column, targetFiles: Int = 1): Unit = {
-    val base = currentVersion(name)
-    val (schema, entries) = currentManifest(name)
+    val (v, schema, entries) = currentSnapshot(name)
+    val base = Some(v)
     val candidates = pruneEntries(name, schema, entries, pred)
     if (candidates.size <= 1 && !candidates.exists(_.dvs.nonEmpty)) return
     val cset = candidates.map(_.rel).toSet
     val (pb, sw, sf) = readLayout(name)
-    val df0 = rewriteSource(name, schema, candidates)
+    val df0 = rewriteSource(name, v, schema, candidates)
     val logicalOf = { val rn = renames(name); (c: String) => rn.getOrElse(c, c) }
     val lpb = pb.map(logicalOf)
     val df = if (lpb.nonEmpty) df0.repartition(lpb.map(col): _*)
@@ -1928,13 +1975,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * the cost is the small-file backlog, never the table. No-op when
     * fewer than two entries qualify. */
   def compactSmall(name: String, smallBytes: Long = 32L << 20): Unit = {
-    val base = currentVersion(name)
-    val (schema, entries) = currentManifest(name)
+    val (v, schema, entries) = currentSnapshot(name)
+    val base = Some(v)
     val (small, big) = entries.partition(e =>
       e.dvs.nonEmpty || Files.size(Paths.get(absPath(name, e.rel))) < smallBytes)
     if (small.size <= 1) return
     val (pb, sw, sf) = readLayout(name)
-    val df0 = rewriteSource(name, schema, small)
+    val df0 = rewriteSource(name, v, schema, small)
     val logicalOf = { val rn = renames(name); (c: String) => rn.getOrElse(c, c) }
     val lpb = pb.map(logicalOf)
     val df = if (lpb.nonEmpty) df0.repartition(lpb.map(col): _*) else df0.repartition(1)
@@ -2140,34 +2187,37 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
   // ----------------------------------------------------------------- reads
 
-  /** Read a set of manifest entries as one DataFrame.
-    *
-    *  - The read uses the MANIFEST schema explicitly (never inference), so
-    *    files written before a metadata-only column addition simply
-    *    NULL-fill the new columns — schema evolution needs no rewrite.
-    *  - Entries carrying deletion vectors are read with the parquet
-    *    `_metadata` (file, row-position) columns and anti-joined against
-    *    their DV rows; plain entries take the unadorned scan. The DV side
-    *    is the deleted-row set only — at 100 TB that is the DML's touched
-    *    rows, not the table — and the anti-join keys are (file, pos), so
-    *    AQE broadcasts it whenever it is small. */
+  /** Parquet scan of plain `entries` of manifest `version` through a
+    * [[ManifestFileIndex]]: the MANIFEST schema is explicit (never
+    * inferred), so files written before a metadata-only column addition
+    * NULL-fill the new columns, and the index prunes files by manifest
+    * stats against whatever filters the query pushes into the scan.
+    * Physical column names. */
+  private def scanManifest(name: String, version: Int, schema: StructType,
+      entries: Seq[FileEntry], props: Map[String, String]): DataFrame = {
+    val ctx = skipContext(props, schema, logical = false)
+    val index = new ManifestFileIndex(tableDir(name), version, entries.map(_.rel),
+      pred => pruneWith(name, ctx, entries, pred).map(_.rel))
+    org.apache.spark.sql.GraftShims.parquetScan(spark, index, schema)
+  }
+
   /** Scan `entries` with row identity: every row carries `__graft_file`
     * (absolute data-file path, URI spelling normalized) and `__graft_pos`
     * (row position within the file, from the parquet `_metadata` column),
     * with deletion vectors already applied. The identity pair is what DVs
     * address rows by — this scan backs both the DV read path and the
     * merge-on-read DML discovery pass. */
-  private def scanWithPos(name: String, schema: StructType, entries: Seq[FileEntry]): DataFrame = {
-    val scan0 = spark.read.schema(schema)
-      .parquet(entries.map(e => absPath(name, e.rel)): _*)
+  private def scanWithPos(name: String, version: Int, schema: StructType,
+      entries: Seq[FileEntry]): DataFrame = {
+    val props = meta(name).properties
+    val scan0 = scanManifest(name, version, schema, entries, props)
       .withColumn("__graft_file",
         regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
       .withColumn("__graft_pos", col("_metadata.row_index"))
     // column mapping: expose logical names (the extra __graft_* identity
     // columns and any dropped-column bytes ride along untouched — DML
     // discovery filters by logical predicates over this scan)
-    val rn = renames(name)
-    val scan1 = rn.foldLeft(scan0) { case (d, (phys, logical)) =>
+    val scan1 = renamesOf(props).foldLeft(scan0) { case (d, (phys, logical)) =>
       if (d.columns.contains(phys)) d.withColumnRenamed(phys, logical) else d
     }
     val withDv = entries.filter(_.dvs.nonEmpty)
@@ -2190,32 +2240,34 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     }
   }
 
-  /** Read a set of manifest entries as one DataFrame.
-    *
-    *  - The read uses the MANIFEST schema explicitly (never inference), so
-    *    files written before a metadata-only column addition simply
-    *    NULL-fill the new columns — schema evolution needs no rewrite.
-    *  - Entries carrying deletion vectors are read through [[scanWithPos]]
-    *    (row-position anti-join); plain entries take the unadorned scan. */
-  private def readEntries(name: String, schema: StructType, entries: Seq[FileEntry]): DataFrame =
-    if (entries.isEmpty) emptyDf(logicalizeSchema(name, schema))
+  /** Read the entries of manifest `version` as one DataFrame in the
+    * table's logical (visible) names. Plain entries take the pruning
+    * [[scanManifest]]; entries carrying deletion vectors are read through
+    * [[scanWithPos]] (row-position anti-join). */
+  private def readEntries(name: String, version: Int, schema: StructType,
+      entries: Seq[FileEntry]): DataFrame = {
+    val props = meta(name).properties
+    val lschema = logicalizeWith(props, schema)
+    if (entries.isEmpty) emptyDf(lschema)
     else {
       val (withDv, plain) = entries.partition(_.dvs.nonEmpty)
-      // logical (visible) projection — scanWithPos already renamed, the
-      // plain scan is projected through the mapping here
-      val lfields = logicalizeSchema(name, schema).fieldNames.map(col).toSeq
       val parts = Seq(
         if (plain.isEmpty) None
-        else Some(toLogical(name, schema,
-          spark.read.schema(schema).parquet(plain.map(e => absPath(name, e.rel)): _*))),
+        else Some(toLogical(props, schema, scanManifest(name, version, schema, plain, props))),
         if (withDv.isEmpty) None
-        else Some(scanWithPos(name, schema, withDv).select(lfields: _*))).flatten
+        else Some(scanWithPos(name, version, schema, withDv)
+          .select(lschema.fieldNames.map(col).toSeq: _*))).flatten
       parts.reduce(_ unionByName _)
     }
+  }
 
+  /** The live version. Every scan of it skips files by manifest stats
+    * against the filters the query pushes down ([[ManifestFileIndex]]),
+    * so `read(name).filter(p)` and SQL lookups open only the files `p`
+    * can touch. */
   def read(name: String): DataFrame = {
-    val (schema, entries) = currentManifest(name)
-    readEntries(name, schema, entries)
+    val (v, schema, entries) = currentSnapshot(name)
+    readEntries(name, v, schema, entries)
   }
 
   /** The table as a STREAMING source (Delta's `spark.readStream.table`):
@@ -2231,13 +2283,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     r.load()
   }
 
-  /** Predicate-pruned read: files whose min/max stats provably exclude
-    * `pred` are never opened (manifest-level data skipping); the predicate
-    * is re-applied exactly, so this equals `read(name).filter(pred)`. */
-  def readWhere(name: String, pred: Column): DataFrame = {
-    val (schema, entries) = currentManifest(name)
-    readEntries(name, schema, pruneEntries(name, schema, entries, pred)).filter(pred)
-  }
+  /** `read(name).filter(pred)`: like every scan of a store table, files
+    * whose manifest stats provably exclude `pred` are never opened. */
+  def readWhere(name: String, pred: Column): DataFrame = read(name).filter(pred)
 
   /** Dynamic file pruning for a point-lookup join: a scan of `name`
     * bounded to the manifest files whose per-column [min, max] boxes admit
@@ -2263,7 +2311,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * bloom every file survives, which is correct, just not fast. */
   private[graft] def readPointPruned(name: String, points: DataFrame,
       cols: Seq[String]): (DataFrame, (Int, Int)) = {
-    val (schema, entries) = currentManifest(name)
+    val (v, schema, entries) = currentSnapshot(name)
     val total = entries.size
     val boxCand = boxPointCandidates(name, entries, points, cols)
     // blooms refine the box survivors UNCONDITIONALLY (not only when the
@@ -2276,7 +2324,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // driver-capped inside bloomRefineSet (over-cap probes fall through
     // to the box result).
     val cand = bloomRefineSet(name, boxCand, points, cols)
-    (readEntries(name, schema, cand), (cand.size, total))
+    (readEntries(name, v, schema, cand), (cand.size, total))
   }
 
   /** [min, max]-box stage of [[readPointPruned]]: the manifest files
@@ -2395,18 +2443,17 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** Time travel: read a specific retained snapshot version. */
   def readVersion(name: String, version: Int): DataFrame = {
     val (schema, entries) = readManifest(name, version)
-    readEntries(name, schema, entries)
+    readEntries(name, version, schema, entries)
   }
 
   /** Read a transaction-STAGED (not yet committed) version: the staged
     * manifest's files, invisible to every ordinary reader until the
     * transaction publishes. The read-your-writes primitive behind
-    * [[Txn.readStaged]] — no manifest-stats file skipping (a staged
-    * version is read once, by its own transaction, not served). */
+    * [[Txn.readStaged]]. */
   private[tables] def readStagedVersion(name: String, version: Int): DataFrame = {
     val (schema, entries, _) = parseManifest(stagedManifestPath(name, version),
       s"staged manifest of $name v$version")
-    readEntries(name, schema, entries)
+    readEntries(name, version, schema, entries)
   }
 
   /** Row-level change feed between two retained versions (Delta CDF
@@ -2429,8 +2476,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // is re-read on both sides and the unchanged rows cancel in exceptAll)
     val aKeys = a.map(e => (e.rel, e.dvs)).toSet
     val bKeys = b.map(e => (e.rel, e.dvs)).toSet
-    val onlyA = readEntries(name, schemaA, a.filterNot(e => bKeys((e.rel, e.dvs))))
-    val onlyB = readEntries(name, schemaB, b.filterNot(e => aKeys((e.rel, e.dvs))))
+    val onlyA = readEntries(name, fromVersion, schemaA, a.filterNot(e => bKeys((e.rel, e.dvs))))
+    val onlyB = readEntries(name, toVersion, schemaB, b.filterNot(e => aKeys((e.rel, e.dvs))))
     import org.apache.spark.sql.functions.lit
     onlyB.exceptAll(onlyA).withColumn("_change_type", lit("insert"))
       .unionByName(onlyA.exceptAll(onlyB).withColumn("_change_type", lit("delete")))
@@ -2491,7 +2538,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       } else if (layoutOnly.exists(op.startsWith)) None
       else if (prevOpt.isEmpty) {
         if (v == 1) // table creation: everything is an insert
-          Some(vcol(readEntries(name, schemaCur, cur)
+          Some(vcol(readEntries(name, v, schemaCur, cur)
             .withColumn("_change_type", lit("insert"))))
         else throw new IllegalStateException(
           s"$name: version $v's predecessor was vacuumed — its changes " +
@@ -2503,7 +2550,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         val added = cur.filterNot(e => prevKeys((e.rel, e.dvs)))
         val removed = prev.filterNot(e => curKeys((e.rel, e.dvs)))
         if (removed.isEmpty)
-          Some(vcol(readEntries(name, schemaCur, added)
+          Some(vcol(readEntries(name, v, schemaCur, added)
             .withColumn("_change_type", lit("insert"))))
         else if (((op == "write" || op == "txn_write") &&
               added.size == cur.size && removed.size == prev.size) ||
@@ -2517,9 +2564,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           // delete+insert pair, which nets to zero under the multiset
           // semantics every feed consumer (MV refresh included) applies
           val (schemaPrev, _) = readManifest(name, prevOpt.get)
-          Some(vcol(readEntries(name, schemaPrev, removed)
+          Some(vcol(readEntries(name, prevOpt.get, schemaPrev, removed)
             .withColumn("_change_type", lit("delete"))
-            .unionByName(readEntries(name, schemaCur, added)
+            .unionByName(readEntries(name, v, schemaCur, added)
               .withColumn("_change_type", lit("insert")), allowMissingColumns = true)))
         } else throw new IllegalStateException(
           s"$name version $v (op $op) rewrote files but recorded no change data — " +
@@ -2679,14 +2726,16 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   // already-physical name a safe no-op.
 
   /** physical → logical renames currently in force. */
-  private def renames(name: String): Map[String, String] =
-    meta(name).properties.collect {
+  private def renames(name: String): Map[String, String] = renamesOf(meta(name).properties)
+
+  private def renamesOf(props: Map[String, String]): Map[String, String] =
+    props.collect {
       case (k, v) if k.startsWith("colmap.") => k.stripPrefix("colmap.") -> v
     }
 
   /** physical names of dropped columns (still present in old files). */
-  private def droppedPhysical(name: String): Set[String] =
-    meta(name).properties.keysIterator
+  private def droppedOf(props: Map[String, String]): Set[String] =
+    props.keysIterator
       .filter(_.startsWith("coldrop.")).map(_.stripPrefix("coldrop.")).toSet
 
   private[graft] def hasColumnMapping(name: String): Boolean =
@@ -2700,8 +2749,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   private[graft] def hasRenames(name: String): Boolean = renames(name).nonEmpty
 
   /** The logical (visible) view of a physical manifest schema. */
-  private[graft] def logicalizeSchema(name: String, physical: StructType): StructType = {
-    val rn = renames(name); val dp = droppedPhysical(name)
+  private[graft] def logicalizeSchema(name: String, physical: StructType): StructType =
+    logicalizeWith(meta(name).properties, physical)
+
+  private def logicalizeWith(props: Map[String, String], physical: StructType): StructType = {
+    val rn = renamesOf(props); val dp = droppedOf(props)
     if (rn.isEmpty && dp.isEmpty) physical
     else StructType(physical.fields.toSeq.filterNot(f => dp(f.name))
       .map(f => f.copy(name = rn.getOrElse(f.name, f.name))))
@@ -2718,8 +2770,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
   /** Project a physical-named frame to the logical view (drops dropped
     * columns, renames renamed ones). Field order follows the manifest. */
-  private def toLogical(name: String, schema: StructType, df: DataFrame): DataFrame = {
-    val rn = renames(name); val dp = droppedPhysical(name)
+  private def toLogical(props: Map[String, String], schema: StructType,
+      df: DataFrame): DataFrame = {
+    val rn = renamesOf(props); val dp = droppedOf(props)
     if (rn.isEmpty && dp.isEmpty) df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
     else df.select(schema.fields.toSeq.filterNot(f => dp(f.name))
       .map(f => col(f.name).as(rn.getOrElse(f.name, f.name))): _*)
@@ -3180,25 +3233,25 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * [[enableRowTracking]]. */
   def readWithRowIds(name: String): DataFrame = {
     require(rowTrackingEnabled(name), s"$name: row tracking is not enabled")
-    val (schema, entries) = currentManifest(name)
-    rowIdRead(name, schema, entries, "_row_id")
+    val (v, schema, entries) = currentSnapshot(name)
+    rowIdRead(name, v, schema, entries, "_row_id")
   }
 
   /** Read `entries` for a REWRITE: like [[readEntries]], but when the
     * table tracks row ids the frame additionally carries the hidden
     * materialized-id column, so the rewrite's output files preserve each
     * surviving row's id physically. */
-  private def rewriteSource(name: String, schema: StructType,
+  private def rewriteSource(name: String, version: Int, schema: StructType,
       entries: Seq[FileEntry]): DataFrame =
-    if (!rowTrackingEnabled(name)) readEntries(name, schema, entries)
-    else rowIdRead(name, schema, entries, TableStore.RowIdCol)
+    if (!rowTrackingEnabled(name)) readEntries(name, version, schema, entries)
+    else rowIdRead(name, version, schema, entries, TableStore.RowIdCol)
 
   /** Logical view of `entries` plus `outCol` = each row's current id:
     * the materialized hidden column when the file carries one, else the
     * file's base + in-file position; NULL only for files with no base
     * (pre-tracking files never backfilled). One scan — the base lookup
     * is a broadcast of the (file, base) manifest map. */
-  private def rowIdRead(name: String, schema: StructType, entries: Seq[FileEntry],
+  private def rowIdRead(name: String, version: Int, schema: StructType, entries: Seq[FileEntry],
       outCol: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, coalesce}
     val lnames = logicalizeSchema(name, schema).fieldNames.toSeq
@@ -3207,7 +3260,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         StructField(outCol, LongType, nullable = true)))
     val schemaExt = StructType(schema.fields :+
       StructField(TableStore.RowIdCol, LongType, nullable = true))
-    val scan = scanWithPos(name, schemaExt, entries)
+    val scan = scanWithPos(name, version, schemaExt, entries)
     val baseMap = spark.createDataFrame(entries.map(e =>
         (Paths.get(absPath(name, e.rel)).toAbsolutePath.normalize.toString, e.base)))
       .toDF("__base_file", "__base")
@@ -3243,10 +3296,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * materialized value when the file carries one, else the file's base +
     * in-file position. The scan every merge-on-read rewrite reads: an
     * appended post-image must preserve the row id it replaces. */
-  private def posScanWithIds(name: String, schema: StructType,
+  private def posScanWithIds(name: String, version: Int, schema: StructType,
       entries: Seq[FileEntry]): DataFrame = {
     val tracking = rowTrackingEnabled(name)
-    val s0 = scanWithPos(name,
+    val s0 = scanWithPos(name, version,
       if (!tracking) schema
       else StructType(schema.fields :+
         StructField(TableStore.RowIdCol, LongType, nullable = true)),
@@ -3284,7 +3337,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       val absToRel = candidates.map(e =>
         Paths.get(absPath(name, e.rel)).toAbsolutePath.normalize.toString -> e.rel)
       val tracking = rowTrackingEnabled(name)
-      val live = posScanWithIds(name, schema, candidates)
+      val live = posScanWithIds(name, base, schema, candidates)
       val matches = live.filter(cond)
         .join(spark.createDataFrame(absToRel).toDF("__abs", "__rel"),
           col("__graft_file") === col("__abs"), "inner")
@@ -3363,7 +3416,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * `cond` — the copy-on-write discovery pass. Stats-pruned first, so a
     * selective predicate over a sorted/partitioned table scans only the
     * candidate files it could possibly touch. */
-  private def touchedFiles(name: String, schema: StructType, entries: Seq[FileEntry],
+  private def touchedFiles(name: String, version: Int, schema: StructType, entries: Seq[FileEntry],
       cond: Column): Set[String] = {
     val candidates = pruneEntries(name, schema, entries, cond)
     if (candidates.isEmpty) Set.empty
@@ -3371,7 +3424,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // is a UNION of plain and anti-joined branches, where
     // input_file_name() is undefined — the scan's own __graft_file column
     // is the per-branch file identity
-    else scanWithPos(name, schema, candidates)
+    else scanWithPos(name, version, schema, candidates)
       .filter(cond)
       .select(col("__graft_file")).distinct()
       .collect().map(r => relOf(name, r.getString(0))).toSet
@@ -3461,9 +3514,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       val base = currentVersion(name).getOrElse(
         throw new IllegalArgumentException(s"table not found: $name"))
       val (schema, entries) = readManifest(name, base)
-      val touched = touchedFiles(name, schema, entries, cond)
+      val touched = touchedFiles(name, base, schema, entries, cond)
       if (touched.isEmpty) return // no matching rows anywhere — nothing to commit
-      val subset = rewriteSource(name, schema, entries.filter(e => touched(e.rel)))
+      val subset = rewriteSource(name, base, schema, entries.filter(e => touched(e.rel)))
       val lschema = logicalizeSchema(name, schema)
       // SQL UPDATE semantics: every SET expression (and the WHERE) sees
       // the PRE-image row, so all assignments evaluate in ONE projection.
@@ -3498,9 +3551,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       val base = currentVersion(name).getOrElse(
         throw new IllegalArgumentException(s"table not found: $name"))
       val (schema, entries) = readManifest(name, base)
-      val touched = touchedFiles(name, schema, entries, cond)
+      val touched = touchedFiles(name, base, schema, entries, cond)
       if (touched.isEmpty) return
-      val subset = rewriteSource(name, schema, entries.filter(e => touched(e.rel)))
+      val subset = rewriteSource(name, base, schema, entries.filter(e => touched(e.rel)))
       val cdc = if (!cdfEnabled(name)) None
         else Some(dropRowIdCol(subset.filter(cond))
           .withColumn("_change_type", lit("delete")))
@@ -3542,8 +3595,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           lit(s"replaceWhere on $name: incoming rows do not all satisfy the " +
             "predicate — every inserted row must belong to the replaced region; row: "),
           to_json(struct(raw.columns.toSeq.map(col): _*)))).cast("boolean")))
-      val touched = touchedFiles(name, schema, entries, cond)
-      val subset = rewriteSource(name, schema, entries.filter(e => touched(e.rel)))
+      val touched = touchedFiles(name, base, schema, entries, cond)
+      val subset = rewriteSource(name, base, schema, entries.filter(e => touched(e.rel)))
       val cdc = if (!cdfEnabled(name)) None else
         Some(dropRowIdCol(subset.filter(cond))
           .withColumn("_change_type", lit("delete"))
@@ -3726,7 +3779,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         notMatchedBySource, schema, entries, base, op)
       return
     }
-    val target = readEntries(name, schema, entries)
+    val target = readEntries(name, base, schema, entries)
 
     // Discovery finds every file the merge could modify: files with
     // matched rows (when matched clauses exist) and files with by-source
@@ -3783,7 +3836,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           //  - the Delta-parity multiple-match check rides the same
           //    aggregation (any (file, pos) with >1 match).
           // The shuffle is bounded by the candidate rows, never the table.
-          val t = scanWithPos(name, schema, cand).alias("t")
+          val t = scanWithPos(name, base, schema, cand).alias("t")
           val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
           val onCond = extraOn.map(keyCond && _).getOrElse(keyCond)
           val s = source.withColumn("__graft_s", lit(true)).alias("s")
@@ -3822,7 +3875,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // row tracking: the rewrite subset carries the hidden id column;
     // MergeInto's clause dispatch passes unset columns through, so an
     // UPDATEd row keeps its id and only the INSERT side mints fresh ones
-    val subset = rewriteSource(name, schema, entries.filter(e => touched(e.rel)))
+    val subset = rewriteSource(name, base, schema, entries.filter(e => touched(e.rel)))
     val rewritten = MergeInto(subset, source, keys, extraOn, matched,
       notMatched = Nil, notMatchedBySource, failOnMultipleMatches = false)
     val inserts = withNullRowId(name,
@@ -3915,7 +3968,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     try {
       val tracking = rowTrackingEnabled(name)
       val sMark = "__graft_s"
-      val t = posScanWithIds(name, schema, cand).alias("t")
+      val t = posScanWithIds(name, base, schema, cand).alias("t")
       val s = source.withColumn(sMark, lit(true)).alias("s")
       val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
       val onCond = extraOn.map(keyCond && _).getOrElse(keyCond)
@@ -3996,7 +4049,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
               Seq(col(s"t.${TableStore.RowIdCol}").as(TableStore.RowIdCol))
             else Nil): _*))
       val inserts = withNullRowId(name,
-        insertedRows(readEntries(name, schema, entries), source, keys, extraOn,
+        insertedRows(readEntries(name, base, schema, entries), source, keys, extraOn,
           notMatched))
       val toAppend = updates.map(_.unionByName(inserts)).getOrElse(inserts)
 
@@ -4030,7 +4083,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         val ins = dropRowIdCol(inserts).withColumn("_change_type", lit("insert"))
         val cdcDf =
           if (cand.isEmpty) ins
-          else changeSet(readEntries(name, schema, cand), source, keys, extraOn,
+          else changeSet(readEntries(name, base, schema, cand), source, keys, extraOn,
             matched, notMatchedBySource).unionByName(ins)
         cdcDf.write.parquet(dir.resolve("cdc").toString)
       }
@@ -4411,7 +4464,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
   /** Logical names of the bloom-indexed columns (empty = no index). */
   private[graft] def bloomIndexCols(name: String): Seq[String] =
-    meta(name).properties.get("bloom.cols")
+    bloomColsOf(meta(name).properties)
+
+  private def bloomColsOf(props: Map[String, String]): Seq[String] =
+    props.get("bloom.cols")
       .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
 
   private def bloomNdv(name: String): Long =

@@ -13,6 +13,22 @@ object GraftShims {
     * live catalog, temp views included). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** A parquet scan over `index` with an explicit data schema and no
+    * partition columns — the relation `spark.read.schema(s).parquet(…)`
+    * builds, minus the path listing: the index alone decides which files
+    * the scan opens. The schema is made nullable as the reader does for a
+    * user-specified schema, so a file missing a column NULL-fills it. */
+  def parquetScan(spark: SparkSession, index: execution.datasources.FileIndex,
+      dataSchema: types.StructType): DataFrame = {
+    val relation = execution.datasources.HadoopFsRelation(index,
+      partitionSchema = new types.StructType(),
+      dataSchema = catalyst.util.CharVarcharUtils
+        .replaceCharVarcharWithStringInSchema(dataSchema).asNullable,
+      bucketSpec = None,
+      fileFormat = new execution.datasources.parquet.ParquetFileFormat(),
+      options = Map.empty)(spark)
+    ofRows(spark, execution.datasources.LogicalRelation(relation))
+  }
   /** The analyzed logical plan of a DataFrame — for splicing a
     * library-built relation into an analyzer rule's output. */
   def analyzedPlan(df: DataFrame): LogicalPlan = df.queryExecution.analyzed

@@ -143,6 +143,23 @@ class DataSkippingSpec extends AnyFunSuite {
     store.detach()
   }
 
+  test("an IN list past the InSet conversion threshold still prunes") {
+    val (store, _) = fixture()
+    // 11 keys > spark.sql.optimizer.inSetConversionThreshold (10): the
+    // optimizer pushes InSet, not In, into the scan
+    val keys = (200L until 211L)
+    val inSet = org.apache.spark.sql.GraftShims.column(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("k"), keys.toSet[Any]))
+    assert(store.prunedFileList("db.sk", Some(inSet)).size == 1)
+    val q = store.read("db.sk").filter(col("k").isin(keys: _*))
+    assert(q.queryExecution.optimizedPlan.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.InSet]))))
+    assert(ScanFiles(q) == 1)
+    assert(q.count() == 11)
+    store.detach()
+  }
+
   test("statsFor keeps skipping through the rename + cased-spelling combo") {
     // column k is renamed to kk (physical name stays k); a snapshot then
     // declares statsFor with the CASED logical spelling "KK". The

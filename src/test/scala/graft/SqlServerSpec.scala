@@ -40,6 +40,22 @@ class SqlServerSpec extends AnyFunSuite {
     }
   }
 
+  test("a store table attached to the server session is readable over the wire") {
+    val store = new graft.tables.TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_srv").toString)
+    try {
+      // a name no other spec's store holds: the suite shares one session
+      store.createOrReplace("srvspec.t", spark.range(0, 10).toDF("k"))
+      withServer { port =>
+        val c = new Client(port)
+        try {
+          val r = c.sql("SELECT count(*) AS n FROM srvspec.t WHERE k < 4")
+          assert(r.contains("""["4"]"""), r)
+        } finally c.close()
+      }
+    } finally store.detach()
+  }
+
   test("temp views are session-isolated; saved tables are shared (warehouse semantics)") {
     withServer { port =>
       val a = new Client(port); val b = new Client(port)
