@@ -32,7 +32,6 @@ final case class MergeBuilder(
   def using(src: DataFrame): MergeBuilder = copy(source = Some(src))
   def on(ks: Seq[String], extra: Option[Column] = None): MergeBuilder =
     copy(keys = ks, extraOn = extra)
-  def withoutDuplicateCheck(): MergeBuilder = copy(failOnMultipleMatches = false)
 
   def whenMatched(cond: Column): MatchedClause = MatchedClause(this, Some(cond))
   def whenMatched(): MatchedClause = MatchedClause(this, None)

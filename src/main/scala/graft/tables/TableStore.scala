@@ -44,8 +44,9 @@ import graft.operators.MergeInto
   *    candidate sets the same way — data skipping for sorted/clustered
   *    tables.
   *
-  * Known limits vs Delta, by design (SURVEY.md §4): single-writer (no
-  * commit-protocol arbitration); schema evolution rewrites the snapshot.
+  * Concurrent writers arbitrate through one optimistic single-table
+  * commit protocol (`TableStore.commit`: stage, then compare-and-swap or
+  * rebase under a per-table lock) and multi-table [[TableStore.transaction]]s.
   */
 final case class TableMeta(
     comment: Option[String] = None,
@@ -297,7 +298,8 @@ final class Txn private[tables] (store: TableStore) extends TableWriter {
     * a crash between merges can never leave the indexes mutually
     * inconsistent. The merge reads the table's pre-transaction state
     * (same as every staged write); `mor`-mode tables are rejected —
-    * deletion-vector commits don't stage. */
+    * deletion-vector commits don't stage. Returns the discovery reading
+    * [[TableStore.merge]] returns. */
   def merge(
       name: String,
       source: DataFrame,
@@ -307,7 +309,7 @@ final class Txn private[tables] (store: TableStore) extends TableWriter {
       notMatched: Seq[graft.operators.MergeInto.NotMatchedInsert] = Nil,
       notMatchedBySource: Seq[graft.operators.MergeInto.BySourceAction] = Nil,
       schemaEvolution: Boolean = false,
-      op: String = "txn_merge"): Unit = {
+      op: String = "txn_merge"): (Int, Int) = {
     failIfStaged(name)
     store.mergeInternal(name, source, keys, extraOn, matched, notMatched,
       notMatchedBySource, schemaEvolution, op, txn = Some(this))
@@ -439,9 +441,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * representation a DELETE/UPDATE in `mor` mode commits instead of
     * rewriting the file (Delta's deletion vectors). Min/max stats remain
     * valid with DVs attached: deletion only narrows a file's true range,
-    * so stats-based pruning stays conservative. */
-  /** `base` = the file's base row id when the table tracks row ids
-    * (Delta row tracking): the file's rows own the fresh-id range
+    * so stats-based pruning stays conservative.
+    *
+    * `rows` = the file's physical row count from its footer (-1 when
+    * unknown). `base` = the file's base row id when the table tracks row
+    * ids (Delta row tracking): the file's rows own the fresh-id range
     * [base, base + rows); -1 before tracking is enabled or for files
     * whose row count is unknown.
     *
@@ -544,41 +548,28 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       case Some(l) => DataType.fromJson(dec(l.split('\t')(1))).asInstanceOf[StructType]
       case None => throw new IllegalStateException(s"$what has no schema")
     }
-    val op = lines.collectFirst {
+    // one pass over the `#tag<TAB>file<TAB>value` side lines (#dv, #rows,
+    // #base, #nulls): (tag, file) → raw value; `#schema`/`#op` have no file
+    val (tagged, fileLines) = lines.partition(_.startsWith("#"))
+    val side: Map[(String, String), String] = tagged.iterator.map(_.split('\t'))
+      .collect { case Array(tag, rel, v) => (tag, dec(rel)) -> v }.toMap
+    val op = tagged.collectFirst {
       case l if l.startsWith("#op\t") => dec(l.split('\t')(1))
     }.getOrElse("write")
-    val dvByFile: Map[String, Seq[String]] = lines.collect {
-      case l if l.startsWith("#dv\t") =>
-        val parts = l.split('\t')
-        dec(parts(1)) -> dec(parts(2)).split(',').toSeq
-    }.toMap
-    val rowsByFile: Map[String, Long] = lines.collect {
-      case l if l.startsWith("#rows\t") =>
-        val parts = l.split('\t')
-        dec(parts(1)) -> parts(2).toLong
-    }.toMap
-    val baseByFile: Map[String, Long] = lines.collect {
-      case l if l.startsWith("#base\t") =>
-        val parts = l.split('\t')
-        dec(parts(1)) -> parts(2).toLong
-    }.toMap
-    val nullsByFile: Map[String, Map[String, Long]] = lines.collect {
-      case l if l.startsWith("#nulls\t") =>
-        val parts = l.split('\t')
-        dec(parts(1)) -> parts(2).split(',').iterator.map { kv =>
-          val i = kv.lastIndexOf('=')
-          dec(kv.substring(0, i)) -> kv.substring(i + 1).toLong
-        }.toMap
-    }.toMap
-    val entries = lines.filterNot(_.startsWith("#")).map { l =>
+    def long(tag: String, rel: String): Long = side.get((tag, rel)).fold(-1L)(_.toLong)
+    val entries = fileLines.map { l =>
       val parts = l.split('\t')
       val stats = parts.tail.grouped(3).collect {
         case Array(c, mn, mx) => dec(c) -> ColStats(dec(mn), dec(mx))
       }.toMap
       val rel = dec(parts(0))
-      FileEntry(rel, stats, dvByFile.getOrElse(rel, Nil),
-        rowsByFile.getOrElse(rel, -1L), baseByFile.getOrElse(rel, -1L),
-        nullsByFile.getOrElse(rel, Map.empty))
+      FileEntry(rel, stats,
+        side.get(("#dv", rel)).fold(Seq.empty[String])(v => dec(v).split(',').toSeq),
+        long("#rows", rel), long("#base", rel),
+        side.get(("#nulls", rel)).fold(Map.empty[String, Long])(_.split(',').iterator.map { kv =>
+          val i = kv.lastIndexOf('=')
+          dec(kv.substring(0, i)) -> kv.substring(i + 1).toLong
+        }.toMap))
     }
     (schema, entries, op)
   }
@@ -1261,23 +1252,80 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     try s.iterator().asScala.toSeq finally s.close()
   }
 
-  /** Write `df`'s files into an atomically-allocated `v_<next>` honoring
-    * the layout, collect their manifest entries (with stats), commit
-    * `carryOver ++ new`. Optimistic concurrency: when `expectedBase` is
-    * set, the commit verifies (under the table's commit lock) that the
-    * current version is still the one the writer derived its changes
-    * from — a lost-update conflict raises instead of silently clobbering
-    * the other writer (Delta's conflict-detection shape, reduced to one
-    * pointer); the loser's allocated version directory is dropped so it
-    * never surfaces as a phantom committed version. */
-  /** Write `df`'s files and manifest into an atomically-allocated
-    * `v_<next>` WITHOUT making it current — the expensive half of a
-    * commit, shared by [[commitVersion]] and multi-table [[transaction]]s
-    * (which stage every table first and swap all pointers together). */
-  private def stageVersion(name: String, df: DataFrame, partitionBy: Seq[String],
-      sortWithin: Seq[String], statsFor: Seq[String], carryOver: Seq[FileEntry],
-      schemaHint: Option[StructType], op: String): (Int, Path) = {
+  /** The single-table commit protocol — every commit outside multi-table
+    * [[transaction]]s publishes here, so this is the one place a table's
+    * pointer moves (and the one place to instrument it).
+    *
+    *  1. Allocate `v_<next>` atomically ([[allocateVersion]]).
+    *  2. Run `stage` outside the lock: it writes data, sidecars (`cdc/`,
+    *     `dv/`, `copy_files`) and the staged manifest into the slot, or
+    *     returns false — nothing to commit, the slot is dropped.
+    *  3. Publish under the table's commit lock. Optimistic concurrency:
+    *     with `expectedBase` set, the current version must still be the
+    *     one the writer derived its changes from; if it moved, the commit
+    *     is rebased onto it ([[tryRebase]]) or, on genuine conflict (or
+    *     always, with `strictCas`), raises
+    *     `ConcurrentModificationException` instead of clobbering the
+    *     other writer (Delta's conflict-detection shape, reduced to one
+    *     pointer). Without a base (plain replace) the commit still never
+    *     moves the pointer backward: it renumbers past an interloper that
+    *     claimed a higher number while it staged. Then the manifest is
+    *     promoted and the pointer swapped.
+    *
+    * On any failure the (possibly renumbered) directory is dropped, so a
+    * losing writer never surfaces as a phantom committed version. */
+  private def commit(name: String, expectedBase: Option[Option[Int]] = None,
+      strictCas: Boolean = false)(stage: (Int, Path) => Boolean): Unit = {
     val (next, dir) = allocateVersion(name)
+    var liveDir = dir // rebase may renumber (move) the staged directory
+    try {
+      if (!stage(next, dir)) dropAbortedVersion(dir)
+      else withCommitLock(name) {
+        val finalV = expectedBase match {
+          case Some(base) if currentVersion(name) != base =>
+            val cur = currentVersion(name)
+            val rebased = (base, cur) match {
+              case (Some(bv), Some(cv)) if !strictCas => tryRebase(name, next, bv, cv)
+              case _ => None
+            }
+            rebased match {
+              case Some((v, d)) => liveDir = d; v
+              case None => throw new java.util.ConcurrentModificationException(
+                s"$name moved from version $base to $cur since this writer read " +
+                  "it, and the interleaved commits touched data this change " +
+                  "depends on — re-derive the change from the current snapshot " +
+                  "and retry")
+            }
+          case _ =>
+            // no CAS base (plain replace) or base unmoved — but an
+            // interleaved commit may still have claimed a HIGHER number
+            // while we staged (replaces assert nothing about the base, so
+            // they serialize in lock order): the pointer must never move
+            // backward — history, timestamp travel and the change feed
+            // all diff v against v-1 — so renumber past the interloper
+            if (currentVersion(name).exists(_ >= next)) {
+              val (stagedSchema, staged, opName) = parseManifest(
+                stagedManifestPath(name, next), s"staged v$next of $name")
+              val (v, d) = renumberStaged(name, next, stagedSchema, staged, opName)
+              liveDir = d; v
+            } else next
+        }
+        promoteManifest(name, finalV)
+        swapTo(name, finalV)
+      }
+    } catch { case t: Throwable => dropAbortedVersion(liveDir); throw t }
+  }
+
+  /** Write `df`'s files into the allocated slot `v_<next>` (`dir`)
+    * honoring the layout — partitioning, sort, bloom index, target file
+    * rows — and stage the manifest `carryOver ++ new` WITHOUT making it
+    * current: the expensive half of a commit, shared by [[commit]] bodies
+    * and multi-table [[transaction]]s (which stage every table first and
+    * swap all pointers together). Returns the new files' entries. On
+    * failure the slot is dropped. */
+  private def stageVersion(name: String, next: Int, dir: Path, df: DataFrame,
+      partitionBy: Seq[String], sortWithin: Seq[String], statsFor: Seq[String],
+      carryOver: Seq[FileEntry], schemaHint: Option[StructType], op: String): Seq[FileEntry] = {
     try {
       // Generated columns recompute, then CHECK constraints ride the write
       // plan (single pass, raise on violation) — every path that stages
@@ -1380,61 +1428,27 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       empties.foreach(e => Files.deleteIfExists(tableDir(name).resolve(e.rel)))
       writeManifest(name, next, schemaHint.getOrElse(checked.schema), carryOver ++ kept, op)
       writeLayout(name, pbP, swP, sfP)
-      (next, dir)
+      kept
     } catch { case t: Throwable => dropAbortedVersion(dir); throw t }
   }
 
+  /** [[commit]] of `df` staged by [[stageVersion]], plus the change-feed
+    * rows and COPY INTO's loaded-file ledger inside the same staged
+    * version directory — atomic with the commit (an abort drops them with
+    * the version). */
   private def commitVersion(name: String, df: DataFrame, partitionBy: Seq[String],
       sortWithin: Seq[String], statsFor: Seq[String], carryOver: Seq[FileEntry],
       schemaHint: Option[StructType] = None, expectedBase: Option[Option[Int]] = None,
       op: String = "write", cdc: Option[DataFrame] = None,
-      copyFiles: Seq[String] = Nil, strictCas: Boolean = false): Unit = {
-    val (next, dir) = stageVersion(name, df, partitionBy, sortWithin, statsFor,
-      carryOver, schemaHint, op)
-    var liveDir = dir // rebase may renumber (move) the staged directory
-    try {
-      // change-feed rows land INSIDE the staged version dir — atomic with
-      // the commit (an abort drops them with the version)
+      copyFiles: Seq[String] = Nil, strictCas: Boolean = false): Unit =
+    commit(name, expectedBase, strictCas) { (next, dir) =>
+      stageVersion(name, next, dir, df, partitionBy, sortWithin, statsFor,
+        carryOver, schemaHint, op)
       cdc.foreach(_.write.parquet(dir.resolve("cdc").toString))
-      // COPY INTO's loaded-file ledger rides the same staged dir
       if (copyFiles.nonEmpty)
-        Files.write(dir.resolve("copy_files"),
-          copyFiles.mkString("\n").getBytes(UTF_8))
-      withCommitLock(name) {
-        val finalV = expectedBase match {
-          case Some(base) if currentVersion(name) != base =>
-            val cur = currentVersion(name)
-            val rebased = (base, cur) match {
-              case (Some(bv), Some(cv)) if !strictCas => tryRebase(name, next, bv, cv)
-              case _ => None
-            }
-            rebased match {
-              case Some((v, d)) => liveDir = d; v
-              case None => throw new java.util.ConcurrentModificationException(
-                s"$name moved from version $base to $cur since this writer read " +
-                  "it, and the interleaved commits touched data this change " +
-                  "depends on — re-derive the change from the current snapshot " +
-                  "and retry")
-            }
-          case _ =>
-            // no CAS base (plain replace) or base unmoved — but an
-            // interleaved commit may still have claimed a HIGHER number
-            // while we staged (replaces assert nothing about the base, so
-            // they serialize in lock order): the pointer must never move
-            // backward — history, timestamp travel and the change feed
-            // all diff v against v-1 — so renumber past the interloper
-            if (currentVersion(name).exists(_ >= next)) {
-              val (stagedSchema, staged, opName) = parseManifest(
-                stagedManifestPath(name, next), s"staged v$next of $name")
-              val (v, d) = renumberStaged(name, next, stagedSchema, staged, opName)
-              liveDir = d; v
-            } else next
-        }
-        promoteManifest(name, finalV)
-        swapTo(name, finalV)
-      }
-    } catch { case t: Throwable => dropAbortedVersion(liveDir); throw t }
-  }
+        Files.write(dir.resolve("copy_files"), copyFiles.mkString("\n").getBytes(UTF_8))
+      true
+    }
 
   /** WriteSerializable optimistic-concurrency resolution (Delta's default
     * isolation level): a commit whose compare-and-swap fails because the
@@ -2671,17 +2685,16 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         s"$name TIMESTAMP AS OF $ts precedes the oldest retained commit " +
           s"(${history(name).lastOption.map(_._2).getOrElse("none")})"))
 
-  /** Metadata-only commit of an existing entry list as the next version —
-    * the primitive behind [[restore]], [[cloneTo]] and [[addColumns]]: no
-    * data moves. */
+  /** Metadata-only [[commit]] of an existing entry list — the primitive
+    * behind [[restore]], the clones and the schema/metadata DDL: no data
+    * moves. DDL passes the version it read as `base`, so it rebases over
+    * a concurrent append instead of dropping it; without a base (restore,
+    * clones) the commit replaces. */
   private def commitManifestOnly(name: String, schema: StructType,
-      entries: Seq[FileEntry], op: String): Unit = {
-    val (next, dir) = allocateVersion(name)
-    try {
-      writeManifest(name, next, schema, entries, op)
-      withCommitLock(name) { promoteManifest(name, next); swapTo(name, next) }
-    } catch { case t: Throwable => dropAbortedVersion(dir); throw t }
-  }
+      entries: Seq[FileEntry], op: String, base: Option[Int] = None): Unit =
+    commit(name, base.map(Some(_))) { (next, _) =>
+      writeManifest(name, next, schema, entries, op); true
+    }
 
   /** Delta RESTORE: make `version`'s content the table's new CURRENT
     * version, as a fresh commit (history is preserved; the restore itself
@@ -2698,13 +2711,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * addition on a 100 TB table commits in milliseconds and rewrites
     * nothing — Delta's schema-evolution model. */
   def addColumns(name: String, cols: StructType): Unit = {
-    val (schema, entries) = currentManifest(name)
+    val (v, schema, entries) = currentSnapshot(name)
     // collide against BOTH name spaces: visible logical names and on-disk
     // physical names (incl. renamed/dropped columns still in old files)
     val taken = schema.fieldNames ++ logicalizeSchema(name, schema).fieldNames
     val dup = cols.fieldNames.filter(c => taken.exists(_.equalsIgnoreCase(c)))
     require(dup.isEmpty, s"$name ADD COLUMNS: column(s) already exist: ${dup.mkString(", ")}")
-    commitManifestOnly(name, StructType(schema.fields ++ cols.fields), entries, "add_columns")
+    commitManifestOnly(name, StructType(schema.fields ++ cols.fields), entries, "add_columns",
+      Some(v))
   }
 
   // ------------------------------------------- column mapping (rename/drop)
@@ -2714,8 +2728,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   // DROP are pure sidecar-metadata commits that change only the table's
   // visible ("logical") view. Internally every DataFrame — reads, DML
   // inputs, merge sources — speaks logical names; translation happens at
-  // exactly two boundaries: parquet writes ([[stageVersion]] and the
-  // merge-on-read append) rename logical→physical, and parquet reads
+  // exactly two boundaries: data-file writes (all through
+  // [[stageVersion]]) rename logical→physical, and parquet reads
   // ([[readEntries]]/[[scanWithPos]]) rename physical→logical. Manifests,
   // layout sidecars and per-file stats always store physical names.
   //
@@ -2737,10 +2751,6 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   private def droppedOf(props: Map[String, String]): Set[String] =
     props.keysIterator
       .filter(_.startsWith("coldrop.")).map(_.stripPrefix("coldrop.")).toSet
-
-  private[graft] def hasColumnMapping(name: String): Boolean =
-    meta(name).properties.keysIterator
-      .exists(k => k.startsWith("colmap.") || k.startsWith("coldrop."))
 
   /** Whether any RENAME mapping is in force. Drop-only mapped tables keep
     * every visible name equal to its physical name, so pushed filters
@@ -2818,7 +2828,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * file is rewritten at any scale; the rename is one sidecar write plus
     * a manifest-only commit for DESCRIBE HISTORY. */
   def renameColumn(name: String, from: String, to: String): Unit = {
-    val (schema, entries) = currentManifest(name)
+    val (v, schema, entries) = currentSnapshot(name)
     val visible = logicalizeSchema(name, schema)
     val field = visible.fields.find(_.name.equalsIgnoreCase(from)).getOrElse(
       throw new IllegalArgumentException(
@@ -2841,14 +2851,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       case None => m.columnComments
     }
     setMeta(name, m.copy(properties = props, columnComments = comments))
-    commitManifestOnly(name, schema, entries, "rename_column")
+    commitManifestOnly(name, schema, entries, "rename_column", Some(v))
   }
 
   /** ALTER TABLE … DROP COLUMN — **metadata-only** (column mapping): old
     * files keep the column's bytes but no read ever selects it; new files
     * simply omit it. */
   def dropColumn(name: String, colName: String): Unit = {
-    val (schema, entries) = currentManifest(name)
+    val (v, schema, entries) = currentSnapshot(name)
     val visible = logicalizeSchema(name, schema)
     val field = visible.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
       throw new IllegalArgumentException(
@@ -2870,7 +2880,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         s"notnull.$physical" - s"coldefault.$physical" +
         (s"coldrop.$physical" -> "1"),
       columnComments = m.columnComments - field.name))
-    commitManifestOnly(name, schema, entries, "drop_column")
+    commitManifestOnly(name, schema, entries, "drop_column", Some(v))
   }
 
   // --------------------------------------------------------- generated columns
@@ -3220,13 +3230,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * current snapshot with one metadata-only commit. */
   def enableRowTracking(name: String): Unit = {
     if (rowTrackingEnabled(name)) return
-    val (schema, entries) = currentManifest(name)
+    val (v, schema, entries) = currentSnapshot(name)
     require(entries.forall(_.rows >= 0),
       s"enable row tracking on $name: some files predate footer row counts — " +
         "run OPTIMIZE first")
     setMeta(name, meta(name).copy(properties =
       meta(name).properties + ("rowtracking" -> "true")))
-    commitManifestOnly(name, schema, entries, "enable_row_tracking")
+    commitManifestOnly(name, schema, entries, "enable_row_tracking", Some(v))
   }
 
   /** The table with a stable `_row_id` column. Requires
@@ -3321,7 +3331,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** Merge-on-read DELETE (`set` = None) / UPDATE (`set` = Some):
     * discovery scans only stats-pruned candidate files, the matching rows'
     * (file, position) pairs are written as this version's deletion vector,
-    * and UPDATE appends the rewritten rows as new files. Existing data
+    * and UPDATE appends the rewritten rows as new files through
+    * [[stageVersion]] (so they follow the table layout). Existing data
     * files are never modified or rewritten. */
   private def commitMorDml(name: String, cond: Column,
       set: Option[Map[String, Column]], op: String): Unit = {
@@ -3330,13 +3341,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val (schema, entries) = readManifest(name, base)
     val candidates = pruneEntries(name, schema, entries, cond)
     if (candidates.isEmpty) return
-    val (next, dir) = allocateVersion(name)
-    var liveDir = dir // rebase may renumber (move) the staged directory
-    try {
+    commit(name, Some(Some(base))) { (next, dir) =>
       val dvRel = s"v_$next/dv"
       val absToRel = candidates.map(e =>
         Paths.get(absPath(name, e.rel)).toAbsolutePath.normalize.toString -> e.rel)
-      val tracking = rowTrackingEnabled(name)
       val live = posScanWithIds(name, base, schema, candidates)
       val matches = live.filter(cond)
         .join(spark.createDataFrame(absToRel).toDF("__abs", "__rel"),
@@ -3347,67 +3355,42 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         .write.parquet(tableDir(name).resolve(dvRel).toString)
       val touched = spark.read.parquet(tableDir(name).resolve(dvRel).toString)
         .select(col("file")).distinct().collect().map(_.getString(0)).toSet
-      if (touched.isEmpty) { dropAbortedVersion(dir); return } // no matching rows
-      val appended: Seq[FileEntry] = set match {
-        case None => Nil
-        case Some(s) =>
-          // `live` and `set` speak logical names; the appended files store
-          // physical ones (same boundary stageVersion applies)
-          val lschema = logicalizeSchema(name, schema)
-          // one projection so every SET expression sees the PRE-image row
-          // (see the copy-on-write update path for the fold hazard)
-          val filtered = live.filter(cond)
-          val updated = filtered.select(
-            (lschema.fields.toSeq.map { f =>
-              s.get(f.name).map(_.cast(f.dataType).as(f.name))
-                .getOrElse(filtered(f.name))
-            } ++ (if (tracking) Seq(filtered(TableStore.RowIdCol)) else Nil)): _*)
-          val dataDir = dir.resolve("data")
-          toPhysicalDf(name, enforceChecks(name, applyGeneratedColumns(name, updated)))
-            .write.parquet(dataDir.toString)
-          val files = walkAll(dataDir)
-            .filter(p => p.getFileName.toString.endsWith(".parquet"))
-          val (pb, sw, sf) = readLayout(name)
-          footerEntries(name, files,
-            (pb ++ sw ++ sf).distinct.filter(schema.fieldNames.contains))
-      }
-      // change feed: the DV'd rows are the pre-images; an update's
-      // appended rewrite is the post-image set (deterministic re-derive
-      // of the same `live.filter(cond)` rows the DV captured)
-      if (cdfEnabled(name)) {
+      touched.nonEmpty && { // no matching rows: nothing to commit
         val lschema = logicalizeSchema(name, schema)
-        val pre = live.filter(cond).select(lschema.fieldNames.map(col).toSeq: _*)
-        val cdcDf = set match {
-          case None => pre.withColumn("_change_type", lit("delete"))
+        // one projection so every SET expression sees the PRE-image row
+        // (see the copy-on-write update path for the fold hazard)
+        val pre = live.filter(cond)
+        def postImage(s: Map[String, Column], extra: Seq[Column]) =
+          pre.select(lschema.fields.toSeq.map { f =>
+            s.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(pre(f.name))
+          } ++ extra: _*)
+        val carry = entries.map(e =>
+          if (touched(e.rel)) e.copy(dvs = e.dvs :+ dvRel) else e)
+        set match {
+          case None => writeManifest(name, next, schema, carry, op)
           case Some(s) =>
-            // one projection: post-image SETs see the pre-image row
-            val post = pre.select(lschema.fields.toSeq.map { f =>
-              s.get(f.name).map(_.cast(f.dataType).as(f.name))
-                .getOrElse(pre(f.name))
-            }: _*)
-            pre.withColumn("_change_type", lit("update_preimage"))
-              .unionByName(post.withColumn("_change_type", lit("update_postimage")))
+            // post-images keep the row id of the row they replace
+            val updated = postImage(s,
+              if (rowTrackingEnabled(name)) Seq(pre(TableStore.RowIdCol)) else Nil)
+            val (pb, sw, sf) = readLayout(name)
+            stageVersion(name, next, dir, updated, pb, sw, sf, carry, Some(schema), op)
         }
-        cdcDf.write.parquet(dir.resolve("cdc").toString)
-      }
-      val newEntries = entries.map(e =>
-        if (touched(e.rel)) e.copy(dvs = e.dvs :+ dvRel) else e) ++ appended
-      writeManifest(name, next, schema, newEntries, op)
-      withCommitLock(name) {
-        val cur = currentVersion(name)
-        val finalV =
-          if (cur == Some(base)) next
-          else cur.flatMap(cv => tryRebase(name, next, base, cv)) match {
-            case Some((v, d)) => liveDir = d; v
-            case None => throw new java.util.ConcurrentModificationException(
-              s"$name moved from version ${Some(base)} to $cur since this writer " +
-                "read it, and the interleaved commits touched data this change " +
-                "depends on — re-derive the change from the current snapshot and retry")
+        // change feed: the DV'd rows are the pre-images; an update's
+        // appended rewrite is the post-image set (deterministic re-derive
+        // of the same `live.filter(cond)` rows the DV captured)
+        if (cdfEnabled(name)) {
+          val preImg = pre.select(lschema.fieldNames.map(col).toSeq: _*)
+          val cdcDf = set match {
+            case None => preImg.withColumn("_change_type", lit("delete"))
+            case Some(s) =>
+              preImg.withColumn("_change_type", lit("update_preimage"))
+                .unionByName(postImage(s, Nil).withColumn("_change_type", lit("update_postimage")))
           }
-        promoteManifest(name, finalV)
-        swapTo(name, finalV)
+          cdcDf.write.parquet(dir.resolve("cdc").toString)
+        }
+        true
       }
-    } catch { case t: Throwable => dropAbortedVersion(liveDir); throw t }
+    }
   }
 
   // ------------------------------------------------------------ pruned DML
@@ -3429,11 +3412,6 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       .select(col("__graft_file")).distinct()
       .collect().map(r => relOf(name, r.getString(0))).toSet
   }
-
-  /** Test/tooling observability for MERGE discovery pruning: (candidate
-    * files scanned by the matched-row discovery join, total manifest
-    * files) of the most recent [[merge]] that had matched clauses. */
-  @volatile private[graft] var lastMergeDiscovery: Option[(Int, Int)] = None
 
   /** Manifest entries that could possibly hold a target row matching some
     * source row on `keys` — stats-pruned by the source's observed per-key
@@ -3659,7 +3637,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * Because reads use the manifest schema explicitly, files written
     * before the widening NULL-fill the new columns at scan time — the
     * widening itself is **metadata-only**, and the merge still rewrites
-    * only the files it actually touches. */
+    * only the files it actually touches.
+    *
+    * Returns the discovery reading (candidate files the discovery pass
+    * scanned, total manifest files) — the observable of discovery
+    * pruning; an insert-only merge scans no candidates. */
   def merge(
       name: String,
       source: DataFrame,
@@ -3669,7 +3651,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       notMatched: Seq[MergeInto.NotMatchedInsert] = Nil,
       notMatchedBySource: Seq[MergeInto.BySourceAction] = Nil,
       schemaEvolution: Boolean = false,
-      op: String = "merge"): Unit =
+      op: String = "merge"): (Int, Int) =
     mergeInternal(name, source, keys, extraOn, matched, notMatched,
       notMatchedBySource, schemaEvolution, op, txn = None)
 
@@ -3699,7 +3681,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       notMatchedBySource0: Seq[MergeInto.BySourceAction],
       schemaEvolution: Boolean,
       op: String,
-      txn: Option[Txn]): Unit = {
+      txn: Option[Txn]): (Int, Int) = {
     val base = currentVersion(name).getOrElse(
       throw new IllegalArgumentException(s"table not found: $name"))
     val (schema0, entries) = readManifest(name, base)
@@ -3770,16 +3752,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // vectors + appended post-images instead of rewriting files. An
     // insert-only merge stays on the shared path below — it is a pure
     // append in either mode.
-    if (dmlMode(name) == "mor" && (matched.nonEmpty || notMatchedBySource.nonEmpty)) {
-      require(txn.isEmpty,
-        s"transactional MERGE into $name: mor-mode tables commit deletion " +
-          "vectors in place and cannot stage — use copy-on-write (setDmlMode " +
-          "'cow') for tables merged inside a transaction")
-      commitMorMerge(name, source, keys, extraOn, matched, notMatched,
-        notMatchedBySource, schema, entries, base, op)
-      return
-    }
-    val target = readEntries(name, base, schema, entries)
+    val mor = dmlMode(name) == "mor" && (matched.nonEmpty || notMatchedBySource.nonEmpty)
+    require(!mor || txn.isEmpty,
+      s"transactional MERGE into $name: mor-mode tables commit deletion " +
+        "vectors in place and cannot stage — use copy-on-write (setDmlMode " +
+        "'cow') for tables merged inside a transaction")
 
     // Discovery finds every file the merge could modify: files with
     // matched rows (when matched clauses exist) and files with by-source
@@ -3799,77 +3776,86 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // effective by-source applicability: an unconditioned clause makes the
     // union of clause conditions TRUE (discovery still joins — "all
     // unmatched rows" is not "all rows")
-    val bsUnconditioned = notMatchedBySource.exists(_.cond.isEmpty)
     val bsCond: Option[Column] =
       if (notMatchedBySource.isEmpty) None
-      else if (bsUnconditioned) Some(lit(true))
+      else if (notMatchedBySource.exists(_.cond.isEmpty)) Some(lit(true))
       else Some(notMatchedBySource.flatMap(_.cond).reduce(_ || _))
-    // the single-run discovery hook is maintained only for DIRECT merges:
-    // transactional stagings may run concurrently (x118 stages four
-    // tables from four threads), and interleaved writes would leave the
-    // hook holding an arbitrary table's reading — or None mid-race
-    if (txn.isEmpty) lastMergeDiscovery = None
-    val touched: Set[String] =
-      if (matched.isEmpty && bsCond.isEmpty) Set.empty // insert-only: pure append
+    // candidate files: stats-pruned by the source's key ranges for the
+    // matched side, by the clause conditions for the by-source side —
+    // the rest of the table is never even scanned
+    val cand: Seq[FileEntry] =
+      if (matched.isEmpty && bsCond.isEmpty) Nil // insert-only: pure append
       else {
-        // candidate files: stats-pruned by the source's key ranges for the
-        // matched side, by the clause conditions for the by-source side —
-        // the rest of the table is never even scanned
         val mCand: Seq[FileEntry] =
           if (matched.isEmpty) Nil
           else mergeCandidates(name, schema, entries, source, keys).getOrElse(Nil)
         val bsCand: Seq[FileEntry] =
           bsCond.map(c => pruneEntries(name, schema, entries, c)).getOrElse(Nil)
-        val cand = (mCand ++ bsCand).groupBy(_.rel).map(_._2.head).toSeq
-        if (matched.nonEmpty && txn.isEmpty)
-          lastMergeDiscovery = Some((cand.size, entries.size))
-        if (cand.isEmpty) Set.empty
-        else {
-          // ONE join pass over the candidates decides everything:
-          //  - a matched row forces a rewrite only if some matched CLAUSE
-          //    applies (first-match-wins leaves other rows byte-identical,
-          //    so a full-snapshot SCD2 merge touches only files holding
-          //    actually-changed rows — NULL clause conditions mean
-          //    "does not apply");
-          //  - an UNmatched row forces a rewrite only if the by-source
-          //    condition holds (vanished keys, not the whole slice);
-          //  - the Delta-parity multiple-match check rides the same
-          //    aggregation (any (file, pos) with >1 match).
-          // The shuffle is bounded by the candidate rows, never the table.
-          val t = scanWithPos(name, base, schema, cand).alias("t")
-          val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-          val onCond = extraOn.map(keyCond && _).getOrElse(keyCond)
-          val s = source.withColumn("__graft_s", lit(true)).alias("s")
-          val anyClause = matched.map(_.cond.getOrElse(lit(true)))
-            .reduceOption(_ || _).getOrElse(lit(false))
-          val bsFlag = bsCond.getOrElse(lit(false))
-          // Join type follows the clause shape: a by-source clause must see
-          // UNmatched target rows (left_outer); a matched-only merge — the
-          // common SCD upsert — needs only matched rows, so an inner join
-          // bounds the discovery aggregation by the SOURCE batch even when
-          // stats pruning couldn't cut the candidate set (e.g. the first
-          // merge into a stats-blind layout). The __n === 0 branch below is
-          // then vacuously dead, which is exactly right: no by-source
-          // clause means unmatched rows never force a rewrite.
-          val discoveryJoin = if (bsCond.isEmpty) "inner" else "left_outer"
-          val perFile = t.join(s, onCond, discoveryJoin)
-            .groupBy(col("__graft_file"), col("__graft_pos"))
-            .agg(count(col("__graft_s")).as("__n"),
-              max(when(anyClause, 1).otherwise(0)).as("__rw"),
-              org.apache.spark.sql.functions.first(bsFlag).as("__bs"))
-            .groupBy(col("__graft_file"))
-            .agg(max(col("__n")).as("__mx"),
-              max(when(col("__n") > 0 && col("__rw") === 1, 1)
-                .when(col("__n") === 0 &&
-                  org.apache.spark.sql.functions.coalesce(col("__bs"), lit(false)), 1)
-                .otherwise(0)).as("__rel"))
-            .collect()
-          if (matched.nonEmpty && perFile.exists(_.getAs[Long]("__mx") > 1))
-            throw new IllegalStateException(
-              s"MERGE: multiple source rows match a single target row on keys ${keys.mkString(",")}")
-          perFile.filter(_.getAs[Int]("__rel") == 1)
-            .map(r => relOf(name, r.getString(0))).toSet
-        }
+        (mCand ++ bsCand).groupBy(_.rel).map(_._2.head).toSeq
+      }
+    val (pb, sw, sf0) = readLayout(name)
+    // ADAPTIVE merge-key stats: a merge whose keys carry no file stats
+    // cannot prune its discovery scan — record the keys into the stats
+    // layout so THIS commit's rewritten/inserted files (and every later
+    // write, and an OPTIMIZE backfill) collect min/max for them. The
+    // table tunes itself toward its own merge pattern, Delta's
+    // "collect stats on filter columns" guidance made automatic.
+    val layoutCols = (pb ++ sw ++ sf0).map(_.toLowerCase)
+    val sf = sf0 ++ keys.filterNot(k =>
+      layoutCols.contains(physicalName(name, k).toLowerCase))
+    if (mor) {
+      commitMorMerge(name, source, keys, extraOn, matched, notMatched,
+        notMatchedBySource, cand, schema, entries, base, (pb, sw, sf), op)
+      return (cand.size, entries.size)
+    }
+    val target = readEntries(name, base, schema, entries)
+    val touched: Set[String] =
+      if (cand.isEmpty) Set.empty
+      else {
+        // ONE join pass over the candidates decides everything:
+        //  - a matched row forces a rewrite only if some matched CLAUSE
+        //    applies (first-match-wins leaves other rows byte-identical,
+        //    so a full-snapshot SCD2 merge touches only files holding
+        //    actually-changed rows — NULL clause conditions mean
+        //    "does not apply");
+        //  - an UNmatched row forces a rewrite only if the by-source
+        //    condition holds (vanished keys, not the whole slice);
+        //  - the Delta-parity multiple-match check rides the same
+        //    aggregation (any (file, pos) with >1 match).
+        // The shuffle is bounded by the candidate rows, never the table.
+        val t = scanWithPos(name, base, schema, cand).alias("t")
+        val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
+        val onCond = extraOn.map(keyCond && _).getOrElse(keyCond)
+        val s = source.withColumn("__graft_s", lit(true)).alias("s")
+        val anyClause = matched.map(_.cond.getOrElse(lit(true)))
+          .reduceOption(_ || _).getOrElse(lit(false))
+        val bsFlag = bsCond.getOrElse(lit(false))
+        // Join type follows the clause shape: a by-source clause must see
+        // UNmatched target rows (left_outer); a matched-only merge — the
+        // common SCD upsert — needs only matched rows, so an inner join
+        // bounds the discovery aggregation by the SOURCE batch even when
+        // stats pruning couldn't cut the candidate set (e.g. the first
+        // merge into a stats-blind layout). The __n === 0 branch below is
+        // then vacuously dead, which is exactly right: no by-source
+        // clause means unmatched rows never force a rewrite.
+        val discoveryJoin = if (bsCond.isEmpty) "inner" else "left_outer"
+        val perFile = t.join(s, onCond, discoveryJoin)
+          .groupBy(col("__graft_file"), col("__graft_pos"))
+          .agg(count(col("__graft_s")).as("__n"),
+            max(when(anyClause, 1).otherwise(0)).as("__rw"),
+            org.apache.spark.sql.functions.first(bsFlag).as("__bs"))
+          .groupBy(col("__graft_file"))
+          .agg(max(col("__n")).as("__mx"),
+            max(when(col("__n") > 0 && col("__rw") === 1, 1)
+              .when(col("__n") === 0 &&
+                org.apache.spark.sql.functions.coalesce(col("__bs"), lit(false)), 1)
+              .otherwise(0)).as("__rel"))
+          .collect()
+        if (matched.nonEmpty && perFile.exists(_.getAs[Long]("__mx") > 1))
+          throw new IllegalStateException(
+            s"MERGE: multiple source rows match a single target row on keys ${keys.mkString(",")}")
+        perFile.filter(_.getAs[Int]("__rel") == 1)
+          .map(r => relOf(name, r.getString(0))).toSet
       }
 
     // row tracking: the rewrite subset carries the hidden id column;
@@ -3890,15 +3876,6 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           matched, notMatchedBySource)
         .unionByName(ins))
     }
-    val (pb, sw, sf0) = readLayout(name)
-    // ADAPTIVE merge-key stats: a merge whose keys carry no file stats
-    // cannot prune its discovery scan — record the keys into the stats
-    // layout so THIS commit's rewritten/inserted files (and every later
-    // write, and an OPTIMIZE backfill) collect min/max for them. The
-    // table tunes itself toward its own merge pattern, Delta's
-    // "collect stats on filter columns" guidance made automatic.
-    val layoutCols = (pb ++ sw ++ sf0).map(_.toLowerCase)
-    val sf = sf0 ++ keys.filterNot(k => layoutCols.contains(k.toLowerCase))
     txn match {
       case None =>
         commitVersion(name, rewritten.unionByName(inserts), pb, sw, sf,
@@ -3912,26 +3889,30 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         // record BEFORE the cdc write: if that write throws, the staged
         // dir is already in the transaction's ledger and txnAbort drops
         // it (stageVersion's own cleanup no longer covers this point).
-        val (v, dir) = stageVersion(name, rewritten.unionByName(inserts),
-          pb, sw, sf, carryOver = entries.filterNot(e => touched(e.rel)),
+        val out = rewritten.unionByName(inserts)
+        val (v, dir) = allocateVersion(name)
+        stageVersion(name, v, dir, out, pb, sw, sf,
+          carryOver = entries.filterNot(e => touched(e.rel)),
           schemaHint = Some(schema), op = op)
         t.record(name, v, dir, Some(base))
         cdc.foreach(_.write.parquet(dir.resolve("cdc").toString))
     }
+    (cand.size, entries.size)
   }
 
   /** K5 in `mor` mode ([[setDmlMode]]): MERGE INTO as a deletion-vector
     * commit. Matched rows a clause modifies — and by-source rows — are
     * deletion-vectored in place; UPDATE post-images and INSERT rows are
-    * appended as new files. **No existing data file is rewritten**: a
+    * appended as new files through [[stageVersion]], in the table's
+    * layout. **No existing data file is rewritten**: a
     * merge touching 0.1% of a 100 TB table's rows commits a tiny DV
     * sidecar plus the new rows, where copy-on-write would rewrite every
     * touched file — the Delta deletion-vector MERGE trade (write cost ∝
     * changed rows, read cost deferred to the next OPTIMIZE).
     *
-    * Discovery is the same candidate-bounded single pass as the
-    * copy-on-write path (stats-pruned by the source's key ranges, INNER
-    * semantics via the left-outer join's match count): the per-row
+    * Discovery runs over the same candidates as the copy-on-write path
+    * (`cand`, stats-pruned by the source's key ranges; INNER semantics via
+    * the left-outer join's match count) in one pass: the per-row
     * (file, pos, kind) result lands as a staged parquet whose re-read
     * answers the Delta-parity multiple-match check, the touched-file
     * list, AND the deletion vector — one scan job over candidates, never
@@ -3946,26 +3927,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       matched: Seq[MergeInto.MatchedAction],
       notMatched: Seq[MergeInto.NotMatchedInsert],
       notMatchedBySource: Seq[MergeInto.BySourceAction],
+      cand: Seq[FileEntry],
       schema: StructType,
       entries: Seq[FileEntry],
       base: Int,
+      layout: (Seq[String], Seq[String], Seq[String]),
       op: String): Unit = {
     import MergeInto._
-    val bsUnconditioned = notMatchedBySource.exists(_.cond.isEmpty)
-    val bsCond: Option[Column] =
-      if (notMatchedBySource.isEmpty) None
-      else if (bsUnconditioned) Some(lit(true))
-      else Some(notMatchedBySource.flatMap(_.cond).reduce(_ || _))
-    val mCand: Seq[FileEntry] =
-      if (matched.isEmpty) Nil
-      else mergeCandidates(name, schema, entries, source, keys).getOrElse(Nil)
-    val bsCand: Seq[FileEntry] =
-      bsCond.map(c => pruneEntries(name, schema, entries, c)).getOrElse(Nil)
-    val cand = (mCand ++ bsCand).groupBy(_.rel).map(_._2.head).toSeq
-    if (matched.nonEmpty) lastMergeDiscovery = Some((cand.size, entries.size))
-    val (next, dir) = allocateVersion(name)
-    var liveDir = dir // rebase may renumber (move) the staged directory
-    try {
+    commit(name, Some(Some(base))) { (next, dir) =>
       val tracking = rowTrackingEnabled(name)
       val sMark = "__graft_s"
       val t = posScanWithIds(name, base, schema, cand).alias("t")
@@ -3993,8 +3962,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
       val dvRel = s"v_$next/dv"
       val discoDir = dir.resolve("disco")
-      var touched: Set[String] = Set.empty
-      if (cand.nonEmpty) {
+      val touched: Set[String] = if (cand.isEmpty) Set.empty else {
         val j = t.join(s, onCond, "left_outer")
         // one job over the candidates: per-row match count (multi-match
         // check) + disposition; only rows the merge modifies (or that
@@ -4014,7 +3982,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
             col("__graft_file") === col("__abs"), "inner")
           .select(col("__rel").as("file"), col("__graft_pos").as("pos"))
           .write.parquet(tableDir(name).resolve(dvRel).toString)
-        touched = spark.read.parquet(tableDir(name).resolve(dvRel).toString)
+        spark.read.parquet(tableDir(name).resolve(dvRel).toString)
           .select(col("file")).distinct().collect().map(_.getString(0)).toSet
       }
 
@@ -4053,63 +4021,28 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           notMatched))
       val toAppend = updates.map(_.unionByName(inserts)).getOrElse(inserts)
 
-      val dataDir = dir.resolve("data")
-      toPhysicalDf(name, enforceChecks(name, applyGeneratedColumns(name, toAppend)))
-        .write.parquet(dataDir.toString)
-      val files = walkAll(dataDir)
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      val (pb, sw, sf0) = readLayout(name)
-      // adaptive merge-key stats (copy-on-write parity): record the keys
-      // into the stats layout so future writes/OPTIMIZE collect min/max
-      // for them and discovery prunes
-      // case-insensitive rename fallback — same contract as commitVersion's
-      val physName = { val rev = renames(name).map(_.swap); (c: String) =>
-        rev.getOrElse(c, rev.find(_._1.equalsIgnoreCase(c)).map(_._2).getOrElse(c)) }
-      val layoutCols = (pb ++ sw ++ sf0).map(_.toLowerCase)
-      val sf = sf0 ++ keys.map(physName)
-        .filterNot(k => layoutCols.contains(k.toLowerCase))
-      val appended0 = footerEntries(name, files,
-        (pb ++ sw ++ sf).distinct.filter(schema.fieldNames.contains))
-      // a no-op clause set can stage empty part files — drop them, like
-      // stageVersion, so replays don't accrete empty parquet
-      val (empties, appended) = appended0.partition(_.rows == 0)
-      empties.foreach(e => Files.deleteIfExists(tableDir(name).resolve(e.rel)))
-      if (touched.isEmpty && appended.isEmpty) { dropAbortedVersion(dir); return }
-      writeLayout(name, pb, sw, sf)
-
-      // change feed: clause dispatch over the candidate subset decides
-      // each row's change type (Delta CDF parity); insert rows ride along
-      if (cdfEnabled(name)) {
-        val ins = dropRowIdCol(inserts).withColumn("_change_type", lit("insert"))
-        val cdcDf =
-          if (cand.isEmpty) ins
-          else changeSet(readEntries(name, base, schema, cand), source, keys, extraOn,
-            matched, notMatchedBySource).unionByName(ins)
-        cdcDf.write.parquet(dir.resolve("cdc").toString)
-      }
       // the discovery dump served commit-time checks only — drop it so the
       // committed version dir holds exactly what the manifest references
       dropAbortedVersion(discoDir)
       if (touched.isEmpty) dropAbortedVersion(tableDir(name).resolve(dvRel))
-
-      val newEntries = entries.map(e =>
-        if (touched(e.rel)) e.copy(dvs = e.dvs :+ dvRel) else e) ++ appended
-      writeManifest(name, next, schema, newEntries, op)
-      withCommitLock(name) {
-        val cur = currentVersion(name)
-        val finalV =
-          if (cur == Some(base)) next
-          else cur.flatMap(cv => tryRebase(name, next, base, cv)) match {
-            case Some((v, d)) => liveDir = d; v
-            case None => throw new java.util.ConcurrentModificationException(
-              s"$name moved from version ${Some(base)} to $cur since this writer " +
-                "read it, and the interleaved commits touched data this change " +
-                "depends on — re-derive the change from the current snapshot and retry")
-          }
-        promoteManifest(name, finalV)
-        swapTo(name, finalV)
+      val (pb, sw, sf) = layout
+      val appended = stageVersion(name, next, dir, toAppend, pb, sw, sf,
+        entries.map(e => if (touched(e.rel)) e.copy(dvs = e.dvs :+ dvRel) else e),
+        Some(schema), op)
+      (touched.nonEmpty || appended.nonEmpty) && {
+        // change feed: clause dispatch over the candidate subset decides
+        // each row's change type (Delta CDF parity); insert rows ride along
+        if (cdfEnabled(name)) {
+          val ins = dropRowIdCol(inserts).withColumn("_change_type", lit("insert"))
+          val cdcDf =
+            if (cand.isEmpty) ins
+            else changeSet(readEntries(name, base, schema, cand), source, keys, extraOn,
+              matched, notMatchedBySource).unionByName(ins)
+          cdcDf.write.parquet(dir.resolve("cdc").toString)
+        }
+        true
       }
-    } catch { case t: Throwable => dropAbortedVersion(liveDir); throw t }
+    }
   }
 
   // ---------------------------------------------------------- transactions
@@ -4149,11 +4082,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       sortWithin: Seq[String], statsFor: Seq[String], append: Boolean,
       op: String): (Int, Path, Option[Int]) = {
     val base = currentVersion(name)
-    if (!append) {
-      val (v, dir) = stageVersion(name, df, partitionBy, sortWithin, statsFor,
-        Seq.empty[FileEntry], None, op)
+    def stage(df: DataFrame, pb: Seq[String], sw: Seq[String], sf: Seq[String],
+        carryOver: Seq[FileEntry], schemaHint: Option[StructType]) = {
+      val (v, dir) = allocateVersion(name)
+      stageVersion(name, v, dir, df, pb, sw, sf, carryOver, schemaHint, op)
       (v, dir, base)
-    } else {
+    }
+    if (!append) stage(df, partitionBy, sortWithin, statsFor, Nil, None)
+    else {
       val (schema, entries) = currentManifest(name)
       val (pb0, sw0, sf0) = readLayout(name)
       // identity parity with the direct append path: a transactional
@@ -4163,11 +4099,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // mismatch while supplying it bypassed the locked counter and could
       // collide with keys block-allocated by direct appends
       val (keyed, cleanup) = applyIdentity(name, df)
-      try {
-        val (v, dir) = stageVersion(name, alignedForAppend(name, schema, keyed),
-          pb0, sw0, sf0, entries, Some(schema), op)
-        (v, dir, base)
-      } finally cleanup()
+      try stage(alignedForAppend(name, schema, keyed), pb0, sw0, sf0, entries, Some(schema))
+      finally cleanup()
     }
   }
 

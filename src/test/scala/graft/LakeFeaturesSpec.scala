@@ -890,12 +890,11 @@ class LakeFeaturesSpec extends AnyFunSuite {
 
     // small batch confined to one key band: discovery must not scan the table
     val src = Seq((5L, "new5"), (7L, "new7"), (10001L, "ins")).toDF("k", "v")
-    store.merge("db.mp", src, Seq("k"),
+    val (cand, tot) = store.merge("db.mp", src, Seq("k"),
       matched = Seq(graft.operators.MergeInto.MatchedUpdate(None, Map("v" -> col("s.v")))),
       notMatched = Seq(graft.operators.MergeInto.NotMatchedInsert(None,
         Map("k" -> col("s.k"), "grp" -> lit(-1L), "v" -> col("s.v")))))
 
-    val Some((cand, tot)) = store.lastMergeDiscovery: @unchecked
     assert(tot == total, s"discovery saw a different manifest ($tot vs $total)")
     assert(cand < tot, s"merge discovery scanned every file ($cand/$tot)")
     // untouched band files carried over physically (no rewrite)
@@ -915,9 +914,9 @@ class LakeFeaturesSpec extends AnyFunSuite {
     }
     // an all-NULL-key source can match nothing: no file rewritten, inserts still land
     val nullSrc = Seq((Option.empty[Long], "nul")).toDF("k", "v")
-    store.merge("db.mp", nullSrc, Seq("k"),
+    val (nullCand, _) = store.merge("db.mp", nullSrc, Seq("k"),
       matched = Seq(graft.operators.MergeInto.MatchedUpdate(None, Map("v" -> col("s.v")))))
-    assert(store.lastMergeDiscovery.exists(_._1 == 0), "all-NULL key source should scan 0 files")
+    assert(nullCand == 0, "all-NULL key source should scan 0 files")
     assert(store.read("db.mp").filter(col("v") === "old").count() == 9998)
     store.detach()
   }
@@ -1053,9 +1052,8 @@ class LakeFeaturesSpec extends AnyFunSuite {
     // MERGE's per-tuple candidate cut consults the blooms too: a source
     // touching only residue-0 keys scans 1 of 4 files
     val src = Seq((40L, "T"), (60L, "T")).toDF("k", "v")
-    store.merge("db.b", src, Seq("k"),
+    val (cand, tot) = store.merge("db.b", src, Seq("k"),
       matched = Seq(graft.operators.MergeInto.MatchedUpdate(None, Map("v" -> col("s.v")))))
-    val Some((cand, tot)) = store.lastMergeDiscovery: @unchecked
     assert(tot == 4 && cand == 1, s"bloom-aware merge discovery scanned $cand/$tot files")
     assert(store.read("db.b").filter(col("v") === "T").count() == 2)
 
@@ -1120,17 +1118,15 @@ class LakeFeaturesSpec extends AnyFunSuite {
       .select(col("id").as("k"), lit("old").as("v"))
       .repartitionByRange(8, col("k"))
     store.createOrReplace("db.a", df)
-    def mergeBatch(ks: Seq[Long]): Unit =
+    def mergeBatch(ks: Seq[Long]): (Int, Int) =
       store.merge("db.a", ks.map(k => (k, "new")).toDF("k", "v"), Seq("k"),
         matched = Seq(graft.operators.MergeInto.MatchedUpdate(None, Map("v" -> col("s.v")))))
-    mergeBatch(Seq(5L, 7L))
-    val Some((c1, t1)) = store.lastMergeDiscovery: @unchecked
+    val (c1, t1) = mergeBatch(Seq(5L, 7L))
     assert(c1 == t1, s"first merge should have no stats to prune with ($c1/$t1)")
     // the merge recorded k into the layout; OPTIMIZE rewrites every file
     // under that layout, backfilling k stats table-wide
     store.compact("db.a", targetFiles = 8)
-    mergeBatch(Seq(11L, 13L))
-    val Some((c2, t2)) = store.lastMergeDiscovery: @unchecked
+    val (c2, t2) = mergeBatch(Seq(11L, 13L))
     assert(c2 < t2, s"post-OPTIMIZE merge discovery did not prune ($c2/$t2)")
     assert(store.read("db.a").filter(col("v") === "new").count() == 4)
     store.detach()

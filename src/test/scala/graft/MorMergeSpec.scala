@@ -147,9 +147,8 @@ class MorMergeSpec extends AnyFunSuite {
       sortWithin = Seq("k"), statsFor = Seq("k"))
     store.compact("db.t", targetFiles = 8)
     store.setDmlMode("db.t", "mor")
-    store.merge("db.t", Seq((10, "u"), (12, "u2")).toDF("k", "sv"), Seq("k"),
+    val (cand, total) = store.merge("db.t", Seq((10, "u"), (12, "u2")).toDF("k", "sv"), Seq("k"),
       matched = Seq(MatchedUpdate(None, Map("v" -> col("s.sv")))))
-    val (cand, total) = store.lastMergeDiscovery.get
     assert(total >= 8 && cand < total,
       s"mor merge discovery scanned $cand of $total files — expected a stats cut")
     val m = store.read("db.t").as[(Int, String)].collect().toMap
@@ -170,5 +169,50 @@ class MorMergeSpec extends AnyFunSuite {
     val inv = store.fileInventory("db.t").select("dv_count").as[Int].collect()
     assert(inv.forall(_ == 0), "OPTIMIZE left deletion vectors in place")
     assert(store.read("db.t").orderBy("k").collect().sameElements(expected))
+  }
+
+  private def files(store: TableStore, t: String): Map[String, Long] =
+    store.fileInventory(t).select("file", "rows").as[(String, Long)].collect().toMap
+
+  test("mor UPDATE and MERGE append files capped by target_file_rows") {
+    val store = freshStore()
+    store.createOrReplace("db.t",
+      (1 to 200).map(i => (i, s"v$i")).toDF("k", "v").repartition(2))
+    store.setTargetFileRows("db.t", 10)
+    store.setDmlMode("db.t", "mor")
+    val b1 = files(store, "db.t")
+    store.update("db.t", col("k") <= 50, Map("v" -> lit("u")))
+    val up = files(store, "db.t").filterNot(f => b1.contains(f._1))
+    assert(up.values.sum == 50 && up.values.forall(_ <= 10),
+      s"mor UPDATE appended files of ${up.values.toSeq.sorted} rows, cap 10")
+    val b2 = files(store, "db.t")
+    store.merge("db.t", (101 to 150).map(i => (i, "m")).toDF("k", "sv"), Seq("k"),
+      matched = Seq(MatchedUpdate(None, Map("v" -> col("s.sv")))))
+    val mg = files(store, "db.t").filterNot(f => b2.contains(f._1))
+    assert(mg.values.sum == 50 && mg.values.forall(_ <= 10),
+      s"mor MERGE appended files of ${mg.values.toSeq.sorted} rows, cap 10")
+    val v = store.read("db.t").groupBy("v").count().as[(String, Long)].collect().toMap
+    assert(v("u") == 50 && v("m") == 50 && store.read("db.t").count() == 200)
+    store.detach()
+  }
+
+  test("mor UPDATE post-images carry the bloom index: a point read keeps only their file") {
+    val store = freshStore()
+    // scattered keys: every file's [min, max] box spans the table, so only
+    // the bloom filters can skip
+    val data = (1 to 400).map(i => (i, s"v$i")).toDF("k", "v").repartition(4)
+    store.createOrReplace("db.t", data)
+    store.setBloomFilterIndex("db.t", Seq("k"), ndv = 1000)
+    store.createOrReplace("db.t", data) // rewrite so every file carries a bloom
+    store.setDmlMode("db.t", "mor")
+    val before = files(store, "db.t")
+    store.update("db.t", col("k") % 10 === 0, Map("k" -> (col("k") + 1000)))
+    val appended = files(store, "db.t").keySet -- before.keySet
+    assert(appended.size >= 2, s"post-images landed in ${appended.size} file(s)")
+    val (df, (cand, total)) = store.readPointPruned("db.t", Seq(1010).toDF("k"), Seq("k"))
+    assert(cand == 1 && total == before.size + appended.size,
+      s"point read of a post-image key kept $cand of $total files")
+    assert(df.filter(col("k") === 1010).count() == 1)
+    store.detach()
   }
 }

@@ -427,10 +427,9 @@ class ScaleSmokeSpec extends AnyFunSuite
         .dropDuplicates("l_orderkey", "l_linenumber")
         .withColumn("l_quantity", col("l_quantity") + 1)
       val t0 = System.nanoTime()
-      store.merge("db.big", batch, Seq("l_orderkey", "l_linenumber"),
+      val (cand, tot) = store.merge("db.big", batch, Seq("l_orderkey", "l_linenumber"),
         matched = Seq(MergeInto.MatchedUpdate(None,
           Map("l_quantity" -> col("s.l_quantity")))))
-      val Some((cand, tot)) = store.lastMergeDiscovery: @unchecked
       record("merge_discovery_pruned", cand.toLong,
         (System.nanoTime() - t0) / 1e9)
       info(s"[scale] merge discovery candidates=$cand of $tot files")

@@ -3,6 +3,8 @@ package graft.tables
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -247,6 +249,118 @@ class CommitLockSpec extends AnyFunSuite {
       Files.delete(lock) // the (unknowable) holder releases
       Await.result(commit, 30.seconds)
       assert(store.read("db.t").agg(max($"k")).head().getLong(0) == 2L)
+    } finally {
+      store.detach()
+      graft.queries.Scratch.deleteRecursively(Paths.get(root))
+    }
+  }
+
+  /** Stage every writer before any publishes: the table's commit lock is
+    * held by a LIVE token while the writers run, released once `staged`
+    * staged manifests exist, and each writer's outcome is returned.
+    * `rest` start only after `first` has staged, so a slow data write
+    * cannot push a metadata-only writer past the lock-wait timeout. */
+  private def contend(root: String, staged: Int)(first: () => Unit,
+      rest: (() => Unit)*): Seq[scala.util.Try[Unit]] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val dir = Paths.get(root, "db", "t")
+    def stagedNow: Int = {
+      val s = Files.list(dir)
+      try s.iterator().asScala.count(p => p.getFileName.toString.startsWith("v_") &&
+        Files.exists(p.resolve("_MANIFEST.staged")))
+      finally s.close()
+    }
+    def await(n: Int): Unit = {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (stagedNow < n && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(stagedNow >= n, s"only $stagedNow of $n writers staged")
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(1 + rest.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val lock = dir.resolve("_COMMIT_LOCK")
+    Files.write(lock, f"${TableStore.localHost}~${ProcessHandle.current().pid()}_${777L}%019d"
+      .getBytes(UTF_8))
+    try {
+      val f0 = Future(scala.util.Try(first()))
+      await(1)
+      val fs = f0 +: rest.map(w => Future(scala.util.Try(w())))
+      await(staged)
+      Files.delete(lock)
+      fs.map(Await.result(_, 120.seconds))
+    } finally {
+      Files.deleteIfExists(lock)
+      pool.shutdown()
+    }
+  }
+
+  test("contending restores never move the pointer backward or lose a commit") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_lock_restore").toString
+    val store = new TableStore(spark, root)
+    try {
+      store.createOrReplace("db.t", Seq((1L, "a")).toDF("k", "v"))
+      store.createOrReplace("db.t", Seq((2L, "b")).toDF("k", "v"))
+      (1 to 2).foreach { round =>
+        val commitsBefore = store.history("db.t").size
+        // writer i starts ~20 ms after writer i-1, so it claims the next
+        // version number, but with a 1 ms EARLIER phase in the 10 ms
+        // lock-wait poll: once the lock frees, the writers publish roughly
+        // in the reverse of their version order
+        val t0 = System.nanoTime()
+        val restores = (1 to 8).map(i => () => {
+          val wait = t0 + (20L * i + 9 - i) * 1000000L - System.nanoTime()
+          if (wait > 0) Thread.sleep(wait / 1000000L, (wait % 1000000L).toInt)
+          store.restore("db.t", 1 + i % 2)
+        })
+        val out = contend(root, staged = 8)(restores.head, restores.tail: _*)
+        assert(out.forall(_.isSuccess), s"round $round: a restore failed: $out")
+        val hist = store.history("db.t")
+        assert(hist.size == commitsBefore + 8,
+          s"round $round: expected ${commitsBefore + 8} commits, got ${hist.size}: $hist")
+        assert(store.version("db.t").get == hist.map(_._1).max,
+          s"round $round: pointer v${store.version("db.t").get} is behind the newest " +
+            s"committed version ${hist.map(_._1).max}")
+      }
+    } finally {
+      store.detach()
+      graft.queries.Scratch.deleteRecursively(Paths.get(root))
+    }
+  }
+
+  test("ADD COLUMNS racing a blind append never drops the appended rows") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_lock_addcol").toString
+    val store = new TableStore(spark, root)
+    try {
+      store.createOrReplace("db.t", Seq((0L, "init")).toDF("k", "v"))
+      var landed = 0
+      (1 to 8).foreach { round =>
+        // the append carries every column the table has when it starts
+        val extra = store.read("db.t").schema.fields.drop(2)
+        val rows = spark.range(round * 100L, round * 100L + 5)
+          .select((col("id").as("k") +: lit(s"r$round").as("v") +:
+            extra.map(f => lit(null).cast(f.dataType).as(f.name)).toSeq): _*)
+        val Seq(app, add) = contend(root, staged = 2)(
+          () => store.append("db.t", rows),
+          () => store.addColumns("db.t",
+            new org.apache.spark.sql.types.StructType().add(s"c$round", "int")))
+        assert(add.isSuccess, s"round $round: ADD COLUMNS failed: $add")
+        val now = store.read("db.t")
+        assert(now.columns.contains(s"c$round"), s"round $round: column c$round missing")
+        if (app.isSuccess) {
+          landed += 1
+          val got = now.filter(col("v") === s"r$round")
+          assert(got.count() == 5,
+            s"round $round: the append returned normally but its rows are gone")
+          assert(got.filter(col(s"c$round").isNotNull).count() == 0)
+        } else assert(app.failed.get.isInstanceOf[java.util.ConcurrentModificationException],
+          s"round $round: unexpected append failure ${app.failed.get}")
+        val hist = store.history("db.t")
+        assert(store.version("db.t").get == hist.map(_._1).max,
+          s"round $round: pointer is behind the newest committed version: $hist")
+      }
+      info(s"appends that landed: $landed of 8")
     } finally {
       store.detach()
       graft.queries.Scratch.deleteRecursively(Paths.get(root))
