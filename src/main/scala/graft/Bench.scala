@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.GraftSession
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: measures steady-state wall time per query (one warmup
@@ -36,59 +37,15 @@ private[graft] object BenchFloors {
 }
 
 object Bench {
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.ext.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse_${ProcessHandle.current().pid()}")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition coalescing INSIDE persisted plans: the dedup/ANN
-      // family persists small intermediates (shingle sets, signatures)
-      // whose 32-way shuffles are otherwise task-overhead-bound at high
-      // core counts — default false only to keep cached partitioning
-      // stable for reuse, which no bench query depends on
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // AQE's parallelism-first coalescing heuristic stays at its default
-      // (true). r17 A/B'd flipping it to the byte target suite-wide: the
-      // store-DML subset won (30-query interleaved A/B, warm 99.6→93.5 s)
-      // but the FULL suite lost — warm 192.3→206.5, cold 351→378 —
-      // because the dedup/graph/BPE family's CPU-dense, small-BYTE
-      // shuffle stages (md5 shingling, pair explodes, replace chains)
-      // collapse to one task under a byte-only target (x121 +4.3 s,
-      // x68 +2.5 s, x2/x4 +1.9 s each). Small-write output sizing is
-      // handled structurally in TableStore.stageVersion instead.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Releasing a superseded localCheckpoint (the dedup/clustering loops do
-    // it every round, deliberately, AFTER the successor materializes) makes
-    // Spark WARN that the truncated lineage cannot be recomputed — benign
-    // by construction here, and ~100 repeats per bench run bury real
-    // warnings, so that one logger is raised to ERROR
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
-    spark
-  }
-
   private def runOnce(spark: SparkSession, sfDir: String,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Option[String]) = {
     val t0 = System.nanoTime()
     val err = try { fn(spark, sfDir).count(); None } catch {
       case e: Throwable =>
-        System.err.println(s"[bench] query failed: ${e.getMessage}")
+        System.err.println(s"[bench] query failed: $e")
         Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(120))
     }
     ((System.nanoTime() - t0) / 1e9, err)
-  }
-
-  private def clearState(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    System.gc()
   }
 
   /** Machine-day calibration probe: a fixed, plan-stable reference query
@@ -113,9 +70,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = newSession(cpus)
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.local()
     val calibFirst = calibProbe(spark, sfDir)
 
     // optional comma-separated query filter for local iteration
@@ -140,7 +96,7 @@ object Bench {
       // and nudge a GC so one query's garbage isn't billed to the next
       // (observed: late-run queries measuring 4-8x their isolated time from
       // old-gen churn alone)
-      clearState(spark)
+      GraftSession.clearState(spark)
       (name, cold, warm, coldErr.orElse(warmErr))
     }
     // The driver keeps only the last ~2000 bytes of process output, so the
@@ -166,7 +122,7 @@ object Bench {
     // floors only compare within the scale factor they were measured at
     val floors: Map[String, Double] =
       BenchFloors.read("BENCH_FLOOR.json", requireSf = Some(sfDir.split('/').last))
-    val calibLast = { clearState(spark); calibProbe(spark, sfDir) }
+    val calibLast = { GraftSession.clearState(spark); calibProbe(spark, sfDir) }
     // drift divisor: this batch's calibration readings over the floor
     // file's recorded `_calib` (same machine, floor-setting day). Capped
     // at [1, 2]: drift below 1 never TIGHTENS the gate (a fast day must
@@ -194,12 +150,12 @@ object Bench {
       else {
         spark.stop()
         System.gc()
-        val fresh = newSession(cpus)
+        val fresh = GraftSession.local()
         val out = flagged.map { k =>
           val fn = SparkEntry.queries(k)
           val (a, _) = runOnce(fresh, sfDir, fn) // session-cold: codegen+IO warm-up
           val (b, _) = runOnce(fresh, sfDir, fn)
-          clearState(fresh)
+          GraftSession.clearState(fresh)
           (shortIds(k), math.min(a, b))
         }
         fresh.stop()

@@ -130,18 +130,7 @@ object Verify {
     heartbeat.setDaemon(true)
     heartbeat.start()
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.ext.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse_${ProcessHandle.current().pid()}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
 
     /** Run one query on `sess`, dump its parquet, record one JSONL line.
       * Returns true on success. The row count re-reads the just-written
@@ -160,7 +149,7 @@ object Verify {
         true
       } catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        System.err.println(s"[verify] $name failed: $msg")
+        System.err.println(s"[verify] $name failed: $e")
         record(s"""{"q":${q(name)},"error":${q(msg.take(300))},"sec":${r2((System.nanoTime() - s0) / 1e9)},"elapsed_s":${r2(elapsed)},"attempt":$attempt,"pid":${ProcessHandle.current().pid()}}""")
         false
       } finally {

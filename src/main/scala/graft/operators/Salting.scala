@@ -45,14 +45,10 @@ object Salting {
     bigSalted.join(smallReplicated, keys :+ "__salt", joinType).drop("__salt")
   }
 
-  /** Pre-flight result of the most recent [[autoSaltedJoin]]: how many
+  /** Pre-flight result of one [[autoSaltedJoinWithStats]] call: how many
     * keys crossed the threshold and how many big-side rows they carry
-    * (set at plan-construction time, like `Fuzzy.lastBlockStats`).
-    * Last-writer-wins across concurrent queries — a run-scoped consumer
-    * uses [[autoSaltedJoinWithStats]], which returns the reading with the
-    * frame it describes. */
+    * (measured at plan-construction time). */
   final case class AutoSaltStats(hotKeys: Long, hotRows: Long, buckets: Int)
-  @volatile var lastAutoSaltStats: Option[AutoSaltStats] = None
 
   /** [[saltedJoin]] with the replication bill paid ONLY where skew lives —
     * the x103 skew report's per-key pre-flight count wired directly into
@@ -77,15 +73,11 @@ object Salting {
     * Key columns must share names across the two sides (usingColumns
     * semantics, as in [[saltedJoin]]). */
   def autoSaltedJoin(big: DataFrame, small: DataFrame, keys: Seq[String],
-      hotThreshold: Long, buckets: Int, joinType: String = "inner"): DataFrame = {
-    val (out, st) = autoSaltedJoinWithStats(big, small, keys, hotThreshold,
-      buckets, joinType)
-    lastAutoSaltStats = Some(st)
-    out
-  }
+      hotThreshold: Long, buckets: Int, joinType: String = "inner"): DataFrame =
+    autoSaltedJoinWithStats(big, small, keys, hotThreshold, buckets, joinType)._1
 
   /** [[autoSaltedJoin]] returning the pre-flight skew diagnosis WITH the
-    * frame it describes — the run-scoped form for concurrent queries. */
+    * frame it describes. */
   def autoSaltedJoinWithStats(big: DataFrame, small: DataFrame,
       keys: Seq[String], hotThreshold: Long, buckets: Int,
       joinType: String = "inner"): (DataFrame, AutoSaltStats) = {

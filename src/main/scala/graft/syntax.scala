@@ -3,52 +3,25 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import graft.operators._
 
-/** Library façade: `import graft.syntax._` gives the operator surface as
-  * DataFrame methods — the switch-over API for a user of the reference
-  * system (every capability reachable from one import).
+/** Library façade: `import graft.syntax._` gives the SCD2, exact-dedup and
+  * cosine top-k operators as DataFrame methods. Every other operator is
+  * called on its object in [[graft.operators]].
   */
 object syntax {
 
   implicit final class GraftDataFrameOps(private val df: DataFrame) extends AnyVal {
 
-    // --- SCD / merge (silver-layer semantics) ---
+    // --- SCD (silver-layer semantics) ---
     def scd2Init(loadTs: Column): DataFrame = Scd.scd2Init(df, loadTs)
     def scd2Merge(source: DataFrame, keys: Seq[String], loadTs: Column): DataFrame =
       Scd.scd2Merge(df, source, keys, loadTs)
-    def scd1Merge(source: DataFrame, keys: Seq[String]): DataFrame =
-      Scd.scd1Merge(df, source, keys)
-    def mergeInto: MergeBuilder = Merge.into(df)
 
     // --- dedup (documents) ---
     def dedupExact(idCol: String, textCol: String): DataFrame =
       Dedup.exactDedup(df, idCol, textCol)
-    def nearDupsJaccard(idCol: String, textCol: String, n: Int, threshold: Double): DataFrame =
-      Dedup.ngramJaccardPairs(df, idCol, textCol, n, threshold)
-    def nearDupsMinhash(idCol: String, textCol: String, threshold: Double): DataFrame =
-      Dedup.minhashLsh(df, idCol, textCol, threshold = threshold)
-    def nearDupsSimhash(idCol: String, textCol: String, maxDist: Int = 3): DataFrame =
-      Dedup.simhashPairs(df, idCol, textCol, maxDist)
 
     // --- similarity (embeddings) ---
     def cosineTopK(queries: DataFrame, k: Int): DataFrame =
       Similarity.bruteForceTopK(df, queries, k)
-    def cosineTopKLsh(queries: DataFrame, k: Int, nBits: Int, dim: Int): DataFrame =
-      Similarity.lshTopK(df, queries, k, nBits, dim)
-    def cosineTopKIvf(queries: DataFrame, k: Int, nCentroids: Int): DataFrame =
-      Similarity.ivfTopK(df, queries, k, nCentroids)
-    def embeddingNearDups(threshold: Double): DataFrame =
-      Similarity.nearDupPairs(df, threshold)
-
-    // --- time series ---
-    def asofJoinBackward(right: DataFrame, keys: Seq[String], leftTs: String,
-        rightTs: String, rightPayload: Map[String, String]): DataFrame =
-      AsOfJoin.asofBackward(df, right, keys, leftTs, rightTs, rightPayload)
-    def rangeJoinPoints(points: DataFrame, pointCol: String, startCol: String,
-        endCol: String, bandWidth: Long): DataFrame =
-      RangeJoin.pointInInterval(points, df, pointCol, startCol, endCol, bandWidth)
-
-    // --- skew ---
-    def saltedJoin(small: DataFrame, keys: Seq[String], buckets: Int): DataFrame =
-      Salting.saltedJoin(df, small, keys, buckets)
   }
 }

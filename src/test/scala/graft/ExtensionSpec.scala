@@ -1335,11 +1335,10 @@ class ExtensionSpec extends AnyFunSuite {
       .unionAll(Seq((99999L, -1L)).toDF("k", "v"))
     val small = spark.range(0, 13000).select($"id".as("k"), ($"id" * 10).as("w"))
     val plain = big.join(small, Seq("k"), "inner")
-    val salted = Salting.autoSaltedJoin(big, small, Seq("k"),
+    val (salted, st) = Salting.autoSaltedJoinWithStats(big, small, Seq("k"),
       hotThreshold = 500L, buckets = 4)
     assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty,
       "salting must never change the joined relation")
-    val st = Salting.lastAutoSaltStats.get
     assert(st.hotKeys == 1L && st.hotRows == 2000L && st.buckets == 4,
       s"exactly key 7's 2000 rows are hot: $st")
     val lplain = big.join(small, Seq("k"), "left_outer")

@@ -79,15 +79,13 @@ class SkewFuzzyPropertySpec extends AnyFunSuite {
       (bigRows, threshold, buckets) =>
         val big = bigRows.toDF("k", "v")
         val small = smallRows.toDF("k", "w")
+        val expectHot = bigRows.groupBy(_._1).count(_._2.size > threshold)
         Seq("inner", "left_outer").forall { jt =>
           val plain = big.join(small, Seq("k"), jt)
-          val salted = Salting.autoSaltedJoin(big, small, Seq("k"),
+          val (salted, st) = Salting.autoSaltedJoinWithStats(big, small, Seq("k"),
             threshold, buckets, jt)
-          salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty
-        } && {
-          val st = Salting.lastAutoSaltStats.get
-          val expectHot = bigRows.groupBy(_._1).count(_._2.size > threshold)
-          st.hotKeys == expectHot.toLong
+          salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty &&
+            st.hotKeys == expectHot.toLong
         }
     }
     val r = SCTest.check(
