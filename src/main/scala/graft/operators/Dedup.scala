@@ -33,13 +33,6 @@ object Dedup {
   /** Same observability for [[incrementalNovelty]]'s shingle-index probe. */
   @volatile var lastNoveltyScan: Option[(Int, Int)] = None
 
-  /** Same observability for [[incrementalSegmentDedup]]'s hash-index
-    * probe — its OWN var (it used to write [[lastIndexScan]], so an
-    * interleaved band-index call and segment call clobbered each other's
-    * readings and a pruning assertion could pass against the wrong
-    * operator's scan). */
-  @volatile var lastSegmentScan: Option[(Int, Int)] = None
-
   /** Corpus-scale caches pinned by the one-shot dedup calls
     * (ngramJaccardPairs / minhashLsh / firstSeenDedup / simhashPairs):
     * the returned frames are lazy over them, so this module cannot
@@ -881,12 +874,10 @@ object Dedup {
     // resolve the index read NOW — this batch's append below must not
     // leak into its own dedup decision
     val hasIndex = store.exists(indexTable)
-    if (!hasIndex) lastSegmentScan = None // no-index batch: no stale reading
     val inIndex =
       if (!hasIndex) segs.filter(lit(false)).select(col("h"))
       else {
-        val (idx, counts) = store.readPointPruned(indexTable, segs, Seq("h"))
-        lastSegmentScan = Some(counts)
+        val (idx, _) = store.readPointPruned(indexTable, segs, Seq("h"))
         segs.join(idx, Seq("h"), "left_semi").select(col("h"))
       }
     val flagged = flagFirstSegments(segs)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType}
 
 /** SQL `MERGE INTO` semantics as a DataFrame-level operator — the one real
   * capability gap vs the reference, which runs Delta MERGE on Databricks
@@ -11,7 +12,11 @@ import org.apache.spark.sql.functions._
   * one full-outer join on the ON predicate, per-row first-match clause
   * dispatch, single `select` + `filter` output (SURVEY.md §7.3).
   *
-  * Semantics mirror SQL MERGE:
+  * [[ClausePlan]] is the one definition of clause semantics: the in-memory
+  * operator, the table store's copy-on-write and merge-on-read merges and
+  * the change feed all read the ON condition, the first-match dispatch,
+  * each row's disposition, the post-images and the multiple-match error
+  * from it. Semantics mirror SQL MERGE:
   *  - clauses are evaluated in declaration order, first match wins;
   *  - `WHEN NOT MATCHED BY SOURCE` sees every target row whose join
   *    condition found no source row (including extra non-equi ON conjuncts);
@@ -80,269 +85,148 @@ object MergeInto {
     resolved.toMap
   }
 
-  /** Delta parity: error when a target row would match multiple source
-    * rows. Kept as an up-front check (one cheap extra job) rather than
-    * fused into the merge join — fusing needs a per-target-row window
-    * count, a second full-size shuffle on every merge, which is the
-    * wrong trade at scale for a skippable safety net. Also called
-    * standalone by the table store's file-pruned merge, whose rewrite
-    * subset may not contain every matched row. */
-  def checkMultipleMatches(target: DataFrame, source: DataFrame, keys: Seq[String],
-      extraOn: Option[Column]): Unit = {
-    val dup = extraOn match {
-      case None =>
-        // fast path: key-duplicated source rows that hit any target key
-        source.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > 1)
-          .join(target.select(keys.map(col): _*), keys, "left_semi")
-          .limit(1).count()
-      case Some(extra) =>
-        // extra ON conjuncts can disambiguate key-duplicated source rows,
-        // so count matches from the REAL join condition per target row
-        val tt = target.withColumn("__graft_tid", monotonically_increasing_id()).alias("t")
-        val cond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _) && extra
-        tt.join(source.alias("s"), cond)
-          .groupBy(col("__graft_tid")).agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > 1).limit(1).count()
-    }
-    if (dup > 0) throw new IllegalStateException(
-      s"MERGE: multiple source rows match a single target row on keys ${keys.mkString(",")}")
-  }
-
-  /** Only the rows a merge would INSERT: source rows with no match under
-    * the full ON condition, projected through the first-matching
-    * `WHEN NOT MATCHED` clause (target schema). The anti-join needs just
-    * the ON-condition columns of the target, so Catalyst prunes the
-    * target scan to the keys — this is how the table store's file-pruned
-    * merge appends inserts without rewriting a single existing file. */
-  def insertedRows(target: DataFrame, source: DataFrame, keys: Seq[String],
-      extraOn: Option[Column], notMatched0: Seq[NotMatchedInsert]): DataFrame = {
-    val outCols = target.columns.toSeq
-    val outTypes = target.schema.fields.map(f => f.name -> f.dataType).toMap
-    if (notMatched0.isEmpty)
-      return target.filter(lit(false)) // no insert clauses → empty, target schema
-    val cs = target.sparkSession.conf
-      .get("spark.sql.caseSensitive", "false").toBoolean
-    val notMatched = notMatched0.map(i =>
-      NotMatchedInsert(i.cond, normalizeSet(outCols, i.values, cs, "MERGE INSERT")))
-    val t = target.alias("t")
-    val s = source.alias("s")
-    val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-    val onCond = extraOn.map(keyCond && _).getOrElse(keyCond)
-    val anti = s.join(t, onCond, "left_anti").alias("s")
-    val insertSpecs = notMatched.map(i => (i.cond, Some(i.values)))
-    val insertKeeps = notMatched.map(i => (i.cond, true))
-    def chainValue(c: String, actions: Seq[(Option[Column], Option[Map[String, Column]])], default: Column): Column =
-      actions.foldLeft(Option.empty[Column]) { case (acc, (cond, set)) =>
-        val v = set.map(_.getOrElse(c, default)).getOrElse(default)
-        val w = cond.getOrElse(lit(true))
-        Some(acc.map(_.when(w, v)).getOrElse(when(w, v)))
-      }.map(_.otherwise(default)).getOrElse(default)
-    def chainKeep(actions: Seq[(Option[Column], Boolean)]): Column =
-      actions.foldLeft(Option.empty[Column]) { case (acc, (cond, keep)) =>
-        val w = cond.getOrElse(lit(true))
-        Some(acc.map(_.when(w, lit(keep))).getOrElse(when(w, lit(keep))))
-      }.map(_.otherwise(lit(false))).getOrElse(lit(false))
-    anti.select(
-        outCols.map(c => chainValue(c, insertSpecs, lit(null)).cast(outTypes(c)).as(c)) :+
-          chainKeep(insertKeeps).as("__graft_keep"): _*)
-      .filter(col("__graft_keep"))
-      .drop("__graft_keep")
-  }
-
-  /** Row-level change set of a merge over `target` (Delta CDF semantics):
-    * for every target row the FIRST matching clause decides its change
-    * rows — `MatchedUpdate`/`BySourceUpdate` emit an
-    * (`update_preimage`, `update_postimage`) pair, `MatchedDelete`/
-    * `BySourceDelete` emit one `delete` row, a row no clause applies to
-    * emits nothing. INSERT-clause rows are not produced here — label
-    * [[insertedRows]] with `insert` and union. Output = target schema +
-    * `_change_type`.
-    *
-    * Same join shape as the merge itself (left-outer from the target, one
-    * explode projection, codegen-friendly); the caller passes the
-    * file-pruned target subset, so at 100 TB this costs the touched rows,
-    * not the table. NULL clause conditions fall through, matching SQL
-    * WHEN-clause semantics. */
-  def changeSet(
-      target: DataFrame,
-      source: DataFrame,
-      keys: Seq[String],
-      extraOn: Option[Column],
-      matched0: Seq[MatchedAction],
-      notMatchedBySource0: Seq[BySourceAction]): DataFrame = {
-    val outCols = target.columns.toSeq
-    val outTypes = target.schema.fields.map(f => f.name -> f.dataType).toMap
-    val cs = target.sparkSession.conf
-      .get("spark.sql.caseSensitive", "false").toBoolean
-    val matched = matched0.map {
-      case MatchedUpdate(c, set) =>
-        MatchedUpdate(c, normalizeSet(outCols, set, cs, "MERGE UPDATE SET"))
-      case d => d
-    }
-    val notMatchedBySource = notMatchedBySource0.map {
-      case BySourceUpdate(c, set) =>
-        BySourceUpdate(c, normalizeSet(outCols, set, cs, "MERGE BY SOURCE UPDATE SET"))
-      case d => d
-    }
-    val t = target.withColumn(TMark, lit(true)).alias("t")
-    val s = source.withColumn(SMark, lit(true)).alias("s")
-    val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-    val onCond = extraOn.map(keyCond && _).getOrElse(keyCond)
-    val j = t.join(s, onCond, "left_outer")
-    val isMatched = col(s"s.$SMark").isNotNull
-
-    def img(ct: String, set: Map[String, Column]): Column = struct(
-      outCols.map(c => set.getOrElse(c, col(s"t.$c")).cast(outTypes(c)).as(c)) :+
-        lit(ct).as("_change_type"): _*)
-    def chain(actions: Seq[(Option[Column], Column)]): Column =
-      actions.foldLeft(Option.empty[Column]) { case (acc, (cond, arr)) =>
-        val w = cond.getOrElse(lit(true))
-        Some(acc.map(_.when(w, arr)).getOrElse(when(w, arr)))
-      }.map(_.otherwise(lit(null))).getOrElse(lit(null))
-
-    val matchedEmit = chain(matched.map {
-      case MatchedUpdate(c, set) =>
-        (c, array(img("update_preimage", Map.empty), img("update_postimage", set)))
-      case MatchedDelete(c) => (c, array(img("delete", Map.empty)))
-    })
-    val bySourceEmit = chain(notMatchedBySource.map {
-      case BySourceUpdate(c, set) =>
-        (c, array(img("update_preimage", Map.empty), img("update_postimage", set)))
-      case BySourceDelete(c) => (c, array(img("delete", Map.empty)))
-    })
-    // explode(null array) emits nothing — rows no clause applies to vanish
-    j.select(explode(when(isMatched, matchedEmit).otherwise(bySourceEmit)).as("__c"))
-      .select(col("__c.*"))
-  }
-
-  /** Returns the post-merge target state (target schema preserved).
-    *
-    * Contract note: an INSERT-ONLY merge (no matched / by-source clauses)
-    * takes a left-anti fast path whose NOT MATCHED clauses may reference
-    * only SOURCE (`s.*`) columns — Delta's contract. A `t.*` reference in
-    * an insert condition or value raises a named-column error instead of
-    * the NULL the historical full-outer plan silently produced. */
-  def apply(
-      target: DataFrame,
-      source: DataFrame,
-      keys: Seq[String],
-      extraOn: Option[Column] = None,
-      matched: Seq[MatchedAction] = Nil,
-      notMatched: Seq[NotMatchedInsert] = Nil,
-      notMatchedBySource: Seq[BySourceAction] = Nil,
-      failOnMultipleMatches: Boolean = true): DataFrame = {
-
-    require(keys.nonEmpty, "merge keys must be non-empty")
-
-    // normalize every user-written identifier (ON keys, SET/INSERT map
-    // keys) to the target schema's spelling before any exact-string
-    // lookup below — see resolveColumn
-    val cs = target.sparkSession.conf
-      .get("spark.sql.caseSensitive", "false").toBoolean
-    val tCols = target.columns.toSeq
-    val keysN = keys.map(resolveColumn(tCols, _, cs, "MERGE ON"))
-    val matchedN = matched.map {
-      case MatchedUpdate(c, set) =>
-        MatchedUpdate(c, normalizeSet(tCols, set, cs, "MERGE UPDATE SET"))
-      case d => d
-    }
-    val notMatchedN = notMatched.map(i =>
-      NotMatchedInsert(i.cond, normalizeSet(tCols, i.values, cs, "MERGE INSERT")))
-    val notMatchedBySourceN = notMatchedBySource.map {
-      case BySourceUpdate(c, set) =>
-        BySourceUpdate(c, normalizeSet(tCols, set, cs, "MERGE BY SOURCE UPDATE SET"))
-      case d => d
-    }
-    applyNormalized(target, source, keysN, extraOn, matchedN, notMatchedN,
-      notMatchedBySourceN, failOnMultipleMatches)
-  }
-
-  private def applyNormalized(
-      target: DataFrame,
-      source: DataFrame,
+  /** Build the [[ClausePlan]] of one MERGE: the only place its ON keys
+    * (against `targetCols`) and SET/INSERT maps (against `targetCols` ++
+    * `newCols`, the schema-evolution columns a clause may assign but an
+    * ON key may not name) are normalized to the schema's spelling.
+    * `ctx` prefixes resolution errors. */
+  def plan(
+      targetCols: Seq[String],
+      caseSensitive: Boolean,
       keys: Seq[String],
       extraOn: Option[Column],
       matched: Seq[MatchedAction],
       notMatched: Seq[NotMatchedInsert],
       notMatchedBySource: Seq[BySourceAction],
-      failOnMultipleMatches: Boolean): DataFrame = {
+      newCols: Seq[String] = Nil,
+      ctx: String = "MERGE"): ClausePlan = {
+    require(keys.nonEmpty, "merge keys must be non-empty")
+    def norm(set: Map[String, Column], clause: String) =
+      normalizeSet(targetCols ++ newCols, set, caseSensitive, s"$ctx $clause")
+    new ClausePlan(
+      keys.map(resolveColumn(targetCols, _, caseSensitive, s"$ctx ON")),
+      extraOn,
+      matched.map {
+        case MatchedUpdate(c, set) => MatchedUpdate(c, norm(set, "UPDATE SET"))
+        case d => d
+      },
+      notMatched.map(i => NotMatchedInsert(i.cond, norm(i.values, "INSERT"))),
+      notMatchedBySource.map {
+        case BySourceUpdate(c, set) => BySourceUpdate(c, norm(set, "BY SOURCE UPDATE SET"))
+        case d => d
+      },
+      ctx)
+  }
 
-    // An INSERT-ONLY merge (no matched, no by-source clauses) is legal
-    // even when several source rows match one target row — there is
-    // nothing ambiguous for the duplicates to do (Delta allows this, and
-    // TableStore's file-pruned merge path codifies it). The precheck
-    // would spuriously abort, so it only guards merges whose matched/
-    // by-source actions a duplicate match WOULD make ambiguous; the
-    // insert-only dataflow below also bypasses the full-outer join,
-    // which would otherwise emit a multiply-matched target row once per
-    // source partner.
-    val insertOnly = matched.isEmpty && notMatchedBySource.isEmpty
-    if (failOnMultipleMatches && !insertOnly)
-      checkMultipleMatches(target, source, keys, extraOn)
+  /** The one definition of MERGE clause semantics, shared by the in-memory
+    * operator ([[merge]]), the table store's copy-on-write and
+    * merge-on-read merges and the change feed ([[changeSet]]):
+    *
+    *  - the ON condition ([[on]]) over the `t`/`s` aliases;
+    *  - first-match dispatch: clauses apply in declaration order, an
+    *    absent condition is TRUE and a NULL one falls through;
+    *  - a matched or by-source row's disposition ([[disposition]]):
+    *    updated, deleted, or untouched when no clause applies;
+    *  - each column's post-image ([[postImage]]) — unset columns keep the
+    *    target value — and insert value (unset columns are NULL);
+    *  - the multiple-match error ([[multipleMatches]]).
+    *
+    * Built only by [[MergeInto.plan]], so every clause map is already in
+    * the target schema's spelling. */
+  final class ClausePlan private[MergeInto] (
+      val keys: Seq[String],
+      extraOn: Option[Column],
+      val matched: Seq[MatchedAction],
+      notMatched: Seq[NotMatchedInsert],
+      notMatchedBySource: Seq[BySourceAction],
+      ctx: String) {
 
-    val t = target.withColumn(TMark, lit(true)).alias("t")
-    val s = source.withColumn(SMark, lit(true)).alias("s")
-    val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-    val onCond = extraOn.map(keyCond && _).getOrElse(keyCond)
-    val j = t.join(s, onCond, "full_outer")
+    /** No matched and no by-source clause: the merge only appends. */
+    def insertOnly: Boolean = matched.isEmpty && notMatchedBySource.isEmpty
 
-    val isMatched = col(s"t.$TMark").isNotNull && col(s"s.$SMark").isNotNull
-    val sourceOnly = col(s"t.$TMark").isNull
+    /** The same clauses without the inserts: the rewrite of existing rows
+      * when inserts are computed separately ([[insertedRows]]). */
+    def withoutInserts: ClausePlan =
+      new ClausePlan(keys, extraOn, matched, Nil, notMatchedBySource, ctx)
 
-    val outCols = target.columns.toSeq
-    val outTypes = target.schema.fields.map(f => f.name -> f.dataType).toMap
+    /** The ON condition: key equality AND the extra ON conjuncts. */
+    val on: Column = {
+      val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
+      extraOn.map(keyCond && _).getOrElse(keyCond)
+    }
 
-    // First-match clause dispatch: when().when()…otherwise() chains.
-    def chainValue(c: String, actions: Seq[(Option[Column], Option[Map[String, Column]])], default: Column): Column =
-      actions.foldLeft(Option.empty[Column]) { case (acc, (cond, set)) =>
-        val v = set.map(_.getOrElse(c, default)).getOrElse(default)
-        val w = cond.getOrElse(lit(true))
-        Some(acc.map(_.when(w, v)).getOrElse(when(w, v)))
-      }.map(_.otherwise(default)).getOrElse(default)
+    /** Some matched clause applies: a matched row is updated or deleted. */
+    def matchedApplies: Column =
+      matched.map(_.cond.getOrElse(lit(true))).reduceOption(_ || _).getOrElse(lit(false))
 
-    def chainKeep(actions: Seq[(Option[Column], Boolean)], default: Boolean): Column =
-      actions.foldLeft(Option.empty[Column]) { case (acc, (cond, keep)) =>
-        val w = cond.getOrElse(lit(true))
-        Some(acc.map(_.when(w, lit(keep))).getOrElse(when(w, lit(keep))))
-      }.map(_.otherwise(lit(default))).getOrElse(lit(default))
+    /** Some by-source clause applies (TRUE when one is unconditioned);
+      * None when there are no by-source clauses. */
+    def bySourceApplies: Option[Column] =
+      if (notMatchedBySource.isEmpty) None
+      else if (notMatchedBySource.exists(_.cond.isEmpty)) Some(lit(true))
+      else Some(notMatchedBySource.flatMap(_.cond).reduce(_ || _))
 
-    val tDefault: String => Column = c => col(s"t.$c")
-    val nullDefault: String => Column = c => lit(null).cast(outTypes(c))
+    /** Delta parity: a target row matching more than one source row. */
+    def multipleMatches: IllegalStateException = new IllegalStateException(
+      s"MERGE: multiple source rows match a single target row on keys ${keys.mkString(",")}")
 
-    val matchedSpecs = matched.map {
+    // update/delete clauses as (condition, Some(SET) = update | None = delete)
+    private val matchedSpecs = matched.map {
       case MatchedUpdate(c, set) => (c, Some(set))
       case MatchedDelete(c) => (c, None)
     }
-    val matchedKeeps = matched.map {
-      case MatchedUpdate(c, _) => (c, true)
-      case MatchedDelete(c) => (c, false)
-    }
-    val insertSpecs = notMatched.map(i => (i.cond, Some(i.values)))
-    val insertKeeps = notMatched.map(i => (i.cond, true))
-    val bySourceSpecs = notMatchedBySource.map {
+    private val bySourceSpecs = notMatchedBySource.map {
       case BySourceUpdate(c, set) => (c, Some(set))
       case BySourceDelete(c) => (c, None)
     }
-    val bySourceKeeps = notMatchedBySource.map {
-      case BySourceUpdate(c, _) => (c, true)
-      case BySourceDelete(c) => (c, false)
-    }
 
-    if (insertOnly) {
-      // The fast path resolves insert clauses against a SOURCE-ONLY
-      // left-anti frame, so a `t.*` reference — which the full-outer
-      // plan would have evaluated as NULL (the row is by definition
-      // unmatched) — has nothing to bind to. Rejecting it here with a
-      // named-column error beats the resolver's generic failure, and the
-      // contract matches Delta's: NOT MATCHED clauses may reference only
-      // the source.
-      // The alias match is case-INsensitive (the full-outer plan resolves
-      // `T.v` against alias `t` under Spark's default resolver, so the
-      // guard must catch the same spellings), and a head that ALSO names
-      // a real top-level source column (a struct literally called `t`)
-      // is exempt — those references legitimately resolve against the
-      // source-only frame.
+    /** First-match dispatch: `when(c1, v1).when(c2, v2)….otherwise(none)`. */
+    private def firstMatch(arms: Seq[(Option[Column], Column)], none: Column): Column =
+      arms.foldLeft(Option.empty[Column]) { case (acc, (cond, v)) =>
+        val w = cond.getOrElse(lit(true))
+        Some(acc.map(_.when(w, v)).getOrElse(when(w, v)))
+      }.map(_.otherwise(none)).getOrElse(none)
+
+    private def dispatch(specs: Seq[(Option[Column], Option[Map[String, Column]])])(
+        upd: Map[String, Column] => Column, del: Column, none: Column): Column =
+      firstMatch(specs.map { case (c, set) => (c, set.map(upd).getOrElse(del)) }, none)
+
+    /** Dispatch of a target row joined to the source: the matched clauses
+      * when `isMatched`, else the by-source clauses. */
+    private def perRow(isMatched: Column)(
+        upd: Map[String, Column] => Column, del: Column, none: Column): Column =
+      when(isMatched, dispatch(matchedSpecs)(upd, del, none))
+        .otherwise(dispatch(bySourceSpecs)(upd, del, none))
+
+    private def keepValue(c: String) = col(s"t.$c")
+    private def matchedValue(c: String) =
+      dispatch(matchedSpecs)(_.getOrElse(c, keepValue(c)), keepValue(c), keepValue(c))
+    private def bySourceValue(c: String) =
+      dispatch(bySourceSpecs)(_.getOrElse(c, keepValue(c)), keepValue(c), keepValue(c))
+    private def insertValue(c: String, dt: DataType): Column = {
+      val none = lit(null).cast(dt)
+      firstMatch(notMatched.map(i => (i.cond, i.values.getOrElse(c, none))), none)
+    }
+    private def matchedKeep = dispatch(matchedSpecs)(_ => lit(true), lit(false), lit(true))
+    private def bySourceKeep = dispatch(bySourceSpecs)(_ => lit(true), lit(false), lit(true))
+    private def insertKeep = firstMatch(notMatched.map(i => (i.cond, lit(true))), lit(false))
+
+    /** A target row's disposition: "u" (updated), "d" (deleted) or NULL
+      * (untouched); `isMatched` says whether it found a source partner. */
+    def disposition(isMatched: Column): Column =
+      perRow(isMatched)(_ => lit("u"), lit("d"), lit(null).cast(StringType))
+
+    /** Column `c` of an updated row's post-image (uncast). */
+    def postImage(c: String, isMatched: Column): Column =
+      when(isMatched, matchedValue(c)).otherwise(bySourceValue(c))
+
+    /** Inserts read the unmatched source rows alone, which have no target
+      * side: reject a `t.*` reference with a named error rather than the
+      * resolver's generic one. The alias match is case-insensitive (the
+      * full-outer plan resolves `T.v` against alias `t`), and a head that
+      * also names a top-level source column (a struct called `t`) is
+      * exempt — it resolves against the source. */
+    private def requireSourceOnlyInserts(source: DataFrame): Unit = {
       val tIsSourceCol = source.columns.exists(_.equalsIgnoreCase("t"))
       val targetRefs = notMatched
         .flatMap(i => i.cond.toSeq ++ i.values.values)
@@ -352,35 +236,126 @@ object MergeInto {
                 !tIsSourceCol => a.name
         }).distinct
       require(targetRefs.isEmpty,
-        s"insert-only merge: NOT MATCHED clauses may reference only source " +
-          s"columns (an unmatched row has no target side — the full plan " +
-          s"evaluated these as NULL); found ${targetRefs.mkString(", ")}. " +
-          s"Use typed NULL literals instead, or add a matched/by-source " +
-          s"clause to engage the full-outer plan.")
-      // target rows pass through untouched exactly once; only source rows
-      // with no target partner run the insert clause chain
-      val unmatchedSrc = s.join(t, onCond, "left_anti")
-      val inserts = unmatchedSrc.select(outCols.map(c =>
-          chainValue(c, insertSpecs, nullDefault(c)).cast(outTypes(c)).as(c)) :+
-          chainKeep(insertKeeps, default = false).as("__graft_keep"): _*)
+        s"$ctx: NOT MATCHED clauses may reference only source columns; found " +
+          s"${targetRefs.mkString(", ")}. Inserts are computed from the unmatched " +
+          "source rows alone (an insert-only merge, and every table-store merge), " +
+          "which have no target side; use typed NULL literals instead.")
+    }
+
+    /** Only the rows the merge would INSERT: source rows with no match
+      * under [[on]], projected through the first applicable NOT MATCHED
+      * clause (target schema). The anti-join needs just the ON columns of
+      * the target, so Catalyst prunes the target scan to them — how the
+      * table store appends inserts without rewriting an existing file. */
+    def insertedRows(target: DataFrame, source: DataFrame): DataFrame = {
+      if (notMatched.isEmpty)
+        return target.filter(lit(false)) // no insert clauses → empty, target schema
+      requireSourceOnlyInserts(source)
+      source.alias("s").join(target.alias("t"), on, "left_anti").alias("s")
+        .select(target.schema.fields.toSeq.map(f =>
+          insertValue(f.name, f.dataType).cast(f.dataType).as(f.name)) :+
+          insertKeep.as("__graft_keep"): _*)
         .filter(col("__graft_keep"))
         .drop("__graft_keep")
-      return target.unionByName(inserts)
     }
 
-    val projected = outCols.map { c =>
-      when(isMatched, chainValue(c, matchedSpecs, tDefault(c)))
-        .when(sourceOnly, chainValue(c, insertSpecs, nullDefault(c)))
-        .otherwise(chainValue(c, bySourceSpecs, tDefault(c)))
-        .cast(outTypes(c)).as(c)
+    /** Delta parity: error when a target row would match multiple source
+      * rows. An up-front check (one cheap extra job) rather than fused
+      * into the merge join — fusing needs a per-target-row window count,
+      * a second full-size shuffle on every merge. */
+    def checkMultipleMatches(target: DataFrame, source: DataFrame): Unit = {
+      val dup = extraOn match {
+        case None =>
+          // fast path: key-duplicated source rows that hit any target key
+          source.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
+            .filter(col("__n") > 1)
+            .join(target.select(keys.map(col): _*), keys, "left_semi")
+            .limit(1).count()
+        case Some(_) =>
+          // extra ON conjuncts can disambiguate key-duplicated source rows,
+          // so count matches from the REAL join condition per target row
+          target.withColumn("__graft_tid", monotonically_increasing_id()).alias("t")
+            .join(source.alias("s"), on)
+            .groupBy(col("__graft_tid")).agg(count(lit(1)).as("__n"))
+            .filter(col("__n") > 1).limit(1).count()
+      }
+      if (dup > 0) throw multipleMatches
     }
-    val keep =
-      when(isMatched, chainKeep(matchedKeeps, default = true))
-        .when(sourceOnly, chainKeep(insertKeeps, default = false))
-        .otherwise(chainKeep(bySourceKeeps, default = true))
 
-    j.select(projected :+ keep.as("__graft_keep"): _*)
-      .filter(col("__graft_keep"))
-      .drop("__graft_keep")
+    /** Row-level change set of the merge over `target` (Delta CDF
+      * semantics): an updated row emits an (`update_preimage`,
+      * `update_postimage`) pair, a deleted row one `delete` row, an
+      * untouched row nothing. Insert rows are not produced here — label
+      * [[insertedRows]] with `insert` and union. Output = target schema +
+      * `_change_type`.
+      *
+      * Same join shape as the merge itself (left-outer from the target,
+      * one explode projection); the caller passes the file-pruned target
+      * subset, so this costs the touched rows, not the table. */
+    def changeSet(target: DataFrame, source: DataFrame): DataFrame = {
+      val fields = target.schema.fields.toSeq
+      val j = target.alias("t").join(source.withColumn(SMark, lit(true)).alias("s"), on, "left_outer")
+      def img(ct: String, set: Map[String, Column]): Column = struct(
+        fields.map(f => set.getOrElse(f.name, col(s"t.${f.name}")).cast(f.dataType).as(f.name)) :+
+          lit(ct).as("_change_type"): _*)
+      val emit = perRow(col(s"s.$SMark").isNotNull)(
+        set => array(img("update_preimage", Map.empty), img("update_postimage", set)),
+        array(img("delete", Map.empty)), lit(null))
+      // explode(null array) emits nothing — untouched rows vanish
+      j.select(explode(emit).as("__c")).select(col("__c.*"))
+    }
+
+    /** The post-merge target state (target schema preserved): one
+      * full-outer join on [[on]] and one projection. An insert-only merge
+      * takes the left-anti path instead: target ∪ [[insertedRows]]. It is
+      * legal even when several source rows match one target row (nothing
+      * is ambiguous for the duplicates to do, as in Delta), so the
+      * multiple-match check guards only merges with matched or by-source
+      * clauses. */
+    def merge(target: DataFrame, source: DataFrame,
+        failOnMultipleMatches: Boolean = true): DataFrame = {
+      if (insertOnly) return target.unionByName(insertedRows(target, source))
+      if (failOnMultipleMatches) checkMultipleMatches(target, source)
+
+      val t = target.withColumn(TMark, lit(true)).alias("t")
+      val s = source.withColumn(SMark, lit(true)).alias("s")
+      val isMatched = col(s"t.$TMark").isNotNull && col(s"s.$SMark").isNotNull
+      val sourceOnly = col(s"t.$TMark").isNull
+      val projected = target.schema.fields.toSeq.map { f =>
+        when(isMatched, matchedValue(f.name))
+          .when(sourceOnly, insertValue(f.name, f.dataType))
+          .otherwise(bySourceValue(f.name))
+          .cast(f.dataType).as(f.name)
+      }
+      val keep = when(isMatched, matchedKeep)
+        .when(sourceOnly, insertKeep)
+        .otherwise(bySourceKeep)
+      t.join(s, on, "full_outer")
+        .select(projected :+ keep.as("__graft_keep"): _*)
+        .filter(col("__graft_keep"))
+        .drop("__graft_keep")
+    }
   }
+
+  /** Returns the post-merge target state (target schema preserved): the
+    * [[ClausePlan]] of these clauses, normalized against `target`'s
+    * columns under the session resolver, applied by
+    * [[ClausePlan.merge]].
+    *
+    * Contract note: NOT MATCHED clauses of an INSERT-ONLY merge may
+    * reference only SOURCE (`s.*`) columns — Delta's contract. A `t.*`
+    * reference raises a named-column error. */
+  def apply(
+      target: DataFrame,
+      source: DataFrame,
+      keys: Seq[String],
+      extraOn: Option[Column] = None,
+      matched: Seq[MatchedAction] = Nil,
+      notMatched: Seq[NotMatchedInsert] = Nil,
+      notMatchedBySource: Seq[BySourceAction] = Nil,
+      failOnMultipleMatches: Boolean = true): DataFrame =
+    plan(target.columns.toSeq,
+      target.sparkSession.conf.get("spark.sql.caseSensitive", "false").toBoolean,
+      keys, extraOn, matched, notMatched, notMatchedBySource)
+      .merge(target, source, failOnMultipleMatches)
 }

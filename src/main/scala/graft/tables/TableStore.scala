@@ -3342,19 +3342,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val candidates = pruneEntries(name, schema, entries, cond)
     if (candidates.isEmpty) return
     commit(name, Some(Some(base))) { (next, dir) =>
-      val dvRel = s"v_$next/dv"
-      val absToRel = candidates.map(e =>
-        Paths.get(absPath(name, e.rel)).toAbsolutePath.normalize.toString -> e.rel)
       val live = posScanWithIds(name, base, schema, candidates)
-      val matches = live.filter(cond)
-        .join(spark.createDataFrame(absToRel).toDF("__abs", "__rel"),
-          col("__graft_file") === col("__abs"), "inner")
-      // the written DV parquet IS the discovery result — one scan job;
-      // the touched-file list is then a metadata-cheap read of the tiny DV
-      matches.select(col("__rel").as("file"), col("__graft_pos").as("pos"))
-        .write.parquet(tableDir(name).resolve(dvRel).toString)
-      val touched = spark.read.parquet(tableDir(name).resolve(dvRel).toString)
-        .select(col("file")).distinct().collect().map(_.getString(0)).toSet
+      val (touched, carry) = writeDv(name, next, candidates, entries, live.filter(cond))
       touched.nonEmpty && { // no matching rows: nothing to commit
         val lschema = logicalizeSchema(name, schema)
         // one projection so every SET expression sees the PRE-image row
@@ -3364,8 +3353,6 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           pre.select(lschema.fields.toSeq.map { f =>
             s.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(pre(f.name))
           } ++ extra: _*)
-        val carry = entries.map(e =>
-          if (touched(e.rel)) e.copy(dvs = e.dvs :+ dvRel) else e)
         set match {
           case None => writeManifest(name, next, schema, carry, op)
           case Some(s) =>
@@ -3391,6 +3378,29 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         true
       }
     }
+  }
+
+  /** The deletion-vector step of mor UPDATE, DELETE and MERGE: `hits`
+    * (rows of a [[scanWithPos]] over `cand` — `__graft_file`,
+    * `__graft_pos` — to delete) are joined to manifest-relative paths and
+    * written as version `next`'s `dv/`. The written DV is the discovery
+    * result (one scan job); the touched-file set is then a cheap re-read
+    * of it. Returns that set and `entries` with the DV tagged onto every
+    * touched file; with no hit no DV is left behind. */
+  private def writeDv(name: String, next: Int, cand: Seq[FileEntry],
+      entries: Seq[FileEntry], hits: DataFrame): (Set[String], Seq[FileEntry]) = {
+    val dvRel = s"v_$next/dv"
+    val dvDir = tableDir(name).resolve(dvRel)
+    val absToRel = cand.map(e =>
+      Paths.get(absPath(name, e.rel)).toAbsolutePath.normalize.toString -> e.rel)
+    hits.join(spark.createDataFrame(absToRel).toDF("__abs", "__rel"),
+        col("__graft_file") === col("__abs"), "inner")
+      .select(col("__rel").as("file"), col("__graft_pos").as("pos"))
+      .write.parquet(dvDir.toString)
+    val touched = spark.read.parquet(dvDir.toString)
+      .select(col("file")).distinct().collect().map(_.getString(0)).toSet
+    if (touched.isEmpty) dropAbortedVersion(dvDir)
+    (touched, entries.map(e => if (touched(e.rel)) e.copy(dvs = e.dvs :+ dvRel) else e))
   }
 
   // ------------------------------------------------------------ pruned DML
@@ -3685,48 +3695,21 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val base = currentVersion(name).getOrElse(
       throw new IllegalArgumentException(s"table not found: $name"))
     val (schema0, entries) = readManifest(name, base)
-    // Normalize every user-written identifier (ON keys, SET/INSERT map
-    // keys) to the table schema's spelling ONCE, so the whole path below
-    // (stats pruning, mor post-images, CDC emit, the CoW rewrite) does
-    // exact-string lookups against names it can trust — a cased
-    // identifier otherwise silently no-ops (MergeInto.resolveColumn).
-    val csFlag = spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-    val lnames = logicalizeSchema(name, schema0).fieldNames.toSeq
-    val keys = keys0.map(
-      MergeInto.resolveColumn(lnames, _, csFlag, s"MERGE INTO $name ON"))
-    // clause SET/INSERT maps may reference schema-evolution columns not
-    // yet in the table — resolve against table ∪ source names (the
-    // evolved schema; without schemaEvolution a source-only name still
-    // fails later with the schema-mismatch error, as before)
-    val evoNames = (lnames ++ source.columns.filterNot(c =>
-      lnames.exists(l => if (csFlag) l == c else l.equalsIgnoreCase(c)))).toSeq
-    val setNames = if (schemaEvolution) evoNames else lnames
-    val matched = matched0.map {
-      case MergeInto.MatchedUpdate(c, set) => MergeInto.MatchedUpdate(c,
-        MergeInto.normalizeSet(setNames, set, csFlag, s"MERGE INTO $name UPDATE SET"))
-      case d => d
-    }
-    val notMatched = notMatched0.map(i => MergeInto.NotMatchedInsert(i.cond,
-      MergeInto.normalizeSet(setNames, i.values, csFlag, s"MERGE INTO $name INSERT")))
-    val notMatchedBySource = notMatchedBySource0.map {
-      case MergeInto.BySourceUpdate(c, set) => MergeInto.BySourceUpdate(c,
-        MergeInto.normalizeSet(setNames, set, csFlag, s"MERGE INTO $name BY SOURCE UPDATE SET"))
-      case d => d
-    }
     // match source to target columns under the session's resolver (Spark
     // SQL resolution is case-insensitive unless spark.sql.caseSensitive) —
     // a source column differing only in case is the SAME column, not a
     // schema-evolution addition
+    val csFlag = spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
     val resolves: (String, String) => Boolean =
-      if (spark.conf.get("spark.sql.caseSensitive", "false").toBoolean) _ == _
-      else _.equalsIgnoreCase(_)
+      if (csFlag) _ == _ else _.equalsIgnoreCase(_)
+    val lnames = logicalizeSchema(name, schema0).fieldNames.toSeq
     val newCols =
       if (schemaEvolution)
         // a source column matching a VISIBLE (logical) name is the same
         // column; matching a physical name of a renamed/dropped column is
         // rejected by the same no-reuse rule renames follow
         source.schema.fields.toSeq
-          .filterNot(f => logicalizeSchema(name, schema0).fieldNames.exists(resolves(f.name, _)))
+          .filterNot(f => lnames.exists(resolves(f.name, _)))
           .map { f =>
             require(!schema0.fieldNames.exists(resolves(f.name, _)),
               s"MERGE schema evolution: ${f.name} collides with the on-disk name of a " +
@@ -3737,6 +3720,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // reading with the WIDENED schema NULL-fills the new columns for every
     // existing file — no explicit widening projection, no rewrite
     val schema = StructType(schema0.fields ++ newCols)
+    // one clause plan in the table's spelling (SET/INSERT may assign the
+    // evolved columns) serves discovery, the rewrite, the inserts, the
+    // change feed and the mor commit
+    val plan = MergeInto.plan(lnames, csFlag, keys0, extraOn, matched0, notMatched0,
+      notMatchedBySource0, newCols.map(_.name), s"MERGE INTO $name")
+    val keys = plan.keys
     // NOT Delta's merge-source materialization: persisting the source here
     // (MEMORY_AND_DISK, released in a finally) to save its 3-4 per-merge
     // re-evaluations (candidate stats agg, discovery join, rewrite ∪
@@ -3752,7 +3741,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // vectors + appended post-images instead of rewriting files. An
     // insert-only merge stays on the shared path below — it is a pure
     // append in either mode.
-    val mor = dmlMode(name) == "mor" && (matched.nonEmpty || notMatchedBySource.nonEmpty)
+    val mor = dmlMode(name) == "mor" && !plan.insertOnly
     require(!mor || txn.isEmpty,
       s"transactional MERGE into $name: mor-mode tables commit deletion " +
         "vectors in place and cannot stage — use copy-on-write (setDmlMode " +
@@ -3772,22 +3761,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // clauses never modify a matched target row, so, like Delta, they do
     // not error on duplicate source keys. By-source candidates come from
     // a separate plain predicate scan (stats-pruned, no join); an
-    // unconditioned by-source clause touches everything, as it must.
-    // effective by-source applicability: an unconditioned clause makes the
-    // union of clause conditions TRUE (discovery still joins — "all
-    // unmatched rows" is not "all rows")
-    val bsCond: Option[Column] =
-      if (notMatchedBySource.isEmpty) None
-      else if (notMatchedBySource.exists(_.cond.isEmpty)) Some(lit(true))
-      else Some(notMatchedBySource.flatMap(_.cond).reduce(_ || _))
-    // candidate files: stats-pruned by the source's key ranges for the
-    // matched side, by the clause conditions for the by-source side —
-    // the rest of the table is never even scanned
+    // unconditioned by-source clause touches everything, as it must
+    // (discovery still joins — "all unmatched rows" is not "all rows").
+    val bsCond = plan.bySourceApplies
     val cand: Seq[FileEntry] =
-      if (matched.isEmpty && bsCond.isEmpty) Nil // insert-only: pure append
+      if (plan.insertOnly) Nil // pure append
       else {
         val mCand: Seq[FileEntry] =
-          if (matched.isEmpty) Nil
+          if (plan.matched.isEmpty) Nil
           else mergeCandidates(name, schema, entries, source, keys).getOrElse(Nil)
         val bsCand: Seq[FileEntry] =
           bsCond.map(c => pruneEntries(name, schema, entries, c)).getOrElse(Nil)
@@ -3804,31 +3785,20 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val sf = sf0 ++ keys.filterNot(k =>
       layoutCols.contains(physicalName(name, k).toLowerCase))
     if (mor) {
-      commitMorMerge(name, source, keys, extraOn, matched, notMatched,
-        notMatchedBySource, cand, schema, entries, base, (pb, sw, sf), op)
+      commitMorMerge(name, source, plan, cand, schema, entries, base, (pb, sw, sf), op)
       return (cand.size, entries.size)
     }
     val target = readEntries(name, base, schema, entries)
     val touched: Set[String] =
       if (cand.isEmpty) Set.empty
       else {
-        // ONE join pass over the candidates decides everything:
-        //  - a matched row forces a rewrite only if some matched CLAUSE
-        //    applies (first-match-wins leaves other rows byte-identical,
-        //    so a full-snapshot SCD2 merge touches only files holding
-        //    actually-changed rows — NULL clause conditions mean
-        //    "does not apply");
-        //  - an UNmatched row forces a rewrite only if the by-source
-        //    condition holds (vanished keys, not the whole slice);
-        //  - the Delta-parity multiple-match check rides the same
-        //    aggregation (any (file, pos) with >1 match).
-        // The shuffle is bounded by the candidate rows, never the table.
+        // ONE join pass over the candidates decides which files the plan
+        // modifies (a matched row some matched clause applies to, an
+        // unmatched row the by-source clauses apply to) and rides the
+        // multiple-match check (any (file, pos) with >1 match). The
+        // shuffle is bounded by the candidate rows, never the table.
         val t = scanWithPos(name, base, schema, cand).alias("t")
-        val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-        val onCond = extraOn.map(keyCond && _).getOrElse(keyCond)
         val s = source.withColumn("__graft_s", lit(true)).alias("s")
-        val anyClause = matched.map(_.cond.getOrElse(lit(true)))
-          .reduceOption(_ || _).getOrElse(lit(false))
         val bsFlag = bsCond.getOrElse(lit(false))
         // Join type follows the clause shape: a by-source clause must see
         // UNmatched target rows (left_outer); a matched-only merge — the
@@ -3839,10 +3809,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         // then vacuously dead, which is exactly right: no by-source
         // clause means unmatched rows never force a rewrite.
         val discoveryJoin = if (bsCond.isEmpty) "inner" else "left_outer"
-        val perFile = t.join(s, onCond, discoveryJoin)
+        val perFile = t.join(s, plan.on, discoveryJoin)
           .groupBy(col("__graft_file"), col("__graft_pos"))
           .agg(count(col("__graft_s")).as("__n"),
-            max(when(anyClause, 1).otherwise(0)).as("__rw"),
+            max(when(plan.matchedApplies, 1).otherwise(0)).as("__rw"),
             org.apache.spark.sql.functions.first(bsFlag).as("__bs"))
           .groupBy(col("__graft_file"))
           .agg(max(col("__n")).as("__mx"),
@@ -3851,30 +3821,24 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
                 org.apache.spark.sql.functions.coalesce(col("__bs"), lit(false)), 1)
               .otherwise(0)).as("__rel"))
           .collect()
-        if (matched.nonEmpty && perFile.exists(_.getAs[Long]("__mx") > 1))
-          throw new IllegalStateException(
-            s"MERGE: multiple source rows match a single target row on keys ${keys.mkString(",")}")
+        if (plan.matched.nonEmpty && perFile.exists(_.getAs[Long]("__mx") > 1))
+          throw plan.multipleMatches
         perFile.filter(_.getAs[Int]("__rel") == 1)
           .map(r => relOf(name, r.getString(0))).toSet
       }
 
-    // row tracking: the rewrite subset carries the hidden id column;
-    // MergeInto's clause dispatch passes unset columns through, so an
-    // UPDATEd row keeps its id and only the INSERT side mints fresh ones
+    // row tracking: the rewrite subset carries the hidden id column, which
+    // the plan passes through as an unset column, so an UPDATEd row keeps
+    // its id and only the INSERT side mints fresh ones
     val subset = rewriteSource(name, base, schema, entries.filter(e => touched(e.rel)))
-    val rewritten = MergeInto(subset, source, keys, extraOn, matched,
-      notMatched = Nil, notMatchedBySource, failOnMultipleMatches = false)
-    val inserts = withNullRowId(name,
-      MergeInto.insertedRows(target, source, keys, extraOn, notMatched))
-    // change feed: target-side pre/post/delete images from the SAME
-    // touched subset the rewrite reads, plus the insert rows — the merge's
-    // clause dispatch decides each row's change type (Delta CDF parity)
+    val rewritten = plan.withoutInserts.merge(subset, source, failOnMultipleMatches = false)
+    val inserts = withNullRowId(name, plan.insertedRows(target, source))
+    // change feed: target-side images from the SAME touched subset the
+    // rewrite reads, plus the insert rows
     val cdc = if (!cdfEnabled(name)) None else {
       val ins = dropRowIdCol(inserts).withColumn("_change_type", lit("insert"))
-      if (matched.isEmpty && notMatchedBySource.isEmpty) Some(ins)
-      else Some(MergeInto.changeSet(dropRowIdCol(subset), source, keys, extraOn,
-          matched, notMatchedBySource)
-        .unionByName(ins))
+      if (plan.insertOnly) Some(ins)
+      else Some(plan.changeSet(dropRowIdCol(subset), source).unionByName(ins))
     }
     txn match {
       case None =>
@@ -3901,149 +3865,85 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   }
 
   /** K5 in `mor` mode ([[setDmlMode]]): MERGE INTO as a deletion-vector
-    * commit. Matched rows a clause modifies — and by-source rows — are
-    * deletion-vectored in place; UPDATE post-images and INSERT rows are
-    * appended as new files through [[stageVersion]], in the table's
-    * layout. **No existing data file is rewritten**: a
-    * merge touching 0.1% of a 100 TB table's rows commits a tiny DV
-    * sidecar plus the new rows, where copy-on-write would rewrite every
-    * touched file — the Delta deletion-vector MERGE trade (write cost ∝
-    * changed rows, read cost deferred to the next OPTIMIZE).
+    * commit. Rows the plan updates or deletes are deletion-vectored in
+    * place; UPDATE post-images and INSERT rows are appended as new files
+    * through [[stageVersion]], in the table's layout. **No existing data
+    * file is rewritten**: a merge touching 0.1% of a 100 TB table's rows
+    * commits a tiny DV sidecar plus the new rows, where copy-on-write
+    * would rewrite every touched file — the Delta deletion-vector MERGE
+    * trade (write cost ∝ changed rows, read cost deferred to the next
+    * OPTIMIZE).
     *
     * Discovery runs over the same candidates as the copy-on-write path
-    * (`cand`, stats-pruned by the source's key ranges; INNER semantics via
-    * the left-outer join's match count) in one pass: the per-row
-    * (file, pos, kind) result lands as a staged parquet whose re-read
-    * answers the Delta-parity multiple-match check, the touched-file
-    * list, AND the deletion vector — one scan job over candidates, never
-    * the table. Change feed, row tracking (post-images keep their row
-    * ids) and OPTIMIZE's DV folding compose exactly as for mor
-    * UPDATE/DELETE ([[commitMorDml]]). */
+    * (`cand`) in one pass: the per-row (file, pos, disposition) result
+    * lands as a staged parquet whose re-read answers the multiple-match
+    * check and feeds the shared deletion-vector step ([[writeDv]]) — one
+    * scan job over candidates, never the table. Change feed, row tracking
+    * (post-images keep their row ids) and OPTIMIZE's DV folding compose
+    * exactly as for mor UPDATE/DELETE ([[commitMorDml]]). */
   private def commitMorMerge(
       name: String,
       source: DataFrame,
-      keys: Seq[String],
-      extraOn: Option[Column],
-      matched: Seq[MergeInto.MatchedAction],
-      notMatched: Seq[MergeInto.NotMatchedInsert],
-      notMatchedBySource: Seq[MergeInto.BySourceAction],
+      plan: MergeInto.ClausePlan,
       cand: Seq[FileEntry],
       schema: StructType,
       entries: Seq[FileEntry],
       base: Int,
       layout: (Seq[String], Seq[String], Seq[String]),
-      op: String): Unit = {
-    import MergeInto._
+      op: String): Unit =
     commit(name, Some(Some(base))) { (next, dir) =>
-      val tracking = rowTrackingEnabled(name)
-      val sMark = "__graft_s"
       val t = posScanWithIds(name, base, schema, cand).alias("t")
-      val s = source.withColumn(sMark, lit(true)).alias("s")
-      val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-      val onCond = extraOn.map(keyCond && _).getOrElse(keyCond)
-      val isMatched = col(s"s.$sMark").isNotNull
-      // first-match clause dispatch, reduced to each row's DISPOSITION:
-      // 'u' (DV + appended post-image), 'd' (DV only), NULL (untouched)
-      def chainKind(actions: Seq[(Option[Column], String)]): Column =
-        actions.foldLeft(Option.empty[Column]) { case (acc, (c, kind)) =>
-          val w = c.getOrElse(lit(true))
-          Some(acc.map(_.when(w, lit(kind))).getOrElse(when(w, lit(kind))))
-        }.map(_.otherwise(lit(null).cast(StringType)))
-          .getOrElse(lit(null).cast(StringType))
-      val matchedKind = chainKind(matched.map {
-        case MatchedUpdate(c, _) => (c, "u")
-        case MatchedDelete(c) => (c, "d")
-      })
-      val bsKind = chainKind(notMatchedBySource.map {
-        case BySourceUpdate(c, _) => (c, "u")
-        case BySourceDelete(c) => (c, "d")
-      })
-      val kind = when(isMatched, matchedKind).otherwise(bsKind)
-
-      val dvRel = s"v_$next/dv"
+      val s = source.withColumn("__graft_s", lit(true)).alias("s")
+      val isMatched = col("s.__graft_s").isNotNull
+      val kind = plan.disposition(isMatched)
       val discoDir = dir.resolve("disco")
-      val touched: Set[String] = if (cand.isEmpty) Set.empty else {
-        val j = t.join(s, onCond, "left_outer")
-        // one job over the candidates: per-row match count (multi-match
-        // check) + disposition; only rows the merge modifies (or that
-        // prove ambiguity) are kept, so the dump is change-set sized
-        j.groupBy(col("__graft_file"), col("__graft_pos"))
-          .agg(count(col(s"s.$sMark")).as("__n"), max(kind).as("__kind"))
+      val (touched, carry) = if (cand.isEmpty) (Set.empty[String], entries) else {
+        // per-row match count (multiple-match check) + disposition; only
+        // rows the merge modifies (or that prove ambiguity) are kept, so
+        // the dump is change-set sized
+        t.join(s, plan.on, "left_outer")
+          .groupBy(col("__graft_file"), col("__graft_pos"))
+          .agg(count(col("s.__graft_s")).as("__n"), max(kind).as("__kind"))
           .filter(col("__kind").isNotNull || col("__n") > 1)
           .write.parquet(discoDir.toString)
         val d = spark.read.parquet(discoDir.toString)
-        if (matched.nonEmpty && d.filter(col("__n") > 1).limit(1).count() > 0)
-          throw new IllegalStateException(
-            s"MERGE: multiple source rows match a single target row on keys ${keys.mkString(",")}")
-        val absToRel = cand.map(e =>
-          Paths.get(absPath(name, e.rel)).toAbsolutePath.normalize.toString -> e.rel)
-        d.filter(col("__kind").isNotNull)
-          .join(spark.createDataFrame(absToRel).toDF("__abs", "__rel"),
-            col("__graft_file") === col("__abs"), "inner")
-          .select(col("__rel").as("file"), col("__graft_pos").as("pos"))
-          .write.parquet(tableDir(name).resolve(dvRel).toString)
-        spark.read.parquet(tableDir(name).resolve(dvRel).toString)
-          .select(col("file")).distinct().collect().map(_.getString(0)).toSet
+        if (plan.matched.nonEmpty && d.filter(col("__n") > 1).limit(1).count() > 0)
+          throw plan.multipleMatches
+        writeDv(name, next, cand, entries, d.filter(col("__kind").isNotNull))
       }
 
       // appended rows: UPDATE post-images (deterministic re-derive of the
-      // DV'd 'u' rows, keeping their row ids) + the INSERT anti-join
+      // DV'd rows, keeping their row ids) + the INSERT anti-join
       val lschema = logicalizeSchema(name, schema)
-      val outCols = lschema.fieldNames.toSeq
-      val outTypes = lschema.fields.map(f => f.name -> f.dataType).toMap
-      def chainValue(c: String,
-          actions: Seq[(Option[Column], Option[Map[String, Column]])]): Column =
-        actions.foldLeft(Option.empty[Column]) { case (acc, (cond, set)) =>
-          val v = set.map(_.getOrElse(c, col(s"t.$c"))).getOrElse(col(s"t.$c"))
-          val w = cond.getOrElse(lit(true))
-          Some(acc.map(_.when(w, v)).getOrElse(when(w, v)))
-        }.map(_.otherwise(col(s"t.$c"))).getOrElse(col(s"t.$c"))
-      val matchedSpecs = matched.map {
-        case MatchedUpdate(c, set) => (c, Some(set))
-        case MatchedDelete(c) => (c, None)
-      }
-      val bsSpecs = notMatchedBySource.map {
-        case BySourceUpdate(c, set) => (c, Some(set))
-        case BySourceDelete(c) => (c, None)
-      }
       val updates: Option[DataFrame] =
-        if (cand.isEmpty || touched.isEmpty) None
-        else Some(t.join(s, onCond, "left_outer").filter(kind === "u").select(
-          outCols.map(c =>
-            when(isMatched, chainValue(c, matchedSpecs))
-              .otherwise(chainValue(c, bsSpecs))
-              .cast(outTypes(c)).as(c)) ++
-            (if (tracking)
+        if (touched.isEmpty) None
+        else Some(t.join(s, plan.on, "left_outer").filter(kind === "u").select(
+          lschema.fields.toSeq.map(f =>
+            plan.postImage(f.name, isMatched).cast(f.dataType).as(f.name)) ++
+            (if (rowTrackingEnabled(name))
               Seq(col(s"t.${TableStore.RowIdCol}").as(TableStore.RowIdCol))
             else Nil): _*))
       val inserts = withNullRowId(name,
-        insertedRows(readEntries(name, base, schema, entries), source, keys, extraOn,
-          notMatched))
+        plan.insertedRows(readEntries(name, base, schema, entries), source))
       val toAppend = updates.map(_.unionByName(inserts)).getOrElse(inserts)
 
       // the discovery dump served commit-time checks only — drop it so the
       // committed version dir holds exactly what the manifest references
       dropAbortedVersion(discoDir)
-      if (touched.isEmpty) dropAbortedVersion(tableDir(name).resolve(dvRel))
       val (pb, sw, sf) = layout
-      val appended = stageVersion(name, next, dir, toAppend, pb, sw, sf,
-        entries.map(e => if (touched(e.rel)) e.copy(dvs = e.dvs :+ dvRel) else e),
+      val appended = stageVersion(name, next, dir, toAppend, pb, sw, sf, carry,
         Some(schema), op)
       (touched.nonEmpty || appended.nonEmpty) && {
-        // change feed: clause dispatch over the candidate subset decides
-        // each row's change type (Delta CDF parity); insert rows ride along
         if (cdfEnabled(name)) {
           val ins = dropRowIdCol(inserts).withColumn("_change_type", lit("insert"))
           val cdcDf =
             if (cand.isEmpty) ins
-            else changeSet(readEntries(name, base, schema, cand), source, keys, extraOn,
-              matched, notMatchedBySource).unionByName(ins)
+            else plan.changeSet(readEntries(name, base, schema, cand), source).unionByName(ins)
           cdcDf.write.parquet(dir.resolve("cdc").toString)
         }
         true
       }
     }
-  }
 
   // ---------------------------------------------------------- transactions
 

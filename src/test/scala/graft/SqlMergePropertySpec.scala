@@ -15,7 +15,8 @@ import graft.tables.TableStore
   * keys, any clause subset in any order, star or explicit forms,
   * with/without clause conditions and residual ON conjuncts — executing
   * the SQL text against the store equals calling the [[MergeInto]]
-  * operator directly with the canonical t/s Columns.
+  * operator directly with the canonical t/s Columns — on a copy-on-write
+  * table and on its merge-on-read twin, whose change feeds must agree.
   */
 class SqlMergePropertySpec extends AnyFunSuite {
 
@@ -104,25 +105,36 @@ class SqlMergePropertySpec extends AnyFunSuite {
           st.copy(insert = Some(IC((_, _) => "WHEN NOT MATCHED THEN INSERT *",
             MergeInto.NotMatchedInsert(None, starMap))))
         else st
-
-        store.createOrReplace("db.pt", df(stmt.tRows))
         df(stmt.sRows).createOrReplaceTempView("prop_merge_src")
 
-        // qualifier spellings actually usable in the statement text
-        val tQual = stmt.tAlias.getOrElse(if (stmt.fullTableQual) "db.pt" else "pt") + "."
-        val sQual = stmt.sAlias.getOrElse("prop_merge_src") + "."
-        val onSql = s"${tQual}k = ${sQual}k" +
-          (if (stmt.extraOn) s" AND ${tQual}w >= 0" else "")
-        val sql =
-          s"""MERGE INTO db.pt${stmt.tAlias.map(a => s" AS $a").getOrElse("")}
-             |USING prop_merge_src${stmt.sAlias.map(a => s" AS $a").getOrElse("")}
-             |ON $onSql
-             |${stmt.matched.map(_.render(tQual, sQual)).mkString("\n")}
-             |${stmt.insert.map(_.render(tQual, sQual)).getOrElse("")}
-             |${stmt.bySource.map(_.render(tQual, sQual)).getOrElse("")}
-             |""".stripMargin
-        spark.sql(sql)
-        val viaSql = store.read("db.pt")
+        // the same statement on a copy-on-write table and its mor twin,
+        // both recording the change feed: (rows after, the merge's feed)
+        def run(table: String, mode: String): (DataFrame, DataFrame) = {
+          val full = s"db.$table"
+          store.createOrReplace(full, df(stmt.tRows))
+          store.setDmlMode(full, mode)
+          store.enableChangeFeed(full)
+          val before = store.version(full).get
+          // qualifier spellings actually usable in the statement text
+          val tQual = stmt.tAlias.getOrElse(if (stmt.fullTableQual) full else table) + "."
+          val sQual = stmt.sAlias.getOrElse("prop_merge_src") + "."
+          val onSql = s"${tQual}k = ${sQual}k" +
+            (if (stmt.extraOn) s" AND ${tQual}w >= 0" else "")
+          val sql =
+            s"""MERGE INTO $full${stmt.tAlias.map(a => s" AS $a").getOrElse("")}
+               |USING prop_merge_src${stmt.sAlias.map(a => s" AS $a").getOrElse("")}
+               |ON $onSql
+               |${stmt.matched.map(_.render(tQual, sQual)).mkString("\n")}
+               |${stmt.insert.map(_.render(tQual, sQual)).getOrElse("")}
+               |${stmt.bySource.map(_.render(tQual, sQual)).getOrElse("")}
+               |""".stripMargin
+          spark.sql(sql)
+          val feed = store.changeFeed(full, before, store.version(full).get)
+            .select((targetCols :+ "_change_type").map(col): _*)
+          (store.read(full), feed)
+        }
+        val (cowRows, cowFeed) = run("pt", "cow")
+        val (morRows, morFeed) = run("pt_mor", "mor")
 
         val viaApi = MergeInto(
           df(stmt.tRows), df(stmt.sRows), Seq("k"),
@@ -131,13 +143,18 @@ class SqlMergePropertySpec extends AnyFunSuite {
           notMatched = stmt.insert.map(_.api).toSeq,
           notMatchedBySource = stmt.bySource.map(_.api).toSeq)
 
-        val same = viaSql.exceptAll(viaApi).isEmpty && viaApi.exceptAll(viaSql).isEmpty
-        if (!same) {
-          System.err.println(s"MISMATCH for statement:\n$sql")
-          System.err.println(s"sql result: ${viaSql.collect().toSeq.sortBy(_.getInt(0))}")
-          System.err.println(s"api result: ${viaApi.collect().toSeq.sortBy(_.getInt(0))}")
+        def same(a: DataFrame, b: DataFrame) = a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+        val failed = Seq(
+          "cow rows vs api" -> same(cowRows, viaApi),
+          "mor rows vs cow rows" -> same(morRows, cowRows),
+          "mor feed vs cow feed" -> same(morFeed, cowFeed)).filterNot(_._2).map(_._1)
+        if (failed.nonEmpty) {
+          def show(d: DataFrame) = d.collect().toSeq.sortBy(_.toString)
+          System.err.println(s"MISMATCH (${failed.mkString(", ")}) for $stmt")
+          System.err.println(s"api: ${show(viaApi)}\ncow: ${show(cowRows)}\nmor: ${show(morRows)}")
+          System.err.println(s"cow feed: ${show(cowFeed)}\nmor feed: ${show(morFeed)}")
         }
-        same
+        failed.isEmpty
       }
       val result = SCTest.check(
         SCTest.Parameters.default.withMinSuccessfulTests(25).withInitialSeed(7L), prop)

@@ -230,6 +230,40 @@ class DmlEdgeSpec extends AnyFunSuite {
       s"the error must name the offending target reference, got: ${e.getMessage}")
   }
 
+  test("a store merge whose NOT MATCHED clause reads t.* raises the named error, cow and mor") {
+    withStore("graft_dml_tref") { (store, _) =>
+      import spark.implicits._
+      import graft.operators.MergeInto
+      // store merges compute inserts from the unmatched source rows alone,
+      // so even with a matched clause present a t.* reference in an insert
+      // has nothing to bind to: the error must name it, in either mode and
+      // from the API or SQL text, and leave the table unchanged
+      Seq("cow", "mor").foreach { mode =>
+        store.createOrReplace("db.tref", Seq((5L, "t5")).toDF("id", "v"))
+        store.setDmlMode("db.tref", mode)
+        val src = Seq((5L, "s5"), (6L, "s6")).toDF("id", "v")
+        src.createOrReplaceTempView("tref_src")
+        val viaApi = intercept[IllegalArgumentException] {
+          store.merge("db.tref", src, Seq("id"),
+            matched = Seq(MergeInto.MatchedUpdate(None, Map("v" -> col("s.v")))),
+            notMatched = Seq(MergeInto.NotMatchedInsert(None,
+              Map("id" -> col("s.id"), "v" -> col("t.v")))))
+        }
+        val viaSql = intercept[IllegalArgumentException] {
+          spark.sql("""MERGE INTO db.tref AS t USING tref_src AS s ON t.id = s.id
+                      |WHEN MATCHED THEN UPDATE SET v = s.v
+                      |WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, t.v)""".stripMargin)
+        }
+        Seq(viaApi, viaSql).foreach(e => assert(
+          e.getMessage.contains("NOT MATCHED clauses may reference only source columns") &&
+            e.getMessage.contains("t.v"),
+          s"$mode: the error must name the offending target reference, got: ${e.getMessage}"))
+        assert(store.read("db.tref").as[(Long, String)].collect().toSeq == Seq((5L, "t5")),
+          s"$mode: a rejected merge must leave the table unchanged")
+      }
+    }
+  }
+
   test("changeFeed over a window with a vacuumed version fails loudly; MV rebuilds") {
     withStore("graft_dml_retired") { (store, _) =>
       import spark.implicits._

@@ -7,9 +7,13 @@ oracle_sql.json in DuckDB over the same parquet tables and diffs each
 result against the Spark parquet dump (columns sorted by name, rows sorted
 by all columns, exact value compare with a tiny float report).
 
+Each OK/FAIL line ends with the query's DuckDB replay seconds (reading the
+Spark dump plus running the oracle SQL) and compare seconds; the run ends
+with the 10 slowest queries by their sum.
+
 Usage: python3 tools/check_oracle.py <sfDir> <outDir> [query ...]
 """
-import json, math, sys, os
+import json, math, sys, os, time
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -22,8 +26,9 @@ def canon(df):
     return df
 
 def cmp_frames(name, spark_df, oracle_df, rec=None):
-    """Exact compare; when `rec` (a dict) is given, fill the driver's
-    per-query record shape (rows/schema/hash match + row counts)."""
+    """Exact compare; returns (ok, the OK/FAIL line). When `rec` (a dict)
+    is given, fill the per-query record shape of CORRECTNESS_r*.json
+    (rows/schema/hash match + row counts)."""
     if rec is None:
         rec = {}
     a, b = canon(spark_df), canon(oracle_df)
@@ -32,12 +37,10 @@ def cmp_frames(name, spark_df, oracle_df, rec=None):
                 "hash_match": False,
                 "spark_rows": len(a), "oracle_rows": len(b), "err": None})
     if list(a.columns) != list(b.columns):
-        print(f"FAIL {name}: columns {list(a.columns)} vs {list(b.columns)}")
-        return False
+        return False, f"FAIL {name}: columns {list(a.columns)} vs {list(b.columns)}"
     if len(a) != len(b):
-        print(f"FAIL {name}: rows {len(a)} vs {len(b)}")
-        return False
-    ok = True
+        return False, f"FAIL {name}: rows {len(a)} vs {len(b)}"
+    ok, line = True, f"OK   {name}: {len(a)} rows x {len(a.columns)} cols"
     for c in a.columns:
         av, bv = a[c].tolist(), b[c].tolist()
         for i, (x, y) in enumerate(zip(av, bv)):
@@ -51,13 +54,11 @@ def cmp_frames(name, spark_df, oracle_df, rec=None):
                 delta = ""
                 if isinstance(x, float) and isinstance(y, float):
                     delta = f" (delta={x - y:.3e})"
-                print(f"FAIL {name}: col {c} row {i}: spark={x!r} oracle={y!r}{delta}")
+                line = f"FAIL {name}: col {c} row {i}: spark={x!r} oracle={y!r}{delta}"
                 ok = False
                 break
-    if ok:
-        print(f"OK   {name}: {len(a)} rows x {len(a.columns)} cols")
     rec["hash_match"] = ok
-    return ok
+    return ok, line
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
@@ -70,6 +71,7 @@ def main():
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_ok = n_fail = 0
     report = {}
+    timings = []  # (replay_s + compare_s, name, replay_s, compare_s)
     empty = {"rows_match": False, "schema_match": False, "hash_match": False,
              "spark_rows": None, "oracle_rows": None}
     for name, sql in sorted(oracles.items()):
@@ -81,20 +83,29 @@ def main():
             report[name] = dict(empty, err=f"no spark output at {spark_path}")
             n_fail += 1
             continue
+        t0 = time.perf_counter()
         try:
             spark_df = con.sql(f"SELECT * FROM '{spark_path}/*.parquet'").df()
             oracle_df = con.sql(sql).df()
         except Exception as e:
-            print(f"FAIL {name}: {e}")
+            print(f"FAIL {name}: {e} [replay {time.perf_counter() - t0:.2f}s]")
             report[name] = dict(empty, err=str(e)[:500])
             n_fail += 1
             continue
+        t1 = time.perf_counter()
         rec = {}
-        if cmp_frames(name, spark_df, oracle_df, rec):
+        ok, line = cmp_frames(name, spark_df, oracle_df, rec)
+        replay_s, compare_s = t1 - t0, time.perf_counter() - t1
+        print(f"{line} [replay {replay_s:.2f}s compare {compare_s:.2f}s]")
+        timings.append((replay_s + compare_s, name, replay_s, compare_s))
+        if ok:
             n_ok += 1
         else:
             n_fail += 1
         report[name] = rec
+    print("slowest queries (replay + compare):")
+    for total, name, replay_s, compare_s in sorted(timings, reverse=True)[:10]:
+        print(f"  {total:8.2f}s  {name}  (replay {replay_s:.2f}s, compare {compare_s:.2f}s)")
     print(f"== {n_ok} ok, {n_fail} fail ==")
     # builder-side correctness record (same per-query shape as the
     # driver's CORRECTNESS_r{N}.json) — set CHECK_JSON=<path> to write it
