@@ -9,9 +9,9 @@ import graft.functions.{BoundedTopK, DotProductFloat, RollingHash}
   * Catalyst expressions in the SQL function registry, so the SQL warehouse
   * surface (SURVEY.md §7.1 step 5) can call them by name —
   * `SELECT rolling_hash(text), dot_f(a, b) FROM …` — with full codegen,
-  * and injects the [[GraftSqlDml]] analyzer rule that executes SQL-text
-  * `MERGE INTO` / `UPDATE` / `DELETE FROM` / `INSERT INTO` against
-  * TableStore tables (the reference's workhorse statement shapes).
+  * and injects the [[GraftSqlDml]] analyzer rule and the [[GraftSqlParser]]
+  * that lower SQL statements on TableStore tables onto [[StoreCommand]]s
+  * (the reference's workhorse statement shapes; see [[SqlDml]]).
   *
   * Wire up with `.withExtensions(new GraftExtensions)` on the session
   * builder, or `spark.sql.extensions=graft.ext.GraftExtensions`.
@@ -19,13 +19,14 @@ import graft.functions.{BoundedTopK, DotProductFloat, RollingHash}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    // SQL-text MERGE INTO / UPDATE / DELETE / INSERT over TableStore
-    // tables — the reference's workhorse statement shape
-    // (22_ETL_Silver_PySpark.py:62).
+    // statements Spark parses (MERGE INTO, UPDATE, DELETE, INSERT, ALTER,
+    // SHOW) over TableStore tables — the reference's workhorse statement
+    // shape (22_ETL_Silver_PySpark.py:62).
     e.injectResolutionRule(new GraftSqlDml(_))
-    // CTAS / RTAS must be claimed at parse time (the analyzer's session-
-    // catalog conversion wins otherwise); non-store targets fall back to
-    // stock behavior at run time.
+    // CREATE / REPLACE / DROP TABLE must be claimed at parse time (the
+    // analyzer's session-catalog conversion wins otherwise; non-store
+    // targets fall back to stock behavior at run time), as must the
+    // statements Spark has no grammar for (OPTIMIZE, VACUUM, …).
     e.injectParser((_, parser) => new GraftSqlParser(parser))
     e.injectFunction((
       FunctionIdentifier("rolling_hash"),

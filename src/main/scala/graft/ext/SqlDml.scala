@@ -3,67 +3,139 @@ package graft.ext
 import java.util.Locale
 
 import org.apache.spark.sql.{Column, GraftShims, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute,
+  UnresolvedFunction, UnresolvedIdentifier, UnresolvedRelation, UnresolvedStar, UnresolvedTable,
+  UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Cast,
+  CheckConstraint, EqualTo, Expression, ForeignKeyConstraint, Literal, PrimaryKeyConstraint}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.functions.{col, expr, lit}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField,
+  StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.MergeInto
-import graft.tables.TableStore
+import graft.tables.{TableMeta, TableStore}
 
-/** SQL-text DML over [[TableStore]] tables: `MERGE INTO`, `UPDATE`,
-  * `DELETE FROM` submitted as plain SQL strings — the reference's workhorse
-  * write path (every silver/gold load is a SQL MERGE:
-  * 22_ETL_Silver_PySpark.py:62-101, 33_ETL_Gold_Dim_PySpark.py:61-104,
-  * 34_ETL_Gold_Fact_PySpark.py:90-139; 23_Testing_SCD2.py:40-64 issues SQL
-  * UPDATE/DELETE).
+/** SQL over [[TableStore]] tables. The reference declares and loads its
+  * whole model in SQL: CREATE OR REPLACE TABLE with identity columns,
+  * comments and PK/FK constraints (01_Init.py), and every silver/gold load
+  * is a SQL MERGE (22_ETL_Silver_PySpark.py:62-101,
+  * 33_ETL_Gold_Dim_PySpark.py:61-104, 34_ETL_Gold_Fact_PySpark.py:90-139;
+  * 23_Testing_SCD2.py:40-64 issues SQL UPDATE/DELETE).
   *
-  * Spark parses these statements into `MergeIntoTable` / `UpdateTable` /
-  * `DeleteFromTable` logical nodes but can only execute them against v2
-  * tables with row-level-operation support. [[GraftSqlDml]] — injected via
-  * [[GraftExtensions]] — intercepts the parsed node during analysis
-  * whenever the target names a table in the session's attached TableStore,
-  * and lowers it onto the existing [[MergeInto]] operator / copy-on-write
-  * table rewrites. Execution therefore inherits the operator's scale shape:
-  * one key-shuffled (or broadcast) join plus pure projection, never a
-  * driver-side loop.
+  * Every statement on a store table lowers to one [[StoreCommand]]: the
+  * statement's label, its table and a body run against the store that
+  * holds the table. The statements are DML (MERGE, UPDATE, DELETE, INSERT),
+  * DDL (CREATE / REPLACE TABLE with columns or AS SELECT, DROP TABLE,
+  * ALTER TABLE column, constraint and property changes), inspection
+  * (DESCRIBE HISTORY / DETAIL, SHOW TBLPROPERTIES / CREATE TABLE /
+  * PARTITIONS) and maintenance (OPTIMIZE, VACUUM, RESTORE, bloom-index and
+  * materialized-view statements, COPY INTO). Two front doors build them:
+  *  - [[GraftSqlDml]], an analyzer rule, lowers the statements Spark parses
+  *    itself whenever the one target resolver finds the table in an
+  *    attached store; anything else is left for Spark;
+  *  - [[GraftSqlParser]] claims at parse time the statements Spark has no
+  *    grammar for, and CREATE / REPLACE / DROP TABLE, which the analyzer
+  *    would convert for the session catalog first; those re-run Spark's own
+  *    plan when no store owns the target.
   *
-  * Lowering steps for MERGE:
-  *  1. the target must be `db.table` in the attached store (else the node
-  *     is left for Spark to reject);
-  *  2. SQL-side qualifiers (aliases or table names) are rewritten to the
-  *     operator's canonical `t`/`s` sides;
-  *  3. the ON conjunction splits into equi-key conjuncts `t.k = s.k`
-  *     (the shuffle keys) and arbitrary residual conjuncts (`extraOn` —
-  *     e.g. the reference's `tgt._tf_valid_to IS NULL` current-row pin);
-  *  4. WHEN clauses map 1:1 onto [[MergeInto]] actions, preserving clause
-  *     order (first-match-wins); `UPDATE SET *` / `INSERT *` expand to the
-  *     target's column list at execution time.
+  * MERGE lowering: SQL qualifiers (aliases or table names) are rewritten
+  * onto the operator's `t`/`s` sides; the ON conjunction splits into
+  * equi-key conjuncts `t.k = s.k` (the shuffle keys) and residual conjuncts
+  * (`extraOn`, e.g. the reference's `tgt._tf_valid_to IS NULL` current-row
+  * pin); WHEN clauses map 1:1 onto [[MergeInto]] clauses in order (first
+  * match wins); `UPDATE SET *` / `INSERT *` expand against the live target
+  * schema at run time. Execution inherits the operator's scale shape: one
+  * key-shuffled (or broadcast) join plus projection, never a driver loop.
+  *
+  * Table properties follow one policy: typed knobs route through their
+  * validating setters, and the engine-internal keys ([[SqlDml.InternalKeys]])
+  * are refused by SET, UNSET and CREATE and left out of SHOW CREATE TABLE.
   */
 object SqlDml {
 
-  /** Clause payloads captured at parse-lowering time; star forms expand
-    * against the live target schema inside the command's `run`. */
-  sealed trait SqlAction
-  final case class SqlUpdate(cond: Option[Column], set: Map[String, Column]) extends SqlAction
-  final case class SqlUpdateStar(cond: Option[Column]) extends SqlAction
-  final case class SqlDelete(cond: Option[Column]) extends SqlAction
-  final case class SqlInsert(cond: Option[Column], values: Map[String, Column]) extends SqlAction
-  final case class SqlInsertStar(cond: Option[Column]) extends SqlAction
+  /** A statement with no result rows. */
+  private[ext] def command(statement: String, table: String)(act: TableStore => Unit): StoreCommand =
+    StoreCommand(statement, table, (_, st) => { act(st); Nil })
 
-  /** Target table reference: (db.table, qualifier spellings usable in the
-    * statement text). An alias shadows the table name, as in SQL. */
-  private def tableRef(plan: LogicalPlan): Option[(String, Seq[Seq[String]])] = plan match {
-    case SubqueryAlias(id, u: UnresolvedRelation) =>
-      Some((u.multipartIdentifier.mkString("."), Seq(Seq(id.name))))
-    case u: UnresolvedRelation =>
-      val parts = u.multipartIdentifier
-      Some((parts.mkString("."), Seq(parts, Seq(parts.last)).distinct))
-    case _ => None
+  private[ext] def attr(name: String, t: DataType, nullable: Boolean = false): Attribute =
+    AttributeReference(name, t, nullable)()
+
+  /** Re-run Spark's own plan for a claimed statement no store owns. */
+  private[ext] def sparkPlan(original: LogicalPlan): Option[SparkSession => Seq[Row]] =
+    Some(spark => { GraftShims.ofRows(spark, original).collect(); Nil })
+
+  /** The session's column-name resolver: exact under
+    * `spark.sql.caseSensitive`, else case-insensitive. */
+  private def resolver(spark: SparkSession): (String, String) => Boolean =
+    if (spark.conf.get("spark.sql.caseSensitive", "false").toBoolean) _ == _
+    else _.equalsIgnoreCase(_)
+
+  // ------------------------------------------------------ table properties
+
+  /** Table-property keys that are engine state, not declaration: each is
+    * owned by its own DDL (bloom index, constraints, generated and identity
+    * columns, column mapping, NOT NULL and DEFAULT, materialized views) or
+    * by the write path (row and stream high-water marks). Writing one
+    * directly skips the checks its DDL runs, so SET / UNSET TBLPROPERTIES
+    * and CREATE refuse them and SHOW CREATE TABLE leaves them out. */
+  private[ext] val InternalKeys = Seq("mv.*", "bloom.*", "fk.*", "colmap.*", "coldrop.*",
+    "gencol.*", "check.*", "identity.*", "notnull.*", "coldefault.*", "primary_key",
+    "row_high_water", "stream_high_water")
+
+  /** The bloom index's keys: SET / UNSET leave them to the BLOOMFILTER
+    * INDEX statements, but SHOW CREATE TABLE emits them and CREATE declares
+    * the index from them. */
+  private val BloomKeys = Set("bloom.cols", "bloom.ndv")
+
+  private def internalKey(k: String): Option[String] =
+    InternalKeys.find(p => if (p.endsWith("*")) k.startsWith(p.init) else k == p)
+
+  private def refuseInternal(statement: String, table: String, k: String): Unit =
+    internalKey(k).foreach(p => throw new IllegalArgumentException(
+      s"$statement $table: '$k' is engine-internal ($p) — use its DDL " +
+        "(BLOOMFILTER INDEX / CONSTRAINT / GENERATED / MATERIALIZED VIEW statements)"))
+
+  /** One property as the store call that sets it: typed knobs (dml_mode,
+    * target_file_rows, comment) go through their validating setters,
+    * anything else is a generic property, Delta-style. Building the call
+    * refuses internal keys and checks typed values, so a statement builds
+    * every call before it changes anything. */
+  private def propertySetter(statement: String, table: String, k: String,
+      v: String): TableStore => Unit = {
+    refuseInternal(statement, table, k)
+    TableStore.checkKnob(table, k, v)
+    k match {
+      case "dml_mode" => _.setDmlMode(table, v)
+      case "target_file_rows" => _.setTargetFileRows(table, v.toLong)
+      case "comment" => st => st.setMeta(table, st.meta(table).copy(comment = Some(v)))
+      case _ => st => st.setMeta(table, st.meta(table).copy(properties =
+        st.meta(table).properties + (k -> v)))
+    }
   }
+
+  // ------------------------------------------------------- target resolver
+
+  /** The store table a statement targets: the first table leaf under
+    * `plan` (constraint nodes wrap it in helper operators, e.g.
+    * AddCheckConstraint's existing-row validation scan), as `db.table`
+    * plus the qualifier spellings the statement text may use for it (an
+    * alias shadows the table name, as in SQL). None unless an attached
+    * store holds the table: the statement is then left for Spark. */
+  private def storeTarget(plan: LogicalPlan,
+      spark: SparkSession): Option[(String, Seq[Seq[String]])] =
+    plan.collectFirst {
+      case SubqueryAlias(id, u: UnresolvedRelation) => (u.multipartIdentifier, Seq(Seq(id.name)))
+      case u: UnresolvedRelation =>
+        (u.multipartIdentifier, Seq(u.multipartIdentifier, Seq(u.multipartIdentifier.last)).distinct)
+      case u: UnresolvedTable => (u.multipartIdentifier, Nil)
+      case u: UnresolvedTableOrView => (u.multipartIdentifier, Nil)
+    }.map { case (parts, quals) => (parts.mkString("."), quals) }
+      .filter { case (name, _) => name.contains(".") && TableStore.resolve(spark, name).isDefined }
 
   private def sourceQuals(plan: LogicalPlan): Seq[Seq[String]] = plan match {
     case SubqueryAlias(id, _) => Seq(Seq(id.name))
@@ -88,12 +160,12 @@ object SqlDml {
   }
 
   /** Drop target qualifiers entirely (single-table UPDATE/DELETE rewrite). */
-  private def unqualify(e: Expression, tQuals: Seq[Seq[String]]): Expression = {
+  private def unqualify(e: Expression, tQuals: Seq[Seq[String]]): Column = {
     val tq = tQuals.map(lc)
-    e.transformUp {
+    GraftShims.column(e.transformUp {
       case a: UnresolvedAttribute if a.nameParts.length > 1 && tq.contains(lc(a.nameParts.init)) =>
         UnresolvedAttribute(Seq(a.nameParts.last))
-    }
+    })
   }
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -107,734 +179,205 @@ object SqlDml {
     case other => throw new UnsupportedOperationException(s"unsupported assignment key: $other")
   }
 
-  private[ext] def lowerMerge(m: MergeIntoTable, spark: SparkSession): Option[LogicalPlan] =
-    tableRef(m.targetTable).filter { case (name, _) =>
-      name.contains(".") && TableStore.resolve(spark, name).isDefined
-    }.map { case (name, tQuals) =>
-      val sQuals = sourceQuals(m.sourceTable)
-      def cv(e: Expression): Column = GraftShims.column(requalify(e, tQuals, sQuals))
+  // -------------------------------------------- statements Spark parses
 
-      val (keyEqs, extras) = conjuncts(requalify(m.mergeCondition, tQuals, sQuals)).partition {
-        case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute)
-          if a.nameParts.length == 2 && b.nameParts.length == 2 &&
-            a.nameParts.last == b.nameParts.last =>
-          Set(a.nameParts.head, b.nameParts.head) == Set("t", "s")
-        case _ => false
+  /** Lower one parsed statement onto a [[StoreCommand]] when its target is
+    * a store table; None leaves it to Spark. Nested fields, explicit column
+    * positions, type changes and `PARTITION (…)` patterns stay with Spark
+    * (which rejects them for a non-catalog table). */
+  private[ext] def lower(plan: LogicalPlan, spark: SparkSession): Option[LogicalPlan] = {
+    def on(target: LogicalPlan) = storeTarget(target, spark)
+    def table(target: LogicalPlan) = on(target).map(_._1)
+    plan match {
+      case m: MergeIntoTable => on(m.targetTable).map { case (t, q) => merge(t, q, m) }
+
+      // UPDATE / DELETE: copy-on-write or deletion vectors, per dml_mode
+      case u: UpdateTable => on(u.table).map { case (t, q) =>
+        val set = u.assignments.map { case Assignment(k, v) => assignKey(k) -> unqualify(v, q) }.toMap
+        val cond = u.condition.map(unqualify(_, q)).getOrElse(lit(true))
+        command("UPDATE", t)(_.update(t, cond, set))
       }
-      if (keyEqs.isEmpty) throw new UnsupportedOperationException(
-        s"MERGE INTO $name: ON must contain at least one target.key = source.key equality")
-      val keys = keyEqs.map { case EqualTo(a: UnresolvedAttribute, _) => a.nameParts.last }
-      val extraOn = extras.reduceOption(And.apply).map(GraftShims.column)
-
-      def assignMap(as: Seq[Assignment]): Map[String, Column] =
-        as.map { case Assignment(k, v) => assignKey(k) -> cv(v) }.toMap
-
-      def act(a: MergeAction): SqlAction = a match {
-        case u: UpdateAction => SqlUpdate(u.condition.map(cv), assignMap(u.assignments))
-        case u: UpdateStarAction => SqlUpdateStar(u.condition.map(cv))
-        case d: DeleteAction => SqlDelete(d.condition.map(cv))
-        case i: InsertAction => SqlInsert(i.condition.map(cv), assignMap(i.assignments))
-        case i: InsertStarAction => SqlInsertStar(i.condition.map(cv))
-        case other => throw new UnsupportedOperationException(s"unsupported MERGE action: $other")
+      case d: DeleteFromTable => on(d.table).map { case (t, q) =>
+        val cond = unqualify(d.condition, q)
+        command("DELETE FROM", t)(_.delete(t, cond))
       }
+      case i: InsertIntoStatement => table(i.table).map(t =>
+        StoreCommand("INSERT INTO", t, (spark, st) => { insert(spark, st, t, i); Nil },
+          shown = Seq(i.query)))
 
-      GraftMergeCommand(name, m.sourceTable, keys, extraOn,
-        m.matchedActions.map(act), m.notMatchedActions.map(act),
-        m.notMatchedBySourceActions.map(act), m.withSchemaEvolution)
-    }
+      // ALTER TABLE … ADD COLUMNS: metadata-only schema widening, no file
+      // is rewritten
+      case a: AddColumns if a.columnsToAdd.forall(c => c.name.length == 1 && c.position.isEmpty) =>
+        table(a.table).map { t =>
+          val cols = StructType(a.columnsToAdd.map(c => StructField(c.name.head, c.dataType)))
+          command("ADD COLUMNS", t)(_.addColumns(t, cols))
+        }
+      // RENAME COLUMN / DROP COLUMN: metadata-only column mapping
+      case r: RenameColumn if r.column.name.length == 1 =>
+        table(r.table).map(t => command("RENAME COLUMN", t)(
+          _.renameColumn(t, r.column.name.head, r.newName)))
+      case d: DropColumns if d.columnsToDrop.forall(_.name.length == 1) =>
+        table(d.table).map(t => command("DROP COLUMN", t)(st =>
+          d.columnsToDrop.foreach(c => st.dropColumn(t, c.name.head))))
+      // ALTER COLUMN c SET/DROP NOT NULL | SET/DROP DEFAULT | COMMENT:
+      // nullability lowers to the ENFORCED not-null constraint (validated at
+      // declaration, enforced in every write), defaults to the metadata the
+      // INSERT path applies when a statement omits the column, comments to
+      // the column-comment sidecar
+      case a: AlterColumns if a.specs.forall(s => s.newDataType.isEmpty && s.newPosition.isEmpty) =>
+        table(a.table).map(t => command("ALTER COLUMN", t)(st => a.specs.foreach { s =>
+          val c = s.column.name.mkString(".")
+          require(!c.contains("."),
+            s"ALTER COLUMN on nested field $c: store tables hold top-level columns only")
+          s.newNullability.foreach {
+            case false => st.setNotNull(t, c)
+            case true => st.dropNotNull(t, c)
+          }
+          s.newDefaultExpression.foreach(d => st.setColumnDefault(t, c, d.originalSQL))
+          if (s.dropDefault) st.dropColumnDefault(t, c)
+          s.newComment.foreach(st.setColumnComment(t, c, _))
+        }))
 
-  private[ext] def lowerUpdate(u: UpdateTable, spark: SparkSession): Option[LogicalPlan] =
-    tableRef(u.table).filter { case (name, _) =>
-      name.contains(".") && TableStore.resolve(spark, name).isDefined
-    }.map { case (name, tQuals) =>
-      val set = u.assignments.map { case Assignment(k, v) =>
-        assignKey(k) -> GraftShims.column(unqualify(v, tQuals))
-      }.toMap
-      val cond = u.condition.map(e => GraftShims.column(unqualify(e, tQuals))).getOrElse(lit(true))
-      GraftUpdateCommand(name, cond, set)
-    }
-
-  private[ext] def lowerDelete(d: DeleteFromTable, spark: SparkSession): Option[LogicalPlan] =
-    tableRef(d.table).filter { case (name, _) =>
-      name.contains(".") && TableStore.resolve(spark, name).isDefined
-    }.map { case (name, tQuals) =>
-      GraftDeleteCommand(name, GraftShims.column(unqualify(d.condition, tQuals)))
-    }
-
-  /** `SELECT … FROM db.t VERSION AS OF n` / `TIMESTAMP AS OF ts` over a
-    * store table resolves to the matching retained snapshot (Delta's
-    * time-travel surface; the store keeps every version until vacuum).
-    * Timestamps resolve against manifest commit times, interpreted UTC. */
-  private[ext] def lowerTimeTravel(
-      tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel,
-      spark: SparkSession): Option[LogicalPlan] = {
-    def tsInstant(e: Expression): Option[java.time.Instant] = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v, t) => t match {
-        case org.apache.spark.sql.types.StringType =>
-          scala.util.Try(java.time.LocalDateTime
-            .parse(v.toString.replace(' ', 'T'))
-            .toInstant(java.time.ZoneOffset.UTC)).toOption
-        case _: org.apache.spark.sql.types.TimestampType =>
-          Some(java.time.Instant.EPOCH.plusNanos(v.asInstanceOf[Long] * 1000L))
+      // ADD CONSTRAINT c CHECK (…): the enforced check, carried as its SQL
+      // text and re-parsed at each write (like Delta's
+      // `delta.constraints.*` properties)
+      case c: AddCheckConstraint => table(c.child).map(t => command("ADD CONSTRAINT", t)(
+        _.addCheckConstraint(t, c.checkConstraint.userProvidedName, c.checkConstraint.condition)))
+      // ADD CONSTRAINT c FOREIGN KEY (…) REFERENCES p(…): the reference's
+      // informational FK (01_Init.py:336-341) in the metadata sidecar
+      case a: AddConstraint => a.tableConstraint match {
+        case fk: ForeignKeyConstraint => table(a.child).map(t => command("ADD CONSTRAINT", t)(
+          _.setForeignKey(t, fk.userProvidedName, fk.childColumns,
+            fk.parentTableId.mkString("."), fk.parentColumns)))
         case _ => None
       }
-      case c: org.apache.spark.sql.catalyst.expressions.Cast => tsInstant(c.child)
-      case _ => None
-    }
-    (tt.relation match {
-      case u: UnresolvedRelation => Some(u.multipartIdentifier.mkString("."))
-      case _ => None
-    }).filter(_.contains("."))
-      .flatMap(name => TableStore.resolve(spark, name).map(name -> _))
-      .flatMap { case (name, store) =>
-        tt.version.map { v =>
-          val version = v.toString.toInt
-          require(store.versions(name).contains(version),
-            s"$name VERSION AS OF $version: no such retained version " +
-              s"(have ${store.versions(name).mkString(", ")})")
-          version
-        }.orElse(tt.timestamp.flatMap(tsInstant).map(store.versionAsOf(name, _)))
-          .map(v => GraftShims.analyzedPlan(store.readVersion(name, v)))
-      }
-  }
+      // DROP CONSTRAINT c: CHECK or FOREIGN KEY, whichever `c` names
+      case d: DropConstraint => table(d.child).map(t => command("DROP CONSTRAINT", t)(st =>
+        if (st.foreignKeys(t).contains(d.name)) st.dropForeignKey(t, d.name)
+        else st.dropCheckConstraint(t, d.name)))
 
-  private[ext] def lowerInsert(i: InsertIntoStatement, spark: SparkSession): Option[LogicalPlan] =
-    tableRef(i.table).filter { case (name, _) =>
-      name.contains(".") && TableStore.resolve(spark, name).isDefined
-    }.map { case (name, _) =>
-      GraftInsertCommand(name, i.query, i.userSpecifiedCols, i.overwrite, i.byName,
-        i.partitionSpec)
-    }
-
-  /** `ALTER TABLE db.t ADD COLUMNS (…)` on a store table lowers to the
-    * metadata-only schema widening ([[graft.tables.TableStore.addColumns]]
-    * — no file is rewritten). Nested fields / explicit positions are left
-    * to Spark (which will reject them for a non-catalog table). */
-  /** `ALTER TABLE t SET TBLPROPERTIES (…)`: known engine knobs route to
-    * their typed setters (validation included); everything else lands as
-    * generic metadata, like Delta's property bag. */
-  /** `ALTER TABLE t ALTER COLUMN c SET/DROP NOT NULL | SET/DROP DEFAULT |
-    * COMMENT '…'` on a store table: nullability lowers to the ENFORCED
-    * not-null constraint (validated at declaration, enforced in every
-    * write pass), defaults to the metadata the INSERT path applies when a
-    * statement omits the column, comments to the column-comment sidecar.
-    * Type/position changes are left to Spark (rejected for non-catalog
-    * tables, as before). */
-  private[ext] def lowerAlterColumns(a: AlterColumns,
-      spark: SparkSession): Option[LogicalPlan] =
-    storeTableOf(a.table, spark).filter { _ =>
-      a.specs.forall(s => s.newDataType.isEmpty && s.newPosition.isEmpty)
-    }.map { name =>
-      GraftAlterColumnsCommand(name, a.specs.map(s => AlterColSpec(
-        s.column.name.mkString("."),
-        s.newNullability,
-        s.newDefaultExpression.map(_.originalSQL),
-        s.dropDefault,
-        s.newComment)))
-    }
-
-  private[ext] def lowerSetTblProps(s: SetTableProperties,
-      spark: SparkSession): Option[LogicalPlan] =
-    storeTableOf(s.table, spark).map(GraftSetTblPropsCommand(_, s.properties))
-
-  private[ext] def lowerUnsetTblProps(s: UnsetTableProperties,
-      spark: SparkSession): Option[LogicalPlan] =
-    storeTableOf(s.table, spark).map(GraftUnsetTblPropsCommand(_, s.propertyKeys))
-
-  private[ext] def lowerShowTblProps(s: ShowTableProperties,
-      spark: SparkSession): Option[LogicalPlan] =
-    storeTableOf(s.table, spark).map(GraftShowTblPropsCommand(_, s.propertyKey))
-
-  private[ext] def lowerShowCreate(s: ShowCreateTable,
-      spark: SparkSession): Option[LogicalPlan] =
-    storeTableOf(s.child, spark).map(GraftShowCreateTableCommand(_))
-
-  /** `SHOW PARTITIONS db.t` on a store table: a metadata-only listing
-    * from manifest stats (no data scan); `PARTITION (…)` patterns are
-    * left to Spark (they'd error for a non-catalog table anyway). */
-  private[ext] def lowerShowPartitions(s: ShowPartitions,
-      spark: SparkSession): Option[LogicalPlan] =
-    if (s.pattern.isDefined) None
-    else storeTableOf(s.table, spark).map(GraftShowPartitionsCommand(_))
-
-  private[ext] def lowerAddColumns(a: AddColumns, spark: SparkSession): Option[LogicalPlan] =
-    (a.table match {
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-        Some(u.multipartIdentifier.mkString("."))
-      case _ => None
-    }).filter(n => n.contains(".") && TableStore.resolve(spark, n).isDefined)
-      .filter(_ => a.columnsToAdd.forall(c => c.name.length == 1 && c.position.isEmpty))
-      .map { name =>
-        val fields = a.columnsToAdd.map(c =>
-          org.apache.spark.sql.types.StructField(c.name.head, c.dataType,
-            nullable = true))
-        GraftAddColumnsCommand(name,
-          org.apache.spark.sql.types.StructType(fields))
-      }
-
-  /** `ALTER TABLE db.t RENAME COLUMN a TO b` / `DROP COLUMN c` on a store
-    * table lower to the metadata-only column-mapping operations
-    * ([[graft.tables.TableStore.renameColumn]]/[[graft.tables.TableStore.dropColumn]]).
-    * Nested fields stay with Spark. */
-  private[ext] def lowerRenameColumn(r: org.apache.spark.sql.catalyst.plans.logical.RenameColumn,
-      spark: SparkSession): Option[LogicalPlan] =
-    (r.table match {
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-        Some(u.multipartIdentifier.mkString("."))
-      case _ => None
-    }).filter(n => n.contains(".") && TableStore.resolve(spark, n).isDefined)
-      .filter(_ => r.column.name.length == 1)
-      .map(name => GraftRenameColumnCommand(name, r.column.name.head, r.newName))
-
-  private[ext] def lowerDropColumns(d: org.apache.spark.sql.catalyst.plans.logical.DropColumns,
-      spark: SparkSession): Option[LogicalPlan] =
-    (d.table match {
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-        Some(u.multipartIdentifier.mkString("."))
-      case _ => None
-    }).filter(n => n.contains(".") && TableStore.resolve(spark, n).isDefined)
-      .filter(_ => d.columnsToDrop.forall(_.name.length == 1))
-      .map(name => GraftDropColumnsCommand(name, d.columnsToDrop.map(_.name.head)))
-
-  /** `SELECT … FROM table_changes('db.t', from[, to])` — Delta's CDF
-    * table-valued function over a store table's [[TableStore.changeFeed]],
-    * registered via `SparkSessionExtensions.injectTableFunction`. */
-  private[ext] def tableChangesPlan(args: Seq[Expression]): LogicalPlan = {
-    val spark = SparkSession.active
-    def intArg(e: Expression): Option[Int] = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => Some(v)
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => Some(v.toInt)
-      case _ => None
-    }
-    def strArg(e: Expression): Option[String] = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(s, _)
-        if s.isInstanceOf[org.apache.spark.unsafe.types.UTF8String] => Some(s.toString)
-      case _ => None
-    }
-    val parsed = args match {
-      case Seq(t, f, rest @ _*) if rest.size <= 1 =>
-        for {
-          table <- strArg(t)
-          st <- TableStore.resolve(spark, table)
-          from <- intArg(f)
-          to <- rest.headOption.map(intArg).getOrElse(st.version(table))
-        } yield (st, table, from, to)
-      case _ => None
-    }
-    val (st, table, from, to) = parsed.getOrElse(throw new IllegalArgumentException(
-      "table_changes('db.table', fromVersion[, toVersion]): the table must live in an " +
-        "attached TableStore and the versions must be integer literals"))
-    GraftShims.analyzedPlan(st.changeFeed(table, from, to))
-  }
-
-  /** `SELECT … FROM table_files('db.t')` — the current manifest as rows
-    * (file, rows, size_bytes, dv_count, stats map): the Iceberg-`.files`
-    * style inspection surface over [[TableStore.fileInventory]]. */
-  private[ext] def tableFilesPlan(args: Seq[Expression]): LogicalPlan = {
-    val spark = SparkSession.active
-    val parsed = args match {
-      case Seq(org.apache.spark.sql.catalyst.expressions.Literal(s, _))
-          if s.isInstanceOf[org.apache.spark.unsafe.types.UTF8String] =>
-        val table = s.toString
-        TableStore.resolve(spark, table).map(st => (st, table))
-      case _ => None
-    }
-    val (st, table) = parsed.getOrElse(throw new IllegalArgumentException(
-      "table_files('db.table'): the table must live in an attached TableStore"))
-    GraftShims.analyzedPlan(st.fileInventory(table))
-  }
-
-  /** Plain `SELECT … FROM db.t` over a store table: resolve the relation
-    * to the store's read plan, so the SQL warehouse surface reads store
-    * tables BY NAME — no manual temp-view registration. Session-catalog
-    * tables and (temp) views always win: the lowering only fires when the
-    * catalog cannot resolve the identifier, so a store table can never
-    * shadow a catalog object. */
-  private[ext] def lowerRelation(u: UnresolvedRelation,
-      spark: SparkSession): Option[LogicalPlan] = {
-    val name = u.multipartIdentifier.mkString(".")
-    // isStreaming: spark.readStream.table("db.t") must NOT be substituted
-    // with the batch read plan (it would surface later as a confusing
-    // "writeStream on a non-streaming Dataset") — streaming reads of store
-    // tables go through the graft-table DSv2 source instead
-    if (u.isStreaming || !name.contains(".") || u.multipartIdentifier.length > 2) None
-    else if (scala.util.Try(spark.catalog.tableExists(name)).getOrElse(false)) None
-    else TableStore.resolve(spark, name).map { st =>
-      org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(
-        u.multipartIdentifier, GraftShims.analyzedPlan(st.read(name)))
-    }
-  }
-
-  /** First store-table leaf under `plan` — the constraint nodes wrap the
-    * target in helper operators (AddCheckConstraint's child is
-    * `Filter(NOT cond, UnresolvedRelation)`, Spark's own existing-row
-    * validation scan), so the table is found by walking, not matching the
-    * root. */
-  private def storeTableOf(plan: LogicalPlan, spark: SparkSession): Option[String] =
-    plan.collectFirst {
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-        u.multipartIdentifier.mkString(".")
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedTableOrView =>
-        u.multipartIdentifier.mkString(".")
-      case u: UnresolvedRelation => u.multipartIdentifier.mkString(".")
-    }.filter(n => n.contains(".") && TableStore.resolve(spark, n).isDefined)
-
-  /** `ALTER TABLE db.t ADD CONSTRAINT c CHECK (…)` on a store table lowers
-    * to the enforced check ([[graft.tables.TableStore.addCheckConstraint]]).
-    * The constraint's condition is carried as its SQL text — re-parsed at
-    * each write, like Delta stores `delta.constraints.*` properties. */
-  private[ext] def lowerAddConstraint(a: AddCheckConstraint,
-      spark: SparkSession): Option[LogicalPlan] =
-    storeTableOf(a.child, spark).map(name =>
-      GraftAddConstraintCommand(name, a.checkConstraint.userProvidedName,
-        a.checkConstraint.condition))
-
-  private[ext] def lowerDropConstraint(d: DropConstraint,
-      spark: SparkSession): Option[LogicalPlan] =
-    storeTableOf(d.child, spark).map(name =>
-      GraftDropConstraintCommand(name, d.name))
-
-  /** `ALTER TABLE db.t ADD CONSTRAINT c FOREIGN KEY (…) REFERENCES p(…)`
-    * on a store table records the reference's informational FK
-    * (01_Init.py:336-341) in the metadata sidecar. Spark 4.1 parses the
-    * statement natively; only the lowering onto the store is ours. */
-  private[ext] def lowerAddFk(a: org.apache.spark.sql.catalyst.plans.logical.AddConstraint,
-      spark: SparkSession): Option[LogicalPlan] =
-    a.tableConstraint match {
-      case fk: org.apache.spark.sql.catalyst.expressions.ForeignKeyConstraint =>
-        storeTableOf(a.child, spark).map(name =>
-          GraftAddForeignKeyCommand(name, fk.userProvidedName,
-            fk.childColumns, fk.parentTableId.mkString("."), fk.parentColumns))
-      case _ => None
-    }
-
-
-  /** CTAS / RTAS capture at PARSE time — the analyzer converts (or
-    * rejects) these nodes for the session catalog before an injected
-    * resolution rule can see them, so the parser wrapper claims candidate
-    * statements up front and the command decides at run time: a target
-    * inside an attached store's namespace executes as a snapshot write,
-    * anything else re-submits the untouched original plan to Spark. */
-  private[ext] def captureCtas(name: LogicalPlan, query: LogicalPlan,
-      orReplace: Boolean, orCreate: Boolean, ignoreIfExists: Boolean,
-      partitioning: Seq[org.apache.spark.sql.connector.expressions.Transform],
-      tableSpec: Object, original: LogicalPlan): Option[LogicalPlan] =
-    (name match {
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedIdentifier => Some(u.nameParts)
-      case _ => None
-    }).filter(_.length == 2).map { parts =>
-      // PARTITIONED BY / TBLPROPERTIES / COMMENT must be honored or
-      // rejected — silently dropping a user's partitioning writes an
-      // unpartitioned table with no warning
-      val (identityT, otherT) = partitioning.partition(t =>
-        t.name == "identity" && t.references.length == 1)
-      val partCols = identityT.map(_.references()(0).fieldNames.mkString("."))
-      val unsupported = scala.collection.mutable.ArrayBuffer.empty[String]
-      otherT.foreach(t => unsupported += s"partition transform $t")
-      val (props, comment) = tableSpec match {
-        case u: org.apache.spark.sql.catalyst.plans.logical.UnresolvedTableSpec =>
-          u.provider.filterNot(_.equalsIgnoreCase("parquet"))
-            .foreach(p => unsupported += s"USING $p")
-          u.location.foreach(l => unsupported += s"LOCATION $l")
-          if (u.external) unsupported += "EXTERNAL"
-          u.serde.foreach(_ => unsupported += "row-format/serde clause")
-          (u.properties, u.comment)
-        case _ => (Map.empty[String, String], None)
-      }
-      GraftCtasCommand(parts.mkString("."), query, orReplace, orCreate,
-        ignoreIfExists, partCols, props, comment, unsupported.toSeq, original)
-    }
-
-  /** Column-defined `CREATE [OR REPLACE] TABLE db.t (…)` capture (no AS):
-    * the reference declares its whole model this way — inline NOT NULL,
-    * DEFAULT, COMMENT, GENERATED ALWAYS AS (expr | IDENTITY), PRIMARY
-    * KEY / FOREIGN KEY / CHECK (01_Init.py). Every clause lowers onto the
-    * store feature that already implements it, so the declared DDL and
-    * the enforced behavior are the same thing; SHOW CREATE TABLE
-    * round-trips it back. */
-  private[ext] def captureCreateTable(name: LogicalPlan,
-      columns: Seq[ColumnDefinition], orReplace: Boolean, orCreate: Boolean,
-      ignoreIfExists: Boolean,
-      partitioning: Seq[org.apache.spark.sql.connector.expressions.Transform],
-      tableSpec: Object, original: LogicalPlan): Option[LogicalPlan] =
-    (name match {
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedIdentifier => Some(u.nameParts)
-      case _ => None
-    }).filter(_.length == 2).map { parts =>
-      val unsupported = scala.collection.mutable.ArrayBuffer.empty[String]
-      val (identityT, otherT) = partitioning.partition(t =>
-        t.name == "identity" && t.references.length == 1)
-      val partCols = identityT.map(_.references()(0).fieldNames.mkString("."))
-      otherT.foreach(t => unsupported += s"partition transform $t")
-      val decls = columns.map { c =>
-        if (c.identityColumnSpec.exists(_.isAllowExplicitInsert))
-          unsupported += s"${c.name} GENERATED BY DEFAULT AS IDENTITY (ALWAYS only)"
-        ColDecl(StructField(c.name, c.dataType, c.nullable), notNull = !c.nullable,
-          c.comment, c.defaultValue.map(_.originalSQL), c.generationExpression,
-          c.identityColumnSpec.map(s => (s.getStart, s.getStep)))
-      }
-      val (props, comment, constraints) = tableSpec match {
-        case u: org.apache.spark.sql.catalyst.plans.logical.UnresolvedTableSpec =>
-          u.provider.filterNot(_.equalsIgnoreCase("parquet"))
-            .foreach(p => unsupported += s"USING $p")
-          u.location.foreach(l => unsupported += s"LOCATION $l")
-          if (u.external) unsupported += "EXTERNAL"
-          u.serde.foreach(_ => unsupported += "row-format/serde clause")
-          val cs = u.constraints.flatMap {
-            case pk: org.apache.spark.sql.catalyst.expressions.PrimaryKeyConstraint =>
-              Some(TableDecl.Pk(pk.columns))
-            case fk: org.apache.spark.sql.catalyst.expressions.ForeignKeyConstraint =>
-              Some(TableDecl.Fk(fk.userProvidedName, fk.childColumns,
-                fk.parentTableId.mkString("."), fk.parentColumns))
-            case ck: org.apache.spark.sql.catalyst.expressions.CheckConstraint =>
-              Some(TableDecl.Ck(ck.userProvidedName, ck.condition))
-            case other => unsupported += s"constraint $other"; None
+      case s: SetTableProperties => table(s.table).map(t => command("SET TBLPROPERTIES", t)(st =>
+        s.properties.map { case (k, v) => propertySetter("SET TBLPROPERTIES", t, k, v) }
+          .foreach(_(st))))
+      case s: UnsetTableProperties => table(s.table).map(t => command("UNSET TBLPROPERTIES", t) { st =>
+        s.propertyKeys.foreach(refuseInternal("UNSET TBLPROPERTIES", t, _))
+        st.setMeta(t, st.meta(t).copy(properties = st.meta(t).properties -- s.propertyKeys))
+      })
+      // SHOW TBLPROPERTIES [('key')]: the metadata sidecar as rows, internal
+      // keys included — the sidecar IS the table's configuration, and
+      // hiding it would make debugging blind
+      case s: ShowTableProperties => table(s.table).map(t =>
+        StoreCommand("SHOW TBLPROPERTIES", t, (_, st) => {
+          val all = st.meta(t).properties
+          s.propertyKey match {
+            case Some(k) => Seq(Row(k, all.getOrElse(k, s"Table $t does not have property: $k")))
+            case None => all.toSeq.sortBy(_._1).map { case (k, v) => Row(k, v) }
           }
-          (u.properties, u.comment, cs)
-        case _ => (Map.empty[String, String], None, Seq.empty[TableDecl])
-      }
-      GraftCreateTableCommand(parts.mkString("."), decls, orReplace, orCreate,
-        ignoreIfExists, partCols, props, comment, inlineConstraints = constraints,
-        unsupported.toSeq, original)
-    }
-}
+        }, output = Seq(attr("key", StringType), attr("value", StringType))))
+      case s: ShowCreateTable => table(s.child).map(t =>
+        StoreCommand("SHOW CREATE TABLE", t, (_, st) => Seq(Row(showCreate(st, t))),
+          output = Seq(attr("createtab_stmt", StringType))))
+      // SHOW PARTITIONS: one Hive-style `col=value` row per distinct
+      // partition tuple, from manifest stats (no data scan)
+      case s: ShowPartitions if s.pattern.isEmpty => table(s.table).map(t =>
+        StoreCommand("SHOW PARTITIONS", t, (_, st) => st.partitionValues(t).map(Row(_)),
+          output = Seq(attr("partition", StringType))))
 
-/** One parsed column declaration of a column-defined CREATE TABLE. */
-final case class ColDecl(field: StructField, notNull: Boolean,
-    comment: Option[String], defaultSql: Option[String],
-    genExpr: Option[String], identity: Option[(Long, Long)])
-
-/** Inline table-level constraint declarations. */
-sealed trait TableDecl
-object TableDecl {
-  final case class Pk(cols: Seq[String]) extends TableDecl
-  final case class Fk(cname: String, cols: Seq[String], refTable: String,
-      refCols: Seq[String]) extends TableDecl
-  final case class Ck(cname: String, condition: String) extends TableDecl
-}
-
-/** Eagerly-executed column-defined `CREATE [OR REPLACE] TABLE` against a
-  * store namespace; any other target re-runs the untouched original
-  * statement (the CTAS fallback contract). */
-final case class GraftCreateTableCommand(
-    table: String,
-    decls: Seq[ColDecl],
-    orReplace: Boolean,
-    orCreate: Boolean,
-    ignoreIfExists: Boolean,
-    partitionCols: Seq[String],
-    properties: Map[String, String],
-    comment: Option[String],
-    inlineConstraints: Seq[TableDecl],
-    unsupportedClauses: Seq[String],
-    original: LogicalPlan) extends LeafRunnableCommand {
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val db = table.split('.').head
-    TableStore.resolveDb(spark, db) match {
-      case None =>
-        GraftShims.ofRows(spark, original).collect()
-        Seq.empty
-      case Some(store) =>
-        if (unsupportedClauses.nonEmpty) throw new UnsupportedOperationException(
-          s"CREATE TABLE $table: the snapshot store cannot honor " +
-            unsupportedClauses.mkString(", "))
-        if (!orReplace && store.exists(table)) {
-          if (ignoreIfExists) return Seq.empty
-          throw new IllegalStateException(s"CREATE TABLE $table: table already exists")
-        }
-        if (orReplace && !orCreate && !store.exists(table))
-          throw new IllegalArgumentException(s"REPLACE TABLE $table: table not found")
-        store.createOrReplace(table,
-          store.emptyFrame(StructType(decls.map(_.field))),
-          partitionBy = partitionCols)
-        if (properties.nonEmpty || comment.isDefined)
-          store.setMeta(table, graft.tables.TableMeta(
-            comment = comment, properties = properties))
-        decls.foreach { d =>
-          if (d.notNull) store.setNotNull(table, d.field.name)
-          d.comment.foreach(store.setColumnComment(table, d.field.name, _))
-          d.defaultSql.foreach(store.setColumnDefault(table, d.field.name, _))
-          d.genExpr.foreach(store.setGeneratedColumn(table, d.field.name, _))
-          d.identity.foreach { case (start, step) =>
-            store.setIdentity(table, d.field.name, start, step) }
-        }
-        inlineConstraints.foreach {
-          case TableDecl.Pk(cols) => store.setPrimaryKey(table, cols)
-          case TableDecl.Fk(cn, cols, ref, refCols) =>
-            store.setForeignKey(table, cn, cols, ref, refCols)
-          case TableDecl.Ck(cn, cond) => store.addCheckConstraint(table, cn, cond)
-        }
-        Seq.empty
-    }
-  }
-}
-
-/** Delegating parser that (a) recognizes the maintenance statements Spark
-  * has no grammar for — `DESCRIBE HISTORY t`, `OPTIMIZE t [ZORDER BY
-  * (c, …)]`, `VACUUM t` (Delta's surface) — and (b) lowers CTAS / RTAS
-  * statements onto [[GraftCtasCommand]] (see [[SqlDml.captureCtas]]);
-  * everything else passes through untouched. */
-class GraftSqlParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInterface)
-  extends org.apache.spark.sql.catalyst.parser.ParserInterface {
-
-  private val HistoryRe =
-    """(?is)^\s*DESC(?:RIBE)?\s+HISTORY\s+([\w.]+)\s*;?\s*$""".r
-  private val DetailRe =
-    """(?is)^\s*DESC(?:RIBE)?\s+DETAIL\s+([\w.]+)\s*;?\s*$""".r
-  private val OptimizeRe =
-    """(?is)^\s*OPTIMIZE\s+([\w.]+)(?:\s+WHERE\s+(.+?))?(?:\s+ZORDER\s+BY\s*\(?\s*([\w.\s,]+?)\s*\)?)?\s*;?\s*$""".r
-  private val VacuumRe =
-    """(?is)^\s*VACUUM\s+([\w.]+)(?:\s+RETAIN\s+(\d+)\s+HOURS)?\s*;?\s*$""".r
-  private val RestoreRe =
-    """(?is)^\s*RESTORE\s+(?:TABLE\s+)?([\w.]+)\s+TO\s+VERSION\s+AS\s+OF\s+(\d+)\s*;?\s*$""".r
-  // Databricks' bloom-index DDL, simplified: one global OPTIONS clause
-  // (numItems sizes the per-file filter) instead of per-column options.
-  private val CreateBloomRe =
-    """(?is)^\s*CREATE\s+BLOOMFILTER\s+INDEX\s+ON\s+(?:TABLE\s+)?([\w.]+)\s+FOR\s+COLUMNS\s*\(\s*([\w\s,]+?)\s*\)(?:\s+OPTIONS\s*\(\s*['`"]?numItems['`"]?\s*=\s*(\d+)\s*\))?\s*;?\s*$""".r
-  private val DropBloomRe =
-    """(?is)^\s*DROP\s+BLOOMFILTER\s+INDEX\s+ON\s+(?:TABLE\s+)?([\w.]+)\s*;?\s*$""".r
-  private val CreateMvRe =
-    """(?is)^\s*CREATE\s+MATERIALIZED\s+VIEW\s+([\w.]+)\s+AS\s+(.+?)\s*;?\s*$""".r
-  private val RefreshMvRe =
-    """(?is)^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+([\w.]+)\s*;?\s*$""".r
-  // Databricks' idempotent ingestion statement, core surface: source path,
-  // FILEFORMAT, optional glob PATTERN, optional force copy-option.
-  private val CopyIntoRe =
-    """(?is)^\s*COPY\s+INTO\s+([\w.]+)\s+FROM\s+'([^']+)'\s+FILEFORMAT\s*=\s*(\w+)(?:\s+PATTERN\s*=\s*'([^']+)')?(?:\s+COPY_OPTIONS\s*\(\s*'force'\s*=\s*'(true|false)'\s*\))?\s*;?\s*$""".r
-  // DROP TABLE must be claimed at PARSE time: the analyzer resolves the
-  // identifier against the session catalog before extension rules fire
-  // (unlike DML on an unresolvable relation). The command falls back to
-  // the stock plan at run time when the target is not a store table.
-  private val DropTableRe =
-    """(?is)^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*$""".r
-
-  override def parsePlan(sqlText: String): LogicalPlan = sqlText match {
-    case HistoryRe(t) => GraftDescribeHistoryCommand(t)
-    case DetailRe(t) => GraftDescribeDetailCommand(t)
-    case OptimizeRe(t, w, z) => GraftOptimizeCommand(t,
-      Option(z).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil),
-      Option(w).map(_.trim).filter(_.nonEmpty))
-    case VacuumRe(t, hours) =>
-      GraftVacuumCommand(t, Option(hours).map(_.toLong * 3600 * 1000).getOrElse(0L))
-    case RestoreRe(t, v) => GraftRestoreCommand(t, v.toInt)
-    case CreateBloomRe(t, cols, ndv) => GraftCreateBloomIndexCommand(t,
-      cols.split(',').map(_.trim).filter(_.nonEmpty).toSeq,
-      Option(ndv).map(_.toLong))
-    case DropBloomRe(t) => GraftDropBloomIndexCommand(t)
-    case CopyIntoRe(t, from, fmt, pat, force) => GraftCopyIntoCommand(t, from,
-      fmt.toLowerCase, Option(pat), Option(force).exists(_.equalsIgnoreCase("true")))
-    case CreateMvRe(t, query) => GraftCreateMvCommand(t, query,
-      delegate.parsePlan(query))
-    case RefreshMvRe(t) => GraftRefreshMvCommand(t)
-    case DropTableRe(ifE, t) if t.contains(".") =>
-      GraftDropTableCommand(t, ifE != null, delegate.parsePlan(sqlText))
-    case _ => delegate.parsePlan(sqlText) match {
-      case c: CreateTableAsSelect =>
-        SqlDml.captureCtas(c.name, c.query, orReplace = false, orCreate = true,
-          c.ignoreIfExists, c.partitioning, c.tableSpec, c).getOrElse(c)
-      case r: ReplaceTableAsSelect =>
-        SqlDml.captureCtas(r.name, r.query, orReplace = true, r.orCreate,
-          ignoreIfExists = false, r.partitioning, r.tableSpec, r).getOrElse(r)
-      case ct: CreateTable =>
-        SqlDml.captureCreateTable(ct.name, ct.columns, orReplace = false,
-          orCreate = true, ct.ignoreIfExists, ct.partitioning, ct.tableSpec, ct)
-          .getOrElse(ct)
-      case rt: ReplaceTable =>
-        SqlDml.captureCreateTable(rt.name, rt.columns, orReplace = true,
-          rt.orCreate, ignoreIfExists = false, rt.partitioning, rt.tableSpec, rt)
-          .getOrElse(rt)
-      case other => other
+      case tt: RelationTimeTravel => timeTravel(tt, spark)
+      case u: UnresolvedRelation => relation(u, spark)
+      case _ => None
     }
   }
 
-  override def parseExpression(s: String) = delegate.parseExpression(s)
-  override def parseTableIdentifier(s: String) = delegate.parseTableIdentifier(s)
-  override def parseFunctionIdentifier(s: String) = delegate.parseFunctionIdentifier(s)
-  override def parseMultipartIdentifier(s: String) = delegate.parseMultipartIdentifier(s)
-  override def parseQuery(s: String) = delegate.parseQuery(s)
-  override def parseRoutineParam(s: String) = delegate.parseRoutineParam(s)
-  override def parseTableSchema(s: String) = delegate.parseTableSchema(s)
-  override def parseDataType(s: String) = delegate.parseDataType(s)
-}
+  /** MERGE INTO: the source resolves against the executing session (temp
+    * views included) and star clauses expand against the live target
+    * schema at run time; then `TableStore.merge` → [[MergeInto]]. */
+  private def merge(table: String, tQuals: Seq[Seq[String]], m: MergeIntoTable): StoreCommand = {
+    val sQuals = sourceQuals(m.sourceTable)
+    def cv(e: Expression): Column = GraftShims.column(requalify(e, tQuals, sQuals))
 
-/** Analyzer rule: lower parsed SQL DML onto TableStore operators. Fires
-  * only when the session has an attached store and the target table exists
-  * in it; every other statement is left untouched for Spark to handle. */
-class GraftSqlDml(spark: SparkSession) extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.resolveOperatorsDown {
-      case m: MergeIntoTable => SqlDml.lowerMerge(m, spark).getOrElse(m)
-      case u: UpdateTable => SqlDml.lowerUpdate(u, spark).getOrElse(u)
-      case d: DeleteFromTable => SqlDml.lowerDelete(d, spark).getOrElse(d)
-      case i: InsertIntoStatement => SqlDml.lowerInsert(i, spark).getOrElse(i)
-      case a: AddColumns => SqlDml.lowerAddColumns(a, spark).getOrElse(a)
-      case a: AlterColumns => SqlDml.lowerAlterColumns(a, spark).getOrElse(a)
-      case s: SetTableProperties => SqlDml.lowerSetTblProps(s, spark).getOrElse(s)
-      case s: UnsetTableProperties => SqlDml.lowerUnsetTblProps(s, spark).getOrElse(s)
-      case s: ShowTableProperties => SqlDml.lowerShowTblProps(s, spark).getOrElse(s)
-      case s: ShowCreateTable => SqlDml.lowerShowCreate(s, spark).getOrElse(s)
-      case s: ShowPartitions => SqlDml.lowerShowPartitions(s, spark).getOrElse(s)
-      case r: org.apache.spark.sql.catalyst.plans.logical.RenameColumn =>
-        SqlDml.lowerRenameColumn(r, spark).getOrElse(r)
-      case d: org.apache.spark.sql.catalyst.plans.logical.DropColumns =>
-        SqlDml.lowerDropColumns(d, spark).getOrElse(d)
-      case c: AddCheckConstraint => SqlDml.lowerAddConstraint(c, spark).getOrElse(c)
-      case a: org.apache.spark.sql.catalyst.plans.logical.AddConstraint =>
-        SqlDml.lowerAddFk(a, spark).getOrElse(a)
-      case d: DropConstraint => SqlDml.lowerDropConstraint(d, spark).getOrElse(d)
-      case tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel =>
-        SqlDml.lowerTimeTravel(tt, spark).getOrElse(tt)
-      case u: UnresolvedRelation =>
-        SqlDml.lowerRelation(u, spark).getOrElse(u)
+    val (keyEqs, extras) = conjuncts(requalify(m.mergeCondition, tQuals, sQuals)).partition {
+      case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute)
+        if a.nameParts.length == 2 && b.nameParts.length == 2 &&
+          a.nameParts.last == b.nameParts.last =>
+        Set(a.nameParts.head, b.nameParts.head) == Set("t", "s")
+      case _ => false
     }
-}
+    if (keyEqs.isEmpty) throw new UnsupportedOperationException(
+      s"MERGE INTO $table: ON must contain at least one target.key = source.key equality")
+    val keys = keyEqs.map { case EqualTo(a: UnresolvedAttribute, _) => a.nameParts.last }
+    val extraOn = extras.reduceOption(And.apply).map(GraftShims.column)
 
-/** Eagerly-executed MERGE: resolves the source subquery against the live
-  * session (temp views included), expands star clauses against the target
-  * schema, and hands off to `TableStore.merge` → [[MergeInto]]. */
-final case class GraftMergeCommand(
-    table: String,
-    sourcePlan: LogicalPlan,
-    keys: Seq[String],
-    extraOn: Option[Column],
-    matched: Seq[SqlDml.SqlAction],
-    notMatched: Seq[SqlDml.SqlAction],
-    bySource: Seq[SqlDml.SqlAction],
-    schemaEvolution: Boolean = false) extends LeafRunnableCommand {
-
-  import SqlDml._
-
-  override def innerChildren: Seq[QueryPlan[_]] = Seq(sourcePlan)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for MERGE INTO"))
-    val source = GraftShims.ofRows(spark, sourcePlan)
-    // WITH SCHEMA EVOLUTION: star clauses expand over the widened column
-    // set (target + new source columns), matching the store's widening.
-    // Source↔target column matching uses the session's resolver (Spark SQL
-    // is case-insensitive unless spark.sql.caseSensitive): an exact
-    // `contains` would silently skip a source column differing only in
-    // case — UPDATE SET * would keep the stale value and INSERT * write
-    // NULL instead of assigning.
-    val resolves: (String, String) => Boolean =
-      if (spark.conf.get("spark.sql.caseSensitive", "false").toBoolean) _ == _
-      else _.equalsIgnoreCase(_)
-    val baseCols = store.read(table).columns.toSeq
-    val targetCols = baseCols ++
-      (if (schemaEvolution) source.columns.toSeq.filterNot(sc => baseCols.exists(resolves(sc, _)))
-       else Nil)
-    // Delta star semantics: only columns the source actually carries are
-    // assigned; UPDATE keeps the target value for the rest, INSERT NULLs
-    def star: Map[String, Column] =
-      targetCols.flatMap(c =>
-        source.columns.find(resolves(c, _)).map(sc => c -> col(s"s.$sc"))).toMap
-
-    val m = matched.map {
-      case SqlUpdate(c, set) => MergeInto.MatchedUpdate(c, set)
-      case SqlUpdateStar(c) => MergeInto.MatchedUpdate(c, star)
-      case SqlDelete(c) => MergeInto.MatchedDelete(c)
+    // each clause as a function of the star assignments (`UPDATE SET *` /
+    // `INSERT *`), which only exist once the live schema is read
+    type Star = Map[String, Column]
+    def cond(a: MergeAction) = a.condition.map(cv)
+    def set(as: Seq[Assignment]): Star = as.map { case Assignment(k, v) => assignKey(k) -> cv(v) }.toMap
+    def fixed[A](clause: A): Star => A = _ => clause
+    val matched: Seq[Star => MergeInto.MatchedAction] = m.matchedActions.map {
+      case a: UpdateAction => fixed(MergeInto.MatchedUpdate(cond(a), set(a.assignments)))
+      case a: UpdateStarAction => val c = cond(a); MergeInto.MatchedUpdate(c, _)
+      case a: DeleteAction => fixed(MergeInto.MatchedDelete(cond(a)))
       case a => throw new UnsupportedOperationException(s"WHEN MATCHED does not allow $a")
     }
-    val nm = notMatched.map {
-      case SqlInsert(c, values) => MergeInto.NotMatchedInsert(c, values)
-      case SqlInsertStar(c) => MergeInto.NotMatchedInsert(c, star)
+    val notMatched: Seq[Star => MergeInto.NotMatchedInsert] = m.notMatchedActions.map {
+      case a: InsertAction => fixed(MergeInto.NotMatchedInsert(cond(a), set(a.assignments)))
+      case a: InsertStarAction => val c = cond(a); MergeInto.NotMatchedInsert(c, _)
       case a => throw new UnsupportedOperationException(s"WHEN NOT MATCHED does not allow $a")
     }
-    val bs = bySource.map {
-      case SqlUpdate(c, set) => MergeInto.BySourceUpdate(c, set)
-      case SqlDelete(c) => MergeInto.BySourceDelete(c)
+    val bySource: Seq[MergeInto.BySourceAction] = m.notMatchedBySourceActions.map {
+      case a: UpdateAction => MergeInto.BySourceUpdate(cond(a), set(a.assignments))
+      case a: DeleteAction => MergeInto.BySourceDelete(cond(a))
       case a => throw new UnsupportedOperationException(s"WHEN NOT MATCHED BY SOURCE does not allow $a")
     }
-    store.merge(table, source, keys, extraOn, m, nm, bs, schemaEvolution)
-    Seq.empty
+    val evolve = m.withSchemaEvolution
+
+    StoreCommand("MERGE INTO", table, (spark, store) => {
+      val source = GraftShims.ofRows(spark, m.sourceTable)
+      // source↔target column matching uses the session's resolver: an exact
+      // `contains` would silently skip a source column differing only in
+      // case — UPDATE SET * would keep the stale value and INSERT * write
+      // NULL instead of assigning. WITH SCHEMA EVOLUTION: star clauses
+      // expand over the widened column set (target + new source columns),
+      // matching the store's widening.
+      val resolves = resolver(spark)
+      val baseCols = store.read(table).columns.toSeq
+      val targetCols = baseCols ++
+        (if (evolve) source.columns.toSeq.filterNot(sc => baseCols.exists(resolves(sc, _)))
+         else Nil)
+      // Delta star semantics: only columns the source actually carries are
+      // assigned; UPDATE keeps the target value for the rest, INSERT NULLs
+      val star = targetCols.flatMap(c =>
+        source.columns.find(resolves(c, _)).map(sc => c -> col(s"s.$sc"))).toMap
+      store.merge(table, source, keys, extraOn, matched.map(_(star)), notMatched.map(_(star)),
+        bySource, evolve)
+      Nil
+    }, shown = Seq(m.sourceTable))
   }
-}
 
-/** Eagerly-executed `CREATE [OR REPLACE] TABLE db.t AS SELECT …`: targets
-  * inside an attached store's namespace snapshot-write (the reference's
-  * dim_calendar CTAS shape, 01_Init.py:180); anything else re-submits the
-  * captured original plan, preserving stock Spark behavior. */
-final case class GraftCtasCommand(
-    table: String,
-    queryPlan: LogicalPlan,
-    orReplace: Boolean,
-    orCreate: Boolean,
-    ignoreIfExists: Boolean,
-    partitionCols: Seq[String],
-    properties: Map[String, String],
-    comment: Option[String],
-    unsupportedClauses: Seq[String],
-    original: LogicalPlan) extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[QueryPlan[_]] = Seq(queryPlan)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val db = table.split('.').head
-    TableStore.resolveDb(spark, db) match {
-      case None =>
-        // not a store namespace — run the untouched original statement
-        GraftShims.ofRows(spark, original).collect()
-        Seq.empty
-      case Some(store) =>
-        if (unsupportedClauses.nonEmpty) throw new UnsupportedOperationException(
-          s"CREATE TABLE $table: the snapshot store cannot honor " +
-            unsupportedClauses.mkString(", "))
-        if (!orReplace && store.exists(table)) {
-          if (ignoreIfExists) return Seq.empty
-          throw new IllegalStateException(s"CREATE TABLE $table: table already exists")
-        }
-        if (orReplace && !orCreate && !store.exists(table))
-          throw new IllegalArgumentException(s"REPLACE TABLE $table: table not found")
-        store.createOrReplace(table, GraftShims.ofRows(spark, queryPlan),
-          partitionBy = partitionCols)
-        if (properties.nonEmpty || comment.isDefined)
-          store.setMeta(table, graft.tables.TableMeta(
-            comment = comment, properties = properties))
-        Seq.empty
-    }
-  }
-}
-
-/** Eagerly-executed `INSERT INTO / INSERT OVERWRITE db.table` (the
-  * reference's seed-row statements, 01_Init.py:265-321): resolves the
-  * source query (VALUES lists included) against the live session, aligns
-  * columns positionally or by the explicit column list / BY NAME, casts to
-  * the target schema, and snapshots append-or-overwrite.
-  *
-  * A `PARTITION (…)` clause follows Spark/Hive semantics: static entries
-  * (`p = v`) are filled as literals and must NOT appear in the query
-  * output; dynamic entries (`p`) are supplied by the query's TRAILING
-  * columns, in clause order. `INSERT OVERWRITE … PARTITION` replaces only
-  * the named region — static specs lower to
-  * [[graft.tables.TableStore.overwriteWhere]], dynamic specs to
-  * [[graft.tables.TableStore.overwritePartitions]] — so every other
-  * partition's files carry over untouched (the selective-overwrite path a
-  * daily reload needs at 100 TB, vs the full snapshot an unqualified
-  * INSERT OVERWRITE takes). */
-final case class GraftInsertCommand(
-    table: String,
-    queryPlan: LogicalPlan,
-    userCols: Seq[String],
-    overwrite: Boolean,
-    byName: Boolean,
-    partitionSpec: Map[String, Option[String]] = Map.empty)
-  extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[QueryPlan[_]] = Seq(queryPlan)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for INSERT INTO"))
+  /** INSERT INTO / INSERT OVERWRITE (the reference's seed-row statements,
+    * 01_Init.py:265-321): the source query (VALUES lists included) resolves
+    * against the executing session; columns align positionally or by the
+    * explicit column list / BY NAME and cast to the target schema.
+    *
+    * A `PARTITION (…)` clause follows Spark/Hive semantics: static entries
+    * (`p = v`) are filled as literals and must NOT appear in the query
+    * output; dynamic entries (`p`) are supplied by the query's TRAILING
+    * columns, in clause order. `INSERT OVERWRITE … PARTITION` replaces only
+    * the named region — static specs lower to
+    * [[graft.tables.TableStore.overwriteWhere]], dynamic specs to
+    * [[graft.tables.TableStore.overwritePartitions]] — so every other
+    * partition's files carry over untouched (the selective-overwrite path a
+    * daily reload needs at 100 TB, vs the full snapshot an unqualified
+    * INSERT OVERWRITE takes). */
+  private def insert(spark: SparkSession, store: TableStore, table: String,
+      i: InsertIntoStatement): Unit = {
     val target = store.read(table)
-    val data = GraftShims.ofRows(spark, queryPlan)
+    val data = GraftShims.ofRows(spark, i.query)
+    val resolves = resolver(spark)
     // reject column names absent from the target — silently dropping a
     // typo'd column (and NULL-filling the real one) loses data; ANSI
     // INSERT raises an unresolved-column error here
-    val resolves: (String, String) => Boolean =
-      if (spark.conf.get("spark.sql.caseSensitive", "false").toBoolean) _ == _
-      else _.equalsIgnoreCase(_)
     def requireKnown(cols: Seq[String]): Unit = {
       val unknown = cols.filterNot(c => target.columns.exists(resolves(c, _)))
       require(unknown.isEmpty,
@@ -843,6 +386,7 @@ final case class GraftInsertCommand(
     }
     // PARTITION clause: every key must be a declared partition column of
     // the store table (Spark raises the same analysis error)
+    val partitionSpec = i.partitionSpec
     val statics: Seq[(String, String)] =
       partitionSpec.toSeq.collect { case (k, Some(v)) => (k, v) }
     val dynamics: Seq[String] = partitionSpec.toSeq.collect { case (k, None) => k }
@@ -855,6 +399,7 @@ final case class GraftInsertCommand(
           s"is not a partition column (partitioned by ${pcols.mkString(", ")})")
     }
     def isStatic(c: String) = statics.exists(kv => resolves(kv._1, c))
+    val userCols = i.userSpecifiedCols
     val named =
       if (userCols.nonEmpty) {
         require(userCols.length == data.columns.length,
@@ -863,7 +408,7 @@ final case class GraftInsertCommand(
         require(!userCols.exists(isStatic),
           s"INSERT INTO $table: a static PARTITION column may not also be listed")
         data.toDF(userCols: _*)
-      } else if (byName) {
+      } else if (i.byName) {
         requireKnown(data.columns.toSeq)
         require(!data.columns.exists(isStatic),
           s"INSERT INTO $table: a static PARTITION column may not also be in the query")
@@ -913,7 +458,7 @@ final case class GraftInsertCommand(
     // over by the manifest (a 1-row insert into a 100 TB table costs one
     // file). Only INSERT OVERWRITE snapshots, and a PARTITION-qualified
     // overwrite replaces just the named region.
-    if (!overwrite) store.append(table, aligned)
+    if (!i.overwrite) store.append(table, aligned)
     else if (partitionSpec.isEmpty) store.createOrReplace(table, aligned)
     else if (dynamics.isEmpty) {
       val cond = statics.map { case (k, v) =>
@@ -922,203 +467,15 @@ final case class GraftInsertCommand(
       }.reduce(_ && _)
       store.overwriteWhere(table, aligned, cond, op = "insert_overwrite_partition")
     } else store.overwritePartitions(table, aligned, op = "insert_overwrite_partition")
-    Seq.empty
   }
-}
 
-/** `DESCRIBE HISTORY db.table`: one row per retained commit, newest
-  * first — version, commit timestamp, operation, file count (the Delta
-  * DESCRIBE HISTORY shape over the manifest store). */
-final case class GraftDescribeHistoryCommand(table: String) extends LeafRunnableCommand {
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types._
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] = Seq(
-    AttributeReference("version", IntegerType, nullable = false)(),
-    AttributeReference("timestamp", TimestampType, nullable = false)(),
-    AttributeReference("operation", StringType, nullable = false)(),
-    AttributeReference("num_files", IntegerType, nullable = false)(),
-    AttributeReference("num_rows", LongType, nullable = true)(),
-    AttributeReference("files_added", IntegerType, nullable = false)(),
-    AttributeReference("files_removed", IntegerType, nullable = false)(),
-    AttributeReference("rows_added", LongType, nullable = true)(),
-    AttributeReference("rows_removed", LongType, nullable = true)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for DESCRIBE HISTORY"))
-    store.history(table).map { case (v, t, op, n, rows) =>
-      val (fa, fr, ra, rr) = store.operationMetrics(table, v)
-      Row(v, java.sql.Timestamp.from(t), op, n, if (rows < 0) null else rows,
-        fa, fr, if (ra < 0) null else ra, if (rr < 0) null else rr)
-    }
-  }
-}
-
-/** `DESCRIBE DETAIL db.table`: current-snapshot facts as (property,
-  * value) rows — driver-side metadata only. */
-final case class GraftDescribeDetailCommand(table: String) extends LeafRunnableCommand {
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types._
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] = Seq(
-    AttributeReference("property", StringType, nullable = false)(),
-    AttributeReference("value", StringType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for DESCRIBE DETAIL"))
-    store.detail(table).toSeq.sortBy(_._1).map { case (k, v) => Row(k, v) }
-  }
-}
-
-/** `OPTIMIZE db.table [ZORDER BY (c, …)]`: compaction (deletion vectors
-  * folded in, small files consolidated), optionally re-clustering rows
-  * along a Z-order curve; reports file counts before/after. */
-final case class GraftOptimizeCommand(table: String, zorderBy: Seq[String],
-    where: Option[String] = None)
-  extends LeafRunnableCommand {
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types._
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] = Seq(
-    AttributeReference("table", StringType, nullable = false)(),
-    AttributeReference("files_before", IntegerType, nullable = false)(),
-    AttributeReference("files_after", IntegerType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for OPTIMIZE"))
-    val before = store.history(table).headOption.map(_._4).getOrElse(0)
-    // ZORDER keeps the file count (clustering, not consolidation: the
-    // curve needs multiple files to give every column selective ranges);
-    // plain OPTIMIZE consolidates per partition; WHERE bounds the work to
-    // the predicate's candidate files — with ZORDER, the candidates are
-    // re-clustered INTO the persisted curve (incremental clustering)
-    (where, zorderBy) match {
-      case (Some(w), Nil) => store.compactWhere(table, org.apache.spark.sql.functions.expr(w))
-      case (Some(w), _) => store.zorderWhere(table, org.apache.spark.sql.functions.expr(w))
-      case (None, Nil) => store.compact(table)
-      case (None, _) => store.compact(table, targetFiles = math.max(1, before), zorderBy)
-    }
-    val after = store.history(table).headOption.map(_._4).getOrElse(0)
-    Seq(Row(table, before, after))
-  }
-}
-
-/** `RESTORE TABLE db.table TO VERSION AS OF n`: metadata-only re-point of
-  * a retained snapshot as the new current version (the restore itself
-  * becomes a history entry). */
-final case class GraftRestoreCommand(table: String, version: Int)
-  extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for RESTORE"))
-    require(store.versions(table).contains(version),
-      s"RESTORE $table: no retained version $version (have ${store.versions(table).mkString(", ")})")
-    store.restore(table, version)
-    Seq.empty
-  }
-}
-
-/** `VACUUM db.table`: drop data files unreferenced by the current
-  * manifest and retire non-current versions. */
-final case class GraftVacuumCommand(table: String, retainMs: Long = 0L)
-  extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for VACUUM"))
-    store.vacuum(table, retainMs = retainMs)
-    Seq.empty
-  }
-}
-
-/** `CREATE BLOOMFILTER INDEX ON TABLE t FOR COLUMNS(c, …) [OPTIONS
-  * (numItems = n)]` — declare parquet-native bloom filters for point-
-  * lookup file skipping (TableStore.setBloomFilterIndex). */
-final case class GraftCreateBloomIndexCommand(table: String, cols: Seq[String],
-    ndv: Option[Long]) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(
-        s"no attached TableStore holds $table for CREATE BLOOMFILTER INDEX"))
-    store.setBloomFilterIndex(table, cols, ndv.getOrElse(100000L))
-    Seq.empty
-  }
-}
-
-/** `ALTER TABLE db.t SET TBLPROPERTIES ('k'='v', …)` — typed engine knobs
-  * (dml_mode, target_file_rows, comment) route through their validating
-  * setters; reserved internal namespaces are refused (their own DDL owns
-  * them); anything else is a generic property, Delta-style. */
-final case class GraftSetTblPropsCommand(table: String,
-    props: Map[String, String]) extends LeafRunnableCommand {
-  private val Reserved = Seq("mv.", "bloom.", "fk.", "colmap.", "coldrop.",
-    "gencol.", "check.", "identity.")
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table"))
-    props.foreach { case (k, v) =>
-      Reserved.find(k.startsWith).foreach(ns => throw new IllegalArgumentException(
-        s"SET TBLPROPERTIES $table: '$k' is engine-internal ($ns*) — use its DDL " +
-          "(BLOOMFILTER INDEX / CONSTRAINT / GENERATED / MATERIALIZED VIEW statements)"))
-      k match {
-        case "dml_mode" => store.setDmlMode(table, v)
-        case "target_file_rows" => store.setTargetFileRows(table, v.toLong)
-        case "comment" =>
-          store.setMeta(table, store.meta(table).copy(comment = Some(v)))
-        case _ => store.setMeta(table, store.meta(table).copy(properties =
-          store.meta(table).properties + (k -> v)))
-      }
-    }
-    Seq.empty
-  }
-}
-
-/** `ALTER TABLE db.t UNSET TBLPROPERTIES ('k', …)`. */
-final case class GraftUnsetTblPropsCommand(table: String, keys: Seq[String])
-  extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table"))
-    store.setMeta(table, store.meta(table).copy(properties =
-      store.meta(table).properties -- keys))
-    Seq.empty
-  }
-}
-
-/** `SHOW TBLPROPERTIES db.t [('key')]` — the metadata sidecar as rows.
-  * Internal namespaces included deliberately: the sidecar IS the table's
-  * configuration, and hiding it would make DESCRIBE-style debugging
-  * blind. */
-final case class GraftShowTblPropsCommand(table: String, key: Option[String])
-  extends LeafRunnableCommand {
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types.StringType
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] = Seq(
-    AttributeReference("key", StringType, nullable = false)(),
-    AttributeReference("value", StringType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table"))
-    val all = store.meta(table).properties
-    key match {
-      case Some(k) => Seq(Row(k, all.getOrElse(k, s"Table $table does not have property: $k")))
-      case None => all.toSeq.sortBy(_._1).map { case (k, v) => Row(k, v) }
-    }
-  }
-}
-
-/** `SHOW CREATE TABLE db.t` — reconstruct executable DDL from the
-  * manifest schema, layout sidecar and metadata: columns with comments,
-  * partition/sort layout, PRIMARY KEY / FOREIGN KEY / CHECK constraints
-  * (the reference declares all three inline, 01_Init.py), table comment
-  * and the declarable property knobs. Internal representation namespaces
-  * (column mapping, identity counters, MV bookkeeping) are NOT emitted —
-  * they are state, not declaration. */
-final case class GraftShowCreateTableCommand(table: String)
-  extends LeafRunnableCommand {
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types.StringType
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] = Seq(
-    AttributeReference("createtab_stmt", StringType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table"))
+  /** SHOW CREATE TABLE: executable DDL from the manifest schema, layout
+    * sidecar and metadata — columns with GENERATED / NOT NULL / DEFAULT /
+    * COMMENT, PRIMARY KEY / FOREIGN KEY / CHECK constraints (the reference
+    * declares all three inline, 01_Init.py), partitioning, table comment
+    * and the declarable properties. Internal keys are state, not
+    * declaration, and are left out. */
+  private def showCreate(store: TableStore, table: String): String = {
     val m = store.meta(table)
     val schema = store.read(table).schema
     val notNull = store.notNullColumns(table).map(_.toLowerCase).toSet
@@ -1154,42 +511,236 @@ final case class GraftShowCreateTableCommand(table: String)
     val checks = store.checkConstraints(table).toSeq.sortBy(_._1).map {
       case (c, sql) => s"  CONSTRAINT $c CHECK ($sql)"
     }
-    val detail = store.detail(table)
-    val partitionBy = Option(detail("partition_columns")).filter(_.nonEmpty)
+    val partitionBy = Option(store.detail(table)("partition_columns")).filter(_.nonEmpty)
       .map(p => s"\nPARTITIONED BY ($p)").getOrElse("")
     val comment = m.comment
       .map(c => s"\nCOMMENT '${c.replace("'", "''")}'").getOrElse("")
-    val declarable = Seq("dml_mode", "target_file_rows", "bloom.cols", "bloom.ndv", "cdf")
-    val internalNs = Seq("colmap.", "coldrop.", "identity.", "gencol.", "check.",
-      "fk.", "mv.", "notnull.", "coldefault.")
-    val props = m.properties.filter { case (k, _) =>
-      declarable.contains(k) ||
-        (!internalNs.exists(k.startsWith) && k != "primary_key" &&
-          k != "stream_high_water" && k != "row_high_water")
-    }.toSeq.sortBy(_._1)
+    val props = m.properties.filter { case (k, _) => BloomKeys(k) || internalKey(k).isEmpty }
+      .toSeq.sortBy(_._1)
     val tblProps = if (props.isEmpty) "" else
       props.map { case (k, v) => s"'$k' = '$v'" }
         .mkString("\nTBLPROPERTIES (", ", ", ")")
     val body = (cols.toSeq ++ pk ++ fks ++ checks).mkString(",\n")
-    Seq(Row(s"CREATE TABLE $table (\n$body)\nUSING parquet$partitionBy$comment$tblProps"))
+    s"CREATE TABLE $table (\n$body)\nUSING parquet$partitionBy$comment$tblProps"
   }
-}
 
-/** `CREATE MATERIALIZED VIEW db.mv AS SELECT k…, agg… FROM db.src GROUP BY
-  * k…` — an incrementally-maintained aggregate view over a store table
-  * (TableStore.createMaterializedView). The defining SELECT must be a
-  * single-table GROUP BY whose aggregates are count(*) / count(col) /
-  * sum(col), each aliased — the self-maintainable shapes a change-feed
-  * refresh can keep exact. Anything else is rejected with the reason. */
-final case class GraftCreateMvCommand(view: String, queryText: String,
-    parsed: LogicalPlan) extends LeafRunnableCommand {
-  import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedStar}
-  import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
-  override def run(spark: SparkSession): Seq[Row] = {
+  // ---------------------------------------------------------- read plans
+
+  /** `SELECT … FROM db.t VERSION AS OF n` / `TIMESTAMP AS OF ts` over a
+    * store table resolves to the matching retained snapshot (Delta's
+    * time-travel surface; the store keeps every version until vacuum).
+    * Timestamps resolve against manifest commit times, interpreted UTC. */
+  private def timeTravel(tt: RelationTimeTravel, spark: SparkSession): Option[LogicalPlan] = {
+    def tsInstant(e: Expression): Option[java.time.Instant] = e match {
+      case Literal(v, t) => t match {
+        case StringType =>
+          scala.util.Try(java.time.LocalDateTime
+            .parse(v.toString.replace(' ', 'T'))
+            .toInstant(java.time.ZoneOffset.UTC)).toOption
+        case _: TimestampType =>
+          Some(java.time.Instant.EPOCH.plusNanos(v.asInstanceOf[Long] * 1000L))
+        case _ => None
+      }
+      case c: Cast => tsInstant(c.child)
+      case _ => None
+    }
+    (tt.relation match {
+      case u: UnresolvedRelation => Some(u.multipartIdentifier.mkString("."))
+      case _ => None
+    }).filter(_.contains("."))
+      .flatMap(name => TableStore.resolve(spark, name).map(name -> _))
+      .flatMap { case (name, store) =>
+        tt.version.map { v =>
+          val version = v.toString.toInt
+          require(store.versions(name).contains(version),
+            s"$name VERSION AS OF $version: no such retained version " +
+              s"(have ${store.versions(name).mkString(", ")})")
+          version
+        }.orElse(tt.timestamp.flatMap(tsInstant).map(store.versionAsOf(name, _)))
+          .map(v => GraftShims.analyzedPlan(store.readVersion(name, v)))
+      }
+  }
+
+  /** Plain `SELECT … FROM db.t` over a store table: resolve the relation
+    * to the store's read plan, so the SQL warehouse surface reads store
+    * tables BY NAME — no manual temp-view registration. Session-catalog
+    * tables and (temp) views always win: the lowering only fires when the
+    * catalog cannot resolve the identifier, so a store table can never
+    * shadow a catalog object. */
+  private def relation(u: UnresolvedRelation, spark: SparkSession): Option[LogicalPlan] = {
+    val name = u.multipartIdentifier.mkString(".")
+    // isStreaming: spark.readStream.table("db.t") must NOT be substituted
+    // with the batch read plan (it would surface later as a confusing
+    // "writeStream on a non-streaming Dataset") — streaming reads of store
+    // tables go through the graft-table DSv2 source instead
+    if (u.isStreaming || !name.contains(".") || u.multipartIdentifier.length > 2) None
+    else if (scala.util.Try(spark.catalog.tableExists(name)).getOrElse(false)) None
+    else TableStore.resolve(spark, name).map { st =>
+      SubqueryAlias(u.multipartIdentifier, GraftShims.analyzedPlan(st.read(name)))
+    }
+  }
+
+  private def strArg(e: Expression): Option[String] = e match {
+    case Literal(s: UTF8String, _) => Some(s.toString)
+    case _ => None
+  }
+
+  /** `SELECT … FROM table_changes('db.t', from[, to])` — Delta's CDF
+    * table-valued function over a store table's [[TableStore.changeFeed]],
+    * registered via `SparkSessionExtensions.injectTableFunction`. */
+  private[ext] def tableChangesPlan(args: Seq[Expression]): LogicalPlan = {
+    val spark = SparkSession.active
+    def intArg(e: Expression): Option[Int] = e match {
+      case Literal(v: Int, _) => Some(v)
+      case Literal(v: Long, _) => Some(v.toInt)
+      case _ => None
+    }
+    val parsed = args match {
+      case Seq(t, f, rest @ _*) if rest.size <= 1 =>
+        for {
+          table <- strArg(t)
+          st <- TableStore.resolve(spark, table)
+          from <- intArg(f)
+          to <- rest.headOption.map(intArg).getOrElse(st.version(table))
+        } yield (st, table, from, to)
+      case _ => None
+    }
+    val (st, table, from, to) = parsed.getOrElse(throw new IllegalArgumentException(
+      "table_changes('db.table', fromVersion[, toVersion]): the table must live in an " +
+        "attached TableStore and the versions must be integer literals"))
+    GraftShims.analyzedPlan(st.changeFeed(table, from, to))
+  }
+
+  /** `SELECT … FROM table_files('db.t')` — the current manifest as rows
+    * (file, rows, size_bytes, dv_count, stats map): the Iceberg-`.files`
+    * style inspection surface over [[TableStore.fileInventory]]. */
+  private[ext] def tableFilesPlan(args: Seq[Expression]): LogicalPlan = {
+    val spark = SparkSession.active
+    val parsed = args match {
+      case Seq(t) => strArg(t).flatMap(table => TableStore.resolve(spark, table).map(st => (st, table)))
+      case _ => None
+    }
+    val (st, table) = parsed.getOrElse(throw new IllegalArgumentException(
+      "table_files('db.table'): the table must live in an attached TableStore"))
+    GraftShims.analyzedPlan(st.fileInventory(table))
+  }
+
+  // ------------------------------------------- statements claimed at parse
+
+  /** CREATE [OR REPLACE] TABLE db.t, column-defined or AS SELECT, claimed
+    * at parse time: the analyzer converts (or rejects) these nodes for the
+    * session catalog before an injected resolution rule can see them. The
+    * command decides at run time: a target inside an attached store's
+    * namespace is created there (the reference's dim_calendar CTAS,
+    * 01_Init.py:180, and its column-defined model DDL), anything else
+    * re-runs the untouched original plan. */
+  private[ext] def captureCreate(plan: LogicalPlan): Option[LogicalPlan] = plan match {
+    case c: CreateTableAsSelect => create(c.name, Some(c.query), Nil, orReplace = false,
+      orCreate = true, c.ignoreIfExists, c.partitioning, c.tableSpec, c)
+    case r: ReplaceTableAsSelect => create(r.name, Some(r.query), Nil, orReplace = true,
+      r.orCreate, ignoreIfExists = false, r.partitioning, r.tableSpec, r)
+    case c: CreateTable => create(c.name, None, c.columns, orReplace = false,
+      orCreate = true, c.ignoreIfExists, c.partitioning, c.tableSpec, c)
+    case r: ReplaceTable => create(r.name, None, r.columns, orReplace = true,
+      r.orCreate, ignoreIfExists = false, r.partitioning, r.tableSpec, r)
+    case _ => None
+  }
+
+  /** The one create step. Every clause lowers onto the store feature that
+    * implements it — inline NOT NULL, DEFAULT, COMMENT, GENERATED ALWAYS
+    * AS (expr | IDENTITY), PRIMARY KEY / FOREIGN KEY / CHECK, PARTITIONED
+    * BY, TBLPROPERTIES — so the declared DDL and the enforced behavior are
+    * the same thing and SHOW CREATE TABLE round-trips it. A clause the
+    * store cannot honor is refused, never dropped: silently ignoring a
+    * user's partitioning would write an unpartitioned table with no
+    * warning. The TBLPROPERTIES bag is checked before any data is written,
+    * so a refused bag leaves no table and an unchanged one. */
+  private def create(name: LogicalPlan, query: Option[LogicalPlan], columns: Seq[ColumnDefinition],
+      orReplace: Boolean, orCreate: Boolean, ignoreIfExists: Boolean, partitioning: Seq[Transform],
+      tableSpec: TableSpecBase, original: LogicalPlan): Option[LogicalPlan] =
+    (name match {
+      case u: UnresolvedIdentifier if u.nameParts.length == 2 => Some(u.nameParts.mkString("."))
+      case _ => None
+    }).map { table =>
+      val unsupported = scala.collection.mutable.ArrayBuffer.empty[String]
+      val (identityT, otherT) = partitioning.partition(t =>
+        t.name == "identity" && t.references.length == 1)
+      val partCols = identityT.map(_.references()(0).fieldNames.mkString("."))
+      otherT.foreach(t => unsupported += s"partition transform $t")
+      columns.filter(_.identityColumnSpec.exists(_.isAllowExplicitInsert)).foreach(c =>
+        unsupported += s"${c.name} GENERATED BY DEFAULT AS IDENTITY (ALWAYS only)")
+      val (props, comment, constraints) = tableSpec match {
+        case u: UnresolvedTableSpec =>
+          u.provider.filterNot(_.equalsIgnoreCase("parquet"))
+            .foreach(p => unsupported += s"USING $p")
+          u.location.foreach(l => unsupported += s"LOCATION $l")
+          if (u.external) unsupported += "EXTERNAL"
+          u.serde.foreach(_ => unsupported += "row-format/serde clause")
+          val cs = u.constraints.flatMap {
+            case pk: PrimaryKeyConstraint => Some((st: TableStore) => st.setPrimaryKey(table, pk.columns))
+            case fk: ForeignKeyConstraint => Some((st: TableStore) => st.setForeignKey(table,
+              fk.userProvidedName, fk.childColumns, fk.parentTableId.mkString("."), fk.parentColumns))
+            case ck: CheckConstraint => Some((st: TableStore) =>
+              st.addCheckConstraint(table, ck.userProvidedName, ck.condition))
+            case other => unsupported += s"constraint $other"; None
+          }
+          (u.properties, u.comment, cs)
+        case _ => (Map.empty[String, String], None, Nil)
+      }
+      val unsupportedClauses = unsupported.toSeq
+
+      StoreCommand(if (orReplace) "REPLACE TABLE" else "CREATE TABLE", table, (spark, store) => {
+        if (unsupportedClauses.nonEmpty) throw new UnsupportedOperationException(
+          s"CREATE TABLE $table: the snapshot store cannot honor " +
+            unsupportedClauses.mkString(", "))
+        val exists = store.exists(table)
+        if (!orReplace && exists && !ignoreIfExists)
+          throw new IllegalStateException(s"CREATE TABLE $table: table already exists")
+        if (orReplace && !orCreate && !exists)
+          throw new IllegalArgumentException(s"REPLACE TABLE $table: table not found")
+        if (orReplace || !exists) {
+          val (bloom, knobs) = props.partition { case (k, _) => BloomKeys(k) }
+          val setters = knobs.map { case (k, v) => propertySetter("CREATE TABLE", table, k, v) }
+          require(bloom.isEmpty || bloom.contains("bloom.cols"),
+            s"CREATE TABLE $table: 'bloom.ndv' sizes the index 'bloom.cols' declares")
+          bloom.get("bloom.ndv").foreach(TableStore.checkKnob(table, "bloom.ndv", _))
+          val data = query.map(GraftShims.ofRows(spark, _)).getOrElse(store.emptyFrame(
+            StructType(columns.map(c => StructField(c.name, c.dataType, c.nullable)))))
+          val bloomCols = bloom.get("bloom.cols").map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
+          bloomCols.foreach(_.foreach(MergeInto.resolveColumn(data.columns.toSeq, _,
+            spark.conf.get("spark.sql.caseSensitive", "false").toBoolean,
+            s"$table bloom index")))
+          store.createOrReplace(table, data, partitionBy = partCols)
+          if (props.nonEmpty || comment.isDefined)
+            store.setMeta(table, TableMeta(comment = comment))
+          setters.foreach(_(store))
+          bloomCols.foreach(store.setBloomFilterIndex(table, _,
+            bloom.get("bloom.ndv").map(_.toLong).getOrElse(100000L)))
+          columns.foreach { c =>
+            if (!c.nullable) store.setNotNull(table, c.name)
+            c.comment.foreach(store.setColumnComment(table, c.name, _))
+            c.defaultValue.foreach(d => store.setColumnDefault(table, c.name, d.originalSQL))
+            c.generationExpression.foreach(store.setGeneratedColumn(table, c.name, _))
+            c.identityColumnSpec.foreach(s =>
+              store.setIdentity(table, c.name, s.getStart, s.getStep))
+          }
+          constraints.foreach(_(store))
+        }
+        Nil
+      }, shown = query.toSeq, inNamespace = true, orElse = sparkPlan(original))
+    }
+
+  /** CREATE MATERIALIZED VIEW db.mv AS SELECT k…, agg… FROM db.src GROUP BY
+    * k… — an incrementally-maintained aggregate view over a store table
+    * (TableStore.createMaterializedView). The defining SELECT must be a
+    * single-table GROUP BY whose aggregates are count(*) / count(col) /
+    * sum(col), each aliased — the self-maintainable shapes a change-feed
+    * refresh can keep exact. Anything else is rejected with the reason. */
+  private[ext] def createMaterializedView(view: String, parsed: LogicalPlan): StoreCommand = {
     def bad(why: String) = throw new IllegalArgumentException(
       s"CREATE MATERIALIZED VIEW $view: $why (the defining query must be " +
         "SELECT keys…, count/sum aggregates… FROM one store table GROUP BY keys…)")
-    val (groupExprs, aggExprs, sourceTable) = parsed match {
+    val (groupExprs, aggExprs, source) = parsed match {
       case Aggregate(g, a, u: UnresolvedRelation, _) => (g, a, u.multipartIdentifier.mkString("."))
       case _ => bad("not a single-table GROUP BY aggregation")
     }
@@ -1214,202 +765,174 @@ final case class GraftCreateMvCommand(view: String, queryText: String,
         Some((out, fn, arg))
       case e => bad(s"projection $e must be a grouping key or an aliased aggregate")
     }
-    val store = TableStore.resolve(spark, sourceTable).getOrElse(
-      bad(s"source $sourceTable is not a table in the attached store"))
-    store.createMaterializedView(view, sourceTable, keys, aggs)
-    Seq.empty
+    command("CREATE MATERIALIZED VIEW", source)(_.createMaterializedView(view, source, keys, aggs))
+      .copy(orElse = Some(_ => bad(s"source $source is not a table in the attached store")))
   }
 }
 
-/** `REFRESH MATERIALIZED VIEW db.mv` — apply the source's change feed
-  * since the last refresh as signed per-group deltas (one small MERGE);
-  * full pinned rebuild only when the feed cannot supply the delta. */
-final case class GraftRefreshMvCommand(view: String) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, view).getOrElse(
-      throw new IllegalStateException(
-        s"no attached TableStore holds $view for REFRESH MATERIALIZED VIEW"))
-    store.refreshMaterializedView(view)
-    Seq.empty
-  }
-}
+/** The one command node for SQL on store tables. At run time it resolves
+  * the attached store holding `table` — for a CREATE (`inNamespace`), the
+  * store owning the table's namespace — and runs `body` on it with the
+  * executing session; it is the one place that reports a statement whose
+  * table no store holds. A statement claimed before its target could be
+  * checked runs `orElse` instead (Spark's own plan for CREATE and DROP
+  * TABLE). Plan strings name the statement and the table; `shown` are the
+  * plans the body runs (a MERGE source, an INSERT or CTAS query), which
+  * EXPLAIN prints beneath it. */
+final case class StoreCommand(
+    statement: String,
+    table: String,
+    body: (SparkSession, TableStore) => Seq[Row],
+    override val output: Seq[Attribute] = Nil,
+    shown: Seq[LogicalPlan] = Nil,
+    inNamespace: Boolean = false,
+    orElse: Option[SparkSession => Seq[Row]] = None) extends LeafRunnableCommand {
 
-/** `COPY INTO db.t FROM '<path>' FILEFORMAT = PARQUET|CSV|JSON [PATTERN =
-  * '<glob>'] [COPY_OPTIONS ('force' = 'true')]` — idempotent file-tracked
-  * ingestion (TableStore.copyInto); reports what this run loaded. */
-final case class GraftCopyIntoCommand(table: String, from: String,
-    format: String, pattern: Option[String], force: Boolean)
-  extends LeafRunnableCommand {
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types._
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] = Seq(
-    AttributeReference("num_loaded_files", LongType, nullable = false)(),
-    AttributeReference("num_inserted_rows", LongType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for COPY INTO"))
-    val (files, rows) = store.copyInto(table, from, format, pattern, force)
-    Seq(Row(files, rows))
-  }
-}
+  override def innerChildren: Seq[QueryPlan[_]] = shown
 
-/** `DROP BLOOMFILTER INDEX ON TABLE t`. */
-final case class GraftDropBloomIndexCommand(table: String)
-  extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(
-        s"no attached TableStore holds $table for DROP BLOOMFILTER INDEX"))
-    store.dropBloomFilterIndex(table)
-    Seq.empty
-  }
-}
+  override protected def stringArgs: Iterator[Any] = Iterator(statement, table)
 
-/** `ALTER TABLE db.table ADD CONSTRAINT c CHECK (…)` — enforced check. */
-final case class GraftAddConstraintCommand(table: String, cname: String,
-    conditionSql: String) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for ADD CONSTRAINT"))
-    store.addCheckConstraint(table, cname, conditionSql)
-    Seq.empty
-  }
-}
-
-/** `SHOW PARTITIONS db.t` — one Hive-style `col=value` row per distinct
-  * partition tuple, straight from manifest stats. */
-final case class GraftShowPartitionsCommand(table: String)
-  extends LeafRunnableCommand {
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types.StringType
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] = Seq(
-    AttributeReference("partition", StringType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table"))
-    store.partitionValues(table).map(Row(_))
-  }
-}
-
-/** One `ALTER COLUMN` change, pre-extracted from the Catalyst spec:
-  * `newNullability` = Some(false) for SET NOT NULL / Some(true) for DROP
-  * NOT NULL; `defaultSql` carries the parser's original SQL text. */
-final case class AlterColSpec(colName: String, newNullability: Option[Boolean],
-    defaultSql: Option[String], dropDefault: Boolean, comment: Option[String])
-
-/** `ALTER TABLE db.table ALTER COLUMN …` — enforced NOT NULL, column
-  * DEFAULT metadata, column comments. */
-final case class GraftAlterColumnsCommand(table: String,
-    specs: Seq[AlterColSpec]) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for ALTER COLUMN"))
-    specs.foreach { s =>
-      require(!s.colName.contains("."),
-        s"ALTER COLUMN on nested field ${s.colName}: store tables hold top-level columns only")
-      s.newNullability.foreach {
-        case false => store.setNotNull(table, s.colName)
-        case true => store.dropNotNull(table, s.colName)
-      }
-      s.defaultSql.foreach(sql => store.setColumnDefault(table, s.colName, sql))
-      if (s.dropDefault) store.dropColumnDefault(table, s.colName)
-      s.comment.foreach(c => store.setColumnComment(table, s.colName, c))
+  override def run(spark: SparkSession): Seq[Row] =
+    (if (inNamespace) TableStore.resolveDb(spark, table.split('.').head)
+     else TableStore.resolve(spark, table)) match {
+      case Some(store) => body(spark, store)
+      case None => orElse.getOrElse(throw new IllegalStateException(
+        s"no attached TableStore holds $table for $statement"))(spark)
     }
-    Seq.empty
-  }
 }
 
-/** `ALTER TABLE db.table DROP CONSTRAINT c` — CHECK or FOREIGN KEY,
-  * whichever `c` names. */
-final case class GraftDropConstraintCommand(table: String, cname: String)
-  extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for DROP CONSTRAINT"))
-    if (store.foreignKeys(table).contains(cname)) store.dropForeignKey(table, cname)
-    else store.dropCheckConstraint(table, cname)
-    Seq.empty
-  }
-}
+/** Delegating parser: claims the store statements Spark has no grammar for
+  * (Delta's and Databricks' maintenance surface) and CREATE / REPLACE /
+  * DROP TABLE (see [[SqlDml.captureCreate]]); everything else passes
+  * through untouched. */
+class GraftSqlParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInterface)
+  extends org.apache.spark.sql.catalyst.parser.ParserInterface {
 
-/** `ALTER TABLE db.table ADD CONSTRAINT c FOREIGN KEY … REFERENCES …`. */
-final case class GraftAddForeignKeyCommand(table: String, cname: String,
-    cols: Seq[String], refTable: String, refCols: Seq[String])
-  extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for ADD CONSTRAINT"))
-    store.setForeignKey(table, cname, cols, refTable, refCols)
-    Seq.empty
-  }
-}
+  import SqlDml.{attr, command}
 
-/** `DROP TABLE [IF EXISTS] db.table`: a store table drops its versions
-  * wholesale; any other target re-submits the captured stock plan,
-  * preserving session-catalog behavior exactly. */
-final case class GraftDropTableCommand(table: String, ifExists: Boolean,
-    original: LogicalPlan) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    TableStore.resolve(spark, table) match {
-      case Some(store) => store.dropTable(table)
-      case None => GraftShims.ofRows(spark, original).collect()
+  private val HistoryRe =
+    """(?is)^\s*DESC(?:RIBE)?\s+HISTORY\s+([\w.]+)\s*;?\s*$""".r
+  private val DetailRe =
+    """(?is)^\s*DESC(?:RIBE)?\s+DETAIL\s+([\w.]+)\s*;?\s*$""".r
+  private val OptimizeRe =
+    """(?is)^\s*OPTIMIZE\s+([\w.]+)(?:\s+WHERE\s+(.+?))?(?:\s+ZORDER\s+BY\s*\(?\s*([\w.\s,]+?)\s*\)?)?\s*;?\s*$""".r
+  private val VacuumRe =
+    """(?is)^\s*VACUUM\s+([\w.]+)(?:\s+RETAIN\s+(\d+)\s+HOURS)?\s*;?\s*$""".r
+  private val RestoreRe =
+    """(?is)^\s*RESTORE\s+(?:TABLE\s+)?([\w.]+)\s+TO\s+VERSION\s+AS\s+OF\s+(\d+)\s*;?\s*$""".r
+  // Databricks' bloom-index DDL, simplified: one global OPTIONS clause
+  // (numItems sizes the per-file filter) instead of per-column options.
+  private val CreateBloomRe =
+    """(?is)^\s*CREATE\s+BLOOMFILTER\s+INDEX\s+ON\s+(?:TABLE\s+)?([\w.]+)\s+FOR\s+COLUMNS\s*\(\s*([\w\s,]+?)\s*\)(?:\s+OPTIONS\s*\(\s*['`"]?numItems['`"]?\s*=\s*(\d+)\s*\))?\s*;?\s*$""".r
+  private val DropBloomRe =
+    """(?is)^\s*DROP\s+BLOOMFILTER\s+INDEX\s+ON\s+(?:TABLE\s+)?([\w.]+)\s*;?\s*$""".r
+  private val CreateMvRe =
+    """(?is)^\s*CREATE\s+MATERIALIZED\s+VIEW\s+([\w.]+)\s+AS\s+(.+?)\s*;?\s*$""".r
+  private val RefreshMvRe =
+    """(?is)^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+([\w.]+)\s*;?\s*$""".r
+  // Databricks' idempotent ingestion statement, core surface: source path,
+  // FILEFORMAT, optional glob PATTERN, optional force copy-option.
+  private val CopyIntoRe =
+    """(?is)^\s*COPY\s+INTO\s+([\w.]+)\s+FROM\s+'([^']+)'\s+FILEFORMAT\s*=\s*(\w+)(?:\s+PATTERN\s*=\s*'([^']+)')?(?:\s+COPY_OPTIONS\s*\(\s*'force'\s*=\s*'(true|false)'\s*\))?\s*;?\s*$""".r
+  // DROP TABLE must be claimed at PARSE time: the analyzer resolves the
+  // identifier against the session catalog before extension rules fire
+  // (unlike DML on an unresolvable relation).
+  private val DropTableRe =
+    """(?is)^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*$""".r
+
+  private def list(cols: String): Seq[String] = cols.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+
+  override def parsePlan(sqlText: String): LogicalPlan = sqlText match {
+    // DESCRIBE HISTORY: one row per retained commit, newest first (Delta's
+    // shape over the manifest store)
+    case HistoryRe(t) => StoreCommand("DESCRIBE HISTORY", t, (_, st) =>
+      st.history(t).map { case (v, ts, op, n, rows) =>
+        val (fa, fr, ra, rr) = st.operationMetrics(t, v)
+        Row(v, java.sql.Timestamp.from(ts), op, n, if (rows < 0) null else rows,
+          fa, fr, if (ra < 0) null else ra, if (rr < 0) null else rr)
+      }, output = Seq(attr("version", IntegerType), attr("timestamp", TimestampType),
+        attr("operation", StringType), attr("num_files", IntegerType),
+        attr("num_rows", LongType, nullable = true), attr("files_added", IntegerType),
+        attr("files_removed", IntegerType), attr("rows_added", LongType, nullable = true),
+        attr("rows_removed", LongType, nullable = true)))
+    // DESCRIBE DETAIL: current-snapshot facts, driver-side metadata only
+    case DetailRe(t) => StoreCommand("DESCRIBE DETAIL", t, (_, st) =>
+      st.detail(t).toSeq.sortBy(_._1).map { case (k, v) => Row(k, v) },
+      output = Seq(attr("property", StringType), attr("value", StringType)))
+    // OPTIMIZE [WHERE …] [ZORDER BY (c, …)]: ZORDER keeps the file count
+    // (clustering, not consolidation: the curve needs multiple files to
+    // give every column selective ranges); plain OPTIMIZE consolidates per
+    // partition (deletion vectors folded in); WHERE bounds the work to the
+    // predicate's candidate files — with ZORDER, the candidates are
+    // re-clustered INTO the persisted curve (incremental clustering)
+    case OptimizeRe(t, w, z) =>
+      val zorderBy = Option(z).map(list).getOrElse(Nil)
+      val where = Option(w).map(_.trim).filter(_.nonEmpty)
+      StoreCommand("OPTIMIZE", t, (_, st) => {
+        val before = st.history(t).headOption.map(_._4).getOrElse(0)
+        (where, zorderBy) match {
+          case (Some(c), Nil) => st.compactWhere(t, expr(c))
+          case (Some(c), _) => st.zorderWhere(t, expr(c))
+          case (None, Nil) => st.compact(t)
+          case (None, _) => st.compact(t, targetFiles = math.max(1, before), zorderBy)
+        }
+        Seq(Row(t, before, st.history(t).headOption.map(_._4).getOrElse(0)))
+      }, output = Seq(attr("table", StringType), attr("files_before", IntegerType),
+        attr("files_after", IntegerType)))
+    // VACUUM: drop data files the current manifest does not reference and
+    // retire non-current versions
+    case VacuumRe(t, hours) =>
+      val retainMs = Option(hours).map(_.toLong * 3600 * 1000).getOrElse(0L)
+      command("VACUUM", t)(_.vacuum(t, retainMs = retainMs))
+    // RESTORE: metadata-only re-point of a retained snapshot as the new
+    // current version (the restore itself becomes a history entry)
+    case RestoreRe(t, v) => command("RESTORE", t) { st =>
+      require(st.versions(t).contains(v.toInt),
+        s"RESTORE $t: no retained version $v (have ${st.versions(t).mkString(", ")})")
+      st.restore(t, v.toInt)
     }
-    Seq.empty
+    // parquet-native bloom filters for point-lookup file skipping
+    case CreateBloomRe(t, cols, ndv) => command("CREATE BLOOMFILTER INDEX", t)(
+      _.setBloomFilterIndex(t, list(cols), Option(ndv).map(_.toLong).getOrElse(100000L)))
+    case DropBloomRe(t) => command("DROP BLOOMFILTER INDEX", t)(_.dropBloomFilterIndex(t))
+    // COPY INTO: idempotent file-tracked ingestion; reports what this run
+    // loaded
+    case CopyIntoRe(t, from, fmt, pat, force) =>
+      val (format, forced) = (fmt.toLowerCase, Option(force).exists(_.equalsIgnoreCase("true")))
+      StoreCommand("COPY INTO", t, (_, st) => {
+        val (files, rows) = st.copyInto(t, from, format, Option(pat), forced)
+        Seq(Row(files, rows))
+      }, output = Seq(attr("num_loaded_files", LongType), attr("num_inserted_rows", LongType)))
+    case CreateMvRe(t, query) => SqlDml.createMaterializedView(t, delegate.parsePlan(query))
+    // REFRESH: apply the source's change feed since the last refresh as
+    // signed per-group deltas (one small MERGE); full pinned rebuild only
+    // when the feed cannot supply the delta
+    case RefreshMvRe(t) => command("REFRESH MATERIALIZED VIEW", t)(_.refreshMaterializedView(t))
+    // a store table drops its versions wholesale; any other target runs
+    // the stock plan, preserving session-catalog behavior exactly
+    case DropTableRe(_, t) if t.contains(".") =>
+      command("DROP TABLE", t)(_.dropTable(t))
+        .copy(orElse = SqlDml.sparkPlan(delegate.parsePlan(sqlText)))
+    case _ =>
+      val plan = delegate.parsePlan(sqlText)
+      SqlDml.captureCreate(plan).getOrElse(plan)
   }
+
+  override def parseExpression(s: String) = delegate.parseExpression(s)
+  override def parseTableIdentifier(s: String) = delegate.parseTableIdentifier(s)
+  override def parseFunctionIdentifier(s: String) = delegate.parseFunctionIdentifier(s)
+  override def parseMultipartIdentifier(s: String) = delegate.parseMultipartIdentifier(s)
+  override def parseQuery(s: String) = delegate.parseQuery(s)
+  override def parseRoutineParam(s: String) = delegate.parseRoutineParam(s)
+  override def parseTableSchema(s: String) = delegate.parseTableSchema(s)
+  override def parseDataType(s: String) = delegate.parseDataType(s)
 }
 
-/** `ALTER TABLE db.table ADD COLUMNS (…)` — metadata-only widening. */
-final case class GraftAddColumnsCommand(table: String,
-    cols: org.apache.spark.sql.types.StructType) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for ADD COLUMNS"))
-    store.addColumns(table, cols)
-    Seq.empty
-  }
-}
-
-/** `ALTER TABLE db.table RENAME COLUMN a TO b` — metadata-only (column
-  * mapping; no rewrite). */
-final case class GraftRenameColumnCommand(table: String, from: String, to: String)
-  extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for RENAME COLUMN"))
-    store.renameColumn(table, from, to)
-    Seq.empty
-  }
-}
-
-/** `ALTER TABLE db.table DROP COLUMN c` — metadata-only (column mapping). */
-final case class GraftDropColumnsCommand(table: String, cols: Seq[String])
-  extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for DROP COLUMN"))
-    cols.foreach(store.dropColumn(table, _))
-    Seq.empty
-  }
-}
-
-/** Eagerly-executed `UPDATE db.table SET … WHERE …` (copy-on-write). */
-final case class GraftUpdateCommand(table: String, cond: Column, set: Map[String, Column])
-  extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for UPDATE"))
-    store.update(table, cond, set)
-    Seq.empty
-  }
-}
-
-/** Eagerly-executed `DELETE FROM db.table WHERE …` (copy-on-write). */
-final case class GraftDeleteCommand(table: String, cond: Column)
-  extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val store = TableStore.resolve(spark, table).getOrElse(
-      throw new IllegalStateException(s"no attached TableStore holds $table for DELETE FROM"))
-    store.delete(table, cond)
-    Seq.empty
-  }
+/** Analyzer rule: lower parsed SQL on store tables onto [[StoreCommand]]s
+  * and store reads ([[SqlDml.lower]]). Fires only when the target table
+  * exists in an attached store; every other statement is left untouched
+  * for Spark to handle. */
+class GraftSqlDml(spark: SparkSession) extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.resolveOperatorsDown { case p => SqlDml.lower(p, spark).getOrElse(p) }
 }

@@ -103,6 +103,19 @@ object TableStore {
           "(TableStore.detach) before issuing SQL DML against it")
     }
 
+  /** The value checks of the typed table knobs, keyed by property name.
+    * Their setters run them, and SQL runs them on a whole TBLPROPERTIES
+    * bag before it changes anything. */
+  def checkKnob(table: String, key: String, value: String): Unit = key match {
+    case "dml_mode" =>
+      require(Set("cow", "mor")(value), s"dml mode must be cow or mor, got $value")
+    case "target_file_rows" =>
+      require(value.toLong > 0, s"$table: target file rows must be positive, got $value")
+    case "bloom.ndv" =>
+      require(value.toLong > 0, s"$table: bloom ndv must be positive, got $value")
+    case _ =>
+  }
+
   /** The attached store owning database namespace `db` (SQL CTAS routing). */
   def resolveDb(spark: SparkSession, db: String): Option[TableStore] =
     stores(spark).filter(_.dbExists(db)) match {
@@ -2056,11 +2069,6 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       }))
   }
 
-  /** Append `df` as new files — the current files carry over untouched
-    * (layout preserved), so an append to a 100 TB table costs only the new
-    * data's write. Committed with conflict detection. `op` surfaces in
-    * DESCRIBE HISTORY; the streaming sink encodes its micro-batch id there
-    * to make replays detectable ([[lastStreamBatch]]). */
   /** Schema enforcement for appends: explicit-schema reads would silently
     * NULL-fill a missing column and drop an extra one — a typo'd append
     * must error, not lose data (Delta's append schema check). Matching is
@@ -2082,6 +2090,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         col(df.columns.find(_.equalsIgnoreCase(f.name)).get).cast(f.dataType).as(f.name)): _*)
   }
 
+  /** Append `df` as new files — the current files carry over untouched
+    * (layout preserved), so an append to a 100 TB table costs only the new
+    * data's write. Committed with conflict detection. `op` surfaces in
+    * DESCRIBE HISTORY; the streaming sink encodes its micro-batch id there
+    * to make replays detectable ([[lastStreamBatch]]). */
   def append(name: String, df: DataFrame, op: String = "append",
       copyFiles: Seq[String] = Nil): Unit = {
     val base = currentVersion(name).getOrElse(
@@ -3193,7 +3206,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     *    clean files.
     */
   def setDmlMode(name: String, mode: String): Unit = {
-    require(Set("cow", "mor")(mode), s"dml mode must be cow or mor, got $mode")
+    TableStore.checkKnob(name, "dml_mode", mode)
     setMeta(name, meta(name).copy(properties =
       meta(name).properties + ("dml_mode" -> mode)))
   }
@@ -3201,16 +3214,6 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   private def dmlMode(name: String): String =
     meta(name).properties.getOrElse("dml_mode", "cow")
 
-  /** Enable the row-level change feed (Delta's
-    * `delta.enableChangeDataFeed`): from the NEXT commit on, UPDATE /
-    * DELETE / MERGE record their row-level changes — including
-    * `update_preimage`/`update_postimage` pairs — as a `cdc/` parquet
-    * sidecar inside the committed version directory, written while
-    * staging so it is atomic with the commit. Appends and overwrites
-    * don't pay the extra write: their change rows are reconstructed from
-    * the manifest diff at read time, exactly like Delta. Read the feed
-    * with [[changeFeed]] or stream it via the `graft-table` source's
-    * `changeFeed=true` option. */
   // ------------------------------------------------------------ row tracking
 
   private def rowTrackingEnabled(name: String): Boolean =
@@ -3291,6 +3294,16 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     if (!rowTrackingEnabled(name) || df.columns.contains(TableStore.RowIdCol)) df
     else df.withColumn(TableStore.RowIdCol, lit(null).cast(LongType))
 
+  /** Enable the row-level change feed (Delta's
+    * `delta.enableChangeDataFeed`): from the NEXT commit on, UPDATE /
+    * DELETE / MERGE record their row-level changes — including
+    * `update_preimage`/`update_postimage` pairs — as a `cdc/` parquet
+    * sidecar inside the committed version directory, written while
+    * staging so it is atomic with the commit. Appends and overwrites
+    * don't pay the extra write: their change rows are reconstructed from
+    * the manifest diff at read time, exactly like Delta. Read the feed
+    * with [[changeFeed]] or stream it via the `graft-table` source's
+    * `changeFeed=true` option. */
   def enableChangeFeed(name: String): Unit =
     setMeta(name, meta(name).copy(properties =
       meta(name).properties + ("cdf" -> "true")))
@@ -4265,7 +4278,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * data, exactly like Databricks. */
   def setBloomFilterIndex(name: String, cols: Seq[String], ndv: Long = 100000L): Unit = {
     require(cols.nonEmpty, s"$name: bloom filter index needs at least one column")
-    require(ndv > 0, s"$name: bloom ndv must be positive, got $ndv")
+    TableStore.checkKnob(name, "bloom.ndv", ndv.toString)
     val visible = logicalizeSchema(name, currentManifest(name)._1).fieldNames
     // store the SCHEMA's spelling, not the user's — downstream consumers
     // do exact-string matches against schema names (the r14 cased-INSERT
@@ -4287,7 +4300,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * and parallel reads all key off file granularity; files sized by this
     * knob keep those effective as the table grows 100×. */
   def setTargetFileRows(name: String, rows: Long): Unit = {
-    require(rows > 0, s"$name: target file rows must be positive, got $rows")
+    TableStore.checkKnob(name, "target_file_rows", rows.toString)
     setMeta(name, meta(name).copy(properties =
       meta(name).properties + ("target_file_rows" -> rows.toString)))
   }

@@ -18,8 +18,13 @@ class MorMergeSpec extends AnyFunSuite {
   lazy val spark = graft.core.GraftSession.local(4)
   import spark.implicits._
 
-  private def freshStore() =
-    new TableStore(spark, Files.createTempDirectory("graft_mormerge").toString)
+  /** Run `body` on a fresh store and detach it afterwards, pass or fail:
+    * every test names its table `db.t`, and a store left attached would
+    * make later SQL on `db.t` in the same JVM ambiguous. */
+  private def withStore(body: TableStore => Unit): Unit = {
+    val store = new TableStore(spark, Files.createTempDirectory("graft_mormerge").toString)
+    try body(store) finally store.detach()
+  }
 
   private def mergeSource = Seq(
     (2, "upd2"), (7, "upd7"), (10, "gone"), (401, "new401"), (455, "new455"))
@@ -33,8 +38,7 @@ class MorMergeSpec extends AnyFunSuite {
       notMatched = Seq(NotMatchedInsert(None,
         Map("k" -> col("s.k"), "v" -> col("s.sv"), "g" -> lit(9)))))
 
-  test("mor MERGE == cow MERGE, and rewrites zero existing data files") {
-    val store = freshStore()
+  test("mor MERGE == cow MERGE, and rewrites zero existing data files") { withStore { store =>
     val target = (1 to 400).map(i => (i, s"v$i", i % 5)).toDF("k", "v", "g")
       .repartition(4)
     store.createOrReplace("db.cow", target)
@@ -61,10 +65,9 @@ class MorMergeSpec extends AnyFunSuite {
     val m = store.read("db.mor").as[(Int, String, Int)].collect()
       .map(r => r._1 -> r).toMap
     assert(!m.contains(10) && m(2)._2 == "upd2" && m(401)._3 == 9)
-  }
+  } }
 
-  test("mor MERGE by-source clauses DV vanished keys without a rewrite") {
-    val store = freshStore()
+  test("mor MERGE by-source clauses DV vanished keys without a rewrite") { withStore { store =>
     store.createOrReplace("db.t",
       (1 to 100).map(i => (i, s"v$i")).toDF("k", "v").repartition(2))
     store.setDmlMode("db.t", "mor")
@@ -78,10 +81,9 @@ class MorMergeSpec extends AnyFunSuite {
     assert(before.subsetOf(after), "by-source mor merge rewrote a data file")
     assert(store.read("db.t").as[(Int, String)].collect().map(_._1).sorted
       .sameElements(2 to 100 by 2))
-  }
+  } }
 
-  test("mor MERGE raises on multiple source matches (Delta parity)") {
-    val store = freshStore()
+  test("mor MERGE raises on multiple source matches (Delta parity)") { withStore { store =>
     store.createOrReplace("db.t", Seq((1, "a"), (2, "b")).toDF("k", "v"))
     store.setDmlMode("db.t", "mor")
     val dup = Seq((1, "x"), (1, "y")).toDF("k", "sv")
@@ -93,10 +95,9 @@ class MorMergeSpec extends AnyFunSuite {
     // the aborted merge left the table untouched
     assert(store.read("db.t").orderBy("k").as[(Int, String)].collect()
       .sameElements(Seq((1, "a"), (2, "b"))))
-  }
+  } }
 
-  test("row ids survive a mor MERGE: updated rows keep theirs, inserts mint") {
-    val store = freshStore()
+  test("row ids survive a mor MERGE: updated rows keep theirs, inserts mint") { withStore { store =>
     store.createOrReplace("db.t",
       (1 to 50).map(i => (i, s"v$i")).toDF("k", "v").repartition(2))
     store.enableRowTracking("db.t")
@@ -116,10 +117,9 @@ class MorMergeSpec extends AnyFunSuite {
       "inserted row reused an existing id")
     // untouched rows keep theirs
     assert(a(3)._3 == idsBefore(3) && a(50)._3 == idsBefore(50))
-  }
+  } }
 
-  test("change feed of a mor MERGE: pre/post images, delete, insert") {
-    val store = freshStore()
+  test("change feed of a mor MERGE: pre/post images, delete, insert") { withStore { store =>
     store.createOrReplace("db.t",
       (1 to 20).map(i => (i, i * 10)).toDF("k", "n"))
     store.enableChangeFeed("db.t")
@@ -136,10 +136,9 @@ class MorMergeSpec extends AnyFunSuite {
     assert(feed == Set(
       (3, 30, "update_preimage"), (3, 999, "update_postimage"),
       (5, 50, "delete"), (21, 210, "insert")))
-  }
+  } }
 
-  test("mor MERGE discovery stats-prunes candidates like the cow path") {
-    val store = freshStore()
+  test("mor MERGE discovery stats-prunes candidates like the cow path") { withStore { store =>
     // key-sorted multi-file table: a narrow-key source batch must scan
     // only the files whose [min, max] admit its keys
     store.createOrReplace("db.t",
@@ -153,10 +152,9 @@ class MorMergeSpec extends AnyFunSuite {
       s"mor merge discovery scanned $cand of $total files — expected a stats cut")
     val m = store.read("db.t").as[(Int, String)].collect().toMap
     assert(m(10) == "u" && m(12) == "u2" && m.size == 4000)
-  }
+  } }
 
-  test("OPTIMIZE folds mor-merge DVs back into clean files") {
-    val store = freshStore()
+  test("OPTIMIZE folds mor-merge DVs back into clean files") { withStore { store =>
     store.createOrReplace("db.t",
       (1 to 300).map(i => (i, s"v$i")).toDF("k", "v").repartition(3))
     store.setDmlMode("db.t", "mor")
@@ -169,13 +167,12 @@ class MorMergeSpec extends AnyFunSuite {
     val inv = store.fileInventory("db.t").select("dv_count").as[Int].collect()
     assert(inv.forall(_ == 0), "OPTIMIZE left deletion vectors in place")
     assert(store.read("db.t").orderBy("k").collect().sameElements(expected))
-  }
+  } }
 
   private def files(store: TableStore, t: String): Map[String, Long] =
     store.fileInventory(t).select("file", "rows").as[(String, Long)].collect().toMap
 
-  test("mor UPDATE and MERGE append files capped by target_file_rows") {
-    val store = freshStore()
+  test("mor UPDATE and MERGE append files capped by target_file_rows") { withStore { store =>
     store.createOrReplace("db.t",
       (1 to 200).map(i => (i, s"v$i")).toDF("k", "v").repartition(2))
     store.setTargetFileRows("db.t", 10)
@@ -193,11 +190,9 @@ class MorMergeSpec extends AnyFunSuite {
       s"mor MERGE appended files of ${mg.values.toSeq.sorted} rows, cap 10")
     val v = store.read("db.t").groupBy("v").count().as[(String, Long)].collect().toMap
     assert(v("u") == 50 && v("m") == 50 && store.read("db.t").count() == 200)
-    store.detach()
-  }
+  } }
 
-  test("mor UPDATE post-images carry the bloom index: a point read keeps only their file") {
-    val store = freshStore()
+  test("mor UPDATE post-images carry the bloom index: a point read keeps only their file") { withStore { store =>
     // scattered keys: every file's [min, max] box spans the table, so only
     // the bloom filters can skip
     val data = (1 to 400).map(i => (i, s"v$i")).toDF("k", "v").repartition(4)
@@ -213,6 +208,5 @@ class MorMergeSpec extends AnyFunSuite {
     assert(cand == 1 && total == before.size + appended.size,
       s"point read of a post-image key kept $cand of $total files")
     assert(df.filter(col("k") === 1010).count() == 1)
-    store.detach()
-  }
+  } }
 }

@@ -256,6 +256,10 @@ class SqlDmlSpec extends AnyFunSuite {
     try {
       spark.sql("CREATE TABLE ctasfb.t AS SELECT * FROM ctas_fb_src")
       assert(spark.table("ctasfb.t").count() == 1, "stock Spark CTAS must still work")
+      // DROP TABLE is claimed at parse time too; a catalog target runs the
+      // stock plan
+      spark.sql("DROP TABLE ctasfb.t")
+      assert(!spark.catalog.tableExists("ctasfb.t"), "stock DROP TABLE must drop the catalog table")
     } finally spark.sql("DROP DATABASE IF EXISTS ctasfb CASCADE")
   }
 
@@ -356,6 +360,10 @@ class SqlDmlSpec extends AnyFunSuite {
       assert(store.prunedFileList("db.tp", None).toSet == before,
         "mor mode set via TBLPROPERTIES should deletion-vector, not rewrite")
       assert(store.read("db.tp").count() == 99)
+      // EXPLAIN names the statement and its table, never a function object
+      val explained = spark.sql("EXPLAIN DELETE FROM db.tp WHERE k = 8").head().getString(0)
+      assert(explained.contains("DELETE") && explained.contains("db.tp") &&
+        !explained.contains("Lambda"), explained)
       // SHOW surfaces both the knob and the generic property
       val props = spark.sql("SHOW TBLPROPERTIES db.tp").collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -421,6 +429,47 @@ class SqlDmlSpec extends AnyFunSuite {
       assert(ddl.contains("'dml_mode' = 'mor'"), ddl)
       // internal representation state never leaks into the DDL
       assert(!ddl.contains("colmap.") && !ddl.contains("identity."), ddl)
+      // every property the DDL declares runs back through CREATE
+      store.setTargetFileRows("db.sc", 1000)
+      store.enableChangeFeed("db.sc")
+      store.setBloomFilterIndex("db.sc", Seq("k"), ndv = 5000)
+      val declared = spark.sql("SHOW CREATE TABLE db.sc").head().getString(0)
+      spark.sql(declared.replace("CREATE TABLE db.sc (", "CREATE TABLE db.sc2 ("))
+      val knobs = Seq("dml_mode", "target_file_rows", "cdf", "bloom.cols", "bloom.ndv")
+      assert(knobs.map(store.meta("db.sc2").properties.get) ==
+        knobs.map(store.meta("db.sc").properties.get), declared)
+    } finally store.detach()
+  }
+
+  test("TBLPROPERTIES cannot write engine state: SET, UNSET and CREATE refuse internal keys") {
+    val store = new TableStore(spark, Files.createTempDirectory("graft_sqldml_ik").toString)
+    try {
+      def refused(sql: String, key: String): Unit = {
+        val e = intercept[IllegalArgumentException](spark.sql(sql))
+        assert(e.getMessage.contains(s"'$key'"), e.getMessage)
+      }
+      store.createOrReplace("db.ik", Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+      store.enableRowTracking("db.ik")
+      val meta = store.meta("db.ik")
+      val version = store.version("db.ik")
+      // a lowered high-water mark would hand out row ids already in use
+      refused("ALTER TABLE db.ik SET TBLPROPERTIES ('row_high_water' = '0')", "row_high_water")
+      assert(store.meta("db.ik") == meta)
+      // unsetting an identity counter would restart the surrogate keys
+      spark.sql("CREATE TABLE db.idt (id BIGINT GENERATED ALWAYS AS IDENTITY, v STRING)")
+      val idMeta = store.meta("db.idt")
+      assert(idMeta.properties.contains("identity.id"), idMeta)
+      refused("ALTER TABLE db.idt UNSET TBLPROPERTIES ('identity.id')", "identity.id")
+      assert(store.meta("db.idt") == idMeta)
+      // a CHECK declared as a property would skip its validation; the
+      // refusal comes before any write, so neither a new nor a replaced
+      // table changes
+      refused("CREATE TABLE db.ck TBLPROPERTIES ('check.c' = 'k > 0') AS SELECT 1L AS k",
+        "check.c")
+      assert(!store.exists("db.ck"))
+      refused("CREATE OR REPLACE TABLE db.ik TBLPROPERTIES ('check.c' = 'k > 0') " +
+        "AS SELECT 1L AS k", "check.c")
+      assert(store.meta("db.ik") == meta && store.version("db.ik") == version)
     } finally store.detach()
   }
 

@@ -7,13 +7,15 @@ oracle_sql.json in DuckDB over the same parquet tables and diffs each
 result against the Spark parquet dump (columns sorted by name, rows sorted
 by all columns, exact value compare with a tiny float report).
 
-Each OK/FAIL line ends with the query's DuckDB replay seconds (reading the
-Spark dump plus running the oracle SQL) and compare seconds; the run ends
-with the 10 slowest queries by their sum.
+Queries replay in a process pool, one worker per CPU, each worker with its
+own DuckDB connection; the OK/FAIL lines print in sorted name order. Each
+line ends with the query's DuckDB replay seconds (reading the Spark dump
+plus running the oracle SQL) and compare seconds; the run ends with the 10
+slowest queries by their sum.
 
 Usage: python3 tools/check_oracle.py <sfDir> <outDir> [query ...]
 """
-import json, math, sys, os, time
+import functools, json, math, multiprocessing, sys, os, time
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -60,49 +62,65 @@ def cmp_frames(name, spark_df, oracle_df, rec=None):
     rec["hash_match"] = ok
     return ok, line
 
-def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
-    con = duckdb.connect()
+EMPTY = {"rows_match": False, "schema_match": False, "hash_match": False,
+         "spark_rows": None, "oracle_rows": None}
+
+_con = None
+
+def connect(sf_dir):
+    """Pool initializer: one DuckDB connection per worker process."""
+    global _con
+    _con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+            _con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+
+def check(out_dir, item):
+    """Replay one oracle and compare it with the Spark dump; returns
+    (ok, the printed line, the report record, the timing row or None)."""
+    name, sql = item
+    spark_path = f"{out_dir}/{name}"
+    if not os.path.isdir(spark_path):
+        return (False, f"FAIL {name}: no spark output at {spark_path}",
+                dict(EMPTY, err=f"no spark output at {spark_path}"), None)
+    t0 = time.perf_counter()
+    try:
+        spark_df = _con.sql(f"SELECT * FROM '{spark_path}/*.parquet'").df()
+        oracle_df = _con.sql(sql).df()
+    except Exception as e:
+        return (False, f"FAIL {name}: {e} [replay {time.perf_counter() - t0:.2f}s]",
+                dict(EMPTY, err=str(e)[:500]), None)
+    t1 = time.perf_counter()
+    rec = {}
+    ok, line = cmp_frames(name, spark_df, oracle_df, rec)
+    replay_s, compare_s = t1 - t0, time.perf_counter() - t1
+    return (ok, f"{line} [replay {replay_s:.2f}s compare {compare_s:.2f}s]", rec,
+            (replay_s + compare_s, name, replay_s, compare_s))
+
+def main():
+    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
+    todo = [(name, sql) for name, sql in sorted(oracles.items())
+            if not only or name in only]
     n_ok = n_fail = 0
     report = {}
     timings = []  # (replay_s + compare_s, name, replay_s, compare_s)
-    empty = {"rows_match": False, "schema_match": False, "hash_match": False,
-             "spark_rows": None, "oracle_rows": None}
-    for name, sql in sorted(oracles.items()):
-        if only and name not in only:
-            continue
-        spark_path = f"{out_dir}/{name}"
-        if not os.path.isdir(spark_path):
-            print(f"FAIL {name}: no spark output at {spark_path}")
-            report[name] = dict(empty, err=f"no spark output at {spark_path}")
-            n_fail += 1
-            continue
-        t0 = time.perf_counter()
-        try:
-            spark_df = con.sql(f"SELECT * FROM '{spark_path}/*.parquet'").df()
-            oracle_df = con.sql(sql).df()
-        except Exception as e:
-            print(f"FAIL {name}: {e} [replay {time.perf_counter() - t0:.2f}s]")
-            report[name] = dict(empty, err=str(e)[:500])
-            n_fail += 1
-            continue
-        t1 = time.perf_counter()
-        rec = {}
-        ok, line = cmp_frames(name, spark_df, oracle_df, rec)
-        replay_s, compare_s = t1 - t0, time.perf_counter() - t1
-        print(f"{line} [replay {replay_s:.2f}s compare {compare_s:.2f}s]")
-        timings.append((replay_s + compare_s, name, replay_s, compare_s))
-        if ok:
-            n_ok += 1
-        else:
-            n_fail += 1
-        report[name] = rec
+    # queries are independent: one worker per CPU, each with its own DuckDB
+    # connection; imap hands results back in submission (sorted name) order
+    workers = max(1, min(os.cpu_count() or 1, len(todo)))
+    with multiprocessing.Pool(workers, initializer=connect, initargs=(sf_dir,)) as pool:
+        results = pool.imap(functools.partial(check, out_dir), todo)
+        for (name, _), (ok, line, rec, timing) in zip(todo, results):
+            print(line, flush=True)
+            report[name] = rec
+            if timing:
+                timings.append(timing)
+            if ok:
+                n_ok += 1
+            else:
+                n_fail += 1
     print("slowest queries (replay + compare):")
     for total, name, replay_s, compare_s in sorted(timings, reverse=True)[:10]:
         print(f"  {total:8.2f}s  {name}  (replay {replay_s:.2f}s, compare {compare_s:.2f}s)")
