@@ -79,13 +79,14 @@ object SqlDml {
 
   /** Table-property keys that are engine state, not declaration: each is
     * owned by its own DDL (bloom index, constraints, generated and identity
-    * columns, column mapping, NOT NULL and DEFAULT, materialized views) or
-    * by the write path (row and stream high-water marks). Writing one
-    * directly skips the checks its DDL runs, so SET / UNSET TBLPROPERTIES
-    * and CREATE refuse them and SHOW CREATE TABLE leaves them out. */
+    * columns, column mapping, NOT NULL and DEFAULT, materialized views,
+    * the persisted ZORDER curve) or by the write path (row and stream
+    * high-water marks). Writing one directly skips the checks its DDL
+    * runs, so SET / UNSET TBLPROPERTIES and CREATE refuse them and SHOW
+    * CREATE TABLE leaves them out. */
   private[ext] val InternalKeys = Seq("mv.*", "bloom.*", "fk.*", "colmap.*", "coldrop.*",
-    "gencol.*", "check.*", "identity.*", "notnull.*", "coldefault.*", "primary_key",
-    "row_high_water", "stream_high_water")
+    "gencol.*", "check.*", "identity.*", "notnull.*", "coldefault.*", "zorder.*",
+    "primary_key", "row_high_water", "stream_high_water")
 
   /** The bloom index's keys: SET / UNSET leave them to the BLOOMFILTER
     * INDEX statements, but SHOW CREATE TABLE emits them and CREATE declares
@@ -101,10 +102,12 @@ object SqlDml {
         "(BLOOMFILTER INDEX / CONSTRAINT / GENERATED / MATERIALIZED VIEW statements)"))
 
   /** One property as the store call that sets it: typed knobs (dml_mode,
-    * target_file_rows, comment) go through their validating setters,
-    * anything else is a generic property, Delta-style. Building the call
-    * refuses internal keys and checks typed values, so a statement builds
-    * every call before it changes anything. */
+    * target_file_rows, isolation, comment) go through their validating
+    * setters, `rowtracking` = 'true' through `enableRowTracking` (the
+    * footer-count check and backfill commit), anything else is a generic
+    * property, Delta-style. Building the call refuses internal keys and
+    * checks typed values, so a statement builds every call before it
+    * changes anything. */
   private def propertySetter(statement: String, table: String, k: String,
       v: String): TableStore => Unit = {
     refuseInternal(statement, table, k)
@@ -112,6 +115,8 @@ object SqlDml {
     k match {
       case "dml_mode" => _.setDmlMode(table, v)
       case "target_file_rows" => _.setTargetFileRows(table, v.toLong)
+      case "isolation" => _.setIsolation(table, v)
+      case "rowtracking" => _.enableRowTracking(table)
       case "comment" => st => st.setMeta(table, st.meta(table).copy(comment = Some(v)))
       case _ => st => st.setMeta(table, st.meta(table).copy(properties =
         st.meta(table).properties + (k -> v)))
@@ -456,10 +461,12 @@ object SqlDml {
     }: _*)
     // INSERT INTO is an APPEND — new files only, existing files carried
     // over by the manifest (a 1-row insert into a 100 TB table costs one
-    // file). Only INSERT OVERWRITE snapshots, and a PARTITION-qualified
-    // overwrite replaces just the named region.
+    // file). INSERT OVERWRITE replaces every row but keeps the table's
+    // definition (layout, identity keys, change feed) — a `write` commit
+    // of the whole region — and a PARTITION-qualified overwrite replaces
+    // just the named region.
     if (!i.overwrite) store.append(table, aligned)
-    else if (partitionSpec.isEmpty) store.createOrReplace(table, aligned)
+    else if (partitionSpec.isEmpty) store.overwriteWhere(table, aligned, lit(true), op = "write")
     else if (dynamics.isEmpty) {
       val cond = statics.map { case (k, v) =>
         val f = target.schema.fields.find(x => resolves(k, x.name)).get
@@ -469,11 +476,12 @@ object SqlDml {
     } else store.overwritePartitions(table, aligned, op = "insert_overwrite_partition")
   }
 
-  /** SHOW CREATE TABLE: executable DDL from the manifest schema, layout
-    * sidecar and metadata — columns with GENERATED / NOT NULL / DEFAULT /
-    * COMMENT, PRIMARY KEY / FOREIGN KEY / CHECK constraints (the reference
-    * declares all three inline, 01_Init.py), partitioning, table comment
-    * and the declarable properties. Internal keys are state, not
+  /** SHOW CREATE TABLE: executable DDL from the current manifest (schema
+    * and layout) and the metadata sidecar — columns with GENERATED / NOT
+    * NULL / DEFAULT / COMMENT, PRIMARY KEY / FOREIGN KEY / CHECK
+    * constraints (the reference declares all three inline, 01_Init.py),
+    * partitioning by logical column names, table comment and the
+    * declarable properties. Internal keys are state, not
     * declaration, and are left out. */
   private def showCreate(store: TableStore, table: String): String = {
     val m = store.meta(table)

@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, element_at, input_file_name, lit, max, min, regexp_replace, sum, when}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, element_at, lit, max, min, regexp_replace, sum, when}
 import org.apache.spark.sql.types._
 import graft.operators.MergeInto
 
@@ -21,17 +21,21 @@ import graft.operators.MergeInto
   * Layout: `root/<db>/<table>/v_<n>/` data directories plus a
   * `v_<n>/_MANIFEST` listing every data file (relative to the table dir —
   * entries may reference files written by EARLIER versions) with optional
-  * per-file min/max column statistics; a `_CURRENT` pointer file names the
-  * live version and is swapped via atomic move, so readers never observe a
-  * partial commit. This is the Delta transaction-log shape reduced to one
-  * snapshot file per version:
+  * per-file min/max column statistics, the table schema, the commit's
+  * operation label and the version's write layout (partition, sort and
+  * stats columns — Delta's `metaData` action); a `_CURRENT` pointer file
+  * names the live version and is swapped via atomic move, so readers
+  * never observe a partial commit. This is the Delta transaction-log
+  * shape reduced to one snapshot file per version, and one parse of it is
+  * a table's whole committed state ([[Snapshot]]): the layout is staged,
+  * rebased, restored, cloned and aborted together with its version.
   *
   *  - MERGE/UPDATE/DELETE are **file-pruned copy-on-write**: a discovery
-  *    pass finds the files that actually contain affected rows
-  *    (`input_file_name` + the statement predicate / merge join), only
-  *    those files are rewritten, and the new manifest unions untouched +
-  *    rewritten files. A one-row UPDATE against a 100 TB table rewrites
-  *    one file, not 100 TB.
+  *    pass finds the files that actually contain affected rows (the
+  *    `__graft_file` identity column of [[scanWithPos]] + the statement
+  *    predicate / merge join), only those files are rewritten, and the new
+  *    manifest unions untouched + rewritten files. A one-row UPDATE
+  *    against a 100 TB table rewrites one file, not 100 TB.
   *  - Partition columns live IN the data files (the hive-style directory
   *    layout uses duplicated `__p_<col>` columns purely for write
   *    clustering), so partition pruning is manifest metadata pruning —
@@ -113,6 +117,12 @@ object TableStore {
       require(value.toLong > 0, s"$table: target file rows must be positive, got $value")
     case "bloom.ndv" =>
       require(value.toLong > 0, s"$table: bloom ndv must be positive, got $value")
+    case "isolation" =>
+      require(Set("writeserializable", "serializable")(value.toLowerCase),
+        s"isolation must be writeserializable or serializable, got $value")
+    case "rowtracking" =>
+      require(value.equalsIgnoreCase("true"),
+        s"$table: row tracking can only be enabled ('true'), got $value")
     case _ =>
   }
 
@@ -421,7 +431,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     Paths.get(root, parts(0), parts(1))
   }
 
-  private def currentVersion(name: String): Option[Int] = {
+  /** The table's current committed version, read from the `_CURRENT`
+    * pointer on every call (the optimistic-concurrency token for
+    * [[replaceIfUnchanged]], and the fresh read every commit-lock check
+    * makes). */
+  def version(name: String): Option[Int] = {
     val ptr = tableDir(name).resolve("_CURRENT")
     if (Files.exists(ptr)) Some(new String(Files.readAllBytes(ptr)).trim.toInt) else None
   }
@@ -435,7 +449,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  def exists(name: String): Boolean = currentVersion(name).isDefined
+  def exists(name: String): Boolean = version(name).isDefined
 
   /** Whether a database namespace exists under the store root (SQL CTAS
     * lowers only into existing store namespaces). */
@@ -475,6 +489,21 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       dvs: Seq[String] = Nil, rows: Long = -1L, base: Long = -1L,
       nulls: Map[String, Long] = Map.empty)
 
+  /** A version's write layout — partition, sort and stats columns in
+    * physical names. It rides the version's manifest (`#layout`), so
+    * every DML rewrite of that version keeps it and RESTORE, clones and
+    * aborted writes agree on it; a manifest without the line has none. */
+  private[tables] final case class Layout(partitionBy: Seq[String] = Nil,
+      sortWithin: Seq[String] = Nil, statsFor: Seq[String] = Nil)
+
+  /** One parse of one manifest: a table's whole state at `version` —
+    * schema (physical names), files, write layout and the operation label
+    * the version was committed with (`write`, `merge`, `restore`, …;
+    * manifests written before operation tracking read as `write`). A
+    * staged manifest parses to the same value under its slot number. */
+  private[tables] final case class Snapshot(version: Int, schema: StructType,
+      entries: Seq[FileEntry], layout: Layout, op: String)
+
   private def enc(s: String): String = URLEncoder.encode(s, UTF_8)
   private def dec(s: String): String = URLDecoder.decode(s, UTF_8)
 
@@ -490,11 +519,17 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * [[lastStreamBatch]]), so during the staging window (arbitrarily long
     * for [[transaction]]s) uncommitted data must not be reachable, and an
     * in-flight `stream_append:<id>` label must not advance the
-    * exactly-once gate before its commit is durable. */
-  private def writeManifest(name: String, version: Int, schema: StructType,
-      entries: Seq[FileEntry], op: String = "write"): Unit = {
-    val dir = tableDir(name).resolve(s"v_$version")
+    * exactly-once gate before its commit is durable. `snap.version` names
+    * the slot. */
+  private def writeManifest(name: String, snap: Snapshot): Unit = {
+    val dir = tableDir(name).resolve(s"v_${snap.version}")
     Files.createDirectories(dir)
+    val entries = snap.entries
+    val l = snap.layout
+    val layoutLine =
+      if (l == Layout()) Nil
+      else Seq(Seq(l.partitionBy, l.sortWithin, l.statsFor)
+        .map(_.map(enc).mkString(",")).mkString("#layout\t", "\t", ""))
     val dvLines = entries.filter(_.dvs.nonEmpty).map(e =>
       s"#dv\t${enc(e.rel)}\t${enc(e.dvs.mkString(","))}")
     val rowLines = entries.filter(_.rows >= 0).map(e =>
@@ -504,13 +539,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val nullLines = entries.filter(_.nulls.nonEmpty).map(e =>
       s"#nulls\t${enc(e.rel)}\t" + e.nulls.toSeq.sortBy(_._1)
         .map { case (c, n) => s"${enc(c)}=$n" }.mkString(","))
-    val lines = Seq(s"#schema\t${enc(schema.json)}", s"#op\t${enc(op)}") ++
-      dvLines ++ rowLines ++ baseLines ++ nullLines ++ entries.map { e =>
+    val lines = Seq(s"#schema\t${enc(snap.schema.json)}", s"#op\t${enc(snap.op)}") ++
+      layoutLine ++ dvLines ++ rowLines ++ baseLines ++ nullLines ++ entries.map { e =>
       (enc(e.rel) +: e.stats.toSeq.sortBy(_._1).flatMap { case (c, st) =>
         Seq(enc(c), enc(st.min), enc(st.max))
       }).mkString("\t")
     }
-    Files.write(stagedManifestPath(name, version),
+    Files.write(stagedManifestPath(name, snap.version),
       lines.mkString("\n").getBytes(UTF_8))
   }
 
@@ -527,15 +562,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // entries keep their bases; a file without a footer row count stays
     // unassigned (its rows read a NULL id rather than a wrong one).
     if (rowTrackingEnabled(name)) {
-      val staged = stagedManifestPath(name, version)
-      val (schema, entries, op) = parseManifest(staged, s"staged manifest $staged")
-      if (entries.exists(e => e.base < 0 && e.rows >= 0)) {
+      val staged = stagedSnapshot(name, version)
+      if (staged.entries.exists(e => e.base < 0 && e.rows >= 0)) {
         var hw = rowHighWater(name)
-        val based = entries.map { e =>
+        val based = staged.entries.map { e =>
           if (e.base < 0 && e.rows >= 0) { val b = hw; hw += e.rows; e.copy(base = b) }
           else e
         }
-        writeManifest(name, version, schema, based, op)
+        writeManifest(name, staged.copy(entries = based))
         setMeta(name, meta(name).copy(properties =
           meta(name).properties + ("row_high_water" -> hw.toString)))
       }
@@ -547,14 +581,21 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       java.nio.file.attribute.FileTime.from(java.time.Instant.now()))
   }
 
-  private def readManifest(name: String, version: Int): (StructType, Seq[FileEntry]) = {
-    val (schema, entries, _) = parseManifest(manifestPath(name, version),
-      s"manifest of $name v$version")
-    (schema, entries)
-  }
+  /** The live version's snapshot — the one place a missing table raises. */
+  private def snapshot(name: String): Snapshot =
+    snapshotAt(name, version(name).getOrElse(
+      throw new IllegalArgumentException(s"table not found: $name")))
 
-  private def parseManifest(path: Path, what: String)
-      : (StructType, Seq[FileEntry], String) = {
+  /** A committed version's snapshot (time travel, history, the diffs). */
+  private def snapshotAt(name: String, version: Int): Snapshot =
+    parseManifest(manifestPath(name, version), version, s"manifest of $name v$version")
+
+  /** A staged (not yet committed) version's snapshot. */
+  private def stagedSnapshot(name: String, version: Int): Snapshot =
+    parseManifest(stagedManifestPath(name, version), version,
+      s"staged manifest of $name v$version")
+
+  private def parseManifest(path: Path, version: Int, what: String): Snapshot = {
     val lines = new String(Files.readAllBytes(path), UTF_8)
       .split('\n').toSeq.filter(_.nonEmpty)
     val schema = lines.headOption.filter(_.startsWith("#schema\t")) match {
@@ -562,13 +603,21 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       case None => throw new IllegalStateException(s"$what has no schema")
     }
     // one pass over the `#tag<TAB>file<TAB>value` side lines (#dv, #rows,
-    // #base, #nulls): (tag, file) → raw value; `#schema`/`#op` have no file
+    // #base, #nulls): (tag, file) → raw value; `#schema`/`#op` have no
+    // file, `#layout` carries its three column lists
     val (tagged, fileLines) = lines.partition(_.startsWith("#"))
     val side: Map[(String, String), String] = tagged.iterator.map(_.split('\t'))
-      .collect { case Array(tag, rel, v) => (tag, dec(rel)) -> v }.toMap
+      .collect { case Array(tag, rel, v) if tag != "#layout" => (tag, dec(rel)) -> v }.toMap
     val op = tagged.collectFirst {
       case l if l.startsWith("#op\t") => dec(l.split('\t')(1))
     }.getOrElse("write")
+    val layout = tagged.collectFirst {
+      case l if l.startsWith("#layout\t") =>
+        // limit -1 keeps empty lists (a sort-only layout has no partitions)
+        val Array(pb, sw, sf) = l.split("\t", -1).tail.map(s =>
+          if (s.isEmpty) Seq.empty[String] else s.split(',').toSeq.map(dec))
+        Layout(pb, sw, sf)
+    }.getOrElse(Layout())
     def long(tag: String, rel: String): Long = side.get((tag, rel)).fold(-1L)(_.toLong)
     val entries = fileLines.map { l =>
       val parts = l.split('\t')
@@ -584,70 +633,19 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           dec(kv.substring(0, i)) -> kv.substring(i + 1).toLong
         }.toMap))
     }
-    (schema, entries, op)
-  }
-
-  /** The operation string a version's manifest was committed with
-    * (`write`, `merge`, `update`, `delete`, `restore`, `clone`, `optimize`,
-    * …) — surfaced by [[history]] / DESCRIBE HISTORY. Manifests written
-    * before operation tracking read as `write`. */
-  private def manifestOp(name: String, version: Int): String =
-    new String(Files.readAllBytes(manifestPath(name, version)), UTF_8)
-      .split('\n').collectFirst {
-        case l if l.startsWith("#op\t") => dec(l.split('\t')(1))
-      }.getOrElse("write")
-
-  private def currentManifest(name: String): (StructType, Seq[FileEntry]) = {
-    val (_, schema, entries) = currentSnapshot(name)
-    (schema, entries)
-  }
-
-  /** The live version with its manifest. */
-  private def currentSnapshot(name: String): (Int, StructType, Seq[FileEntry]) = {
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $name"))
-    val (schema, entries) = readManifest(name, v)
-    (v, schema, entries)
+    Snapshot(version, schema, entries, layout, op)
   }
 
   private def absPath(name: String, rel: String): String =
     tableDir(name).resolve(rel).toString
 
-  /** input_file_name() → manifest-relative path. Paths outside the table
-    * directory (shallow-clone entries) relativize through `..` segments,
-    * matching how [[cloneTo]] anchors them. */
+  /** A `__graft_file` path → manifest-relative path. Paths outside the
+    * table directory (shallow-clone entries) relativize through `..`
+    * segments, matching how [[cloneTo]] anchors them. */
   private def relOf(name: String, fileUri: String): String = {
     val p = if (fileUri.startsWith("file:")) new java.net.URI(fileUri).getPath else fileUri
     tableDir(name).toAbsolutePath.normalize
       .relativize(Paths.get(p).toAbsolutePath.normalize).toString
-  }
-
-  // ------------------------------------------------------- layout metadata
-
-  /** Write-layout config (partition/sort/stat columns), persisted beside
-    * the snapshots so DML rewrites preserve the table's layout. */
-  private def layoutPath(name: String): Path = tableDir(name).resolve("_LAYOUT")
-
-  private def writeLayout(name: String, partitionBy: Seq[String], sortWithin: Seq[String],
-      statsFor: Seq[String]): Unit = {
-    val p = new java.util.Properties()
-    if (partitionBy.nonEmpty) p.setProperty("partition_by", partitionBy.mkString(","))
-    if (sortWithin.nonEmpty) p.setProperty("sort_within", sortWithin.mkString(","))
-    if (statsFor.nonEmpty) p.setProperty("stats_for", statsFor.mkString(","))
-    Files.createDirectories(tableDir(name))
-    val out = Files.newOutputStream(layoutPath(name))
-    try p.store(out, null) finally out.close()
-  }
-
-  private def readLayout(name: String): (Seq[String], Seq[String], Seq[String]) = {
-    if (!Files.exists(layoutPath(name))) (Nil, Nil, Nil)
-    else {
-      val p = new java.util.Properties()
-      val in = Files.newInputStream(layoutPath(name))
-      try p.load(in) finally in.close()
-      def get(k: String) = Option(p.getProperty(k)).map(_.split(',').toSeq).getOrElse(Nil)
-      (get("partition_by"), get("sort_within"), get("stats_for"))
-    }
   }
 
   // ----------------------------------------------------------- stats canon
@@ -1182,9 +1180,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * (the Iceberg `.files` / Delta DESCRIBE DETAIL inspection surface,
     * file edition). */
   def fileInventory(name: String): DataFrame = {
-    val (_, entries) = currentManifest(name)
     val rn = renames(name)
-    val rows = entries.map { e =>
+    val rows = snapshot(name).entries.map { e =>
       org.apache.spark.sql.Row(e.rel, e.rows,
         Files.size(Paths.get(absPath(name, e.rel))), e.dvs.size,
         e.stats.map { case (k, v) =>
@@ -1205,8 +1202,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** File list a predicate-bearing scan of `name` would open — exposed so
     * tests and tooling can assert data skipping. */
   def prunedFileList(name: String, pred: Option[Column]): Seq[String] = {
-    val (schema, entries) = currentManifest(name)
-    pred.map(p => pruneEntries(name, schema, entries, p)).getOrElse(entries).map(_.rel)
+    val snap = snapshot(name)
+    pred.map(p => pruneEntries(name, snap.schema, snap.entries, p)).getOrElse(snap.entries)
+      .map(_.rel)
   }
 
   // ---------------------------------------------------------------- writes
@@ -1228,7 +1226,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * concurrent writers can never claim the same version. */
   private def allocateVersion(name: String): (Int, Path) = {
     Files.createDirectories(tableDir(name))
-    var v = currentVersion(name).getOrElse(0) + 1
+    var v = version(name).getOrElse(0) + 1
     while (true) {
       try {
         val dir = tableDir(name).resolve(s"v_$v")
@@ -1295,8 +1293,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       if (!stage(next, dir)) dropAbortedVersion(dir)
       else withCommitLock(name) {
         val finalV = expectedBase match {
-          case Some(base) if currentVersion(name) != base =>
-            val cur = currentVersion(name)
+          case Some(base) if version(name) != base =>
+            val cur = version(name)
             val rebased = (base, cur) match {
               case (Some(bv), Some(cv)) if !strictCas => tryRebase(name, next, bv, cv)
               case _ => None
@@ -1316,10 +1314,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
             // they serialize in lock order): the pointer must never move
             // backward — history, timestamp travel and the change feed
             // all diff v against v-1 — so renumber past the interloper
-            if (currentVersion(name).exists(_ >= next)) {
-              val (stagedSchema, staged, opName) = parseManifest(
-                stagedManifestPath(name, next), s"staged v$next of $name")
-              val (v, d) = renumberStaged(name, next, stagedSchema, staged, opName)
+            if (version(name).exists(_ >= next)) {
+              val (v, d) = renumberStaged(name, stagedSnapshot(name, next))
               liveDir = d; v
             } else next
         }
@@ -1334,18 +1330,20 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * rows — and stage the manifest `carryOver ++ new` WITHOUT making it
     * current: the expensive half of a commit, shared by [[commit]] bodies
     * and multi-table [[transaction]]s (which stage every table first and
-    * swap all pointers together). Returns the new files' entries. On
-    * failure the slot is dropped. */
+    * swap all pointers together). The staged manifest records `layout`
+    * (in physical names) as the version's layout. Returns the new files'
+    * entries. On failure the slot is dropped. */
   private def stageVersion(name: String, next: Int, dir: Path, df: DataFrame,
-      partitionBy: Seq[String], sortWithin: Seq[String], statsFor: Seq[String],
-      carryOver: Seq[FileEntry], schemaHint: Option[StructType], op: String): Seq[FileEntry] = {
+      layout: Layout, carryOver: Seq[FileEntry], schemaHint: Option[StructType],
+      op: String): Seq[FileEntry] = {
     try {
       // Generated columns recompute, then CHECK constraints ride the write
       // plan (single pass, raise on violation) — every path that stages
       // data derives and validates what it writes. Both speak logical
       // names, so they apply BEFORE the column-mapping translation to the
       // physical names files store.
-      val checked = toPhysicalDf(name, enforceChecks(name, applyGeneratedColumns(name, df)))
+      val checked = toPhysicalDf(name,
+        enforceChecks(name, applyGeneratedColumns(name, df, schemaHint)))
       // logical→physical rename lookup is case-INsensitive (exact first):
       // a cased spelling of a RENAMED column must still find its physical
       // name, or it slips past resolveLoose below (which only knows
@@ -1357,15 +1355,15 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // (statsFor = "L_ORDERKEY" on column l_orderkey) otherwise slips
       // through the exact-case statCols filter below and silently
       // disables stats/pruning for that column. LOOSE on purpose — these
-      // lists ride every DML rewrite via readLayout and may legitimately
+      // lists ride every DML rewrite in the manifest and may legitimately
       // carry names a schema change removed; unknown names stay as-is
       // (and are dropped by the filter), they are not an error here.
-      def resolveLoose(c: String): String =
+      def resolveLoose(cs: Seq[String]): Seq[String] = cs.map(physName).map(c =>
         if (checked.columns.contains(c)) c
-        else checked.columns.find(_.equalsIgnoreCase(c)).getOrElse(c)
-      val (pbP, swP, sfP) = (partitionBy.map(physName).map(resolveLoose),
-        sortWithin.map(physName).map(resolveLoose),
-        statsFor.map(physName).map(resolveLoose))
+        else checked.columns.find(_.equalsIgnoreCase(c)).getOrElse(c))
+      val physLayout = Layout(resolveLoose(layout.partitionBy),
+        resolveLoose(layout.sortWithin), resolveLoose(layout.statsFor))
+      val Layout(pbP, swP, sfP) = physLayout
       // partition columns are duplicated into __p_* for the directory layout
       // so the REAL columns stay in the data files (manifest reads need no
       // hive partition reconstruction)
@@ -1439,8 +1437,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // instead of accreting one empty parquet per run
       val (empties, kept) = newEntries.partition(_.rows == 0)
       empties.foreach(e => Files.deleteIfExists(tableDir(name).resolve(e.rel)))
-      writeManifest(name, next, schemaHint.getOrElse(checked.schema), carryOver ++ kept, op)
-      writeLayout(name, pbP, swP, sfP)
+      writeManifest(name, Snapshot(next, schemaHint.getOrElse(checked.schema),
+        carryOver ++ kept, physLayout, op))
       kept
     } catch { case t: Throwable => dropAbortedVersion(dir); throw t }
   }
@@ -1448,20 +1446,22 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** [[commit]] of `df` staged by [[stageVersion]], plus the change-feed
     * rows and COPY INTO's loaded-file ledger inside the same staged
     * version directory — atomic with the commit (an abort drops them with
-    * the version). */
-  private def commitVersion(name: String, df: DataFrame, partitionBy: Seq[String],
-      sortWithin: Seq[String], statsFor: Seq[String], carryOver: Seq[FileEntry],
-      schemaHint: Option[StructType] = None, expectedBase: Option[Option[Int]] = None,
-      op: String = "write", cdc: Option[DataFrame] = None,
-      copyFiles: Seq[String] = Nil, strictCas: Boolean = false): Unit =
+    * the version). Returns the entries of the files it staged. */
+  private def commitVersion(name: String, df: DataFrame, layout: Layout,
+      carryOver: Seq[FileEntry], schemaHint: Option[StructType] = None,
+      expectedBase: Option[Option[Int]] = None, op: String = "write",
+      cdc: Option[DataFrame] = None, copyFiles: Seq[String] = Nil,
+      strictCas: Boolean = false): Seq[FileEntry] = {
+    var added = Seq.empty[FileEntry]
     commit(name, expectedBase, strictCas) { (next, dir) =>
-      stageVersion(name, next, dir, df, partitionBy, sortWithin, statsFor,
-        carryOver, schemaHint, op)
+      added = stageVersion(name, next, dir, df, layout, carryOver, schemaHint, op)
       cdc.foreach(_.write.parquet(dir.resolve("cdc").toString))
       if (copyFiles.nonEmpty)
         Files.write(dir.resolve("copy_files"), copyFiles.mkString("\n").getBytes(UTF_8))
       true
     }
+    added
+  }
 
   /** WriteSerializable optimistic-concurrency resolution (Delta's default
     * isolation level): a commit whose compare-and-swap fails because the
@@ -1484,33 +1484,42 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * keeping version numbers monotone in commit order (history,
     * timestamp travel and the change feed all diff `v` against `v-1`).
     *
+    * The layout rebases field by field (partition, sort, stats columns):
+    * a field this commit changed relative to its base keeps this commit's
+    * value, any other takes the current version's. A layout difference
+    * never conflicts, so a blind append racing a re-partitioning replace
+    * lands under the replace's layout.
+    *
     * Returns the (version, directory) to promote, or None on genuine
     * conflict. Must run inside the table's commit lock. */
   private def tryRebase(name: String, next: Int, baseV: Int, curV: Int)
       : Option[(Int, Path)] = {
     if (!Files.exists(manifestPath(name, baseV))) return None // base vacuumed
-    val (stagedSchema, staged, op) =
-      parseManifest(stagedManifestPath(name, next), s"staged v$next of $name")
-    val (baseSchema, baseEntries) = readManifest(name, baseV)
-    val (curSchema, curEntries) = readManifest(name, curV)
-    if (curSchema.json != baseSchema.json) return None // concurrent schema change
-    val baseByRel = baseEntries.map(e => e.rel -> e).toMap
-    val curByRel = curEntries.map(e => e.rel -> e).toMap
-    val stagedRels = staged.map(_.rel).toSet
-    val ourAdded = staged.filterNot(e => baseByRel.contains(e.rel))
-    val ourModified = staged.filter(e => baseByRel.get(e.rel).exists(_ != e))
+    val staged = stagedSnapshot(name, next)
+    val base = snapshotAt(name, baseV)
+    val cur = snapshotAt(name, curV)
+    if (cur.schema.json != base.schema.json) return None // concurrent schema change
+    val baseByRel = base.entries.map(e => e.rel -> e).toMap
+    val curByRel = cur.entries.map(e => e.rel -> e).toMap
+    val stagedRels = staged.entries.map(_.rel).toSet
+    val ourAdded = staged.entries.filterNot(e => baseByRel.contains(e.rel))
+    val ourModified = staged.entries.filter(e => baseByRel.get(e.rel).exists(_ != e))
     val readSet = (ourModified.map(_.rel) ++
-      baseEntries.map(_.rel).filterNot(stagedRels)).toSet
+      base.entries.map(_.rel).filterNot(stagedRels)).toSet
     if (isolationLevel(name) == "serializable" && readSet.nonEmpty) return None
     // every file we rewrite/modify/delete must be untouched by the
     // interleaved commits — identity includes the deletion-vector set
     if (!readSet.forall(r => curByRel.get(r).contains(baseByRel(r)))) return None
-    val rebased = curEntries.filterNot(e => readSet(e.rel)) ++ ourModified ++ ourAdded
+    def field(f: Layout => Seq[String]): Seq[String] =
+      if (f(staged.layout) != f(base.layout)) f(staged.layout) else f(cur.layout)
+    val rebased = staged.copy(
+      entries = cur.entries.filterNot(e => readSet(e.rel)) ++ ourModified ++ ourAdded,
+      layout = Layout(field(_.partitionBy), field(_.sortWithin), field(_.statsFor)))
     if (next > curV) {
-      writeManifest(name, next, stagedSchema, rebased, op)
+      writeManifest(name, rebased)
       Some((next, tableDir(name).resolve(s"v_$next")))
     } else {
-      Some(renumberStaged(name, next, stagedSchema, rebased, op))
+      Some(renumberStaged(name, rebased))
     }
   }
 
@@ -1525,9 +1534,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * cleanup deleted the other's committed files. Child moves are
     * same-filesystem atomic renames inside a dir only this writer can
     * touch; readers cannot see the version until _MANIFEST promotes
-    * inside the commit lock. Must run inside that lock. */
-  private def renumberStaged(name: String, next: Int, schema: StructType,
-      entries: Seq[FileEntry], op: String): (Int, Path) = {
+    * inside the commit lock. Must run inside that lock. `staged` is the
+    * manifest to write, still numbered by its staging slot. */
+  private def renumberStaged(name: String, staged: Snapshot): (Int, Path) = {
+    val next = staged.version
     val old = tableDir(name).resolve(s"v_$next")
     val (claimed, ndir) = allocateVersion(name)
     listDir(old).foreach { child =>
@@ -1537,9 +1547,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     Files.delete(old)
     def reanchor(p: String) =
       if (p.startsWith(s"v_$next/")) s"v_$claimed/" + p.stripPrefix(s"v_$next/") else p
-    val reanchored = entries.map(e =>
-      e.copy(rel = reanchor(e.rel), dvs = e.dvs.map(reanchor)))
-    writeManifest(name, claimed, schema, reanchored, op)
+    writeManifest(name, staged.copy(version = claimed, entries = staged.entries.map(e =>
+      e.copy(rel = reanchor(e.rel), dvs = e.dvs.map(reanchor)))))
     (claimed, tableDir(name).resolve(s"v_$claimed"))
   }
 
@@ -1551,10 +1560,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     meta(name).properties.getOrElse("isolation", "writeserializable").toLowerCase
 
   def setIsolation(name: String, level: String): Unit = {
-    val l = level.toLowerCase
-    require(l == "writeserializable" || l == "serializable",
-      s"isolation must be writeserializable or serializable, got $level")
-    setMeta(name, meta(name).copy(properties = meta(name).properties + ("isolation" -> l)))
+    TableStore.checkKnob(name, "isolation", level)
+    setMeta(name, meta(name).copy(properties =
+      meta(name).properties + ("isolation" -> level.toLowerCase)))
   }
 
   /** Manifest entries for freshly-written files. Footer reads are
@@ -1759,19 +1767,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     } finally TableStore.breakersActive.remove(key)
   }
 
-  /** The table's current committed version (the optimistic-concurrency
-    * token for [[replaceIfUnchanged]]). */
-  def version(name: String): Option[Int] = currentVersion(name)
-
   /** Compare-and-swap snapshot write: commits `df` only if the table is
     * still at `baseVersion` (what this writer read); otherwise raises
     * `ConcurrentModificationException` — the lost-update protection the
     * internal DML paths get automatically. */
-  def replaceIfUnchanged(name: String, df: DataFrame, baseVersion: Int): Unit = {
-    val (pb, sw, sf) = readLayout(name)
-    commitVersion(name, df, pb, sw, sf, carryOver = Seq.empty,
+  def replaceIfUnchanged(name: String, df: DataFrame, baseVersion: Int): Unit =
+    commitVersion(name, df, snapshot(name).layout, carryOver = Seq.empty,
       expectedBase = Some(Some(baseVersion)), strictCas = true)
-  }
 
   /** OPTIMIZE-style compaction: rewrite the current manifest's files into
     * `targetFiles` consolidated files (per partition directory when the
@@ -1792,14 +1794,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * the multi-dimensional version of the sort-based data skipping a
     * single sort column gives. */
   def compact(name: String, targetFiles: Int = 1, zorderBy: Seq[String] = Nil): Unit = {
-    val (v, schema, entries) = currentSnapshot(name)
-    val base = Some(v)
-    val (pb, sw, sf) = readLayout(name)
-    val df0 = rewriteSource(name, v, schema, entries)
-    // readEntries yields the LOGICAL view; layout names from the sidecar
+    val snap = snapshot(name)
+    val Layout(pb, sw, sf) = snap.layout
+    val df0 = rewriteSource(name, snap, snap.entries)
+    // readEntries yields the LOGICAL view; layout names in the manifest
     // are physical — translate for the frame-side operations below
-    val logicalOf = { val rn = renames(name); (c: String) => rn.getOrElse(c, c) }
-    val lpb = pb.map(logicalOf)
+    val lpb = logicalNames(name, pb)
     if (zorderBy.isEmpty) {
       // consolidation lays files out ALONG the stats layout when one is
       // recorded (declared statsFor or adaptive merge keys): range-
@@ -1807,17 +1807,17 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // [min, max] box, so the stats the layout asks for actually skip.
       // A round-robin rewrite would give every file the full value range,
       // leaving equality probes to bloom false-positive luck.
-      val lsf = sf.map(logicalOf).filter(c =>
+      val lsf = logicalNames(name, sf).filter(c =>
         df0.columns.exists(_.equalsIgnoreCase(c)))
       val df =
         if (lpb.nonEmpty) df0.repartition(lpb.map(col): _*)
         else if (lsf.nonEmpty)
           df0.repartitionByRange(math.max(1, targetFiles), lsf.map(col): _*)
         else df0.repartition(math.max(1, targetFiles))
-      commitVersion(name, df, lpb, sw.map(logicalOf), sf.map(logicalOf), carryOver = Seq.empty,
-        schemaHint = Some(schema), expectedBase = Some(base), op = "optimize")
+      commitVersion(name, df, snap.layout, carryOver = Seq.empty,
+        schemaHint = Some(snap.schema), expectedBase = Some(Some(snap.version)), op = "optimize")
     } else {
-      val lschema = logicalizeSchema(name, schema)
+      val lschema = logicalizeSchema(name, snap.schema)
       zorderBy.foreach { c =>
         val dt = lschema.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
         require(dt.exists(_.isInstanceOf[NumericType]),
@@ -1848,9 +1848,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       val probes = (1 until (1 << bits)).map(_.toDouble / (1 << bits)).toArray
       val quantiles = df0.stat.approxQuantile(zorderBy.toArray, probes, 0.01)
       val prepared = zorderRoute(df0, zorderBy, quantiles, bits, targetParts)
-      commitVersion(name, prepared, pb, sortWithin = Nil,
-        statsFor = (sf ++ sw ++ zorderBy).distinct, carryOver = Seq.empty,
-        schemaHint = Some(schema), expectedBase = Some(base), op = "optimize")
+      commitVersion(name, prepared, Layout(pb, Nil, (sf ++ sw ++ zorderBy).distinct),
+        carryOver = Seq.empty, schemaHint = Some(snap.schema),
+        expectedBase = Some(Some(snap.version)), op = "optimize")
       // persist the curve (bits + per-column quantile boundaries) so
       // INCREMENTAL passes ([[clusterNew]], OPTIMIZE WHERE … ZORDER BY)
       // can route later files onto the SAME cells without re-sketching —
@@ -1861,7 +1861,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         ("zorder.cols" -> zorderBy.mkString(",")) +
         ("zorder.bits" -> bits.toString) +
         ("zorder.bounds" -> quantiles.map(_.mkString(":")).mkString(";")) +
-        ("zorder.base" -> currentVersion(name).get.toString)))
+        ("zorder.base" -> version(name).get.toString)))
     }
   }
 
@@ -1923,25 +1923,22 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * spans that overlap the already-clustered generation — predicate
     * pruning stays selective across generations, and the cost is the
     * candidate slice, never the table. */
-  private def clusterEntries(name: String, candidates: Seq[FileEntry],
+  private def clusterEntries(name: String, snap: Snapshot, candidates: Seq[FileEntry],
       targetFiles: Int): Unit = {
     val (cols, bits, bounds, _) = zorderSpec(name).getOrElse(
       throw new IllegalStateException(
         s"$name: no persisted ZORDER curve — run OPTIMIZE … ZORDER BY first"))
-    val (v, schema, entries) = currentSnapshot(name)
-    val base = Some(v)
     val cset = candidates.map(_.rel).toSet
     if (candidates.isEmpty ||
         (candidates.size <= 1 && !candidates.exists(_.dvs.nonEmpty))) return
-    val (pb, sw, sf) = readLayout(name)
-    val prepared = zorderRoute(rewriteSource(name, v, schema, candidates),
+    val Layout(pb, sw, sf) = snap.layout
+    val prepared = zorderRoute(rewriteSource(name, snap, candidates),
       cols, bounds, bits, math.max(1, targetFiles))
-    commitVersion(name, prepared, pb, sortWithin = Nil,
-      statsFor = (sf ++ sw ++ cols).distinct,
-      carryOver = entries.filterNot(e => cset(e.rel)),
-      schemaHint = Some(schema), expectedBase = Some(base), op = "optimize")
+    commitVersion(name, prepared, Layout(pb, Nil, (sf ++ sw ++ cols).distinct),
+      carryOver = snap.entries.filterNot(e => cset(e.rel)), schemaHint = Some(snap.schema),
+      expectedBase = Some(Some(snap.version)), op = "optimize")
     setMeta(name, meta(name).copy(properties = meta(name).properties +
-      ("zorder.base" -> currentVersion(name).get.toString)))
+      ("zorder.base" -> version(name).get.toString)))
   }
 
   /** Cluster the files ADDED since the last (full or incremental) ZORDER
@@ -1953,12 +1950,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val (_, _, _, basev) = zorderSpec(name).getOrElse(
       throw new IllegalStateException(
         s"$name: no persisted ZORDER curve — run OPTIMIZE … ZORDER BY first"))
-    val (_, entries) = currentManifest(name)
+    val snap = snapshot(name)
     val clustered: Set[String] =
-      if (!Files.exists(manifestPath(name, basev))) Set.empty
-      else readManifest(name, basev)._2.map(_.rel).toSet
-    clusterEntries(name, entries.filterNot(e => clustered(e.rel) && e.dvs.isEmpty),
-      targetFiles)
+      if (basev == snap.version) snap.entries.map(_.rel).toSet
+      else if (!hasVersion(name, basev)) Set.empty
+      else snapshotAt(name, basev).entries.map(_.rel).toSet
+    clusterEntries(name, snap,
+      snap.entries.filterNot(e => clustered(e.rel) && e.dvs.isEmpty), targetFiles)
   }
 
   /** OPTIMIZE … WHERE … ZORDER BY: re-cluster only the files the
@@ -1966,9 +1964,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * persisted curve. `targetFiles` ≤ 0 keeps the candidate file count —
     * clustering re-ranges files, it doesn't consolidate them. */
   def zorderWhere(name: String, pred: Column, targetFiles: Int = 0): Unit = {
-    val (schema, entries) = currentManifest(name)
-    val candidates = pruneEntries(name, schema, entries, pred)
-    clusterEntries(name, candidates,
+    val snap = snapshot(name)
+    val candidates = pruneEntries(name, snap.schema, snap.entries, pred)
+    clusterEntries(name, snap, candidates,
       if (targetFiles > 0) targetFiles else math.max(1, candidates.size))
   }
 
@@ -1978,20 +1976,25 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * with the predicate's slice, never the table. Deletion vectors on
     * candidate files fold in; every other file carries over untouched. */
   def compactWhere(name: String, pred: Column, targetFiles: Int = 1): Unit = {
-    val (v, schema, entries) = currentSnapshot(name)
-    val base = Some(v)
-    val candidates = pruneEntries(name, schema, entries, pred)
+    val snap = snapshot(name)
+    val candidates = pruneEntries(name, snap.schema, snap.entries, pred)
     if (candidates.size <= 1 && !candidates.exists(_.dvs.nonEmpty)) return
     val cset = candidates.map(_.rel).toSet
-    val (pb, sw, sf) = readLayout(name)
-    val df0 = rewriteSource(name, v, schema, candidates)
-    val logicalOf = { val rn = renames(name); (c: String) => rn.getOrElse(c, c) }
-    val lpb = pb.map(logicalOf)
+    rewriteCompacted(name, snap, candidates, snap.entries.filterNot(e => cset(e.rel)),
+      targetFiles)
+  }
+
+  /** Commit `rewrite` (entries of `snap`) consolidated into one file per
+    * partition value, or `targetFiles` files when unpartitioned, with
+    * `carryOver` untouched: the shared tail of the bounded compactions. */
+  private def rewriteCompacted(name: String, snap: Snapshot, rewrite: Seq[FileEntry],
+      carryOver: Seq[FileEntry], targetFiles: Int): Unit = {
+    val df0 = rewriteSource(name, snap, rewrite)
+    val lpb = logicalNames(name, snap.layout.partitionBy)
     val df = if (lpb.nonEmpty) df0.repartition(lpb.map(col): _*)
              else df0.repartition(math.max(1, targetFiles))
-    commitVersion(name, df, pb, sw, sf,
-      carryOver = entries.filterNot(e => cset(e.rel)),
-      schemaHint = Some(schema), expectedBase = Some(base), op = "optimize")
+    commitVersion(name, df, snap.layout, carryOver, schemaHint = Some(snap.schema),
+      expectedBase = Some(Some(snap.version)), op = "optimize")
   }
 
   /** Bin-packing compaction: rewrite only the manifest entries that are
@@ -2001,19 +2004,16 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * scale-safe form of compaction a 100 TB table can run continuously —
     * the cost is the small-file backlog, never the table. No-op when
     * fewer than two entries qualify. */
-  def compactSmall(name: String, smallBytes: Long = 32L << 20): Unit = {
-    val (v, schema, entries) = currentSnapshot(name)
-    val base = Some(v)
-    val (small, big) = entries.partition(e =>
+  def compactSmall(name: String, smallBytes: Long = 32L << 20): Unit =
+    compactSmallOf(name, snapshot(name), smallBytes, minFiles = 2)
+
+  /** [[compactSmall]] of `snap`, run only when at least `minFiles`
+    * entries qualify. */
+  private def compactSmallOf(name: String, snap: Snapshot, smallBytes: Long,
+      minFiles: Int): Unit = {
+    val (small, big) = snap.entries.partition(e =>
       e.dvs.nonEmpty || Files.size(Paths.get(absPath(name, e.rel))) < smallBytes)
-    if (small.size <= 1) return
-    val (pb, sw, sf) = readLayout(name)
-    val df0 = rewriteSource(name, v, schema, small)
-    val logicalOf = { val rn = renames(name); (c: String) => rn.getOrElse(c, c) }
-    val lpb = pb.map(logicalOf)
-    val df = if (lpb.nonEmpty) df0.repartition(lpb.map(col): _*) else df0.repartition(1)
-    commitVersion(name, df, pb, sw, sf, carryOver = big,
-      schemaHint = Some(schema), expectedBase = Some(base), op = "optimize")
+    if (small.size >= math.max(2, minFiles)) rewriteCompacted(name, snap, small, big, 1)
   }
 
   /** Enable auto-compaction: after any [[append]] leaves `smallFiles` or
@@ -2028,11 +2028,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   private def maybeAutoCompact(name: String): Unit = {
     val props = meta(name).properties
     props.get("auto_compact_files").map(_.toInt).foreach { threshold =>
-      val smallBytes = props.get("auto_compact_bytes").map(_.toLong).getOrElse(32L << 20)
-      val (_, entries) = currentManifest(name)
-      val small = entries.count(e =>
-        e.dvs.nonEmpty || Files.size(Paths.get(absPath(name, e.rel))) < smallBytes)
-      if (small >= threshold) compactSmall(name, smallBytes)
+      compactSmallOf(name, snapshot(name),
+        props.get("auto_compact_bytes").map(_.toLong).getOrElse(32L << 20), threshold)
     }
   }
 
@@ -2044,7 +2041,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * always collected for partition + sort columns; `statsFor` adds more. */
   def createOrReplace(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
       sortWithin: Seq[String] = Nil, statsFor: Seq[String] = Nil): Unit = {
-    commitVersion(name, df, partitionBy, sortWithin, statsFor, carryOver = Seq.empty)
+    commitVersion(name, df, Layout(partitionBy, sortWithin, statsFor), carryOver = Seq.empty)
     // a REPLACE may swap in a schema that invalidates generated-column
     // declarations (the column or a dependency no longer exists) — drop
     // the stale ones AFTER the commit succeeded, never as a side effect
@@ -2053,7 +2050,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // frame: a replace that omits an always-derived column (the normal
     // generated-column usage — the write derives it) keeps its
     // declaration, because the committed schema carries the column.
-    val committed = logicalizeSchema(name, currentManifest(name)._1).fieldNames
+    val committed = logicalizeSchema(name, snapshot(name).schema).fieldNames
     val stale = generatedColumns(name).filter { case (logical, sql) =>
       !committed.exists(_.equalsIgnoreCase(logical)) || {
         import org.apache.spark.sql.functions.expr
@@ -2097,17 +2094,20 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * to make replays detectable ([[lastStreamBatch]]). */
   def append(name: String, df: DataFrame, op: String = "append",
       copyFiles: Seq[String] = Nil): Unit = {
-    val base = currentVersion(name).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $name"))
-    val (schema, entries) = readManifest(name, base)
-    val (pb, sw, sf) = readLayout(name)
+    appendTo(name, snapshot(name), df, op, copyFiles)
+    maybeAutoCompact(name)
+  }
+
+  /** [[append]]'s commit onto the snapshot the caller read; returns the
+    * entries of the files it added. */
+  private def appendTo(name: String, snap: Snapshot, df: DataFrame, op: String,
+      copyFiles: Seq[String]): Seq[FileEntry] = {
     val (keyed, cleanup) = applyIdentity(name, df)
     try
-      commitVersion(name, alignedForAppend(name, schema, keyed), pb, sw, sf,
-        carryOver = entries, schemaHint = Some(schema),
-        expectedBase = Some(Some(base)), op = op, copyFiles = copyFiles)
+      commitVersion(name, alignedForAppend(name, snap.schema, keyed), snap.layout,
+        carryOver = snap.entries, schemaHint = Some(snap.schema),
+        expectedBase = Some(Some(snap.version)), op = op, copyFiles = copyFiles)
     finally cleanup()
-    maybeAutoCompact(name)
   }
 
   /** K4+: `COPY INTO` — idempotent, file-tracked bulk ingestion
@@ -2126,9 +2126,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * @return (files loaded, rows loaded) */
   def copyInto(name: String, from: String, format: String = "parquet",
       pattern: Option[String] = None, force: Boolean = false): (Long, Long) = {
-    val base = currentVersion(name).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $name"))
-    val (schema, entries) = readManifest(name, base)
+    val snap = snapshot(name)
     val fromPath = Paths.get(from).toAbsolutePath.normalize
     require(Files.exists(fromPath), s"COPY INTO $name: source $from not found")
     val ext = format.toLowerCase match {
@@ -2151,25 +2149,20 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       if (force) candidates
       else { val done = loadedCopyFiles(name); candidates.filterNot(done) }
     if (fresh.isEmpty) return (0L, 0L)
-    val visible = logicalizeSchema(name, schema)
+    val visible = logicalizeSchema(name, snap.schema)
     val df = format.toLowerCase match {
       case "parquet" => spark.read.parquet(fresh: _*)
       // text formats can't self-describe types — the table's schema rules
       case "csv" => spark.read.option("header", "true").schema(visible).csv(fresh: _*)
       case "json" => spark.read.schema(visible).json(fresh: _*)
     }
-    append(name, df, op = s"copy_into:${fresh.size}", copyFiles = fresh)
-    // rows loaded = the row counts of the files THIS copy's commit added
-    // (its version still exists even if auto-compaction committed after).
-    // A before/after sum over the whole manifest would be wrong whenever
-    // any entry carries the unknown sentinel (rows = -1) or a compaction
-    // folded deletion vectors between the two reads.
-    val copyV = versions(name)
-      .filter(v => manifestOp(name, v).startsWith("copy_into:")).max
-    val beforeRels = entries.map(_.rel).toSet
-    val added = readManifest(name, copyV)._2.filterNot(e => beforeRels(e.rel))
-    val loaded = if (added.exists(_.rows < 0)) -1L else added.map(_.rows).sum
-    (fresh.size.toLong, loaded)
+    // rows loaded = the footer row counts of the files THIS copy's commit
+    // staged — not a before/after sum over the manifest, which an entry
+    // carrying the unknown sentinel (rows = -1), a rebase over a
+    // concurrent append or the auto-compaction below would skew
+    val added = appendTo(name, snap, df, s"copy_into:${fresh.size}", fresh)
+    maybeAutoCompact(name)
+    (fresh.size.toLong, if (added.exists(_.rows < 0)) -1L else added.map(_.rows).sum)
   }
 
   /** Every source file a committed COPY INTO has loaded: the folded
@@ -2198,11 +2191,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * it. */
   def lastStreamBatch(name: String): Option[Long] =
     if (!exists(name)) None
-    else (versions(name).flatMap { v =>
-      val op = manifestOp(name, v)
-      if (op.startsWith("stream_append:")) Some(op.stripPrefix("stream_append:").toLong)
-      else None
-    } ++ meta(name).properties.get("stream_high_water").map(_.toLong)).maxOption
+    else streamHighWater(name, versions(name).map(snapshotAt(name, _).op))
+
+  /** [[lastStreamBatch]] over the given retained op labels. */
+  private def streamHighWater(name: String, ops: Seq[String]): Option[Long] =
+    (ops.collect { case op if op.startsWith("stream_append:") =>
+      op.stripPrefix("stream_append:").toLong } ++
+      meta(name).properties.get("stream_high_water").map(_.toLong)).maxOption
 
   /** SCD2-layout write: clusters the history by a derived `is_current`
     * flag so current-version readers skip every closed-version file via
@@ -2214,18 +2209,18 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
   // ----------------------------------------------------------------- reads
 
-  /** Parquet scan of plain `entries` of manifest `version` through a
+  /** Parquet scan of plain `entries` of `snap` through a
     * [[ManifestFileIndex]]: the MANIFEST schema is explicit (never
     * inferred), so files written before a metadata-only column addition
     * NULL-fill the new columns, and the index prunes files by manifest
     * stats against whatever filters the query pushes into the scan.
     * Physical column names. */
-  private def scanManifest(name: String, version: Int, schema: StructType,
-      entries: Seq[FileEntry], props: Map[String, String]): DataFrame = {
-    val ctx = skipContext(props, schema, logical = false)
-    val index = new ManifestFileIndex(tableDir(name), version, entries.map(_.rel),
+  private def scanManifest(name: String, snap: Snapshot, entries: Seq[FileEntry],
+      props: Map[String, String]): DataFrame = {
+    val ctx = skipContext(props, snap.schema, logical = false)
+    val index = new ManifestFileIndex(tableDir(name), snap.version, entries.map(_.rel),
       pred => pruneWith(name, ctx, entries, pred).map(_.rel))
-    org.apache.spark.sql.GraftShims.parquetScan(spark, index, schema)
+    org.apache.spark.sql.GraftShims.parquetScan(spark, index, snap.schema)
   }
 
   /** Scan `entries` with row identity: every row carries `__graft_file`
@@ -2234,10 +2229,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * with deletion vectors already applied. The identity pair is what DVs
     * address rows by — this scan backs both the DV read path and the
     * merge-on-read DML discovery pass. */
-  private def scanWithPos(name: String, version: Int, schema: StructType,
-      entries: Seq[FileEntry]): DataFrame = {
+  private def scanWithPos(name: String, snap: Snapshot, entries: Seq[FileEntry]): DataFrame = {
     val props = meta(name).properties
-    val scan0 = scanManifest(name, version, schema, entries, props)
+    val scan0 = scanManifest(name, snap, entries, props)
       .withColumn("__graft_file",
         regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
       .withColumn("__graft_pos", col("_metadata.row_index"))
@@ -2267,22 +2261,21 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     }
   }
 
-  /** Read the entries of manifest `version` as one DataFrame in the
-    * table's logical (visible) names. Plain entries take the pruning
-    * [[scanManifest]]; entries carrying deletion vectors are read through
-    * [[scanWithPos]] (row-position anti-join). */
-  private def readEntries(name: String, version: Int, schema: StructType,
-      entries: Seq[FileEntry]): DataFrame = {
+  /** Read `entries` of `snap` as one DataFrame in the table's logical
+    * (visible) names. Plain entries take the pruning [[scanManifest]];
+    * entries carrying deletion vectors are read through [[scanWithPos]]
+    * (row-position anti-join). */
+  private def readEntries(name: String, snap: Snapshot, entries: Seq[FileEntry]): DataFrame = {
     val props = meta(name).properties
-    val lschema = logicalizeWith(props, schema)
+    val lschema = logicalizeWith(props, snap.schema)
     if (entries.isEmpty) emptyDf(lschema)
     else {
       val (withDv, plain) = entries.partition(_.dvs.nonEmpty)
       val parts = Seq(
         if (plain.isEmpty) None
-        else Some(toLogical(props, schema, scanManifest(name, version, schema, plain, props))),
+        else Some(toLogical(props, snap.schema, scanManifest(name, snap, plain, props))),
         if (withDv.isEmpty) None
-        else Some(scanWithPos(name, version, schema, withDv)
+        else Some(scanWithPos(name, snap, withDv)
           .select(lschema.fieldNames.map(col).toSeq: _*))).flatten
       parts.reduce(_ unionByName _)
     }
@@ -2293,8 +2286,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * so `read(name).filter(p)` and SQL lookups open only the files `p`
     * can touch. */
   def read(name: String): DataFrame = {
-    val (v, schema, entries) = currentSnapshot(name)
-    readEntries(name, v, schema, entries)
+    val snap = snapshot(name)
+    readEntries(name, snap, snap.entries)
   }
 
   /** The table as a STREAMING source (Delta's `spark.readStream.table`):
@@ -2303,7 +2296,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * Options (`startingVersion`, `maxFilesPerTrigger`, `ignoreChanges`,
     * …) pass through. */
   def readStream(name: String, options: Map[String, String] = Map.empty): DataFrame = {
-    require(exists(name), s"table not found: $name")
+    snapshot(name) // raises on a missing table
     val r = spark.readStream.format("graft-table")
       .option("root", root).option("table", name)
     options.foreach { case (k, v) => r.option(k, v) }
@@ -2338,9 +2331,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * bloom every file survives, which is correct, just not fast. */
   private[graft] def readPointPruned(name: String, points: DataFrame,
       cols: Seq[String]): (DataFrame, (Int, Int)) = {
-    val (v, schema, entries) = currentSnapshot(name)
-    val total = entries.size
-    val boxCand = boxPointCandidates(name, entries, points, cols)
+    val snap = snapshot(name)
+    val boxCand = boxPointCandidates(name, snap, points, cols)
     // blooms refine the box survivors UNCONDITIONALLY (not only when the
     // boxes pruned nothing): on a mixed layout — a few narrow-box files
     // among many full-range hash-key files — the box stage prunes a
@@ -2351,13 +2343,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // driver-capped inside bloomRefineSet (over-cap probes fall through
     // to the box result).
     val cand = bloomRefineSet(name, boxCand, points, cols)
-    (readEntries(name, v, schema, cand), (cand.size, total))
+    (readEntries(name, snap, cand), (cand.size, snap.entries.size))
   }
 
   /** [min, max]-box stage of [[readPointPruned]]: the manifest files
     * whose per-column boxes admit at least one probe row. */
-  private def boxPointCandidates(name: String, entries: Seq[FileEntry],
+  private def boxPointCandidates(name: String, snap: Snapshot,
       points: DataFrame, cols: Seq[String]): Seq[FileEntry] = {
+    val entries = snap.entries
     val total = entries.size
     def full = entries
     // a small manifest has nothing worth the probe's extra jobs (a
@@ -2368,7 +2361,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     def statsOf(e: FileEntry): Map[String, ColStats] =
       if (rn.isEmpty) e.stats
       else e.stats.map { case (k, v) => (rn.getOrElse(k, k), v) }
-    val lschema = logicalizeSchema(name, currentManifest(name)._1)
+    val lschema = logicalizeSchema(name, snap.schema)
     // numeric cols compare after a cast of the stat string; string cols
     // compare directly — Spark's string ordering is unsigned byte-wise,
     // the same order the footer stats were computed under (see cmp)
@@ -2469,8 +2462,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
   /** Time travel: read a specific retained snapshot version. */
   def readVersion(name: String, version: Int): DataFrame = {
-    val (schema, entries) = readManifest(name, version)
-    readEntries(name, version, schema, entries)
+    val snap = snapshotAt(name, version)
+    readEntries(name, snap, snap.entries)
   }
 
   /** Read a transaction-STAGED (not yet committed) version: the staged
@@ -2478,9 +2471,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * transaction publishes. The read-your-writes primitive behind
     * [[Txn.readStaged]]. */
   private[tables] def readStagedVersion(name: String, version: Int): DataFrame = {
-    val (schema, entries, _) = parseManifest(stagedManifestPath(name, version),
-      s"staged manifest of $name v$version")
-    readEntries(name, version, schema, entries)
+    val snap = stagedSnapshot(name, version)
+    readEntries(name, snap, snap.entries)
   }
 
   /** Row-level change feed between two retained versions (Delta CDF
@@ -2493,18 +2485,17 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * files, not the table. Duplicate rows diff by multiplicity
     * (exceptAll). */
   def changesBetween(name: String, fromVersion: Int, toVersion: Int): DataFrame = {
-    val (schemaA, a) = readManifest(name, fromVersion)
-    val (schemaB, b) = readManifest(name, toVersion)
-    require(schemaA.fieldNames.sameElements(schemaB.fieldNames),
+    val (sa, sb) = (snapshotAt(name, fromVersion), snapshotAt(name, toVersion))
+    require(sa.schema.fieldNames.sameElements(sb.schema.fieldNames),
       s"$name: schema changed between v$fromVersion and v$toVersion — " +
         "diff the versions on their common columns explicitly")
     // entry identity includes the deletion-vector set: a file whose DVs
     // changed between versions contributes its row-level delta (the file
     // is re-read on both sides and the unchanged rows cancel in exceptAll)
-    val aKeys = a.map(e => (e.rel, e.dvs)).toSet
-    val bKeys = b.map(e => (e.rel, e.dvs)).toSet
-    val onlyA = readEntries(name, fromVersion, schemaA, a.filterNot(e => bKeys((e.rel, e.dvs))))
-    val onlyB = readEntries(name, toVersion, schemaB, b.filterNot(e => aKeys((e.rel, e.dvs))))
+    val aKeys = sa.entries.map(e => (e.rel, e.dvs)).toSet
+    val bKeys = sb.entries.map(e => (e.rel, e.dvs)).toSet
+    val onlyA = readEntries(name, sa, sa.entries.filterNot(e => bKeys((e.rel, e.dvs))))
+    val onlyB = readEntries(name, sb, sb.entries.filterNot(e => aKeys((e.rel, e.dvs))))
     import org.apache.spark.sql.functions.lit
     onlyB.exceptAll(onlyA).withColumn("_change_type", lit("insert"))
       .unionByName(onlyA.exceptAll(onlyB).withColumn("_change_type", lit("delete")))
@@ -2553,34 +2544,39 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           "which has been vacuumed — its changes cannot be replayed; start " +
           "the feed at a retained version or rebuild the consumer"))
     val all = versions(name)
+    // each manifest is parsed at most once: a version's snapshot also
+    // serves as the next version's predecessor, and a version with a
+    // change-feed sidecar needs none
+    val parsed = scala.collection.mutable.Map.empty[Int, Snapshot]
+    def at(v: Int): Snapshot = parsed.getOrElseUpdate(v, snapshotAt(name, v))
     val frames = all.filter(v => v > fromVersion && v <= toVersion).map { v =>
-      val (schemaCur, cur) = readManifest(name, v)
-      val op = manifestOp(name, v)
       val cdcPath = cdcDir(name, v)
       val prevOpt = all.filter(_ < v).maxOption
       def vcol(df: DataFrame) = df.withColumn("_commit_version", lit(v))
+      lazy val cur = at(v)
+      lazy val op = cur.op
       if (Files.exists(cdcPath)) {
         // sidecars store the logical names in force at write time
         Some(vcol(spark.read.parquet(cdcPath.toString)))
       } else if (layoutOnly.exists(op.startsWith)) None
       else if (prevOpt.isEmpty) {
         if (v == 1) // table creation: everything is an insert
-          Some(vcol(readEntries(name, v, schemaCur, cur)
+          Some(vcol(readEntries(name, cur, cur.entries)
             .withColumn("_change_type", lit("insert"))))
         else throw new IllegalStateException(
           s"$name: version $v's predecessor was vacuumed — its changes " +
             "cannot be reconstructed; start the feed at a retained version")
       } else {
-        val (_, prev) = readManifest(name, prevOpt.get)
-        val prevKeys = prev.map(e => (e.rel, e.dvs)).toSet
-        val curKeys = cur.map(e => (e.rel, e.dvs)).toSet
-        val added = cur.filterNot(e => prevKeys((e.rel, e.dvs)))
-        val removed = prev.filterNot(e => curKeys((e.rel, e.dvs)))
+        val prev = at(prevOpt.get)
+        val prevKeys = prev.entries.map(e => (e.rel, e.dvs)).toSet
+        val curKeys = cur.entries.map(e => (e.rel, e.dvs)).toSet
+        val added = cur.entries.filterNot(e => prevKeys((e.rel, e.dvs)))
+        val removed = prev.entries.filterNot(e => curKeys((e.rel, e.dvs)))
         if (removed.isEmpty)
-          Some(vcol(readEntries(name, v, schemaCur, added)
+          Some(vcol(readEntries(name, cur, added)
             .withColumn("_change_type", lit("insert"))))
         else if (((op == "write" || op == "txn_write") &&
-              added.size == cur.size && removed.size == prev.size) ||
+              added.size == cur.entries.size && removed.size == prev.entries.size) ||
             op == "restore") {
           // full overwrite (direct or transactional): old snapshot deleted,
           // new snapshot inserted. RESTORE reconstructs the same way from
@@ -2590,10 +2586,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           // intermediate OPTIMIZE moved between files emits as a
           // delete+insert pair, which nets to zero under the multiset
           // semantics every feed consumer (MV refresh included) applies
-          val (schemaPrev, _) = readManifest(name, prevOpt.get)
-          Some(vcol(readEntries(name, prevOpt.get, schemaPrev, removed)
+          Some(vcol(readEntries(name, prev, removed)
             .withColumn("_change_type", lit("delete"))
-            .unionByName(readEntries(name, v, schemaCur, added)
+            .unionByName(readEntries(name, cur, added)
               .withColumn("_change_type", lit("insert")), allowMissingColumns = true)))
         } else throw new IllegalStateException(
           s"$name version $v (op $op) rewrote files but recorded no change data — " +
@@ -2603,8 +2598,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     frames.flatten
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse {
-        val (schema, _) = currentManifest(name)
-        emptyDf(logicalizeSchema(name, schema)
+        val live = version(name).fold(snapshot(name))(at)
+        emptyDf(logicalizeSchema(name, live.schema)
           .add("_change_type", StringType).add("_commit_version", IntegerType))
       }
   }
@@ -2615,10 +2610,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * store's own reads use). */
   private[graft] def prunedInventory(name: String, pred: Option[Column])
       : Seq[(String, Long, Boolean, Long)] = {
-    val v = currentVersion(name).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $name"))
-    val (schema, entries) = readManifest(name, v)
-    val kept = pred.map(p => pruneEntries(name, schema, entries, p)).getOrElse(entries)
+    val snap = snapshot(name)
+    val kept = pred.map(p => pruneEntries(name, snap.schema, snap.entries, p))
+      .getOrElse(snap.entries)
     kept.map { e =>
       val abs = absPath(name, e.rel)
       (abs, Files.size(Paths.get(abs)), e.dvs.nonEmpty, e.rows)
@@ -2642,12 +2636,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * sizes come from the filesystem at plan time (local metadata). */
   private[graft] def snapshotInventory(name: String, version: Int)
       : (StructType, String, Seq[(String, Long, Boolean)]) = {
-    val (schema, entries) = readManifest(name, version)
-    val files = entries.map { e =>
+    val snap = snapshotAt(name, version)
+    val files = snap.entries.map { e =>
       val abs = absPath(name, e.rel)
       (abs, Files.size(Paths.get(abs)), e.dvs.nonEmpty)
     }
-    (schema, manifestOp(name, version), files)
+    (snap.schema, snap.op, files)
   }
 
   /** Commit history, newest first: (version, commit time, operation, file
@@ -2659,13 +2653,20 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * never wrong. */
   def history(name: String): Seq[(Int, java.time.Instant, String, Int, Long)] =
     versions(name).reverse.map { v =>
-      val entries = readManifest(name, v)._2
-      val rows =
-        if (entries.exists(e => e.rows < 0 || e.dvs.nonEmpty)) -1L
-        else entries.map(_.rows).sum
-      (v, Files.getLastModifiedTime(manifestPath(name, v)).toInstant,
-        manifestOp(name, v), entries.size, rows)
+      val snap = snapshotAt(name, v)
+      (v, commitTime(name, v), snap.op, snap.entries.size, rowsOf(snap.entries))
     }
+
+  /** A committed version's commit time: its manifest's mtime, which
+    * [[promoteManifest]] sets at commit. */
+  private def commitTime(name: String, version: Int): java.time.Instant =
+    Files.getLastModifiedTime(manifestPath(name, version)).toInstant
+
+  /** Physical row count of `es`, -1 (unknown) when some file predates
+    * footer row counts or carries deletion vectors (its live count is
+    * below the physical one). */
+  private def rowsOf(es: Seq[FileEntry]): Long =
+    if (es.exists(e => e.rows < 0 || e.dvs.nonEmpty)) -1L else es.map(_.rows).sum
 
   /** Per-commit operation metrics (Delta's operationMetrics shape),
     * computed from the MANIFEST DIFF against the previous retained
@@ -2677,46 +2678,46 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   def operationMetrics(name: String, version: Int): (Int, Int, Long, Long) = {
     val vs = versions(name)
     require(vs.contains(version), s"$name: no retained version $version")
-    val cur = readManifest(name, version)._2
+    val cur = snapshotAt(name, version).entries
     val prev = vs.filter(_ < version).maxOption
-      .map(readManifest(name, _)._2).getOrElse(Nil)
+      .map(snapshotAt(name, _).entries).getOrElse(Nil)
     // entry identity includes the DV set — a DV-only commit shows as
     // remove+add of the same file (its live rows changed)
     val curKeys = cur.map(e => (e.rel, e.dvs)).toSet
     val prevKeys = prev.map(e => (e.rel, e.dvs)).toSet
     val added = cur.filterNot(e => prevKeys((e.rel, e.dvs)))
     val removed = prev.filterNot(e => curKeys((e.rel, e.dvs)))
-    def rowsOf(es: Seq[FileEntry]): Long =
-      if (es.exists(e => e.rows < 0 || e.dvs.nonEmpty)) -1L else es.map(_.rows).sum
     (added.size, removed.size, rowsOf(added), rowsOf(removed))
   }
 
   /** The latest version committed at or before `ts` (timestamp travel). */
-  def versionAsOf(name: String, ts: java.time.Instant): Int =
-    history(name).collectFirst { case (v, t, _, _, _) if !t.isAfter(ts) => v }
+  def versionAsOf(name: String, ts: java.time.Instant): Int = {
+    val vs = versions(name)
+    vs.reverse.find(v => !commitTime(name, v).isAfter(ts))
       .getOrElse(throw new IllegalArgumentException(
         s"$name TIMESTAMP AS OF $ts precedes the oldest retained commit " +
-          s"(${history(name).lastOption.map(_._2).getOrElse("none")})"))
+          s"(${vs.headOption.map(commitTime(name, _)).getOrElse("none")})"))
+  }
 
-  /** Metadata-only [[commit]] of an existing entry list — the primitive
-    * behind [[restore]], the clones and the schema/metadata DDL: no data
-    * moves. DDL passes the version it read as `base`, so it rebases over
-    * a concurrent append instead of dropping it; without a base (restore,
-    * clones) the commit replaces. */
-  private def commitManifestOnly(name: String, schema: StructType,
-      entries: Seq[FileEntry], op: String, base: Option[Int] = None): Unit =
+  /** Metadata-only [[commit]] of `from` — the snapshot the commit derives
+    * from, with its schema, entries and layout — labelled `op`: the
+    * primitive behind [[restore]], the clones and the schema/metadata
+    * DDL; no data moves. DDL passes the version it read as `base`, so it
+    * rebases over a concurrent append instead of dropping it; without a
+    * base (restore, clones) the commit replaces. */
+  private def commitManifestOnly(name: String, from: Snapshot, op: String,
+      base: Option[Int] = None): Unit =
     commit(name, base.map(Some(_))) { (next, _) =>
-      writeManifest(name, next, schema, entries, op); true
+      writeManifest(name, from.copy(version = next, op = op)); true
     }
 
-  /** Delta RESTORE: make `version`'s content the table's new CURRENT
-    * version, as a fresh commit (history is preserved; the restore itself
-    * appears in it). Metadata-only — the old manifest is re-pointed, no
-    * data is rewritten. */
-  def restore(name: String, version: Int): Unit = {
-    val (schema, entries) = readManifest(name, version)
-    commitManifestOnly(name, schema, entries, "restore")
-  }
+  /** Delta RESTORE: make `version`'s content — its files, schema and
+    * write layout — the table's new CURRENT version, as a fresh commit
+    * (history is preserved; the restore itself appears in it).
+    * Metadata-only — the old manifest is re-pointed, no data is
+    * rewritten. */
+  def restore(name: String, version: Int): Unit =
+    commitManifestOnly(name, snapshotAt(name, version), "restore")
 
   /** ALTER TABLE … ADD COLUMNS: **metadata-only** schema widening — the
     * new columns are appended to the manifest schema and every existing
@@ -2724,14 +2725,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * addition on a 100 TB table commits in milliseconds and rewrites
     * nothing — Delta's schema-evolution model. */
   def addColumns(name: String, cols: StructType): Unit = {
-    val (v, schema, entries) = currentSnapshot(name)
+    val snap = snapshot(name)
     // collide against BOTH name spaces: visible logical names and on-disk
     // physical names (incl. renamed/dropped columns still in old files)
-    val taken = schema.fieldNames ++ logicalizeSchema(name, schema).fieldNames
+    val taken = snap.schema.fieldNames ++ logicalizeSchema(name, snap.schema).fieldNames
     val dup = cols.fieldNames.filter(c => taken.exists(_.equalsIgnoreCase(c)))
     require(dup.isEmpty, s"$name ADD COLUMNS: column(s) already exist: ${dup.mkString(", ")}")
-    commitManifestOnly(name, StructType(schema.fields ++ cols.fields), entries, "add_columns",
-      Some(v))
+    commitManifestOnly(name, snap.copy(schema = StructType(snap.schema.fields ++ cols.fields)),
+      "add_columns", Some(snap.version))
   }
 
   // ------------------------------------------- column mapping (rename/drop)
@@ -2743,8 +2744,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   // inputs, merge sources — speaks logical names; translation happens at
   // exactly two boundaries: data-file writes (all through
   // [[stageVersion]]) rename logical→physical, and parquet reads
-  // ([[readEntries]]/[[scanWithPos]]) rename physical→logical. Manifests,
-  // layout sidecars and per-file stats always store physical names.
+  // ([[readEntries]]/[[scanWithPos]]) rename physical→logical. Manifests
+  // (schema and layout) and per-file stats always store physical names.
   //
   // Name-based mapping (vs Delta's id-based) carries one restriction,
   // enforced by [[renameColumn]]: a new logical name may not collide with
@@ -2841,7 +2842,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * file is rewritten at any scale; the rename is one sidecar write plus
     * a manifest-only commit for DESCRIBE HISTORY. */
   def renameColumn(name: String, from: String, to: String): Unit = {
-    val (v, schema, entries) = currentSnapshot(name)
+    val snap = snapshot(name)
+    val schema = snap.schema
     val visible = logicalizeSchema(name, schema)
     val field = visible.fields.find(_.name.equalsIgnoreCase(from)).getOrElse(
       throw new IllegalArgumentException(
@@ -2864,15 +2866,15 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       case None => m.columnComments
     }
     setMeta(name, m.copy(properties = props, columnComments = comments))
-    commitManifestOnly(name, schema, entries, "rename_column", Some(v))
+    commitManifestOnly(name, snap, "rename_column", Some(snap.version))
   }
 
   /** ALTER TABLE … DROP COLUMN — **metadata-only** (column mapping): old
     * files keep the column's bytes but no read ever selects it; new files
     * simply omit it. */
   def dropColumn(name: String, colName: String): Unit = {
-    val (v, schema, entries) = currentSnapshot(name)
-    val visible = logicalizeSchema(name, schema)
+    val snap = snapshot(name)
+    val visible = logicalizeSchema(name, snap.schema)
     val field = visible.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
       throw new IllegalArgumentException(
         s"$name DROP COLUMN: no column $colName (columns: ${visible.fieldNames.mkString(", ")})"))
@@ -2880,8 +2882,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val physical = physicalName(name, field.name)
     referencedInMeta(name, field.name).foreach(ref => throw new IllegalArgumentException(
       s"$name DROP COLUMN $colName: referenced by $ref — drop it first"))
-    val (pb, sw, _) = readLayout(name)
-    require(!(pb ++ sw).exists(_.equalsIgnoreCase(physical)),
+    require(!(snap.layout.partitionBy ++ snap.layout.sortWithin)
+        .exists(_.equalsIgnoreCase(physical)),
       s"$name DROP COLUMN $colName: the table is partitioned/sorted by it — " +
         "rewrite the layout (createOrReplace) instead")
     val m = meta(name)
@@ -2893,7 +2895,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         s"notnull.$physical" - s"coldefault.$physical" +
         (s"coldrop.$physical" -> "1"),
       columnComments = m.columnComments - field.name))
-    commitManifestOnly(name, schema, entries, "drop_column", Some(v))
+    commitManifestOnly(name, snap, "drop_column", Some(snap.version))
   }
 
   // --------------------------------------------------------- generated columns
@@ -2910,8 +2912,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * the next write touches them — backfill explicitly with
     * `UPDATE t SET c = <expr>` (file-pruned) or a rewrite. */
   def setGeneratedColumn(name: String, colName: String, exprSql: String): Unit = {
-    val (schema, _) = currentManifest(name)
-    val visible = logicalizeSchema(name, schema)
+    val visible = logicalizeSchema(name, snapshot(name).schema)
     val field = visible.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
       throw new IllegalArgumentException(
         s"$name GENERATED COLUMN: no column $colName (columns: ${visible.fieldNames.mkString(", ")})"))
@@ -2938,12 +2939,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * missing a generation dependency (e.g. a REPLACE that redefines the
     * schema away from the expression) drops the declaration instead of
     * failing the write — the new schema wins, like createOrReplace wins
-    * over any other stale metadata. */
-  private def applyGeneratedColumns(name: String, df: DataFrame): DataFrame = {
+    * over any other stale metadata. `schema` is the physical schema the
+    * write commits under, when the caller already read it. */
+  private def applyGeneratedColumns(name: String, df: DataFrame,
+      schema: Option[StructType]): DataFrame = {
     val gens = generatedColumns(name)
-    if (gens.isEmpty || !exists(name)) df
+    if (gens.isEmpty || (schema.isEmpty && !exists(name))) df
     else {
-      val visible = logicalizeSchema(name, currentManifest(name)._1)
+      val visible = logicalizeSchema(name, schema.getOrElse(snapshot(name).schema))
       gens.foldLeft(df) { case (d, (logical, sql)) =>
         val declared = visible.fields.find(_.name.equalsIgnoreCase(logical))
         import org.apache.spark.sql.functions.expr
@@ -2978,8 +2981,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * failed commit may burn a key range but never double-issues. */
   def setIdentity(name: String, colName: String, start: Long = 1L, step: Long = 1L): Unit = {
     require(step != 0, "identity step must be non-zero")
-    val (schema, _) = currentManifest(name)
-    val visible = logicalizeSchema(name, schema)
+    val visible = logicalizeSchema(name, snapshot(name).schema)
     val field = visible.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
       throw new IllegalArgumentException(
         s"$name IDENTITY: no column $colName (columns: ${visible.fieldNames.mkString(", ")})"))
@@ -3053,18 +3055,16 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * only what it touches (copy-on-write), never the source's files; a
     * later vacuum of the clone leaves files outside its directory alone. */
   def cloneTo(src: String, dst: String): Unit = {
-    val (schema, entries) = currentManifest(src)
+    val snap = snapshot(src)
     require(!exists(dst), s"clone target $dst already exists")
     // re-anchor entries relative to the clone's table dir
     val srcDir = tableDir(src).toAbsolutePath
     val dstDir = tableDir(dst).toAbsolutePath
     Files.createDirectories(dstDir)
-    val reanchored = entries.map(e => e.copy(
+    val reanchored = snap.entries.map(e => e.copy(
       rel = dstDir.relativize(srcDir.resolve(e.rel)).toString,
       dvs = e.dvs.map(d => dstDir.relativize(srcDir.resolve(d)).toString)))
-    commitManifestOnly(dst, schema, reanchored, "clone")
-    val (pb, sw, sf) = readLayout(src)
-    writeLayout(dst, pb, sw, sf)
+    commitManifestOnly(dst, snap.copy(entries = reanchored), "clone")
     // table metadata travels with the clone — without the column-mapping
     // entries a clone of a renamed table would resurface physical names.
     // The streaming high-water marker does NOT: it certifies batches
@@ -3081,19 +3081,17 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * Cost is proportional to the snapshot's bytes, the same bill Delta's
     * DEEP CLONE pays; a failed copy cleans up and leaves no table. */
   def deepCloneTo(src: String, dst: String): Unit = {
-    val (schema, entries) = currentManifest(src)
+    val snap = snapshot(src)
     require(!exists(dst), s"clone target $dst already exists")
     val srcDir = tableDir(src).toAbsolutePath
     val dstDir = tableDir(dst).toAbsolutePath
     try {
-      (entries.map(_.rel) ++ entries.flatMap(_.dvs)).foreach { rel =>
+      (snap.entries.map(_.rel) ++ snap.entries.flatMap(_.dvs)).foreach { rel =>
         val to = dstDir.resolve(rel)
         Files.createDirectories(to.getParent)
         Files.copy(srcDir.resolve(rel), to)
       }
-      commitManifestOnly(dst, schema, entries, "deep_clone")
-      val (pb, sw, sf) = readLayout(src)
-      writeLayout(dst, pb, sw, sf)
+      commitManifestOnly(dst, snap, "deep_clone")
       val m = meta(src)
       setMeta(dst, m.copy(properties = m.properties - "stream_high_water"))
     } catch {
@@ -3109,11 +3107,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * carry min == max for their partition columns, so this is a
     * metadata-only listing: no data file is opened. */
   def partitionValues(name: String): Seq[String] = {
-    val pb = partitionColumns(name)
-    require(pb.nonEmpty, s"SHOW PARTITIONS $name: table is not partitioned")
-    val pbPhys = readLayout(name)._1
-    val (_, entries) = currentManifest(name)
-    entries.map { e =>
+    val snap = snapshot(name)
+    val pbPhys = snap.layout.partitionBy
+    require(pbPhys.nonEmpty, s"SHOW PARTITIONS $name: table is not partitioned")
+    val pb = logicalNames(name, pbPhys)
+    snap.entries.map { e =>
       pb.zip(pbPhys).map { case (lc, pc) =>
         s"$lc=${e.stats.get(pc).map(_.min).getOrElse("__HIVE_DEFAULT_PARTITION__")}"
       }.mkString("/")
@@ -3233,54 +3231,40 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * current snapshot with one metadata-only commit. */
   def enableRowTracking(name: String): Unit = {
     if (rowTrackingEnabled(name)) return
-    val (v, schema, entries) = currentSnapshot(name)
-    require(entries.forall(_.rows >= 0),
+    val snap = snapshot(name)
+    require(snap.entries.forall(_.rows >= 0),
       s"enable row tracking on $name: some files predate footer row counts — " +
         "run OPTIMIZE first")
     setMeta(name, meta(name).copy(properties =
       meta(name).properties + ("rowtracking" -> "true")))
-    commitManifestOnly(name, schema, entries, "enable_row_tracking", Some(v))
+    commitManifestOnly(name, snap, "enable_row_tracking", Some(snap.version))
   }
 
   /** The table with a stable `_row_id` column. Requires
     * [[enableRowTracking]]. */
   def readWithRowIds(name: String): DataFrame = {
     require(rowTrackingEnabled(name), s"$name: row tracking is not enabled")
-    val (v, schema, entries) = currentSnapshot(name)
-    rowIdRead(name, v, schema, entries, "_row_id")
+    val snap = snapshot(name)
+    rowIdRead(name, snap, snap.entries, "_row_id")
   }
 
   /** Read `entries` for a REWRITE: like [[readEntries]], but when the
     * table tracks row ids the frame additionally carries the hidden
     * materialized-id column, so the rewrite's output files preserve each
     * surviving row's id physically. */
-  private def rewriteSource(name: String, version: Int, schema: StructType,
-      entries: Seq[FileEntry]): DataFrame =
-    if (!rowTrackingEnabled(name)) readEntries(name, version, schema, entries)
-    else rowIdRead(name, version, schema, entries, TableStore.RowIdCol)
+  private def rewriteSource(name: String, snap: Snapshot, entries: Seq[FileEntry]): DataFrame =
+    if (!rowTrackingEnabled(name)) readEntries(name, snap, entries)
+    else rowIdRead(name, snap, entries, TableStore.RowIdCol)
 
-  /** Logical view of `entries` plus `outCol` = each row's current id:
-    * the materialized hidden column when the file carries one, else the
-    * file's base + in-file position; NULL only for files with no base
-    * (pre-tracking files never backfilled). One scan — the base lookup
-    * is a broadcast of the (file, base) manifest map. */
-  private def rowIdRead(name: String, version: Int, schema: StructType, entries: Seq[FileEntry],
+  /** Logical view of `entries` plus `outCol` = each row's current id —
+    * [[posScanWithIds]]' id column under the name the caller wants. Row
+    * tracking must be on. */
+  private def rowIdRead(name: String, snap: Snapshot, entries: Seq[FileEntry],
       outCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce}
-    val lnames = logicalizeSchema(name, schema).fieldNames.toSeq
-    if (entries.isEmpty)
-      return emptyDf(StructType(logicalizeSchema(name, schema).fields :+
-        StructField(outCol, LongType, nullable = true)))
-    val schemaExt = StructType(schema.fields :+
-      StructField(TableStore.RowIdCol, LongType, nullable = true))
-    val scan = scanWithPos(name, version, schemaExt, entries)
-    val baseMap = spark.createDataFrame(entries.map(e =>
-        (Paths.get(absPath(name, e.rel)).toAbsolutePath.normalize.toString, e.base)))
-      .toDF("__base_file", "__base")
-    scan.join(broadcast(baseMap), scan("__graft_file") === col("__base_file"), "left")
-      .withColumn(outCol, coalesce(col(TableStore.RowIdCol),
-        when(col("__base") >= 0, col("__base") + col("__graft_pos"))))
-      .select(lnames.map(col) :+ col(outCol): _*)
+    val lschema = logicalizeSchema(name, snap.schema)
+    if (entries.isEmpty) emptyDf(lschema.add(outCol, LongType, nullable = true))
+    else posScanWithIds(name, snap, entries)
+      .select(lschema.fieldNames.toSeq.map(col) :+ col(TableStore.RowIdCol).as(outCol): _*)
   }
 
   /** Strip the hidden id column from frames that face users (change-feed
@@ -3317,19 +3301,19 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** [[scanWithPos]] over `entries` that, when row tracking is on, also
     * resolves each row's CURRENT id into the hidden column — the
     * materialized value when the file carries one, else the file's base +
-    * in-file position. The scan every merge-on-read rewrite reads: an
-    * appended post-image must preserve the row id it replaces. */
-  private def posScanWithIds(name: String, version: Int, schema: StructType,
-      entries: Seq[FileEntry]): DataFrame = {
+    * in-file position; NULL only for files with no base (pre-tracking
+    * files never backfilled). One scan — the base lookup is a broadcast
+    * of the (file, base) manifest map. The scan every merge-on-read
+    * rewrite reads (an appended post-image must preserve the row id it
+    * replaces), and under [[rowIdRead]] every copy-on-write one. */
+  private def posScanWithIds(name: String, snap: Snapshot, entries: Seq[FileEntry]): DataFrame = {
     val tracking = rowTrackingEnabled(name)
-    val s0 = scanWithPos(name, version,
-      if (!tracking) schema
-      else StructType(schema.fields :+
-        StructField(TableStore.RowIdCol, LongType, nullable = true)),
+    val s0 = scanWithPos(name,
+      if (!tracking) snap
+      else snap.copy(schema = snap.schema.add(TableStore.RowIdCol, LongType, nullable = true)),
       entries)
     if (!tracking) s0
     else {
-      import org.apache.spark.sql.functions.{broadcast, coalesce}
       val baseMap = spark.createDataFrame(entries.map(e =>
           (Paths.get(absPath(name, e.rel)).toAbsolutePath.normalize.toString, e.base)))
         .toDF("__base_file", "__base")
@@ -3347,18 +3331,15 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * and UPDATE appends the rewritten rows as new files through
     * [[stageVersion]] (so they follow the table layout). Existing data
     * files are never modified or rewritten. */
-  private def commitMorDml(name: String, cond: Column,
+  private def commitMorDml(name: String, snap: Snapshot, cond: Column,
       set: Option[Map[String, Column]], op: String): Unit = {
-    val base = currentVersion(name).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $name"))
-    val (schema, entries) = readManifest(name, base)
-    val candidates = pruneEntries(name, schema, entries, cond)
+    val candidates = pruneEntries(name, snap.schema, snap.entries, cond)
     if (candidates.isEmpty) return
-    commit(name, Some(Some(base))) { (next, dir) =>
-      val live = posScanWithIds(name, base, schema, candidates)
-      val (touched, carry) = writeDv(name, next, candidates, entries, live.filter(cond))
+    commit(name, Some(Some(snap.version))) { (next, dir) =>
+      val live = posScanWithIds(name, snap, candidates)
+      val (touched, carry) = writeDv(name, next, candidates, snap.entries, live.filter(cond))
       touched.nonEmpty && { // no matching rows: nothing to commit
-        val lschema = logicalizeSchema(name, schema)
+        val lschema = logicalizeSchema(name, snap.schema)
         // one projection so every SET expression sees the PRE-image row
         // (see the copy-on-write update path for the fold hazard)
         val pre = live.filter(cond)
@@ -3367,13 +3348,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
             s.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(pre(f.name))
           } ++ extra: _*)
         set match {
-          case None => writeManifest(name, next, schema, carry, op)
+          case None => writeManifest(name, snap.copy(version = next, entries = carry, op = op))
           case Some(s) =>
             // post-images keep the row id of the row they replace
             val updated = postImage(s,
               if (rowTrackingEnabled(name)) Seq(pre(TableStore.RowIdCol)) else Nil)
-            val (pb, sw, sf) = readLayout(name)
-            stageVersion(name, next, dir, updated, pb, sw, sf, carry, Some(schema), op)
+            stageVersion(name, next, dir, updated, snap.layout, carry, Some(snap.schema), op)
         }
         // change feed: the DV'd rows are the pre-images; an update's
         // appended rewrite is the post-image set (deterministic re-derive
@@ -3422,15 +3402,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * `cond` — the copy-on-write discovery pass. Stats-pruned first, so a
     * selective predicate over a sorted/partitioned table scans only the
     * candidate files it could possibly touch. */
-  private def touchedFiles(name: String, version: Int, schema: StructType, entries: Seq[FileEntry],
-      cond: Column): Set[String] = {
-    val candidates = pruneEntries(name, schema, entries, cond)
+  private def touchedFiles(name: String, snap: Snapshot, cond: Column): Set[String] = {
+    val candidates = pruneEntries(name, snap.schema, snap.entries, cond)
     if (candidates.isEmpty) Set.empty
     // scanWithPos (not readEntries + input_file_name): the DV-applied read
     // is a UNION of plain and anti-joined branches, where
     // input_file_name() is undefined — the scan's own __graft_file column
     // is the per-branch file identity
-    else scanWithPos(name, version, schema, candidates)
+    else scanWithPos(name, snap, candidates)
       .filter(cond)
       .select(col("__graft_file")).distinct()
       .collect().map(r => relOf(name, r.getString(0))).toSet
@@ -3443,8 +3422,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * can only shrink the true match set). Returns None when the source has
     * no non-null value for some key — no row can possibly match, because
     * `t.k = s.k` is never true against an all-NULL side. */
-  private def mergeCandidates(name: String, schema: StructType, entries: Seq[FileEntry],
+  private def mergeCandidates(name: String, snap: Snapshot,
       source: DataFrame, keys: Seq[String]): Option[Seq[FileEntry]] = {
+    val (schema, entries) = (snap.schema, snap.entries)
     // a 1-2 file table has nothing worth pruning — skip the source-stats
     // jobs entirely (they cost more than the scan they would save)
     if (entries.size <= 2) return Some(entries)
@@ -3506,19 +3486,17 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // (`SET ACCTBAL = 0` on column acctbal) otherwise silently left the
     // column untouched, and an unknown column silently no-opped instead
     // of erroring. Same r14 bug class as the INSERT column list.
+    val snap = snapshot(name)
+    val lschema = logicalizeSchema(name, snap.schema)
     val set = MergeInto.normalizeSet(
-      read(name).columns.toSeq, set0,
+      lschema.fieldNames.toSeq, set0,
       spark.conf.get("spark.sql.caseSensitive", "false").toBoolean,
       s"UPDATE $name SET")
-    if (dmlMode(name) == "mor") commitMorDml(name, cond, Some(set), "update")
+    if (dmlMode(name) == "mor") commitMorDml(name, snap, cond, Some(set), "update")
     else {
-      val base = currentVersion(name).getOrElse(
-        throw new IllegalArgumentException(s"table not found: $name"))
-      val (schema, entries) = readManifest(name, base)
-      val touched = touchedFiles(name, base, schema, entries, cond)
+      val touched = touchedFiles(name, snap, cond)
       if (touched.isEmpty) return // no matching rows anywhere — nothing to commit
-      val subset = rewriteSource(name, base, schema, entries.filter(e => touched(e.rel)))
-      val lschema = logicalizeSchema(name, schema)
+      val subset = rewriteSource(name, snap, snap.entries.filter(e => touched(e.rel)))
       // SQL UPDATE semantics: every SET expression (and the WHERE) sees
       // the PRE-image row, so all assignments evaluate in ONE projection.
       // A sequential withColumn fold would let a later SET (or the
@@ -3537,32 +3515,29 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         Some(pre.withColumn("_change_type", lit("update_preimage"))
           .unionByName(post.withColumn("_change_type", lit("update_postimage"))))
       }
-      val (pb, sw, sf) = readLayout(name)
-      commitVersion(name, updated, pb, sw, sf,
-        carryOver = entries.filterNot(e => touched(e.rel)), schemaHint = Some(schema),
-        expectedBase = Some(Some(base)), op = "update", cdc = cdc)
+      commitVersion(name, updated, snap.layout,
+        carryOver = snap.entries.filterNot(e => touched(e.rel)), schemaHint = Some(snap.schema),
+        expectedBase = Some(Some(snap.version)), op = "update", cdc = cdc)
     }
   }
 
   /** K6: DELETE FROM … WHERE — file-pruned copy-on-write, or a pure
     * deletion-vector commit in `mor` mode. */
-  def delete(name: String, cond: Column): Unit =
-    if (dmlMode(name) == "mor") commitMorDml(name, cond, None, "delete")
+  def delete(name: String, cond: Column): Unit = {
+    val snap = snapshot(name)
+    if (dmlMode(name) == "mor") commitMorDml(name, snap, cond, None, "delete")
     else {
-      val base = currentVersion(name).getOrElse(
-        throw new IllegalArgumentException(s"table not found: $name"))
-      val (schema, entries) = readManifest(name, base)
-      val touched = touchedFiles(name, base, schema, entries, cond)
+      val touched = touchedFiles(name, snap, cond)
       if (touched.isEmpty) return
-      val subset = rewriteSource(name, base, schema, entries.filter(e => touched(e.rel)))
+      val subset = rewriteSource(name, snap, snap.entries.filter(e => touched(e.rel)))
       val cdc = if (!cdfEnabled(name)) None
         else Some(dropRowIdCol(subset.filter(cond))
           .withColumn("_change_type", lit("delete")))
-      val (pb, sw, sf) = readLayout(name)
-      commitVersion(name, subset.filter(!cond || cond.isNull), pb, sw, sf,
-        carryOver = entries.filterNot(e => touched(e.rel)), schemaHint = Some(schema),
-        expectedBase = Some(Some(base)), op = "delete", cdc = cdc)
+      commitVersion(name, subset.filter(!cond || cond.isNull), snap.layout,
+        carryOver = snap.entries.filterNot(e => touched(e.rel)), schemaHint = Some(snap.schema),
+        expectedBase = Some(Some(snap.version)), op = "delete", cdc = cdc)
     }
+  }
 
   /** Delta's `replaceWhere` selective overwrite: in ONE atomic commit,
     * every row satisfying `cond` is deleted and `df` is inserted in its
@@ -3578,13 +3553,15 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * its own region AND duplicate what lives there now — silent
     * corruption, so it errors here instead. */
   def overwriteWhere(name: String, df: DataFrame, cond: Column,
-      op: String = "replace_where"): Unit = {
-    val base = currentVersion(name).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $name"))
-    val (schema, entries) = readManifest(name, base)
+      op: String = "replace_where"): Unit =
+    overwriteIn(name, snapshot(name), df, cond, op)
+
+  /** [[overwriteWhere]] onto the snapshot the caller read. */
+  private def overwriteIn(name: String, snap: Snapshot, df: DataFrame, cond: Column,
+      op: String): Unit = {
     val (keyed, cleanup) = applyIdentity(name, df)
     try {
-      val raw = alignedForAppend(name, schema, keyed)
+      val raw = alignedForAppend(name, snap.schema, keyed)
       // constraint enforcement rides the write plan itself (the CHECK
       // pattern, [[enforceChecks]]): a row where cond is not true (false
       // OR null) raises DURING the single write job — no separate
@@ -3596,26 +3573,31 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           lit(s"replaceWhere on $name: incoming rows do not all satisfy the " +
             "predicate — every inserted row must belong to the replaced region; row: "),
           to_json(struct(raw.columns.toSeq.map(col): _*)))).cast("boolean")))
-      val touched = touchedFiles(name, base, schema, entries, cond)
-      val subset = rewriteSource(name, base, schema, entries.filter(e => touched(e.rel)))
+      val touched = touchedFiles(name, snap, cond)
+      val subset = rewriteSource(name, snap, snap.entries.filter(e => touched(e.rel)))
       val cdc = if (!cdfEnabled(name)) None else
         Some(dropRowIdCol(subset.filter(cond))
           .withColumn("_change_type", lit("delete"))
           .unionByName(aligned.withColumn("_change_type", lit("insert"))))
-      val (pb, sw, sf) = readLayout(name)
       commitVersion(name,
         subset.filter(!cond || cond.isNull).unionByName(withNullRowId(name, aligned)),
-        pb, sw, sf,
-        carryOver = entries.filterNot(e => touched(e.rel)), schemaHint = Some(schema),
-        expectedBase = Some(Some(base)), op = op, cdc = cdc)
+        snap.layout, carryOver = snap.entries.filterNot(e => touched(e.rel)),
+        schemaHint = Some(snap.schema), expectedBase = Some(Some(snap.version)), op = op,
+        cdc = cdc)
     } finally cleanup()
   }
 
   /** LOGICAL names of the table's declared partition columns (empty when
-    * unpartitioned) — the layout file records physical names; callers
-    * speak the visible view. */
+    * unpartitioned) — the manifest's layout records physical names;
+    * callers speak the visible view. */
   def partitionColumns(name: String): Seq[String] =
-    readLayout(name)._1.map(p => renames(name).getOrElse(p, p))
+    logicalNames(name, snapshot(name).layout.partitionBy)
+
+  /** Physical column names (a layout's) → the logical names in force. */
+  private def logicalNames(name: String, physical: Seq[String]): Seq[String] = {
+    val rn = renames(name)
+    physical.map(p => rn.getOrElse(p, p))
+  }
 
   /** Spark's dynamic partition overwrite (`INSERT OVERWRITE … PARTITION
     * (p)`) for store tables: replaces exactly the partitions present in
@@ -3627,7 +3609,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * pruning confines the rewrite to those partitions' files. */
   def overwritePartitions(name: String, df: DataFrame,
       op: String = "overwrite_partitions"): Unit = {
-    val pb = partitionColumns(name)
+    val snap = snapshot(name)
+    val pb = logicalNames(name, snap.layout.partitionBy)
     require(pb.nonEmpty,
       s"overwritePartitions on $name: table is not partitioned — " +
         "use overwriteWhere or createOrReplace")
@@ -3639,7 +3622,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val cond = tuples.map(t => pb.zipWithIndex.map { case (c, i) =>
       col(c) <=> lit(t.get(i))
     }.reduce(_ && _)).reduce(_ || _)
-    overwriteWhere(name, df, cond, op)
+    overwriteIn(name, snap, df, cond, op)
   }
 
   /** K5: MERGE INTO applied to a stored table — file-pruned copy-on-write:
@@ -3705,9 +3688,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       schemaEvolution: Boolean,
       op: String,
       txn: Option[Txn]): (Int, Int) = {
-    val base = currentVersion(name).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $name"))
-    val (schema0, entries) = readManifest(name, base)
+    val snap0 = snapshot(name)
+    val (schema0, entries) = (snap0.schema, snap0.entries)
     // match source to target columns under the session's resolver (Spark
     // SQL resolution is case-insensitive unless spark.sql.caseSensitive) —
     // a source column differing only in case is the SAME column, not a
@@ -3733,6 +3715,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // reading with the WIDENED schema NULL-fills the new columns for every
     // existing file — no explicit widening projection, no rewrite
     val schema = StructType(schema0.fields ++ newCols)
+    val snap = snap0.copy(schema = schema)
     // one clause plan in the table's spelling (SET/INSERT may assign the
     // evolved columns) serves discovery, the rewrite, the inserts, the
     // change feed and the mor commit
@@ -3782,12 +3765,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       else {
         val mCand: Seq[FileEntry] =
           if (plan.matched.isEmpty) Nil
-          else mergeCandidates(name, schema, entries, source, keys).getOrElse(Nil)
+          else mergeCandidates(name, snap, source, keys).getOrElse(Nil)
         val bsCand: Seq[FileEntry] =
           bsCond.map(c => pruneEntries(name, schema, entries, c)).getOrElse(Nil)
         (mCand ++ bsCand).groupBy(_.rel).map(_._2.head).toSeq
       }
-    val (pb, sw, sf0) = readLayout(name)
+    val Layout(pb, sw, sf0) = snap.layout
     // ADAPTIVE merge-key stats: a merge whose keys carry no file stats
     // cannot prune its discovery scan — record the keys into the stats
     // layout so THIS commit's rewritten/inserted files (and every later
@@ -3795,13 +3778,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // table tunes itself toward its own merge pattern, Delta's
     // "collect stats on filter columns" guidance made automatic.
     val layoutCols = (pb ++ sw ++ sf0).map(_.toLowerCase)
-    val sf = sf0 ++ keys.filterNot(k =>
-      layoutCols.contains(physicalName(name, k).toLowerCase))
+    val layout = Layout(pb, sw, sf0 ++ keys.filterNot(k =>
+      layoutCols.contains(physicalName(name, k).toLowerCase)))
     if (mor) {
-      commitMorMerge(name, source, plan, cand, schema, entries, base, (pb, sw, sf), op)
+      commitMorMerge(name, source, plan, cand, snap, layout, op)
       return (cand.size, entries.size)
     }
-    val target = readEntries(name, base, schema, entries)
+    val target = readEntries(name, snap, entries)
     val touched: Set[String] =
       if (cand.isEmpty) Set.empty
       else {
@@ -3810,7 +3793,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         // unmatched row the by-source clauses apply to) and rides the
         // multiple-match check (any (file, pos) with >1 match). The
         // shuffle is bounded by the candidate rows, never the table.
-        val t = scanWithPos(name, base, schema, cand).alias("t")
+        val t = scanWithPos(name, snap, cand).alias("t")
         val s = source.withColumn("__graft_s", lit(true)).alias("s")
         val bsFlag = bsCond.getOrElse(lit(false))
         // Join type follows the clause shape: a by-source clause must see
@@ -3843,7 +3826,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // row tracking: the rewrite subset carries the hidden id column, which
     // the plan passes through as an unset column, so an UPDATEd row keeps
     // its id and only the INSERT side mints fresh ones
-    val subset = rewriteSource(name, base, schema, entries.filter(e => touched(e.rel)))
+    val subset = rewriteSource(name, snap, entries.filter(e => touched(e.rel)))
     val rewritten = plan.withoutInserts.merge(subset, source, failOnMultipleMatches = false)
     val inserts = withNullRowId(name, plan.insertedRows(target, source))
     // change feed: target-side images from the SAME touched subset the
@@ -3855,9 +3838,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     }
     txn match {
       case None =>
-        commitVersion(name, rewritten.unionByName(inserts), pb, sw, sf,
+        commitVersion(name, rewritten.unionByName(inserts), layout,
           carryOver = entries.filterNot(e => touched(e.rel)), schemaHint = Some(schema),
-          expectedBase = Some(Some(base)), op = op, cdc = cdc)
+          expectedBase = Some(Some(snap.version)), op = op, cdc = cdc)
       case Some(t) =>
         // stage only: data + manifest + change feed land in the version
         // dir, the pointer moves at the transaction's commit (or never —
@@ -3868,10 +3851,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         // it (stageVersion's own cleanup no longer covers this point).
         val out = rewritten.unionByName(inserts)
         val (v, dir) = allocateVersion(name)
-        stageVersion(name, v, dir, out, pb, sw, sf,
+        stageVersion(name, v, dir, out, layout,
           carryOver = entries.filterNot(e => touched(e.rel)),
           schemaHint = Some(schema), op = op)
-        t.record(name, v, dir, Some(base))
+        t.record(name, v, dir, Some(snap.version))
         cdc.foreach(_.write.parquet(dir.resolve("cdc").toString))
     }
     (cand.size, entries.size)
@@ -3899,18 +3882,16 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       source: DataFrame,
       plan: MergeInto.ClausePlan,
       cand: Seq[FileEntry],
-      schema: StructType,
-      entries: Seq[FileEntry],
-      base: Int,
-      layout: (Seq[String], Seq[String], Seq[String]),
+      snap: Snapshot,
+      layout: Layout,
       op: String): Unit =
-    commit(name, Some(Some(base))) { (next, dir) =>
-      val t = posScanWithIds(name, base, schema, cand).alias("t")
+    commit(name, Some(Some(snap.version))) { (next, dir) =>
+      val t = posScanWithIds(name, snap, cand).alias("t")
       val s = source.withColumn("__graft_s", lit(true)).alias("s")
       val isMatched = col("s.__graft_s").isNotNull
       val kind = plan.disposition(isMatched)
       val discoDir = dir.resolve("disco")
-      val (touched, carry) = if (cand.isEmpty) (Set.empty[String], entries) else {
+      val (touched, carry) = if (cand.isEmpty) (Set.empty[String], snap.entries) else {
         // per-row match count (multiple-match check) + disposition; only
         // rows the merge modifies (or that prove ambiguity) are kept, so
         // the dump is change-set sized
@@ -3922,12 +3903,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         val d = spark.read.parquet(discoDir.toString)
         if (plan.matched.nonEmpty && d.filter(col("__n") > 1).limit(1).count() > 0)
           throw plan.multipleMatches
-        writeDv(name, next, cand, entries, d.filter(col("__kind").isNotNull))
+        writeDv(name, next, cand, snap.entries, d.filter(col("__kind").isNotNull))
       }
 
       // appended rows: UPDATE post-images (deterministic re-derive of the
       // DV'd rows, keeping their row ids) + the INSERT anti-join
-      val lschema = logicalizeSchema(name, schema)
+      val lschema = logicalizeSchema(name, snap.schema)
       val updates: Option[DataFrame] =
         if (touched.isEmpty) None
         else Some(t.join(s, plan.on, "left_outer").filter(kind === "u").select(
@@ -3937,21 +3918,20 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
               Seq(col(s"t.${TableStore.RowIdCol}").as(TableStore.RowIdCol))
             else Nil): _*))
       val inserts = withNullRowId(name,
-        plan.insertedRows(readEntries(name, base, schema, entries), source))
+        plan.insertedRows(readEntries(name, snap, snap.entries), source))
       val toAppend = updates.map(_.unionByName(inserts)).getOrElse(inserts)
 
       // the discovery dump served commit-time checks only — drop it so the
       // committed version dir holds exactly what the manifest references
       dropAbortedVersion(discoDir)
-      val (pb, sw, sf) = layout
-      val appended = stageVersion(name, next, dir, toAppend, pb, sw, sf, carry,
-        Some(schema), op)
+      val appended = stageVersion(name, next, dir, toAppend, layout, carry,
+        Some(snap.schema), op)
       (touched.nonEmpty || appended.nonEmpty) && {
         if (cdfEnabled(name)) {
           val ins = dropRowIdCol(inserts).withColumn("_change_type", lit("insert"))
           val cdcDf =
             if (cand.isEmpty) ins
-            else plan.changeSet(readEntries(name, base, schema, cand), source).unionByName(ins)
+            else plan.changeSet(readEntries(name, snap, cand), source).unionByName(ins)
           cdcDf.write.parquet(dir.resolve("cdc").toString)
         }
         true
@@ -3994,17 +3974,16 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   private[tables] def txnStage(name: String, df: DataFrame, partitionBy: Seq[String],
       sortWithin: Seq[String], statsFor: Seq[String], append: Boolean,
       op: String): (Int, Path, Option[Int]) = {
-    val base = currentVersion(name)
-    def stage(df: DataFrame, pb: Seq[String], sw: Seq[String], sf: Seq[String],
-        carryOver: Seq[FileEntry], schemaHint: Option[StructType]) = {
+    def stage(df: DataFrame, layout: Layout, carryOver: Seq[FileEntry],
+        schemaHint: Option[StructType], base: Option[Int]) = {
       val (v, dir) = allocateVersion(name)
-      stageVersion(name, v, dir, df, pb, sw, sf, carryOver, schemaHint, op)
+      stageVersion(name, v, dir, df, layout, carryOver, schemaHint, op)
       (v, dir, base)
     }
-    if (!append) stage(df, partitionBy, sortWithin, statsFor, Nil, None)
+    if (!append)
+      stage(df, Layout(partitionBy, sortWithin, statsFor), Nil, None, version(name))
     else {
-      val (schema, entries) = currentManifest(name)
-      val (pb0, sw0, sf0) = readLayout(name)
+      val snap = snapshot(name)
       // identity parity with the direct append path: a transactional
       // append to a GENERATED ALWAYS AS IDENTITY table must block-allocate
       // keys (and reject explicit values) exactly like append() — without
@@ -4012,7 +3991,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // mismatch while supplying it bypassed the locked counter and could
       // collide with keys block-allocated by direct appends
       val (keyed, cleanup) = applyIdentity(name, df)
-      try stage(alignedForAppend(name, schema, keyed), pb0, sw0, sf0, entries, Some(schema))
+      try stage(alignedForAppend(name, snap.schema, keyed), snap.layout, snap.entries,
+        Some(snap.schema), Some(snap.version))
       finally cleanup()
     }
   }
@@ -4026,7 +4006,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     }
     lockAll(names) {
       staged.foreach { case (name, _, _, base) =>
-        val cur = currentVersion(name)
+        val cur = version(name)
         if (cur != base) throw new java.util.ConcurrentModificationException(
           s"transaction: $name moved from version $base to $cur since staging — " +
             "the whole transaction is rolled back")
@@ -4144,7 +4124,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           // a DEAD writer's retained lock is broken inside withCommitLock
           // itself (holder-verified) — nothing to pre-delete here
           withCommitLock(name) {
-            if (!currentVersion(name).exists(_ >= v)) {
+            if (!version(name).exists(_ >= v)) {
               if (Files.exists(stagedManifestPath(name, v))) promoteManifest(name, v)
               if (Files.exists(manifestPath(name, v))) swapTo(name, v)
               else throw new IllegalStateException(
@@ -4198,21 +4178,22 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   }
 
   /** DESCRIBE DETAIL surface: current snapshot facts, driver-side
-    * metadata only (manifest + file sizes — no Spark job). */
+    * metadata only (manifest + file sizes — no Spark job). Layout columns
+    * are reported by their logical (visible) names. */
   def detail(name: String): Map[String, String] = {
-    val (schema, entries) = currentManifest(name)
-    val (pb, sw, _) = readLayout(name)
+    val snap = snapshot(name)
+    val entries = snap.entries
     val bytes = entries.map(e => Files.size(Paths.get(absPath(name, e.rel)))).sum
     Map(
       "location" -> tableDir(name).toString,
-      "version" -> currentVersion(name).get.toString,
+      "version" -> snap.version.toString,
       "num_files" -> entries.size.toString,
       "size_bytes" -> bytes.toString,
       "num_dv_files" -> entries.count(_.dvs.nonEmpty).toString,
-      "partition_columns" -> pb.mkString(","),
-      "sort_columns" -> sw.mkString(","),
+      "partition_columns" -> logicalNames(name, snap.layout.partitionBy).mkString(","),
+      "sort_columns" -> logicalNames(name, snap.layout.sortWithin).mkString(","),
       "dml_mode" -> dmlMode(name),
-      "num_columns" -> schema.fields.length.toString,
+      "num_columns" -> snap.schema.fields.length.toString,
       "primary_key" -> meta(name).properties.getOrElse("primary_key", ""),
       "row_tracking" -> rowTrackingEnabled(name).toString,
       "not_null_columns" -> notNullColumns(name).mkString(","),
@@ -4244,12 +4225,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       refTable: String, refCols: Seq[String]): Unit = {
     require(cols.nonEmpty && cols.length == refCols.length,
       s"$name FOREIGN KEY $cname: child/parent column lists must align")
-    val visible = logicalizeSchema(name, currentManifest(name)._1).fieldNames
+    val visible = logicalizeSchema(name, snapshot(name).schema).fieldNames
     cols.foreach(c => require(visible.exists(_.equalsIgnoreCase(c)),
       s"$name FOREIGN KEY $cname: no column $c (columns: ${visible.mkString(", ")})"))
     require(exists(refTable),
       s"$name FOREIGN KEY $cname: referenced table $refTable not found")
-    val refVisible = logicalizeSchema(refTable, currentManifest(refTable)._1).fieldNames
+    val refVisible = logicalizeSchema(refTable, snapshot(refTable).schema).fieldNames
     refCols.foreach(c => require(refVisible.exists(_.equalsIgnoreCase(c)),
       s"$name FOREIGN KEY $cname: $refTable has no column $c"))
     setMeta(name, meta(name).copy(properties = meta(name).properties +
@@ -4279,7 +4260,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   def setBloomFilterIndex(name: String, cols: Seq[String], ndv: Long = 100000L): Unit = {
     require(cols.nonEmpty, s"$name: bloom filter index needs at least one column")
     TableStore.checkKnob(name, "bloom.ndv", ndv.toString)
-    val visible = logicalizeSchema(name, currentManifest(name)._1).fieldNames
+    val visible = logicalizeSchema(name, snapshot(name).schema).fieldNames
     // store the SCHEMA's spelling, not the user's — downstream consumers
     // do exact-string matches against schema names (the r14 cased-INSERT
     // bug class), and a cased stored name would silently dead-arm the index
@@ -4352,7 +4333,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       require(fn != "sum" || arg != "*", s"$view: sum(*) is not a thing")
     }
     require(groupBy.nonEmpty, s"$view: GROUP BY must name at least one column")
-    val cur = currentVersion(source).getOrElse(
+    val cur = version(source).getOrElse(
       throw new IllegalArgumentException(s"materialized view source not found: $source"))
     enableChangeFeed(source)
     createOrReplace(view, mvBody(source, Some(cur), groupBy, aggs))
@@ -4397,12 +4378,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * double-applied. [[vacuum]] folds the high-water marker into the
     * metadata before retiring manifests, exactly like the streaming
     * exactly-once gate. */
-  private def lastMvRefresh(view: String): Option[Int] =
-    versions(view).flatMap { v =>
-      val op = manifestOp(view, v)
-      if (op.startsWith("mv_refresh:")) Some(op.stripPrefix("mv_refresh:").toInt)
-      else None
-    }.maxOption
+  private def lastMvRefresh(ops: Seq[String]): Option[Int] =
+    ops.collect { case op if op.startsWith("mv_refresh:") =>
+      op.stripPrefix("mv_refresh:").toInt }.maxOption
 
   private def persistMvVersion(view: String, v: Int): Unit =
     setMeta(view, meta(view).copy(properties =
@@ -4419,8 +4397,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   def refreshMaterializedView(view: String): Unit = {
     val d = mvDefinition(view).getOrElse(throw new IllegalArgumentException(
       s"$view is not a materialized view (no mv.* metadata)"))
-    val applied = math.max(d.version, lastMvRefresh(view).getOrElse(Int.MinValue))
-    val cur = currentVersion(d.source).getOrElse(throw new IllegalStateException(
+    // every retained view version, parsed once: op labels and the schema
+    val views = versions(view).map(snapshotAt(view, _))
+    val applied = math.max(d.version, lastMvRefresh(views.map(_.op)).getOrElse(Int.MinValue))
+    val cur = version(d.source).getOrElse(throw new IllegalStateException(
       s"$view: source ${d.source} no longer exists"))
     if (cur <= applied) {
       if (applied > d.version) persistMvVersion(view, applied) // heal meta
@@ -4449,7 +4429,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       if (delta.filter(d.keys.map(col(_).isNull).reduce(_ || _)).limit(1).count() > 0) {
         fullRebuild(); return
       }
-      val viewSchema = logicalizeSchema(view, currentManifest(view)._1)
+      val viewSchema = logicalizeSchema(view, views.last.schema)
       def typed(c: String, e: Column): Column = e.cast(viewSchema(c).dataType)
       val setCols: Map[String, Column] =
         (d.aggs.flatMap {
@@ -4545,10 +4525,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * raise_error mechanism CHECK constraints ride — zero extra scans, and
     * a violating DML aborts with the table unchanged. */
   def setNotNull(name: String, colName: String): Unit = {
-    val visible = logicalizeSchema(name, currentManifest(name)._1)
-    val f = visible.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
+    val rows = read(name)
+    val f = rows.schema.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
       throw new IllegalArgumentException(s"$name: no such column $colName"))
-    val nulls = read(name).filter(col(f.name).isNull).count()
+    val nulls = rows.filter(col(f.name).isNull).count()
     require(nulls == 0,
       s"cannot SET NOT NULL on $name.${f.name}: $nulls existing NULL row(s)")
     setMeta(name, meta(name).copy(properties =
@@ -4567,7 +4547,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
   /** ALTER TABLE … ALTER COLUMN … COMMENT '…' (logical name). */
   def setColumnComment(name: String, colName: String, comment: String): Unit = {
-    val visible = logicalizeSchema(name, currentManifest(name)._1)
+    val visible = logicalizeSchema(name, snapshot(name).schema)
     val f = visible.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
       throw new IllegalArgumentException(s"$name: no such column $colName"))
     val m = meta(name)
@@ -4582,7 +4562,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * fails the ALTER, not some later INSERT. */
   def setColumnDefault(name: String, colName: String, sqlExpr: String): Unit = {
     import org.apache.spark.sql.functions.expr
-    val visible = logicalizeSchema(name, currentManifest(name)._1)
+    val visible = logicalizeSchema(name, snapshot(name).schema)
     val f = visible.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
       throw new IllegalArgumentException(s"$name: no such column $colName"))
     // declaration-time probe: parses, folds without input rows, casts
@@ -4663,19 +4643,23 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * shape. */
   def vacuum(name: String, staleStagingMs: Long = 24L * 3600 * 1000,
       retainMs: Long = 0L): Unit = {
-    val keepVersion = currentVersion(name)
+    val keepVersion = version(name)
     if (keepVersion.isEmpty) return
+    // every retained manifest, parsed once for both the op-label folds
+    // below and the referenced-file set
+    val parsed = versions(name).map(v => v -> snapshotAt(name, v)).toMap
+    val ops = parsed.values.map(_.op).toSeq
     // the streaming exactly-once marker lives in manifest op labels this
     // vacuum is about to retire — persist the high-water mark FIRST (if
     // the vacuum crashes in between, the manifests still exist and the
     // gate is unchanged)
-    lastStreamBatch(name).foreach { hw =>
+    streamHighWater(name, ops).foreach { hw =>
       setMeta(name, meta(name).copy(properties =
         meta(name).properties + ("stream_high_water" -> hw.toString)))
     }
     // same persistence move for the MV refresh marker: fold the op-label
     // high water into mv.version before the manifests carrying it retire
-    lastMvRefresh(name).foreach { v =>
+    lastMvRefresh(ops).foreach { v =>
       if (meta(name).properties.get("mv.version").forall(_.toInt < v))
         persistMvVersion(name, v)
     }
@@ -4710,15 +4694,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
             now - Files.getLastModifiedTime(mf).toMillis <= retainMs
         })
       }.toSet
-      val retainedManifests = retained.toSeq.sorted.map(v => readManifest(name, v))
-      val referenced = retainedManifests.flatMap { case (_, entries) =>
-        entries.map(e => tableDir(name).resolve(e.rel).toAbsolutePath.normalize)
-      }.toSet
+      val retainedEntries = retained.toSeq.sorted
+        .flatMap(v => parsed.getOrElse(v, snapshotAt(name, v)).entries)
+      val referenced = retainedEntries
+        .map(e => tableDir(name).resolve(e.rel).toAbsolutePath.normalize).toSet
       // deletion-vector sidecars are parquet DIRECTORIES — everything under
       // a referenced DV dir stays
-      val dvDirs = retainedManifests.flatMap { case (_, entries) =>
-        entries.flatMap(_.dvs)
-      }.distinct.map(d => tableDir(name).resolve(d).toAbsolutePath.normalize)
+      val dvDirs = retainedEntries.flatMap(_.dvs).distinct.map(d => tableDir(name).resolve(d).toAbsolutePath.normalize)
       val dir = tableDir(name)
       listDir(dir).foreach { p =>
         val n = p.getFileName.toString

@@ -252,4 +252,27 @@ class ConcurrentCommitSpec extends AnyFunSuite
       assert(c >= 20 && c <= 21, s"v$v reads $c rows")
     }
   }
+
+  test("a blind append racing a re-partitioning replace rebases onto the replace's layout") {
+    val (store, root) = newStore("graft_occ_layout")
+    val marker = java.nio.file.Paths.get(root, "replaced.marker")
+    val started = java.nio.file.Paths.get(root, "replaced.marker.started")
+    def rows = (1 to 20).map(i => (i, (i % 2).toLong)).toDF("k", "n")
+    store.createOrReplace("db.t", rows)
+    val (ea, eb) = run2(
+      // the append stages under the layout it read (none) while the
+      // replace commits a partitioned version
+      () => store.append("db.t", Seq((100, 1L), (101, 0L)).toDF("k", "n")
+        .filter(gatedCond(marker, Seq(100, 101), Some(started)))),
+      () => {
+        awaitFile(started) // the slow append holds its snapshot
+        store.createOrReplace("db.t", rows, partitionBy = Seq("n"))
+        Files.createFile(marker)
+      })
+    assert(ea.isEmpty && eb.isEmpty, s"append and replace must both commit: $ea $eb")
+    // the append left the layout as it read it, so the rebase takes the
+    // current version's: the replace's partitioning survives
+    assert(store.partitionColumns("db.t") == Seq("n"))
+    assert(store.read("db.t").count() == 22)
+  }
 }

@@ -473,6 +473,76 @@ class SqlDmlSpec extends AnyFunSuite {
     } finally store.detach()
   }
 
+  test("INSERT OVERWRITE keeps the table's definition: layout and identity keys") {
+    val store = new TableStore(spark, Files.createTempDirectory("graft_sqldml_iow").toString)
+    try {
+      store.createOrReplace("db.b",
+        Seq((1L, "a", 1), (2L, "b", 2)).toDF("k", "v", "par"), partitionBy = Seq("par"))
+      spark.sql("INSERT OVERWRITE db.b VALUES (10, 'x', 1), (11, 'y', 2)")
+      assert(store.partitionColumns("db.b") == Seq("par"))
+      assert(store.history("db.b").head._3 == "write")
+      // the partitioning is still there for a dynamic partition overwrite
+      spark.sql("INSERT OVERWRITE db.b PARTITION (par) VALUES (12, 'z', 2)")
+      assert(store.read("db.b").as[(Long, String, Int)].collect().toSet ==
+        Set((10L, "x", 1), (12L, "z", 2)))
+
+      // an identity column the statement omits keeps minting keys
+      spark.sql("CREATE TABLE db.i (ik BIGINT GENERATED ALWAYS AS IDENTITY, v STRING)")
+      spark.sql("INSERT INTO db.i (v) VALUES ('a'), ('b')")
+      val before = store.read("db.i").select("ik").as[Long].collect().toSet
+      spark.sql("INSERT OVERWRITE db.i (v) VALUES ('x')")
+      spark.sql("INSERT INTO db.i (v) VALUES ('y')")
+      val keys = store.read("db.i").select("ik", "v").collect()
+        .map(r => r.getString(1) -> Option(r.get(0))).toMap
+      assert(keys.keySet == Set("x", "y"), keys)
+      assert(keys.values.forall(_.isDefined) && keys.values.toSet.size == 2, keys)
+      assert(keys.values.flatten.forall(k => !before.contains(k.asInstanceOf[Long])), keys)
+    } finally store.detach()
+  }
+
+  test("SHOW CREATE TABLE and DESCRIBE DETAIL name layout columns by their logical names") {
+    val store = new TableStore(spark, Files.createTempDirectory("graft_sqldml_rn").toString)
+    try {
+      store.createOrReplace("db.n",
+        spark.range(0, 10).select(col("id").as("k"), (col("id") % 2).as("par")),
+        partitionBy = Seq("par"), sortWithin = Seq("k"))
+      store.renameColumn("db.n", "par", "bucket")
+      store.renameColumn("db.n", "k", "key")
+      assert(store.detail("db.n")("partition_columns") == "bucket")
+      assert(store.detail("db.n")("sort_columns") == "key")
+      val ddl = spark.sql("SHOW CREATE TABLE db.n").head().getString(0)
+      assert(ddl.contains("`bucket` BIGINT") && ddl.contains("PARTITIONED BY (bucket)"), ddl)
+      // the DDL is valid: it runs back through CREATE
+      spark.sql(ddl.replace("CREATE TABLE db.n (", "CREATE TABLE db.n2 ("))
+      assert(store.partitionColumns("db.n2") == Seq("bucket"))
+    } finally store.detach()
+  }
+
+  test("TBLPROPERTIES isolation and rowtracking run their store calls; zorder is internal") {
+    val store = new TableStore(spark, Files.createTempDirectory("graft_sqldml_tk").toString)
+    try {
+      store.createOrReplace("db.tk",
+        spark.range(0, 50).select(col("id").as("k"), lit("a").as("v")).repartition(2))
+      val meta = store.meta("db.tk")
+      intercept[IllegalArgumentException] {
+        spark.sql("ALTER TABLE db.tk SET TBLPROPERTIES ('isolation' = 'bogus')") }
+      assert(store.meta("db.tk") == meta)
+      spark.sql("ALTER TABLE db.tk SET TBLPROPERTIES ('isolation' = 'Serializable')")
+      assert(store.meta("db.tk").properties.get("isolation").contains("serializable"))
+      // the persisted ZORDER curve is OPTIMIZE's state, not a declaration
+      val e = intercept[IllegalArgumentException] {
+        spark.sql("ALTER TABLE db.tk SET TBLPROPERTIES ('zorder.bits' = '99')") }
+      assert(e.getMessage.contains("'zorder.bits'"), e.getMessage)
+      intercept[IllegalArgumentException] {
+        spark.sql("ALTER TABLE db.tk SET TBLPROPERTIES ('rowtracking' = 'false')") }
+      // enabling through SQL backfills: every current row has an id
+      spark.sql("ALTER TABLE db.tk SET TBLPROPERTIES ('rowtracking' = 'true')")
+      val ids = store.readWithRowIds("db.tk")
+      assert(ids.count() == 50 && ids.filter(col("_row_id").isNull).count() == 0)
+      assert(ids.select("_row_id").distinct().count() == 50)
+    } finally store.detach()
+  }
+
   test("readStream.table over a store table is NOT silently lowered to a batch read") {
     val store = new TableStore(spark, Files.createTempDirectory("graft_sqldml_rs").toString)
     try {
