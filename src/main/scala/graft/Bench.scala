@@ -1,7 +1,9 @@
 package graft
 
 import graft.core.GraftSession
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main: measures steady-state wall time per query (one warmup
   * execution, then the timed run) at SPARK_GRAFT_SF_DIR, prints one JSON
@@ -34,6 +36,23 @@ private[graft] object BenchFloors {
     else """"([\w]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
+}
+
+/** Janino compiles: Spark's compile-time histogram counts every generated
+  * class compiled (a miss in the generated-class cache), and
+  * `CodeGenerator.compileTime` sums their nanoseconds (the histogram keeps
+  * only a sample of its values, so its sum is not exact). [[since]] gives
+  * the compiles between a mark and now. */
+private[graft] final case class Compiles(count: Long, ms: Double) {
+  def since: Compiles = {
+    val now = Compiles.mark()
+    Compiles(now.count - count, now.ms - ms)
+  }
+}
+
+private[graft] object Compiles {
+  def mark(): Compiles =
+    Compiles(CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
 }
 
 object Bench {
@@ -87,9 +106,12 @@ object Bench {
       // ±3s run-to-run swings on a loaded 32-thread JVM (GC, compilation,
       // page cache) that made cross-round comparisons read as phantom
       // regressions; the min is the reproducible floor a resident engine
-      // delivers
+      // delivers. Classes compiled during the warm runs are ones the
+      // generated-class cache evicted since the cold run.
+      val compiles0 = Compiles.mark()
       val (warm1, warmErr1) = runOnce(spark, sfDir, fn)
       val (warm2, warmErr2) = runOnce(spark, sfDir, fn)
+      val warmCompiles = compiles0.since
       val (warm, warmErr) = (math.min(warm1, warm2), warmErr1.orElse(warmErr2))
       // then drop cached frames + checkpointed RDDs so queries don't degrade
       // each other under accumulated memory pressure across the 100+ entries,
@@ -97,7 +119,7 @@ object Bench {
       // (observed: late-run queries measuring 4-8x their isolated time from
       // old-gen churn alone)
       GraftSession.clearState(spark)
-      (name, cold, warm, coldErr.orElse(warmErr))
+      (name, cold, warm, coldErr.orElse(warmErr), warmCompiles)
     }
     // The driver keeps only the last ~2000 bytes of process output, so the
     // final JSON line must stay well under that or it is clipped at the
@@ -105,17 +127,18 @@ object Bench {
     // r11 even the short-id per-query map outgrew the window at 174
     // queries and truncated again). The artifact is therefore split:
     // (a) full-name per-query lines print first, for the human log;
-    // (b) the FULL per-query map (cold+warm+recheck+errors) is written to
+    // (b) the FULL per-query map (cold+warm+recheck+errors, and the
+    //     warm runs' Janino compiles: codegen_compiles/codegen_ms) is written to
     //     a committed file (GRAFT_BENCH_QUERIES_JSON, default
     //     BENCH_QUERIES.json) so the run self-describes durably;
     // (c) the final stdout line is a compact summary — totals, count,
     //     rechecked map, errors — that stays parseable at any query count.
     def r2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    results.foreach { case (k, c, w, e) =>
+    results.foreach { case (k, c, w, e, _) =>
       println(f"[bench] $k%-26s cold=${r2(c)}%-8s warm=${r2(w)}%-8s${e.fold("")("ERR " + _)}")
     }
     val shortIds = {
-      val pref = results.map { case (k, _, _, _) => k -> k.takeWhile(_ != '_') }
+      val pref = results.map { case (k, _, _, _, _) => k -> k.takeWhile(_ != '_') }
       val collide = pref.groupBy(_._2).filter(_._2.size > 1).keySet
       pref.map { case (full, p) => full -> (if (collide(p)) full else p) }.toMap
     }
@@ -137,7 +160,7 @@ object Bench {
     // re-measured (the 0.15s absolute guard only drops sub-tick jitter on
     // ~0.1s queries, where 2x is within scheduler granularity)
     val flagged = results.collect {
-      case (k, _, w, None)
+      case (k, _, w, None, _)
         if floors.get(shortIds(k))
           .exists(fl => w > 2 * fl * driftAdj && w - fl > 0.15) => k
     }
@@ -165,7 +188,7 @@ object Bench {
       if (rechecked.isEmpty) ""
       else rechecked.map { case (id, re) => "\"" + id + "\":" + r2(re) }
         .mkString(""","rechecked":{""", ",", "}")
-    val errs = results.collect { case (k, _, _, Some(e)) =>
+    val errs = results.collect { case (k, _, _, Some(e), _) =>
       "\"" + shortIds(k) + "\":\"" + e.replaceAll("[\"\\\\\n\r\t]", " ").take(60) + "\"" }
     val errJson = if (errs.isEmpty) "" else errs.mkString(""","errors":{""", ",", "}")
     val coldTotal = results.map(_._2).sum
@@ -174,12 +197,13 @@ object Bench {
     // the durable full per-query record (FULL names, cold+warm, recheck)
     val qFile = sys.env.getOrElse("GRAFT_BENCH_QUERIES_JSON", "BENCH_QUERIES.json")
     val recheckByFull = rechecked.toMap
-    val qRows = results.map { case (k, c, w, e) =>
+    val qRows = results.map { case (k, c, w, e, cg) =>
       val re = recheckByFull.get(shortIds(k))
         .fold("")(v => s""", "recheck_warm": ${r2(v)}""")
       val er = e.fold("")(m =>
         s""", "err": "${m.replaceAll("[\"\\\\\n\r\t]", " ").take(60)}"""")
-      s"""  "$k": {"cold": ${r2(c)}, "warm": ${r2(w)}$re$er}"""
+      s"""  "$k": {"cold": ${r2(c)}, "warm": ${r2(w)}, """ +
+        s""""codegen_compiles": ${cg.count}, "codegen_ms": ${r2(cg.ms)}$re$er}"""
     }.mkString(",\n")
     val driftJson = drift.fold("")(d => s""", "_drift": ${r2(d)}""")
     java.nio.file.Files.write(java.nio.file.Paths.get(qFile),

@@ -22,7 +22,8 @@ import scala.collection.concurrent.TrieMap
   *    listener, printing each Spark job's wall time and call site — the
   *    quickest way to see which phase of a multi-job operator (quantile
   *    sketch, rewrite, commit, read-back) actually costs the seconds the
-  *    bench reports. E.g. `profile q44_zorder_read`.
+  *    bench reports. E.g. `profile q44_zorder_read`. Each run also
+  *    prints its Janino compiles (`codegen_compiles`, `codegen_ms`).
   *  - `inspect`: run the medallion pipeline (q23's body) into a scratch
   *    store and print every table's file count and byte sizes — the §6
   *    output-sizing evidence the optimization round needs (the bench's
@@ -90,8 +91,11 @@ object Dev {
       println(s"=== run $i of $name ===")
       val t0 = System.nanoTime()
       runStart.set(t0)
+      val compiles0 = Compiles.mark()
       val n = fn(spark, GraftSession.sfDir).count()
-      println(f"=== run $i total ${(System.nanoTime() - t0) / 1e9}%.3f s, $n rows ===")
+      val cg = compiles0.since
+      println(f"=== run $i total ${(System.nanoTime() - t0) / 1e9}%.3f s, $n rows, " +
+        f"codegen_compiles=${cg.count} codegen_ms=${cg.ms}%.1f ===")
       GraftSession.clearState(spark)
     }
   }

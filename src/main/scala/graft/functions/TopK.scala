@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, RowOrdering, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
-import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType}
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable
@@ -82,7 +82,6 @@ case class BoundedTopK(
   // with Tungsten's own binary format
   @transient private lazy val valueProj =
     UnsafeProjection.create(Array(child.dataType))
-  @transient private lazy val valueRow = new UnsafeRow(1)
 
   override def serialize(buf: mutable.PriorityQueue[Any]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()

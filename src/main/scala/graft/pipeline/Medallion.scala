@@ -169,8 +169,7 @@ final class Medallion(spark: SparkSession, store: TableStore, sfDir: String,
     * a left join row can only match a current header). Dimensions stay
     * broadcast. PlanSpec pins the no-Exchange property mechanically on
     * this exact build path. */
-  private[graft] def buildFact(loadTs: Column,
-      cur: String => DataFrame = current,
+  private[graft] def buildFact(cur: String => DataFrame = current,
       dims: String => DataFrame = n => store.read(n)): DataFrame = {
     val (li, o) =
       if (bucketedFact) {
@@ -215,7 +214,7 @@ final class Medallion(spark: SparkSession, store: TableStore, sfDir: String,
       txn: Option[graft.tables.Txn],
       cur: String => DataFrame = current,
       dims: String => DataFrame = n => store.read(n)): Unit = {
-    val fact = withAudit(buildFact(loadTs, cur, dims), loadTs)
+    val fact = withAudit(buildFact(cur, dims), loadTs)
     // one dispatch for both paths (see TableWriter): staged when inside
     // the transactional run, an immediate commit otherwise
     val writer: graft.tables.TableWriter = txn.getOrElse(store)

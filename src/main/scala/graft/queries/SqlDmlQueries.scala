@@ -1,11 +1,8 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables.t
-import graft.tables.TableStore
 
 /** The reference's SQL-text write path, executed verbatim: two consecutive
   * `spark.sql("MERGE INTO …")` statements perform the silver SCD2 load

@@ -25,7 +25,7 @@ object StarQueries {
 
   // q15: the calendar dimension itself (restricted range keeps the oracle
   // fast; full 2000–2030 build is exercised in the unit spec).
-  def q15Calendar(s: SparkSession, dir: String): DataFrame =
+  def q15Calendar(s: SparkSession): DataFrame =
     Calendar.build(s, "2000-01-01", "2002-12-31").orderBy(col("date_key"))
 
   // q16: star-join aggregate — fact assembled from raw tables with
@@ -74,7 +74,7 @@ object StarQueries {
   }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q15_calendar" -> q15Calendar _,
+    "q15_calendar" -> ((s, _) => q15Calendar(s)),
     "q16_star_agg" -> q16StarAgg _,
     "q17_fact_projection" -> q17FactProjection _)
 

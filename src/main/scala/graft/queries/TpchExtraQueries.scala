@@ -211,9 +211,6 @@ object TpchExtraQueries {
     "x18_lsh_neardup" -> x18LshNearDup _,
     "x60_incremental_ivf" -> x60IncrementalIvf _)
 
-  private val DotSql =
-    "list_sum(list_transform(range(1, len(%s.embedding)+1), i -> CAST(%s.embedding[i] AS DOUBLE) * CAST(%s.embedding[i] AS DOUBLE)))"
-
   private def bucketSql(alias: String): String =
     Similarity.lshComponents(4, 64).zipWithIndex.map { case (comp, b) =>
       s"CASE WHEN $alias.embedding[${comp + 1}] >= 0 THEN ${1L << b} ELSE 0 END"

@@ -2191,7 +2191,19 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * it. */
   def lastStreamBatch(name: String): Option[Long] =
     if (!exists(name)) None
-    else streamHighWater(name, versions(name).map(snapshotAt(name, _).op))
+    else streamHighWater(name, versions(name).map(opAt(name, _)))
+
+  /** A committed version's operation label, read from its manifest's first
+    * two lines ([[writeManifest]] writes `#schema`, then `#op`) without
+    * parsing the schema or the file entries. */
+  private def opAt(name: String, version: Int): String = {
+    val in = Files.newBufferedReader(manifestPath(name, version), UTF_8)
+    try {
+      in.readLine()
+      Option(in.readLine()).filter(_.startsWith("#op\t"))
+        .fold("write")(l => dec(l.stripPrefix("#op\t")))
+    } finally in.close()
+  }
 
   /** [[lastStreamBatch]] over the given retained op labels. */
   private def streamHighWater(name: String, ops: Seq[String]): Option[Long] =
@@ -3079,19 +3091,38 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * clone's own directory, so a later VACUUM or DROP of the source
     * cannot break the clone (the documented trade [[cloneTo]] makes).
     * Cost is proportional to the snapshot's bytes, the same bill Delta's
-    * DEEP CLONE pays; a failed copy cleans up and leaves no table. */
+    * DEEP CLONE pays; a failed copy cleans up and leaves no table.
+    *
+    * The copies land in the clone's first version slot, each under its
+    * source-relative path (`v_<slot>/<rel>`; a shallow-cloned source's
+    * `../` segments dropped), so the clone's history starts at version 1
+    * and no source version directory is recreated beside it. A deletion
+    * vector names its rows' files by manifest-relative path, so it is
+    * rewritten with the moved paths rather than copied. */
   def deepCloneTo(src: String, dst: String): Unit = {
     val snap = snapshot(src)
     require(!exists(dst), s"clone target $dst already exists")
     val srcDir = tableDir(src).toAbsolutePath
     val dstDir = tableDir(dst).toAbsolutePath
     try {
-      (snap.entries.map(_.rel) ++ snap.entries.flatMap(_.dvs)).foreach { rel =>
-        val to = dstDir.resolve(rel)
-        Files.createDirectories(to.getParent)
-        Files.copy(srcDir.resolve(rel), to)
+      commit(dst) { (next, _) =>
+        def moved(rel: String) = s"v_$next/" + rel.split('/').dropWhile(_ == "..").mkString("/")
+        snap.entries.foreach { e =>
+          val to = dstDir.resolve(moved(e.rel))
+          Files.createDirectories(to.getParent)
+          Files.copy(srcDir.resolve(e.rel), to)
+        }
+        val renamed = spark.createDataFrame(snap.entries.map(e => (e.rel, moved(e.rel))))
+          .toDF("file", "__moved")
+        snap.entries.flatMap(_.dvs).distinct.foreach { dv =>
+          spark.read.parquet(srcDir.resolve(dv).toString).join(renamed, "file")
+            .select(col("__moved").as("file"), col("pos"))
+            .write.parquet(dstDir.resolve(moved(dv)).toString)
+        }
+        writeManifest(dst, snap.copy(version = next, op = "deep_clone",
+          entries = snap.entries.map(e => e.copy(rel = moved(e.rel), dvs = e.dvs.map(moved)))))
+        true
       }
-      commitManifestOnly(dst, snap, "deep_clone")
       val m = meta(src)
       setMeta(dst, m.copy(properties = m.properties - "stream_high_water"))
     } catch {
@@ -4643,33 +4674,38 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * shape. */
   def vacuum(name: String, staleStagingMs: Long = 24L * 3600 * 1000,
       retainMs: Long = 0L): Unit = {
-    val keepVersion = version(name)
-    if (keepVersion.isEmpty) return
-    // every retained manifest, parsed once for both the op-label folds
-    // below and the referenced-file set
-    val parsed = versions(name).map(v => v -> snapshotAt(name, v)).toMap
-    val ops = parsed.values.map(_.op).toSeq
-    // the streaming exactly-once marker lives in manifest op labels this
-    // vacuum is about to retire — persist the high-water mark FIRST (if
-    // the vacuum crashes in between, the manifests still exist and the
-    // gate is unchanged)
-    streamHighWater(name, ops).foreach { hw =>
-      setMeta(name, meta(name).copy(properties =
-        meta(name).properties + ("stream_high_water" -> hw.toString)))
-    }
-    // same persistence move for the MV refresh marker: fold the op-label
-    // high water into mv.version before the manifests carrying it retire
-    lastMvRefresh(ops).foreach { v =>
-      if (meta(name).properties.get("mv.version").forall(_.toInt < v))
-        persistMvVersion(name, v)
-    }
+    if (version(name).isEmpty) return
     withCommitLock(name) {
+      // the pointer and the version set are read under the lock: read
+      // before it, a commit landing in between would be in neither the
+      // kept version nor `retained`, and its files would be swept while
+      // `_CURRENT` names it
+      val keepVersion = version(name)
+      val allVersions = versions(name)
+      // every retained manifest, parsed once for both the op-label folds
+      // below and the referenced-file set
+      val parsed = allVersions.map(v => v -> snapshotAt(name, v)).toMap
+      val ops = parsed.values.map(_.op).toSeq
+      // the streaming exactly-once marker lives in manifest op labels this
+      // vacuum is about to retire — persist the high-water mark FIRST (if
+      // the vacuum crashes in between, the manifests still exist and the
+      // gate is unchanged)
+      streamHighWater(name, ops).foreach { hw =>
+        setMeta(name, meta(name).copy(properties =
+          meta(name).properties + ("stream_high_water" -> hw.toString)))
+      }
+      // same persistence move for the MV refresh marker: fold the op-label
+      // high water into mv.version before the manifests carrying it retire
+      lastMvRefresh(ops).foreach { v =>
+        if (meta(name).properties.get("mv.version").forall(_.toInt < v))
+          persistMvVersion(name, v)
+      }
       // COPY INTO ledgers live in version dirs this vacuum may retire —
       // fold EVERY committed ledger into the _COPY_LOADED sidecar FIRST
       // (idempotent union via atomic replace; a crash between fold and
       // delete simply re-folds), so re-running a COPY after a vacuum
       // still skips files whose loading commit was retired
-      val ledgers = versions(name).flatMap { v =>
+      val ledgers = allVersions.flatMap { v =>
         val f = tableDir(name).resolve(s"v_$v").resolve("copy_files")
         if (Files.exists(f)) Files.readAllLines(f).asScala else Nil
       }
@@ -4687,15 +4723,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // version younger than `retainMs` (Delta's retention window): their
       // manifests AND data files survive, so time travel within the
       // window keeps working after the vacuum
-      val retained: Set[Int] = versions(name).filter { v =>
+      val retained: Set[Int] = allVersions.filter { v =>
         keepVersion.contains(v) || (retainMs > 0 && {
           val mf = tableDir(name).resolve(s"v_$v").resolve("_MANIFEST")
           Files.exists(mf) &&
             now - Files.getLastModifiedTime(mf).toMillis <= retainMs
         })
       }.toSet
-      val retainedEntries = retained.toSeq.sorted
-        .flatMap(v => parsed.getOrElse(v, snapshotAt(name, v)).entries)
+      val retainedEntries = retained.toSeq.sorted.flatMap(parsed(_).entries)
       val referenced = retainedEntries
         .map(e => tableDir(name).resolve(e.rel).toAbsolutePath.normalize).toSet
       // deletion-vector sidecars are parquet DIRECTORIES — everything under

@@ -1208,6 +1208,36 @@ class LakeFeaturesSpec extends AnyFunSuite {
     store.detach()
   }
 
+  test("deep clone commits as the clone's version 1: change feed, DVs and a shallow source " +
+      "carry over") {
+    val root = Files.createTempDirectory("graft_deep_v1").toString
+    val store = new TableStore(spark, root)
+    def rows(lo: Long, hi: Long) =
+      spark.range(lo, hi).select(col("id").as("k"), (col("id") % 4).as("g"))
+    // the source's files span two version directories (v_1 and v_2), and a
+    // merge-on-read delete leaves a deletion vector over v_1's files
+    store.createOrReplace("db.src", rows(0, 100))
+    store.append("db.src", rows(100, 120))
+    store.setDmlMode("db.src", "mor")
+    store.delete("db.src", col("k") < 10L)
+    store.deepCloneTo("db.src", "db.deep")
+    assert(store.versions("db.deep") == Seq(1))
+    assert(store.changeFeed("db.deep", 0, 1)
+      .filter(col("_change_type") === "insert").count() == 110)
+    store.dropTable("db.src")
+    assert(store.read("db.deep").count() == 110)
+    assert(store.read("db.deep").filter(col("k") < 10L).isEmpty)
+    // a deep clone of a shallow clone copies the files its `../` paths name
+    store.createOrReplace("db.plain", rows(0, 30))
+    store.cloneTo("db.plain", "db.shallow")
+    store.deepCloneTo("db.shallow", "db.deep2")
+    store.dropTable("db.plain")
+    store.dropTable("db.shallow")
+    assert(store.versions("db.deep2") == Seq(1))
+    assert(store.read("db.deep2").count() == 30)
+    store.detach()
+  }
+
   test("SHOW PARTITIONS lists distinct tuples from manifest stats, no scan") {
     val root = Files.createTempDirectory("graft_showpart").toString
     val store = new TableStore(spark, root)

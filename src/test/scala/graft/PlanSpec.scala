@@ -133,7 +133,7 @@ class PlanSpec extends AnyFunSuite {
     // dimension joins keep their explicit broadcast hints)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val fact = pipe.buildFact(ts)
+      val fact = pipe.buildFact()
       assert(Bucketing.isShuffleFree(fact),
         s"fact assembly must not shuffle the fact side:\n${Bucketing.finalPlanString(fact).take(1800)}")
       assert(Bucketing.finalPlanString(fact).contains("SortMergeJoin"),

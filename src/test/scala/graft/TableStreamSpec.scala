@@ -376,6 +376,28 @@ class TableStreamSpec extends AnyFunSuite {
     } finally store.detach()
   }
 
+  test("after vacuum retires every stream_append manifest, the exactly-once gate reads " +
+      "stream_high_water") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ts_hw").toString
+    val store = new TableStore(spark, root)
+    val sink = graft.streaming.StreamingIngest.appendBatch(store, "db.t") _
+    try {
+      store.createOrReplace("db.t", Seq((0, "seed")).toDF("id", "v"))
+      sink(Seq((1, "a")).toDF("id", "v"), 3L)
+      // a plain commit on top, so the vacuum retires the labelled manifest
+      store.append("db.t", Seq((2, "b")).toDF("id", "v"))
+      store.vacuum("db.t")
+      assert(store.versions("db.t") == store.version("db.t").toSeq)
+      assert(store.meta("db.t").properties.get("stream_high_water").contains("3"))
+      assert(store.lastStreamBatch("db.t").contains(3L))
+      sink(Seq((9, "dup")).toDF("id", "v"), 3L) // replay → skipped
+      assert(store.read("db.t").count() == 3)
+      sink(Seq((4, "c")).toDF("id", "v"), 4L) // fresh id → committed
+      assert(store.read("db.t").count() == 4)
+      assert(store.lastStreamBatch("db.t").contains(4L))
+    } finally store.detach()
+  }
+
   test("ignoreChanges streams DV-carrying ADDED files as-written (restore re-add)") {
     val root = java.nio.file.Files.createTempDirectory("graft_ts_dvadd").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ts_dvadd_ck").toString

@@ -103,6 +103,39 @@ class CommitLockSpec extends AnyFunSuite {
     }
   }
 
+  test("vacuum reads the pointer under the lock: a commit that lands while it waits " +
+      "keeps its manifest and data") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val root = Files.createTempDirectory("graft_lock_vacuum").toString
+    val store = new TableStore(spark, root)
+    try {
+      store.createOrReplace("db.t", Seq((1L, "a")).toDF("k", "v"))
+      val (v, dir, base) = store.txnStage("db.t", Seq((2L, "b")).toDF("k", "v"),
+        Nil, Nil, Nil, append = true, "append")
+      // the publish runs this callback holding `_COMMIT_LOCK`: the vacuum
+      // starts while v1 is still current, then waits on the lock until
+      // the commit of v2 has swapped the pointer
+      var vacuum: Future[Unit] = null
+      store.txnCommit(Seq(("db.t", v, dir, base)), () => {
+        vacuum = Future(store.vacuum("db.t"))
+        Thread.sleep(1500)
+        assert(!vacuum.isCompleted, "vacuum must wait for the held commit lock")
+      })
+      Await.result(vacuum, 30.seconds)
+      assert(store.version("db.t").contains(v))
+      assert(Files.exists(Paths.get(root, "db", "t", s"v_$v", "_MANIFEST")),
+        "vacuum deleted the live version's manifest")
+      assert(store.read("db.t").as[(Long, String)].collect().sorted.toSeq ==
+        Seq((1L, "a"), (2L, "b")))
+    } finally {
+      store.detach()
+      graft.queries.Scratch.deleteRecursively(Paths.get(root))
+    }
+  }
+
   test("8 contending commits racing over a pre-placed dead lock: all land, no lost update") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_lock_race").toString
