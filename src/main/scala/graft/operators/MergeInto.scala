@@ -20,8 +20,9 @@ import org.apache.spark.sql.types.{DataType, StringType}
   *  - clauses are evaluated in declaration order, first match wins;
   *  - `WHEN NOT MATCHED BY SOURCE` sees every target row whose join
   *    condition found no source row (including extra non-equi ON conjuncts);
-  *  - a target row matching >1 source row is an error (Delta parity,
-  *    SURVEY.md §7.4) — detected up front when `failOnMultipleMatches`.
+  *  - a target row matching >1 source row is an error when a matched
+  *    clause exists (Delta parity, SURVEY.md §7.4) — detected up front
+  *    when `failOnMultipleMatches`.
   *
   * Scale shape: the join shuffles both sides by the equi-keys once (or
   * broadcasts a small source); clause dispatch is pure projection —
@@ -306,15 +307,28 @@ object MergeInto {
     }
 
     /** The post-merge target state (target schema preserved): one
-      * full-outer join on [[on]] and one projection. An insert-only merge
-      * takes the left-anti path instead: target ∪ [[insertedRows]]. It is
-      * legal even when several source rows match one target row (nothing
-      * is ambiguous for the duplicates to do, as in Delta), so the
-      * multiple-match check guards only merges with matched or by-source
-      * clauses. */
+      * full-outer join on [[on]] and one projection. Delta's multiple-match
+      * rule: only a matched clause can do something ambiguous with a
+      * target row that several source rows match, so only merges with
+      * matched clauses are checked. A merge without them never joins
+      * matched rows into its output: an insert-only merge is target ∪
+      * [[insertedRows]], and a by-source merge keeps the matched target
+      * rows (left-semi) and dispatches the unmatched ones (left-anti), so
+      * each target row appears once however many source rows match it. */
     def merge(target: DataFrame, source: DataFrame,
         failOnMultipleMatches: Boolean = true): DataFrame = {
       if (insertOnly) return target.unionByName(insertedRows(target, source))
+      if (matched.isEmpty) {
+        val t = target.alias("t")
+        val unmatched = t.join(source.alias("s"), on, "left_anti").alias("t")
+        return t.join(source.alias("s"), on, "left_semi")
+          .unionByName(unmatched
+            .select(target.columns.toSeq.map(c =>
+              bySourceValue(c).cast(target.schema(c).dataType).as(c)) :+
+              bySourceKeep.as("__graft_keep"): _*)
+            .filter(col("__graft_keep")).drop("__graft_keep"))
+          .unionByName(insertedRows(target, source))
+      }
       if (failOnMultipleMatches) checkMultipleMatches(target, source)
 
       val t = target.withColumn(TMark, lit(true)).alias("t")

@@ -14,18 +14,14 @@ import org.apache.spark.sql.types.{StructType, TimestampType}
   *  - SCD1 (reference: notebooks/33_ETL_Gold_Dim_PySpark.py:61-104):
   *    update-in-place + insert, no delete.
   *
-  * Two SCD2 implementations with identical semantics (cross-checked by
-  * property tests):
-  *
-  *  - [[scd2Merge]] — the scale path. ONE full-outer join of the *current*
-  *    slice against the source; each joined row emits 0–2 output rows
-  *    (closed version and/or new version) through a single
-  *    `explode(array(struct…))` projection, so the join output is never
-  *    re-executed per branch. History rows union in untouched (their
-  *    `_tf_valid_to IS NOT NULL` filter prunes at the scan).
-  *  - [[scd2MergeTwoPhase]] — the faithful re-expression of the reference's
-  *    two consecutive MERGE statements via [[MergeInto]]; used as the
-  *    semantic oracle in tests.
+  * [[scd2Merge]] is the scale path: ONE full-outer join of the *current*
+  * slice against the source; each joined row emits 0–2 output rows
+  * (closed version and/or new version) through a single
+  * `explode(array(struct…))` projection, so the join output is never
+  * re-executed per branch. History rows union in untouched (their
+  * `_tf_valid_to IS NOT NULL` filter prunes at the scan). Property tests
+  * cross-check it against a faithful re-expression of the reference's
+  * two consecutive MERGE statements via [[MergeInto]] (test sources).
   *
   * Timestamps are caller-supplied batch constants (`loadTs`), reproducing
   * Delta's statement-level `current_timestamp()` semantics explicitly
@@ -123,44 +119,6 @@ object Scd {
     hist.unionByName(merged)
   }
 
-  /** Faithful two-phase SCD2 (reference 22:62-82 then 22:86-101): phase 1
-    * closes changed + deleted current rows, phase 2 inserts new current
-    * versions against the post-phase-1 state. */
-  def scd2MergeTwoPhase(
-      target: DataFrame,
-      source: DataFrame,
-      keys: Seq[String],
-      loadTs: Column,
-      nullSafeCompare: Boolean = false): DataFrame = {
-
-    val payload = source.columns.filterNot(keys.contains).toSeq
-    val currentOnly = col(s"t.$ValidTo").isNull
-    val audit = hasAudit(target)
-    val ts = loadTs.cast(TimestampType)
-    val closeSet = Map(ValidTo -> ts) ++ (if (audit) Map(UpdateDate -> ts) else Map.empty)
-
-    // MERGE #1: close changed rows; close rows deleted from the source.
-    val phase1 = MergeInto(
-      target, source, keys,
-      extraOn = Some(currentOnly),
-      matched = Seq(MergeInto.MatchedUpdate(
-        Some(changePredicate(payload, nullSafeCompare)), closeSet)),
-      notMatchedBySource = Seq(MergeInto.BySourceUpdate(Some(currentOnly), closeSet)),
-      failOnMultipleMatches = false)
-
-    // MERGE #2: insert the new current version for new/changed keys.
-    val insertValues: Map[String, Column] =
-      (keys ++ payload).map(c => c -> col(s"s.$c")).toMap +
-        (ValidFrom -> ts) +
-        (ValidTo -> lit(null).cast(TimestampType)) ++
-        (if (audit) Map(CreateDate -> ts, UpdateDate -> ts) else Map.empty)
-    MergeInto(
-      phase1, source, keys,
-      extraOn = Some(currentOnly),
-      notMatched = Seq(MergeInto.NotMatchedInsert(None, insertValues)),
-      failOnMultipleMatches = false)
-  }
-
   /** Apply one source batch to a STORED SCD2 table as a single atomic,
     * file-pruned merge — the shared engine behind the streaming SCD2 sink
     * ([[graft.streaming.StreamingUpsert]]) and the batch medallion's
@@ -185,8 +143,9 @@ object Scd {
     * makes the streaming sink safe under foreachBatch's at-least-once
     * contract. */
   /** @param pruneCurrentByBatchKeyRange gate the change-detection pre-join
-    *   below by the BATCH's per-key [min, max] box (one tiny batch
-    *   aggregation, the mergeCandidates cut applied one layer up): the
+    *   below by the BATCH's per-key [min, max] box (read off a held
+    *   batch's rows, else one tiny batch aggregation — the
+    *   mergeCandidates cut applied one layer up): the
     *   pre-join only needs current rows whose key exists in the batch, so
     *   the box is a pure superset filter — semantics unchanged — and on a
     *   key-clustered table it turns a per-batch scan of the WHOLE current
@@ -216,29 +175,28 @@ object Scd {
     val closeSet = Map(ValidTo -> (ts: Column)) ++
       (if (audit) Map(UpdateDate -> (ts: Column)) else Map.empty)
 
+    // a bounded batch (a micro-batch of rows) is held on the driver: its
+    // box comes off the held rows with no job
+    val held = graft.tables.HeldSource(batch)
+    val batchDf = held.map(_.df).getOrElse(batch)
+    val boxPred: Option[Column] =
+      if (!pruneCurrentByBatchKeyRange) None
+      else graft.tables.KeyStats.of(batchDf, held, keys, maxTuples = 0).box // None: empty batch
+    // readWhere: the IS NULL predicate hits null-count file skipping, so
+    // closed-history files never open for the change-detection join
+    val current = store.readWhere(table,
+      boxPred.map(col(ValidTo).isNull && _).getOrElse(col(ValidTo).isNull))
     // batch rows whose key already has a current row with a different
     // payload: these need BOTH a close of the old version (their real-key
     // copy matches) and an insert of the new one (their null-key copy
-    // cannot match, so it reaches the insert clause)
-    // readWhere: the IS NULL predicate hits null-count file skipping, so
-    // closed-history files never open for the change-detection join
-    val boxPred: Option[Column] =
-      if (!pruneCurrentByBatchKeyRange) None
-      else {
-        val exprs = keys.flatMap(k => Seq(min(col(k)), max(col(k))))
-        val r = batch.agg(exprs.head, exprs.tail: _*).head()
-        if (keys.indices.exists(i => r.isNullAt(2 * i))) None // empty batch
-        else Some(keys.zipWithIndex.map { case (k, i) =>
-          col(k) >= lit(r.get(2 * i)) && col(k) <= lit(r.get(2 * i + 1))
-        }.reduce(_ && _))
-      }
-    val current = store.readWhere(table,
-      boxPred.map(col(ValidTo).isNull && _).getOrElse(col(ValidTo).isNull))
-    val changed = batch.alias("s")
+    // cannot match, so it reaches the insert clause). A semi-join, so the
+    // merge source below stays bounded by twice a bounded batch and the
+    // store merge holds it: the batch and the change-detection join run
+    // once per statement.
+    val changed = batchDf.alias("s")
       .join(current.alias("t"),
-        keys.map(k => col(s"s.$k") === col(s"t.$k")).reduce(_ && _))
-      .filter(changePredicate(payload, nullSafe = false))
-      .select(batch.columns.map(c => col(s"s.$c")).toSeq: _*)
+        keys.map(k => col(s"s.$k") === col(s"t.$k")).reduce(_ && _) &&
+          changePredicate(payload, nullSafe = false), "left_semi")
 
     // every source row carries its real key in __nk_* side columns; the
     // duplicates null the join keys themselves
@@ -247,7 +205,7 @@ object Scd {
         if (nullKeys && keys.contains(c)) lit(null).cast(df.schema(c).dataType).as(c)
         else col(c)) ++
         keys.map(k => col(k).as(s"__nk_$k"))).toSeq: _*)
-    val source = withNk(batch, nullKeys = false)
+    val source = withNk(batchDf, nullKeys = false)
       .unionByName(withNk(changed, nullKeys = true))
 
     val insertValues: Map[String, Column] =

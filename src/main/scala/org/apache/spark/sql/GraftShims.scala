@@ -29,6 +29,18 @@ object GraftShims {
       options = Map.empty)(spark)
     ofRows(spark, execution.datasources.LogicalRelation(relation))
   }
+  /** Run `df` once as one tracked SQL execution (`Dataset.collect`'s
+    * path, minus the conversion to external rows; a local relation's rows
+    * come back without a job) and return a frame over a local relation of
+    * the resulting rows, with those rows. */
+  def holdRows(df: DataFrame): (DataFrame, Seq[catalyst.InternalRow]) = {
+    val qe = df.queryExecution
+    val rows = execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect()).map(_.copy()).toSeq
+    val rel = catalyst.plans.logical.LocalRelation(
+      catalyst.types.DataTypeUtils.toAttributes(df.schema), rows)
+    (ofRows(df.sparkSession, rel), rows)
+  }
   /** The analyzed logical plan of a DataFrame — for splicing a
     * library-built relation into an analyzer rule's output. */
   def analyzedPlan(df: DataFrame): LogicalPlan = df.queryExecution.analyzed

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -1236,6 +1236,60 @@ class LakeFeaturesSpec extends AnyFunSuite {
     assert(store.versions("db.deep2") == Seq(1))
     assert(store.read("db.deep2").count() == 30)
     store.detach()
+  }
+
+  test("a shallow clone of a deletion-vector table keeps the deletes; its own DVs compose") {
+    val root = Files.createTempDirectory("graft_clone_dv").toString
+    val store = new TableStore(spark, root)
+    try {
+      store.createOrReplace("db.src", spark.range(0, 100).select(col("id").as("k")))
+      store.setDmlMode("db.src", "mor")
+      store.delete("db.src", col("k") < 10L)
+      assert(store.read("db.src").count() == 90)
+      // the DV names its rows' files relative to db.src, while the clone's
+      // entries are `../src/…`
+      store.cloneTo("db.src", "db.clone")
+      assert(store.read("db.clone").count() == 90)
+      // the clone's own mor delete over the source's files adds a DV of
+      // its own on top of the inherited one
+      store.delete("db.clone", col("k") >= 90L)
+      assert(store.read("db.clone").count() == 80)
+      assert(store.read("db.src").count() == 90)
+      // a deep clone rewrites both DVs to the moved files
+      store.deepCloneTo("db.clone", "db.deep")
+      store.dropTable("db.clone")
+      store.dropTable("db.src")
+      assert(store.read("db.deep").select("k").as[Long](org.apache.spark.sql.Encoders.scalaLong)
+        .collect().sorted.toSeq == (10L until 90L))
+    } finally store.detach()
+  }
+
+  test("every parquet file a table commits compresses with zstd: data, DV and change feed") {
+    val root = Files.createTempDirectory("graft_codec").toString
+    val store = new TableStore(spark, root)
+    try {
+      store.createOrReplace("db.z", spark.range(0, 500).select(col("id").as("k"),
+        concat(lit("row-"), col("id")).as("v")))
+      store.enableChangeFeed("db.z")
+      store.setDmlMode("db.z", "mor")
+      store.delete("db.z", col("k") < 50L)
+      import scala.jdk.CollectionConverters._
+      val files = Files.walk(Paths.get(root, "db", "z")).iterator().asScala.toSeq
+        .filter(_.toString.endsWith(".parquet"))
+      val conf = new org.apache.hadoop.conf.Configuration()
+      // codec names per file, from the footer's column chunks
+      val codecs = files.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toString), conf))
+        try f -> r.getFooter.getBlocks.asScala
+          .flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+        finally r.close()
+      }.filter(_._2.nonEmpty)
+      Seq("/data/", "/dv/", "/cdc/").foreach(d =>
+        assert(codecs.exists(_._1.toString.contains(d)), s"no $d file among ${codecs.map(_._1)}"))
+      assert(codecs.forall(_._2 == Set("ZSTD")), codecs.mkString("\n"))
+    } finally store.detach()
   }
 
   test("SHOW PARTITIONS lists distinct tuples from manifest stats, no scan") {

@@ -30,8 +30,8 @@ class ScdPropertySpec extends AnyFunSuite {
       val fused = Scd.scd2Merge(
         Scd.scd2Merge(Scd.scd2Init(df(b0), ts(0)), df(b1), Seq("k"), ts(1)),
         df(b2), Seq("k"), ts(2))
-      val phased = Scd.scd2MergeTwoPhase(
-        Scd.scd2MergeTwoPhase(Scd.scd2Init(df(b0), ts(0)), df(b1), Seq("k"), ts(1)),
+      val phased = ScdTwoPhase.scd2MergeTwoPhase(
+        ScdTwoPhase.scd2MergeTwoPhase(Scd.scd2Init(df(b0), ts(0)), df(b1), Seq("k"), ts(1)),
         df(b2), Seq("k"), ts(2))
       val equal = fused.exceptAll(phased).isEmpty && phased.exceptAll(fused).isEmpty
       val singleCurrent = fused.filter(col(Scd.ValidTo).isNull)

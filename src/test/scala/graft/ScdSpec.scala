@@ -92,8 +92,8 @@ class ScdSpec extends AnyFunSuite {
       val fused = Scd.scd2Merge(
         Scd.scd2Merge(Scd.scd2Init(b0, ts1), b1, Seq("address_id"), ts2),
         b2, Seq("address_id"), ts3)
-      val phased = Scd.scd2MergeTwoPhase(
-        Scd.scd2MergeTwoPhase(Scd.scd2Init(b0, ts1), b1, Seq("address_id"), ts2),
+      val phased = ScdTwoPhase.scd2MergeTwoPhase(
+        ScdTwoPhase.scd2MergeTwoPhase(Scd.scd2Init(b0, ts1), b1, Seq("address_id"), ts2),
         b2, Seq("address_id"), ts3)
       assert(fused.exceptAll(phased).isEmpty && phased.exceptAll(fused).isEmpty,
         s"trial $trial: fused and two-phase disagree")
@@ -117,7 +117,7 @@ class ScdSpec extends AnyFunSuite {
     val b1 = addr((1, "Bothell", "12345")) // 1 changes, 2 vanishes
     val fused = Scd.scd2Merge(
       Scd.scd2Init(b0, ts1, audit = true), b1, Seq("address_id"), ts2)
-    val phased = Scd.scd2MergeTwoPhase(
+    val phased = ScdTwoPhase.scd2MergeTwoPhase(
       Scd.scd2Init(b0, ts1, audit = true), b1, Seq("address_id"), ts2)
     assert(fused.exceptAll(phased).count() == 0 && phased.exceptAll(fused).count() == 0,
       "fused and two-phase audit maintenance must agree")

@@ -26,7 +26,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    files (a whole-manifest before/after sum corrupts on the rows = -1
   *    sentinel);
   *  - an MV refresh never inserts a zombie count-0 group for a key fully
-  *    churned inside the refresh window. */
+  *    churned inside the refresh window;
+  *  - a by-source MERGE with duplicate source keys follows Delta's
+  *    multiple-match rule in memory and in the store alike (the operator
+  *    raised; the store's rewrite repeated the matched target row). */
 class DmlEdgeSpec extends AnyFunSuite {
 
   lazy val spark = graft.core.GraftSession.local(4)
@@ -210,6 +213,34 @@ class DmlEdgeSpec extends AnyFunSuite {
       assert(out == Seq((5L, "t5"), (6L, "c"), (6L, "d")),
         s"insert-only merge must keep the matched target row ONCE and insert " +
           s"both unmatched source rows, got $out")
+    }
+  }
+
+  test("a by-source merge with duplicate source keys: in memory == store, matched rows once") {
+    withStore("graft_dml_bysource_dups") { (store, _) =>
+      import spark.implicits._
+      import graft.operators.MergeInto
+      // Delta's rule: only a matched clause can act ambiguously on a target
+      // row that several source rows match, so a merge without one neither
+      // raises nor repeats that row (the in-memory operator raised, and
+      // the store's rewrite emitted key 1 twice)
+      val target = (1 to 6).map(i => (i.toLong, s"t$i")).toDF("id", "v")
+      val source = Seq((1L, "a"), (1L, "b"), (2L, "c"), (9L, "n"), (9L, "m")).toDF("id", "v")
+      val bySource = Seq(MergeInto.BySourceUpdate(Some(col("t.id") > 3L), Map("v" -> lit("gone"))))
+      val inserts = Seq(MergeInto.NotMatchedInsert(None, Map("id" -> col("s.id"), "v" -> col("s.v"))))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("id", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      val expected = Seq((1L, "t1"), (2L, "t2"), (3L, "t3"), (4L, "gone"), (5L, "gone"),
+        (6L, "gone"), (9L, "m"), (9L, "n"))
+      assert(rows(MergeInto(target, source, Seq("id"), notMatched = inserts,
+        notMatchedBySource = bySource)) == expected)
+      Seq("cow", "mor").foreach { mode =>
+        val t = s"db.$mode"
+        store.createOrReplace(t, target)
+        store.setDmlMode(t, mode)
+        store.merge(t, source, Seq("id"), notMatched = inserts, notMatchedBySource = bySource)
+        assert(rows(store.read(t)) == expected, s"$mode store merge")
+      }
     }
   }
 
