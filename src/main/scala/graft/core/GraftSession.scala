@@ -41,6 +41,15 @@ import org.apache.spark.sql.SparkSession
   *    Spark's CodeGenerator reads it once per JVM from the conf active
   *    where code is first generated — so it is set here on the session
   *    builder, before any query runs (CodegenCacheSpec pins it)
+  *  - Path listing stays on the driver up to 4,096 paths (Spark's
+  *    parallelPartitionDiscovery threshold is 32). Table scans list
+  *    nothing (ManifestFileIndex), but the remaining multi-path parquet
+  *    reads — deletion-vector sidecars, COPY INTO sources — go through
+  *    Spark's path listing, and past the threshold Spark launches a
+  *    distributed listing JOB just to stat them: measured 2.3 s per read
+  *    of 64 paths on an idle local[32], pure scheduling overhead at any
+  *    scale. Driver-side listing is a stat call per path, so only
+  *    multi-thousand-path reads keep the distributed path
   *  - Releasing a superseded localCheckpoint (the dedup/clustering loops do
   *    it every round, deliberately, AFTER the successor materializes) makes
   *    Spark WARN that the truncated lineage cannot be recomputed — benign
@@ -79,6 +88,7 @@ object GraftSession {
         s"${System.getProperty("java.io.tmpdir")}/graft_warehouse_${ProcessHandle.current().pid()}")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -118,8 +118,7 @@ object SqlDml {
       case "isolation" => _.setIsolation(table, v)
       case "rowtracking" => _.enableRowTracking(table)
       case "comment" => st => st.setMeta(table, st.meta(table).copy(comment = Some(v)))
-      case _ => st => st.setMeta(table, st.meta(table).copy(properties =
-        st.meta(table).properties + (k -> v)))
+      case _ => _.updateProperties(table)(_ + (k -> v))
     }
   }
 
@@ -266,7 +265,7 @@ object SqlDml {
           .foreach(_(st))))
       case s: UnsetTableProperties => table(s.table).map(t => command("UNSET TBLPROPERTIES", t) { st =>
         s.propertyKeys.foreach(refuseInternal("UNSET TBLPROPERTIES", t, _))
-        st.setMeta(t, st.meta(t).copy(properties = st.meta(t).properties -- s.propertyKeys))
+        st.updateProperties(t)(_ -- s.propertyKeys)
       })
       // SHOW TBLPROPERTIES [('key')]: the metadata sidecar as rows, internal
       // keys included — the sidecar IS the table's configuration, and

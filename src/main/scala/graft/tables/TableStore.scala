@@ -1,8 +1,7 @@
 package graft.tables
 
-import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -18,17 +17,9 @@ import graft.operators.MergeInto
   * module 2; the reference stores everything in Delta but never touches
   * storage directly, so its DataFrame logic is storage-agnostic).
   *
-  * Layout: `root/<db>/<table>/v_<n>/` data directories plus a
-  * `v_<n>/_MANIFEST` listing every data file (relative to the table dir —
-  * entries may reference files written by EARLIER versions) with optional
-  * per-file min/max column statistics, the table schema, the commit's
-  * operation label and the version's write layout (partition, sort and
-  * stats columns — Delta's `metaData` action); a `_CURRENT` pointer file
-  * names the live version and is swapped via atomic move, so readers
-  * never observe a partial commit. This is the Delta transaction-log
-  * shape reduced to one snapshot file per version, and one parse of it is
-  * a table's whole committed state ([[Snapshot]]): the layout is staged,
-  * rebased, restored, cloned and aborted together with its version.
+  * A table's committed state — manifests, pointer, commit lock,
+  * metadata and history — lives in its [[TableLog]]; this class holds the
+  * commands that read and write the data files.
   *
   *  - MERGE/UPDATE/DELETE are **file-pruned copy-on-write**: a discovery
   *    pass finds the files that actually contain affected rows (the
@@ -49,13 +40,9 @@ import graft.operators.MergeInto
   *    tables.
   *
   * Concurrent writers arbitrate through one optimistic single-table
-  * commit protocol (`TableStore.commit`: stage, then compare-and-swap or
+  * commit protocol ([[TableLog.commit]]: stage, then compare-and-swap or
   * rebase under a per-table lock) and multi-table [[TableStore.transaction]]s.
   */
-final case class TableMeta(
-    comment: Option[String] = None,
-    columnComments: Map[String, String] = Map.empty,
-    properties: Map[String, String] = Map.empty)
 
 object TableStore {
   /** Parquet codec of every file the store writes (see `parquetWriter`). */
@@ -138,121 +125,6 @@ object TableStore {
           s"${many.map(_.rootDir).mkString(", ")}) — detach the stale store first")
     }
 
-  /** Intent ids (`<pid>_<nanos>`) whose commit window is OPEN in this
-    * process — registered before the intent file exists, removed when the
-    * publish finishes or fails. Attach-time recovery must skip these: an
-    * intent file exists during every HEALTHY commit, and "our own pid is
-    * alive" cannot distinguish a live commit on another thread from an
-    * interrupted one whose intent must be rolled forward. */
-  private[tables] val inflightTxnIntents: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Host tag for writer-identity tokens: `ProcessHandle` liveness is
-    * only meaningful on the host that minted the pid, so on the shared
-    * filesystems the commit lock supports, a liveness check for a token
-    * minted elsewhere must answer "unknown" — never "dead". Resolution
-    * never blocks on DNS (env/procfs first; `getLocalHost` can stall for
-    * the resolver timeout on misconfigured hosts), and an UNRESOLVABLE
-    * hostname yields a per-process tag, not a shared sentinel — two
-    * hosts both falling back to the same constant would judge each
-    * other's pids and re-enable exactly the cross-host lock-breaking
-    * this tag exists to prevent. The `~` separator cannot appear in a
-    * hostname. */
-  private[tables] val localHost: String = {
-    def env = Option(System.getenv("HOSTNAME")).map(_.trim).filter(_.nonEmpty)
-    def proc = try {
-      val p = Paths.get("/proc/sys/kernel/hostname")
-      if (Files.isReadable(p))
-        Some(new String(Files.readAllBytes(p), UTF_8).trim).filter(_.nonEmpty)
-      else None
-    } catch { case _: java.io.IOException => None }
-    def dns = try Some(java.net.InetAddress.getLocalHost.getHostName)
-      catch { case _: java.io.IOException => None }
-    // procfs (kernel-authoritative) before the user-controlled HOSTNAME
-    // env var — a wrong/leaked env value minting another machine's name
-    // would re-enable cross-host breaking; dns last (resolver stall).
-    // The per-process fallback trades self-recovery-after-restart for
-    // collision safety: on such a host a crashed writer's intents stay
-    // untouched until an operator intervenes — the conservative side.
-    proc.orElse(env).orElse(dns).map(_.replace('~', '-')).getOrElse(
-      s"unresolved-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-  }
-
-  /** `host~pid_nanos` — the ONE writer-identity token format lock files
-    * and intent filenames record; parsing lives in [[sameHostPid]] so a
-    * format change cannot silently break one consumer. Nanos are
-    * zero-padded to fixed width so every complete token of one process
-    * has ONE length — which makes "is this a truncated write of MY
-    * token?" decidable by the strict-prefix test in
-    * [[TableStore]].cleanupOwnFailedLock (a strict prefix can never be
-    * some sibling thread's complete token). */
-  private[tables] def writerToken(): String = {
-    val nanos = System.nanoTime() & Long.MaxValue
-    f"$localHost~${ProcessHandle.current().pid()}_$nanos%019d"
-  }
-
-  /** The pid a token records, if it was minted on THIS host. A foreign
-    * host's pid is meaningless here, and a HOST-LESS token's provenance
-    * is unknowable (it could be a live writer elsewhere), so both parse
-    * to None — never assume local.
-    *
-    * The nanos tail may be 1 to 19 digits: [[writerToken]] has always
-    * written SOME digits there, but only zero-padded them to the fixed
-    * 19 since the format hardening — a lock or intent left by a
-    * pre-padding build (`host~pid_123`) must stay parseable or a dead
-    * legacy holder wedges the table through any upgrade overlap.
-    *
-    * Tolerating a variable-width tail stays SOUND for breakers because
-    * a token that parses AT ALL carries its writer's complete host and
-    * pid: the pid digits are terminated by the `_`, so a truncated
-    * write either lost the `_` (no parse — treated as a live acquirer
-    * mid-write, never broken) or was cut inside the nanos, in which
-    * case host and pid are intact and liveness is judged against the
-    * TRUE writer. A live writer's partial is therefore never broken
-    * (its real pid answers alive), which is what keeps
-    * [[TableStore]].cleanupOwnFailedLock's "an empty or unreadable lock
-    * after OUR failed write is still ours" reasoning valid: no breaker
-    * can have removed a live writer's partial and let a successor
-    * re-create the file. A DEAD writer's nanos-cut partial now parses
-    * and breaks — the correct outcome the fixed width needlessly gave
-    * up. The fixed width still earns its keep in
-    * cleanupOwnFailedLock's strict-prefix test (one length per
-    * complete token of a process ⇒ a strict prefix is never a sibling
-    * thread's complete token). */
-  private[tables] def sameHostPid(token: String): Option[Long] = {
-    val i = token.indexOf('~')
-    if (i < 0) None
-    else {
-      val host = token.substring(0, i)
-      val rest = token.substring(i + 1)
-      val u = rest.indexOf('_')
-      if (u <= 0) None
-      else {
-        val digits = rest.substring(0, u)
-        val nanos = rest.substring(u + 1)
-        if (host == localHost && digits.forall(_.isDigit) &&
-            nanos.nonEmpty && nanos.length <= 19 && nanos.forall(_.isDigit))
-          scala.util.Try(digits.toLong).toOption
-        else None
-      }
-    }
-  }
-
-  /** True only when the token was minted on this host AND its process is
-    * provably gone. Foreign-host, host-less, unparseable, and live (or
-    * pid-reused) writers all answer false — never break what you cannot
-    * prove dead. */
-  private[tables] def writerDead(token: String): Boolean =
-    sameHostPid(token).exists { p =>
-      !ProcessHandle.of(p).map[java.lang.Boolean](_.isAlive).orElse(false)
-    }
-
-  /** One breaker per sidecar path per JVM: a second in-JVM channel to a
-    * file the JVM already holds an advisory lock on would, on plain
-    * fcntl platforms, RELEASE that lock when closed — voiding the
-    * breakers' cross-process mutual exclusion. */
-  private[tables] val breakersActive: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 }
 
 /** The writer surface [[TableStore]] and [[Txn]] share: an operator that
@@ -363,7 +235,7 @@ final class Txn private[tables] (store: TableStore) extends TableWriter {
   private[tables] def record(name: String, v: Int, dir: Path,
       base: Option[Int]): Unit = staged.synchronized {
     if (staged.exists(_._1 == name)) {
-      store.txnAbort(Seq(dir))
+      store.log.txnAbort(Seq(dir))
       throw new IllegalArgumentException(
         s"transaction already wrote $name — concurrent stagings raced on one " +
           "table; the losing version directory was dropped")
@@ -391,9 +263,9 @@ final class Txn private[tables] (store: TableStore) extends TableWriter {
   private[tables] var commitBegan = false
 
   private[tables] def commitAll(): Unit =
-    store.txnCommit(staged.synchronized(staged.toSeq), () => { commitBegan = true })
+    store.log.txnCommit(staged.synchronized(staged.toSeq), () => { commitBegan = true })
   private[tables] def abort(): Unit =
-    if (!commitBegan) store.txnAbort(staged.synchronized(staged.map(_._3).toSeq))
+    if (!commitBegan) store.log.txnAbort(staged.synchronized(staged.map(_._3).toSeq))
 }
 
 final class TableStore(spark: SparkSession, root: String) extends TableWriter {
@@ -402,23 +274,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   // against the session's attached stores, keyed by table name.
   TableStore.attach(spark, this)
 
-  // Table scans list nothing (ManifestFileIndex), but the remaining
-  // multi-path parquet reads — deletion-vector sidecars, COPY INTO sources
-  // — still go through Spark's path listing, and past 32 paths (the stock
-  // parallelPartitionDiscovery threshold) Spark launches a distributed
-  // listing JOB just to stat them: measured 2.3 s per read of 64 paths on
-  // an idle local[32], pure scheduling overhead at any scale. Driver-side
-  // listing is a stat call per path, so raise the threshold (never lower a
-  // caller's larger setting) — multi-thousand-path reads keep the
-  // distributed path.
-  locally {
-    val k = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    // malformed override must not hard-fail store attach — fall back
-    val want = sys.env.get("GRAFT_LIST_THRESHOLD")
-      .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(4096)
-    val cur = scala.util.Try(spark.conf.get(k).toInt).getOrElse(32)
-    if (cur < want) spark.conf.set(k, want.toString)
-  }
+  /** This store's table log: manifests, pointers, locks, metadata. */
+  private[tables] val log = new TableLog(root)
+  import TableLog.{deleteTree, walkAll}
 
   def rootDir: String = root
 
@@ -427,29 +285,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
   // ---------------------------------------------------------------- layout
 
-  private def tableDir(name: String): Path = {
-    val parts = name.split('.')
-    require(parts.length == 2, s"table name must be db.table, got $name")
-    Paths.get(root, parts(0), parts(1))
-  }
-
-  /** The table's current committed version, read from the `_CURRENT`
-    * pointer on every call (the optimistic-concurrency token for
-    * [[replaceIfUnchanged]], and the fresh read every commit-lock check
-    * makes). */
-  def version(name: String): Option[Int] = {
-    val ptr = tableDir(name).resolve("_CURRENT")
-    if (Files.exists(ptr)) Some(new String(Files.readAllBytes(ptr)).trim.toInt) else None
-  }
-
-  private def swapTo(name: String, version: Int): Unit = {
-    val dir = tableDir(name)
-    val tmp = dir.resolve(s"_CURRENT.tmp.$version")
-    Files.createDirectories(dir)
-    Files.write(tmp, version.toString.getBytes)
-    Files.move(tmp, dir.resolve("_CURRENT"), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def version(name: String): Option[Int] = log.version(name)
 
   def exists(name: String): Boolean = version(name).isDefined
 
@@ -457,196 +293,17 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * lowers only into existing store namespaces). */
   def dbExists(db: String): Boolean = Files.exists(Paths.get(root, db))
 
-  // ------------------------------------------------------------- manifests
-
-  /** Per-file column statistics in canonical string form (numbers,
-    * booleans, dates and timestamps as decimal strings; strings raw) —
-    * comparable without re-reading the file. */
-  private[tables] final case class ColStats(min: String, max: String)
-
-  /** One data file in a snapshot. `dvs` lists deletion-vector sidecars
-    * (manifest-relative parquet directories of `(file, pos)` row positions)
-    * that suppress rows of THIS file at read time — the merge-on-read
-    * representation a DELETE/UPDATE in `mor` mode commits instead of
-    * rewriting the file (Delta's deletion vectors). Min/max stats remain
-    * valid with DVs attached: deletion only narrows a file's true range,
-    * so stats-based pruning stays conservative.
-    *
-    * `rows` = the file's physical row count from its footer (-1 when
-    * unknown). `base` = the file's base row id when the table tracks row
-    * ids (Delta row tracking): the file's rows own the fresh-id range
-    * [base, base + rows); -1 before tracking is enabled or for files
-    * whose row count is unknown.
-    *
-    * `nulls` = per-column NULL counts (physical names) read from the
-    * parquet footer at write time — Delta's `nullCount` statistic. Unlike
-    * min/max (collected only for the layout's stat columns, whose
-    * canonicalization is type-sensitive), null counts are free for every
-    * leaf column, so `IS NULL` / `IS NOT NULL` predicates can prune on
-    * any column. A column absent from the map is unknown (conservative).
-    * Deletion vectors only remove rows, so a recorded 0 stays a valid
-    * "no nulls" witness and `nulls(c) == rows` (all-null) stays a valid
-    * "no non-null" witness with DVs attached. */
-  private[tables] final case class FileEntry(rel: String, stats: Map[String, ColStats],
-      dvs: Seq[String] = Nil, rows: Long = -1L, base: Long = -1L,
-      nulls: Map[String, Long] = Map.empty)
-
-  /** A version's write layout — partition, sort and stats columns in
-    * physical names. It rides the version's manifest (`#layout`), so
-    * every DML rewrite of that version keeps it and RESTORE, clones and
-    * aborted writes agree on it; a manifest without the line has none. */
-  private[tables] final case class Layout(partitionBy: Seq[String] = Nil,
-      sortWithin: Seq[String] = Nil, statsFor: Seq[String] = Nil)
-
-  /** One parse of one manifest: a table's whole state at `version` —
-    * schema (physical names), files, write layout and the operation label
-    * the version was committed with (`write`, `merge`, `restore`, …;
-    * manifests written before operation tracking read as `write`). A
-    * staged manifest parses to the same value under its slot number. */
-  private[tables] final case class Snapshot(version: Int, schema: StructType,
-      entries: Seq[FileEntry], layout: Layout, op: String)
-
-  private def enc(s: String): String = URLEncoder.encode(s, UTF_8)
-  private def dec(s: String): String = URLDecoder.decode(s, UTF_8)
-
-  private def manifestPath(name: String, version: Int): Path =
-    tableDir(name).resolve(s"v_$version").resolve("_MANIFEST")
-
-  private def stagedManifestPath(name: String, version: Int): Path =
-    tableDir(name).resolve(s"v_$version").resolve("_MANIFEST.staged")
-
-  /** Manifests are STAGED under a temp name and atomically renamed to
-    * `_MANIFEST` only inside the locked commit — every reader treats
-    * manifest existence as "committed" (versions(), history, time travel,
-    * [[lastStreamBatch]]), so during the staging window (arbitrarily long
-    * for [[transaction]]s) uncommitted data must not be reachable, and an
-    * in-flight `stream_append:<id>` label must not advance the
-    * exactly-once gate before its commit is durable. `snap.version` names
-    * the slot. */
-  private def writeManifest(name: String, snap: Snapshot): Unit = {
-    val dir = tableDir(name).resolve(s"v_${snap.version}")
-    Files.createDirectories(dir)
-    val entries = snap.entries
-    val l = snap.layout
-    val layoutLine =
-      if (l == Layout()) Nil
-      else Seq(Seq(l.partitionBy, l.sortWithin, l.statsFor)
-        .map(_.map(enc).mkString(",")).mkString("#layout\t", "\t", ""))
-    val dvLines = entries.filter(_.dvs.nonEmpty).map(e =>
-      s"#dv\t${enc(e.rel)}\t${enc(e.dvs.mkString(","))}")
-    val rowLines = entries.filter(_.rows >= 0).map(e =>
-      s"#rows\t${enc(e.rel)}\t${e.rows}")
-    val baseLines = entries.filter(_.base >= 0).map(e =>
-      s"#base\t${enc(e.rel)}\t${e.base}")
-    val nullLines = entries.filter(_.nulls.nonEmpty).map(e =>
-      s"#nulls\t${enc(e.rel)}\t" + e.nulls.toSeq.sortBy(_._1)
-        .map { case (c, n) => s"${enc(c)}=$n" }.mkString(","))
-    val lines = Seq(s"#schema\t${enc(snap.schema.json)}", s"#op\t${enc(snap.op)}") ++
-      layoutLine ++ dvLines ++ rowLines ++ baseLines ++ nullLines ++ entries.map { e =>
-      (enc(e.rel) +: e.stats.toSeq.sortBy(_._1).flatMap { case (c, st) =>
-        Seq(enc(c), enc(st.min), enc(st.max))
-      }).mkString("\t")
-    }
-    Files.write(stagedManifestPath(name, snap.version),
-      lines.mkString("\n").getBytes(UTF_8))
-  }
-
-  /** Commit a staged manifest: atomic rename to the name readers look for.
-    * Must run inside the table's commit lock, before the pointer swap. The
-    * mtime is refreshed so [[history]]/[[versionAsOf]] see the COMMIT time,
-    * not the stage time — a transaction may stage long before it swaps, and
-    * timestamp travel needs commit times monotone in the version order. */
-  private def promoteManifest(name: String, version: Int): Unit = {
-    // row tracking: claim base row ids for this commit's NEW files here —
-    // every commit path funnels through promoteManifest and holds the
-    // table's commit lock, so the high-water claim is race-free (the
-    // identity-column lesson applied from the start). Carried-over
-    // entries keep their bases; a file without a footer row count stays
-    // unassigned (its rows read a NULL id rather than a wrong one).
-    if (rowTrackingEnabled(name)) {
-      val staged = stagedSnapshot(name, version)
-      if (staged.entries.exists(e => e.base < 0 && e.rows >= 0)) {
-        var hw = rowHighWater(name)
-        val based = staged.entries.map { e =>
-          if (e.base < 0 && e.rows >= 0) { val b = hw; hw += e.rows; e.copy(base = b) }
-          else e
-        }
-        writeManifest(name, staged.copy(entries = based))
-        setMeta(name, meta(name).copy(properties =
-          meta(name).properties + ("row_high_water" -> hw.toString)))
-      }
-    }
-    val committed = manifestPath(name, version)
-    Files.move(stagedManifestPath(name, version), committed,
-      StandardCopyOption.ATOMIC_MOVE)
-    Files.setLastModifiedTime(committed,
-      java.nio.file.attribute.FileTime.from(java.time.Instant.now()))
-  }
-
-  /** The live version's snapshot — the one place a missing table raises. */
-  private def snapshot(name: String): Snapshot =
-    snapshotAt(name, version(name).getOrElse(
-      throw new IllegalArgumentException(s"table not found: $name")))
-
-  /** A committed version's snapshot (time travel, history, the diffs). */
-  private def snapshotAt(name: String, version: Int): Snapshot =
-    parseManifest(manifestPath(name, version), version, s"manifest of $name v$version")
-
-  /** A staged (not yet committed) version's snapshot. */
-  private def stagedSnapshot(name: String, version: Int): Snapshot =
-    parseManifest(stagedManifestPath(name, version), version,
-      s"staged manifest of $name v$version")
-
-  private def parseManifest(path: Path, version: Int, what: String): Snapshot = {
-    val lines = new String(Files.readAllBytes(path), UTF_8)
-      .split('\n').toSeq.filter(_.nonEmpty)
-    val schema = lines.headOption.filter(_.startsWith("#schema\t")) match {
-      case Some(l) => DataType.fromJson(dec(l.split('\t')(1))).asInstanceOf[StructType]
-      case None => throw new IllegalStateException(s"$what has no schema")
-    }
-    // one pass over the `#tag<TAB>file<TAB>value` side lines (#dv, #rows,
-    // #base, #nulls): (tag, file) → raw value; `#schema`/`#op` have no
-    // file, `#layout` carries its three column lists
-    val (tagged, fileLines) = lines.partition(_.startsWith("#"))
-    val side: Map[(String, String), String] = tagged.iterator.map(_.split('\t'))
-      .collect { case Array(tag, rel, v) if tag != "#layout" => (tag, dec(rel)) -> v }.toMap
-    val op = tagged.collectFirst {
-      case l if l.startsWith("#op\t") => dec(l.split('\t')(1))
-    }.getOrElse("write")
-    val layout = tagged.collectFirst {
-      case l if l.startsWith("#layout\t") =>
-        // limit -1 keeps empty lists (a sort-only layout has no partitions)
-        val Array(pb, sw, sf) = l.split("\t", -1).tail.map(s =>
-          if (s.isEmpty) Seq.empty[String] else s.split(',').toSeq.map(dec))
-        Layout(pb, sw, sf)
-    }.getOrElse(Layout())
-    def long(tag: String, rel: String): Long = side.get((tag, rel)).fold(-1L)(_.toLong)
-    val entries = fileLines.map { l =>
-      val parts = l.split('\t')
-      val stats = parts.tail.grouped(3).collect {
-        case Array(c, mn, mx) => dec(c) -> ColStats(dec(mn), dec(mx))
-      }.toMap
-      val rel = dec(parts(0))
-      FileEntry(rel, stats,
-        side.get(("#dv", rel)).fold(Seq.empty[String])(v => dec(v).split(',').toSeq),
-        long("#rows", rel), long("#base", rel),
-        side.get(("#nulls", rel)).fold(Map.empty[String, Long])(_.split(',').iterator.map { kv =>
-          val i = kv.lastIndexOf('=')
-          dec(kv.substring(0, i)) -> kv.substring(i + 1).toLong
-        }.toMap))
-    }
-    Snapshot(version, schema, entries, layout, op)
-  }
+  // ------------------------------------------------------------- paths
 
   private def absPath(name: String, rel: String): String =
-    tableDir(name).resolve(rel).toString
+    log.tableDir(name).resolve(rel).toString
 
   /** A `__graft_file` path → manifest-relative path. Paths outside the
     * table directory (shallow-clone entries) relativize through `..`
     * segments, matching how [[cloneTo]] anchors them. */
   private def relOf(name: String, fileUri: String): String = {
     val p = if (fileUri.startsWith("file:")) new java.net.URI(fileUri).getPath else fileUri
-    tableDir(name).toAbsolutePath.normalize
+    log.tableDir(name).toAbsolutePath.normalize
       .relativize(Paths.get(p).toAbsolutePath.normalize).toString
   }
 
@@ -851,17 +508,17 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     else TableStore.SkipContext(physical, Map.empty, blooms)
   }
 
+  /** Per-file stats keyed by physical name, re-keyed through `rn`. */
+  private def rekeyed[V](byPhysical: Map[String, V], rn: Map[String, String]): Map[String, V] =
+    if (rn.isEmpty) byPhysical else byPhysical.map { case (k, v) => (rn.getOrElse(k, k), v) }
+
   private def pruneWith(name: String, ctx: TableStore.SkipContext, entries: Seq[FileEntry],
       pred: Expression): Seq[FileEntry] = {
     // per-file stats are keyed by the physical names the footers carry —
     // remap the lookup to the predicate's names, not the entries
     val rn = ctx.statNames
-    def statsOf(e: FileEntry): Map[String, ColStats] =
-      if (rn.isEmpty) e.stats
-      else e.stats.map { case (k, v) => (rn.getOrElse(k, k), v) }
-    def nullsOf(e: FileEntry): Map[String, Long] =
-      if (rn.isEmpty) e.nulls
-      else e.nulls.map { case (k, v) => (rn.getOrElse(k, k), v) }
+    def statsOf(e: FileEntry) = rekeyed(e.stats, rn)
+    def nullsOf(e: FileEntry) = rekeyed(e.nulls, rn)
     val lschema = ctx.schema
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -1183,7 +840,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * file edition). */
   def fileInventory(name: String): DataFrame = {
     val rn = renames(name)
-    val rows = snapshot(name).entries.map { e =>
+    val rows = log.snapshot(name).entries.map { e =>
       org.apache.spark.sql.Row(e.rel, e.rows,
         Files.size(Paths.get(absPath(name, e.rel))), e.dvs.size,
         e.stats.map { case (k, v) =>
@@ -1204,7 +861,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** File list a predicate-bearing scan of `name` would open — exposed so
     * tests and tooling can assert data skipping. */
   def prunedFileList(name: String, pred: Option[Column]): Seq[String] = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     pred.map(p => pruneEntries(name, snap.schema, snap.entries, p)).getOrElse(snap.entries)
       .map(_.rel)
   }
@@ -1223,110 +880,6 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   def createEmpty(name: String, schema: StructType): Unit =
     createOrReplace(name, emptyDf(schema))
 
-  /** Allocate the next version number by atomically creating its
-    * directory — the allocation doubles as the writer mutex: two
-    * concurrent writers can never claim the same version. */
-  private def allocateVersion(name: String): (Int, Path) = {
-    Files.createDirectories(tableDir(name))
-    var v = version(name).getOrElse(0) + 1
-    while (true) {
-      try {
-        val dir = tableDir(name).resolve(s"v_$v")
-        Files.createDirectory(dir)
-        return (v, dir)
-      } catch { case _: java.nio.file.FileAlreadyExistsException => v += 1 }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Delete an allocated-but-never-committed version directory. Every
-    * reader treats manifest existence as "committed" (versions(), history,
-    * VERSION/TIMESTAMP AS OF, changesBetween, restore), so a commit that
-    * fails AFTER writing its manifest — e.g. an optimistic-concurrency
-    * conflict — must remove the directory or the losing writer's
-    * uncommitted data becomes readable via time travel. carryOver entries
-    * live in OTHER version directories and are untouched. */
-  private def dropAbortedVersion(dir: Path): Unit =
-    if (Files.exists(dir))
-      walkAll(dir).sorted.reverse.foreach(Files.deleteIfExists(_))
-
-  /** `Files.walk`/`Files.list` hold a directory handle until CLOSED —
-    * every traversal in this class drains through these two helpers so a
-    * long-lived driver (periodic vacuum, streaming commits) cannot leak
-    * one fd per directory visited and die of "Too many open files" (the
-    * `Scratch.deleteRecursively` lesson, applied store-wide). */
-  private def walkAll(dir: Path): Seq[Path] = {
-    val s = Files.walk(dir)
-    try s.iterator().asScala.toSeq finally s.close()
-  }
-
-  private def listDir(dir: Path): Seq[Path] = {
-    val s = Files.list(dir)
-    try s.iterator().asScala.toSeq finally s.close()
-  }
-
-  /** The single-table commit protocol — every commit outside multi-table
-    * [[transaction]]s publishes here, so this is the one place a table's
-    * pointer moves (and the one place to instrument it).
-    *
-    *  1. Allocate `v_<next>` atomically ([[allocateVersion]]).
-    *  2. Run `stage` outside the lock: it writes data, sidecars (`cdc/`,
-    *     `dv/`, `copy_files`) and the staged manifest into the slot, or
-    *     returns false — nothing to commit, the slot is dropped.
-    *  3. Publish under the table's commit lock. Optimistic concurrency:
-    *     with `expectedBase` set, the current version must still be the
-    *     one the writer derived its changes from; if it moved, the commit
-    *     is rebased onto it ([[tryRebase]]) or, on genuine conflict (or
-    *     always, with `strictCas`), raises
-    *     `ConcurrentModificationException` instead of clobbering the
-    *     other writer (Delta's conflict-detection shape, reduced to one
-    *     pointer). Without a base (plain replace) the commit still never
-    *     moves the pointer backward: it renumbers past an interloper that
-    *     claimed a higher number while it staged. Then the manifest is
-    *     promoted and the pointer swapped.
-    *
-    * On any failure the (possibly renumbered) directory is dropped, so a
-    * losing writer never surfaces as a phantom committed version. */
-  private def commit(name: String, expectedBase: Option[Option[Int]] = None,
-      strictCas: Boolean = false)(stage: (Int, Path) => Boolean): Unit = {
-    val (next, dir) = allocateVersion(name)
-    var liveDir = dir // rebase may renumber (move) the staged directory
-    try {
-      if (!stage(next, dir)) dropAbortedVersion(dir)
-      else withCommitLock(name) {
-        val finalV = expectedBase match {
-          case Some(base) if version(name) != base =>
-            val cur = version(name)
-            val rebased = (base, cur) match {
-              case (Some(bv), Some(cv)) if !strictCas => tryRebase(name, next, bv, cv)
-              case _ => None
-            }
-            rebased match {
-              case Some((v, d)) => liveDir = d; v
-              case None => throw new java.util.ConcurrentModificationException(
-                s"$name moved from version $base to $cur since this writer read " +
-                  "it, and the interleaved commits touched data this change " +
-                  "depends on — re-derive the change from the current snapshot " +
-                  "and retry")
-            }
-          case _ =>
-            // no CAS base (plain replace) or base unmoved — but an
-            // interleaved commit may still have claimed a HIGHER number
-            // while we staged (replaces assert nothing about the base, so
-            // they serialize in lock order): the pointer must never move
-            // backward — history, timestamp travel and the change feed
-            // all diff v against v-1 — so renumber past the interloper
-            if (version(name).exists(_ >= next)) {
-              val (v, d) = renumberStaged(name, stagedSnapshot(name, next))
-              liveDir = d; v
-            } else next
-        }
-        promoteManifest(name, finalV)
-        swapTo(name, finalV)
-      }
-    } catch { case t: Throwable => dropAbortedVersion(liveDir); throw t }
-  }
-
   /** The one parquet writer of the store: data files and the change-feed,
     * deletion-vector and discovery sidecars all compress with zstd
     * (Iceberg's default Parquet codec), set per write — never as a
@@ -1340,7 +893,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** Write `df`'s files into the allocated slot `v_<next>` (`dir`)
     * honoring the layout — partitioning, sort, bloom index, target file
     * rows — and stage the manifest `carryOver ++ new` WITHOUT making it
-    * current: the expensive half of a commit, shared by [[commit]] bodies
+    * current: the expensive half of a commit, shared by [[TableLog.commit]] bodies
     * and multi-table [[transaction]]s (which stage every table first and
     * swap all pointers together). The staged manifest records `layout`
     * (in physical names) as the version's layout. Returns the new files'
@@ -1448,14 +1001,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // staging dir, so an idempotent replay commits zero new data files
       // instead of accreting one empty parquet per run
       val (empties, kept) = newEntries.partition(_.rows == 0)
-      empties.foreach(e => Files.deleteIfExists(tableDir(name).resolve(e.rel)))
-      writeManifest(name, Snapshot(next, schemaHint.getOrElse(checked.schema),
+      empties.foreach(e => Files.deleteIfExists(log.tableDir(name).resolve(e.rel)))
+      log.writeManifest(name, Snapshot(next, schemaHint.getOrElse(checked.schema),
         carryOver ++ kept, physLayout, op))
       kept
-    } catch { case t: Throwable => dropAbortedVersion(dir); throw t }
+    } catch { case t: Throwable => deleteTree(dir); throw t }
   }
 
-  /** [[commit]] of `df` staged by [[stageVersion]], plus the change-feed
+  /** [[TableLog.commit]] of `df` staged by [[stageVersion]], plus the change-feed
     * rows and COPY INTO's loaded-file ledger inside the same staged
     * version directory — atomic with the commit (an abort drops them with
     * the version). Returns the entries of the files it staged. */
@@ -1465,7 +1018,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       cdc: Option[DataFrame] = None, copyFiles: Seq[String] = Nil,
       strictCas: Boolean = false): Seq[FileEntry] = {
     var added = Seq.empty[FileEntry]
-    commit(name, expectedBase, strictCas) { (next, dir) =>
+    log.commit(name, expectedBase, strictCas) { (next, dir) =>
       added = stageVersion(name, next, dir, df, layout, carryOver, schemaHint, op)
       cdc.foreach(parquetWriter(_).parquet(dir.resolve("cdc").toString))
       if (copyFiles.nonEmpty)
@@ -1475,106 +1028,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     added
   }
 
-  /** WriteSerializable optimistic-concurrency resolution (Delta's default
-    * isolation level): a commit whose compare-and-swap fails because the
-    * table moved under it is REBASED onto the new current version instead
-    * of aborted, whenever (a) the interleaved commits did not change the
-    * schema, and (b) they left every file this commit modifies or removes
-    * exactly as this writer read it. Blind appends therefore never lose a
-    * race (to each other, to DML, or to OPTIMIZE), and a long merge
-    * survives concurrent appends and maintenance of files it never
-    * rewrote — at 100 TB a 10-minute MERGE must not be thrown away
-    * because a streaming micro-batch landed meanwhile. Under
-    * [[setIsolation]] `serializable` only blind appends rebase; any
-    * rewriting commit conflicts, Delta's stricter level.
-    *
-    * The rebased manifest is `current ∖ ourTouched ∪ ourEntries`: files
-    * added by the interleaved commits are kept, files they removed stay
-    * removed (never resurrected), and our rewrite/delete/append applies
-    * on top. When the interloper won a HIGHER version number, the staged
-    * directory is atomically renamed past it and its entries re-anchored,
-    * keeping version numbers monotone in commit order (history,
-    * timestamp travel and the change feed all diff `v` against `v-1`).
-    *
-    * The layout rebases field by field (partition, sort, stats columns):
-    * a field this commit changed relative to its base keeps this commit's
-    * value, any other takes the current version's. A layout difference
-    * never conflicts, so a blind append racing a re-partitioning replace
-    * lands under the replace's layout.
-    *
-    * Returns the (version, directory) to promote, or None on genuine
-    * conflict. Must run inside the table's commit lock. */
-  private def tryRebase(name: String, next: Int, baseV: Int, curV: Int)
-      : Option[(Int, Path)] = {
-    if (!Files.exists(manifestPath(name, baseV))) return None // base vacuumed
-    val staged = stagedSnapshot(name, next)
-    val base = snapshotAt(name, baseV)
-    val cur = snapshotAt(name, curV)
-    if (cur.schema.json != base.schema.json) return None // concurrent schema change
-    val baseByRel = base.entries.map(e => e.rel -> e).toMap
-    val curByRel = cur.entries.map(e => e.rel -> e).toMap
-    val stagedRels = staged.entries.map(_.rel).toSet
-    val ourAdded = staged.entries.filterNot(e => baseByRel.contains(e.rel))
-    val ourModified = staged.entries.filter(e => baseByRel.get(e.rel).exists(_ != e))
-    val readSet = (ourModified.map(_.rel) ++
-      base.entries.map(_.rel).filterNot(stagedRels)).toSet
-    if (isolationLevel(name) == "serializable" && readSet.nonEmpty) return None
-    // every file we rewrite/modify/delete must be untouched by the
-    // interleaved commits — identity includes the deletion-vector set
-    if (!readSet.forall(r => curByRel.get(r).contains(baseByRel(r)))) return None
-    def field(f: Layout => Seq[String]): Seq[String] =
-      if (f(staged.layout) != f(base.layout)) f(staged.layout) else f(cur.layout)
-    val rebased = staged.copy(
-      entries = cur.entries.filterNot(e => readSet(e.rel)) ++ ourModified ++ ourAdded,
-      layout = Layout(field(_.partitionBy), field(_.sortWithin), field(_.statsFor)))
-    if (next > curV) {
-      writeManifest(name, rebased)
-      Some((next, tableDir(name).resolve(s"v_$next")))
-    } else {
-      Some(renumberStaged(name, rebased))
-    }
-  }
-
-  /** Renumber a staged version past an interloper that claimed an
-    * equal-or-higher number while we staged: claim a fresh version and
-    * move the staged directory's CONTENTS into it, keeping the claimed
-    * dir itself — the allocated directory doubles as the writer mutex,
-    * and the earlier delete-then-rename-of-the-whole-dir shape freed the
-    * number for a concurrent stager while rename(2) then landed ON TOP
-    * of the empty directory that stager had just claimed: both writers
-    * "owned" the version, one failed writing data/ and its abort
-    * cleanup deleted the other's committed files. Child moves are
-    * same-filesystem atomic renames inside a dir only this writer can
-    * touch; readers cannot see the version until _MANIFEST promotes
-    * inside the commit lock. Must run inside that lock. `staged` is the
-    * manifest to write, still numbered by its staging slot. */
-  private def renumberStaged(name: String, staged: Snapshot): (Int, Path) = {
-    val next = staged.version
-    val old = tableDir(name).resolve(s"v_$next")
-    val (claimed, ndir) = allocateVersion(name)
-    listDir(old).foreach { child =>
-      Files.move(child, ndir.resolve(child.getFileName.toString),
-        StandardCopyOption.ATOMIC_MOVE)
-    }
-    Files.delete(old)
-    def reanchor(p: String) =
-      if (p.startsWith(s"v_$next/")) s"v_$claimed/" + p.stripPrefix(s"v_$next/") else p
-    writeManifest(name, staged.copy(version = claimed, entries = staged.entries.map(e =>
-      e.copy(rel = reanchor(e.rel), dvs = e.dvs.map(reanchor)))))
-    (claimed, tableDir(name).resolve(s"v_$claimed"))
-  }
-
-  /** The table's isolation level for concurrent-commit resolution:
-    * `writeserializable` (default — Delta's default; commuting commits
-    * rebase, see [[tryRebase]]) or `serializable` (only blind appends
-    * rebase; every rewriting commit that loses a race conflicts). */
-  private def isolationLevel(name: String): String =
-    meta(name).properties.getOrElse("isolation", "writeserializable").toLowerCase
-
   def setIsolation(name: String, level: String): Unit = {
     TableStore.checkKnob(name, "isolation", level)
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties + ("isolation" -> level.toLowerCase)))
+    log.updateProperties(name)(_ + ("isolation" -> level.toLowerCase))
   }
 
   /** Manifest entries for freshly-written files. Footer reads are
@@ -1588,7 +1044,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val fs = files.map { p =>
-      val rel = tableDir(name).relativize(p).toString
+      val rel = log.tableDir(name).relativize(p).toString
       Future { // the footer also carries the row count DESCRIBE HISTORY reports
         val (stats, nulls, rows) = footerStats(p, statCols)
         FileEntry(rel, stats, Nil, rows, nulls = nulls)
@@ -1597,194 +1053,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     Await.result(Future.sequence(fs), Duration.Inf)
   }
 
-  /** File-based commit mutex: held only for the pointer check+swap (the
-    * expensive data writes happen outside it). Works cross-process on a
-    * shared filesystem; an object-store deployment would use a
-    * conditional PUT for the same window.
-    *
-    * The lock file records its holder ([[TableStore.writerToken]],
-    * `host~pid_nanos`), and a waiter that finds the recorded holder
-    * provably DEAD breaks the lock itself via [[breakDeadLock]] — so a
-    * writer that crashes inside the commit window never wedges the
-    * table, and nothing anywhere deletes a lock without first proving
-    * its current holder is gone (deleting a live writer's lock would put
-    * two writers inside the critical section). "Provably dead" requires
-    * the token's HOST to match: pid liveness is unknowable across a
-    * shared filesystem, so a foreign host's lock is never broken — the
-    * pre-liveness behavior (wait, then the >6s manual remedy below).
-    * An unreadable/empty holder is likewise treated as live: a failed
-    * token write deletes its own lock file on the way out, so an empty
-    * lock means a crash in the microseconds between create and write.
-    * A MALFORMED token (no `host~pid_` head — e.g. a write cut before
-    * the underscore) is treated as live too: a partially-visible write
-    * of a live acquirer's token can look exactly like that, and breaking
-    * it would let two writers into the window. A token cut INSIDE the
-    * nanos tail still carries its writer's complete host and pid, so it
-    * parses and is judged by the TRUE writer's liveness — see
-    * [[TableStore.sameHostPid]]. */
-  private def withCommitLock[T](name: String)(f: => T): T = {
-    val lock = tableDir(name).resolve("_COMMIT_LOCK")
-    val token = TableStore.writerToken()
-    var tries = 0
-    while (true) {
-      // acquisition is its own try: an exception from the BODY `f` must
-      // never be mistaken for lock contention and retried
-      val acquired =
-        try {
-          val ch = Files.newByteChannel(lock,
-            StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-          try {
-            // loop until the buffer drains: a short write that returns
-            // without throwing would otherwise leave a truncated token on
-            // disk while this writer proceeds believing it holds the lock
-            // (harmless to breakers — a truncated token either fails to
-            // parse or parses to THIS live pid, so it is never broken
-            // under a live holder — but a holder that proceeded on a
-            // short write would leave a token that wedges or misleads
-            // after a real crash)
-            val buf = java.nio.ByteBuffer.wrap(token.getBytes(UTF_8))
-            try { while (buf.hasRemaining) { ch.write(buf); () } }
-            finally ch.close()
-          } catch { case t: Throwable =>
-            // a failed token write must not orphan an empty (unbreakable)
-            // lock file — only a hard crash inside this window can; the
-            // cleanup is sidecar-serialized so it can never delete a
-            // successor's lock (a breaker may have judged our partial
-            // token dead and a new writer re-acquired)
-            cleanupOwnFailedLock(lock, token); throw t
-          }
-          true
-        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      if (acquired) {
-        try return f finally Files.deleteIfExists(lock)
-      } else {
-        val holder = lockHolder(lock)
-        if (holder.exists(TableStore.writerDead)) breakDeadLock(lock, holder.get)
-        // the break attempt counts toward the same timeout (a break that
-        // persistently fails — permissions, racing breakers — must not
-        // spin hot forever); a successful break re-acquires next loop
-        tries += 1
-        if (tries > 600) throw new IllegalStateException(
-          s"commit lock $lock held for >6s by " +
-            s"${holder.getOrElse("<unknown>")} — crashed writer? " +
-            "delete it to recover")
-        Thread.sleep(10)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** The writer token a lock file records, None if the file vanished
-    * (holder released between our check and the read) or is empty
-    * (holder crashed mid-acquisition). */
-  private def lockHolder(lock: Path): Option[String] =
-    try {
-      val s = new String(Files.readAllBytes(lock), UTF_8).trim
-      if (s.isEmpty) None else Some(s)
-    } catch { case _: java.io.IOException => None }
-
-  /** Break a lock whose recorded holder provably died inside the commit
-    * window — [[deleteLockIfHolds]] with the dead holder as the expected
-    * token. */
-  private def breakDeadLock(lock: Path, expected: String): Unit = {
-    deleteLockIfHolds(lock, expected)
-    ()
-  }
-
-  /** Clean up this writer's own lock file after its token write failed.
-    * The file is provably still ours, whatever it holds: a truncated
-    * token either fails to parse (cut before the `_`) or parses to OUR
-    * pid (cut inside the nanos — host and pid survive any such cut,
-    * [[TableStore.sameHostPid]]), and we are alive, so no breaker can
-    * have judged our partial dead; an empty or unreadable holder is
-    * never broken either; and our COMPLETE token names a live process.
-    * With no break possible, no successor can have re-created the file —
-    * so the holder can only be empty, our token, or a strict prefix of
-    * it. The delete still verifies exactly that, atomically under the
-    * breaker sidecar ([[deleteLockWhen]]), so even a future format
-    * regression could not turn this into a delete of someone else's
-    * lock. Ours-but-busy outcomes retry briefly so a transient sidecar
-    * collision cannot orphan an unbreakable partial. Never throws: the
-    * original write failure is the error the caller reports. */
-  private def cleanupOwnFailedLock(lock: Path, ownToken: String): Unit = {
-    var tries = 0
-    while (tries < 100) {
-      val done =
-        try deleteLockWhen(lock, h =>
-          h.isEmpty || h.exists(t => t == ownToken || ownToken.startsWith(t)))
-        catch { case _: java.io.IOException => false }
-      if (done) return
-      tries += 1
-      Thread.sleep(10)
-    }
-  }
-
-  /** Serialized conditional lock delete: removes `lock` only if, while
-    * holding the breaker mutex, it still records exactly `expected`.
-    * The mutex is an OS advisory lock on a persistent sidecar
-    * (`_COMMIT_LOCK.breaklock`) rather than a marker FILE: an advisory
-    * lock cannot go stale — the OS releases it when its holder dies — so
-    * there is no stale-marker cleanup and therefore no cleanup race that
-    * could void the breakers' mutual exclusion. While one breaker holds
-    * the sidecar no other breaker can delete the lock, and a writer can
-    * never re-create a lock that still exists (CREATE_NEW), so the
-    * re-verify makes verify-then-delete sound by construction: if the
-    * path's token still equals `expected`, nothing can change it before
-    * our delete. In-JVM breakers are additionally serialized through
-    * [[TableStore.breakersActive]] — see its scaladoc — and the sidecar
-    * file itself is NEVER deleted (unlinking a file others hold advisory
-    * locks on would split the mutex across two inodes). Never throws: a
-    * filesystem without advisory-lock support simply cannot break locks,
-    * and the waiter falls through to the >6s manual-remedy timeout.
-    * Returns true when the lock provably no longer holds `expected`
-    * (deleted by us, changed, or already gone); false when the breaker
-    * mutex was busy/unavailable and nothing could be verified. */
-  private def deleteLockIfHolds(lock: Path, expected: String): Boolean =
-    deleteLockWhen(lock, _.contains(expected))
-
-  /** The sidecar-serialized core of [[deleteLockIfHolds]] /
-    * [[cleanupOwnFailedLock]]: while holding the breaker mutex, read the
-    * lock's holder ([[lockHolder]] — None for gone/empty/unreadable) and
-    * delete the file iff `shouldDelete` accepts it. See
-    * [[deleteLockIfHolds]] for the mutex's soundness argument and
-    * return-value contract. */
-  private def deleteLockWhen(lock: Path,
-      shouldDelete: Option[String] => Boolean): Boolean = {
-    val sidecar = lock.resolveSibling(lock.getFileName.toString + ".breaklock")
-    // normalized so two spellings of one root cannot bypass the in-JVM
-    // guard (toRealPath would be stronger against symlinked roots but can
-    // fail on a not-yet-created sidecar)
-    val key = sidecar.toAbsolutePath.normalize.toString
-    if (!TableStore.breakersActive.add(key)) return false // in-JVM breaker active
-    try {
-      val ch = try java.nio.channels.FileChannel.open(sidecar,
-          StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-        catch { case _: java.io.IOException => return false }
-      try {
-        val fl = try ch.tryLock()
-          catch {
-            // no advisory-lock support (or an unexpected in-JVM overlap):
-            // breaking is not safely possible here — let the waiter time out
-            case _: java.nio.channels.OverlappingFileLockException => null
-            case _: java.io.IOException => null
-          }
-        if (fl == null) return false // another breaker is active — retry outside
-        try {
-          if (shouldDelete(lockHolder(lock)))
-            try { Files.deleteIfExists(lock); true }
-            catch { case _: java.io.IOException => false }
-          else true // holder not accepted — nothing left to do
-        } finally fl.release()
-      } finally ch.close()
-    } finally TableStore.breakersActive.remove(key)
-  }
-
   /** Compare-and-swap snapshot write: commits `df` only if the table is
     * still at `baseVersion` (what this writer read); otherwise raises
     * `ConcurrentModificationException` — the lost-update protection the
     * internal DML paths get automatically. */
   def replaceIfUnchanged(name: String, df: DataFrame, baseVersion: Int): Unit =
-    commitVersion(name, df, snapshot(name).layout, carryOver = Seq.empty,
+    commitVersion(name, df, log.snapshot(name).layout, carryOver = Seq.empty,
       expectedBase = Some(Some(baseVersion)), strictCas = true)
 
   /** OPTIMIZE-style compaction: rewrite the current manifest's files into
@@ -1806,7 +1080,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * the multi-dimensional version of the sort-based data skipping a
     * single sort column gives. */
   def compact(name: String, targetFiles: Int = 1, zorderBy: Seq[String] = Nil): Unit = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     val Layout(pb, sw, sf) = snap.layout
     val df0 = rewriteSource(name, snap, snap.entries)
     // readEntries yields the LOGICAL view; layout names in the manifest
@@ -1869,11 +1143,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // Delta liquid clustering's "cluster on write into the existing
       // layout" shape. The baseline version marks which files are
       // already clustered.
-      setMeta(name, meta(name).copy(properties = meta(name).properties +
+      log.updateProperties(name)(_ +
         ("zorder.cols" -> zorderBy.mkString(",")) +
         ("zorder.bits" -> bits.toString) +
         ("zorder.bounds" -> quantiles.map(_.mkString(":")).mkString(";")) +
-        ("zorder.base" -> version(name).get.toString)))
+        ("zorder.base" -> version(name).get.toString))
     }
   }
 
@@ -1949,8 +1223,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     commitVersion(name, prepared, Layout(pb, Nil, (sf ++ sw ++ cols).distinct),
       carryOver = snap.entries.filterNot(e => cset(e.rel)), schemaHint = Some(snap.schema),
       expectedBase = Some(Some(snap.version)), op = "optimize")
-    setMeta(name, meta(name).copy(properties = meta(name).properties +
-      ("zorder.base" -> version(name).get.toString)))
+    log.updateProperties(name)(_ +
+      ("zorder.base" -> version(name).get.toString))
   }
 
   /** Cluster the files ADDED since the last (full or incremental) ZORDER
@@ -1962,11 +1236,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val (_, _, _, basev) = zorderSpec(name).getOrElse(
       throw new IllegalStateException(
         s"$name: no persisted ZORDER curve — run OPTIMIZE … ZORDER BY first"))
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     val clustered: Set[String] =
       if (basev == snap.version) snap.entries.map(_.rel).toSet
       else if (!hasVersion(name, basev)) Set.empty
-      else snapshotAt(name, basev).entries.map(_.rel).toSet
+      else log.snapshotAt(name, basev).entries.map(_.rel).toSet
     clusterEntries(name, snap,
       snap.entries.filterNot(e => clustered(e.rel) && e.dvs.isEmpty), targetFiles)
   }
@@ -1976,7 +1250,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * persisted curve. `targetFiles` ≤ 0 keeps the candidate file count —
     * clustering re-ranges files, it doesn't consolidate them. */
   def zorderWhere(name: String, pred: Column, targetFiles: Int = 0): Unit = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     val candidates = pruneEntries(name, snap.schema, snap.entries, pred)
     clusterEntries(name, snap, candidates,
       if (targetFiles > 0) targetFiles else math.max(1, candidates.size))
@@ -1988,7 +1262,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * with the predicate's slice, never the table. Deletion vectors on
     * candidate files fold in; every other file carries over untouched. */
   def compactWhere(name: String, pred: Column, targetFiles: Int = 1): Unit = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     val candidates = pruneEntries(name, snap.schema, snap.entries, pred)
     if (candidates.size <= 1 && !candidates.exists(_.dvs.nonEmpty)) return
     val cset = candidates.map(_.rel).toSet
@@ -2017,7 +1291,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * the cost is the small-file backlog, never the table. No-op when
     * fewer than two entries qualify. */
   def compactSmall(name: String, smallBytes: Long = 32L << 20): Unit =
-    compactSmallOf(name, snapshot(name), smallBytes, minFiles = 2)
+    compactSmallOf(name, log.snapshot(name), smallBytes, minFiles = 2)
 
   /** [[compactSmall]] of `snap`, run only when at least `minFiles`
     * entries qualify. */
@@ -2033,14 +1307,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * inline — the antidote to streaming-append small-file accumulation,
     * applied where it is produced. */
   def setAutoCompact(name: String, smallFiles: Int, smallBytes: Long = 32L << 20): Unit =
-    setMeta(name, meta(name).copy(properties = meta(name).properties +
+    log.updateProperties(name)(_ +
       ("auto_compact_files" -> smallFiles.toString) +
-      ("auto_compact_bytes" -> smallBytes.toString)))
+      ("auto_compact_bytes" -> smallBytes.toString))
 
   private def maybeAutoCompact(name: String): Unit = {
     val props = meta(name).properties
     props.get("auto_compact_files").map(_.toInt).foreach { threshold =>
-      compactSmallOf(name, snapshot(name),
+      compactSmallOf(name, log.snapshot(name),
         props.get("auto_compact_bytes").map(_.toLong).getOrElse(32L << 20), threshold)
     }
   }
@@ -2062,7 +1336,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // frame: a replace that omits an always-derived column (the normal
     // generated-column usage — the write derives it) keeps its
     // declaration, because the committed schema carries the column.
-    val committed = logicalizeSchema(name, snapshot(name).schema).fieldNames
+    val committed = logicalizeSchema(name, log.snapshot(name).schema).fieldNames
     val stale = generatedColumns(name).filter { case (logical, sql) =>
       !committed.exists(_.equalsIgnoreCase(logical)) || {
         import org.apache.spark.sql.functions.expr
@@ -2073,9 +1347,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       }
     }
     if (stale.nonEmpty)
-      setMeta(name, meta(name).copy(properties = stale.keys.foldLeft(meta(name).properties) {
-        (p, logical) => p - s"gencol.${physicalName(name, logical)}"
-      }))
+      log.updateProperties(name)(_ -- stale.keys.map(l => s"gencol.${physicalName(name, l)}"))
   }
 
   /** Schema enforcement for appends: explicit-schema reads would silently
@@ -2106,7 +1378,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * to make replays detectable ([[lastStreamBatch]]). */
   def append(name: String, df: DataFrame, op: String = "append",
       copyFiles: Seq[String] = Nil): Unit = {
-    appendTo(name, snapshot(name), df, op, copyFiles)
+    appendTo(name, log.snapshot(name), df, op, copyFiles)
     maybeAutoCompact(name)
   }
 
@@ -2138,7 +1410,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * @return (files loaded, rows loaded) */
   def copyInto(name: String, from: String, format: String = "parquet",
       pattern: Option[String] = None, force: Boolean = false): (Long, Long) = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     val fromPath = Paths.get(from).toAbsolutePath.normalize
     require(Files.exists(fromPath), s"COPY INTO $name: source $from not found")
     val ext = format.toLowerCase match {
@@ -2180,16 +1452,15 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** Every source file a committed COPY INTO has loaded: the folded
     * `_COPY_LOADED` sidecar plus the `copy_files` ledgers still riding
     * live version directories. */
-  def loadedCopyFiles(name: String): Set[String] = {
-    val sidecar = tableDir(name).resolve("_COPY_LOADED")
-    val folded =
-      if (Files.exists(sidecar)) Files.readAllLines(sidecar).asScala.toSet
-      else Set.empty[String]
-    folded ++ versions(name).flatMap { v =>
-      val f = tableDir(name).resolve(s"v_$v").resolve("copy_files")
-      if (Files.exists(f)) Files.readAllLines(f).asScala else Nil
-    }
-  }
+  def loadedCopyFiles(name: String): Set[String] =
+    (TableLog.readLedger(copyLoadedPath(name)) ++
+      versions(name).flatMap(copyFilesOf(name, _))).toSet
+
+  private def copyLoadedPath(name: String): Path = log.tableDir(name).resolve("_COPY_LOADED")
+
+  /** The source files committed version `v`'s COPY INTO loaded. */
+  private def copyFilesOf(name: String, v: Int): Seq[String] =
+    TableLog.readLedger(log.tableDir(name).resolve(s"v_$v").resolve("copy_files"))
 
   /** Highest micro-batch id a streaming append has committed to `name`
     * (encoded in manifest operation labels `stream_append:<id>`), or None
@@ -2203,19 +1474,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * it. */
   def lastStreamBatch(name: String): Option[Long] =
     if (!exists(name)) None
-    else streamHighWater(name, versions(name).map(opAt(name, _)))
-
-  /** A committed version's operation label, read from its manifest's first
-    * two lines ([[writeManifest]] writes `#schema`, then `#op`) without
-    * parsing the schema or the file entries. */
-  private def opAt(name: String, version: Int): String = {
-    val in = Files.newBufferedReader(manifestPath(name, version), UTF_8)
-    try {
-      in.readLine()
-      Option(in.readLine()).filter(_.startsWith("#op\t"))
-        .fold("write")(l => dec(l.stripPrefix("#op\t")))
-    } finally in.close()
-  }
+    else streamHighWater(name, versions(name).map(log.opAt(name, _)))
 
   /** [[lastStreamBatch]] over the given retained op labels. */
   private def streamHighWater(name: String, ops: Seq[String]): Option[Long] =
@@ -2242,7 +1501,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   private def scanManifest(name: String, snap: Snapshot, entries: Seq[FileEntry],
       props: Map[String, String]): DataFrame = {
     val ctx = skipContext(props, snap.schema, logical = false)
-    val index = new ManifestFileIndex(tableDir(name), snap.version, entries.map(_.rel),
+    val index = new ManifestFileIndex(log.tableDir(name), snap.version, entries.map(_.rel),
       pred => pruneWith(name, ctx, entries, pred).map(_.rel))
     org.apache.spark.sql.GraftShims.parquetScan(spark, index, snap.schema)
   }
@@ -2290,7 +1549,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * over `v_1/data/…`) — so each DV's `file` is matched against the
     * entries re-expressed relative to that directory. */
   private def dvPositions(name: String, entries: Seq[FileEntry]): DataFrame = {
-    val here = tableDir(name).toAbsolutePath.normalize
+    val here = log.tableDir(name).toAbsolutePath.normalize
     val top = Paths.get(root).toAbsolutePath.normalize
     def abs(rel: String) = here.resolve(rel).normalize
     // every table dir is <root>/<db>/<table>
@@ -2328,10 +1587,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * against the filters the query pushes down ([[ManifestFileIndex]]),
     * so `read(name).filter(p)` and SQL lookups open only the files `p`
     * can touch. */
-  def read(name: String): DataFrame = {
-    val snap = snapshot(name)
-    readEntries(name, snap, snap.entries)
-  }
+  def read(name: String): DataFrame = readAll(name, log.snapshot(name))
 
   /** The table as a STREAMING source (Delta's `spark.readStream.table`):
     * sugar over the `graft-table` DSv2 source — see
@@ -2339,7 +1595,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * Options (`startingVersion`, `maxFilesPerTrigger`, `ignoreChanges`,
     * …) pass through. */
   def readStream(name: String, options: Map[String, String] = Map.empty): DataFrame = {
-    snapshot(name) // raises on a missing table
+    log.snapshot(name) // raises on a missing table
     val r = spark.readStream.format("graft-table")
       .option("root", root).option("table", name)
     options.foreach { case (k, v) => r.option(k, v) }
@@ -2374,7 +1630,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * bloom every file survives, which is correct, just not fast. */
   private[graft] def readPointPruned(name: String, points: DataFrame,
       cols: Seq[String]): (DataFrame, (Int, Int)) = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     val boxCand = boxPointCandidates(name, snap, points, cols)
     // blooms refine the box survivors UNCONDITIONALLY (not only when the
     // boxes pruned nothing): on a mixed layout — a few narrow-box files
@@ -2401,9 +1657,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // only matters at many-file scale, where it is a rounding error.
     if (total <= 8) return full
     val rn = renames(name)
-    def statsOf(e: FileEntry): Map[String, ColStats] =
-      if (rn.isEmpty) e.stats
-      else e.stats.map { case (k, v) => (rn.getOrElse(k, k), v) }
+    def statsOf(e: FileEntry) = rekeyed(e.stats, rn)
     val lschema = logicalizeSchema(name, snap.schema)
     // numeric cols compare after a cast of the stat string; string cols
     // compare directly — Spark's string ordering is unsigned byte-wise,
@@ -2504,19 +1758,17 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   }
 
   /** Time travel: read a specific retained snapshot version. */
-  def readVersion(name: String, version: Int): DataFrame = {
-    val snap = snapshotAt(name, version)
-    readEntries(name, snap, snap.entries)
-  }
+  def readVersion(name: String, version: Int): DataFrame = readAll(name, log.snapshotAt(name, version))
 
   /** Read a transaction-STAGED (not yet committed) version: the staged
     * manifest's files, invisible to every ordinary reader until the
     * transaction publishes. The read-your-writes primitive behind
     * [[Txn.readStaged]]. */
-  private[tables] def readStagedVersion(name: String, version: Int): DataFrame = {
-    val snap = stagedSnapshot(name, version)
+  private[tables] def readStagedVersion(name: String, version: Int): DataFrame =
+    readAll(name, log.stagedSnapshot(name, version))
+
+  private def readAll(name: String, snap: Snapshot): DataFrame =
     readEntries(name, snap, snap.entries)
-  }
 
   /** Row-level change feed between two retained versions (Delta CDF
     * shape): `_change_type` = `insert` for rows present in `toVersion` but
@@ -2528,17 +1780,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * files, not the table. Duplicate rows diff by multiplicity
     * (exceptAll). */
   def changesBetween(name: String, fromVersion: Int, toVersion: Int): DataFrame = {
-    val (sa, sb) = (snapshotAt(name, fromVersion), snapshotAt(name, toVersion))
+    val (sa, sb) = (log.snapshotAt(name, fromVersion), log.snapshotAt(name, toVersion))
     require(sa.schema.fieldNames.sameElements(sb.schema.fieldNames),
       s"$name: schema changed between v$fromVersion and v$toVersion — " +
         "diff the versions on their common columns explicitly")
-    // entry identity includes the deletion-vector set: a file whose DVs
-    // changed between versions contributes its row-level delta (the file
-    // is re-read on both sides and the unchanged rows cancel in exceptAll)
-    val aKeys = sa.entries.map(e => (e.rel, e.dvs)).toSet
-    val bKeys = sb.entries.map(e => (e.rel, e.dvs)).toSet
-    val onlyA = readEntries(name, sa, sa.entries.filterNot(e => bKeys((e.rel, e.dvs))))
-    val onlyB = readEntries(name, sb, sb.entries.filterNot(e => aKeys((e.rel, e.dvs))))
+    // a file whose DVs changed is re-read on both sides, and its unchanged
+    // rows cancel in exceptAll
+    val (added, removed) = entryDiff(sa.entries, sb.entries)
+    val (onlyA, onlyB) = (readEntries(name, sa, removed), readEntries(name, sb, added))
     import org.apache.spark.sql.functions.lit
     onlyB.exceptAll(onlyA).withColumn("_change_type", lit("insert"))
       .unionByName(onlyA.exceptAll(onlyB).withColumn("_change_type", lit("delete")))
@@ -2591,7 +1840,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // serves as the next version's predecessor, and a version with a
     // change-feed sidecar needs none
     val parsed = scala.collection.mutable.Map.empty[Int, Snapshot]
-    def at(v: Int): Snapshot = parsed.getOrElseUpdate(v, snapshotAt(name, v))
+    def at(v: Int): Snapshot = parsed.getOrElseUpdate(v, log.snapshotAt(name, v))
     val frames = all.filter(v => v > fromVersion && v <= toVersion).map { v =>
       val cdcPath = cdcDir(name, v)
       val prevOpt = all.filter(_ < v).maxOption
@@ -2611,10 +1860,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
             "cannot be reconstructed; start the feed at a retained version")
       } else {
         val prev = at(prevOpt.get)
-        val prevKeys = prev.entries.map(e => (e.rel, e.dvs)).toSet
-        val curKeys = cur.entries.map(e => (e.rel, e.dvs)).toSet
-        val added = cur.entries.filterNot(e => prevKeys((e.rel, e.dvs)))
-        val removed = prev.entries.filterNot(e => curKeys((e.rel, e.dvs)))
+        val (added, removed) = entryDiff(prev.entries, cur.entries)
         if (removed.isEmpty)
           Some(vcol(readEntries(name, cur, added)
             .withColumn("_change_type", lit("insert"))))
@@ -2641,7 +1887,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     frames.flatten
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse {
-        val live = version(name).fold(snapshot(name))(at)
+        val live = version(name).fold(log.snapshot(name))(at)
         emptyDf(logicalizeSchema(name, live.schema)
           .add("_change_type", StringType).add("_commit_version", IntegerType))
       }
@@ -2653,7 +1899,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * store's own reads use). */
   private[graft] def prunedInventory(name: String, pred: Option[Column])
       : Seq[(String, Long, Boolean, Long)] = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     val kept = pred.map(p => pruneEntries(name, snap.schema, snap.entries, p))
       .getOrElse(snap.entries)
     kept.map { e =>
@@ -2679,7 +1925,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * sizes come from the filesystem at plan time (local metadata). */
   private[graft] def snapshotInventory(name: String, version: Int)
       : (StructType, String, Seq[(String, Long, Boolean)]) = {
-    val snap = snapshotAt(name, version)
+    val snap = log.snapshotAt(name, version)
     val files = snap.entries.map { e =>
       val abs = absPath(name, e.rel)
       (abs, Files.size(Paths.get(abs)), e.dvs.nonEmpty)
@@ -2696,14 +1942,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * never wrong. */
   def history(name: String): Seq[(Int, java.time.Instant, String, Int, Long)] =
     versions(name).reverse.map { v =>
-      val snap = snapshotAt(name, v)
-      (v, commitTime(name, v), snap.op, snap.entries.size, rowsOf(snap.entries))
+      val snap = log.snapshotAt(name, v)
+      (v, log.commitTime(name, v), snap.op, snap.entries.size, rowsOf(snap.entries))
     }
-
-  /** A committed version's commit time: its manifest's mtime, which
-    * [[promoteManifest]] sets at commit. */
-  private def commitTime(name: String, version: Int): java.time.Instant =
-    Files.getLastModifiedTime(manifestPath(name, version)).toInstant
 
   /** Physical row count of `es`, -1 (unknown) when some file predates
     * footer row counts or carries deletion vectors (its live count is
@@ -2721,28 +1962,32 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   def operationMetrics(name: String, version: Int): (Int, Int, Long, Long) = {
     val vs = versions(name)
     require(vs.contains(version), s"$name: no retained version $version")
-    val cur = snapshotAt(name, version).entries
+    val cur = log.snapshotAt(name, version).entries
     val prev = vs.filter(_ < version).maxOption
-      .map(snapshotAt(name, _).entries).getOrElse(Nil)
-    // entry identity includes the DV set — a DV-only commit shows as
-    // remove+add of the same file (its live rows changed)
-    val curKeys = cur.map(e => (e.rel, e.dvs)).toSet
-    val prevKeys = prev.map(e => (e.rel, e.dvs)).toSet
-    val added = cur.filterNot(e => prevKeys((e.rel, e.dvs)))
-    val removed = prev.filterNot(e => curKeys((e.rel, e.dvs)))
+      .map(log.snapshotAt(name, _).entries).getOrElse(Nil)
+    val (added, removed) = entryDiff(prev, cur)
     (added.size, removed.size, rowsOf(added), rowsOf(removed))
+  }
+
+  /** The manifest diff `from` → `to`: (entries added, entries removed).
+    * Entry identity includes the deletion-vector set, so a DV-only commit
+    * shows as remove+add of the same file (its live rows changed). */
+  private def entryDiff(from: Seq[FileEntry], to: Seq[FileEntry])
+      : (Seq[FileEntry], Seq[FileEntry]) = {
+    val (f, t) = (from.map(e => (e.rel, e.dvs)).toSet, to.map(e => (e.rel, e.dvs)).toSet)
+    (to.filterNot(e => f((e.rel, e.dvs))), from.filterNot(e => t((e.rel, e.dvs))))
   }
 
   /** The latest version committed at or before `ts` (timestamp travel). */
   def versionAsOf(name: String, ts: java.time.Instant): Int = {
     val vs = versions(name)
-    vs.reverse.find(v => !commitTime(name, v).isAfter(ts))
+    vs.reverse.find(v => !log.commitTime(name, v).isAfter(ts))
       .getOrElse(throw new IllegalArgumentException(
         s"$name TIMESTAMP AS OF $ts precedes the oldest retained commit " +
-          s"(${vs.headOption.map(commitTime(name, _)).getOrElse("none")})"))
+          s"(${vs.headOption.map(log.commitTime(name, _)).getOrElse("none")})"))
   }
 
-  /** Metadata-only [[commit]] of `from` — the snapshot the commit derives
+  /** Metadata-only [[TableLog.commit]] of `from` — the snapshot the commit derives
     * from, with its schema, entries and layout — labelled `op`: the
     * primitive behind [[restore]], the clones and the schema/metadata
     * DDL; no data moves. DDL passes the version it read as `base`, so it
@@ -2750,8 +1995,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * base (restore, clones) the commit replaces. */
   private def commitManifestOnly(name: String, from: Snapshot, op: String,
       base: Option[Int] = None): Unit =
-    commit(name, base.map(Some(_))) { (next, _) =>
-      writeManifest(name, from.copy(version = next, op = op)); true
+    log.commit(name, base.map(Some(_))) { (next, _) =>
+      log.writeManifest(name, from.copy(version = next, op = op)); true
     }
 
   /** Delta RESTORE: make `version`'s content — its files, schema and
@@ -2760,7 +2005,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * Metadata-only — the old manifest is re-pointed, no data is
     * rewritten. */
   def restore(name: String, version: Int): Unit =
-    commitManifestOnly(name, snapshotAt(name, version), "restore")
+    commitManifestOnly(name, log.snapshotAt(name, version), "restore")
 
   /** ALTER TABLE … ADD COLUMNS: **metadata-only** schema widening — the
     * new columns are appended to the manifest schema and every existing
@@ -2768,7 +2013,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * addition on a 100 TB table commits in milliseconds and rewrites
     * nothing — Delta's schema-evolution model. */
   def addColumns(name: String, cols: StructType): Unit = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     // collide against BOTH name spaces: visible logical names and on-disk
     // physical names (incl. renamed/dropped columns still in old files)
     val taken = snap.schema.fieldNames ++ logicalizeSchema(name, snap.schema).fieldNames
@@ -2881,16 +2126,21 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         Some("bloom filter index") else None)
   }
 
+  /** The field of `visible` (the logical schema) that `colName` names,
+    * case-insensitively; a missing column raises, naming the statement. */
+  private def visibleField(name: String, visible: StructType, colName: String,
+      what: String): StructField =
+    visible.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(throw new IllegalArgumentException(
+      s"$name $what: no column $colName (columns: ${visible.fieldNames.mkString(", ")})"))
+
   /** ALTER TABLE … RENAME COLUMN — **metadata-only** (column mapping): no
     * file is rewritten at any scale; the rename is one sidecar write plus
     * a manifest-only commit for DESCRIBE HISTORY. */
   def renameColumn(name: String, from: String, to: String): Unit = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     val schema = snap.schema
     val visible = logicalizeSchema(name, schema)
-    val field = visible.fields.find(_.name.equalsIgnoreCase(from)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$name RENAME COLUMN: no column ${from} (columns: ${visible.fieldNames.mkString(", ")})"))
+    val field = visibleField(name, visible, from, "RENAME COLUMN")
     val physical = physicalName(name, field.name)
     referencedInMeta(name, field.name).foreach(ref => throw new IllegalArgumentException(
       s"$name RENAME COLUMN $from: referenced by $ref — drop/re-add it around the rename"))
@@ -2916,11 +2166,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * files keep the column's bytes but no read ever selects it; new files
     * simply omit it. */
   def dropColumn(name: String, colName: String): Unit = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     val visible = logicalizeSchema(name, snap.schema)
-    val field = visible.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$name DROP COLUMN: no column $colName (columns: ${visible.fieldNames.mkString(", ")})"))
+    val field = visibleField(name, visible, colName, "DROP COLUMN")
     require(visible.fields.length > 1, s"$name DROP COLUMN: cannot drop the only column")
     val physical = physicalName(name, field.name)
     referencedInMeta(name, field.name).foreach(ref => throw new IllegalArgumentException(
@@ -2955,16 +2203,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * the next write touches them — backfill explicitly with
     * `UPDATE t SET c = <expr>` (file-pruned) or a rewrite. */
   def setGeneratedColumn(name: String, colName: String, exprSql: String): Unit = {
-    val visible = logicalizeSchema(name, snapshot(name).schema)
-    val field = visible.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$name GENERATED COLUMN: no column $colName (columns: ${visible.fieldNames.mkString(", ")})"))
+    val visible = logicalizeSchema(name, log.snapshot(name).schema)
+    val field = visibleField(name, visible, colName, "GENERATED COLUMN")
     val word = java.util.regex.Pattern.compile(
       "(?i)\\b" + java.util.regex.Pattern.quote(field.name) + "\\b")
     require(!word.matcher(exprSql).find(),
       s"$name GENERATED COLUMN $colName: expression must not reference the column itself")
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties + (s"gencol.${physicalName(name, field.name)}" -> exprSql)))
+    log.updateProperties(name)(_ + (s"gencol.${physicalName(name, field.name)}" -> exprSql))
   }
 
   /** Generation expressions currently declared: logical column → SQL. */
@@ -2989,7 +2234,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val gens = generatedColumns(name)
     if (gens.isEmpty || (schema.isEmpty && !exists(name))) df
     else {
-      val visible = logicalizeSchema(name, schema.getOrElse(snapshot(name).schema))
+      val visible = logicalizeSchema(name, schema.getOrElse(log.snapshot(name).schema))
       gens.foldLeft(df) { case (d, (logical, sql)) =>
         val declared = visible.fields.find(_.name.equalsIgnoreCase(logical))
         import org.apache.spark.sql.functions.expr
@@ -3024,14 +2269,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * failed commit may burn a key range but never double-issues. */
   def setIdentity(name: String, colName: String, start: Long = 1L, step: Long = 1L): Unit = {
     require(step != 0, "identity step must be non-zero")
-    val visible = logicalizeSchema(name, snapshot(name).schema)
-    val field = visible.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$name IDENTITY: no column $colName (columns: ${visible.fieldNames.mkString(", ")})"))
+    val visible = logicalizeSchema(name, log.snapshot(name).schema)
+    val field = visibleField(name, visible, colName, "IDENTITY")
     require(field.dataType == org.apache.spark.sql.types.LongType,
       s"$name IDENTITY $colName: need BIGINT, got ${field.dataType.catalogString}")
-    setMeta(name, meta(name).copy(properties = meta(name).properties +
-      (s"identity.${physicalName(name, field.name)}" -> s"$start,$step,0")))
+    log.updateProperties(name)(_ +
+      (s"identity.${physicalName(name, field.name)}" -> s"$start,$step,0"))
   }
 
   /** The identity declaration, if any: (logical col, start, step, issued). */
@@ -3074,11 +2317,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           it => Iterator.single(it.size.toLong), preservesPartitioning = true).collect()
         val n = partCounts.sum
         val offsets = partCounts.scanLeft(0L)(_ + _)
-        val issued = withCommitLock(name) {
+        val issued = log.withCommitLock(name) {
           // re-read under the lock: another append may have claimed since
           val cur = identityColumn(name).get._4
-          setMeta(name, meta(name).copy(properties = meta(name).properties +
-            (s"identity.${physicalName(name, colName)}" -> s"$start,$step,${cur + n}")))
+          log.updateProperties(name)(_ +
+            (s"identity.${physicalName(name, colName)}" -> s"$start,$step,${cur + n}"))
           cur
         }
         val counted = rdd.mapPartitionsWithIndex { case (pi, it) =>
@@ -3098,11 +2341,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * only what it touches (copy-on-write), never the source's files; a
     * later vacuum of the clone leaves files outside its directory alone. */
   def cloneTo(src: String, dst: String): Unit = {
-    val snap = snapshot(src)
+    val snap = log.snapshot(src)
     require(!exists(dst), s"clone target $dst already exists")
     // re-anchor entries relative to the clone's table dir
-    val srcDir = tableDir(src).toAbsolutePath.normalize
-    val dstDir = tableDir(dst).toAbsolutePath.normalize
+    val srcDir = log.tableDir(src).toAbsolutePath.normalize
+    val dstDir = log.tableDir(dst).toAbsolutePath.normalize
     Files.createDirectories(dstDir)
     def reanchor(rel: String) = dstDir.relativize(srcDir.resolve(rel).normalize).toString
     val reanchored = snap.entries.map(e => e.copy(rel = reanchor(e.rel), dvs = e.dvs.map(reanchor)))
@@ -3130,12 +2373,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * vector names its rows' files by manifest-relative path, so it is
     * rewritten with the moved paths rather than copied. */
   def deepCloneTo(src: String, dst: String): Unit = {
-    val snap = snapshot(src)
+    val snap = log.snapshot(src)
     require(!exists(dst), s"clone target $dst already exists")
-    val srcDir = tableDir(src).toAbsolutePath
-    val dstDir = tableDir(dst).toAbsolutePath
+    val srcDir = log.tableDir(src).toAbsolutePath
+    val dstDir = log.tableDir(dst).toAbsolutePath
     try {
-      commit(dst) { (next, _) =>
+      log.commit(dst) { (next, _) =>
         def moved(rel: String) = s"v_$next/" + rel.split('/').dropWhile(_ == "..").mkString("/")
         snap.entries.foreach { e =>
           val to = dstDir.resolve(moved(e.rel))
@@ -3150,7 +2393,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
             .select(col("__moved").as("file"), col("pos")))
             .parquet(dstDir.resolve(moved(dv)).toString)
         }
-        writeManifest(dst, snap.copy(version = next, op = "deep_clone",
+        log.writeManifest(dst, snap.copy(version = next, op = "deep_clone",
           entries = snap.entries.map(e => e.copy(rel = moved(e.rel), dvs = e.dvs.map(moved)))))
         true
       }
@@ -3158,8 +2401,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       setMeta(dst, m.copy(properties = m.properties - "stream_high_water"))
     } catch {
       case t: Throwable =>
-        if (Files.exists(dstDir))
-          walkAll(dstDir).sorted.reverse.foreach(Files.deleteIfExists(_))
+        deleteTree(dstDir)
         throw t
     }
   }
@@ -3169,7 +2411,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * carry min == max for their partition columns, so this is a
     * metadata-only listing: no data file is opened. */
   def partitionValues(name: String): Seq[String] = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     val pbPhys = snap.layout.partitionBy
     require(pbPhys.nonEmpty, s"SHOW PARTITIONS $name: table is not partitioned")
     val pb = logicalNames(name, pbPhys)
@@ -3182,73 +2424,15 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
   /** All retained snapshot versions (those whose manifest survives),
     * oldest first. */
-  def versions(name: String): Seq[Int] = {
-    val dir = tableDir(name)
-    if (!Files.exists(dir)) Seq.empty
-    else {
-      val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-      listDir(dir).foreach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("v_") && Files.exists(p.resolve("_MANIFEST")))
-          out += n.stripPrefix("v_").toInt
-      }
-      out.sorted.toSeq
-    }
-  }
+  def versions(name: String): Seq[Int] = log.versions(name)
 
-  /** Whether `v` is a COMMITTED version. Version numbers are monotone in
-    * commit order but not contiguous: a rebased commit vacates the number
-    * it originally staged under (see tryRebase), and vacuum retires old
-    * ones — consumers walking history must skip the holes. */
-  private[graft] def hasVersion(name: String, v: Int): Boolean =
-    Files.exists(manifestPath(name, v))
+  private[graft] def hasVersion(name: String, v: Int): Boolean = log.hasVersion(name, v)
 
-  /** True when version `v` was a COMMITTED version that a vacuum has
-    * since retired. Distinguishes real data loss from the benign
-    * numbering holes rebases and aborted stages leave — a consumer
-    * walking history must SKIP the latter but FAIL on the former.
-    * Retirement is durable in two forms: the per-version `_retired_v_N`
-    * marker written just before the manifest delete (crash-safe), and
-    * the `_RETIRED` ledger each vacuum folds those markers into so the
-    * directory listing stays O(live versions). */
-  private[graft] def wasRetired(name: String, v: Int): Boolean =
-    !hasVersion(name, v) && {
-      val dir = tableDir(name)
-      Files.exists(dir.resolve(s"_retired_v_$v")) || {
-        val ledger = dir.resolve("_RETIRED")
-        Files.exists(ledger) &&
-          Files.readAllLines(ledger).asScala.exists(_.trim == v.toString)
-      }
-    }
+  private[graft] def wasRetired(name: String, v: Int): Boolean = log.wasRetired(name, v)
 
-  /** ALL retired versions of `name`, from one marker listing + one ledger
-    * read — the set-membership form of [[wasRetired]] for callers that
-    * would otherwise probe a RANGE of versions (the table-stream's
-    * creation-commit check, changeFeed's window scan), each probe
-    * re-reading the ledger file: O(v) full-file reads for a creation
-    * commit at a high number. A version still holding its manifest is
-    * excluded (the marker-written-but-delete-crashed window), matching
-    * [[wasRetired]] exactly. */
-  private[graft] def retiredVersions(name: String): Set[Int] = {
-    val dir = tableDir(name)
-    // numeric-suffix filter: a stray file matching the prefix (editor
-    // temp, partial copy) must not hard-fail stream startup / changeFeed
-    val markers = listDir(dir)
-      .filter(_.getFileName.toString.startsWith("_retired_v_"))
-      .map(_.getFileName.toString.stripPrefix("_retired_v_"))
-      .filter(s => s.nonEmpty && s.forall(_.isDigit))
-      .map(_.toInt)
-    val ledger = dir.resolve("_RETIRED")
-    val fromLedger =
-      if (!Files.exists(ledger)) Seq.empty[Int]
-      else Files.readAllLines(ledger).asScala.toSeq
-        .map(_.trim).filter(_.nonEmpty).map(_.toInt)
-    (markers ++ fromLedger).toSet.filterNot(hasVersion(name, _))
-  }
+  private[graft] def retiredVersions(name: String): Set[Int] = log.retiredVersions(name)
 
-  /** The committed version immediately before `v` in commit order. */
-  private[graft] def prevVersion(name: String, v: Int): Option[Int] =
-    versions(name).filter(_ < v).maxOption
+  private[graft] def prevVersion(name: String, v: Int): Option[Int] = log.prevVersion(name, v)
 
   // ------------------------------------------------------- merge-on-read
 
@@ -3267,8 +2451,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     */
   def setDmlMode(name: String, mode: String): Unit = {
     TableStore.checkKnob(name, "dml_mode", mode)
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties + ("dml_mode" -> mode)))
+    log.updateProperties(name)(_ + ("dml_mode" -> mode))
   }
 
   private def dmlMode(name: String): String =
@@ -3278,9 +2461,6 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
   private def rowTrackingEnabled(name: String): Boolean =
     meta(name).properties.get("rowtracking").contains("true")
-
-  private def rowHighWater(name: String): Long =
-    meta(name).properties.get("row_high_water").map(_.toLong).getOrElse(0L)
 
   /** Delta row tracking: give every row a STABLE id that survives
     * copy-on-write rewrites, deletion-vector deletes, OPTIMIZE and MERGE.
@@ -3293,12 +2473,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * current snapshot with one metadata-only commit. */
   def enableRowTracking(name: String): Unit = {
     if (rowTrackingEnabled(name)) return
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     require(snap.entries.forall(_.rows >= 0),
       s"enable row tracking on $name: some files predate footer row counts — " +
         "run OPTIMIZE first")
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties + ("rowtracking" -> "true")))
+    log.updateProperties(name)(_ + ("rowtracking" -> "true"))
     commitManifestOnly(name, snap, "enable_row_tracking", Some(snap.version))
   }
 
@@ -3306,7 +2485,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * [[enableRowTracking]]. */
   def readWithRowIds(name: String): DataFrame = {
     require(rowTrackingEnabled(name), s"$name: row tracking is not enabled")
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     rowIdRead(name, snap, snap.entries, "_row_id")
   }
 
@@ -3351,14 +2530,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * with [[changeFeed]] or stream it via the `graft-table` source's
     * `changeFeed=true` option. */
   def enableChangeFeed(name: String): Unit =
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties + ("cdf" -> "true")))
+    log.updateProperties(name)(_ + ("cdf" -> "true"))
 
   private def cdfEnabled(name: String): Boolean =
     meta(name).properties.get("cdf").contains("true")
 
   private def cdcDir(name: String, version: Int): Path =
-    tableDir(name).resolve(s"v_$version").resolve("cdc")
+    log.tableDir(name).resolve(s"v_$version").resolve("cdc")
 
   /** [[scanWithPos]] over `entries` that, when row tracking is on, also
     * resolves each row's CURRENT id into the hidden column — the
@@ -3397,7 +2575,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       set: Option[Map[String, Column]], op: String): Unit = {
     val candidates = pruneEntries(name, snap.schema, snap.entries, cond)
     if (candidates.isEmpty) return
-    commit(name, Some(Some(snap.version))) { (next, dir) =>
+    log.commit(name, Some(Some(snap.version))) { (next, dir) =>
       val live = posScanWithIds(name, snap, candidates)
       val (touched, carry) = writeDv(name, next, candidates, snap.entries, live.filter(cond))
       touched.nonEmpty && { // no matching rows: nothing to commit
@@ -3410,7 +2588,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
             s.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(pre(f.name))
           } ++ extra: _*)
         set match {
-          case None => writeManifest(name, snap.copy(version = next, entries = carry, op = op))
+          case None => log.writeManifest(name, snap.copy(version = next, entries = carry, op = op))
           case Some(s) =>
             // post-images keep the row id of the row they replace
             val updated = postImage(s,
@@ -3445,7 +2623,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   private def writeDv(name: String, next: Int, cand: Seq[FileEntry],
       entries: Seq[FileEntry], hits: DataFrame): (Set[String], Seq[FileEntry]) = {
     val dvRel = s"v_$next/dv"
-    val dvDir = tableDir(name).resolve(dvRel)
+    val dvDir = log.tableDir(name).resolve(dvRel)
     val absToRel = cand.map(e =>
       Paths.get(absPath(name, e.rel)).toAbsolutePath.normalize.toString -> e.rel)
     parquetWriter(hits.join(spark.createDataFrame(absToRel).toDF("__abs", "__rel"),
@@ -3454,7 +2632,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       .parquet(dvDir.toString)
     val touched = spark.read.parquet(dvDir.toString)
       .select(col("file")).distinct().collect().map(_.getString(0)).toSet
-    if (touched.isEmpty) dropAbortedVersion(dvDir)
+    if (touched.isEmpty) deleteTree(dvDir)
     (touched, entries.map(e => if (touched(e.rel)) e.copy(dvs = e.dvs :+ dvRel) else e))
   }
 
@@ -3543,7 +2721,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // (`SET ACCTBAL = 0` on column acctbal) otherwise silently left the
     // column untouched, and an unknown column silently no-opped instead
     // of erroring. Same r14 bug class as the INSERT column list.
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     val lschema = logicalizeSchema(name, snap.schema)
     val set = MergeInto.normalizeSet(
       lschema.fieldNames.toSeq, set0,
@@ -3581,7 +2759,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** K6: DELETE FROM … WHERE — file-pruned copy-on-write, or a pure
     * deletion-vector commit in `mor` mode. */
   def delete(name: String, cond: Column): Unit = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     if (dmlMode(name) == "mor") commitMorDml(name, snap, cond, None, "delete")
     else {
       val touched = touchedFiles(name, snap, cond)
@@ -3611,7 +2789,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * corruption, so it errors here instead. */
   def overwriteWhere(name: String, df: DataFrame, cond: Column,
       op: String = "replace_where"): Unit =
-    overwriteIn(name, snapshot(name), df, cond, op)
+    overwriteIn(name, log.snapshot(name), df, cond, op)
 
   /** [[overwriteWhere]] onto the snapshot the caller read. */
   private def overwriteIn(name: String, snap: Snapshot, df: DataFrame, cond: Column,
@@ -3648,7 +2826,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * unpartitioned) — the manifest's layout records physical names;
     * callers speak the visible view. */
   def partitionColumns(name: String): Seq[String] =
-    logicalNames(name, snapshot(name).layout.partitionBy)
+    logicalNames(name, log.snapshot(name).layout.partitionBy)
 
   /** Physical column names (a layout's) → the logical names in force. */
   private def logicalNames(name: String, physical: Seq[String]): Seq[String] = {
@@ -3666,7 +2844,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * pruning confines the rewrite to those partitions' files. */
   def overwritePartitions(name: String, df: DataFrame,
       op: String = "overwrite_partitions"): Unit = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     val pb = logicalNames(name, snap.layout.partitionBy)
     require(pb.nonEmpty,
       s"overwritePartitions on $name: table is not partitioned — " +
@@ -3757,7 +2935,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       schemaEvolution: Boolean,
       op: String,
       txn: Option[Txn]): (Int, Int) = {
-    val snap0 = snapshot(name)
+    val snap0 = log.snapshot(name)
     val (schema0, entries) = (snap0.schema, snap0.entries)
     val held = HeldSource(source0)
     val source = held.map(_.df).getOrElse(source0)
@@ -3933,7 +3111,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         // dir is already in the transaction's ledger and txnAbort drops
         // it (stageVersion's own cleanup no longer covers this point).
         val out = rewritten.unionByName(inserts)
-        val (v, dir) = allocateVersion(name)
+        val (v, dir) = log.allocateVersion(name)
         stageVersion(name, v, dir, out, layout,
           carryOver = entries.filterNot(e => touched(e.rel)),
           schemaHint = Some(schema), op = op)
@@ -3969,7 +3147,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       snap: Snapshot,
       layout: Layout,
       op: String): Unit =
-    commit(name, Some(Some(snap.version))) { (next, dir) =>
+    log.commit(name, Some(Some(snap.version))) { (next, dir) =>
       val t = posScanWithIds(name, snap, cand).alias("t")
       val s = source.withColumn("__graft_s", lit(true)).alias("s")
       val isMatched = col("s.__graft_s").isNotNull
@@ -4007,7 +3185,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
       // the discovery dump served commit-time checks only — drop it so the
       // committed version dir holds exactly what the manifest references
-      dropAbortedVersion(discoDir)
+      deleteTree(discoDir)
       val appended = stageVersion(name, next, dir, toAppend, layout, carry,
         Some(snap.schema), op)
       (touched.nonEmpty || appended.nonEmpty) && {
@@ -4060,14 +3238,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       op: String): (Int, Path, Option[Int]) = {
     def stage(df: DataFrame, layout: Layout, carryOver: Seq[FileEntry],
         schemaHint: Option[StructType], base: Option[Int]) = {
-      val (v, dir) = allocateVersion(name)
+      val (v, dir) = log.allocateVersion(name)
       stageVersion(name, v, dir, df, layout, carryOver, schemaHint, op)
       (v, dir, base)
     }
     if (!append)
       stage(df, Layout(partitionBy, sortWithin, statsFor), Nil, None, version(name))
     else {
-      val snap = snapshot(name)
+      val snap = log.snapshot(name)
       // identity parity with the direct append path: a transactional
       // append to a GENERATED ALWAYS AS IDENTITY table must block-allocate
       // keys (and reject explicit values) exactly like append() — without
@@ -4081,195 +3259,26 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     }
   }
 
-  private[tables] def txnCommit(staged: Seq[(String, Int, Path, Option[Int])],
-      onCommitBegan: () => Unit = () => ()): Unit = {
-    val names = staged.map(_._1).sorted
-    def lockAll(ns: Seq[String])(body: => Unit): Unit = ns match {
-      case Seq() => body
-      case head +: tail => withCommitLock(head)(lockAll(tail)(body))
-    }
-    lockAll(names) {
-      staged.foreach { case (name, _, _, base) =>
-        val cur = version(name)
-        if (cur != base) throw new java.util.ConcurrentModificationException(
-          s"transaction: $name moved from version $base to $cur since staging — " +
-            "the whole transaction is rolled back")
-      }
-      // Intent journal: the per-table pointer swaps below are atomic
-      // renames issued back-to-back, so a crash BETWEEN them would leave
-      // the tables mutually inconsistent — exactly what the transaction
-      // exists to prevent. The (table -> version) intent is made durable
-      // FIRST; from that instant the transaction is committed-in-spirit
-      // and every failure rolls FORWARD: attach-time recovery
-      // ([[recoverTxnIntents]]) completes the remaining swaps, and the
-      // intent file is deleted only after the last one. Before the intent
-      // exists, failures still abort cleanly (nothing was published).
-      val intent = writeTxnIntent(staged.map(s => (s._1, s._2)))
-      val intentId = intent.getFileName.toString.stripPrefix("intent.")
-      var i = 0
-      try {
-        onCommitBegan()
-        staged.foreach { case (name, v, _, _) =>
-          promoteManifest(name, v); swapTo(name, v)
-          i += 1
-          if (i == crashAfterSwapsForTest)
-            throw new IllegalStateException("simulated crash mid-publish")
-        }
-      } catch {
-        case t: Throwable =>
-          // the commit window is over (interrupted) — deregister so a
-          // fresh attach IN THIS PROCESS can roll the publish forward
-          TableStore.inflightTxnIntents.remove(intentId)
-          throw new IllegalStateException(
-            s"transaction publish interrupted after $i/${staged.size} tables; " +
-              s"intent ${intent.getFileName} retained — re-attaching the store " +
-              "completes the remaining swaps (roll-forward recovery)", t)
-      }
-      // Every pointer moved — the transaction IS published. Deleting the
-      // intent is cleanup, not commit: an IO failure here must not surface
-      // as a publish failure (a retained intent is harmless — recovery is
-      // idempotent for tables already at their intended version).
-      try Files.deleteIfExists(intent)
-      catch { case _: java.io.IOException => () }
-      finally TableStore.inflightTxnIntents.remove(intentId)
-      ()
-    }
-  }
-
-  /** Test seam: throw after N pointer swaps to simulate a crash
-    * mid-publish (-1 = never). */
-  private[tables] var crashAfterSwapsForTest: Int = -1
-
-  private def txnIntentDir: Path = Paths.get(root, "_txn_intents")
-
-  private def writeTxnIntent(tables: Seq[(String, Int)]): Path = {
-    Files.createDirectories(txnIntentDir)
-    val id = TableStore.writerToken()
-    // registered BEFORE the file exists so a concurrent same-process
-    // attach can never observe this healthy commit's intent unregistered
-    TableStore.inflightTxnIntents.add(id)
-    try {
-      val tmp = txnIntentDir.resolve(s"intent.$id.tmp")
-      Files.write(tmp, tables.map { case (n, v) => s"$n\t$v" }
-        .mkString("\n").getBytes(UTF_8))
-      val fin = txnIntentDir.resolve(s"intent.$id")
-      Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE)
-      fin
-    } catch {
-      case t: Throwable => TableStore.inflightTxnIntents.remove(id); throw t
-    }
-  }
-
-  /** Complete transactions that crashed mid-publish: for every retained
-    * intent, promote+swap each listed table that is still behind its
-    * intended version, then drop the intent. Runs at attach, before the
-    * store serves anything. A table already at (or past) the intended
-    * version is skipped — its swap happened before the crash.
-    *
-    * An intent file exists during every HEALTHY commit window too, so
-    * recovery only touches what it can PROVE is a crash: intents of THIS
-    * process are skipped while their commit is still in flight
-    * ([[TableStore.inflightTxnIntents]]); intents of other SAME-HOST
-    * writers are recovered only once their process is provably gone; and
-    * a FOREIGN host's intent is never touched — its liveness is
-    * unknowable here, so that writer (or its own next attach) recovers
-    * it. A dead writer's retained `_COMMIT_LOCK` is NOT deleted here —
-    * the lock records its holder, and [[withCommitLock]] itself breaks
-    * locks of provably-dead holders (serialized and re-verified under an
-    * OS advisory lock), so recovery simply acquires the lock like any
-    * other writer and can never delete one a concurrent recoverer or
-    * fresh commit is legitimately holding. */
-  private def recoverTxnIntents(): Unit = {
-    if (!Files.isDirectory(txnIntentDir)) return
-    import scala.jdk.CollectionConverters._
-    val stream = Files.list(txnIntentDir)
-    val intents = try stream.iterator().asScala.toSeq.sortBy(_.getFileName.toString)
-      finally stream.close()
-    val selfPid = ProcessHandle.current().pid()
-    intents.filter(_.getFileName.toString.startsWith("intent.")).foreach { f =>
-      val fn = f.getFileName.toString
-      val tok = fn.stripPrefix("intent.").stripSuffix(".tmp")
-      val isSelf = TableStore.sameHostPid(tok).contains(selfPid)
-      val selfInFlight = isSelf && TableStore.inflightTxnIntents.contains(tok)
-      // not ours to touch: a live commit window, or a writer whose
-      // liveness cannot be proven from this host
-      if (selfInFlight || (!isSelf && !TableStore.writerDead(tok))) ()
-      else if (fn.endsWith(".tmp")) { Files.deleteIfExists(f); () }
-      else {
-        // the liveness checks above and this read are not atomic: a commit
-        // finishing in the gap deletes its intent — that's a completed
-        // transaction, not a recovery case, so a vanished file is skipped
-        val raw = try Some(new String(Files.readAllBytes(f), UTF_8))
-          catch { case _: java.nio.file.NoSuchFileException => None }
-        val pairs = raw.getOrElse("").split('\n')
-          .filter(_.nonEmpty).toSeq
-          .map { l => val p = l.split('\t'); (p(0), p(1).toInt) }
-        pairs.foreach { case (name, v) =>
-          // a DEAD writer's retained lock is broken inside withCommitLock
-          // itself (holder-verified) — nothing to pre-delete here
-          withCommitLock(name) {
-            if (!version(name).exists(_ >= v)) {
-              if (Files.exists(stagedManifestPath(name, v))) promoteManifest(name, v)
-              if (Files.exists(manifestPath(name, v))) swapTo(name, v)
-              else throw new IllegalStateException(
-                s"transaction recovery: $name v$v listed in intent " +
-                  s"${f.getFileName} but no staged or committed manifest " +
-                  "exists — the store is corrupted, refusing to serve")
-            }
-          }
-        }
-        Files.deleteIfExists(f)
-        ()
-      }
-    }
-  }
-
-  private[tables] def txnAbort(dirs: Seq[Path]): Unit =
-    dirs.foreach(dropAbortedVersion)
-
   // -------------------------------------------------------------- metadata
 
-  /** Table-level metadata sidecar: the reference's COMMENT clauses and
-    * TBLPROPERTIES/constraint DDL (01_Init.py:58-77, 236-241 — column
-    * comments, table comment, PRIMARY KEY recorded as metadata; Spark
-    * cannot enforce PK/FK either, SURVEY.md §1.1). Stored as a properties
-    * file beside the snapshots, so metadata survives every snapshot swap
-    * and is versioned with the table directory. */
-  def setMeta(name: String, meta: TableMeta): Unit = {
-    val p = new java.util.Properties()
-    meta.comment.foreach(p.setProperty("comment", _))
-    meta.columnComments.foreach { case (c, v) => p.setProperty(s"col.$c", v) }
-    meta.properties.foreach { case (k, v) => p.setProperty(s"prop.$k", v) }
-    val dir = tableDir(name)
-    Files.createDirectories(dir)
-    val out = Files.newOutputStream(dir.resolve("_META"))
-    try p.store(out, null) finally out.close()
-  }
+  /** Table-level metadata ([[TableLog.setMeta]]). */
+  def setMeta(name: String, meta: TableMeta): Unit = log.setMeta(name, meta)
 
-  def meta(name: String): TableMeta = {
-    val f = tableDir(name).resolve("_META")
-    if (!Files.exists(f)) TableMeta()
-    else {
-      val p = new java.util.Properties()
-      val in = Files.newInputStream(f)
-      try p.load(in) finally in.close()
-      val entries = p.asScala.toMap
-      TableMeta(
-        comment = entries.get("comment"),
-        columnComments = entries.collect { case (k, v) if k.startsWith("col.") => k.stripPrefix("col.") -> v },
-        properties = entries.collect { case (k, v) if k.startsWith("prop.") => k.stripPrefix("prop.") -> v })
-    }
-  }
+  def meta(name: String): TableMeta = log.meta(name)
+
+  /** Read-modify-write of the table's properties ([[TableLog.updateProperties]]). */
+  def updateProperties(name: String)(f: Map[String, String] => Map[String, String]): Unit =
+    log.updateProperties(name)(f)
 
   /** DESCRIBE DETAIL surface: current snapshot facts, driver-side
     * metadata only (manifest + file sizes — no Spark job). Layout columns
     * are reported by their logical (visible) names. */
   def detail(name: String): Map[String, String] = {
-    val snap = snapshot(name)
+    val snap = log.snapshot(name)
     val entries = snap.entries
     val bytes = entries.map(e => Files.size(Paths.get(absPath(name, e.rel)))).sum
     Map(
-      "location" -> tableDir(name).toString,
+      "location" -> log.tableDir(name).toString,
       "version" -> snap.version.toString,
       "num_files" -> entries.size.toString,
       "size_bytes" -> bytes.toString,
@@ -4293,8 +3302,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** Record a (non-enforced) primary key, like the reference's
     * `ALTER TABLE … ADD PRIMARY KEY` (01_Init.py:239-241). */
   def setPrimaryKey(name: String, cols: Seq[String]): Unit =
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties + ("primary_key" -> cols.mkString(","))))
+    log.updateProperties(name)(_ + ("primary_key" -> cols.mkString(",")))
 
   /** Record an INFORMATIONAL foreign key — the reference's fact DDL
     * declares these inline (`_tf_dim_calendar_id INT REFERENCES
@@ -4309,21 +3317,20 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       refTable: String, refCols: Seq[String]): Unit = {
     require(cols.nonEmpty && cols.length == refCols.length,
       s"$name FOREIGN KEY $cname: child/parent column lists must align")
-    val visible = logicalizeSchema(name, snapshot(name).schema).fieldNames
+    val visible = logicalizeSchema(name, log.snapshot(name).schema).fieldNames
     cols.foreach(c => require(visible.exists(_.equalsIgnoreCase(c)),
       s"$name FOREIGN KEY $cname: no column $c (columns: ${visible.mkString(", ")})"))
     require(exists(refTable),
       s"$name FOREIGN KEY $cname: referenced table $refTable not found")
-    val refVisible = logicalizeSchema(refTable, snapshot(refTable).schema).fieldNames
+    val refVisible = logicalizeSchema(refTable, log.snapshot(refTable).schema).fieldNames
     refCols.foreach(c => require(refVisible.exists(_.equalsIgnoreCase(c)),
       s"$name FOREIGN KEY $cname: $refTable has no column $c"))
-    setMeta(name, meta(name).copy(properties = meta(name).properties +
-      (s"fk.$cname" -> s"${cols.mkString(",")}|$refTable|${refCols.mkString(",")}")))
+    log.updateProperties(name)(_ +
+      (s"fk.$cname" -> s"${cols.mkString(",")}|$refTable|${refCols.mkString(",")}"))
   }
 
   def dropForeignKey(name: String, cname: String): Unit =
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties - s"fk.$cname"))
+    log.updateProperties(name)(_ - s"fk.$cname")
 
   /** Declare a bloom-filter index on `cols` (Databricks' `CREATE
     * BLOOMFILTER INDEX`, the point-lookup complement to min/max data
@@ -4344,20 +3351,19 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   def setBloomFilterIndex(name: String, cols: Seq[String], ndv: Long = 100000L): Unit = {
     require(cols.nonEmpty, s"$name: bloom filter index needs at least one column")
     TableStore.checkKnob(name, "bloom.ndv", ndv.toString)
-    val visible = logicalizeSchema(name, snapshot(name).schema).fieldNames
+    val visible = logicalizeSchema(name, log.snapshot(name).schema).fieldNames
     // store the SCHEMA's spelling, not the user's — downstream consumers
     // do exact-string matches against schema names (the r14 cased-INSERT
     // bug class), and a cased stored name would silently dead-arm the index
     val resolved = cols.map(MergeInto.resolveColumn(visible.toSeq, _,
       spark.conf.get("spark.sql.caseSensitive", "false").toBoolean,
       s"$name bloom index"))
-    setMeta(name, meta(name).copy(properties = meta(name).properties +
-      ("bloom.cols" -> resolved.mkString(",")) + ("bloom.ndv" -> ndv.toString)))
+    log.updateProperties(name)(_ +
+      ("bloom.cols" -> resolved.mkString(",")) + ("bloom.ndv" -> ndv.toString))
   }
 
   def dropBloomFilterIndex(name: String): Unit =
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties - "bloom.cols" - "bloom.ndv"))
+    log.updateProperties(name)(_ - "bloom.cols" - "bloom.ndv")
 
   /** Cap the rows any single data file may hold (Delta's target file
     * size, row edition): every write — loads, DML rewrites, OPTIMIZE —
@@ -4366,8 +3372,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * knob keep those effective as the table grows 100×. */
   def setTargetFileRows(name: String, rows: Long): Unit = {
     TableStore.checkKnob(name, "target_file_rows", rows.toString)
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties + ("target_file_rows" -> rows.toString)))
+    log.updateProperties(name)(_ + ("target_file_rows" -> rows.toString))
   }
 
   private def targetFileRows(name: String): Option[Long] =
@@ -4421,10 +3426,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       throw new IllegalArgumentException(s"materialized view source not found: $source"))
     enableChangeFeed(source)
     createOrReplace(view, mvBody(source, Some(cur), groupBy, aggs))
-    setMeta(view, meta(view).copy(properties = meta(view).properties +
+    log.updateProperties(view)(_ +
       ("mv.source" -> source) + ("mv.keys" -> groupBy.mkString(",")) +
       ("mv.aggs" -> aggs.map { case (o, f, a) => s"$o:$f:$a" }.mkString(";")) +
-      ("mv.version" -> cur.toString)))
+      ("mv.version" -> cur.toString))
   }
 
   final case class MvDef(source: String, keys: Seq[String],
@@ -4467,8 +3472,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       op.stripPrefix("mv_refresh:").toInt }.maxOption
 
   private def persistMvVersion(view: String, v: Int): Unit =
-    setMeta(view, meta(view).copy(properties =
-      meta(view).properties + ("mv.version" -> v.toString)))
+    log.updateProperties(view)(_ + ("mv.version" -> v.toString))
 
   /** Bring `view` up to date with its source. Incremental whenever the
     * change feed can supply the delta; falls back to a pinned full
@@ -4482,7 +3486,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val d = mvDefinition(view).getOrElse(throw new IllegalArgumentException(
       s"$view is not a materialized view (no mv.* metadata)"))
     // every retained view version, parsed once: op labels and the schema
-    val views = versions(view).map(snapshotAt(view, _))
+    val views = versions(view).map(log.snapshotAt(view, _))
     val applied = math.max(d.version, lastMvRefresh(views.map(_.op)).getOrElse(Int.MinValue))
     val cur = version(d.source).getOrElse(throw new IllegalStateException(
       s"$view: source ${d.source} no longer exists"))
@@ -4594,13 +3598,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     require(violations == 0,
       s"cannot add CHECK constraint $cname on $name: $violations existing row(s) " +
         s"violate ($conditionSql)")
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties + (s"check.$cname" -> conditionSql)))
+    log.updateProperties(name)(_ + (s"check.$cname" -> conditionSql))
   }
 
   def dropCheckConstraint(name: String, cname: String): Unit =
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties - s"check.$cname"))
+    log.updateProperties(name)(_ - s"check.$cname")
 
   /** ALTER TABLE … ALTER COLUMN … SET NOT NULL — an ENFORCED nullability
     * constraint (Delta's semantics): existing rows are validated once at
@@ -4615,13 +3617,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val nulls = rows.filter(col(f.name).isNull).count()
     require(nulls == 0,
       s"cannot SET NOT NULL on $name.${f.name}: $nulls existing NULL row(s)")
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties + (s"notnull.${physicalName(name, f.name)}" -> "true")))
+    log.updateProperties(name)(_ + (s"notnull.${physicalName(name, f.name)}" -> "true"))
   }
 
   def dropNotNull(name: String, colName: String): Unit =
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties - s"notnull.${physicalName(name, colName)}"))
+    log.updateProperties(name)(_ - s"notnull.${physicalName(name, colName)}")
 
   /** LOGICAL names of columns declared NOT NULL (enforced on write). */
   def notNullColumns(name: String): Seq[String] =
@@ -4631,9 +3631,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
   /** ALTER TABLE … ALTER COLUMN … COMMENT '…' (logical name). */
   def setColumnComment(name: String, colName: String, comment: String): Unit = {
-    val visible = logicalizeSchema(name, snapshot(name).schema)
-    val f = visible.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
-      throw new IllegalArgumentException(s"$name: no such column $colName"))
+    val visible = logicalizeSchema(name, log.snapshot(name).schema)
+    val f = visibleField(name, visible, colName, "ALTER COLUMN")
     val m = meta(name)
     setMeta(name, m.copy(columnComments = m.columnComments + (f.name -> comment)))
   }
@@ -4646,18 +3645,15 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * fails the ALTER, not some later INSERT. */
   def setColumnDefault(name: String, colName: String, sqlExpr: String): Unit = {
     import org.apache.spark.sql.functions.expr
-    val visible = logicalizeSchema(name, snapshot(name).schema)
-    val f = visible.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
-      throw new IllegalArgumentException(s"$name: no such column $colName"))
+    val visible = logicalizeSchema(name, log.snapshot(name).schema)
+    val f = visibleField(name, visible, colName, "ALTER COLUMN")
     // declaration-time probe: parses, folds without input rows, casts
     spark.range(1).select(expr(sqlExpr).cast(f.dataType)).head()
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties + (s"coldefault.${physicalName(name, f.name)}" -> sqlExpr)))
+    log.updateProperties(name)(_ + (s"coldefault.${physicalName(name, f.name)}" -> sqlExpr))
   }
 
   def dropColumnDefault(name: String, colName: String): Unit =
-    setMeta(name, meta(name).copy(properties =
-      meta(name).properties - s"coldefault.${physicalName(name, colName)}"))
+    log.updateProperties(name)(_ - s"coldefault.${physicalName(name, colName)}")
 
   /** Declared column defaults: LOGICAL column name → default SQL text. */
   def columnDefaults(name: String): Map[String, String] =
@@ -4702,188 +3698,23 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** DROP TABLE: remove every version, manifest and sidecar of `name`.
     * Shallow clones of the table break (their manifests reference these
     * files by path) — same trade Delta documents for cloned sources. */
-  def dropTable(name: String): Unit = {
-    val dir = tableDir(name)
-    if (Files.exists(dir))
-      walkAll(dir).sorted.reverse.foreach(Files.deleteIfExists(_))
-  }
+  def dropTable(name: String): Unit = deleteTree(log.tableDir(name))
 
   // ---------------------------------------------------------------- vacuum
 
-  /** Drop every data file the CURRENT manifest does not reference, and
-    * every non-current manifest (old versions stop being readable — the
-    * Delta VACUUM trade). Directories that still hold referenced files
-    * survive; emptied version directories are removed.
-    *
-    * Runs under the table's commit lock so the CURRENT pointer cannot move
-    * mid-sweep, and SKIPS in-flight stages: a `v_N` directory without a
-    * committed `_MANIFEST` belongs to a writer between [[stageVersion]]
-    * and its locked promote+swap (arbitrarily long during
-    * [[transaction]]s) — deleting its files would let that writer pass
-    * its conflict check and swap `_CURRENT` to a gutted directory.
-    * Manifests are only promoted under the same lock, so the distinction
-    * is race-free. Stages older than `staleStagingMs` (default 24 h) are
-    * treated as crashed writers and removed — Delta's retention-gate
-    * shape. */
+  /** VACUUM ([[TableLog.vacuum]]). Markers that live in the manifests and
+    * version directories it retires are folded first, under its lock: the
+    * streaming and MV high-water marks into the table's metadata, every
+    * committed COPY INTO ledger into the `_COPY_LOADED` sidecar. */
   def vacuum(name: String, staleStagingMs: Long = 24L * 3600 * 1000,
-      retainMs: Long = 0L): Unit = {
-    if (version(name).isEmpty) return
-    withCommitLock(name) {
-      // the pointer and the version set are read under the lock: read
-      // before it, a commit landing in between would be in neither the
-      // kept version nor `retained`, and its files would be swept while
-      // `_CURRENT` names it
-      val keepVersion = version(name)
-      val allVersions = versions(name)
-      // every retained manifest, parsed once for both the op-label folds
-      // below and the referenced-file set
-      val parsed = allVersions.map(v => v -> snapshotAt(name, v)).toMap
-      val ops = parsed.values.map(_.op).toSeq
-      // the streaming exactly-once marker lives in manifest op labels this
-      // vacuum is about to retire — persist the high-water mark FIRST (if
-      // the vacuum crashes in between, the manifests still exist and the
-      // gate is unchanged)
-      streamHighWater(name, ops).foreach { hw =>
-        setMeta(name, meta(name).copy(properties =
-          meta(name).properties + ("stream_high_water" -> hw.toString)))
-      }
-      // same persistence move for the MV refresh marker: fold the op-label
-      // high water into mv.version before the manifests carrying it retire
-      lastMvRefresh(ops).foreach { v =>
-        if (meta(name).properties.get("mv.version").forall(_.toInt < v))
-          persistMvVersion(name, v)
-      }
-      // COPY INTO ledgers live in version dirs this vacuum may retire —
-      // fold EVERY committed ledger into the _COPY_LOADED sidecar FIRST
-      // (idempotent union via atomic replace; a crash between fold and
-      // delete simply re-folds), so re-running a COPY after a vacuum
-      // still skips files whose loading commit was retired
-      val ledgers = allVersions.flatMap { v =>
-        val f = tableDir(name).resolve(s"v_$v").resolve("copy_files")
-        if (Files.exists(f)) Files.readAllLines(f).asScala else Nil
-      }
-      if (ledgers.nonEmpty) {
-        val sidecar = tableDir(name).resolve("_COPY_LOADED")
-        val prev = if (Files.exists(sidecar))
-          Files.readAllLines(sidecar).asScala.toSet else Set.empty[String]
-        val tmp = tableDir(name).resolve("_COPY_LOADED.tmp")
-        Files.write(tmp, (prev ++ ledgers).toSeq.sorted.mkString("\n").getBytes(UTF_8))
-        Files.move(tmp, sidecar, StandardCopyOption.REPLACE_EXISTING,
-          StandardCopyOption.ATOMIC_MOVE)
-      }
-      val now = System.currentTimeMillis()
-      // retained snapshots = the current version plus every committed
-      // version younger than `retainMs` (Delta's retention window): their
-      // manifests AND data files survive, so time travel within the
-      // window keeps working after the vacuum
-      val retained: Set[Int] = allVersions.filter { v =>
-        keepVersion.contains(v) || (retainMs > 0 && {
-          val mf = tableDir(name).resolve(s"v_$v").resolve("_MANIFEST")
-          Files.exists(mf) &&
-            now - Files.getLastModifiedTime(mf).toMillis <= retainMs
-        })
-      }.toSet
-      val retainedEntries = retained.toSeq.sorted.flatMap(parsed(_).entries)
-      val referenced = retainedEntries
-        .map(e => tableDir(name).resolve(e.rel).toAbsolutePath.normalize).toSet
-      // deletion-vector sidecars are parquet DIRECTORIES — everything under
-      // a referenced DV dir stays
-      val dvDirs = retainedEntries.flatMap(_.dvs).distinct.map(d => tableDir(name).resolve(d).toAbsolutePath.normalize)
-      val dir = tableDir(name)
-      listDir(dir).foreach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("v_")) {
-          val isRetained = retained.contains(n.stripPrefix("v_").toInt)
-          val committed = Files.exists(p.resolve("_MANIFEST"))
-          val ageMs = now - Files.getLastModifiedTime(p).toMillis
-          // uncommitted = in-flight stage (or crashed writer): untouchable
-          // until it ages past the retention gate
-          if (committed || ageMs > staleStagingMs) {
-            // delete unreferenced files (and stale manifests) bottom-up
-            walkAll(p).sorted.reverse.foreach { f =>
-              val abs = f.toAbsolutePath.normalize
-              val isManifest = f.getFileName.toString == "_MANIFEST"
-              // a retained version's change-feed sidecar must survive with
-              // it: deleting cdc/ would destroy the row-level feed over a
-              // window the retention promise says is still replayable
-              // (changeFeed would then throw, and MV refreshes degrade to
-              // full rebuilds)
-              val isRetainedCdc = isRetained && {
-                val rel = p.relativize(f)
-                rel.getNameCount > 0 && rel.getName(0).toString == "cdc"
-              }
-              if (Files.isDirectory(f)) {
-                if (!isRetainedCdc && listDir(f).isEmpty) Files.delete(f)
-              } else if (!referenced.contains(abs) && !dvDirs.exists(abs.startsWith) &&
-                  !(isManifest && isRetained) && !isRetainedCdc) {
-                // retiring a COMMITTED version: leave a durable marker
-                // first (crash-safe — a marker beside a still-live
-                // manifest is ignored). Version numbers have benign holes
-                // too (rebase-vacated, aborted stages), so without the
-                // marker a history consumer cannot tell "never existed"
-                // from "committed and vacuumed" — the streaming source
-                // and changeFeed would skip real, undelivered changes
-                // SILENTLY instead of failing loudly.
-                if (isManifest)
-                  Files.write(dir.resolve(s"_retired_${p.getFileName}"),
-                    Array.empty[Byte])
-                Files.delete(f)
-              }
-            }
-          }
-        }
-      }
-      // fold the per-version `_retired_v_N` markers into the single
-      // `_RETIRED` ledger (idempotent union via atomic replace — the
-      // `_COPY_LOADED` shape). The markers stay crash-safe: one is
-      // created just before each manifest delete, and a crash anywhere
-      // before this fold leaves it in place for the next vacuum to fold.
-      // Without the fold the table directory grows one file per version
-      // ever retired, taxing every listing (`versions()`, each re-vacuum)
-      // with O(all-time history) entries instead of O(live versions).
-      //
-      // FORMAT BUMP (r14): the fold makes retirement records invisible
-      // to builds that predate the `_RETIRED` ledger — their marker-only
-      // `wasRetired` answers false after this vacuum, the silent
-      // data-skip the marker exists to prevent. Running a MIXED
-      // deployment through an upgrade (the overlap the legacy
-      // lock-token tolerance supports)? Set table property
-      // `graft.vacuum.keepRetiredMarkers=true` for the transition
-      // window: the fold still unions into the ledger (new readers get
-      // the O(1) path) but RETAINS the markers old readers need; clear
-      // the property once every reader is ledger-aware and the next
-      // vacuum folds them away.
-      // same numeric-suffix guard as retiredVersions: never .toInt a
-      // stray prefix-matching file, and never fold/delete one either
-      val markers = listDir(dir)
-        .filter { p =>
-          val s = p.getFileName.toString
-          s.startsWith("_retired_v_") && {
-            val suf = s.stripPrefix("_retired_v_")
-            suf.nonEmpty && suf.forall(_.isDigit)
-          }
-        }
-      if (markers.nonEmpty) {
-        val retiredNow = markers
-          .map(_.getFileName.toString.stripPrefix("_retired_v_").toInt)
-        val ledger = dir.resolve("_RETIRED")
-        val prev = if (Files.exists(ledger))
-          Files.readAllLines(ledger).asScala.map(_.trim.toInt).toSet
-        else Set.empty[Int]
-        val tmp = dir.resolve("_RETIRED.tmp")
-        Files.write(tmp,
-          (prev ++ retiredNow).toSeq.sorted.mkString("\n").getBytes(UTF_8))
-        Files.move(tmp, ledger, StandardCopyOption.REPLACE_EXISTING,
-          StandardCopyOption.ATOMIC_MOVE)
-        if (!meta(name).properties.get("graft.vacuum.keepRetiredMarkers")
-            .exists(_.equalsIgnoreCase("true")))
-          markers.foreach(Files.deleteIfExists(_))
-      }
+      retainMs: Long = 0L): Unit =
+    log.vacuum(name, staleStagingMs, retainMs) { committed =>
+      val ops = committed.map(_.op)
+      streamHighWater(name, ops).foreach(hw =>
+        log.updateProperties(name)(_ + ("stream_high_water" -> hw.toString)))
+      lastMvRefresh(ops).filter(v => meta(name).properties.get("mv.version").forall(_.toInt < v))
+        .foreach(persistMvVersion(name, _))
+      val ledgers = committed.flatMap(s => copyFilesOf(name, s.version))
+      if (ledgers.nonEmpty) TableLog.unionLedger(copyLoadedPath(name), ledgers)
     }
-  }
-
-  // Complete any transaction that crashed mid-publish BEFORE this store
-  // serves queries — the intent journal's roll-forward half (txnCommit).
-  // Runs LAST in the constructor so every field above is initialized.
-  recoverTxnIntents()
 }

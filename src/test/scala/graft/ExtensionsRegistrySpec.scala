@@ -24,6 +24,9 @@ class ExtensionsRegistrySpec extends AnyFunSuite {
     assert(conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    val listing = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert(conf.get(listing) == "4096")
+    assert(s.newSession().conf.get(listing) == "4096")
     assert(s.sparkContext.getConf.get("spark.ui.enabled") == "false")
     assert(s.sql("SELECT rolling_hash('a')").collect().length == 1)
     assert(org.apache.logging.log4j.LogManager

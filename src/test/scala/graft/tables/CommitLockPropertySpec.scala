@@ -36,8 +36,8 @@ class CommitLockPropertySpec extends AnyFunSuite {
       !ProcessHandle.of(p).map[java.lang.Boolean](_.isAlive).orElse(false)).get
 
   private def deadToken(legacy: Boolean): String =
-    if (legacy) s"${TableStore.localHost}~${deadPid()}_123"
-    else f"${TableStore.localHost}~${deadPid()}_${123L}%019d"
+    if (legacy) s"${TableLog.localHost}~${deadPid()}_123"
+    else f"${TableLog.localHost}~${deadPid()}_${123L}%019d"
 
   /** One full concurrent trial; returns an error description or None. */
   private def trial(threads: Int, appends: Int, chaosDebris: Int,

@@ -27,7 +27,7 @@ class CommitLockSpec extends AnyFunSuite {
   /** A COMPLETE dead-writer token in the fixed-width format writerToken
     * mints (19-digit nanos tail). */
   private def deadToken(): String =
-    f"${TableStore.localHost}~${deadPid()}_${123L}%019d"
+    f"${TableLog.localHost}~${deadPid()}_${123L}%019d"
 
   test("a dead holder's LEGACY-format lock (unpadded nanos) is broken — an upgrade " +
       "overlap must not wedge the table") {
@@ -40,7 +40,7 @@ class CommitLockSpec extends AnyFunSuite {
     try {
       store.createOrReplace("db.t", Seq((1L, "a")).toDF("k", "v"))
       val lock = Paths.get(root, "db", "t", "_COMMIT_LOCK")
-      Files.write(lock, s"${TableStore.localHost}~${deadPid()}_123".getBytes(UTF_8))
+      Files.write(lock, s"${TableLog.localHost}~${deadPid()}_123".getBytes(UTF_8))
       store.createOrReplace("db.t", Seq((2L, "b")).toDF("k", "v"))
       assert(store.read("db.t").agg(max($"k")).head().getLong(0) == 2L)
       assert(!Files.exists(lock), "a finished commit releases its lock")
@@ -79,7 +79,7 @@ class CommitLockSpec extends AnyFunSuite {
       // (a COMPLETE token, so survival exercises the pid-liveness check
       // itself, not the malformed-token guard)
       Files.write(lock,
-        f"${TableStore.localHost}~${ProcessHandle.current().pid()}_${999L}%019d"
+        f"${TableLog.localHost}~${ProcessHandle.current().pid()}_${999L}%019d"
           .getBytes(UTF_8))
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
@@ -119,7 +119,7 @@ class CommitLockSpec extends AnyFunSuite {
       // starts while v1 is still current, then waits on the lock until
       // the commit of v2 has swapped the pointer
       var vacuum: Future[Unit] = null
-      store.txnCommit(Seq(("db.t", v, dir, base)), () => {
+      store.log.txnCommit(Seq(("db.t", v, dir, base)), () => {
         vacuum = Future(store.vacuum("db.t"))
         Thread.sleep(1500)
         assert(!vacuum.isCompleted, "vacuum must wait for the held commit lock")
@@ -234,7 +234,7 @@ class CommitLockSpec extends AnyFunSuite {
       // lock was minted elsewhere, where that pid may be a live writer:
       // liveness is unknowable across a shared filesystem, so no break
       Files.write(lock,
-        s"definitely-not-${TableStore.localHost}~${deadPid()}_1".getBytes(UTF_8))
+        s"definitely-not-${TableLog.localHost}~${deadPid()}_1".getBytes(UTF_8))
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -312,7 +312,7 @@ class CommitLockSpec extends AnyFunSuite {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(1 + rest.size)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     val lock = dir.resolve("_COMMIT_LOCK")
-    Files.write(lock, f"${TableStore.localHost}~${ProcessHandle.current().pid()}_${777L}%019d"
+    Files.write(lock, f"${TableLog.localHost}~${ProcessHandle.current().pid()}_${777L}%019d"
       .getBytes(UTF_8))
     try {
       val f0 = Future(scala.util.Try(first()))

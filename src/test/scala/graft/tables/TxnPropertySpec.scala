@@ -97,14 +97,14 @@ class TxnPropertySpec extends AnyFunSuite {
       }
 
       // crash BETWEEN pointer swaps: publish tears after table 1 of 3
-      store.crashAfterSwapsForTest = 1
+      store.log.crashAfterSwapsForTest = 1
       val e = intercept[IllegalStateException] {
         store.transaction { txn =>
           tables.foreach(t => txn.append(t, Seq((99, 1)).toDF("w", "k")))
         }
       }
       assert(e.getMessage.contains("publish interrupted"), s"got: ${e.getMessage}")
-      store.crashAfterSwapsForTest = -1
+      store.log.crashAfterSwapsForTest = -1
       def crashTag(s: TableStore, t: String): Long =
         s.read(t).filter(col("w") === 99).count()
       assert(crashTag(store, "db.t1") == 1L && crashTag(store, "db.t3") == 0L,

@@ -20,14 +20,14 @@ class TxnRecoverySpec extends AnyFunSuite {
     try {
       store.createOrReplace("db.a", Seq((1L, "x")).toDF("k", "v"))
       store.createOrReplace("db.b", Seq((1L, "y")).toDF("k", "v"))
-      store.crashAfterSwapsForTest = 1 // die after the FIRST table publishes
+      store.log.crashAfterSwapsForTest = 1 // die after the FIRST table publishes
       val e = intercept[Exception] {
         store.transaction { txn =>
           txn.createOrReplace("db.a", Seq((2L, "x2")).toDF("k", "v"))
           txn.createOrReplace("db.b", Seq((2L, "y2")).toDF("k", "v"))
         }
       }
-      store.crashAfterSwapsForTest = -1
+      store.log.crashAfterSwapsForTest = -1
       assert(e.getMessage.contains("intent") && e.getMessage.contains("roll-forward"),
         s"the interrupted publish must say how it recovers, got: ${e.getMessage}")
       // the torn state a reader could observe before recovery: exactly one
@@ -74,7 +74,7 @@ class TxnRecoverySpec extends AnyFunSuite {
       val dir = java.nio.file.Paths.get(root, "_txn_intents")
       java.nio.file.Files.createDirectories(dir)
       val intent = dir.resolve(
-        s"intent.definitely-not-${TableStore.localHost}~${ProcessHandle.current().pid()}_1")
+        s"intent.definitely-not-${TableLog.localHost}~${ProcessHandle.current().pid()}_1")
       java.nio.file.Files.write(intent, "db.a\t99".getBytes("UTF-8"))
       val reattached = new TableStore(spark, root)
       try {
