@@ -19,6 +19,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, 
 import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.MergeInto
 import graft.tables.{TableMeta, TableStore}
+import graft.tables.TableMeta.{checkKnob, internalKey, Key}
 
 /** SQL over [[TableStore]] tables. The reference declares and loads its
   * whole model in SQL: CREATE OR REPLACE TABLE with identity columns,
@@ -53,8 +54,9 @@ import graft.tables.{TableMeta, TableStore}
   * key-shuffled (or broadcast) join plus projection, never a driver loop.
   *
   * Table properties follow one policy: typed knobs route through their
-  * validating setters, and the engine-internal keys ([[SqlDml.InternalKeys]])
-  * are refused by SET, UNSET and CREATE and left out of SHOW CREATE TABLE.
+  * validating setters, and the engine-internal keys
+  * ([[graft.tables.TableMeta.InternalKeys]]) are refused by SET, UNSET and
+  * CREATE and left out of SHOW CREATE TABLE.
   */
 object SqlDml {
 
@@ -77,24 +79,10 @@ object SqlDml {
 
   // ------------------------------------------------------ table properties
 
-  /** Table-property keys that are engine state, not declaration: each is
-    * owned by its own DDL (bloom index, constraints, generated and identity
-    * columns, column mapping, NOT NULL and DEFAULT, materialized views,
-    * the persisted ZORDER curve) or by the write path (row and stream
-    * high-water marks). Writing one directly skips the checks its DDL
-    * runs, so SET / UNSET TBLPROPERTIES and CREATE refuse them and SHOW
-    * CREATE TABLE leaves them out. */
-  private[ext] val InternalKeys = Seq("mv.*", "bloom.*", "fk.*", "colmap.*", "coldrop.*",
-    "gencol.*", "check.*", "identity.*", "notnull.*", "coldefault.*", "zorder.*",
-    "primary_key", "row_high_water", "stream_high_water")
-
   /** The bloom index's keys: SET / UNSET leave them to the BLOOMFILTER
     * INDEX statements, but SHOW CREATE TABLE emits them and CREATE declares
     * the index from them. */
-  private val BloomKeys = Set("bloom.cols", "bloom.ndv")
-
-  private def internalKey(k: String): Option[String] =
-    InternalKeys.find(p => if (p.endsWith("*")) k.startsWith(p.init) else k == p)
+  private val BloomKeys = Set(Key.BloomCols, Key.BloomNdv)
 
   private def refuseInternal(statement: String, table: String, k: String): Unit =
     internalKey(k).foreach(p => throw new IllegalArgumentException(
@@ -102,23 +90,30 @@ object SqlDml {
         "(BLOOMFILTER INDEX / CONSTRAINT / GENERATED / MATERIALIZED VIEW statements)"))
 
   /** One property as the store call that sets it: typed knobs (dml_mode,
-    * target_file_rows, isolation, comment) go through their validating
-    * setters, `rowtracking` = 'true' through `enableRowTracking` (the
-    * footer-count check and backfill commit), anything else is a generic
-    * property, Delta-style. Building the call refuses internal keys and
-    * checks typed values, so a statement builds every call before it
-    * changes anything. */
+    * target_file_rows, isolation, the auto-compaction pair, comment) go
+    * through their validating setters, `rowtracking` = 'true' through
+    * `enableRowTracking` (the footer-count check and backfill commit),
+    * anything else is a generic property, Delta-style. Building the call
+    * refuses internal keys and checks typed values, so a statement builds
+    * every call before it changes anything. */
   private def propertySetter(statement: String, table: String, k: String,
       v: String): TableStore => Unit = {
     refuseInternal(statement, table, k)
-    TableStore.checkKnob(table, k, v)
+    checkKnob(table, k, v)
     k match {
-      case "dml_mode" => _.setDmlMode(table, v)
-      case "target_file_rows" => _.setTargetFileRows(table, v.toLong)
-      case "isolation" => _.setIsolation(table, v)
-      case "rowtracking" => _.enableRowTracking(table)
-      case "comment" => st => st.setMeta(table, st.meta(table).copy(comment = Some(v)))
-      case _ => _.updateProperties(table)(_ + (k -> v))
+      case Key.DmlMode => _.setDmlMode(table, v)
+      case Key.TargetFileRows => _.setTargetFileRows(table, v.toLong)
+      case Key.Isolation => _.setIsolation(table, v)
+      case Key.RowTracking => _.enableRowTracking(table)
+      case Key.AutoCompactFiles => st =>
+        st.setAutoCompact(table, v.toInt, st.meta(table).autoCompactBytes)
+      // the size alone configures nothing until a file count enables it
+      case Key.AutoCompactBytes => st => st.meta(table).autoCompact match {
+        case Some((files, _)) => st.setAutoCompact(table, files, v.toLong)
+        case None => st.updateMeta(table)(_.withProperties(_ + (k -> v)))
+      }
+      case "comment" => _.updateMeta(table)(_.copy(comment = Some(v)))
+      case _ => _.updateMeta(table)(_.withProperties(_ + (k -> v)))
     }
   }
 
@@ -265,7 +260,7 @@ object SqlDml {
           .foreach(_(st))))
       case s: UnsetTableProperties => table(s.table).map(t => command("UNSET TBLPROPERTIES", t) { st =>
         s.propertyKeys.foreach(refuseInternal("UNSET TBLPROPERTIES", t, _))
-        st.updateProperties(t)(_ -- s.propertyKeys)
+        st.updateMeta(t)(_.withProperties(_ -- s.propertyKeys))
       })
       // SHOW TBLPROPERTIES [('key')]: the metadata sidecar as rows, internal
       // keys included — the sidecar IS the table's configuration, and
@@ -376,17 +371,18 @@ object SqlDml {
     * INSERT OVERWRITE takes). */
   private def insert(spark: SparkSession, store: TableStore, table: String,
       i: InsertIntoStatement): Unit = {
-    val target = store.read(table)
+    val m = store.meta(table)
+    val target = store.visibleSchema(table, m)
     val data = GraftShims.ofRows(spark, i.query)
     val resolves = resolver(spark)
     // reject column names absent from the target — silently dropping a
     // typo'd column (and NULL-filling the real one) loses data; ANSI
     // INSERT raises an unresolved-column error here
     def requireKnown(cols: Seq[String]): Unit = {
-      val unknown = cols.filterNot(c => target.columns.exists(resolves(c, _)))
+      val unknown = cols.filterNot(c => target.fieldNames.exists(resolves(c, _)))
       require(unknown.isEmpty,
         s"INSERT INTO $table: unknown column(s) ${unknown.mkString(", ")} — " +
-          s"target columns are ${target.columns.mkString(", ")}")
+          s"target columns are ${target.fieldNames.mkString(", ")}")
     }
     // PARTITION clause: every key must be a declared partition column of
     // the store table (Spark raises the same analysis error)
@@ -396,7 +392,7 @@ object SqlDml {
     val dynamics: Seq[String] = partitionSpec.toSeq.collect { case (k, None) => k }
     if (partitionSpec.nonEmpty) {
       requireKnown(partitionSpec.keys.toSeq)
-      val pcols = store.partitionColumns(table)
+      val pcols = store.partitionColumns(table, m)
       val notPart = partitionSpec.keys.filterNot(k => pcols.exists(resolves(k, _)))
       require(notPart.isEmpty,
         s"INSERT … PARTITION on $table: ${notPart.mkString(", ")} " +
@@ -421,9 +417,9 @@ object SqlDml {
         // positional: table order minus static-filled columns, with the
         // dynamic partition columns moved to the END in clause order
         // (Hive/Spark dynamic-partition positional contract)
-        val expected = target.columns.toSeq
+        val expected = target.fieldNames.toSeq
           .filterNot(c => isStatic(c) || dynamics.exists(resolves(_, c))) ++
-          dynamics.flatMap(d => target.columns.find(resolves(d, _)))
+          dynamics.flatMap(d => target.fieldNames.find(resolves(d, _)))
         require(data.columns.length == expected.length,
           s"INSERT INTO $table: expected ${expected.length} columns " +
             s"(${expected.mkString(", ")}), query returns ${data.columns.length}")
@@ -435,13 +431,13 @@ object SqlDml {
     // Delta's ALWAYS semantics.
     val provided: Set[String] =
       (named.columns.toSeq ++ statics.map(_._1)).map(_.toLowerCase).toSet
-    val identity = store.identityColumn(table).map(_._1)
-    val outFields = target.schema.fields.toSeq.filterNot(f =>
+    val identity = m.identity.map(_._1)
+    val outFields = target.fields.toSeq.filterNot(f =>
       identity.exists(resolves(_, f.name)) && !provided(f.name.toLowerCase))
     // a column the statement omits takes its declared DEFAULT (standard
     // semantics: defaults apply on omission only — an explicit NULL stays
     // NULL), falling back to NULL when none is declared
-    val defaults = store.columnDefaults(table)
+    val defaults = m.columnDefaults
     val aligned = named.select(outFields.map { f =>
       statics.find(kv => resolves(kv._1, f.name)) match {
         // static PARTITION value: parser-text literal cast to the column
@@ -468,7 +464,7 @@ object SqlDml {
     else if (partitionSpec.isEmpty) store.overwriteWhere(table, aligned, lit(true), op = "write")
     else if (dynamics.isEmpty) {
       val cond = statics.map { case (k, v) =>
-        val f = target.schema.fields.find(x => resolves(k, x.name)).get
+        val f = target.fields.find(x => resolves(k, x.name)).get
         col(f.name) <=> lit(v).cast(f.dataType)
       }.reduce(_ && _)
       store.overwriteWhere(table, aligned, cond, op = "insert_overwrite_partition")
@@ -484,15 +480,15 @@ object SqlDml {
     * declaration, and are left out. */
   private def showCreate(store: TableStore, table: String): String = {
     val m = store.meta(table)
-    val schema = store.read(table).schema
-    val notNull = store.notNullColumns(table).map(_.toLowerCase).toSet
-    val defaults = store.columnDefaults(table)
+    val schema = store.visibleSchema(table, m)
+    val notNull = m.notNullColumns.map(_.toLowerCase).toSet
+    val defaults = m.columnDefaults
     // GENERATED clauses are DECLARATION, not state (the reference's most
     // distinctive DDL — GENERATED ALWAYS AS IDENTITY, 01_Init.py:59):
     // omitting them would round-trip to a table whose surrogate keys stop
     // generating. Only the identity's issued-count is state and stays out.
-    val identity = store.identityColumn(table)
-    val gencols = store.generatedColumns(table)
+    val identity = m.identity
+    val gencols = m.generatedColumns
     val cols = schema.fields.map { f =>
       val nn = if (notNull(f.name.toLowerCase)) " NOT NULL" else ""
       val gen = identity.collect {
@@ -508,18 +504,17 @@ object SqlDml {
         .map(c => s" COMMENT '${c.replace("'", "''")}'").getOrElse("")
       s"  `${f.name}` ${f.dataType.sql}$gen$nn$dflt$comment"
     }
-    val pk = m.properties.get("primary_key").map(k =>
-      s"  CONSTRAINT pk PRIMARY KEY ($k)").toSeq
-    val fks = store.foreignKeys(table).toSeq.sortBy(_._1).map {
+    val pk = m.primaryKey.map(k => s"  CONSTRAINT pk PRIMARY KEY ($k)").toSeq
+    val fks = m.foreignKeys.toSeq.sortBy(_._1).map {
       case (c, (child, ref, refCols)) =>
         s"  CONSTRAINT $c FOREIGN KEY (${child.mkString(", ")}) " +
           s"REFERENCES $ref (${refCols.mkString(", ")})"
     }
-    val checks = store.checkConstraints(table).toSeq.sortBy(_._1).map {
+    val checks = m.checks.toSeq.sortBy(_._1).map {
       case (c, sql) => s"  CONSTRAINT $c CHECK ($sql)"
     }
-    val partitionBy = Option(store.detail(table)("partition_columns")).filter(_.nonEmpty)
-      .map(p => s"\nPARTITIONED BY ($p)").getOrElse("")
+    val partitionBy = Some(store.partitionColumns(table, m)).filter(_.nonEmpty)
+      .map(p => s"\nPARTITIONED BY (${p.mkString(",")})").getOrElse("")
     val comment = m.comment
       .map(c => s"\nCOMMENT '${c.replace("'", "''")}'").getOrElse("")
     val props = m.properties.filter { case (k, _) => BloomKeys(k) || internalKey(k).isEmpty }
@@ -708,21 +703,19 @@ object SqlDml {
         if (orReplace || !exists) {
           val (bloom, knobs) = props.partition { case (k, _) => BloomKeys(k) }
           val setters = knobs.map { case (k, v) => propertySetter("CREATE TABLE", table, k, v) }
-          require(bloom.isEmpty || bloom.contains("bloom.cols"),
-            s"CREATE TABLE $table: 'bloom.ndv' sizes the index 'bloom.cols' declares")
-          bloom.get("bloom.ndv").foreach(TableStore.checkKnob(table, "bloom.ndv", _))
+          require(bloom.isEmpty || bloom.contains(Key.BloomCols),
+            s"CREATE TABLE $table: '${Key.BloomNdv}' sizes the index '${Key.BloomCols}' declares")
+          bloom.get(Key.BloomNdv).foreach(checkKnob(table, Key.BloomNdv, _))
           val data = query.map(GraftShims.ofRows(spark, _)).getOrElse(store.emptyFrame(
             StructType(columns.map(c => StructField(c.name, c.dataType, c.nullable)))))
-          val bloomCols = bloom.get("bloom.cols").map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-          bloomCols.foreach(_.foreach(MergeInto.resolveColumn(data.columns.toSeq, _,
-            spark.conf.get("spark.sql.caseSensitive", "false").toBoolean,
-            s"$table bloom index")))
+          val index = TableMeta(properties = bloom) // the declared bloom index, decoded
+          index.bloomCols.foreach(MergeInto.resolveColumn(data.columns.toSeq, _,
+            spark.conf.get("spark.sql.caseSensitive", "false").toBoolean, s"$table bloom index"))
           store.createOrReplace(table, data, partitionBy = partCols)
           if (props.nonEmpty || comment.isDefined)
             store.setMeta(table, TableMeta(comment = comment))
           setters.foreach(_(store))
-          bloomCols.foreach(store.setBloomFilterIndex(table, _,
-            bloom.get("bloom.ndv").map(_.toLong).getOrElse(100000L)))
+          if (bloom.nonEmpty) store.setBloomFilterIndex(table, index.bloomCols, index.bloomNdv)
           columns.foreach { c =>
             if (!c.nullable) store.setNotNull(table, c.name)
             c.comment.foreach(store.setColumnComment(table, c.name, _))

@@ -141,7 +141,7 @@ final class Medallion(spark: SparkSession, store: TableStore, sfDir: String,
     * sidecars are unversioned, so the transactional path applies them
     * after the publish. */
   private def dimMetadata(): Unit = {
-    store.setMeta("gold.dim_calendar", graft.tables.TableMeta(
+    store.updateMeta("gold.dim_calendar")(_.copy(
       comment = Some("Calendar dimension, one row per day"),
       columnComments = Map("date_key" -> "smart key 10000*Y + 100*M + D")))
     store.setPrimaryKey("gold.dim_calendar", Seq("date_key"))

@@ -136,13 +136,13 @@ private[graft] class GraftTableScan(fullSchema: StructType, required: StructType
       // drop-only mapping keeps every visible name physical, so pushdown
       // stays. Spark re-evaluates every filter post-scan either way, and
       // manifest-level file pruning still applies via prunedInventory.
-      val mapped = store.hasRenames(table)
+      val m = store.meta(table)
       if (!cdfMode)
         new GraftFileReaderFactory(GraftShims.parquetFileReader(
           SparkSession.active,
-          store.physicalizeSchema(table, fullSchema),
-          store.physicalizeSchema(table, required),
-          if (mapped) Nil else pushed))
+          m.physicalize(fullSchema),
+          m.physicalize(required),
+          if (m.renames.nonEmpty) Nil else pushed))
       else {
         // two readers: data files (physical names, no virtual columns)
         // planned as inserts, and cdc/ sidecars (logical names as written,
@@ -154,8 +154,8 @@ private[graft] class GraftTableScan(fullSchema: StructType, required: StructType
         val cdcSchema = tableCols.add("_change_type", org.apache.spark.sql.types.StringType)
         new GraftCdfReaderFactory(
           GraftShims.parquetFileReader(SparkSession.active,
-            store.physicalizeSchema(table, tableCols),
-            store.physicalizeSchema(table, reqData), Nil),
+            m.physicalize(tableCols),
+            m.physicalize(reqData), Nil),
           GraftShims.parquetFileReader(SparkSession.active, cdcSchema, reqCdc, Nil),
           required)
       }

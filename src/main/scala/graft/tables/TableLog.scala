@@ -11,11 +11,185 @@ import org.apache.spark.sql.types.{DataType, StructType}
 /** Table-level metadata: the reference's COMMENT clauses and
   * TBLPROPERTIES/constraint DDL (01_Init.py:58-77, 236-241 — column
   * comments, table comment, PRIMARY KEY recorded as metadata; Spark
-  * cannot enforce PK/FK either, SURVEY.md §1.1). */
+  * cannot enforce PK/FK either, SURVEY.md §1.1). The one codec of the
+  * property keys ([[TableMeta.Key]]): each typed view is decoded lazily,
+  * at most once per read, so a statement reads `_META` once and hands
+  * this value down. The views speak logical column names. */
 final case class TableMeta(
     comment: Option[String] = None,
     columnComments: Map[String, String] = Map.empty,
-    properties: Map[String, String] = Map.empty)
+    properties: Map[String, String] = Map.empty) {
+  import TableMeta.Key
+
+  def withProperties(f: Map[String, String] => Map[String, String]): TableMeta =
+    copy(properties = f(properties))
+
+  private def scoped(prefix: String): Map[String, String] =
+    properties.collect { case (k, v) if k.startsWith(prefix) => k.stripPrefix(prefix) -> v }
+
+  /** A positive integer knob; a stored non-positive-integer raises. */
+  private def positive(key: String): Option[Long] = properties.get(key).map(v =>
+    v.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"table property '$key' must be a positive integer, got '$v'")))
+
+  /** physical → logical renames in force. */
+  lazy val renames: Map[String, String] = scoped(Key.ColMap)
+  /** Physical names of dropped columns (still present in old files). */
+  lazy val dropped: Set[String] = scoped(Key.ColDrop).keySet
+  private lazy val physicalOf: Map[String, String] = renames.map(_.swap)
+
+  def logicalName(physical: String): String = renames.getOrElse(physical, physical)
+
+  /** A logical column's physical name: exact spelling first, then
+    * case-insensitive; unmapped names pass through. */
+  def physicalName(logical: String): String = physicalOf.getOrElse(logical,
+    physicalOf.find(_._1.equalsIgnoreCase(logical)).map(_._2).getOrElse(logical))
+
+  /** The logical (visible) view of a physical manifest schema. */
+  def logicalize(physical: StructType): StructType =
+    if (renames.isEmpty && dropped.isEmpty) physical
+    else StructType(physical.fields.toSeq.filterNot(f => dropped(f.name))
+      .map(f => f.copy(name = logicalName(f.name))))
+
+  /** A logical schema's fields renamed back to physical (what files hold). */
+  def physicalize(logical: StructType): StructType =
+    if (physicalOf.isEmpty) logical
+    else StructType(logical.fields.toSeq.map(f => f.copy(name = physicalOf.getOrElse(f.name, f.name))))
+
+  /** `prefix`-keyed properties of columns, keyed by logical name. */
+  private def byColumn(prefix: String) = scoped(prefix).map { case (p, v) => logicalName(p) -> v }
+  /** Generation expressions: logical column → SQL. */
+  lazy val generatedColumns: Map[String, String] = byColumn(Key.GenCol)
+  private lazy val identityDecl: Option[(String, Array[Long])] =
+    scoped(Key.Identity).headOption.map { case (p, v) => p -> v.split(',').map(_.toLong) }
+  /** The identity declaration: (logical column, start, step, issued). */
+  lazy val identity: Option[(String, Long, Long, Long)] = identityDecl.map {
+    case (p, Array(start, step, issued)) => (logicalName(p), start, step, issued) }
+  /** This metadata with `n` more identity keys issued. */
+  def claimIdentity(n: Long): TableMeta = identityDecl.fold(this) {
+    case (p, Array(start, step, issued)) =>
+      withProperties(_ + (Key.Identity + p -> s"$start,$step,${issued + n}")) }
+  /** CHECK constraints: name → condition SQL. */
+  lazy val checks: Map[String, String] = scoped(Key.Check)
+  /** Logical names of the NOT NULL columns, sorted. */
+  lazy val notNullColumns: Seq[String] = scoped(Key.NotNull).keys.toSeq.map(logicalName).sorted
+  /** Column defaults: logical column → SQL. */
+  lazy val columnDefaults: Map[String, String] = byColumn(Key.ColDefault)
+  /** Foreign keys: name → (child columns, parent table, parent columns). */
+  lazy val foreignKeys: Map[String, (Seq[String], String, Seq[String])] =
+    scoped(Key.Fk).map { case (c, v) =>
+      val Array(cols, ref, refCols) = v.split('|')
+      c -> ((cols.split(',').toSeq, ref, refCols.split(',').toSeq))
+    }
+  def primaryKey: Option[String] = properties.get(Key.PrimaryKey)
+
+  /** Logical names of the bloom-indexed columns (empty = no index). */
+  lazy val bloomCols: Seq[String] = properties.get(Key.BloomCols)
+    .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
+  lazy val bloomNdv: Long = positive(Key.BloomNdv).getOrElse(100000L)
+  lazy val targetFileRows: Option[Long] = positive(Key.TargetFileRows)
+  def dmlMode: String = properties.getOrElse(Key.DmlMode, "cow")
+  def cdf: Boolean = properties.get(Key.Cdf).contains("true")
+  def rowTracking: Boolean = properties.get(Key.RowTracking).contains("true")
+  def isolation: String = properties.getOrElse(Key.Isolation, "writeserializable")
+  def autoCompactBytes: Long = positive(Key.AutoCompactBytes).getOrElse(32L << 20)
+  /** Auto-compaction: (small-file count that triggers it, small-file bytes). */
+  lazy val autoCompact: Option[(Int, Long)] =
+    positive(Key.AutoCompactFiles).map(n => (n.toInt, autoCompactBytes))
+  def rowHighWater: Long = properties.get(Key.RowHighWater).fold(0L)(_.toLong)
+  def streamHighWater: Option[Long] = properties.get(Key.StreamHighWater).map(_.toLong)
+
+  /** A full ZORDER optimize's persisted curve: (columns, bits,
+    * per-column quantile boundaries, baseline version). */
+  lazy val zorder: Option[(Seq[String], Int, Array[Array[Double]], Int)] = for {
+    cols <- properties.get(Key.ZOrder + "cols")
+    bits <- properties.get(Key.ZOrder + "bits")
+    bounds <- properties.get(Key.ZOrder + "bounds")
+    base <- properties.get(Key.ZOrderBase)
+  } yield (cols.split(',').toSeq, bits.toInt,
+    // limit -1 keeps a final all-NULL column's empty bounds (split()
+    // drops trailing empty segments; the per-column lookup is positional)
+    bounds.split(";", -1).map(s => if (s.isEmpty) Array.empty[Double]
+      else s.split(':').map(_.toDouble)), base.toInt)
+
+  lazy val mvDefinition: Option[MvDef] = for {
+    src <- properties.get(Key.Mv + "source"); ks <- properties.get(Key.Mv + "keys")
+    as <- properties.get(Key.Mv + "aggs"); v <- properties.get(Key.MvVersion)
+  } yield MvDef(src, ks.split(',').toSeq,
+    as.split(';').toSeq.map { s => val Array(o, f, a) = s.split(':'); (o, f, a) }, v.toInt)
+}
+
+object TableMeta {
+  /** The property keys. Prefixes end in `.` and scope a key to a column
+    * (by physical name) or a constraint (by name). */
+  object Key {
+    // column declarations and mapping, by physical column
+    val ColMap = "colmap."; val ColDrop = "coldrop."; val GenCol = "gencol."
+    val Identity = "identity."; val NotNull = "notnull."; val ColDefault = "coldefault."
+    // constraints, by constraint name; the primary key
+    val Check = "check."; val Fk = "fk."; val PrimaryKey = "primary_key"
+    // materialized view, ZORDER curve and bloom index
+    val Mv = "mv."; val MvVersion = "mv.version"
+    val ZOrder = "zorder."; val ZOrderBase = "zorder.base"
+    val Bloom = "bloom."; val BloomCols = "bloom.cols"; val BloomNdv = "bloom.ndv"
+    // write knobs, and the high-water marks the write path keeps
+    val DmlMode = "dml_mode"; val TargetFileRows = "target_file_rows"; val Cdf = "cdf"
+    val Isolation = "isolation"; val RowTracking = "rowtracking"
+    val AutoCompactFiles = "auto_compact_files"; val AutoCompactBytes = "auto_compact_bytes"
+    val RowHighWater = "row_high_water"; val StreamHighWater = "stream_high_water"
+  }
+
+  /** Table-property keys that are engine state, not declaration: each is
+    * owned by its own DDL (column declarations and mapping, constraints,
+    * views, the ZORDER curve, the bloom index) or by the write path (the
+    * high-water marks). Writing one directly skips its DDL's checks, so SQL
+    * refuses them in SET / UNSET / CREATE and SHOW CREATE TABLE omits them. */
+  val InternalKeys: Seq[String] = Seq(Key.Mv, Key.Bloom, Key.Fk, Key.ColMap, Key.ColDrop,
+    Key.GenCol, Key.Check, Key.Identity, Key.NotNull, Key.ColDefault, Key.ZOrder,
+    Key.PrimaryKey, Key.RowHighWater, Key.StreamHighWater)
+
+  /** The [[InternalKeys]] entry `k` falls under, if any. */
+  def internalKey(k: String): Option[String] =
+    InternalKeys.find(p => if (p.endsWith(".")) k.startsWith(p) else k == p)
+
+  /** The value checks of the typed table knobs, keyed by property name.
+    * Their setters run them, and SQL runs them on a whole TBLPROPERTIES
+    * bag before it changes anything. */
+  def checkKnob(table: String, key: String, value: String): Unit = {
+    def positive(max: Long): Unit = require(value.toLongOption.exists(n => n > 0 && n <= max),
+      s"$table: table property '$key' must be a positive integer, got '$value'")
+    key match {
+      case Key.DmlMode =>
+        require(Set("cow", "mor")(value), s"dml mode must be cow or mor, got $value")
+      case Key.TargetFileRows | Key.BloomNdv | Key.AutoCompactBytes => positive(Long.MaxValue)
+      case Key.AutoCompactFiles => positive(Int.MaxValue)
+      case Key.Isolation =>
+        require(Set("writeserializable", "serializable")(value.toLowerCase),
+          s"isolation must be writeserializable or serializable, got $value")
+      case Key.RowTracking =>
+        require(value.equalsIgnoreCase("true"),
+          s"$table: row tracking can only be enabled ('true'), got $value")
+      case _ =>
+    }
+  }
+
+  /** The properties that persist a ZORDER curve ([[TableMeta.zorder]]). */
+  def zorderProps(cols: Seq[String], bits: Int, bounds: Array[Array[Double]],
+      base: Int): Map[String, String] = Map(Key.ZOrder + "cols" -> cols.mkString(","),
+    Key.ZOrder + "bits" -> bits.toString,
+    Key.ZOrder + "bounds" -> bounds.map(_.mkString(":")).mkString(";"),
+    Key.ZOrderBase -> base.toString)
+
+  /** The properties that persist a view definition ([[TableMeta.mvDefinition]]). */
+  def mvProps(d: MvDef): Map[String, String] = Map(Key.Mv + "source" -> d.source,
+    Key.Mv + "keys" -> d.keys.mkString(","),
+    Key.Mv + "aggs" -> d.aggs.map { case (o, f, a) => s"$o:$f:$a" }.mkString(";"),
+    Key.MvVersion -> d.version.toString)
+}
+
+/** A view's definition: source, keys, (out, fn, arg) aggregates, source version. */
+final case class MvDef(source: String, keys: Seq[String],
+    aggs: Seq[(String, String, String)], version: Int)
 
 /** Per-file column statistics in canonical string form (numbers,
   * booleans, dates and timestamps as decimal strings; strings raw) —
@@ -238,9 +412,11 @@ object TableLog {
   * a table's whole committed state ([[Snapshot]]): the layout is staged,
   * rebased, restored, cloned and aborted together with its version.
   * Beside them: `_COMMIT_LOCK` (and its `.breaklock` sidecar) guards the
-  * pointer, `_META` holds the table's [[TableMeta]], `_retired_v_<n>`
-  * markers and the `_RETIRED` ledger record vacuumed versions, and
-  * `root/_txn_intents/` journals multi-table publishes.
+  * pointer, `_META` holds the table's [[TableMeta]] (whose companion
+  * owns the property-key scheme; `_META` is written only under the commit
+  * lock, through [[updateMeta]]), `_retired_v_<n>` markers and the
+  * `_RETIRED` ledger record vacuumed versions, and `root/_txn_intents/`
+  * journals multi-table publishes.
   *
   * Construction completes any multi-table publish that crashed midway
   * ([[recoverTxnIntents]]) before the log serves anything. */
@@ -484,17 +660,17 @@ final class TableLog(root: String) {
     // identity-column lesson applied from the start). Carried-over
     // entries keep their bases; a file without a footer row count stays
     // unassigned (its rows read a NULL id rather than a wrong one).
-    val props = meta(name).properties
-    if (props.get("rowtracking").contains("true")) {
+    val m = meta(name)
+    if (m.rowTracking) {
       val staged = stagedSnapshot(name, version)
       if (staged.entries.exists(e => e.base < 0 && e.rows >= 0)) {
-        var hw = props.get("row_high_water").map(_.toLong).getOrElse(0L)
+        var hw = m.rowHighWater
         val based = staged.entries.map { e =>
           if (e.base < 0 && e.rows >= 0) { val b = hw; hw += e.rows; e.copy(base = b) }
           else e
         }
         writeManifest(name, staged.copy(entries = based))
-        updateProperties(name)(_ + ("row_high_water" -> hw.toString))
+        writeMeta(name, m.withProperties(_ + (TableMeta.Key.RowHighWater -> hw.toString)))
       }
     }
     val committed = manifestPath(name, version)
@@ -547,8 +723,7 @@ final class TableLog(root: String) {
     val ourModified = staged.entries.filter(e => baseByRel.get(e.rel).exists(_ != e))
     val readSet = (ourModified.map(_.rel) ++
       base.entries.map(_.rel).filterNot(stagedRels)).toSet
-    val isolation = meta(name).properties.getOrElse("isolation", "writeserializable")
-    if (isolation.equalsIgnoreCase("serializable") && readSet.nonEmpty) return None
+    if (meta(name).isolation.equalsIgnoreCase("serializable") && readSet.nonEmpty) return None
     // every file we rewrite/modify/delete must be untouched by the
     // interleaved commits — identity includes the deletion-vector set
     if (!readSet.forall(r => curByRel.get(r).contains(baseByRel(r)))) return None
@@ -621,7 +796,7 @@ final class TableLog(root: String) {
     * nanos tail still carries its writer's complete host and pid, so it
     * parses and is judged by the TRUE writer's liveness — see
     * [[TableLog.sameHostPid]]. Not reentrant. */
-  private[tables] def withCommitLock[T](name: String)(f: => T): T = {
+  private def withCommitLock[T](name: String)(f: => T): T = {
     val lock = tableDir(name).resolve("_COMMIT_LOCK")
     val token = TableLog.writerToken()
     var tries = 0
@@ -920,18 +1095,33 @@ final class TableLog(root: String) {
 
   // -------------------------------------------------------------- metadata
 
-  /** Replace the table's metadata: a properties file beside the
-    * snapshots, so metadata survives every snapshot swap. Written to a
-    * temp file and atomically moved over `_META` (the pointer-swap shape),
-    * so a concurrent [[meta]] reads the old or the new file, never a
-    * truncated one. */
-  def setMeta(name: String, meta: TableMeta): Unit = {
+  /** The one write of the table's metadata: a read-modify-write under the
+    * table's commit lock, so concurrent writers (and the identity and row-id
+    * claims) never lose each other's change. `f` sees the metadata as of
+    * the lock (checks that depend on it belong in `f`); returns its input. */
+  def updateMeta(name: String)(f: TableMeta => TableMeta): TableMeta = {
+    Files.createDirectories(tableDir(name))
+    withCommitLock(name) {
+      val prior = meta(name)
+      writeMeta(name, f(prior))
+      prior
+    }
+  }
+
+  def setMeta(name: String, meta: TableMeta): Unit = updateMeta(name)(_ => meta)
+
+  def updateProperties(name: String)(f: Map[String, String] => Map[String, String]): Unit =
+    updateMeta(name)(_.withProperties(f))
+
+  /** Replace `_META` (beside the snapshots, so it survives every swap) by a
+    * temp file moved over it atomically: a concurrent [[meta]] never reads a
+    * truncated file. Callers hold the commit lock. */
+  private def writeMeta(name: String, meta: TableMeta): Unit = {
     val p = new java.util.Properties()
     meta.comment.foreach(p.setProperty("comment", _))
     meta.columnComments.foreach { case (c, v) => p.setProperty(s"col.$c", v) }
     meta.properties.foreach { case (k, v) => p.setProperty(s"prop.$k", v) }
     val dir = tableDir(name)
-    Files.createDirectories(dir)
     val tmp = Files.createTempFile(dir, "_META.", ".tmp")
     try {
       val out = Files.newOutputStream(tmp)
@@ -952,14 +1142,6 @@ final class TableLog(root: String) {
       comment = entries.get("comment"),
       columnComments = entries.collect { case (k, v) if k.startsWith("col.") => k.stripPrefix("col.") -> v },
       properties = entries.collect { case (k, v) if k.startsWith("prop.") => k.stripPrefix("prop.") -> v })
-  }
-
-  /** Read-modify-write of the table's properties: one [[meta]] read, one
-    * atomic [[setMeta]]. Two writers that hold no common lock can still
-    * lose one update to the other. */
-  def updateProperties(name: String)(f: Map[String, String] => Map[String, String]): Unit = {
-    val m = meta(name)
-    setMeta(name, m.copy(properties = f(m.properties)))
   }
 
   // ------------------------------------------------------ history, retired
@@ -1054,10 +1236,11 @@ final class TableLog(root: String) {
     * `foldBeforeRetire` runs first, under the lock, with every committed
     * snapshot in version order: markers that live in manifests or
     * version directories this vacuum may retire (the streaming and MV
-    * high-water marks, COPY INTO ledgers) are persisted there. It must
-    * not take the commit lock. */
+    * high-water marks, COPY INTO ledgers) are persisted — the metadata
+    * change it returns is written here, under the same lock. It must not
+    * take the commit lock. */
   private[tables] def vacuum(name: String, staleStagingMs: Long, retainMs: Long)(
-      foldBeforeRetire: Seq[Snapshot] => Unit): Unit = {
+      foldBeforeRetire: Seq[Snapshot] => TableMeta => TableMeta): Unit = {
     if (version(name).isEmpty) return
     withCommitLock(name) {
       // the pointer and the version set are read under the lock: read
@@ -1068,7 +1251,9 @@ final class TableLog(root: String) {
       // every committed manifest, parsed once for the fold and the
       // referenced-file set
       val parsed = versions(name).map(snapshotAt(name, _))
-      foldBeforeRetire(parsed)
+      val prior = meta(name)
+      val m = foldBeforeRetire(parsed)(prior)
+      if (m != prior) writeMeta(name, m)
       val now = System.currentTimeMillis()
       val retained: Set[Int] = parsed.map(_.version).filter { v =>
         keepVersion.contains(v) ||
@@ -1147,7 +1332,7 @@ final class TableLog(root: String) {
       val markers = retiredMarkers(dir)
       if (markers.nonEmpty) {
         TableLog.unionLedger(dir.resolve("_RETIRED"), markers.map(_._2.toString))
-        if (!meta(name).properties.get("graft.vacuum.keepRetiredMarkers")
+        if (!m.properties.get("graft.vacuum.keepRetiredMarkers")
             .exists(_.equalsIgnoreCase("true")))
           markers.foreach(m => Files.deleteIfExists(m._1))
       }

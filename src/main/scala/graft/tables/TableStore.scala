@@ -96,25 +96,6 @@ object TableStore {
           "(TableStore.detach) before issuing SQL DML against it")
     }
 
-  /** The value checks of the typed table knobs, keyed by property name.
-    * Their setters run them, and SQL runs them on a whole TBLPROPERTIES
-    * bag before it changes anything. */
-  def checkKnob(table: String, key: String, value: String): Unit = key match {
-    case "dml_mode" =>
-      require(Set("cow", "mor")(value), s"dml mode must be cow or mor, got $value")
-    case "target_file_rows" =>
-      require(value.toLong > 0, s"$table: target file rows must be positive, got $value")
-    case "bloom.ndv" =>
-      require(value.toLong > 0, s"$table: bloom ndv must be positive, got $value")
-    case "isolation" =>
-      require(Set("writeserializable", "serializable")(value.toLowerCase),
-        s"isolation must be writeserializable or serializable, got $value")
-    case "rowtracking" =>
-      require(value.equalsIgnoreCase("true"),
-        s"$table: row tracking can only be enabled ('true'), got $value")
-    case _ =>
-  }
-
   /** The attached store owning database namespace `db` (SQL CTAS routing). */
   def resolveDb(spark: SparkSession, db: String): Option[TableStore] =
     stores(spark).filter(_.dbExists(db)) match {
@@ -277,6 +258,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** This store's table log: manifests, pointers, locks, metadata. */
   private[tables] val log = new TableLog(root)
   import TableLog.{deleteTree, walkAll}
+  import TableMeta.{checkKnob, Key}
 
   def rootDir: String = root
 
@@ -489,22 +471,20 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * startsWith skips files whose [min, max] cannot contain a `p`-prefixed
     * string. Unanalyzable subtrees prune nothing. `pred` speaks logical
     * (visible) column names. */
-  private def pruneEntries(name: String, schema: StructType, entries: Seq[FileEntry],
-      pred: Column): Seq[FileEntry] =
-    pruneWith(name, skipContext(meta(name).properties, schema, logical = true),
+  private def pruneEntries(name: String, m: TableMeta, schema: StructType,
+      entries: Seq[FileEntry], pred: Column): Seq[FileEntry] =
+    pruneWith(name, skipContext(m, schema, logical = true),
       entries, org.apache.spark.sql.GraftShims.catalystExpr(pred))
 
   /** Skipping context for predicates over logical names (`logical`) or
     * over the physical names a [[ManifestFileIndex]] scan outputs. */
-  private def skipContext(props: Map[String, String], physical: StructType,
+  private def skipContext(m: TableMeta, physical: StructType,
       logical: Boolean): TableStore.SkipContext = {
-    val rn = renamesOf(props)
-    val rev = rn.map(_.swap)
-    val blooms = bloomColsOf(props).map { c =>
-      val phys = rev.getOrElse(c, c)
+    val blooms = m.bloomCols.map { c =>
+      val phys = m.physicalName(c)
       (if (logical) c else phys).toLowerCase -> phys
     }.toMap
-    if (logical) TableStore.SkipContext(logicalizeWith(props, physical), rn, blooms)
+    if (logical) TableStore.SkipContext(m.logicalize(physical), m.renames, blooms)
     else TableStore.SkipContext(physical, Map.empty, blooms)
   }
 
@@ -839,12 +819,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * (the Iceberg `.files` / Delta DESCRIBE DETAIL inspection surface,
     * file edition). */
   def fileInventory(name: String): DataFrame = {
-    val rn = renames(name)
+    val m = log.meta(name)
     val rows = log.snapshot(name).entries.map { e =>
       org.apache.spark.sql.Row(e.rel, e.rows,
         Files.size(Paths.get(absPath(name, e.rel))), e.dvs.size,
         e.stats.map { case (k, v) =>
-          (rn.getOrElse(k, k), org.apache.spark.sql.Row(v.min, v.max)) })
+          (m.logicalName(k), org.apache.spark.sql.Row(v.min, v.max)) })
     }
     val schema = StructType(Seq(
       StructField("file", StringType, nullable = false),
@@ -862,23 +842,21 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * tests and tooling can assert data skipping. */
   def prunedFileList(name: String, pred: Option[Column]): Seq[String] = {
     val snap = log.snapshot(name)
-    pred.map(p => pruneEntries(name, snap.schema, snap.entries, p)).getOrElse(snap.entries)
-      .map(_.rel)
+    pred.map(pruneEntries(name, log.meta(name), snap.schema, snap.entries, _))
+      .getOrElse(snap.entries).map(_.rel)
   }
 
   // ---------------------------------------------------------------- writes
 
   /** Empty frame with exactly `schema` — the CREATE TABLE (no AS) seed. */
-  def emptyFrame(schema: StructType): DataFrame = emptyDf(schema)
-
-  private def emptyDf(schema: StructType): DataFrame =
+  def emptyFrame(schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** K2: declare an empty table from an explicit schema (the reference's
     * CREATE OR REPLACE TABLE DDL, constraints recorded as metadata only —
     * Spark cannot enforce PK/FK, SURVEY.md §1.1). */
   def createEmpty(name: String, schema: StructType): Unit =
-    createOrReplace(name, emptyDf(schema))
+    createOrReplace(name, emptyFrame(schema))
 
   /** The one parquet writer of the store: data files and the change-feed,
     * deletion-vector and discovery sidecars all compress with zstd
@@ -896,9 +874,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * current: the expensive half of a commit, shared by [[TableLog.commit]] bodies
     * and multi-table [[transaction]]s (which stage every table first and
     * swap all pointers together). The staged manifest records `layout`
-    * (in physical names) as the version's layout. Returns the new files'
-    * entries. On failure the slot is dropped. */
-  private def stageVersion(name: String, next: Int, dir: Path, df: DataFrame,
+    * (in physical names) as the version's layout; `m` is the table's
+    * metadata as the statement read it. Returns the new files' entries.
+    * On failure the slot is dropped. */
+  private def stageVersion(name: String, m: TableMeta, next: Int, dir: Path, df: DataFrame,
       layout: Layout, carryOver: Seq[FileEntry], schemaHint: Option[StructType],
       op: String): Seq[FileEntry] = {
     try {
@@ -907,15 +886,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // data derives and validates what it writes. Both speak logical
       // names, so they apply BEFORE the column-mapping translation to the
       // physical names files store.
-      val checked = toPhysicalDf(name,
-        enforceChecks(name, applyGeneratedColumns(name, df, schemaHint)))
-      // logical→physical rename lookup is case-INsensitive (exact first):
-      // a cased spelling of a RENAMED column must still find its physical
-      // name, or it slips past resolveLoose below (which only knows
-      // physical spellings) and silently drops out of the stats lists —
-      // the same silent-drop class, surviving in the rename+case combo
-      val physName = { val rev = renames(name).map(_.swap); (c: String) =>
-        rev.getOrElse(c, rev.find(_._1.equalsIgnoreCase(c)).map(_._2).getOrElse(c)) }
+      val derived = enforceChecks(name, m, applyGeneratedColumns(name, m, df, schemaHint))
+      // files hold physical names (columns without a mapping pass through)
+      val checked = if (m.renames.isEmpty) derived
+        else derived.select(derived.columns.toSeq.map(c => col(c).as(m.physicalName(c))): _*)
+      val physName = m.physicalName _ // case-insensitive: cased spellings keep their stats
       // Loose case-normalization of the layout lists: a cased identifier
       // (statsFor = "L_ORDERKEY" on column l_orderkey) otherwise slips
       // through the exact-case statCols filter below and silently
@@ -959,15 +934,15 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // bloom-indexed columns ride the parquet writer's native bloom
       // support (per-column hadoop options, honored via the per-write
       // conf — no session-global mutation, safe under concurrent writes)
-      val w0 = bloomIndexCols(name).map(physName).filter(checked.columns.contains)
+      val w0 = m.bloomCols.map(physName).filter(checked.columns.contains)
         .foldLeft(parquetWriter(sorted)) { (w, c) =>
           w.option(s"parquet.bloom.filter.enabled#$c", "true")
-            .option(s"parquet.bloom.filter.expected.ndv#$c", bloomNdv(name).toString)
+            .option(s"parquet.bloom.filter.expected.ndv#$c", m.bloomNdv.toString)
         }
       // declared target file size: rows per file are capped at write time
       // (Spark splits a partition's output), so one giant input partition
       // cannot produce one giant unsplittable-for-skipping file
-      val w = targetFileRows(name).fold(w0)(n => w0.option("maxRecordsPerFile", n.toString))
+      val w = m.targetFileRows.fold(w0)(n => w0.option("maxRecordsPerFile", n.toString))
       (if (dupCols.nonEmpty) w.partitionBy(dupCols: _*) else w).parquet(dataDir.toString)
 
       // list the files this write produced
@@ -986,13 +961,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // files directly — generated-column partition pruning with no
       // expression inversion (Delta needs a monotonicity whitelist; per-
       // file min/max subsumes it)
-      val genDeps = generatedColumns(name).values.toSeq.flatMap { sql =>
-        org.apache.spark.sql.GraftShims
-          .catalystExpr(org.apache.spark.sql.functions.expr(sql)).collect {
-            case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-              a.nameParts.last
-          }
-      }.map(physName)
+      val genDeps = m.generatedColumns.values.toSeq.flatMap(sqlColumns).map(physName)
       val statCols = (pbP ++ swP ++ sfP ++ genDeps).distinct
         .filter(checked.columns.contains)
       val newEntries = footerEntries(name, newFilesAbs, statCols)
@@ -1012,14 +981,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * rows and COPY INTO's loaded-file ledger inside the same staged
     * version directory — atomic with the commit (an abort drops them with
     * the version). Returns the entries of the files it staged. */
-  private def commitVersion(name: String, df: DataFrame, layout: Layout,
+  private def commitVersion(name: String, m: TableMeta, df: DataFrame, layout: Layout,
       carryOver: Seq[FileEntry], schemaHint: Option[StructType] = None,
       expectedBase: Option[Option[Int]] = None, op: String = "write",
       cdc: Option[DataFrame] = None, copyFiles: Seq[String] = Nil,
       strictCas: Boolean = false): Seq[FileEntry] = {
     var added = Seq.empty[FileEntry]
     log.commit(name, expectedBase, strictCas) { (next, dir) =>
-      added = stageVersion(name, next, dir, df, layout, carryOver, schemaHint, op)
+      added = stageVersion(name, m, next, dir, df, layout, carryOver, schemaHint, op)
       cdc.foreach(parquetWriter(_).parquet(dir.resolve("cdc").toString))
       if (copyFiles.nonEmpty)
         Files.write(dir.resolve("copy_files"), copyFiles.mkString("\n").getBytes(UTF_8))
@@ -1029,8 +998,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   }
 
   def setIsolation(name: String, level: String): Unit = {
-    TableStore.checkKnob(name, "isolation", level)
-    log.updateProperties(name)(_ + ("isolation" -> level.toLowerCase))
+    checkKnob(name, Key.Isolation, level)
+    log.updateProperties(name)(_ + (Key.Isolation -> level.toLowerCase))
   }
 
   /** Manifest entries for freshly-written files. Footer reads are
@@ -1058,7 +1027,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * `ConcurrentModificationException` — the lost-update protection the
     * internal DML paths get automatically. */
   def replaceIfUnchanged(name: String, df: DataFrame, baseVersion: Int): Unit =
-    commitVersion(name, df, log.snapshot(name).layout, carryOver = Seq.empty,
+    commitVersion(name, log.meta(name), df, log.snapshot(name).layout, carryOver = Seq.empty,
       expectedBase = Some(Some(baseVersion)), strictCas = true)
 
   /** OPTIMIZE-style compaction: rewrite the current manifest's files into
@@ -1080,12 +1049,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * the multi-dimensional version of the sort-based data skipping a
     * single sort column gives. */
   def compact(name: String, targetFiles: Int = 1, zorderBy: Seq[String] = Nil): Unit = {
-    val snap = log.snapshot(name)
+    val (m, snap) = (log.meta(name), log.snapshot(name))
     val Layout(pb, sw, sf) = snap.layout
-    val df0 = rewriteSource(name, snap, snap.entries)
+    val df0 = rewriteSource(name, m, snap, snap.entries)
     // readEntries yields the LOGICAL view; layout names in the manifest
     // are physical — translate for the frame-side operations below
-    val lpb = logicalNames(name, pb)
+    val lpb = pb.map(m.logicalName)
     if (zorderBy.isEmpty) {
       // consolidation lays files out ALONG the stats layout when one is
       // recorded (declared statsFor or adaptive merge keys): range-
@@ -1093,17 +1062,17 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // [min, max] box, so the stats the layout asks for actually skip.
       // A round-robin rewrite would give every file the full value range,
       // leaving equality probes to bloom false-positive luck.
-      val lsf = logicalNames(name, sf).filter(c =>
+      val lsf = sf.map(m.logicalName).filter(c =>
         df0.columns.exists(_.equalsIgnoreCase(c)))
       val df =
         if (lpb.nonEmpty) df0.repartition(lpb.map(col): _*)
         else if (lsf.nonEmpty)
           df0.repartitionByRange(math.max(1, targetFiles), lsf.map(col): _*)
         else df0.repartition(math.max(1, targetFiles))
-      commitVersion(name, df, snap.layout, carryOver = Seq.empty,
+      commitVersion(name, m, df, snap.layout, carryOver = Seq.empty,
         schemaHint = Some(snap.schema), expectedBase = Some(Some(snap.version)), op = "optimize")
     } else {
-      val lschema = logicalizeSchema(name, snap.schema)
+      val lschema = m.logicalize(snap.schema)
       zorderBy.foreach { c =>
         val dt = lschema.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
         require(dt.exists(_.isInstanceOf[NumericType]),
@@ -1134,7 +1103,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       val probes = (1 until (1 << bits)).map(_.toDouble / (1 << bits)).toArray
       val quantiles = df0.stat.approxQuantile(zorderBy.toArray, probes, 0.01)
       val prepared = zorderRoute(df0, zorderBy, quantiles, bits, targetParts)
-      commitVersion(name, prepared, Layout(pb, Nil, (sf ++ sw ++ zorderBy).distinct),
+      commitVersion(name, m, prepared, Layout(pb, Nil, (sf ++ sw ++ zorderBy).distinct),
         carryOver = Seq.empty, schemaHint = Some(snap.schema),
         expectedBase = Some(Some(snap.version)), op = "optimize")
       // persist the curve (bits + per-column quantile boundaries) so
@@ -1143,11 +1112,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // Delta liquid clustering's "cluster on write into the existing
       // layout" shape. The baseline version marks which files are
       // already clustered.
-      log.updateProperties(name)(_ +
-        ("zorder.cols" -> zorderBy.mkString(",")) +
-        ("zorder.bits" -> bits.toString) +
-        ("zorder.bounds" -> quantiles.map(_.mkString(":")).mkString(";")) +
-        ("zorder.base" -> version(name).get.toString))
+      log.updateProperties(name)(_ ++
+        TableMeta.zorderProps(zorderBy, bits, quantiles, version(name).get))
     }
   }
 
@@ -1185,23 +1151,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       .drop("__graft_z") // projection after sort — intra-partition order survives
   }
 
-  /** The persisted clustering curve, if a full ZORDER optimize ran:
-    * (columns, bits, per-column boundaries, baseline version). */
-  private def zorderSpec(name: String): Option[(Seq[String], Int, Array[Array[Double]], Int)] = {
-    val p = meta(name).properties
-    for {
-      cols <- p.get("zorder.cols")
-      bits <- p.get("zorder.bits")
-      bounds <- p.get("zorder.bounds")
-      basev <- p.get("zorder.base")
-    } yield (cols.split(',').toSeq, bits.toInt,
-      // limit -1: split() drops TRAILING empty segments, so a final
-      // all-NULL column's empty bounds would vanish and zorderRoute's
-      // positional buckets(ci) lookup would go out of range
-      bounds.split(";", -1).map(s => if (s.isEmpty) Array.empty[Double]
-        else s.split(':').map(_.toDouble)),
-      basev.toInt)
-  }
+  /** The persisted clustering curve ([[TableMeta.zorder]]). */
+  private def curve(name: String, m: TableMeta): (Seq[String], Int, Array[Array[Double]], Int) =
+    m.zorder.getOrElse(throw new IllegalStateException(
+      s"$name: no persisted ZORDER curve — run OPTIMIZE … ZORDER BY first"))
 
   /** Incremental clustering (Delta liquid-clustering shape): rewrite ONLY
     * the given candidate entries along the table's persisted curve; every
@@ -1209,22 +1162,19 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * spans that overlap the already-clustered generation — predicate
     * pruning stays selective across generations, and the cost is the
     * candidate slice, never the table. */
-  private def clusterEntries(name: String, snap: Snapshot, candidates: Seq[FileEntry],
-      targetFiles: Int): Unit = {
-    val (cols, bits, bounds, _) = zorderSpec(name).getOrElse(
-      throw new IllegalStateException(
-        s"$name: no persisted ZORDER curve — run OPTIMIZE … ZORDER BY first"))
+  private def clusterEntries(name: String, m: TableMeta, snap: Snapshot,
+      candidates: Seq[FileEntry], targetFiles: Int): Unit = {
+    val (cols, bits, bounds, _) = curve(name, m)
     val cset = candidates.map(_.rel).toSet
     if (candidates.isEmpty ||
         (candidates.size <= 1 && !candidates.exists(_.dvs.nonEmpty))) return
     val Layout(pb, sw, sf) = snap.layout
-    val prepared = zorderRoute(rewriteSource(name, snap, candidates),
+    val prepared = zorderRoute(rewriteSource(name, m, snap, candidates),
       cols, bounds, bits, math.max(1, targetFiles))
-    commitVersion(name, prepared, Layout(pb, Nil, (sf ++ sw ++ cols).distinct),
+    commitVersion(name, m, prepared, Layout(pb, Nil, (sf ++ sw ++ cols).distinct),
       carryOver = snap.entries.filterNot(e => cset(e.rel)), schemaHint = Some(snap.schema),
       expectedBase = Some(Some(snap.version)), op = "optimize")
-    log.updateProperties(name)(_ +
-      ("zorder.base" -> version(name).get.toString))
+    log.updateProperties(name)(_ + (Key.ZOrderBase -> version(name).get.toString))
   }
 
   /** Cluster the files ADDED since the last (full or incremental) ZORDER
@@ -1233,15 +1183,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * the backlog only. Falls back to every file when the baseline
     * manifest was vacuumed. */
   def clusterNew(name: String, targetFiles: Int = 1): Unit = {
-    val (_, _, _, basev) = zorderSpec(name).getOrElse(
-      throw new IllegalStateException(
-        s"$name: no persisted ZORDER curve — run OPTIMIZE … ZORDER BY first"))
+    val m = log.meta(name)
+    val (_, _, _, basev) = curve(name, m)
     val snap = log.snapshot(name)
     val clustered: Set[String] =
       if (basev == snap.version) snap.entries.map(_.rel).toSet
       else if (!hasVersion(name, basev)) Set.empty
       else log.snapshotAt(name, basev).entries.map(_.rel).toSet
-    clusterEntries(name, snap,
+    clusterEntries(name, m, snap,
       snap.entries.filterNot(e => clustered(e.rel) && e.dvs.isEmpty), targetFiles)
   }
 
@@ -1250,9 +1199,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * persisted curve. `targetFiles` ≤ 0 keeps the candidate file count —
     * clustering re-ranges files, it doesn't consolidate them. */
   def zorderWhere(name: String, pred: Column, targetFiles: Int = 0): Unit = {
-    val snap = log.snapshot(name)
-    val candidates = pruneEntries(name, snap.schema, snap.entries, pred)
-    clusterEntries(name, snap, candidates,
+    val (m, snap) = (log.meta(name), log.snapshot(name))
+    val candidates = pruneEntries(name, m, snap.schema, snap.entries, pred)
+    clusterEntries(name, m, snap, candidates,
       if (targetFiles > 0) targetFiles else math.max(1, candidates.size))
   }
 
@@ -1262,24 +1211,24 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * with the predicate's slice, never the table. Deletion vectors on
     * candidate files fold in; every other file carries over untouched. */
   def compactWhere(name: String, pred: Column, targetFiles: Int = 1): Unit = {
-    val snap = log.snapshot(name)
-    val candidates = pruneEntries(name, snap.schema, snap.entries, pred)
+    val (m, snap) = (log.meta(name), log.snapshot(name))
+    val candidates = pruneEntries(name, m, snap.schema, snap.entries, pred)
     if (candidates.size <= 1 && !candidates.exists(_.dvs.nonEmpty)) return
     val cset = candidates.map(_.rel).toSet
-    rewriteCompacted(name, snap, candidates, snap.entries.filterNot(e => cset(e.rel)),
+    rewriteCompacted(name, m, snap, candidates, snap.entries.filterNot(e => cset(e.rel)),
       targetFiles)
   }
 
   /** Commit `rewrite` (entries of `snap`) consolidated into one file per
     * partition value, or `targetFiles` files when unpartitioned, with
     * `carryOver` untouched: the shared tail of the bounded compactions. */
-  private def rewriteCompacted(name: String, snap: Snapshot, rewrite: Seq[FileEntry],
-      carryOver: Seq[FileEntry], targetFiles: Int): Unit = {
-    val df0 = rewriteSource(name, snap, rewrite)
-    val lpb = logicalNames(name, snap.layout.partitionBy)
+  private def rewriteCompacted(name: String, m: TableMeta, snap: Snapshot,
+      rewrite: Seq[FileEntry], carryOver: Seq[FileEntry], targetFiles: Int): Unit = {
+    val df0 = rewriteSource(name, m, snap, rewrite)
+    val lpb = snap.layout.partitionBy.map(m.logicalName)
     val df = if (lpb.nonEmpty) df0.repartition(lpb.map(col): _*)
              else df0.repartition(math.max(1, targetFiles))
-    commitVersion(name, df, snap.layout, carryOver, schemaHint = Some(snap.schema),
+    commitVersion(name, m, df, snap.layout, carryOver, schemaHint = Some(snap.schema),
       expectedBase = Some(Some(snap.version)), op = "optimize")
   }
 
@@ -1291,32 +1240,27 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * the cost is the small-file backlog, never the table. No-op when
     * fewer than two entries qualify. */
   def compactSmall(name: String, smallBytes: Long = 32L << 20): Unit =
-    compactSmallOf(name, log.snapshot(name), smallBytes, minFiles = 2)
+    compactSmallOf(name, log.meta(name), smallBytes, minFiles = 2)
 
-  /** [[compactSmall]] of `snap`, run only when at least `minFiles`
-    * entries qualify. */
-  private def compactSmallOf(name: String, snap: Snapshot, smallBytes: Long,
+  /** [[compactSmall]] of the live version, run only when at least
+    * `minFiles` entries qualify. */
+  private def compactSmallOf(name: String, m: TableMeta, smallBytes: Long,
       minFiles: Int): Unit = {
+    val snap = log.snapshot(name)
     val (small, big) = snap.entries.partition(e =>
       e.dvs.nonEmpty || Files.size(Paths.get(absPath(name, e.rel))) < smallBytes)
-    if (small.size >= math.max(2, minFiles)) rewriteCompacted(name, snap, small, big, 1)
+    if (small.size >= math.max(2, minFiles)) rewriteCompacted(name, m, snap, small, big, 1)
   }
 
   /** Enable auto-compaction: after any [[append]] leaves `smallFiles` or
     * more sub-`smallBytes` files in the manifest, a [[compactSmall]] runs
     * inline — the antidote to streaming-append small-file accumulation,
-    * applied where it is produced. */
-  def setAutoCompact(name: String, smallFiles: Int, smallBytes: Long = 32L << 20): Unit =
-    log.updateProperties(name)(_ +
-      ("auto_compact_files" -> smallFiles.toString) +
-      ("auto_compact_bytes" -> smallBytes.toString))
-
-  private def maybeAutoCompact(name: String): Unit = {
-    val props = meta(name).properties
-    props.get("auto_compact_files").map(_.toInt).foreach { threshold =>
-      compactSmallOf(name, log.snapshot(name),
-        props.get("auto_compact_bytes").map(_.toLong).getOrElse(32L << 20), threshold)
-    }
+    * applied where it is produced. Both must be positive. */
+  def setAutoCompact(name: String, smallFiles: Int, smallBytes: Long = 32L << 20): Unit = {
+    checkKnob(name, Key.AutoCompactFiles, smallFiles.toString)
+    checkKnob(name, Key.AutoCompactBytes, smallBytes.toString)
+    log.updateProperties(name)(_ + (Key.AutoCompactFiles -> smallFiles.toString) +
+      (Key.AutoCompactBytes -> smallBytes.toString))
   }
 
   /** K1/K2/K3: overwrite-create a table from a DataFrame snapshot.
@@ -1327,38 +1271,42 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * always collected for partition + sort columns; `statsFor` adds more. */
   def createOrReplace(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
       sortWithin: Seq[String] = Nil, statsFor: Seq[String] = Nil): Unit = {
-    commitVersion(name, df, Layout(partitionBy, sortWithin, statsFor), carryOver = Seq.empty)
+    val m = log.meta(name)
+    commitVersion(name, m, df, Layout(partitionBy, sortWithin, statsFor), carryOver = Seq.empty)
     // a REPLACE may swap in a schema that invalidates generated-column
-    // declarations (the column or a dependency no longer exists) — drop
-    // the stale ones AFTER the commit succeeded, never as a side effect
-    // of write-plan building (an aborted write must not lose metadata).
-    // Staleness is judged against the COMMITTED schema, not the input
-    // frame: a replace that omits an always-derived column (the normal
-    // generated-column usage — the write derives it) keeps its
-    // declaration, because the committed schema carries the column.
-    val committed = logicalizeSchema(name, log.snapshot(name).schema).fieldNames
-    val stale = generatedColumns(name).filter { case (logical, sql) =>
-      !committed.exists(_.equalsIgnoreCase(logical)) || {
-        import org.apache.spark.sql.functions.expr
-        val deps = org.apache.spark.sql.GraftShims.catalystExpr(expr(sql)).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.nameParts.last
+    // declarations (the column or a dependency is gone) — drop the stale
+    // ones AFTER the commit succeeded (an aborted write must not lose
+    // metadata), judged against the COMMITTED schema: a replace that omits
+    // an always-derived column keeps its declaration, because the write
+    // derives the column.
+    if (m.generatedColumns.nonEmpty) {
+      val schema = log.snapshot(name).schema
+      log.updateMeta(name) { cur =>
+        val committed = cur.logicalize(schema).fieldNames
+        val stale = cur.generatedColumns.filter { case (logical, sql) =>
+          !committed.exists(_.equalsIgnoreCase(logical)) ||
+            !sqlColumns(sql).forall(n => committed.exists(_.equalsIgnoreCase(n)))
         }
-        !deps.forall(n => committed.exists(_.equalsIgnoreCase(n)))
+        cur.withProperties(_ -- stale.keys.map(l => Key.GenCol + cur.physicalName(l)))
       }
     }
-    if (stale.nonEmpty)
-      log.updateProperties(name)(_ -- stale.keys.map(l => s"gencol.${physicalName(name, l)}"))
   }
+
+  /** The column names a SQL expression references. */
+  private def sqlColumns(sql: String): Seq[String] =
+    org.apache.spark.sql.GraftShims.catalystExpr(org.apache.spark.sql.functions.expr(sql))
+      .collect { case a: UnresolvedAttribute => a.nameParts.last }
 
   /** Schema enforcement for appends: explicit-schema reads would silently
     * NULL-fill a missing column and drop an extra one — a typo'd append
     * must error, not lose data (Delta's append schema check). Matching is
     * case-insensitive; columns are reordered and cast to target types. */
-  private def alignedForAppend(name: String, schema: StructType, df: DataFrame): DataFrame = {
+  private def alignedForAppend(name: String, m: TableMeta, schema: StructType,
+      df: DataFrame): DataFrame = {
     // appended frames speak logical names — align against the visible view;
     // GENERATED columns may be omitted (the write derives them)
-    val lschema = logicalizeSchema(name, schema)
-    val gens = generatedColumns(name).keySet
+    val lschema = m.logicalize(schema)
+    val gens = m.generatedColumns.keySet
     val missing = lschema.fieldNames.filterNot(c => df.columns.exists(_.equalsIgnoreCase(c)))
       .filterNot(c => gens.exists(_.equalsIgnoreCase(c)))
     val extra = df.columns.filterNot(c => lschema.fieldNames.exists(_.equalsIgnoreCase(c)))
@@ -1377,21 +1325,23 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * DESCRIBE HISTORY; the streaming sink encodes its micro-batch id there
     * to make replays detectable ([[lastStreamBatch]]). */
   def append(name: String, df: DataFrame, op: String = "append",
-      copyFiles: Seq[String] = Nil): Unit = {
-    appendTo(name, log.snapshot(name), df, op, copyFiles)
-    maybeAutoCompact(name)
-  }
+      copyFiles: Seq[String] = Nil): Unit =
+    appendTo(name, log.meta(name), log.snapshot(name), df, op, copyFiles)
 
-  /** [[append]]'s commit onto the snapshot the caller read; returns the
-    * entries of the files it added. */
-  private def appendTo(name: String, snap: Snapshot, df: DataFrame, op: String,
+  /** [[append]]'s commit onto the snapshot and metadata the caller read, then
+    * its auto-compaction ([[setAutoCompact]], decoded before the commit so a
+    * bad knob fails the append); returns the entries of the files it added. */
+  private def appendTo(name: String, m: TableMeta, snap: Snapshot, df: DataFrame, op: String,
       copyFiles: Seq[String]): Seq[FileEntry] = {
-    val (keyed, cleanup) = applyIdentity(name, df)
-    try
-      commitVersion(name, alignedForAppend(name, snap.schema, keyed), snap.layout,
+    val autoCompact = m.autoCompact
+    val (keyed, cleanup) = applyIdentity(name, m, df)
+    val added = try
+      commitVersion(name, m, alignedForAppend(name, m, snap.schema, keyed), snap.layout,
         carryOver = snap.entries, schemaHint = Some(snap.schema),
         expectedBase = Some(Some(snap.version)), op = op, copyFiles = copyFiles)
     finally cleanup()
+    autoCompact.foreach { case (files, bytes) => compactSmallOf(name, m, bytes, files) }
+    added
   }
 
   /** K4+: `COPY INTO` — idempotent, file-tracked bulk ingestion
@@ -1410,7 +1360,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * @return (files loaded, rows loaded) */
   def copyInto(name: String, from: String, format: String = "parquet",
       pattern: Option[String] = None, force: Boolean = false): (Long, Long) = {
-    val snap = log.snapshot(name)
+    val (m, snap) = (log.meta(name), log.snapshot(name))
     val fromPath = Paths.get(from).toAbsolutePath.normalize
     require(Files.exists(fromPath), s"COPY INTO $name: source $from not found")
     val ext = format.toLowerCase match {
@@ -1433,7 +1383,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       if (force) candidates
       else { val done = loadedCopyFiles(name); candidates.filterNot(done) }
     if (fresh.isEmpty) return (0L, 0L)
-    val visible = logicalizeSchema(name, snap.schema)
+    val visible = m.logicalize(snap.schema)
     val df = format.toLowerCase match {
       case "parquet" => spark.read.parquet(fresh: _*)
       // text formats can't self-describe types — the table's schema rules
@@ -1444,8 +1394,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // staged — not a before/after sum over the manifest, which an entry
     // carrying the unknown sentinel (rows = -1), a rebase over a
     // concurrent append or the auto-compaction below would skew
-    val added = appendTo(name, snap, df, s"copy_into:${fresh.size}", fresh)
-    maybeAutoCompact(name)
+    val added = appendTo(name, m, snap, df, s"copy_into:${fresh.size}", fresh)
     (fresh.size.toLong, if (added.exists(_.rows < 0)) -1L else added.map(_.rows).sum)
   }
 
@@ -1474,13 +1423,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * it. */
   def lastStreamBatch(name: String): Option[Long] =
     if (!exists(name)) None
-    else streamHighWater(name, versions(name).map(log.opAt(name, _)))
+    else streamHighWater(log.meta(name), versions(name).map(log.opAt(name, _)))
 
   /** [[lastStreamBatch]] over the given retained op labels. */
-  private def streamHighWater(name: String, ops: Seq[String]): Option[Long] =
+  private def streamHighWater(m: TableMeta, ops: Seq[String]): Option[Long] =
     (ops.collect { case op if op.startsWith("stream_append:") =>
-      op.stripPrefix("stream_append:").toLong } ++
-      meta(name).properties.get("stream_high_water").map(_.toLong)).maxOption
+      op.stripPrefix("stream_append:").toLong } ++ m.streamHighWater).maxOption
 
   /** SCD2-layout write: clusters the history by a derived `is_current`
     * flag so current-version readers skip every closed-version file via
@@ -1498,9 +1446,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * NULL-fill the new columns, and the index prunes files by manifest
     * stats against whatever filters the query pushes into the scan.
     * Physical column names. */
-  private def scanManifest(name: String, snap: Snapshot, entries: Seq[FileEntry],
-      props: Map[String, String]): DataFrame = {
-    val ctx = skipContext(props, snap.schema, logical = false)
+  private def scanManifest(name: String, m: TableMeta, snap: Snapshot,
+      entries: Seq[FileEntry]): DataFrame = {
+    val ctx = skipContext(m, snap.schema, logical = false)
     val index = new ManifestFileIndex(log.tableDir(name), snap.version, entries.map(_.rel),
       pred => pruneWith(name, ctx, entries, pred).map(_.rel))
     org.apache.spark.sql.GraftShims.parquetScan(spark, index, snap.schema)
@@ -1512,16 +1460,16 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * with deletion vectors already applied. The identity pair is what DVs
     * address rows by — this scan backs both the DV read path and the
     * merge-on-read DML discovery pass. */
-  private def scanWithPos(name: String, snap: Snapshot, entries: Seq[FileEntry]): DataFrame = {
-    val props = meta(name).properties
-    val scan0 = scanManifest(name, snap, entries, props)
+  private def scanWithPos(name: String, m: TableMeta, snap: Snapshot,
+      entries: Seq[FileEntry]): DataFrame = {
+    val scan0 = scanManifest(name, m, snap, entries)
       .withColumn("__graft_file",
         regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
       .withColumn("__graft_pos", col("_metadata.row_index"))
     // column mapping: expose logical names (the extra __graft_* identity
     // columns and any dropped-column bytes ride along untouched — DML
     // discovery filters by logical predicates over this scan)
-    val scan1 = renamesOf(props).foldLeft(scan0) { case (d, (phys, logical)) =>
+    val scan1 = m.renames.foldLeft(scan0) { case (d, (phys, logical)) =>
       if (d.columns.contains(phys)) d.withColumnRenamed(phys, logical) else d
     }
     val withDv = entries.filter(_.dvs.nonEmpty)
@@ -1567,17 +1515,17 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * (visible) names. Plain entries take the pruning [[scanManifest]];
     * entries carrying deletion vectors are read through [[scanWithPos]]
     * (row-position anti-join). */
-  private def readEntries(name: String, snap: Snapshot, entries: Seq[FileEntry]): DataFrame = {
-    val props = meta(name).properties
-    val lschema = logicalizeWith(props, snap.schema)
-    if (entries.isEmpty) emptyDf(lschema)
+  private def readEntries(name: String, m: TableMeta, snap: Snapshot,
+      entries: Seq[FileEntry]): DataFrame = {
+    val lschema = m.logicalize(snap.schema)
+    if (entries.isEmpty) emptyFrame(lschema)
     else {
       val (withDv, plain) = entries.partition(_.dvs.nonEmpty)
       val parts = Seq(
         if (plain.isEmpty) None
-        else Some(toLogical(props, snap.schema, scanManifest(name, snap, plain, props))),
+        else Some(toLogical(m, snap.schema, scanManifest(name, m, snap, plain))),
         if (withDv.isEmpty) None
-        else Some(scanWithPos(name, snap, withDv)
+        else Some(scanWithPos(name, m, snap, withDv)
           .select(lschema.fieldNames.map(col).toSeq: _*))).flatten
       parts.reduce(_ unionByName _)
     }
@@ -1630,8 +1578,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * bloom every file survives, which is correct, just not fast. */
   private[graft] def readPointPruned(name: String, points: DataFrame,
       cols: Seq[String]): (DataFrame, (Int, Int)) = {
-    val snap = log.snapshot(name)
-    val boxCand = boxPointCandidates(name, snap, points, cols)
+    val (m, snap) = (log.meta(name), log.snapshot(name))
+    val boxCand = boxPointCandidates(m, snap, points, cols)
     // blooms refine the box survivors UNCONDITIONALLY (not only when the
     // boxes pruned nothing): on a mixed layout — a few narrow-box files
     // among many full-range hash-key files — the box stage prunes a
@@ -1641,13 +1589,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // hash once per physical type, and the probe's distinct key set is
     // driver-capped inside bloomRefineSet (over-cap probes fall through
     // to the box result).
-    val cand = bloomRefineSet(name, boxCand, points, cols)
-    (readEntries(name, snap, cand), (cand.size, snap.entries.size))
+    val cand = bloomRefineSet(name, m, boxCand, points, cols)
+    (readEntries(name, m, snap, cand), (cand.size, snap.entries.size))
   }
 
   /** [min, max]-box stage of [[readPointPruned]]: the manifest files
     * whose per-column boxes admit at least one probe row. */
-  private def boxPointCandidates(name: String, snap: Snapshot,
+  private def boxPointCandidates(m: TableMeta, snap: Snapshot,
       points: DataFrame, cols: Seq[String]): Seq[FileEntry] = {
     val entries = snap.entries
     val total = entries.size
@@ -1656,9 +1604,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // distinct + a broadcast stats join + a collect): scan it. The cut
     // only matters at many-file scale, where it is a rounding error.
     if (total <= 8) return full
-    val rn = renames(name)
-    def statsOf(e: FileEntry) = rekeyed(e.stats, rn)
-    val lschema = logicalizeSchema(name, snap.schema)
+    def statsOf(e: FileEntry) = rekeyed(e.stats, m.renames)
+    val lschema = m.logicalize(snap.schema)
     // numeric cols compare after a cast of the stat string; string cols
     // compare directly — Spark's string ordering is unsigned byte-wise,
     // the same order the footer stats were computed under (see cmp)
@@ -1725,17 +1672,15 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * never the reverse). Missing blooms, over-cap probes, non-indexed
     * probes and unreconstructable values all keep every candidate,
     * exactly like [[bloomRefine]]. */
-  private def bloomRefineSet(name: String, cand: Seq[FileEntry],
+  private def bloomRefineSet(name: String, m: TableMeta, cand: Seq[FileEntry],
       points: DataFrame, cols: Seq[String]): Seq[FileEntry] = {
     if (cand.size <= 1) return cand
-    val c = cols.find(c0 =>
-      bloomIndexCols(name).exists(_.equalsIgnoreCase(c0)))
-      .getOrElse(return cand)
+    val c = cols.find(c0 => m.bloomCols.exists(_.equalsIgnoreCase(c0))).getOrElse(return cand)
     val keys = points.select(col(c).cast("string")).na.drop()
       .distinct().limit(BloomProbeCap + 1)
       .collect().map(_.getString(0))
     if (keys.length > BloomProbeCap) return cand
-    val phys = { val rev = renames(name).map(_.swap); rev.getOrElse(c, c) }
+    val phys = m.physicalName(c)
     // the parquet block-split bloom hash is value-only (XxHash of the
     // plain encoding) — hash each key ONCE per physical-type signature
     // and reuse across every file/row group of that type
@@ -1768,7 +1713,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     readAll(name, log.stagedSnapshot(name, version))
 
   private def readAll(name: String, snap: Snapshot): DataFrame =
-    readEntries(name, snap, snap.entries)
+    readEntries(name, log.meta(name), snap, snap.entries)
 
   /** Row-level change feed between two retained versions (Delta CDF
     * shape): `_change_type` = `insert` for rows present in `toVersion` but
@@ -1787,7 +1732,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // a file whose DVs changed is re-read on both sides, and its unchanged
     // rows cancel in exceptAll
     val (added, removed) = entryDiff(sa.entries, sb.entries)
-    val (onlyA, onlyB) = (readEntries(name, sa, removed), readEntries(name, sb, added))
+    val m = log.meta(name)
+    val (onlyA, onlyB) = (readEntries(name, m, sa, removed), readEntries(name, m, sb, added))
     import org.apache.spark.sql.functions.lit
     onlyB.exceptAll(onlyA).withColumn("_change_type", lit("insert"))
       .unionByName(onlyA.exceptAll(onlyB).withColumn("_change_type", lit("delete")))
@@ -1835,7 +1781,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         s"$name: changeFeed($fromVersion, $toVersion] includes version $v, " +
           "which has been vacuumed — its changes cannot be replayed; start " +
           "the feed at a retained version or rebuild the consumer"))
-    val all = versions(name)
+    val (m, all) = (log.meta(name), versions(name))
     // each manifest is parsed at most once: a version's snapshot also
     // serves as the next version's predecessor, and a version with a
     // change-feed sidecar needs none
@@ -1853,7 +1799,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       } else if (layoutOnly.exists(op.startsWith)) None
       else if (prevOpt.isEmpty) {
         if (v == 1) // table creation: everything is an insert
-          Some(vcol(readEntries(name, cur, cur.entries)
+          Some(vcol(readEntries(name, m, cur, cur.entries)
             .withColumn("_change_type", lit("insert"))))
         else throw new IllegalStateException(
           s"$name: version $v's predecessor was vacuumed — its changes " +
@@ -1862,7 +1808,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         val prev = at(prevOpt.get)
         val (added, removed) = entryDiff(prev.entries, cur.entries)
         if (removed.isEmpty)
-          Some(vcol(readEntries(name, cur, added)
+          Some(vcol(readEntries(name, m, cur, added)
             .withColumn("_change_type", lit("insert"))))
         else if (((op == "write" || op == "txn_write") &&
               added.size == cur.entries.size && removed.size == prev.entries.size) ||
@@ -1875,9 +1821,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           // intermediate OPTIMIZE moved between files emits as a
           // delete+insert pair, which nets to zero under the multiset
           // semantics every feed consumer (MV refresh included) applies
-          Some(vcol(readEntries(name, prev, removed)
+          Some(vcol(readEntries(name, m, prev, removed)
             .withColumn("_change_type", lit("delete"))
-            .unionByName(readEntries(name, cur, added)
+            .unionByName(readEntries(name, m, cur, added)
               .withColumn("_change_type", lit("insert")), allowMissingColumns = true)))
         } else throw new IllegalStateException(
           s"$name version $v (op $op) rewrote files but recorded no change data — " +
@@ -1888,7 +1834,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse {
         val live = version(name).fold(log.snapshot(name))(at)
-        emptyDf(logicalizeSchema(name, live.schema)
+        emptyFrame(m.logicalize(live.schema)
           .add("_change_type", StringType).add("_commit_version", IntegerType))
       }
   }
@@ -1900,7 +1846,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   private[graft] def prunedInventory(name: String, pred: Option[Column])
       : Seq[(String, Long, Boolean, Long)] = {
     val snap = log.snapshot(name)
-    val kept = pred.map(p => pruneEntries(name, snap.schema, snap.entries, p))
+    val kept = pred.map(pruneEntries(name, log.meta(name), snap.schema, snap.entries, _))
       .getOrElse(snap.entries)
     kept.map { e =>
       val abs = absPath(name, e.rel)
@@ -2016,7 +1962,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val snap = log.snapshot(name)
     // collide against BOTH name spaces: visible logical names and on-disk
     // physical names (incl. renamed/dropped columns still in old files)
-    val taken = snap.schema.fieldNames ++ logicalizeSchema(name, snap.schema).fieldNames
+    val taken = snap.schema.fieldNames ++ log.meta(name).logicalize(snap.schema).fieldNames
     val dup = cols.fieldNames.filter(c => taken.exists(_.equalsIgnoreCase(c)))
     require(dup.isEmpty, s"$name ADD COLUMNS: column(s) already exist: ${dup.mkString(", ")}")
     commitManifestOnly(name, snap.copy(schema = StructType(snap.schema.fields ++ cols.fields)),
@@ -2041,88 +1987,30 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   // both translation maps injective and makes translating an
   // already-physical name a safe no-op.
 
-  /** physical → logical renames currently in force. */
-  private def renames(name: String): Map[String, String] = renamesOf(meta(name).properties)
-
-  private def renamesOf(props: Map[String, String]): Map[String, String] =
-    props.collect {
-      case (k, v) if k.startsWith("colmap.") => k.stripPrefix("colmap.") -> v
-    }
-
-  /** physical names of dropped columns (still present in old files). */
-  private def droppedOf(props: Map[String, String]): Set[String] =
-    props.keysIterator
-      .filter(_.startsWith("coldrop.")).map(_.stripPrefix("coldrop.")).toSet
-
-  /** Whether any RENAME mapping is in force. Drop-only mapped tables keep
-    * every visible name equal to its physical name, so pushed filters
-    * (which speak logical names) remain valid against the files — only
-    * renames force the DSv2 scan to skip row-group filter pushdown. */
-  private[graft] def hasRenames(name: String): Boolean = renames(name).nonEmpty
-
-  /** The logical (visible) view of a physical manifest schema. */
-  private[graft] def logicalizeSchema(name: String, physical: StructType): StructType =
-    logicalizeWith(meta(name).properties, physical)
-
-  private def logicalizeWith(props: Map[String, String], physical: StructType): StructType = {
-    val rn = renamesOf(props); val dp = droppedOf(props)
-    if (rn.isEmpty && dp.isEmpty) physical
-    else StructType(physical.fields.toSeq.filterNot(f => dp(f.name))
-      .map(f => f.copy(name = rn.getOrElse(f.name, f.name))))
-  }
-
-  /** Rename a logical schema's fields back to their physical names
-    * (positions and types untouched) — what a file reader must ask the
-    * parquet files for. */
-  private[graft] def physicalizeSchema(name: String, logical: StructType): StructType = {
-    val rev = renames(name).map(_.swap)
-    if (rev.isEmpty) logical
-    else StructType(logical.fields.toSeq.map(f => f.copy(name = rev.getOrElse(f.name, f.name))))
-  }
-
   /** Project a physical-named frame to the logical view (drops dropped
     * columns, renames renamed ones). Field order follows the manifest. */
-  private def toLogical(props: Map[String, String], schema: StructType,
-      df: DataFrame): DataFrame = {
-    val rn = renamesOf(props); val dp = droppedOf(props)
-    if (rn.isEmpty && dp.isEmpty) df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    else df.select(schema.fields.toSeq.filterNot(f => dp(f.name))
-      .map(f => col(f.name).as(rn.getOrElse(f.name, f.name))): _*)
-  }
-
-  /** Rename a logical-named frame's columns to physical for writing;
-    * names without a mapping entry (including genuinely new columns)
-    * pass through. */
-  private def toPhysicalDf(name: String, df: DataFrame): DataFrame = {
-    val rev = renames(name).map(_.swap)
-    if (rev.isEmpty) df
-    else df.select(df.columns.toSeq.map(c => col(c).as(rev.getOrElse(c, c))): _*)
-  }
-
-  private def physicalName(name: String, logical: String): String = {
-    val rev = renames(name).map(_.swap)
-    rev.getOrElse(logical,
-      rev.find(_._1.equalsIgnoreCase(logical)).map(_._2).getOrElse(logical))
-  }
+  private def toLogical(m: TableMeta, schema: StructType, df: DataFrame): DataFrame =
+    if (m.renames.isEmpty && m.dropped.isEmpty) df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    else df.select(schema.fields.toSeq.filterNot(f => m.dropped(f.name))
+      .map(f => col(f.name).as(m.logicalName(f.name))): _*)
 
   /** Columns a rename/drop must not touch: CHECK constraint conditions and
     * the recorded primary key reference columns by bare text. */
-  private def referencedInMeta(name: String, colName: String): Option[String] = {
+  private def referencedInMeta(m: TableMeta, colName: String): Option[String] = {
     val word = java.util.regex.Pattern.compile(
       "(?i)\\b" + java.util.regex.Pattern.quote(colName) + "\\b")
-    val pk = meta(name).properties.get("primary_key").toSeq
-      .flatMap(_.split(',')).map(_.trim)
+    val pk = m.primaryKey.toSeq.flatMap(_.split(',')).map(_.trim)
     if (pk.exists(_.equalsIgnoreCase(colName))) Some("primary key")
-    else checkConstraints(name).collectFirst {
+    else m.checks.collectFirst {
       case (cname, sql) if word.matcher(sql).find() => s"CHECK constraint $cname"
-    }.orElse(generatedColumns(name).collectFirst {
+    }.orElse(m.generatedColumns.collectFirst {
       case (gcol, sql) if word.matcher(sql).find() =>
         s"generated column $gcol's expression"
-    }).orElse(foreignKeys(name).collectFirst {
+    }).orElse(m.foreignKeys.collectFirst {
       case (cname, (cols, _, _)) if cols.exists(_.equalsIgnoreCase(colName)) =>
         s"FOREIGN KEY $cname"
     }).orElse(
-      if (bloomIndexCols(name).exists(_.equalsIgnoreCase(colName)))
+      if (m.bloomCols.exists(_.equalsIgnoreCase(colName)))
         Some("bloom filter index") else None)
   }
 
@@ -2138,27 +2026,27 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * a manifest-only commit for DESCRIBE HISTORY. */
   def renameColumn(name: String, from: String, to: String): Unit = {
     val snap = log.snapshot(name)
-    val schema = snap.schema
-    val visible = logicalizeSchema(name, schema)
-    val field = visibleField(name, visible, from, "RENAME COLUMN")
-    val physical = physicalName(name, field.name)
-    referencedInMeta(name, field.name).foreach(ref => throw new IllegalArgumentException(
-      s"$name RENAME COLUMN $from: referenced by $ref — drop/re-add it around the rename"))
-    require(!visible.fieldNames.exists(v => v.equalsIgnoreCase(to) && v != field.name),
-      s"$name RENAME COLUMN: target name $to already exists")
-    require(to.equalsIgnoreCase(physical) ||
-      !schema.fieldNames.exists(_.equalsIgnoreCase(to)),
-      s"$name RENAME COLUMN: $to is the on-disk (physical) name of another column — " +
-        "name-based column mapping cannot reuse physical names; pick a fresh name")
-    val m = meta(name)
-    val props =
-      if (to == physical) m.properties - s"colmap.$physical"
-      else m.properties + (s"colmap.$physical" -> to)
-    val comments = m.columnComments.get(field.name) match {
-      case Some(c) => m.columnComments - field.name + (to -> c)
-      case None => m.columnComments
+    log.updateMeta(name) { m =>
+      val visible = m.logicalize(snap.schema)
+      val field = visibleField(name, visible, from, "RENAME COLUMN")
+      val physical = m.physicalName(field.name)
+      referencedInMeta(m, field.name).foreach(ref => throw new IllegalArgumentException(
+        s"$name RENAME COLUMN $from: referenced by $ref — drop/re-add it around the rename"))
+      require(!visible.fieldNames.exists(v => v.equalsIgnoreCase(to) && v != field.name),
+        s"$name RENAME COLUMN: target name $to already exists")
+      require(to.equalsIgnoreCase(physical) ||
+        !snap.schema.fieldNames.exists(_.equalsIgnoreCase(to)),
+        s"$name RENAME COLUMN: $to is the on-disk (physical) name of another column — " +
+          "name-based column mapping cannot reuse physical names; pick a fresh name")
+      val props =
+        if (to == physical) m.properties - (Key.ColMap + physical)
+        else m.properties + (Key.ColMap + physical -> to)
+      val comments = m.columnComments.get(field.name) match {
+        case Some(c) => m.columnComments - field.name + (to -> c)
+        case None => m.columnComments
+      }
+      m.copy(properties = props, columnComments = comments)
     }
-    setMeta(name, m.copy(properties = props, columnComments = comments))
     commitManifestOnly(name, snap, "rename_column", Some(snap.version))
   }
 
@@ -2167,25 +2055,24 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * simply omit it. */
   def dropColumn(name: String, colName: String): Unit = {
     val snap = log.snapshot(name)
-    val visible = logicalizeSchema(name, snap.schema)
-    val field = visibleField(name, visible, colName, "DROP COLUMN")
-    require(visible.fields.length > 1, s"$name DROP COLUMN: cannot drop the only column")
-    val physical = physicalName(name, field.name)
-    referencedInMeta(name, field.name).foreach(ref => throw new IllegalArgumentException(
-      s"$name DROP COLUMN $colName: referenced by $ref — drop it first"))
-    require(!(snap.layout.partitionBy ++ snap.layout.sortWithin)
-        .exists(_.equalsIgnoreCase(physical)),
-      s"$name DROP COLUMN $colName: the table is partitioned/sorted by it — " +
-        "rewrite the layout (createOrReplace) instead")
-    val m = meta(name)
-    // a generated column's declaration dies with the column — removed
-    // HERE, in the DDL that invalidates it, not lazily during some later
-    // write's plan building (which could lose it on an aborted write)
-    setMeta(name, m.copy(
-      properties = m.properties - s"colmap.$physical" - s"gencol.$physical" -
-        s"notnull.$physical" - s"coldefault.$physical" +
-        (s"coldrop.$physical" -> "1"),
-      columnComments = m.columnComments - field.name))
+    log.updateMeta(name) { m =>
+      val visible = m.logicalize(snap.schema)
+      val field = visibleField(name, visible, colName, "DROP COLUMN")
+      require(visible.fields.length > 1, s"$name DROP COLUMN: cannot drop the only column")
+      val physical = m.physicalName(field.name)
+      referencedInMeta(m, field.name).foreach(ref => throw new IllegalArgumentException(
+        s"$name DROP COLUMN $colName: referenced by $ref — drop it first"))
+      require(!(snap.layout.partitionBy ++ snap.layout.sortWithin)
+          .exists(_.equalsIgnoreCase(physical)),
+        s"$name DROP COLUMN $colName: the table is partitioned/sorted by it — " +
+          "rewrite the layout (createOrReplace) instead")
+      // a generated column's declaration dies with the column — removed
+      // HERE, in the DDL that invalidates it, not lazily during some later
+      // write's plan building (which could lose it on an aborted write)
+      m.copy(properties = m.properties -- Seq(Key.ColMap, Key.GenCol, Key.NotNull,
+          Key.ColDefault).map(_ + physical) + (Key.ColDrop + physical -> "1"),
+        columnComments = m.columnComments - field.name)
+    }
     commitManifestOnly(name, snap, "drop_column", Some(snap.version))
   }
 
@@ -2203,24 +2090,19 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * the next write touches them — backfill explicitly with
     * `UPDATE t SET c = <expr>` (file-pruned) or a rewrite. */
   def setGeneratedColumn(name: String, colName: String, exprSql: String): Unit = {
-    val visible = logicalizeSchema(name, log.snapshot(name).schema)
-    val field = visibleField(name, visible, colName, "GENERATED COLUMN")
-    val word = java.util.regex.Pattern.compile(
-      "(?i)\\b" + java.util.regex.Pattern.quote(field.name) + "\\b")
-    require(!word.matcher(exprSql).find(),
-      s"$name GENERATED COLUMN $colName: expression must not reference the column itself")
-    log.updateProperties(name)(_ + (s"gencol.${physicalName(name, field.name)}" -> exprSql))
+    val schema = log.snapshot(name).schema
+    log.updateMeta(name) { m =>
+      val field = visibleField(name, m.logicalize(schema), colName, "GENERATED COLUMN")
+      val word = java.util.regex.Pattern.compile(
+        "(?i)\\b" + java.util.regex.Pattern.quote(field.name) + "\\b")
+      require(!word.matcher(exprSql).find(),
+        s"$name GENERATED COLUMN $colName: expression must not reference the column itself")
+      m.withProperties(_ + (Key.GenCol + m.physicalName(field.name) -> exprSql))
+    }
   }
 
   /** Generation expressions currently declared: logical column → SQL. */
-  def generatedColumns(name: String): Map[String, String] = {
-    val rn = renames(name)
-    meta(name).properties.collect {
-      case (k, v) if k.startsWith("gencol.") =>
-        val phys = k.stripPrefix("gencol.")
-        rn.getOrElse(phys, phys) -> v
-    }
-  }
+  def generatedColumns(name: String): Map[String, String] = log.meta(name).generatedColumns
 
   /** Recompute every generated column over a logical-named frame about to
     * be written; value type pins to the declared schema type. A frame
@@ -2229,21 +2111,18 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * failing the write — the new schema wins, like createOrReplace wins
     * over any other stale metadata. `schema` is the physical schema the
     * write commits under, when the caller already read it. */
-  private def applyGeneratedColumns(name: String, df: DataFrame,
+  private def applyGeneratedColumns(name: String, m: TableMeta, df: DataFrame,
       schema: Option[StructType]): DataFrame = {
-    val gens = generatedColumns(name)
+    val gens = m.generatedColumns
     if (gens.isEmpty || (schema.isEmpty && !exists(name))) df
     else {
-      val visible = logicalizeSchema(name, schema.getOrElse(log.snapshot(name).schema))
+      val visible = m.logicalize(schema.getOrElse(log.snapshot(name).schema))
       gens.foldLeft(df) { case (d, (logical, sql)) =>
         val declared = visible.fields.find(_.name.equalsIgnoreCase(logical))
-        import org.apache.spark.sql.functions.expr
-        val deps = org.apache.spark.sql.GraftShims.catalystExpr(expr(sql)).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.nameParts.last
-        }
-        val depsPresent = deps.forall(n => d.columns.exists(_.equalsIgnoreCase(n)))
+        val depsPresent = sqlColumns(sql).forall(n => d.columns.exists(_.equalsIgnoreCase(n)))
         declared match {
-          case Some(f) if depsPresent => d.withColumn(f.name, expr(sql).cast(f.dataType))
+          case Some(f) if depsPresent =>
+            d.withColumn(f.name, org.apache.spark.sql.functions.expr(sql).cast(f.dataType))
           // dangling declaration (shouldn't happen: dropColumn removes the
           // declaration with the column, and dependency drops/renames are
           // refused) — skip WITHOUT mutating metadata: plan building must
@@ -2269,39 +2148,30 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * failed commit may burn a key range but never double-issues. */
   def setIdentity(name: String, colName: String, start: Long = 1L, step: Long = 1L): Unit = {
     require(step != 0, "identity step must be non-zero")
-    val visible = logicalizeSchema(name, log.snapshot(name).schema)
-    val field = visibleField(name, visible, colName, "IDENTITY")
-    require(field.dataType == org.apache.spark.sql.types.LongType,
-      s"$name IDENTITY $colName: need BIGINT, got ${field.dataType.catalogString}")
-    log.updateProperties(name)(_ +
-      (s"identity.${physicalName(name, field.name)}" -> s"$start,$step,0"))
+    val schema = log.snapshot(name).schema
+    log.updateMeta(name) { m =>
+      val field = visibleField(name, m.logicalize(schema), colName, "IDENTITY")
+      require(field.dataType == org.apache.spark.sql.types.LongType,
+        s"$name IDENTITY $colName: need BIGINT, got ${field.dataType.catalogString}")
+      m.withProperties(_ + (Key.Identity + m.physicalName(field.name) -> s"$start,$step,0"))
+    }
   }
 
   /** The identity declaration, if any: (logical col, start, step, issued). */
-  def identityColumn(name: String): Option[(String, Long, Long, Long)] = {
-    val rn = renames(name)
-    meta(name).properties.collectFirst {
-      case (k, v) if k.startsWith("identity.") =>
-        val Array(start, step, issued) = v.split(',')
-        (rn.getOrElse(k.stripPrefix("identity."), k.stripPrefix("identity.")),
-          start.toLong, step.toLong, issued.toLong)
-    }
-  }
+  def identityColumn(name: String): Option[(String, Long, Long, Long)] = log.meta(name).identity
 
   /** Assign identity keys to an appended frame that omits the column.
     * Returns the keyed frame plus a cleanup to run once it is written.
     *
     * Concurrency + determinism: the input RDD is cached so the row set
-    * that is COUNTED is the row set that is KEYED and written (a
-    * nondeterministic source cannot diverge between the jobs), and the
-    * high-water advance is a read-modify-write UNDER the table's commit
-    * lock — concurrent appends serialize on the claim and receive
-    * disjoint key blocks. A commit that subsequently fails burns its
-    * claimed range (keys skip) but can never double-issue. */
-  private def applyIdentity(name: String, df: DataFrame): (DataFrame, () => Unit) =
-    identityColumn(name) match {
+    * that is COUNTED is the row set that is KEYED and written, and the
+    * high-water advance is one locked [[TableLog.updateMeta]]: concurrent
+    * appends receive disjoint key blocks. A commit that subsequently fails
+    * burns its claimed range (keys skip) but can never double-issue. */
+  private def applyIdentity(name: String, m: TableMeta, df: DataFrame): (DataFrame, () => Unit) =
+    m.identity match {
       case None => (df, () => ())
-      case Some((colName, start, step, _)) =>
+      case Some((colName, _, _, _)) =>
         require(!df.columns.exists(_.equalsIgnoreCase(colName)),
           s"$name: $colName is GENERATED ALWAYS AS IDENTITY — explicit values " +
             "are not accepted; omit the column")
@@ -2317,13 +2187,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           it => Iterator.single(it.size.toLong), preservesPartitioning = true).collect()
         val n = partCounts.sum
         val offsets = partCounts.scanLeft(0L)(_ + _)
-        val issued = log.withCommitLock(name) {
-          // re-read under the lock: another append may have claimed since
-          val cur = identityColumn(name).get._4
-          log.updateProperties(name)(_ +
-            (s"identity.${physicalName(name, colName)}" -> s"$start,$step,${cur + n}"))
-          cur
-        }
+        val (_, start, step, issued) = log.updateMeta(name)(_.claimIdentity(n)).identity.get
         val counted = rdd.mapPartitionsWithIndex { case (pi, it) =>
           var idx = offsets(pi)
           it.map { row =>
@@ -2355,8 +2219,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // The streaming high-water marker does NOT: it certifies batches
     // committed to the SOURCE's sink, and inheriting it would make a new
     // sink on the clone silently skip those batch ids.
-    val m = meta(src)
-    setMeta(dst, m.copy(properties = m.properties - "stream_high_water"))
+    log.setMeta(dst, log.meta(src).withProperties(_ - Key.StreamHighWater))
   }
 
   /** Delta DEEP CLONE: an independent physical copy of `src`'s CURRENT
@@ -2397,8 +2260,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           entries = snap.entries.map(e => e.copy(rel = moved(e.rel), dvs = e.dvs.map(moved)))))
         true
       }
-      val m = meta(src)
-      setMeta(dst, m.copy(properties = m.properties - "stream_high_water"))
+      log.setMeta(dst, log.meta(src).withProperties(_ - Key.StreamHighWater))
     } catch {
       case t: Throwable =>
         deleteTree(dstDir)
@@ -2414,7 +2276,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val snap = log.snapshot(name)
     val pbPhys = snap.layout.partitionBy
     require(pbPhys.nonEmpty, s"SHOW PARTITIONS $name: table is not partitioned")
-    val pb = logicalNames(name, pbPhys)
+    val m = log.meta(name)
+    val pb = pbPhys.map(m.logicalName)
     snap.entries.map { e =>
       pb.zip(pbPhys).map { case (lc, pc) =>
         s"$lc=${e.stats.get(pc).map(_.min).getOrElse("__HIVE_DEFAULT_PARTITION__")}"
@@ -2450,17 +2313,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     *    clean files.
     */
   def setDmlMode(name: String, mode: String): Unit = {
-    TableStore.checkKnob(name, "dml_mode", mode)
-    log.updateProperties(name)(_ + ("dml_mode" -> mode))
+    checkKnob(name, Key.DmlMode, mode)
+    log.updateProperties(name)(_ + (Key.DmlMode -> mode))
   }
 
-  private def dmlMode(name: String): String =
-    meta(name).properties.getOrElse("dml_mode", "cow")
-
   // ------------------------------------------------------------ row tracking
-
-  private def rowTrackingEnabled(name: String): Boolean =
-    meta(name).properties.get("rowtracking").contains("true")
 
   /** Delta row tracking: give every row a STABLE id that survives
     * copy-on-write rewrites, deletion-vector deletes, OPTIMIZE and MERGE.
@@ -2472,39 +2329,40 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * coalesce(materialized, base + position). Enabling backfills the
     * current snapshot with one metadata-only commit. */
   def enableRowTracking(name: String): Unit = {
-    if (rowTrackingEnabled(name)) return
+    if (log.meta(name).rowTracking) return
     val snap = log.snapshot(name)
     require(snap.entries.forall(_.rows >= 0),
       s"enable row tracking on $name: some files predate footer row counts — " +
         "run OPTIMIZE first")
-    log.updateProperties(name)(_ + ("rowtracking" -> "true"))
+    log.updateProperties(name)(_ + (Key.RowTracking -> "true"))
     commitManifestOnly(name, snap, "enable_row_tracking", Some(snap.version))
   }
 
   /** The table with a stable `_row_id` column. Requires
     * [[enableRowTracking]]. */
   def readWithRowIds(name: String): DataFrame = {
-    require(rowTrackingEnabled(name), s"$name: row tracking is not enabled")
-    val snap = log.snapshot(name)
-    rowIdRead(name, snap, snap.entries, "_row_id")
+    val (m, snap) = (log.meta(name), log.snapshot(name))
+    require(m.rowTracking, s"$name: row tracking is not enabled")
+    rowIdRead(name, m, snap, snap.entries, "_row_id")
   }
 
   /** Read `entries` for a REWRITE: like [[readEntries]], but when the
     * table tracks row ids the frame additionally carries the hidden
     * materialized-id column, so the rewrite's output files preserve each
     * surviving row's id physically. */
-  private def rewriteSource(name: String, snap: Snapshot, entries: Seq[FileEntry]): DataFrame =
-    if (!rowTrackingEnabled(name)) readEntries(name, snap, entries)
-    else rowIdRead(name, snap, entries, TableStore.RowIdCol)
+  private def rewriteSource(name: String, m: TableMeta, snap: Snapshot,
+      entries: Seq[FileEntry]): DataFrame =
+    if (!m.rowTracking) readEntries(name, m, snap, entries)
+    else rowIdRead(name, m, snap, entries, TableStore.RowIdCol)
 
   /** Logical view of `entries` plus `outCol` = each row's current id —
     * [[posScanWithIds]]' id column under the name the caller wants. Row
     * tracking must be on. */
-  private def rowIdRead(name: String, snap: Snapshot, entries: Seq[FileEntry],
+  private def rowIdRead(name: String, m: TableMeta, snap: Snapshot, entries: Seq[FileEntry],
       outCol: String): DataFrame = {
-    val lschema = logicalizeSchema(name, snap.schema)
-    if (entries.isEmpty) emptyDf(lschema.add(outCol, LongType, nullable = true))
-    else posScanWithIds(name, snap, entries)
+    val lschema = m.logicalize(snap.schema)
+    if (entries.isEmpty) emptyFrame(lschema.add(outCol, LongType, nullable = true))
+    else posScanWithIds(name, m, snap, entries)
       .select(lschema.fieldNames.toSeq.map(col) :+ col(TableStore.RowIdCol).as(outCol): _*)
   }
 
@@ -2515,8 +2373,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** Give brand-new rows a NULL materialized id alongside rewritten rows
     * that carry one, so the union writes one coherent file schema; the
     * NULL resolves to the new file's base + position at read time. */
-  private def withNullRowId(name: String, df: DataFrame): DataFrame =
-    if (!rowTrackingEnabled(name) || df.columns.contains(TableStore.RowIdCol)) df
+  private def withNullRowId(m: TableMeta, df: DataFrame): DataFrame =
+    if (!m.rowTracking || df.columns.contains(TableStore.RowIdCol)) df
     else df.withColumn(TableStore.RowIdCol, lit(null).cast(LongType))
 
   /** Enable the row-level change feed (Delta's
@@ -2530,10 +2388,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * with [[changeFeed]] or stream it via the `graft-table` source's
     * `changeFeed=true` option. */
   def enableChangeFeed(name: String): Unit =
-    log.updateProperties(name)(_ + ("cdf" -> "true"))
-
-  private def cdfEnabled(name: String): Boolean =
-    meta(name).properties.get("cdf").contains("true")
+    log.updateProperties(name)(_ + (Key.Cdf -> "true"))
 
   private def cdcDir(name: String, version: Int): Path =
     log.tableDir(name).resolve(s"v_$version").resolve("cdc")
@@ -2546,9 +2401,10 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * of the (file, base) manifest map. The scan every merge-on-read
     * rewrite reads (an appended post-image must preserve the row id it
     * replaces), and under [[rowIdRead]] every copy-on-write one. */
-  private def posScanWithIds(name: String, snap: Snapshot, entries: Seq[FileEntry]): DataFrame = {
-    val tracking = rowTrackingEnabled(name)
-    val s0 = scanWithPos(name,
+  private def posScanWithIds(name: String, m: TableMeta, snap: Snapshot,
+      entries: Seq[FileEntry]): DataFrame = {
+    val tracking = m.rowTracking
+    val s0 = scanWithPos(name, m,
       if (!tracking) snap
       else snap.copy(schema = snap.schema.add(TableStore.RowIdCol, LongType, nullable = true)),
       entries)
@@ -2571,15 +2427,15 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * and UPDATE appends the rewritten rows as new files through
     * [[stageVersion]] (so they follow the table layout). Existing data
     * files are never modified or rewritten. */
-  private def commitMorDml(name: String, snap: Snapshot, cond: Column,
+  private def commitMorDml(name: String, m: TableMeta, snap: Snapshot, cond: Column,
       set: Option[Map[String, Column]], op: String): Unit = {
-    val candidates = pruneEntries(name, snap.schema, snap.entries, cond)
+    val candidates = pruneEntries(name, m, snap.schema, snap.entries, cond)
     if (candidates.isEmpty) return
     log.commit(name, Some(Some(snap.version))) { (next, dir) =>
-      val live = posScanWithIds(name, snap, candidates)
+      val live = posScanWithIds(name, m, snap, candidates)
       val (touched, carry) = writeDv(name, next, candidates, snap.entries, live.filter(cond))
       touched.nonEmpty && { // no matching rows: nothing to commit
-        val lschema = logicalizeSchema(name, snap.schema)
+        val lschema = m.logicalize(snap.schema)
         // one projection so every SET expression sees the PRE-image row
         // (see the copy-on-write update path for the fold hazard)
         val pre = live.filter(cond)
@@ -2592,13 +2448,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           case Some(s) =>
             // post-images keep the row id of the row they replace
             val updated = postImage(s,
-              if (rowTrackingEnabled(name)) Seq(pre(TableStore.RowIdCol)) else Nil)
-            stageVersion(name, next, dir, updated, snap.layout, carry, Some(snap.schema), op)
+              if (m.rowTracking) Seq(pre(TableStore.RowIdCol)) else Nil)
+            stageVersion(name, m, next, dir, updated, snap.layout, carry, Some(snap.schema), op)
         }
         // change feed: the DV'd rows are the pre-images; an update's
         // appended rewrite is the post-image set (deterministic re-derive
         // of the same `live.filter(cond)` rows the DV captured)
-        if (cdfEnabled(name)) {
+        if (m.cdf) {
           val preImg = pre.select(lschema.fieldNames.map(col).toSeq: _*)
           val cdcDf = set match {
             case None => preImg.withColumn("_change_type", lit("delete"))
@@ -2642,14 +2498,15 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * `cond` — the copy-on-write discovery pass. Stats-pruned first, so a
     * selective predicate over a sorted/partitioned table scans only the
     * candidate files it could possibly touch. */
-  private def touchedFiles(name: String, snap: Snapshot, cond: Column): Set[String] = {
-    val candidates = pruneEntries(name, snap.schema, snap.entries, cond)
+  private def touchedFiles(name: String, m: TableMeta, snap: Snapshot,
+      cond: Column): Set[String] = {
+    val candidates = pruneEntries(name, m, snap.schema, snap.entries, cond)
     if (candidates.isEmpty) Set.empty
     // scanWithPos (not readEntries + input_file_name): the DV-applied read
     // is a UNION of plain and anti-joined branches, where
     // input_file_name() is undefined — the scan's own __graft_file column
     // is the per-branch file identity
-    else scanWithPos(name, snap, candidates)
+    else scanWithPos(name, m, snap, candidates)
       .filter(cond)
       .select(col("__graft_file")).distinct()
       .collect().map(r => relOf(name, r.getString(0))).toSet
@@ -2669,7 +2526,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * None when the source has no non-null value for some key — no row
     * can possibly match, because `t.k = s.k` is never true against an
     * all-NULL side. */
-  private def mergeCandidates(name: String, snap: Snapshot, source: DataFrame,
+  private def mergeCandidates(name: String, m: TableMeta, snap: Snapshot, source: DataFrame,
       held: Option[HeldSource], keys: Seq[String]): Option[Seq[FileEntry]] = {
     val (schema, entries) = (snap.schema, snap.entries)
     // a 1-2 file table has nothing worth pruning — skip the source-stats
@@ -2680,7 +2537,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val MaxTuples = 128
     val stats = KeyStats.of(source, held, keys, MaxTuples)
     if (stats.box.isEmpty) return None
-    val boxed = pruneEntries(name, schema, entries, stats.box.get)
+    val boxed = pruneEntries(name, m, schema, entries, stats.box.get)
     if (boxed.size <= 2) return Some(boxed)
     // Refine: when the source has few distinct key tuples, prune per tuple.
     // A batch of scattered keys (updates at k=5,7 plus an insert at
@@ -2698,7 +2555,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         tuples.foreach { t =>
           if (remaining.nonEmpty) {
             val p = keys.zip(t).map { case (k, v) => col(k) === v }.reduce(_ && _)
-            val hit = pruneEntries(name, schema, remaining, p)
+            val hit = pruneEntries(name, m, schema, remaining, p)
             if (hit.nonEmpty) {
               keep ++= hit
               val rels = hit.map(_.rel).toSet
@@ -2721,17 +2578,17 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // (`SET ACCTBAL = 0` on column acctbal) otherwise silently left the
     // column untouched, and an unknown column silently no-opped instead
     // of erroring. Same r14 bug class as the INSERT column list.
-    val snap = log.snapshot(name)
-    val lschema = logicalizeSchema(name, snap.schema)
+    val (m, snap) = (log.meta(name), log.snapshot(name))
+    val lschema = m.logicalize(snap.schema)
     val set = MergeInto.normalizeSet(
       lschema.fieldNames.toSeq, set0,
       spark.conf.get("spark.sql.caseSensitive", "false").toBoolean,
       s"UPDATE $name SET")
-    if (dmlMode(name) == "mor") commitMorDml(name, snap, cond, Some(set), "update")
+    if (m.dmlMode == "mor") commitMorDml(name, m, snap, cond, Some(set), "update")
     else {
-      val touched = touchedFiles(name, snap, cond)
+      val touched = touchedFiles(name, m, snap, cond)
       if (touched.isEmpty) return // no matching rows anywhere — nothing to commit
-      val subset = rewriteSource(name, snap, snap.entries.filter(e => touched(e.rel)))
+      val subset = rewriteSource(name, m, snap, snap.entries.filter(e => touched(e.rel)))
       // SQL UPDATE semantics: every SET expression (and the WHERE) sees
       // the PRE-image row, so all assignments evaluate in ONE projection.
       // A sequential withColumn fold would let a later SET (or the
@@ -2742,7 +2599,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
             when(cond, v).otherwise(subset(c)).cast(lschema(c).dataType).as(c))
           .getOrElse(subset(c))
       }: _*)
-      val cdc = if (!cdfEnabled(name)) None else {
+      val cdc = if (!m.cdf) None else {
         val pre = dropRowIdCol(subset.filter(cond))
         val post = pre.select(pre.columns.toSeq.map { c =>
           set.get(c).map(_.cast(lschema(c).dataType).as(c)).getOrElse(pre(c))
@@ -2750,7 +2607,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         Some(pre.withColumn("_change_type", lit("update_preimage"))
           .unionByName(post.withColumn("_change_type", lit("update_postimage"))))
       }
-      commitVersion(name, updated, snap.layout,
+      commitVersion(name, m, updated, snap.layout,
         carryOver = snap.entries.filterNot(e => touched(e.rel)), schemaHint = Some(snap.schema),
         expectedBase = Some(Some(snap.version)), op = "update", cdc = cdc)
     }
@@ -2759,16 +2616,16 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** K6: DELETE FROM … WHERE — file-pruned copy-on-write, or a pure
     * deletion-vector commit in `mor` mode. */
   def delete(name: String, cond: Column): Unit = {
-    val snap = log.snapshot(name)
-    if (dmlMode(name) == "mor") commitMorDml(name, snap, cond, None, "delete")
+    val (m, snap) = (log.meta(name), log.snapshot(name))
+    if (m.dmlMode == "mor") commitMorDml(name, m, snap, cond, None, "delete")
     else {
-      val touched = touchedFiles(name, snap, cond)
+      val touched = touchedFiles(name, m, snap, cond)
       if (touched.isEmpty) return
-      val subset = rewriteSource(name, snap, snap.entries.filter(e => touched(e.rel)))
-      val cdc = if (!cdfEnabled(name)) None
+      val subset = rewriteSource(name, m, snap, snap.entries.filter(e => touched(e.rel)))
+      val cdc = if (!m.cdf) None
         else Some(dropRowIdCol(subset.filter(cond))
           .withColumn("_change_type", lit("delete")))
-      commitVersion(name, subset.filter(!cond || cond.isNull), snap.layout,
+      commitVersion(name, m, subset.filter(!cond || cond.isNull), snap.layout,
         carryOver = snap.entries.filterNot(e => touched(e.rel)), schemaHint = Some(snap.schema),
         expectedBase = Some(Some(snap.version)), op = "delete", cdc = cdc)
     }
@@ -2789,14 +2646,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * corruption, so it errors here instead. */
   def overwriteWhere(name: String, df: DataFrame, cond: Column,
       op: String = "replace_where"): Unit =
-    overwriteIn(name, log.snapshot(name), df, cond, op)
+    overwriteIn(name, log.meta(name), log.snapshot(name), df, cond, op)
 
-  /** [[overwriteWhere]] onto the snapshot the caller read. */
-  private def overwriteIn(name: String, snap: Snapshot, df: DataFrame, cond: Column,
-      op: String): Unit = {
-    val (keyed, cleanup) = applyIdentity(name, df)
+  /** [[overwriteWhere]] onto the metadata and snapshot the caller read. */
+  private def overwriteIn(name: String, m: TableMeta, snap: Snapshot, df: DataFrame,
+      cond: Column, op: String): Unit = {
+    val (keyed, cleanup) = applyIdentity(name, m, df)
     try {
-      val raw = alignedForAppend(name, snap.schema, keyed)
+      val raw = alignedForAppend(name, m, snap.schema, keyed)
       // constraint enforcement rides the write plan itself (the CHECK
       // pattern, [[enforceChecks]]): a row where cond is not true (false
       // OR null) raises DURING the single write job — no separate
@@ -2808,14 +2665,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
           lit(s"replaceWhere on $name: incoming rows do not all satisfy the " +
             "predicate — every inserted row must belong to the replaced region; row: "),
           to_json(struct(raw.columns.toSeq.map(col): _*)))).cast("boolean")))
-      val touched = touchedFiles(name, snap, cond)
-      val subset = rewriteSource(name, snap, snap.entries.filter(e => touched(e.rel)))
-      val cdc = if (!cdfEnabled(name)) None else
+      val touched = touchedFiles(name, m, snap, cond)
+      val subset = rewriteSource(name, m, snap, snap.entries.filter(e => touched(e.rel)))
+      val cdc = if (!m.cdf) None else
         Some(dropRowIdCol(subset.filter(cond))
           .withColumn("_change_type", lit("delete"))
           .unionByName(aligned.withColumn("_change_type", lit("insert"))))
-      commitVersion(name,
-        subset.filter(!cond || cond.isNull).unionByName(withNullRowId(name, aligned)),
+      commitVersion(name, m,
+        subset.filter(!cond || cond.isNull).unionByName(withNullRowId(m, aligned)),
         snap.layout, carryOver = snap.entries.filterNot(e => touched(e.rel)),
         schemaHint = Some(snap.schema), expectedBase = Some(Some(snap.version)), op = op,
         cdc = cdc)
@@ -2825,14 +2682,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** LOGICAL names of the table's declared partition columns (empty when
     * unpartitioned) — the manifest's layout records physical names;
     * callers speak the visible view. */
-  def partitionColumns(name: String): Seq[String] =
-    logicalNames(name, log.snapshot(name).layout.partitionBy)
+  def partitionColumns(name: String): Seq[String] = partitionColumns(name, log.meta(name))
 
-  /** Physical column names (a layout's) → the logical names in force. */
-  private def logicalNames(name: String, physical: Seq[String]): Seq[String] = {
-    val rn = renames(name)
-    physical.map(p => rn.getOrElse(p, p))
-  }
+  /** The live version's visible (logical) schema under metadata `m`. */
+  private[graft] def visibleSchema(name: String, m: TableMeta): StructType =
+    m.logicalize(log.snapshot(name).schema)
+
+  private[graft] def partitionColumns(name: String, m: TableMeta): Seq[String] =
+    log.snapshot(name).layout.partitionBy.map(m.logicalName)
 
   /** Spark's dynamic partition overwrite (`INSERT OVERWRITE … PARTITION
     * (p)`) for store tables: replaces exactly the partitions present in
@@ -2844,8 +2701,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * pruning confines the rewrite to those partitions' files. */
   def overwritePartitions(name: String, df: DataFrame,
       op: String = "overwrite_partitions"): Unit = {
-    val snap = log.snapshot(name)
-    val pb = logicalNames(name, snap.layout.partitionBy)
+    val (m, snap) = (log.meta(name), log.snapshot(name))
+    val pb = snap.layout.partitionBy.map(m.logicalName)
     require(pb.nonEmpty,
       s"overwritePartitions on $name: table is not partitioned — " +
         "use overwriteWhere or createOrReplace")
@@ -2857,7 +2714,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val cond = tuples.map(t => pb.zipWithIndex.map { case (c, i) =>
       col(c) <=> lit(t.get(i))
     }.reduce(_ && _)).reduce(_ || _)
-    overwriteIn(name, snap, df, cond, op)
+    overwriteIn(name, m, snap, df, cond, op)
   }
 
   /** K5: MERGE INTO applied to a stored table — file-pruned copy-on-write:
@@ -2935,7 +2792,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       schemaEvolution: Boolean,
       op: String,
       txn: Option[Txn]): (Int, Int) = {
-    val snap0 = log.snapshot(name)
+    val (m, snap0) = (log.meta(name), log.snapshot(name))
     val (schema0, entries) = (snap0.schema, snap0.entries)
     val held = HeldSource(source0)
     val source = held.map(_.df).getOrElse(source0)
@@ -2946,7 +2803,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val csFlag = spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
     val resolves: (String, String) => Boolean =
       if (csFlag) _ == _ else _.equalsIgnoreCase(_)
-    val lnames = logicalizeSchema(name, schema0).fieldNames.toSeq
+    val lnames = m.logicalize(schema0).fieldNames.toSeq
     val newCols =
       if (schemaEvolution)
         // a source column matching a VISIBLE (logical) name is the same
@@ -2989,7 +2846,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // vectors + appended post-images instead of rewriting files. An
     // insert-only merge stays on the shared path below — it is a pure
     // append in either mode.
-    val mor = dmlMode(name) == "mor" && !plan.insertOnly
+    val mor = m.dmlMode == "mor" && !plan.insertOnly
     require(!mor || txn.isEmpty,
       s"transactional MERGE into $name: mor-mode tables commit deletion " +
         "vectors in place and cannot stage — use copy-on-write (setDmlMode " +
@@ -3015,13 +2872,13 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val bsCond = plan.bySourceApplies
     // every file that can hold a target row equal on keys to a source row
     lazy val keyCand: Seq[FileEntry] =
-      mergeCandidates(name, snap, source, held, keys).getOrElse(Nil)
+      mergeCandidates(name, m, snap, source, held, keys).getOrElse(Nil)
     val cand: Seq[FileEntry] =
       if (plan.insertOnly) Nil // pure append
       else {
         val mCand: Seq[FileEntry] = if (plan.matched.isEmpty) Nil else keyCand
         val bsCand: Seq[FileEntry] =
-          bsCond.map(c => pruneEntries(name, schema, entries, c)).getOrElse(Nil)
+          bsCond.map(pruneEntries(name, m, schema, entries, _)).getOrElse(Nil)
         (mCand ++ bsCand).groupBy(_.rel).map(_._2.head).toSeq
       }
     // The insert anti-join needs only the files a source row can match,
@@ -3040,9 +2897,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // "collect stats on filter columns" guidance made automatic.
     val layoutCols = (pb ++ sw ++ sf0).map(_.toLowerCase)
     val layout = Layout(pb, sw, sf0 ++ keys.filterNot(k =>
-      layoutCols.contains(physicalName(name, k).toLowerCase)))
+      layoutCols.contains(m.physicalName(k).toLowerCase)))
     if (mor) {
-      commitMorMerge(name, source, plan, cand, insertScan, snap, layout, op)
+      commitMorMerge(name, m, source, plan, cand, insertScan, snap, layout, op)
       return (cand.size, entries.size)
     }
     val touched: Set[String] =
@@ -3053,7 +2910,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         // unmatched row the by-source clauses apply to) and rides the
         // multiple-match check (any (file, pos) with >1 match). The
         // shuffle is bounded by the candidate rows, never the table.
-        val t = scanWithPos(name, snap, cand).alias("t")
+        val t = scanWithPos(name, m, snap, cand).alias("t")
         val s = source.withColumn("__graft_s", lit(true)).alias("s")
         val bsFlag = bsCond.getOrElse(lit(false))
         // Join type follows the clause shape: a by-source clause must see
@@ -3086,20 +2943,20 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     // row tracking: the rewrite subset carries the hidden id column, which
     // the plan passes through as an unset column, so an UPDATEd row keeps
     // its id and only the INSERT side mints fresh ones
-    val subset = rewriteSource(name, snap, entries.filter(e => touched(e.rel)))
+    val subset = rewriteSource(name, m, snap, entries.filter(e => touched(e.rel)))
     val rewritten = plan.withoutInserts.merge(subset, source, failOnMultipleMatches = false)
-    val inserts = withNullRowId(name,
-      plan.insertedRows(readEntries(name, snap, insertScan), source))
+    val inserts = withNullRowId(m,
+      plan.insertedRows(readEntries(name, m, snap, insertScan), source))
     // change feed: target-side images from the SAME touched subset the
     // rewrite reads, plus the insert rows
-    val cdc = if (!cdfEnabled(name)) None else {
+    val cdc = if (!m.cdf) None else {
       val ins = dropRowIdCol(inserts).withColumn("_change_type", lit("insert"))
       if (plan.insertOnly) Some(ins)
       else Some(plan.changeSet(dropRowIdCol(subset), source).unionByName(ins))
     }
     txn match {
       case None =>
-        commitVersion(name, rewritten.unionByName(inserts), layout,
+        commitVersion(name, m, rewritten.unionByName(inserts), layout,
           carryOver = entries.filterNot(e => touched(e.rel)), schemaHint = Some(schema),
           expectedBase = Some(Some(snap.version)), op = op, cdc = cdc)
       case Some(t) =>
@@ -3112,7 +2969,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
         // it (stageVersion's own cleanup no longer covers this point).
         val out = rewritten.unionByName(inserts)
         val (v, dir) = log.allocateVersion(name)
-        stageVersion(name, v, dir, out, layout,
+        stageVersion(name, m, v, dir, out, layout,
           carryOver = entries.filterNot(e => touched(e.rel)),
           schemaHint = Some(schema), op = op)
         t.record(name, v, dir, Some(snap.version))
@@ -3140,6 +2997,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * exactly as for mor UPDATE/DELETE ([[commitMorDml]]). */
   private def commitMorMerge(
       name: String,
+      m: TableMeta,
       source: DataFrame,
       plan: MergeInto.ClausePlan,
       cand: Seq[FileEntry],
@@ -3148,7 +3006,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       layout: Layout,
       op: String): Unit =
     log.commit(name, Some(Some(snap.version))) { (next, dir) =>
-      val t = posScanWithIds(name, snap, cand).alias("t")
+      val t = posScanWithIds(name, m, snap, cand).alias("t")
       val s = source.withColumn("__graft_s", lit(true)).alias("s")
       val isMatched = col("s.__graft_s").isNotNull
       val kind = plan.disposition(isMatched)
@@ -3170,30 +3028,30 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
       // appended rows: UPDATE post-images (deterministic re-derive of the
       // DV'd rows, keeping their row ids) + the INSERT anti-join
-      val lschema = logicalizeSchema(name, snap.schema)
+      val lschema = m.logicalize(snap.schema)
       val updates: Option[DataFrame] =
         if (touched.isEmpty) None
         else Some(t.join(s, plan.on, "left_outer").filter(kind === "u").select(
           lschema.fields.toSeq.map(f =>
             plan.postImage(f.name, isMatched).cast(f.dataType).as(f.name)) ++
-            (if (rowTrackingEnabled(name))
+            (if (m.rowTracking)
               Seq(col(s"t.${TableStore.RowIdCol}").as(TableStore.RowIdCol))
             else Nil): _*))
-      val inserts = withNullRowId(name,
-        plan.insertedRows(readEntries(name, snap, insertScan), source))
+      val inserts = withNullRowId(m,
+        plan.insertedRows(readEntries(name, m, snap, insertScan), source))
       val toAppend = updates.map(_.unionByName(inserts)).getOrElse(inserts)
 
       // the discovery dump served commit-time checks only — drop it so the
       // committed version dir holds exactly what the manifest references
       deleteTree(discoDir)
-      val appended = stageVersion(name, next, dir, toAppend, layout, carry,
+      val appended = stageVersion(name, m, next, dir, toAppend, layout, carry,
         Some(snap.schema), op)
       (touched.nonEmpty || appended.nonEmpty) && {
-        if (cdfEnabled(name)) {
+        if (m.cdf) {
           val ins = dropRowIdCol(inserts).withColumn("_change_type", lit("insert"))
           val cdcDf =
             if (cand.isEmpty) ins
-            else plan.changeSet(readEntries(name, snap, cand), source).unionByName(ins)
+            else plan.changeSet(readEntries(name, m, snap, cand), source).unionByName(ins)
           parquetWriter(cdcDf).parquet(dir.resolve("cdc").toString)
         }
         true
@@ -3236,10 +3094,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   private[tables] def txnStage(name: String, df: DataFrame, partitionBy: Seq[String],
       sortWithin: Seq[String], statsFor: Seq[String], append: Boolean,
       op: String): (Int, Path, Option[Int]) = {
+    val m = log.meta(name)
     def stage(df: DataFrame, layout: Layout, carryOver: Seq[FileEntry],
         schemaHint: Option[StructType], base: Option[Int]) = {
       val (v, dir) = log.allocateVersion(name)
-      stageVersion(name, v, dir, df, layout, carryOver, schemaHint, op)
+      stageVersion(name, m, v, dir, df, layout, carryOver, schemaHint, op)
       (v, dir, base)
     }
     if (!append)
@@ -3252,8 +3111,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       // this, omitting the column failed with a misleading schema
       // mismatch while supplying it bypassed the locked counter and could
       // collide with keys block-allocated by direct appends
-      val (keyed, cleanup) = applyIdentity(name, df)
-      try stage(alignedForAppend(name, snap.schema, keyed), snap.layout, snap.entries,
+      val (keyed, cleanup) = applyIdentity(name, m, df)
+      try stage(alignedForAppend(name, m, snap.schema, keyed), snap.layout, snap.entries,
         Some(snap.schema), Some(snap.version))
       finally cleanup()
     }
@@ -3266,15 +3125,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
   def meta(name: String): TableMeta = log.meta(name)
 
-  /** Read-modify-write of the table's properties ([[TableLog.updateProperties]]). */
-  def updateProperties(name: String)(f: Map[String, String] => Map[String, String]): Unit =
-    log.updateProperties(name)(f)
+  /** Locked read-modify-write of the table's metadata ([[TableLog.updateMeta]]). */
+  def updateMeta(name: String)(f: TableMeta => TableMeta): TableMeta = log.updateMeta(name)(f)
 
   /** DESCRIBE DETAIL surface: current snapshot facts, driver-side
     * metadata only (manifest + file sizes — no Spark job). Layout columns
     * are reported by their logical (visible) names. */
   def detail(name: String): Map[String, String] = {
-    val snap = log.snapshot(name)
+    val (m, snap) = (log.meta(name), log.snapshot(name))
     val entries = snap.entries
     val bytes = entries.map(e => Files.size(Paths.get(absPath(name, e.rel)))).sum
     Map(
@@ -3283,17 +3141,17 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       "num_files" -> entries.size.toString,
       "size_bytes" -> bytes.toString,
       "num_dv_files" -> entries.count(_.dvs.nonEmpty).toString,
-      "partition_columns" -> logicalNames(name, snap.layout.partitionBy).mkString(","),
-      "sort_columns" -> logicalNames(name, snap.layout.sortWithin).mkString(","),
-      "dml_mode" -> dmlMode(name),
+      "partition_columns" -> snap.layout.partitionBy.map(m.logicalName).mkString(","),
+      "sort_columns" -> snap.layout.sortWithin.map(m.logicalName).mkString(","),
+      "dml_mode" -> m.dmlMode,
       "num_columns" -> snap.schema.fields.length.toString,
-      "primary_key" -> meta(name).properties.getOrElse("primary_key", ""),
-      "row_tracking" -> rowTrackingEnabled(name).toString,
-      "not_null_columns" -> notNullColumns(name).mkString(","),
-      "column_defaults" -> columnDefaults(name).toSeq.sortBy(_._1)
+      "primary_key" -> m.primaryKey.getOrElse(""),
+      "row_tracking" -> m.rowTracking.toString,
+      "not_null_columns" -> m.notNullColumns.mkString(","),
+      "column_defaults" -> m.columnDefaults.toSeq.sortBy(_._1)
         .map { case (c, e) => s"$c: $e" }.mkString("; "),
-      "bloom_filter_columns" -> bloomIndexCols(name).mkString(","),
-      "foreign_keys" -> foreignKeys(name).toSeq.sortBy(_._1).map {
+      "bloom_filter_columns" -> m.bloomCols.mkString(","),
+      "foreign_keys" -> m.foreignKeys.toSeq.sortBy(_._1).map {
         case (c, (cols, ref, refCols)) =>
           s"$c: (${cols.mkString(",")}) REFERENCES $ref(${refCols.mkString(",")})"
       }.mkString("; "))
@@ -3302,7 +3160,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** Record a (non-enforced) primary key, like the reference's
     * `ALTER TABLE … ADD PRIMARY KEY` (01_Init.py:239-241). */
   def setPrimaryKey(name: String, cols: Seq[String]): Unit =
-    log.updateProperties(name)(_ + ("primary_key" -> cols.mkString(",")))
+    log.updateProperties(name)(_ + (Key.PrimaryKey -> cols.mkString(",")))
 
   /** Record an INFORMATIONAL foreign key — the reference's fact DDL
     * declares these inline (`_tf_dim_calendar_id INT REFERENCES
@@ -3317,20 +3175,20 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       refTable: String, refCols: Seq[String]): Unit = {
     require(cols.nonEmpty && cols.length == refCols.length,
       s"$name FOREIGN KEY $cname: child/parent column lists must align")
-    val visible = logicalizeSchema(name, log.snapshot(name).schema).fieldNames
+    val visible = log.meta(name).logicalize(log.snapshot(name).schema).fieldNames
     cols.foreach(c => require(visible.exists(_.equalsIgnoreCase(c)),
       s"$name FOREIGN KEY $cname: no column $c (columns: ${visible.mkString(", ")})"))
     require(exists(refTable),
       s"$name FOREIGN KEY $cname: referenced table $refTable not found")
-    val refVisible = logicalizeSchema(refTable, log.snapshot(refTable).schema).fieldNames
+    val refVisible = log.meta(refTable).logicalize(log.snapshot(refTable).schema).fieldNames
     refCols.foreach(c => require(refVisible.exists(_.equalsIgnoreCase(c)),
       s"$name FOREIGN KEY $cname: $refTable has no column $c"))
     log.updateProperties(name)(_ +
-      (s"fk.$cname" -> s"${cols.mkString(",")}|$refTable|${refCols.mkString(",")}"))
+      (Key.Fk + cname -> s"${cols.mkString(",")}|$refTable|${refCols.mkString(",")}"))
   }
 
   def dropForeignKey(name: String, cname: String): Unit =
-    log.updateProperties(name)(_ - s"fk.$cname")
+    log.updateProperties(name)(_ - (Key.Fk + cname))
 
   /** Declare a bloom-filter index on `cols` (Databricks' `CREATE
     * BLOOMFILTER INDEX`, the point-lookup complement to min/max data
@@ -3350,8 +3208,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * data, exactly like Databricks. */
   def setBloomFilterIndex(name: String, cols: Seq[String], ndv: Long = 100000L): Unit = {
     require(cols.nonEmpty, s"$name: bloom filter index needs at least one column")
-    TableStore.checkKnob(name, "bloom.ndv", ndv.toString)
-    val visible = logicalizeSchema(name, log.snapshot(name).schema).fieldNames
+    checkKnob(name, Key.BloomNdv, ndv.toString)
+    val visible = log.meta(name).logicalize(log.snapshot(name).schema).fieldNames
     // store the SCHEMA's spelling, not the user's — downstream consumers
     // do exact-string matches against schema names (the r14 cased-INSERT
     // bug class), and a cased stored name would silently dead-arm the index
@@ -3359,11 +3217,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       spark.conf.get("spark.sql.caseSensitive", "false").toBoolean,
       s"$name bloom index"))
     log.updateProperties(name)(_ +
-      ("bloom.cols" -> resolved.mkString(",")) + ("bloom.ndv" -> ndv.toString))
+      (Key.BloomCols -> resolved.mkString(",")) + (Key.BloomNdv -> ndv.toString))
   }
 
   def dropBloomFilterIndex(name: String): Unit =
-    log.updateProperties(name)(_ - "bloom.cols" - "bloom.ndv")
+    log.updateProperties(name)(_ - Key.BloomCols - Key.BloomNdv)
 
   /** Cap the rows any single data file may hold (Delta's target file
     * size, row edition): every write — loads, DML rewrites, OPTIMIZE —
@@ -3371,23 +3229,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * and parallel reads all key off file granularity; files sized by this
     * knob keep those effective as the table grows 100×. */
   def setTargetFileRows(name: String, rows: Long): Unit = {
-    TableStore.checkKnob(name, "target_file_rows", rows.toString)
-    log.updateProperties(name)(_ + ("target_file_rows" -> rows.toString))
+    checkKnob(name, Key.TargetFileRows, rows.toString)
+    log.updateProperties(name)(_ + (Key.TargetFileRows -> rows.toString))
   }
 
-  private def targetFileRows(name: String): Option[Long] =
-    meta(name).properties.get("target_file_rows").map(_.toLong)
-
   /** Logical names of the bloom-indexed columns (empty = no index). */
-  private[graft] def bloomIndexCols(name: String): Seq[String] =
-    bloomColsOf(meta(name).properties)
-
-  private def bloomColsOf(props: Map[String, String]): Seq[String] =
-    props.get("bloom.cols")
-      .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
-
-  private def bloomNdv(name: String): Long =
-    meta(name).properties.get("bloom.ndv").map(_.toLong).getOrElse(100000L)
+  private[graft] def bloomIndexCols(name: String): Seq[String] = log.meta(name).bloomCols
 
   // ------------------------------------------------- materialized views
 
@@ -3426,22 +3273,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       throw new IllegalArgumentException(s"materialized view source not found: $source"))
     enableChangeFeed(source)
     createOrReplace(view, mvBody(source, Some(cur), groupBy, aggs))
-    log.updateProperties(view)(_ +
-      ("mv.source" -> source) + ("mv.keys" -> groupBy.mkString(",")) +
-      ("mv.aggs" -> aggs.map { case (o, f, a) => s"$o:$f:$a" }.mkString(";")) +
-      ("mv.version" -> cur.toString))
-  }
-
-  final case class MvDef(source: String, keys: Seq[String],
-      aggs: Seq[(String, String, String)], version: Int)
-
-  def mvDefinition(view: String): Option[MvDef] = {
-    val p = meta(view).properties
-    for { src <- p.get("mv.source"); ks <- p.get("mv.keys"); as <- p.get("mv.aggs");
-          v <- p.get("mv.version") } yield
-      MvDef(src, ks.split(',').toSeq,
-        as.split(';').toSeq.map { s =>
-          val Array(o, f, a) = s.split(':'); (o, f, a) }, v.toInt)
+    log.updateProperties(view)(_ ++ TableMeta.mvProps(MvDef(source, groupBy, aggs, cur)))
   }
 
   private def mvNn(out: String) = s"__mv_nn_$out"
@@ -3472,7 +3304,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       op.stripPrefix("mv_refresh:").toInt }.maxOption
 
   private def persistMvVersion(view: String, v: Int): Unit =
-    log.updateProperties(view)(_ + ("mv.version" -> v.toString))
+    log.updateProperties(view)(_ + (Key.MvVersion -> v.toString))
 
   /** Bring `view` up to date with its source. Incremental whenever the
     * change feed can supply the delta; falls back to a pinned full
@@ -3483,7 +3315,8 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * file-pruned MERGE into the view — refresh cost tracks the change
     * set, never the source size. */
   def refreshMaterializedView(view: String): Unit = {
-    val d = mvDefinition(view).getOrElse(throw new IllegalArgumentException(
+    val vm = log.meta(view)
+    val d = vm.mvDefinition.getOrElse(throw new IllegalArgumentException(
       s"$view is not a materialized view (no mv.* metadata)"))
     // every retained view version, parsed once: op labels and the schema
     val views = versions(view).map(log.snapshotAt(view, _))
@@ -3517,7 +3350,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       if (delta.filter(d.keys.map(col(_).isNull).reduce(_ || _)).limit(1).count() > 0) {
         fullRebuild(); return
       }
-      val viewSchema = logicalizeSchema(view, views.last.schema)
+      val viewSchema = vm.logicalize(views.last.schema)
       def typed(c: String, e: Column): Column = e.cast(viewSchema(c).dataType)
       val setCols: Map[String, Column] =
         (d.aggs.flatMap {
@@ -3560,12 +3393,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** Declared foreign keys: constraint name → (child cols, parent table,
     * parent cols). */
   def foreignKeys(name: String): Map[String, (Seq[String], String, Seq[String])] =
-    meta(name).properties.collect {
-      case (k, v) if k.startsWith("fk.") =>
-        val Array(cols, ref, refCols) = v.split('|')
-        k.stripPrefix("fk.") ->
-          ((cols.split(',').toSeq, ref, refCols.split(',').toSeq))
-    }
+    log.meta(name).foreignKeys
 
   /** On-demand FK integrity scan: rows of `name` whose (fully non-null)
     * child key has no match in the parent. One left-anti join, parent side
@@ -3598,11 +3426,11 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     require(violations == 0,
       s"cannot add CHECK constraint $cname on $name: $violations existing row(s) " +
         s"violate ($conditionSql)")
-    log.updateProperties(name)(_ + (s"check.$cname" -> conditionSql))
+    log.updateProperties(name)(_ + (Key.Check + cname -> conditionSql))
   }
 
   def dropCheckConstraint(name: String, cname: String): Unit =
-    log.updateProperties(name)(_ - s"check.$cname")
+    log.updateProperties(name)(_ - (Key.Check + cname))
 
   /** ALTER TABLE … ALTER COLUMN … SET NOT NULL — an ENFORCED nullability
     * constraint (Delta's semantics): existing rows are validated once at
@@ -3617,24 +3445,22 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     val nulls = rows.filter(col(f.name).isNull).count()
     require(nulls == 0,
       s"cannot SET NOT NULL on $name.${f.name}: $nulls existing NULL row(s)")
-    log.updateProperties(name)(_ + (s"notnull.${physicalName(name, f.name)}" -> "true"))
+    log.updateMeta(name)(m => m.withProperties(_ + (Key.NotNull + m.physicalName(f.name) -> "true")))
   }
 
   def dropNotNull(name: String, colName: String): Unit =
-    log.updateProperties(name)(_ - s"notnull.${physicalName(name, colName)}")
+    log.updateMeta(name)(m => m.withProperties(_ - (Key.NotNull + m.physicalName(colName))))
 
   /** LOGICAL names of columns declared NOT NULL (enforced on write). */
-  def notNullColumns(name: String): Seq[String] =
-    meta(name).properties.keys.toSeq.filter(_.startsWith("notnull."))
-      .map(_.stripPrefix("notnull."))
-      .map(p => renames(name).getOrElse(p, p)).sorted
+  def notNullColumns(name: String): Seq[String] = log.meta(name).notNullColumns
 
   /** ALTER TABLE … ALTER COLUMN … COMMENT '…' (logical name). */
   def setColumnComment(name: String, colName: String, comment: String): Unit = {
-    val visible = logicalizeSchema(name, log.snapshot(name).schema)
-    val f = visibleField(name, visible, colName, "ALTER COLUMN")
-    val m = meta(name)
-    setMeta(name, m.copy(columnComments = m.columnComments + (f.name -> comment)))
+    val schema = log.snapshot(name).schema
+    log.updateMeta(name) { m =>
+      val f = visibleField(name, m.logicalize(schema), colName, "ALTER COLUMN")
+      m.copy(columnComments = m.columnComments + (f.name -> comment))
+    }
   }
 
   /** ALTER TABLE … ALTER COLUMN … SET DEFAULT <expr>: recorded as
@@ -3645,37 +3471,29 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * fails the ALTER, not some later INSERT. */
   def setColumnDefault(name: String, colName: String, sqlExpr: String): Unit = {
     import org.apache.spark.sql.functions.expr
-    val visible = logicalizeSchema(name, log.snapshot(name).schema)
+    val visible = log.meta(name).logicalize(log.snapshot(name).schema)
     val f = visibleField(name, visible, colName, "ALTER COLUMN")
-    // declaration-time probe: parses, folds without input rows, casts
+    // declaration-time probe (outside the lock: it runs a job): parses,
+    // folds without input rows, casts
     spark.range(1).select(expr(sqlExpr).cast(f.dataType)).head()
-    log.updateProperties(name)(_ + (s"coldefault.${physicalName(name, f.name)}" -> sqlExpr))
+    log.updateMeta(name)(m => m.withProperties(_ + (Key.ColDefault + m.physicalName(f.name) -> sqlExpr)))
   }
 
   def dropColumnDefault(name: String, colName: String): Unit =
-    log.updateProperties(name)(_ - s"coldefault.${physicalName(name, colName)}")
+    log.updateMeta(name)(m => m.withProperties(_ - (Key.ColDefault + m.physicalName(colName))))
 
   /** Declared column defaults: LOGICAL column name → default SQL text. */
-  def columnDefaults(name: String): Map[String, String] =
-    meta(name).properties.collect {
-      case (k, v) if k.startsWith("coldefault.") =>
-        val p = k.stripPrefix("coldefault.")
-        renames(name).getOrElse(p, p) -> v
-    }
+  def columnDefaults(name: String): Map[String, String] = log.meta(name).columnDefaults
 
   /** The table's CHECK constraints: name → condition SQL. */
-  def checkConstraints(name: String): Map[String, String] =
-    meta(name).properties.collect {
-      case (k, v) if k.startsWith("check.") => k.stripPrefix("check.") -> v
-    }
+  def checkConstraints(name: String): Map[String, String] = log.meta(name).checks
 
   /** Thread every CHECK and NOT NULL constraint into `df`'s plan as a
     * pass-through filter whose false branch raises — single-pass
     * enforcement during the write job. */
-  private def enforceChecks(name: String, df: DataFrame): DataFrame = {
+  private def enforceChecks(name: String, m: TableMeta, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, concat, expr, raise_error, struct, to_json}
-    val checks = checkConstraints(name)
-    val afterChecks = checks.toSeq.sortBy(_._1).foldLeft(df) { case (d, (cname, sql)) =>
+    val afterChecks = m.checks.toSeq.sortBy(_._1).foldLeft(df) { case (d, (cname, sql)) =>
       d.filter(
         when(coalesce(expr(sql), lit(true)), lit(true))
           .otherwise(raise_error(concat(
@@ -3684,7 +3502,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     }
     // NOT NULL columns absent from this frame are derived later in the
     // write (generated/identity) — they can't be NULL, skip them here
-    notNullColumns(name)
+    m.notNullColumns
       .flatMap(c => afterChecks.columns.find(_.equalsIgnoreCase(c)))
       .foldLeft(afterChecks) { (d, c) =>
         d.filter(
@@ -3704,17 +3522,18 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
 
   /** VACUUM ([[TableLog.vacuum]]). Markers that live in the manifests and
     * version directories it retires are folded first, under its lock: the
-    * streaming and MV high-water marks into the table's metadata, every
-    * committed COPY INTO ledger into the `_COPY_LOADED` sidecar. */
+    * streaming and MV high-water marks into the table's metadata (the
+    * change the fold returns), every committed COPY INTO ledger into the
+    * `_COPY_LOADED` sidecar. */
   def vacuum(name: String, staleStagingMs: Long = 24L * 3600 * 1000,
       retainMs: Long = 0L): Unit =
     log.vacuum(name, staleStagingMs, retainMs) { committed =>
       val ops = committed.map(_.op)
-      streamHighWater(name, ops).foreach(hw =>
-        log.updateProperties(name)(_ + ("stream_high_water" -> hw.toString)))
-      lastMvRefresh(ops).filter(v => meta(name).properties.get("mv.version").forall(_.toInt < v))
-        .foreach(persistMvVersion(name, _))
       val ledgers = committed.flatMap(s => copyFilesOf(name, s.version))
       if (ledgers.nonEmpty) TableLog.unionLedger(copyLoadedPath(name), ledgers)
+      m => m.withProperties(_ ++
+        streamHighWater(m, ops).map(Key.StreamHighWater -> _.toString) ++
+        lastMvRefresh(ops).filter(v => m.properties.get(Key.MvVersion).forall(_.toInt < v))
+          .map(Key.MvVersion -> _.toString))
     }
 }

@@ -543,6 +543,32 @@ class SqlDmlSpec extends AnyFunSuite {
     } finally store.detach()
   }
 
+  test("TBLPROPERTIES auto_compact_* and numeric knobs are validated before they are stored") {
+    val store = new TableStore(spark, Files.createTempDirectory("graft_sqldml_ac").toString)
+    try {
+      store.createOrReplace("db.ac", Seq((1L, "a")).toDF("k", "v"))
+      val meta = store.meta("db.ac")
+      for ((k, v) <- Seq("auto_compact_files" -> "x", "auto_compact_files" -> "0",
+          "auto_compact_bytes" -> "-5", "target_file_rows" -> "x", "bloom.ndv" -> "x")) {
+        val e = intercept[IllegalArgumentException] {
+          spark.sql(s"ALTER TABLE db.ac SET TBLPROPERTIES ('$k' = '$v')") }
+        assert(e.getMessage.contains("db.ac") && e.getMessage.contains(s"'$k'"), e.getMessage)
+        assert(store.meta("db.ac") == meta, s"$k = $v was stored")
+      }
+      // a valid pair routes through setAutoCompact: the third small file
+      // an append leaves triggers the inline compaction
+      spark.sql("ALTER TABLE db.ac SET TBLPROPERTIES " +
+        "('auto_compact_bytes' = '1000000', 'auto_compact_files' = '3')")
+      assert(store.meta("db.ac").properties.get("auto_compact_files").contains("3"))
+      assert(store.meta("db.ac").properties.get("auto_compact_bytes").contains("1000000"))
+      store.append("db.ac", Seq((2L, "b")).toDF("k", "v"))
+      assert(store.detail("db.ac")("num_files") == "2")
+      store.append("db.ac", Seq((3L, "c")).toDF("k", "v"))
+      assert(store.detail("db.ac")("num_files") == "1")
+      assert(store.read("db.ac").count() == 3)
+    } finally store.detach()
+  }
+
   test("readStream.table over a store table is NOT silently lowered to a batch read") {
     val store = new TableStore(spark, Files.createTempDirectory("graft_sqldml_rs").toString)
     try {

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The table log's files are named in one place: no main source other
   * than `TableLog.scala` may name them on a code line (comments may), so
   * every read and write of a pointer, manifest, lock, metadata file,
-  * retirement record or transaction intent goes through [[TableLog]]. */
+  * retirement record or transaction intent goes through [[TableLog]].
+  * Likewise the metadata's internal key prefixes are named only beside
+  * [[TableMeta]]. */
 class LogBoundarySpec extends AnyFunSuite {
 
   private val logFiles = Seq("_CURRENT", "_MANIFEST", "_COMMIT_LOCK", "_META",
@@ -28,6 +30,33 @@ class LogBoundarySpec extends AnyFunSuite {
     Files.readAllLines(f, UTF_8).asScala.toSeq.zipWithIndex.collect {
       case (l, i) if logFiles.exists(code(l).contains) => (i + 1, l.trim)
     }
+
+  /** The prefixes of the engine-internal table-property keys: named on a
+    * code line (in a string literal) only by the file that holds
+    * [[TableMeta]], the one codec of `_META`'s key scheme. */
+  private val keyPrefixes = Seq("colmap.", "coldrop.", "gencol.", "identity.", "notnull.",
+    "coldefault.", "check.", "fk.", "mv.", "zorder.", "bloom.")
+
+  private def prefixesIn(f: Path): Seq[(Int, String)] =
+    Files.readAllLines(f, UTF_8).asScala.toSeq.zipWithIndex.collect {
+      case (l, i) if keyPrefixes.exists(p => code(l).contains("\"" + p)) => (i + 1, l.trim)
+    }
+
+  test("only the file holding TableMeta names an internal property-key prefix on a code line") {
+    val main = Paths.get("src", "main", "scala")
+    assert(Files.isDirectory(main), s"run from the project root (no $main)")
+    val sources = TableLog.walkAll(main).filter(_.toString.endsWith(".scala"))
+    val (owner, others) = sources.partition(f =>
+      Files.readAllLines(f, UTF_8).asScala.exists(_.startsWith("final case class TableMeta(")))
+    // the scan is live: the owner itself names every prefix
+    assert(owner.size == 1, s"TableMeta is declared in ${owner.size} files")
+    val owned = prefixesIn(owner.head).map(_._2)
+    val missing = keyPrefixes.filterNot(p => owned.exists(_.contains("\"" + p)))
+    assert(missing.isEmpty, s"${owner.head} no longer names $missing")
+    val offenders = others.flatMap(f => prefixesIn(f).map { case (i, l) => s"$f:$i: $l" })
+    assert(offenders.isEmpty,
+      s"internal property keys named outside TableMeta's file:\n${offenders.mkString("\n")}")
+  }
 
   test("only TableLog.scala names the table log's files on a code line") {
     val main = Paths.get("src", "main", "scala")

@@ -43,8 +43,10 @@ class TableLogSpec extends AnyFunSuite {
           true
         }.foreach(v => committed.put(v, op))
       commitOp(None, Nil, "replace:")
-      def observe(snaps: Seq[Snapshot]): Unit =
+      def observe(snaps: Seq[Snapshot]): TableMeta => TableMeta = {
         snaps.foreach(s => observed.put(s.version, s.entries.map(_.rel)))
+        identity // no metadata change
+      }
 
       val writersLeft = new AtomicInteger(4)
       val done = new AtomicBoolean(false)
