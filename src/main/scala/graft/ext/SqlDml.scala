@@ -89,29 +89,21 @@ object SqlDml {
       s"$statement $table: '$k' is engine-internal ($p) — use its DDL " +
         "(BLOOMFILTER INDEX / CONSTRAINT / GENERATED / MATERIALIZED VIEW statements)"))
 
-  /** One property as the store call that sets it: typed knobs (dml_mode,
-    * target_file_rows, isolation, the auto-compaction pair, comment) go
-    * through their validating setters, `rowtracking` = 'true' through
-    * `enableRowTracking` (the footer-count check and backfill commit),
-    * anything else is a generic property, Delta-style. Building the call
-    * refuses internal keys and checks typed values, so a statement builds
-    * every call before it changes anything. */
+  /** One property as the store call that sets it: target_file_rows,
+    * isolation and the comment go through their setters,
+    * `rowtracking` = 'true' through `enableRowTracking` (the footer-count
+    * check and backfill commit), anything else (the auto-compaction pair
+    * included) is one locked property write, Delta-style. Building the call
+    * refuses internal keys and checks typed values ([[checkKnob]]), so a
+    * statement builds every call before it changes anything. */
   private def propertySetter(statement: String, table: String, k: String,
       v: String): TableStore => Unit = {
     refuseInternal(statement, table, k)
     checkKnob(table, k, v)
     k match {
-      case Key.DmlMode => _.setDmlMode(table, v)
       case Key.TargetFileRows => _.setTargetFileRows(table, v.toLong)
       case Key.Isolation => _.setIsolation(table, v)
       case Key.RowTracking => _.enableRowTracking(table)
-      case Key.AutoCompactFiles => st =>
-        st.setAutoCompact(table, v.toInt, st.meta(table).autoCompactBytes)
-      // the size alone configures nothing until a file count enables it
-      case Key.AutoCompactBytes => st => st.meta(table).autoCompact match {
-        case Some((files, _)) => st.setAutoCompact(table, files, v.toLong)
-        case None => st.updateMeta(table)(_.withProperties(_ + (k -> v)))
-      }
       case "comment" => _.updateMeta(table)(_.copy(comment = Some(v)))
       case _ => _.updateMeta(table)(_.withProperties(_ + (k -> v)))
     }
@@ -715,7 +707,7 @@ object SqlDml {
           if (props.nonEmpty || comment.isDefined)
             store.setMeta(table, TableMeta(comment = comment))
           setters.foreach(_(store))
-          if (bloom.nonEmpty) store.setBloomFilterIndex(table, index.bloomCols, index.bloomNdv)
+          if (bloom.nonEmpty) store.setBloomFilterIndex(table, index.bloomCols, index.bloomNdv(table))
           columns.foreach { c =>
             if (!c.nullable) store.setNotNull(table, c.name)
             c.comment.foreach(store.setColumnComment(table, c.name, _))

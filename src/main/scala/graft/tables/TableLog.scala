@@ -27,10 +27,9 @@ final case class TableMeta(
   private def scoped(prefix: String): Map[String, String] =
     properties.collect { case (k, v) if k.startsWith(prefix) => k.stripPrefix(prefix) -> v }
 
-  /** A positive integer knob; a stored non-positive-integer raises. */
-  private def positive(key: String): Option[Long] = properties.get(key).map(v =>
-    v.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-      s"table property '$key' must be a positive integer, got '$v'")))
+  /** A stored positive-integer knob of `table`, checked as SET checks it. */
+  private def positive(table: String, key: String): Option[Long] =
+    properties.get(key).map(TableMeta.positiveKnob(table, key, _))
 
   /** physical → logical renames in force. */
   lazy val renames: Map[String, String] = scoped(Key.ColMap)
@@ -86,16 +85,15 @@ final case class TableMeta(
   /** Logical names of the bloom-indexed columns (empty = no index). */
   lazy val bloomCols: Seq[String] = properties.get(Key.BloomCols)
     .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
-  lazy val bloomNdv: Long = positive(Key.BloomNdv).getOrElse(100000L)
-  lazy val targetFileRows: Option[Long] = positive(Key.TargetFileRows)
+  def bloomNdv(table: String): Long = positive(table, Key.BloomNdv).getOrElse(100000L)
+  def targetFileRows(table: String): Option[Long] = positive(table, Key.TargetFileRows)
   def dmlMode: String = properties.getOrElse(Key.DmlMode, "cow")
   def cdf: Boolean = properties.get(Key.Cdf).contains("true")
   def rowTracking: Boolean = properties.get(Key.RowTracking).contains("true")
   def isolation: String = properties.getOrElse(Key.Isolation, "writeserializable")
-  def autoCompactBytes: Long = positive(Key.AutoCompactBytes).getOrElse(32L << 20)
   /** Auto-compaction: (small-file count that triggers it, small-file bytes). */
-  lazy val autoCompact: Option[(Int, Long)] =
-    positive(Key.AutoCompactFiles).map(n => (n.toInt, autoCompactBytes))
+  def autoCompact(table: String): Option[(Int, Long)] = positive(table, Key.AutoCompactFiles)
+    .map(n => (n.toInt, positive(table, Key.AutoCompactBytes).getOrElse(32L << 20)))
   def rowHighWater: Long = properties.get(Key.RowHighWater).fold(0L)(_.toLong)
   def streamHighWater: Option[Long] = properties.get(Key.StreamHighWater).map(_.toLong)
 
@@ -124,19 +122,34 @@ object TableMeta {
     * (by physical name) or a constraint (by name). */
   object Key {
     // column declarations and mapping, by physical column
-    val ColMap = "colmap."; val ColDrop = "coldrop."; val GenCol = "gencol."
-    val Identity = "identity."; val NotNull = "notnull."; val ColDefault = "coldefault."
+    val ColMap = "colmap."
+    val ColDrop = "coldrop."
+    val GenCol = "gencol."
+    val Identity = "identity."
+    val NotNull = "notnull."
+    val ColDefault = "coldefault."
     // constraints, by constraint name; the primary key
-    val Check = "check."; val Fk = "fk."; val PrimaryKey = "primary_key"
+    val Check = "check."
+    val Fk = "fk."
+    val PrimaryKey = "primary_key"
     // materialized view, ZORDER curve and bloom index
-    val Mv = "mv."; val MvVersion = "mv.version"
-    val ZOrder = "zorder."; val ZOrderBase = "zorder.base"
-    val Bloom = "bloom."; val BloomCols = "bloom.cols"; val BloomNdv = "bloom.ndv"
+    val Mv = "mv."
+    val MvVersion = "mv.version"
+    val ZOrder = "zorder."
+    val ZOrderBase = "zorder.base"
+    val Bloom = "bloom."
+    val BloomCols = "bloom.cols"
+    val BloomNdv = "bloom.ndv"
     // write knobs, and the high-water marks the write path keeps
-    val DmlMode = "dml_mode"; val TargetFileRows = "target_file_rows"; val Cdf = "cdf"
-    val Isolation = "isolation"; val RowTracking = "rowtracking"
-    val AutoCompactFiles = "auto_compact_files"; val AutoCompactBytes = "auto_compact_bytes"
-    val RowHighWater = "row_high_water"; val StreamHighWater = "stream_high_water"
+    val DmlMode = "dml_mode"
+    val TargetFileRows = "target_file_rows"
+    val Cdf = "cdf"
+    val Isolation = "isolation"
+    val RowTracking = "rowtracking"
+    val AutoCompactFiles = "auto_compact_files"
+    val AutoCompactBytes = "auto_compact_bytes"
+    val RowHighWater = "row_high_water"
+    val StreamHighWater = "stream_high_water"
   }
 
   /** Table-property keys that are engine state, not declaration: each is
@@ -155,23 +168,30 @@ object TableMeta {
   /** The value checks of the typed table knobs, keyed by property name.
     * Their setters run them, and SQL runs them on a whole TBLPROPERTIES
     * bag before it changes anything. */
-  def checkKnob(table: String, key: String, value: String): Unit = {
-    def positive(max: Long): Unit = require(value.toLongOption.exists(n => n > 0 && n <= max),
-      s"$table: table property '$key' must be a positive integer, got '$value'")
-    key match {
-      case Key.DmlMode =>
-        require(Set("cow", "mor")(value), s"dml mode must be cow or mor, got $value")
-      case Key.TargetFileRows | Key.BloomNdv | Key.AutoCompactBytes => positive(Long.MaxValue)
-      case Key.AutoCompactFiles => positive(Int.MaxValue)
-      case Key.Isolation =>
-        require(Set("writeserializable", "serializable")(value.toLowerCase),
-          s"isolation must be writeserializable or serializable, got $value")
-      case Key.RowTracking =>
-        require(value.equalsIgnoreCase("true"),
-          s"$table: row tracking can only be enabled ('true'), got $value")
-      case _ =>
-    }
+  def checkKnob(table: String, key: String, value: String): Unit = key match {
+    case Key.DmlMode =>
+      require(Set("cow", "mor")(value), s"dml mode must be cow or mor, got $value")
+    case k if PositiveKnobs.contains(k) => positiveKnob(table, k, value)
+    case Key.Isolation =>
+      require(Set("writeserializable", "serializable")(value.toLowerCase),
+        s"isolation must be writeserializable or serializable, got $value")
+    case Key.RowTracking =>
+      require(value.equalsIgnoreCase("true"),
+        s"$table: row tracking can only be enabled ('true'), got $value")
+    case _ =>
   }
+
+  /** The positive-integer knobs and their upper bounds. */
+  private val PositiveKnobs = Map(Key.TargetFileRows -> Long.MaxValue,
+    Key.BloomNdv -> Long.MaxValue, Key.AutoCompactBytes -> Long.MaxValue,
+    Key.AutoCompactFiles -> Int.MaxValue.toLong)
+
+  /** A positive-integer knob's value: the one check that SET and the decode
+    * of a stored value share. */
+  def positiveKnob(table: String, key: String, value: String): Long =
+    value.toLongOption.filter(n => n > 0 && n <= PositiveKnobs(key)).getOrElse(
+      throw new IllegalArgumentException(
+        s"$table: table property '$key' must be a positive integer, got '$value'"))
 
   /** The properties that persist a ZORDER curve ([[TableMeta.zorder]]). */
   def zorderProps(cols: Seq[String], bits: Int, bounds: Array[Array[Double]],

@@ -937,12 +937,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       val w0 = m.bloomCols.map(physName).filter(checked.columns.contains)
         .foldLeft(parquetWriter(sorted)) { (w, c) =>
           w.option(s"parquet.bloom.filter.enabled#$c", "true")
-            .option(s"parquet.bloom.filter.expected.ndv#$c", m.bloomNdv.toString)
+            .option(s"parquet.bloom.filter.expected.ndv#$c", m.bloomNdv(name).toString)
         }
       // declared target file size: rows per file are capped at write time
       // (Spark splits a partition's output), so one giant input partition
       // cannot produce one giant unsplittable-for-skipping file
-      val w = m.targetFileRows.fold(w0)(n => w0.option("maxRecordsPerFile", n.toString))
+      val w = m.targetFileRows(name).fold(w0)(n => w0.option("maxRecordsPerFile", n.toString))
       (if (dupCols.nonEmpty) w.partitionBy(dupCols: _*) else w).parquet(dataDir.toString)
 
       // list the files this write produced
@@ -1333,7 +1333,7 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * bad knob fails the append); returns the entries of the files it added. */
   private def appendTo(name: String, m: TableMeta, snap: Snapshot, df: DataFrame, op: String,
       copyFiles: Seq[String]): Seq[FileEntry] = {
-    val autoCompact = m.autoCompact
+    val autoCompact = m.autoCompact(name)
     val (keyed, cleanup) = applyIdentity(name, m, df)
     val added = try
       commitVersion(name, m, alignedForAppend(name, m, snap.schema, keyed), snap.layout,

@@ -555,8 +555,21 @@ class SqlDmlSpec extends AnyFunSuite {
         assert(e.getMessage.contains("db.ac") && e.getMessage.contains(s"'$k'"), e.getMessage)
         assert(store.meta("db.ac") == meta, s"$k = $v was stored")
       }
-      // a valid pair routes through setAutoCompact: the third small file
-      // an append leaves triggers the inline compaction
+      // a bad value stored before the knob was validated (one the store
+      // decodes as no Int) fails the append before it commits, naming the
+      // table; SET of a valid value repairs it
+      for ((k, v) <- Seq("auto_compact_bytes" -> "x", "auto_compact_files" -> "3000000000")) {
+        store.updateMeta("db.ac")(_.withProperties(_ + ("auto_compact_files" -> "3") + (k -> v)))
+        val e = intercept[IllegalArgumentException] {
+          store.append("db.ac", Seq((9L, "z")).toDF("k", "v")) }
+        assert(e.getMessage.contains("db.ac") && e.getMessage.contains(s"'$k'"), e.getMessage)
+        assert(store.read("db.ac").count() == 1)
+        spark.sql(s"ALTER TABLE db.ac SET TBLPROPERTIES ('$k' = '1000')")
+        assert(store.meta("db.ac").properties.get(k).contains("1000"))
+        store.setMeta("db.ac", meta)
+      }
+      // a valid pair is stored as given: the third small file an append
+      // leaves triggers the inline compaction
       spark.sql("ALTER TABLE db.ac SET TBLPROPERTIES " +
         "('auto_compact_bytes' = '1000000', 'auto_compact_files' = '3')")
       assert(store.meta("db.ac").properties.get("auto_compact_files").contains("3"))
