@@ -363,8 +363,10 @@ object SqlDml {
     * INSERT OVERWRITE takes). */
   private def insert(spark: SparkSession, store: TableStore, table: String,
       i: InsertIntoStatement): Unit = {
-    val m = store.meta(table)
-    val target = store.visibleSchema(table, m)
+    // one read of the metadata and the snapshot: the rows align against
+    // them and the commit takes the snapshot as its CAS base
+    val (m, snap) = (store.meta(table), store.snapshot(table))
+    val target = m.logicalize(snap.schema)
     val data = GraftShims.ofRows(spark, i.query)
     val resolves = resolver(spark)
     // reject column names absent from the target — silently dropping a
@@ -384,7 +386,7 @@ object SqlDml {
     val dynamics: Seq[String] = partitionSpec.toSeq.collect { case (k, None) => k }
     if (partitionSpec.nonEmpty) {
       requireKnown(partitionSpec.keys.toSeq)
-      val pcols = store.partitionColumns(table, m)
+      val pcols = snap.layout.partitionBy.map(m.logicalName)
       val notPart = partitionSpec.keys.filterNot(k => pcols.exists(resolves(k, _)))
       require(notPart.isEmpty,
         s"INSERT … PARTITION on $table: ${notPart.mkString(", ")} " +
@@ -452,15 +454,15 @@ object SqlDml {
     // definition (layout, identity keys, change feed) — a `write` commit
     // of the whole region — and a PARTITION-qualified overwrite replaces
     // just the named region.
-    if (!i.overwrite) store.append(table, aligned)
-    else if (partitionSpec.isEmpty) store.overwriteWhere(table, aligned, lit(true), op = "write")
+    if (!i.overwrite) store.appendTo(table, m, snap, aligned, "append")
+    else if (partitionSpec.isEmpty) store.overwriteIn(table, m, snap, aligned, lit(true), "write")
     else if (dynamics.isEmpty) {
       val cond = statics.map { case (k, v) =>
         val f = target.fields.find(x => resolves(k, x.name)).get
         col(f.name) <=> lit(v).cast(f.dataType)
       }.reduce(_ && _)
-      store.overwriteWhere(table, aligned, cond, op = "insert_overwrite_partition")
-    } else store.overwritePartitions(table, aligned, op = "insert_overwrite_partition")
+      store.overwriteIn(table, m, snap, aligned, cond, "insert_overwrite_partition")
+    } else store.overwritePartitionsIn(table, m, snap, aligned, "insert_overwrite_partition")
   }
 
   /** SHOW CREATE TABLE: executable DDL from the current manifest (schema
@@ -471,8 +473,8 @@ object SqlDml {
     * declarable properties. Internal keys are state, not
     * declaration, and are left out. */
   private def showCreate(store: TableStore, table: String): String = {
-    val m = store.meta(table)
-    val schema = store.visibleSchema(table, m)
+    val (m, snap) = (store.meta(table), store.snapshot(table))
+    val schema = m.logicalize(snap.schema)
     val notNull = m.notNullColumns.map(_.toLowerCase).toSet
     val defaults = m.columnDefaults
     // GENERATED clauses are DECLARATION, not state (the reference's most
@@ -505,7 +507,7 @@ object SqlDml {
     val checks = m.checks.toSeq.sortBy(_._1).map {
       case (c, sql) => s"  CONSTRAINT $c CHECK ($sql)"
     }
-    val partitionBy = Some(store.partitionColumns(table, m)).filter(_.nonEmpty)
+    val partitionBy = Some(snap.layout.partitionBy.map(m.logicalName)).filter(_.nonEmpty)
       .map(p => s"\nPARTITIONED BY (${p.mkString(",")})").getOrElse("")
     val comment = m.comment
       .map(c => s"\nCOMMENT '${c.replace("'", "''")}'").getOrElse("")

@@ -166,7 +166,7 @@ object Scd {
     // one, an immediate per-table commit otherwise (see TableWriter)
     val writer: graft.tables.TableWriter = txn.getOrElse(store)
     if (!store.exists(table)) {
-      writer.writeSnapshot(table, scd2Init(batch, ts, audit = initAudit))
+      writer.createOrReplace(table, scd2Init(batch, ts, audit = initAudit))
       return
     }
     val payload = batch.columns.filterNot(keys.contains).toSeq
@@ -216,7 +216,7 @@ object Scd {
         (if (audit) Map(CreateDate -> (ts: Column), UpdateDate -> (ts: Column))
          else Map.empty)
 
-    writer.writeMerge(table, source, keys, Some(currentOnly),
+    writer.merge(table, source, keys, Some(currentOnly),
       matched = Seq(MergeInto.MatchedUpdate(
         Some(changePredicate(payload, nullSafe = false)), closeSet)),
       notMatched = Seq(MergeInto.NotMatchedInsert(None, insertValues)),

@@ -235,7 +235,7 @@ final class Medallion(spark: SparkSession, store: TableStore, sfDir: String,
           (Scd.UpdateDate -> loadTs.cast("timestamp"))))
       val notMatched = Seq(MergeInto.NotMatchedInsert(None,
         fact.columns.map(c => c -> col(s"s.$c")).toMap))
-      writer.writeMerge("gold.fact_sales", fact, keys,
+      writer.merge("gold.fact_sales", fact, keys,
         matched = matched, notMatched = notMatched)
     } else {
       // initial load: fact snapshot sorted by its grain key inside each
@@ -243,7 +243,7 @@ final class Medallion(spark: SparkSession, store: TableStore, sfDir: String,
       // selective, the file-level pruning lever after directory
       // partitioning (reference facts rely on Delta data skipping for the
       // same effect)
-      writer.writeSnapshot("gold.fact_sales", fact,
+      writer.createOrReplace("gold.fact_sales", fact,
         sortWithin = Seq("sales_order_key", "sales_line_number"))
     }
   }

@@ -214,7 +214,7 @@ final case class MvDef(source: String, keys: Seq[String],
 /** Per-file column statistics in canonical string form (numbers,
   * booleans, dates and timestamps as decimal strings; strings raw) —
   * comparable without re-reading the file. */
-private[tables] final case class ColStats(min: String, max: String)
+private[graft] final case class ColStats(min: String, max: String)
 
 /** One data file in a snapshot. `dvs` lists deletion-vector sidecars
   * (manifest-relative parquet directories of `(file, pos)` row positions)
@@ -239,7 +239,7 @@ private[tables] final case class ColStats(min: String, max: String)
   * Deletion vectors only remove rows, so a recorded 0 stays a valid
   * "no nulls" witness and `nulls(c) == rows` (all-null) stays a valid
   * "no non-null" witness with DVs attached. */
-private[tables] final case class FileEntry(rel: String, stats: Map[String, ColStats],
+private[graft] final case class FileEntry(rel: String, stats: Map[String, ColStats],
     dvs: Seq[String] = Nil, rows: Long = -1L, base: Long = -1L,
     nulls: Map[String, Long] = Map.empty)
 
@@ -247,7 +247,7 @@ private[tables] final case class FileEntry(rel: String, stats: Map[String, ColSt
   * physical names. It rides the version's manifest (`#layout`), so
   * every DML rewrite of that version keeps it and RESTORE, clones and
   * aborted writes agree on it; a manifest without the line has none. */
-private[tables] final case class Layout(partitionBy: Seq[String] = Nil,
+private[graft] final case class Layout(partitionBy: Seq[String] = Nil,
     sortWithin: Seq[String] = Nil, statsFor: Seq[String] = Nil)
 
 /** One parse of one manifest: a table's whole state at `version` —
@@ -255,7 +255,7 @@ private[tables] final case class Layout(partitionBy: Seq[String] = Nil,
   * the version was committed with (`write`, `merge`, `restore`, …;
   * manifests written before operation tracking read as `write`). A
   * staged manifest parses to the same value under its slot number. */
-private[tables] final case class Snapshot(version: Int, schema: StructType,
+private[graft] final case class Snapshot(version: Int, schema: StructType,
     entries: Seq[FileEntry], layout: Layout, op: String)
 
 object TableLog {
@@ -582,7 +582,7 @@ final class TableLog(root: String) {
   /** Allocate the next version number by atomically creating its
     * directory — the allocation doubles as the writer mutex: two
     * concurrent writers can never claim the same version. */
-  private[tables] def allocateVersion(name: String): (Int, Path) = {
+  private def allocateVersion(name: String): (Int, Path) = {
     Files.createDirectories(tableDir(name))
     var v = version(name).getOrElse(0) + 1
     while (true) {
@@ -595,15 +595,29 @@ final class TableLog(root: String) {
     throw new IllegalStateException("unreachable")
   }
 
+  /** The one place a write's version directory is allocated (a commit
+    * renumbered past an interloper moves into a fresh slot, see
+    * [[renumberStaged]]): claim `v_<next>` ([[allocateVersion]]) and run
+    * `body` in it, outside any lock. The
+    * body writes data, sidecars (`cdc/`, `dv/`, `copy_files`) and the
+    * staged manifest, or returns false (nothing to commit). Returns the
+    * slot; it is dropped when the body declines or fails. [[commit]] and
+    * [[txnCommit]] publish it. */
+  private[tables] def stage(name: String)(body: (Int, Path) => Boolean): Option[(Int, Path)] = {
+    val (next, dir) = allocateVersion(name)
+    try {
+      if (body(next, dir)) Some((next, dir))
+      else { TableLog.deleteTree(dir); None }
+    } catch { case t: Throwable => TableLog.deleteTree(dir); throw t }
+  }
+
   /** The single-table commit protocol — every commit outside multi-table
     * transactions publishes here, so this is the one place a table's
     * pointer moves alone (and the one place to instrument it).
     *
-    *  1. Allocate `v_<next>` atomically ([[allocateVersion]]).
-    *  2. Run `stage` outside the lock: it writes data, sidecars (`cdc/`,
-    *     `dv/`, `copy_files`) and the staged manifest into the slot, or
-    *     returns false — nothing to commit, the slot is dropped.
-    *  3. Publish under the table's commit lock. Optimistic concurrency:
+    *  1. [[stage]] `body` in a fresh `v_<next>`; when it declines,
+    *     nothing is committed.
+    *  2. Publish under the table's commit lock. Optimistic concurrency:
     *     with `expectedBase` set, the current version must still be the
     *     one the writer derived its changes from; if it moved, the commit
     *     is rebased onto it ([[tryRebase]]) or, on genuine conflict (or
@@ -617,14 +631,12 @@ final class TableLog(root: String) {
     * Every reader treats manifest existence as "committed", so on any
     * failure the (possibly renumbered) directory is dropped — a losing
     * writer never surfaces as a phantom committed version through time
-    * travel. Returns the published version, None when `stage` declined. */
+    * travel. Returns the published version, None when `body` declined. */
   private[tables] def commit(name: String, expectedBase: Option[Option[Int]] = None,
-      strictCas: Boolean = false)(stage: (Int, Path) => Boolean): Option[Int] = {
-    val (next, dir) = allocateVersion(name)
-    var liveDir = dir // rebase may renumber (move) the staged directory
-    try {
-      if (!stage(next, dir)) { TableLog.deleteTree(dir); None }
-      else withCommitLock(name) {
+      strictCas: Boolean = false)(body: (Int, Path) => Boolean): Option[Int] =
+    stage(name)(body).map { case (next, dir) =>
+      var liveDir = dir // rebase may renumber (move) the staged directory
+      try withCommitLock(name) {
         // one pointer read: only lock holders swap the pointer
         val cur = version(name)
         val finalV = expectedBase match {
@@ -654,10 +666,9 @@ final class TableLog(root: String) {
             } else next
         }
         publish(name, finalV)
-        Some(finalV)
-      }
-    } catch { case t: Throwable => TableLog.deleteTree(liveDir); throw t }
-  }
+        finalV
+      } catch { case t: Throwable => TableLog.deleteTree(liveDir); throw t }
+    }
 
   /** Make staged version `v` the table's current one: promote its
     * manifest, then swap the pointer. Must run inside the table's commit
@@ -1028,9 +1039,6 @@ final class TableLog(root: String) {
   /** Test seam: throw after N pointer swaps to simulate a crash
     * mid-publish (-1 = never). */
   private[tables] var crashAfterSwapsForTest: Int = -1
-
-  /** Drop a transaction's staged version directories (nothing published). */
-  private[tables] def txnAbort(dirs: Seq[Path]): Unit = dirs.foreach(TableLog.deleteTree)
 
   private def txnIntentDir: Path = Paths.get(root, "_txn_intents")
 

@@ -111,34 +111,38 @@ object TableStore {
 /** The writer surface [[TableStore]] and [[Txn]] share: an operator that
   * runs either standalone (per-table commits) or inside a transaction
   * (staged, all-or-nothing) takes an `Option[Txn]` and dispatches through
-  * `txn.getOrElse(store): TableWriter` — ONE argument list per write, so
-  * the two paths stay semantically identical by construction instead of
-  * by keeping duplicated call sites in sync by hand. Each implementation
-  * keeps its own ledger operation label (`merge` vs `txn_merge`). */
+  * `txn.getOrElse(store): TableWriter` — one argument list per write, and
+  * one implementation behind it: a [[Txn]] write runs the store's own
+  * write path in transactional commit mode. Each implementation keeps its
+  * own default operation label (`write`/`merge` vs `txn_write`/`txn_merge`). */
 trait TableWriter {
   /** Full-snapshot write — [[TableStore.createOrReplace]] semantics. */
-  def writeSnapshot(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
+  def createOrReplace(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
       sortWithin: Seq[String] = Nil, statsFor: Seq[String] = Nil): Unit
-  /** MERGE INTO with the full [[TableStore.merge]] clause surface. */
-  def writeMerge(name: String, source: DataFrame, keys: Seq[String],
+  /** MERGE INTO with the full [[TableStore.merge]] clause surface; returns
+    * the discovery reading. */
+  def merge(name: String, source: DataFrame, keys: Seq[String],
       extraOn: Option[Column] = None,
       matched: Seq[MergeInto.MatchedAction] = Nil,
       notMatched: Seq[MergeInto.NotMatchedInsert] = Nil,
       notMatchedBySource: Seq[MergeInto.BySourceAction] = Nil,
-      schemaEvolution: Boolean = false): Unit
+      schemaEvolution: Boolean = false,
+      op: String = "merge"): (Int, Int)
 }
 
-/** Writer handle inside a [[TableStore.transaction]]: collects staged
-  * single-visibility writes. Each table may be written at most once per
-  * transaction, and staged writes are invisible until the transaction's
-  * all-or-nothing commit. */
+/** Writer handle inside a [[TableStore.transaction]]: each write runs the
+  * store's own write path, staged into a fresh version directory and
+  * recorded here instead of published. [[createOrReplace]] commits as
+  * `txn_write`, [[append]] as `txn_append` (or the caller's label, e.g. a
+  * streaming sink's `stream_append:<batchId>`) and [[merge]] as
+  * `txn_merge`. An append's auto-compaction and a replace's cleanup of
+  * stale generated-column declarations run only after direct commits.
+  * Each table may be written at most once per transaction, and staged
+  * writes are invisible until the transaction's all-or-nothing commit. */
 final class Txn private[tables] (store: TableStore) extends TableWriter {
   private val staged =
     scala.collection.mutable.ArrayBuffer.empty[(String, Int, Path, Option[Int])]
 
-  /** The one-write-per-table rule, checked EARLY (before the expensive
-    * staging work) here and authoritatively (under the ledger lock, with
-    * cleanup) in [[record]]. */
   private def failIfStaged(name: String): Unit = staged.synchronized {
     require(!staged.exists(_._1 == name),
       s"transaction already wrote $name — one write per table per transaction " +
@@ -146,19 +150,11 @@ final class Txn private[tables] (store: TableStore) extends TableWriter {
         "discard the first)")
   }
 
-  private def stage(name: String, df: DataFrame, partitionBy: Seq[String],
-      sortWithin: Seq[String], statsFor: Seq[String], append: Boolean,
-      op: Option[String] = None): Unit = {
-    failIfStaged(name)
-    val (v, d, b) = store.txnStage(name, df, partitionBy, sortWithin,
-      statsFor, append, op.getOrElse(if (append) "txn_append" else "txn_write"))
-    record(name, v, d, b)
-  }
-
   /** Stage a full-snapshot write (createOrReplace semantics). */
   def createOrReplace(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
       sortWithin: Seq[String] = Nil, statsFor: Seq[String] = Nil): Unit =
-    stage(name, df, partitionBy, sortWithin, statsFor, append = false)
+    store.createOrReplace(name, df, Layout(partitionBy, sortWithin, statsFor),
+      "txn_write", Some(this))
 
   /** Stage an append to an existing table (its current files carry over,
     * the new rows become new files — layout preserved). `op` overrides the
@@ -166,7 +162,8 @@ final class Txn private[tables] (store: TableStore) extends TableWriter {
     * `stream_append:<batchId>` so [[TableStore.lastStreamBatch]] sees the
     * progress marker inside the atomic transactional commit. */
   def append(name: String, df: DataFrame, op: String = "txn_append"): Unit =
-    stage(name, df, Nil, Nil, Nil, append = true, Some(op))
+    store.appendTo(name, store.log.meta(name), store.log.snapshot(name), df, op,
+      txn = Some(this))
 
   /** Stage a MERGE INTO (the full [[TableStore.merge]] clause surface,
     * candidate-bounded file-pruned copy-on-write) whose visibility joins
@@ -182,47 +179,37 @@ final class Txn private[tables] (store: TableStore) extends TableWriter {
       name: String,
       source: DataFrame,
       keys: Seq[String],
-      extraOn: Option[org.apache.spark.sql.Column] = None,
-      matched: Seq[graft.operators.MergeInto.MatchedAction] = Nil,
-      notMatched: Seq[graft.operators.MergeInto.NotMatchedInsert] = Nil,
-      notMatchedBySource: Seq[graft.operators.MergeInto.BySourceAction] = Nil,
+      extraOn: Option[Column] = None,
+      matched: Seq[MergeInto.MatchedAction] = Nil,
+      notMatched: Seq[MergeInto.NotMatchedInsert] = Nil,
+      notMatchedBySource: Seq[MergeInto.BySourceAction] = Nil,
       schemaEvolution: Boolean = false,
-      op: String = "txn_merge"): (Int, Int) = {
-    failIfStaged(name)
+      op: String = "txn_merge"): (Int, Int) =
     store.mergeInternal(name, source, keys, extraOn, matched, notMatched,
       notMatchedBySource, schemaEvolution, op, txn = Some(this))
-  }
 
-  // TableWriter: forwarders that keep this path's staged semantics and
-  // ledger labels
-  override def writeSnapshot(name: String, df: DataFrame, partitionBy: Seq[String],
-      sortWithin: Seq[String], statsFor: Seq[String]): Unit =
-    createOrReplace(name, df, partitionBy, sortWithin, statsFor)
-  override def writeMerge(name: String, source: DataFrame, keys: Seq[String],
-      extraOn: Option[Column], matched: Seq[MergeInto.MatchedAction],
-      notMatched: Seq[MergeInto.NotMatchedInsert],
-      notMatchedBySource: Seq[MergeInto.BySourceAction],
-      schemaEvolution: Boolean): Unit =
-    merge(name, source, keys, extraOn, matched, notMatched,
-      notMatchedBySource, schemaEvolution)
-
-  /** Staging is thread-safe on DIFFERENT tables — a multi-index ingest
-    * stages its independent merges concurrently (Spark schedules jobs
-    * from many threads); the ledger is the only shared state, and the
-    * duplicate-table guard re-checks under the lock at record time. A
-    * loser of that race has already staged a full version dir that was
-    * never recorded, so it is dropped HERE — txnAbort only cleans
-    * recorded entries. */
-  private[tables] def record(name: String, v: Int, dir: Path,
-      base: Option[Int]): Unit = staged.synchronized {
-    if (staged.exists(_._1 == name)) {
-      store.log.txnAbort(Seq(dir))
-      throw new IllegalArgumentException(
-        s"transaction already wrote $name — concurrent stagings raced on one " +
-          "table; the losing version directory was dropped")
+  /** The transaction's stage step: [[TableLog.stage]] `body` for `name`
+    * and record the slot against `base`, the version the write observed
+    * before staging began. The one-write-per-table rule is checked before
+    * the data write and again under the ledger's lock: staging is
+    * thread-safe on DIFFERENT tables (a multi-index ingest stages its
+    * merges concurrently), and the loser of a race on one table drops
+    * its own unrecorded slot here. */
+  private[tables] def stage(name: String, base: Option[Int])(
+      body: (Int, Path) => Boolean): Unit = {
+    failIfStaged(name)
+    store.log.stage(name)(body).foreach { case (v, dir) =>
+      staged.synchronized {
+        try failIfStaged(name) catch { case t: Throwable => TableLog.deleteTree(dir); throw t }
+        staged += ((name, v, dir, base))
+      }
     }
-    staged += ((name, v, dir, base))
   }
+
+  /** The recorded writes: (table, staged version, its directory, the
+    * version the write observed). */
+  private[tables] def writes: Seq[(String, Int, Path, Option[Int])] =
+    staged.synchronized(staged.toSeq)
 
   /** Read-your-writes WITHIN the transaction: the staged (uncommitted)
     * content of a table this transaction has written — or the table's
@@ -230,13 +217,8 @@ final class Txn private[tables] (store: TableStore) extends TableWriter {
     * pipeline chain its stages (silver feeds gold) inside ONE
     * all-or-nothing commit: ordinary readers see nothing until every
     * pointer swaps, while the transaction itself reads what it staged. */
-  def readStaged(name: String): DataFrame = {
-    val hit = staged.synchronized { staged.find(_._1 == name).map(_._2) }
-    hit match {
-      case Some(v) => store.readStagedVersion(name, v)
-      case None => store.read(name)
-    }
-  }
+  def readStaged(name: String): DataFrame =
+    writes.find(_._1 == name).fold(store.read(name))(w => store.readStagedVersion(name, w._2))
 
   /** Once the commit's intent journal is durable, failures roll FORWARD
     * (the attach-time recovery completes the publish) — aborting would
@@ -244,9 +226,9 @@ final class Txn private[tables] (store: TableStore) extends TableWriter {
   private[tables] var commitBegan = false
 
   private[tables] def commitAll(): Unit =
-    store.log.txnCommit(staged.synchronized(staged.toSeq), () => { commitBegan = true })
+    store.log.txnCommit(writes, () => { commitBegan = true })
   private[tables] def abort(): Unit =
-    if (!commitBegan) store.log.txnAbort(staged.synchronized(staged.map(_._3).toSeq))
+    if (!commitBegan) writes.foreach(w => TableLog.deleteTree(w._3))
 }
 
 final class TableStore(spark: SparkSession, root: String) extends TableWriter {
@@ -977,22 +959,30 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     } catch { case t: Throwable => deleteTree(dir); throw t }
   }
 
-  /** [[TableLog.commit]] of `df` staged by [[stageVersion]], plus the change-feed
-    * rows and COPY INTO's loaded-file ledger inside the same staged
-    * version directory — atomic with the commit (an abort drops them with
-    * the version). Returns the entries of the files it staged. */
+  /** The one place a data version is staged: `df` through [[stageVersion]],
+    * plus the change-feed rows and COPY INTO's loaded-file ledger inside
+    * the same version directory — atomic with the commit (an abort drops
+    * them with the version). Without `txn` this is a [[TableLog.commit]];
+    * with one, the transaction's stage step, recorded against
+    * `expectedBase` or, for a replace, the version current before staging
+    * starts (read after, a commit landing meanwhile would be silently
+    * overwritten). Returns the entries of the files it staged. */
   private def commitVersion(name: String, m: TableMeta, df: DataFrame, layout: Layout,
       carryOver: Seq[FileEntry], schemaHint: Option[StructType] = None,
       expectedBase: Option[Option[Int]] = None, op: String = "write",
       cdc: Option[DataFrame] = None, copyFiles: Seq[String] = Nil,
-      strictCas: Boolean = false): Seq[FileEntry] = {
+      strictCas: Boolean = false, txn: Option[Txn] = None): Seq[FileEntry] = {
     var added = Seq.empty[FileEntry]
-    log.commit(name, expectedBase, strictCas) { (next, dir) =>
+    def body(next: Int, dir: Path): Boolean = {
       added = stageVersion(name, m, next, dir, df, layout, carryOver, schemaHint, op)
       cdc.foreach(parquetWriter(_).parquet(dir.resolve("cdc").toString))
       if (copyFiles.nonEmpty)
         Files.write(dir.resolve("copy_files"), copyFiles.mkString("\n").getBytes(UTF_8))
       true
+    }
+    txn match {
+      case None => log.commit(name, expectedBase, strictCas)(body)
+      case Some(t) => t.stage(name, expectedBase.getOrElse(log.version(name)))(body)
     }
     added
   }
@@ -1270,16 +1260,21 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * become selective — the data-skipping lever at 100 TB. Stats are
     * always collected for partition + sort columns; `statsFor` adds more. */
   def createOrReplace(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
-      sortWithin: Seq[String] = Nil, statsFor: Seq[String] = Nil): Unit = {
+      sortWithin: Seq[String] = Nil, statsFor: Seq[String] = Nil): Unit =
+    createOrReplace(name, df, Layout(partitionBy, sortWithin, statsFor), "write", None)
+
+  /** [[createOrReplace]] committed as `op`, or staged into `txn`. */
+  private[tables] def createOrReplace(name: String, df: DataFrame, layout: Layout,
+      op: String, txn: Option[Txn]): Unit = {
     val m = log.meta(name)
-    commitVersion(name, m, df, Layout(partitionBy, sortWithin, statsFor), carryOver = Seq.empty)
+    commitVersion(name, m, df, layout, carryOver = Seq.empty, op = op, txn = txn)
     // a REPLACE may swap in a schema that invalidates generated-column
     // declarations (the column or a dependency is gone) — drop the stale
     // ones AFTER the commit succeeded (an aborted write must not lose
     // metadata), judged against the COMMITTED schema: a replace that omits
     // an always-derived column keeps its declaration, because the write
-    // derives the column.
-    if (m.generatedColumns.nonEmpty) {
+    // derives the column. A staged replace commits later, or never.
+    if (txn.isEmpty && m.generatedColumns.nonEmpty) {
       val schema = log.snapshot(name).schema
       log.updateMeta(name) { cur =>
         val committed = cur.logicalize(schema).fieldNames
@@ -1328,19 +1323,22 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       copyFiles: Seq[String] = Nil): Unit =
     appendTo(name, log.meta(name), log.snapshot(name), df, op, copyFiles)
 
-  /** [[append]]'s commit onto the snapshot and metadata the caller read, then
-    * its auto-compaction ([[setAutoCompact]], decoded before the commit so a
-    * bad knob fails the append); returns the entries of the files it added. */
-  private def appendTo(name: String, m: TableMeta, snap: Snapshot, df: DataFrame, op: String,
-      copyFiles: Seq[String]): Seq[FileEntry] = {
+  /** [[append]]'s commit onto the snapshot and metadata the caller read
+    * (`snap` is the CAS base), then its auto-compaction ([[setAutoCompact]],
+    * decoded before the commit so a bad knob fails the append); with `txn`
+    * the append is staged into it and no compaction runs. Returns the
+    * entries of the files it added. */
+  private[graft] def appendTo(name: String, m: TableMeta, snap: Snapshot, df: DataFrame,
+      op: String, copyFiles: Seq[String] = Nil, txn: Option[Txn] = None): Seq[FileEntry] = {
     val autoCompact = m.autoCompact(name)
     val (keyed, cleanup) = applyIdentity(name, m, df)
     val added = try
       commitVersion(name, m, alignedForAppend(name, m, snap.schema, keyed), snap.layout,
         carryOver = snap.entries, schemaHint = Some(snap.schema),
-        expectedBase = Some(Some(snap.version)), op = op, copyFiles = copyFiles)
+        expectedBase = Some(Some(snap.version)), op = op, copyFiles = copyFiles, txn = txn)
     finally cleanup()
-    autoCompact.foreach { case (files, bytes) => compactSmallOf(name, m, bytes, files) }
+    if (txn.isEmpty)
+      autoCompact.foreach { case (files, bytes) => compactSmallOf(name, m, bytes, files) }
     added
   }
 
@@ -2648,8 +2646,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       op: String = "replace_where"): Unit =
     overwriteIn(name, log.meta(name), log.snapshot(name), df, cond, op)
 
-  /** [[overwriteWhere]] onto the metadata and snapshot the caller read. */
-  private def overwriteIn(name: String, m: TableMeta, snap: Snapshot, df: DataFrame,
+  /** [[overwriteWhere]] onto the metadata and snapshot (the CAS base) the
+    * caller read. */
+  private[graft] def overwriteIn(name: String, m: TableMeta, snap: Snapshot, df: DataFrame,
       cond: Column, op: String): Unit = {
     val (keyed, cleanup) = applyIdentity(name, m, df)
     try {
@@ -2682,14 +2681,14 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** LOGICAL names of the table's declared partition columns (empty when
     * unpartitioned) — the manifest's layout records physical names;
     * callers speak the visible view. */
-  def partitionColumns(name: String): Seq[String] = partitionColumns(name, log.meta(name))
-
-  /** The live version's visible (logical) schema under metadata `m`. */
-  private[graft] def visibleSchema(name: String, m: TableMeta): StructType =
-    m.logicalize(log.snapshot(name).schema)
-
-  private[graft] def partitionColumns(name: String, m: TableMeta): Seq[String] =
+  def partitionColumns(name: String): Seq[String] = {
+    val m = log.meta(name)
     log.snapshot(name).layout.partitionBy.map(m.logicalName)
+  }
+
+  /** The live version: a SQL statement reads it once, aligns against it
+    * and commits onto it. */
+  private[graft] def snapshot(name: String): Snapshot = log.snapshot(name)
 
   /** Spark's dynamic partition overwrite (`INSERT OVERWRITE … PARTITION
     * (p)`) for store tables: replaces exactly the partitions present in
@@ -2700,8 +2699,12 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     * [[overwriteWhere]] as a null-safe tuple disjunction, so stats
     * pruning confines the rewrite to those partitions' files. */
   def overwritePartitions(name: String, df: DataFrame,
-      op: String = "overwrite_partitions"): Unit = {
-    val (m, snap) = (log.meta(name), log.snapshot(name))
+      op: String = "overwrite_partitions"): Unit =
+    overwritePartitionsIn(name, log.meta(name), log.snapshot(name), df, op)
+
+  /** [[overwritePartitions]] onto the metadata and snapshot the caller read. */
+  private[graft] def overwritePartitionsIn(name: String, m: TableMeta, snap: Snapshot,
+      df: DataFrame, op: String): Unit = {
     val pb = snap.layout.partitionBy.map(m.logicalName)
     require(pb.nonEmpty,
       s"overwritePartitions on $name: table is not partitioned — " +
@@ -2754,22 +2757,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
     mergeInternal(name, source, keys, extraOn, matched, notMatched,
       notMatchedBySource, schemaEvolution, op, txn = None)
 
-  // TableWriter: forwarders that keep this path's immediate-commit
-  // semantics and ledger labels
-  override def writeSnapshot(name: String, df: DataFrame, partitionBy: Seq[String],
-      sortWithin: Seq[String], statsFor: Seq[String]): Unit =
-    createOrReplace(name, df, partitionBy, sortWithin, statsFor)
-  override def writeMerge(name: String, source: DataFrame, keys: Seq[String],
-      extraOn: Option[Column], matched: Seq[MergeInto.MatchedAction],
-      notMatched: Seq[MergeInto.NotMatchedInsert],
-      notMatchedBySource: Seq[MergeInto.BySourceAction],
-      schemaEvolution: Boolean): Unit =
-    merge(name, source, keys, extraOn, matched, notMatched,
-      notMatchedBySource, schemaEvolution)
-
-  /** [[merge]] body; with `txn` set the rewritten version is STAGED into
-    * the transaction (pointer untouched until its all-or-nothing commit)
-    * instead of committed here — see [[Txn.merge]].
+  /** [[merge]] body; with `txn` set the rewritten version is staged into
+    * the transaction ([[commitVersion]]) instead of committed here — see
+    * [[Txn.merge]].
     *
     * Bounded sources run from driver-held rows: when Catalyst bounds the
     * source to [[HeldSource.MaxRows]] rows (a `VALUES` list, an SCD2
@@ -2954,27 +2944,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       if (plan.insertOnly) Some(ins)
       else Some(plan.changeSet(dropRowIdCol(subset), source).unionByName(ins))
     }
-    txn match {
-      case None =>
-        commitVersion(name, m, rewritten.unionByName(inserts), layout,
-          carryOver = entries.filterNot(e => touched(e.rel)), schemaHint = Some(schema),
-          expectedBase = Some(Some(snap.version)), op = op, cdc = cdc)
-      case Some(t) =>
-        // stage only: data + manifest + change feed land in the version
-        // dir, the pointer moves at the transaction's commit (or never —
-        // txnAbort drops the dir). Conflict detection is the transaction's
-        // strict observed-version check; no single-table rebase.
-        // record BEFORE the cdc write: if that write throws, the staged
-        // dir is already in the transaction's ledger and txnAbort drops
-        // it (stageVersion's own cleanup no longer covers this point).
-        val out = rewritten.unionByName(inserts)
-        val (v, dir) = log.allocateVersion(name)
-        stageVersion(name, m, v, dir, out, layout,
-          carryOver = entries.filterNot(e => touched(e.rel)),
-          schemaHint = Some(schema), op = op)
-        t.record(name, v, dir, Some(snap.version))
-        cdc.foreach(parquetWriter(_).parquet(dir.resolve("cdc").toString))
-    }
+    commitVersion(name, m, rewritten.unionByName(inserts), layout,
+      carryOver = entries.filterNot(e => touched(e.rel)), schemaHint = Some(schema),
+      expectedBase = Some(Some(snap.version)), op = op, cdc = cdc, txn = txn)
     (cand.size, entries.size)
   }
 
@@ -3063,6 +3035,9 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
   /** Multi-table transaction: every write staged inside `f` becomes
     * visible together, or not at all.
     *
+    *  - `f` writes through its [[Txn]]: `createOrReplace`, `append` and a
+    *    copy-on-write `merge`, committed as `txn_write`, `txn_append` and
+    *    `txn_merge`; post-commit steps run only after direct commits.
     *  - All data/manifest writes happen while staging, with no pointer
     *    moved — a failure anywhere (including a mid-transaction crash)
     *    leaves every table exactly as it was, and the aborted version
@@ -3089,33 +3064,6 @@ final class TableStore(spark: SparkSession, root: String) extends TableWriter {
       f(txn)
       txn.commitAll()
     } catch { case t: Throwable => txn.abort(); throw t }
-  }
-
-  private[tables] def txnStage(name: String, df: DataFrame, partitionBy: Seq[String],
-      sortWithin: Seq[String], statsFor: Seq[String], append: Boolean,
-      op: String): (Int, Path, Option[Int]) = {
-    val m = log.meta(name)
-    def stage(df: DataFrame, layout: Layout, carryOver: Seq[FileEntry],
-        schemaHint: Option[StructType], base: Option[Int]) = {
-      val (v, dir) = log.allocateVersion(name)
-      stageVersion(name, m, v, dir, df, layout, carryOver, schemaHint, op)
-      (v, dir, base)
-    }
-    if (!append)
-      stage(df, Layout(partitionBy, sortWithin, statsFor), Nil, None, version(name))
-    else {
-      val snap = log.snapshot(name)
-      // identity parity with the direct append path: a transactional
-      // append to a GENERATED ALWAYS AS IDENTITY table must block-allocate
-      // keys (and reject explicit values) exactly like append() — without
-      // this, omitting the column failed with a misleading schema
-      // mismatch while supplying it bypassed the locked counter and could
-      // collide with keys block-allocated by direct appends
-      val (keyed, cleanup) = applyIdentity(name, m, df)
-      try stage(alignedForAppend(name, m, snap.schema, keyed), snap.layout, snap.entries,
-        Some(snap.schema), Some(snap.version))
-      finally cleanup()
-    }
   }
 
   // -------------------------------------------------------------- metadata

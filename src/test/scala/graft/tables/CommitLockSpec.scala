@@ -113,8 +113,9 @@ class CommitLockSpec extends AnyFunSuite {
     val store = new TableStore(spark, root)
     try {
       store.createOrReplace("db.t", Seq((1L, "a")).toDF("k", "v"))
-      val (v, dir, base) = store.txnStage("db.t", Seq((2L, "b")).toDF("k", "v"),
-        Nil, Nil, Nil, append = true, "append")
+      val txn = new Txn(store)
+      txn.append("db.t", Seq((2L, "b")).toDF("k", "v"), "append")
+      val Seq((_, v, dir, base)) = txn.writes
       // the publish runs this callback holding `_COMMIT_LOCK`: the vacuum
       // starts while v1 is still current, then waits on the lock until
       // the commit of v2 has swapped the pointer

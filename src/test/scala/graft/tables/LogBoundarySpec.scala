@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * every read and write of a pointer, manifest, lock, metadata file,
   * retirement record or transaction intent goes through [[TableLog]].
   * Likewise the metadata's internal key prefixes are named only beside
-  * [[TableMeta]]. */
+  * [[TableMeta]], and a version directory is allocated only by the log's
+  * one staging step ([[TableLog.stage]]). */
 class LogBoundarySpec extends AnyFunSuite {
 
   private val logFiles = Seq("_CURRENT", "_MANIFEST", "_COMMIT_LOCK", "_META",
@@ -71,5 +72,22 @@ class LogBoundarySpec extends AnyFunSuite {
     val offenders = others.flatMap(f => namedIn(f).map { case (i, l) => s"$f:$i: $l" })
     assert(offenders.isEmpty,
       s"table log files named outside TableLog:\n${offenders.mkString("\n")}")
+  }
+
+  test("only TableLog.scala allocates a version directory (names allocateVersion on a code line)") {
+    val main = Paths.get("src", "main", "scala")
+    assert(Files.isDirectory(main), s"run from the project root (no $main)")
+    val sources = TableLog.walkAll(main).filter(_.toString.endsWith(".scala"))
+    val (log, others) = sources.partition(_.getFileName.toString == "TableLog.scala")
+    def allocating(f: Path): Seq[(Int, String)] =
+      Files.readAllLines(f, UTF_8).asScala.toSeq.zipWithIndex.collect {
+        case (l, i) if code(l).contains("allocateVersion") => (i + 1, l.trim)
+      }
+    // the scan is live: the owner itself calls it
+    assert(log.size == 1 && allocating(log.head).nonEmpty,
+      "TableLog.scala no longer names allocateVersion on a code line")
+    val offenders = others.flatMap(f => allocating(f).map { case (i, l) => s"$f:$i: $l" })
+    assert(offenders.isEmpty,
+      s"version directories allocated outside TableLog.stage:\n${offenders.mkString("\n")}")
   }
 }
